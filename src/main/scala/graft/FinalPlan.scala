@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: capture the AQE FINAL plan of registered queries. A static
   * `.explain` shows the initial plan (`isFinalPlan=false`) with the
@@ -11,12 +10,7 @@ import org.apache.spark.sql.SparkSession
 object FinalPlan {
   def main(args: Array[String]): Unit = {
     Scratch.sweepStale()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(1).foreach { q =>
       println(s"=== $q ===")

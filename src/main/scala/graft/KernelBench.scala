@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: sequential microbenchmark of the text-kernel tier
@@ -17,13 +17,7 @@ import org.apache.spark.sql.functions._
 object KernelBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
 
     // wiki-ish markup wrapped around real document text; two bounded token
@@ -38,7 +32,7 @@ object KernelBench {
       .select(col("doc_id"), explode(sequence(lit(0), lit(repl - 1))).as("copy"),
         col("text"))
       .withColumn("text", concat(col("text"), lit(" c"), col("copy")))
-      .repartition(cpus.toInt * 4)
+      .repartition(GraftSession.cpus * 4)
       .select(col("doc_id"),
         concat(lit("See [[Target page|anchor]] and {{Infobox x|y}} "),
           col("text"),

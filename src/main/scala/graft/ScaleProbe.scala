@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: sequential timing of the heavy-tail queries at two scale
   * factors, for the sf0.1 → sf1 scaling curve in SCALE.md (the per-round
   * Bench runs 4-way concurrent, which is honest for wall-clock but noisy
@@ -20,24 +18,14 @@ object ScaleProbe {
     Scratch.sweepStale() // reclaim temp-dir debris from dead runs
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // ×100 probes of build-side-heavy joins (ktruss's shuffle-hash
     // closure) need MORE shuffle partitions than cores so each build
     // map fits in task memory — AQE coalesces the small stages back,
     // so raising this does not distort light queries' plans
     val parts = sys.env.get("SPARK_GRAFT_PROBE_PARTS")
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .filter(_ >= 1).map(_.toString).getOrElse(cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // spill/broadcast scratch under the per-process root (swept on
-      // exit/crash — a dead ×100 probe once left 37 GB in /tmp)
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .getOrCreate()
+      .filter(_ >= 1).getOrElse(GraftSession.cpus)
+    val spark = GraftSession.build(shufflePartitions = parts)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM warmup
     // one row per query, PRINTED AS IT COMPLETES, and a failed query

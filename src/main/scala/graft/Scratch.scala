@@ -41,9 +41,8 @@ object Scratch {
     * it. Without this, `spark.local.dir` defaults to /tmp and a
     * crashed run leaves its spill behind unswept — a dead ktruss ×100
     * probe left 37 GB of blockmgr files and the NEXT probe died on
-    * "No space left on device" (r17). Pass to
-    * `.config("spark.local.dir", Scratch.sparkLocalDir)` before the
-    * session starts. */
+    * "No space left on device" (r17). [[GraftSession.build]] sets it
+    * as `spark.local.dir`. */
   def sparkLocalDir: String = dir("spark_local").toString
 
   /** A fresh unique directory under the per-process root. Callers do

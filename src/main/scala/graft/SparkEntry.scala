@@ -886,7 +886,6 @@ object SparkEntry {
       // near-duplicate in train (the classic eval-contamination bug a
       // doc-keyed split like sample_split permits). Same 90/5/5 hash
       // convention as sample_split; singletons hash their own id.
-      graft.plans.GraftSparkExtensions.install(s)
       val docs = t(s, d, "documents")
       val canon = DedupOps.canonicalKeepList(docs, "doc_id",
         dedupLabels05(s, d))
@@ -916,7 +915,6 @@ object SparkEntry {
       // canonical → train/val/test hash split. The one relation a
       // downstream trainer consumes; each stage is the already-gated
       // operator, composed
-      graft.plans.GraftSparkExtensions.install(s)
       // the document relation feeds four gate subtrees (quality base,
       // contamination, exact dedup, near-dup CC) — materialize ONE
       // tokenize pass alongside the scan and let every stage read it
@@ -2292,7 +2290,6 @@ object SparkEntry {
       import s.implicits._
       val dir = Scratch.dir("k23")
         .toString + "/t"
-      graft.plans.GraftSparkExtensions.install(s)
       val ev = t(s, d, "events").select(col("event_id"), col("user_id"))
         .withColumn("g", pmod(SimilarityOps.hash32Col(col("event_id")), lit(8L)))
       ev.write.partitionBy("g").parquet(dir)
@@ -2403,7 +2400,6 @@ object SparkEntry {
       // partition-only min WINDOW on the one (shingle)-keyed exchange —
       // no self-join, no checkpoint, the corpus shuffles once on h and
       // once on doc_id (the 4.1× join-back variant is in SCALE.md).
-      graft.plans.GraftSparkExtensions.install(s)
       val hashed = t(s, d, "documents")
         .select(col("doc_id"), TermOps.tokens(col("text")).as("toks"))
         .filter(size(col("toks")) >= 3)
@@ -3978,7 +3974,6 @@ object SparkEntry {
       // by. The eval row for j7/bloomFlag, the way dedup_minhash_eval
       // evals the banding family. exp argument is the exact dyadic
       // −400/4096, so both engines call exp on the identical double.
-      graft.plans.GraftSparkExtensions.install(s)
       val members = s.range(0, 200).select(col("id").as("mk"))
       val probes = s.range(100000, 101000).select(col("id").as("pk"))
       PruneOps.bloomFlag(probes, "pk", members, "mk", "maybe",
@@ -4327,7 +4322,6 @@ object SparkEntry {
       // makes walk corpora reproducible). Each step is one edge join +
       // one per-walk argmin window; steps unroll like the bounded
       // fixpoint rounds.
-      graft.plans.GraftSparkExtensions.install(s)
       val dir = t(s, d, "lineitem")
         .select(col("l_suppkey").as("u"), col("l_partkey").as("v"))
         .distinct()
@@ -5210,7 +5204,6 @@ object SparkEntry {
       // DISTINCT covered set. Per doc: token/start/masked counts + mask
       // fraction — the layout audit a corruption writer ships (the
       // actual sentinel-token rewrite is a map over this assignment).
-      graft.plans.GraftSparkExtensions.install(s)
       val toks = t(s, d, "documents")
         .select(col("doc_id"),
           posexplode(TermOps.tokens(col("text"))).as(Seq("pos", "tok")))
@@ -5245,7 +5238,6 @@ object SparkEntry {
       // fingerprint of the ACTUAL emitted token stream, so the reorder
       // itself is verified, not just its bookkeeping. Pure per-doc
       // map — zero exchanges, the pack_span_corruption scale shape.
-      graft.plans.GraftSparkExtensions.install(s)
       def h32(tag: String): org.apache.spark.sql.Column =
         expr(s"fnv64(concat(cast(doc_id as string), '#$tag'))")
           .bitwiseAND(lit(4294967295L))
@@ -5666,7 +5658,6 @@ object SparkEntry {
       // — completes the experimentation trio (SRM gate → CUPED variance
       // → AUC/calibration readouts). Uses the canonical split hash, so
       // it audits the very assignment sample_split ships.
-      graft.plans.GraftSparkExtensions.install(s)
       val b = t(s, d, "documents")
         .withColumn("bb", pmod(
           expr("fnv64(concat(cast(doc_id as string), '#split'))")
@@ -6701,7 +6692,6 @@ object SparkEntry {
 
     "fnv64_native" -> ((s, _) => {
       import s.implicits._
-      graft.plans.GraftSparkExtensions.install(s)
       Seq((1L, "abc"), (2L, ""), (3L, "hello world"), (4L, "graft"))
         .toDF("fid", "v")
         .selectExpr("fid", "fnv64(v) AS h")
@@ -7026,7 +7016,6 @@ object SparkEntry {
       // per-(split, lang) balance table a pipeline audits — membership
       // is a pure function of the id, so reruns, late-arriving shards
       // and incremental refreshes all agree
-      graft.plans.GraftSparkExtensions.install(s)
       // fold to the low 32 bits FIRST (power-of-two, so signed &
       // unsigned agree), then take the non-power-of-two bucket modulus
       // of that non-negative value — % 100 straight off the signed
@@ -7757,7 +7746,6 @@ object SparkEntry {
       // Output = exploded (doc_id, id) plus the blob byte length, whose
       // oracle recomputes the VInt length rule arithmetically, so a
       // codec defect in either direction cannot hash-match
-      graft.plans.GraftSparkExtensions.install(s)
       val docs = t(s, d, "documents")
       val dict = TermOps.dictionary(docs, "doc_id", "text", minDf = 5L)
       TermOps.docVectors(docs, "doc_id", "text", dict)
@@ -8967,7 +8955,6 @@ object SparkEntry {
       // training run consumes (doc counts, token budget, language
       // spread, id range). Composes the gated chains; one dedup
       // aggregation + one semi-join + one split aggregation.
-      graft.plans.GraftSparkExtensions.install(s)
       val docs = t(s, d, "documents")
       val keep = DedupOps.exactGroups(docs, "doc_id", "text")
         .select(col("keep_id").as("doc_id"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev probe (VERDICT r18 item 6): per-batch duration breakdown of the
@@ -29,15 +28,11 @@ object StreamFloor {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("st_curate")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .config("spark.sql.streaming.streamingQueryListeners",
-        "graft.StreamFloor$Recorder")
-      .getOrCreate()
+    // a static conf: it must be set before the session starts, and the
+    // st_* session clones inherit it
+    System.setProperty("spark.sql.streaming.streamingQueryListeners",
+      "graft.StreamFloor$Recorder")
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       progress.clear()

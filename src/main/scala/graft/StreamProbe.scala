@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev tool: throughput / state-size probe for the stateful streaming
   * tier (r17 judge item 4 — every batch family has ×10 datapoints,
@@ -35,16 +35,9 @@ object StreamProbe {
       .filter(_ >= 1).getOrElse(d)
     val batch = envInt("SPARK_GRAFT_STREAM_BATCH", 5000)
     val tickMs = envInt("SPARK_GRAFT_STREAM_TICK_MS", 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val parts = envInt("SPARK_GRAFT_PROBE_PARTS", 8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "false") // streaming: AQE off
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Scratch.sparkLocalDir)
-      .getOrCreate()
+    val spark = GraftSession.build(shufflePartitions = parts)
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // streaming: AQE off
     spark.sparkContext.setLogLevel("ERROR")
     import graft.streaming.EventStreamOps
 

@@ -43,11 +43,10 @@ object Tables {
       val raw = eventsRaw(spark, sfDir)
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
-          // install the NanosFilterRule so `ts` comparisons on this
+          // the session's NanosFilterRule makes `ts` comparisons on this
           // projected column derive pushable raw-nanos range filters —
           // row-group pruning works on the legacy layout without the
           // eventsMicros rewrite pass (pinned in PlanSpec)
-          graft.plans.GraftSparkExtensions.install(spark)
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case _ => raw
       }

@@ -176,7 +176,6 @@ object DedupOps {
                          truthThreshold: Double, candThreshold: Double,
                          shingleK: Int = 3, maxShingleDf: Long = 100L,
                          bands: Int = 8, rowsPerBand: Int = 4): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     val toks = docs.select(col(idCol).as("doc_id"),
       TermOps.tokens(col(textCol)).as("toks")).localCheckpoint()
     // uncapped distinct hashed shingles — short docs keep shingleCol's
@@ -308,7 +307,6 @@ object DedupOps {
   private def shinglePairStats(docs: DataFrame, idCol: String,
                                textCol: String, shingleK: Int,
                                maxShingleDf: Long): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     val shingled = docs
       .select(col(idCol).as("id"), TermOps.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= shingleK)
@@ -355,7 +353,6 @@ object DedupOps {
                                  shingleK: Int = 3,
                                  maxShingleDf: Long = 100L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftSparkExtensions.install(toks.sparkSession)
     val shingled = toks
       .select(col("id"), col("toks"))
       .filter(size(col("toks")) >= shingleK)
@@ -707,7 +704,6 @@ object DedupOps {
   def windowMinhashSpans(docs: DataFrame, idCol: String, textCol: String,
                          w: Int = 16, stride: Int = 8, shingleK: Int = 4,
                          minCount: Long = 2L): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     require(w > shingleK, s"window width $w must exceed shingle size")
     val wins = docs
       .select(col(idCol).as("doc_id"), TermOps.tokens(col(textCol)).as("tk"))
@@ -746,7 +742,6 @@ object DedupOps {
     * functions, no broadcast of corpus-sized state. */
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
                       w: Int = 8, minCount: Long = 2L): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     val grams = docs
       .select(col(idCol).as("doc_id"), TermOps.tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= w)

@@ -231,7 +231,7 @@ object GraphOps {
   private def fanOutByKey(df: DataFrame, key: String): DataFrame = {
     val ss = df.sparkSession
     val parts = math.max(ss.sparkContext.defaultParallelism,
-      ss.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+      ss.sessionState.conf.numShufflePartitions)
     df.repartition(parts, col(key))
   }
 

@@ -105,7 +105,6 @@ object MultimodalOps {
     * indexing), not a different kernel. */
   def sampleFrames(df: DataFrame, binCol: String, frameSize: Int,
                    stride: Int): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(df.sparkSession)
     df.withColumn("frame",
         explode(expr(s"frame_sigs(`$binCol`, $frameSize, $stride)")))
       .withColumn("frame_idx", col("frame.idx"))
@@ -122,7 +121,6 @@ object MultimodalOps {
     * expensive decode step ever runs. */
   def frameEnergy(df: DataFrame, binCol: String, frameSize: Int,
                   stride: Int): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(df.sparkSession)
     df.withColumn("fr",
         explode(expr(s"frame_energy(`$binCol`, $frameSize, $stride)")))
       .withColumn("frame_idx", col("fr.idx"))
@@ -141,7 +139,6 @@ object MultimodalOps {
     * (signatures shuffle, pixels don't) — is what this operator pins. */
   def samplePatches(df: DataFrame, binCol: String, width: Int,
                     patch: Int): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(df.sparkSession)
     df.withColumn("p", explode(expr(s"patch_sigs(`$binCol`, $width, $patch)")))
       .withColumn("pr", col("p.pr"))
       .withColumn("pc", col("p.pc"))
@@ -160,7 +157,6 @@ object MultimodalOps {
     * materialize as rows. */
   def frameEnergyStereo(df: DataFrame, binCol: String, frameSize: Int,
                         stride: Int): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(df.sparkSession)
     df.withColumn("fr",
         explode(expr(s"frame_energy_stereo(`$binCol`, $frameSize, $stride)")))
       .withColumn("frame_idx", col("fr.idx"))
@@ -183,7 +179,6 @@ object MultimodalOps {
     * grid — the avgHash64 conventions, same BMP parity contract. */
   def blockMeanResize(docs: DataFrame, idCol: String, textCol: String,
                       width: Int = 64, grid: Int = 8): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     docs
       .select(col(idCol),
         explode(expr(s"block_means(`$textCol`, $width, $grid)")).as("c"))
@@ -275,7 +270,6 @@ object MultimodalOps {
     * (the production input) are unaffected — they enter as unsigned
     * byte values. */
   def avgHash64(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     // one codegen fold per doc (graft.plans.AHash64) — bit-identical to
     // the r13 HOF aggregate chain (Round15Spec pins it) at ~1/17 the
     // per-byte cost: no per-char array ever materializes

@@ -96,7 +96,6 @@ object PackOps {
                     targets: Map[String, Long], salt: String = "mix"): DataFrame = {
     require(targets.nonEmpty, "mixtureSample needs at least one target")
     require(targets.values.forall(_ > 0), "targets must be positive")
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     val sp = docs.sparkSession
     import sp.implicits._
     val tdf = targets.toSeq.sortBy(_._1).toDF("domain", "tgt")

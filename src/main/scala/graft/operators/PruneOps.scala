@@ -55,7 +55,6 @@ object PruneOps {
                   mBits: Int, k: Int): Array[Long] = {
     require(mBits >= 64 && (mBits & (mBits - 1)) == 0,
       s"mBits must be a power of two >= 64, got $mBits")
-    graft.plans.GraftSparkExtensions.install(small.sparkSession)
     // null keys contribute no positions (semi-join convention) — and must
     // be dropped BEFORE the word aggregation: a null position row would
     // read as word 0 / bits 0 at collect time and overwrite real bits
@@ -88,7 +87,6 @@ object PruneOps {
   def bloomPrune(big: DataFrame, bigKey: String,
                  small: DataFrame, smallKey: String,
                  mBits: Int = 1 << 16, k: Int = 3): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(big.sparkSession)
     val bm = typedlit(bloomBitmap(small, smallKey, mBits, k).toSeq)
     big.filter(positions(col(bigKey), mBits, k).map(bitSet(bm, _))
       .reduce(_ && _))
@@ -104,7 +102,6 @@ object PruneOps {
   def bloomFlag(big: DataFrame, bigKey: String,
                 small: DataFrame, smallKey: String, flagCol: String,
                 mBits: Int = 1 << 16, k: Int = 3): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(big.sparkSession)
     val bm = typedlit(bloomBitmap(small, smallKey, mBits, k).toSeq)
     big.withColumn(flagCol,
       positions(col(bigKey), mBits, k).map(bitSet(bm, _)).reduce(_ && _))

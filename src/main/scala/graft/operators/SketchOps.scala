@@ -41,7 +41,6 @@ object SketchOps {
         // scale-0 decimals up to 18 digits cast to long losslessly
         SimilarityOps.hash32Col(col(keyCol).cast("long"))
       case StringType =>
-        graft.plans.GraftSparkExtensions.install(df.sparkSession)
         pmod(expr(s"fnv64(`$keyCol`)"), lit(4294967296L))
       case dt => throw new IllegalArgumentException(
         s"kmvDistinct: unsupported key type ${dt.catalogString} for '$keyCol'")
@@ -155,7 +154,6 @@ object SketchOps {
                depth: Int = 3, width: Int = 256): DataFrame = {
     require(width >= 2 && (width & (width - 1)) == 0,
       s"width must be a power of two, got $width")
-    graft.plans.GraftSparkExtensions.install(df.sparkSession)
     val buckets = (0 until depth).map { j =>
       call_function("fnv64", concat(col(keyCol).cast("string"), lit(s"#$j")))
         .bitwiseAND(lit((width - 1).toLong))
@@ -210,7 +208,6 @@ object SketchOps {
     * profile job actually ships per (day, source) cell. */
   def hllRegisters(df: DataFrame, keyCol: String, p: Int = 6): DataFrame = {
     require(p >= 2 && p <= 12, s"hll precision p must be in [2,12], got $p")
-    graft.plans.GraftSparkExtensions.install(df.sparkSession)
     val m = 1L << p
     val h = pmod(call_function("fnv64",
       concat(col(keyCol).cast("string"), lit("#hll"))), lit(4294967296L))
@@ -328,7 +325,6 @@ object SketchOps {
   def gumbelTopK(df: DataFrame, keyCol: String, weightCol: String,
                  k: Int, salt: String = ""): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    graft.plans.GraftSparkExtensions.install(df.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val h = pmod(call_function("fnv64",
       concat(col(keyCol).cast("string"), lit(s"#g$salt"))), lit(4294967296L))
@@ -346,7 +342,6 @@ object SketchOps {
   def prioritySample(df: DataFrame, keyCol: String, weightCol: String,
                      k: Int, salt: String = ""): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    graft.plans.GraftSparkExtensions.install(df.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val h = pmod(call_function("fnv64",
       concat(col(keyCol).cast("string"), lit(s"#p$salt"))), lit(4294967296L))
@@ -374,7 +369,6 @@ object SketchOps {
                     salt: String = ""): DataFrame = {
     require(!df.columns.contains("h"),
       "bottomKSample appends an 'h' column; rename the existing one first")
-    graft.plans.GraftSparkExtensions.install(df.sparkSession)
     // null keys are excluded rather than hashed: a null key would get a
     // null hash and engines disagree on null sort position (Spark
     // NULLS FIRST vs others' NULLS LAST), which would silently make

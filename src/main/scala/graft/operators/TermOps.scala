@@ -105,7 +105,6 @@ object TermOps {
                   dim: Int = 256, analyzer: String = Whitespace): DataFrame = {
     require(dim >= 2 && (dim & (dim - 1)) == 0,
       s"dim must be a power of two, got $dim")
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     val shift = java.lang.Integer.numberOfTrailingZeros(dim)
     docs.select(col(idCol).as("doc_id"),
         explode(tokens(col(textCol), analyzer)).as("term"))

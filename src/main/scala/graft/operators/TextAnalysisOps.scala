@@ -156,7 +156,6 @@ object TextAnalysisOps {
   def contamination(docs: DataFrame, idCol: String, textCol: String,
                     probes: DataFrame, probeIdCol: String, probeTextCol: String,
                     n: Int = 8, minShared: Long = 1L): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     def grams(df: DataFrame, id: String, text: String, out: String) =
       df.select(col(id).as(out), TermOps.tokens(col(text)).as("toks"))
         .filter(size(col("toks")) >= n)
@@ -195,7 +194,6 @@ object TextAnalysisOps {
                               toksCol: String, bench: DataFrame,
                               benchToksCol: String,
                               n: Int = 8): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     def grams(df: DataFrame, toks: String, idSel: Column*) =
       df.select(idSel :+ col(toks).as("toks"): _*)
         .filter(size(col("toks")) >= n)
@@ -247,7 +245,6 @@ object TextAnalysisOps {
     * per-document reassembly (output-sized by definition). */
   def stripBoilerplate(docs: DataFrame, idCol: String, textCol: String,
                        minDf: Long, sep: String = "\n"): DataFrame = {
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     val lines = docs
       .select(col(idCol).as("doc_id"),
         posexplode(split(col(textCol),
@@ -319,7 +316,6 @@ object TextAnalysisOps {
                   isTarget: Column, dim: Int = 256): DataFrame = {
     require(dim >= 2 && (dim & (dim - 1)) == 0,
       s"dim must be a power of two, got $dim")
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     val tb = docs.select(col(idCol).as("doc_id"), isTarget.as("tgt"),
         explode(TermOps.tokens(col(textCol))).as("term"))
       .withColumn("bucket",
@@ -362,7 +358,6 @@ object TextAnalysisOps {
                         isA: Column, dim: Int = 64): DataFrame = {
     require(dim >= 2 && (dim & (dim - 1)) == 0,
       s"dim must be a power of two, got $dim")
-    graft.plans.GraftSparkExtensions.install(docs.sparkSession)
     val cells = docs.select(isA.as("a"),
         explode(TermOps.tokens(col(textCol))).as("term"))
       .withColumn("bucket",

@@ -10,9 +10,11 @@ import org.apache.spark.sql.SparkSessionExtensions
   * expressions into the SQL function registry, so `spark.sql("SELECT
   * fnv64(x) …")` plans the codegen expression (no UDF tier).
   *
-  * Use either `spark.sql.extensions=graft.plans.GraftSparkExtensions` at
-  * session build, or `GraftSparkExtensions.install(spark)` on a live
-  * session.
+  * [[graft.GraftSession.build]] wires it through `spark.sql.extensions`,
+  * which also carries it into every `newSession()` clone.
+  * `GraftSparkExtensions.install(spark)` is the fallback for a live
+  * session started without it; it does NOT reach that session's
+  * `newSession()` clones.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -107,10 +109,9 @@ object GraftSparkExtensions {
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
-    // check-then-append on a shared session must be atomic: Verify runs
-    // queries on parallel futures and several of them call install(), so
-    // an unguarded read-modify-write can append the (idempotent, but
-    // then wastefully re-run) rule once per racing caller
+    // check-then-append on a shared session must be atomic: racing
+    // callers of an unguarded read-modify-write can append the
+    // (idempotent, but then wastefully re-run) rule once each
     GraftSparkExtensions.synchronized {
       val cur = spark.experimental.extraOptimizations
       if (!cur.contains(NanosFilterRule))

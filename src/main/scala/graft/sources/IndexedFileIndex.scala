@@ -179,7 +179,6 @@ class IndexedFileIndex(spark: SparkSession, path: String, keyCol: String,
     * stale-index conservatism as the manifest path. */
   private def bloomSurvivors(dir: String, probes: Set[Long])
       : (Set[Long], Set[Long]) = {
-    graft.plans.GraftSparkExtensions.install(spark)
     import spark.implicits._
     val bloom = spark.read.parquet(dir)
     val pcol = bloom.columns.filterNot(_ == "p").head

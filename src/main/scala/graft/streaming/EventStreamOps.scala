@@ -64,7 +64,6 @@ object EventStreamOps {
     require(width >= 2 && (width & (width - 1)) == 0,
       s"width must be a power of two, got $width")
     require(depth >= 1, s"depth must be positive, got $depth")
-    graft.plans.GraftSparkExtensions.install(events.sparkSession)
     val buckets = (0 until depth).map { j =>
       call_function("fnv64",
         concat(col(keyCol).cast("string"), lit(s"#$j")))
@@ -91,7 +90,6 @@ object EventStreamOps {
   def hllCells(events: DataFrame, tsCol: String, keyCol: String,
                window: String, watermark: String, p: Int = 6): DataFrame = {
     require(p >= 2 && p <= 12, s"hll precision p must be in [2,12], got $p")
-    graft.plans.GraftSparkExtensions.install(events.sparkSession)
     val m = 1L << p
     val h = pmod(call_function("fnv64",
       concat(col(keyCol).cast("string"), lit("#hll"))), lit(4294967296L))

@@ -4,14 +4,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
 import graft.operators.SkewOps
-import graft.plans.GraftSparkExtensions
 
 class ExpressionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   test("fnv64 native expression matches the Scala kernel (codegen path)") {
-    GraftSparkExtensions.install(spark)
     val inputs = Seq("abc", "", "hello world", "日本語テキスト", "a\nb")
     val out = inputs.toDF("v").selectExpr("v", "fnv64(v) AS h")
       .as[(String, Long)].collect().toMap
@@ -19,7 +17,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("fnv64 is null-safe and visible to spark.sql") {
-    GraftSparkExtensions.install(spark)
     Seq(Option("x"), None).toDF("v").createOrReplaceTempView("fnv_in")
     val rows = spark.sql("SELECT fnv64(v) AS h FROM fnv_in")
       .collect().map(r => Option(r.get(0)))
@@ -28,7 +25,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("fnv64 stays inside whole-stage codegen") {
-    GraftSparkExtensions.install(spark)
     val plan = spark.range(10).selectExpr("fnv64(cast(id AS string)) AS h")
       .queryExecution.executedPlan.toString
     // "*(1)" marks a WholeStageCodegen stage; fnv64 must sit inside one
@@ -37,7 +33,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("SQL builders reject wrong arity with an AnalysisException, not IOOBE") {
-    GraftSparkExtensions.install(spark)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT minhash_sig(array('a','b'))").collect()
     }
@@ -49,7 +44,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("null int literals fail analysis instead of NPE at plan time") {
-    GraftSparkExtensions.install(spark)
     Seq(
       "SELECT decode_ez('1,2', cast(null AS int))",
       "SELECT minhash_sig(array('a'), cast(null AS int), 4)",
@@ -130,7 +124,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("native text kernels resolve in SQL with the same semantics") {
-    GraftSparkExtensions.install(spark)
     Seq("a [[X|y]] {{cite a}} {{Keep}} http://r.io t ").toDF("t")
       .createOrReplaceTempView("tk_in")
     val r = spark.sql(
@@ -210,7 +203,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("hamming64 resolves to popcount(xor) in SQL") {
-    GraftSparkExtensions.install(spark)
     val r = spark.sql("SELECT hamming64(255L, 240L) AS h").collect().head
     assert(r.getInt(0) == Hashing.hamming(255L, 240L))
   }

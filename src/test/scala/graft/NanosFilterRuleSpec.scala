@@ -29,7 +29,6 @@ class NanosFilterRuleSpec extends AnyFunSuite {
 
   test("derived raw-nanos bounds reach PushedFilters for a ts range " +
     "predicate on the legacy projection") {
-    graft.plans.GraftSparkExtensions.install(spark)
     val q = legacyRead
       .filter(col("ts") >= lit("2023-11-14 23:00:00").cast("timestamp") &&
         col("ts") < lit("2023-11-14 23:10:00").cast("timestamp"))
@@ -42,23 +41,24 @@ class NanosFilterRuleSpec extends AnyFunSuite {
     "without the rule, including the ±999 ns quantum edges") {
     val lo = lit("2023-11-14 23:00:00").cast("timestamp")
     val hi = lit("2023-11-14 23:10:00").cast("timestamp")
-    def run() = legacyRead.filter(col("ts") >= lo && col("ts") < hi)
-      .agg(count(lit(1)), sum(col("id"))).collect()(0)
-    graft.plans.GraftSparkExtensions.install(spark)
-    val withRule = run()
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      saved.filterNot(_ == graft.plans.NanosFilterRule)
+    def q = legacyRead.filter(col("ts") >= lo && col("ts") < hi)
+      .agg(count(lit(1)), sum(col("id")))
+    val withRule = q.collect()(0)
+    // the session's extension injects the rule; the optimizer's
+    // excludedRules conf is the way to switch an injected rule off
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, graft.plans.NanosFilterRule.ruleName)
     try {
-      val without = run()
-      assert(withRule == without)
+      val off = q
+      assert(!off.queryExecution.executedPlan.toString
+        .contains("GreaterThanOrEqual(tsn,")) // the rule really is off
+      assert(withRule == off.collect()(0))
       assert(withRule.getLong(0) > 0L) // non-vacuous window
-    } finally spark.experimental.extraOptimizations = saved
+    } finally spark.conf.unset(excluded)
   }
 
   test("sentinel-date predicates outside the int64-nanos range skip " +
     "derivation instead of overflowing into a row-dropping bound") {
-    graft.plans.GraftSparkExtensions.install(spark)
     // both are semantically "all rows"; a wrapped m*1000 bound would
     // have returned empty
     val lo = legacyRead
@@ -75,7 +75,6 @@ class NanosFilterRuleSpec extends AnyFunSuite {
   }
 
   test("equality comparisons derive the one-quantum nanos band") {
-    graft.plans.GraftSparkExtensions.install(spark)
     val q = legacyRead
       .filter(col("ts") === lit("2023-11-14 22:13:20").cast("timestamp"))
     val plan = q.queryExecution.executedPlan.toString

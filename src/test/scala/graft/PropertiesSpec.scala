@@ -165,7 +165,6 @@ class PropertiesSpec extends AnyFunSuite {
   test("fnv64 native expression agrees with the kernel on arbitrary strings") {
     val spark = TestSpark.spark
     import spark.implicits._
-    graft.plans.GraftSparkExtensions.install(spark)
     val samples = Gen.listOfN(50, Gen.asciiPrintableStr)
       .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(42L)).get
     val out = samples.toDF("v").selectExpr("v", "fnv64(v) AS h")

@@ -148,7 +148,6 @@ class Round11OpsSpec extends AnyFunSuite {
   test("indexed read prunes bloom-qualified partition directories for " +
     "point probes, including the absent-probe case") {
     val dir = graft.Scratch.dir("ifb").toString + "/t"
-    graft.plans.GraftSparkExtensions.install(spark)
     val data = spark.range(4000)
       .selectExpr("id AS event_id", "id % 100 AS user_id")
       .withColumn("g", pmod(

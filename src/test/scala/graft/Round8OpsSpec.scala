@@ -129,7 +129,6 @@ class Round8OpsSpec extends AnyFunSuite {
     assert(VByteCodec.encode(Array(200L)).toSeq == Seq[Byte](1, -113, -56))
     assert(VByteCodec.decode(VByteCodec.encode(Array.empty[Long])).isEmpty)
     // the SQL surface agrees with the kernel
-    graft.plans.GraftSparkExtensions.install(spark)
     val back = spark.sql(
       "SELECT vbyte_decode(vbyte_encode(array(3L, 900L, 70000L))) AS a")
       .as[Seq[Long]].collect().head

@@ -205,7 +205,6 @@ class Round9OpsSpec extends AnyFunSuite {
   // ---- streaming CMS bucket goldens ----
 
   test("st_cms trace buckets match the batch count-min bucket family") {
-    graft.plans.GraftSparkExtensions.install(spark)
     val rows = Seq("1", "2").toDF("k")
       .select(col("k"), expr("fnv64(concat(k, '#0')) & 255").as("b0"),
         expr("fnv64(concat(k, '#1')) & 255").as("b1"))

@@ -5,15 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all Spark-backed specs. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        graft.Scratch.dir("wh").toString)
-      .getOrCreate()
+    val s = GraftSession.build("local[4]", 4, "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
