@@ -4,6 +4,7 @@ import java.io.BufferedInputStream
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,14 +15,15 @@ import org.apache.spark.sql.functions._
   * ordinary parquet side table; `wikirev` consumes it via the
   * `splitIndex` option so partition planning aligns exactly on page
   * boundaries instead of scanning for them.
-  * Compressed files yield no offsets (they are unsplittable anyway).
+  * Compressed files yield no offsets: the planner splits them by codec
+  * (bz2 by block, others not at all), never by decompressed offset.
   */
 object IndexSplits {
 
   def scanOffsets(file: String,
                   conf: Configuration = new Configuration()): Seq[Long] = {
-    if (file.endsWith(".bz2") || file.endsWith(".gz")) return Seq.empty
     val p = new Path(file)
+    if (new CompressionCodecFactory(conf).getCodec(p) != null) return Seq.empty
     val fs = FileSystem.get(p.toUri, conf)
     val in = new BufferedInputStream(fs.open(p), 1 << 16)
     try {

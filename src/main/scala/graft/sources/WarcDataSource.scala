@@ -35,7 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - gz/bz2 archives (the production layout — web archives ship as
   *    thousands of compressed members) take one partition per file;
   *    parallelism = file count, as in the reference corpus.
-  *  - plain files split at `maxSplitBytes`: a partition parses records
+  *  - plain files split at the size [[FileSplits]] derives from the input
+  *    and the session (or at `maxSplitBytes`): a partition parses records
   *    whose version line STARTS in its byte range, scanning forward from
   *    the range start to the first `\r\n\r\nWARC/` boundary and reading
   *    past the range end to finish its last record — the same split rule
@@ -114,32 +115,22 @@ class WarcScan(props: Map[String, String], required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val path = props.getOrElse("path",
       throw new IllegalArgumentException("warc: 'path' option is required"))
-    val maxSplit =
-      props.getOrElse("maxSplitBytes", (128L * 1024 * 1024).toString).toLong
+    val spark = SparkSession.active
     val conf = hadoopConf
-    val fs = FileSystem.get(new java.net.URI(path), conf)
+    val files = FileSplits.list(FileSystem.get(new java.net.URI(path), conf), path)
+    val maxSplit = FileSplits.maxSplitBytes(spark, props,
+      files.map(_.getLen).sum, FileSplits.plainFloor(spark))
     // splittability must agree with the reader's codec detection: the
     // reader decompresses whole-stream whenever CompressionCodecFactory
     // recognizes the file, so a codec file (.gz/.bz2/.deflate/…) split
     // here would be read in full by EVERY byte-range partition
     val codecs = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-    val statuses = fs.globStatus(new Path(path)) match {
-      case null => Array.empty[org.apache.hadoop.fs.FileStatus]
-      case s => s.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
-        else Array(st)
-      }
-    }
-    statuses.flatMap { st =>
+    files.flatMap { st =>
       val p = st.getPath.toString
-      val compressed = codecs.getCodec(st.getPath) != null
-      if (compressed || st.getLen <= maxSplit)
+      if (codecs.getCodec(st.getPath) != null)
         Seq(WarcInputPartition(p, 0L, Long.MaxValue))
-      else {
-        val n = ((st.getLen + maxSplit - 1) / maxSplit).toInt
-        (0 until n).map(i => WarcInputPartition(p, i * maxSplit,
-          math.min((i + 1) * maxSplit, st.getLen)))
-      }
+      else FileSplits.ranges(st.getLen, maxSplit)
+        .map { case (s, e) => WarcInputPartition(p, s, e) }
     }.toArray[InputPartition]
   }
 

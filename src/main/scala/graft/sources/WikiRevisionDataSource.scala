@@ -4,8 +4,8 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -22,7 +22,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    whose `<page>` tag *starts* inside its byte range and may read past
   *    the range end to finish the last page (the reference's split rule,
   *    io/input/WikiRevisionInputFormat.java:230-317);
-  *  - bz2/gz files get one partition each (decompression is sequential);
+  *  - the split size is derived from the input and the session
+  *    ([[FileSplits]]: Spark's file-split rule over the total input bytes
+  *    and the default parallelism), so a dump is scanned by every core;
+  *  - bz2 files split by compression block (BYBLOCK ranges over the
+  *    compressed bytes); other compressed files (gz, deflate, …) get one
+  *    partition each, as their decompression is sequential;
   *  - filter pushdown short-circuits parsing: namespace / redirect skips
   *    abandon a page before touching its revisions
   *    (WikiRevisionPageInputFormat.java:287-295,
@@ -34,7 +39,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    io/etl/RevisionIdsFormat.java:76-160).
   *
   * Options: `onlyArticles`, `skipRedirects` (booleans), `beginTime`,
-  * `endTime` (ISO-8601, half-open range), `maxSplitBytes`.
+  * `endTime` (ISO-8601, half-open range), `maxSplitBytes` (overrides the
+  * derived split size), `splitIndex` (page-offset index, see IndexSplits).
   * Pushed-down filters equivalent to those options are honored too; all
   * filters remain residual (Spark re-evaluates), so pushdown is purely an
   * I/O optimization and never changes results.
@@ -128,29 +134,29 @@ class WikiRevisionScan(props: Map[String, String], required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     val path = props.getOrElse("path",
       throw new IllegalArgumentException("wikirev: 'path' option is required"))
-    val maxSplit = props.getOrElse("maxSplitBytes", (128L * 1024 * 1024).toString).toLong
-    val fs = FileSystem.get(new java.net.URI(path), hadoopConf)
-    val statuses = fs.globStatus(new Path(path)) match {
-      case null => Array.empty[org.apache.hadoop.fs.FileStatus]
-      case s => s.flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile) else Array(st)
-      }
-    }
+    val spark = org.apache.spark.sql.SparkSession.active
+    val conf = hadoopConf
+    val files = FileSplits.list(FileSystem.get(new java.net.URI(path), conf), path)
+    val totalBytes = files.map(_.getLen).sum
+    val plainSplit = FileSplits.maxSplitBytes(spark, props, totalBytes,
+      FileSplits.plainFloor(spark))
+    val blockSplit = FileSplits.maxSplitBytes(spark, props, totalBytes,
+      FileSplits.Bzip2MaxBlock)
     // Optional precomputed page-offset index (S19): partition boundaries
     // land exactly on <page> tags — the reader's boundary scan starts at
     // a page, so no bytes are parsed twice across partitions.
     //
     // The index is aggregated IN SPARK down to ~one range start per
-    // maxSplitBytes (min page offset per file × size bucket) before the
-    // driver collects it: planning memory is O(fileBytes / maxSplit), not
+    // split (min page offset per file × size bucket) before the driver
+    // collects it: planning memory is O(fileBytes / split), not
     // O(pages). A full enwiki history index (~60M page offsets) would
     // otherwise be GBs of driver heap; the aggregate is a few thousand
     // range starts. Buckets with no page start simply merge into the
     // previous range.
     val index: Map[String, Seq[Long]] = props.get("splitIndex").map { ip =>
       import org.apache.spark.sql.functions.{col, expr, min}
-      org.apache.spark.sql.SparkSession.active.read.parquet(ip)
-        .groupBy(col("file_name"), expr(s"offset div $maxSplit").as("bucket"))
+      spark.read.parquet(ip)
+        .groupBy(col("file_name"), expr(s"offset div $plainSplit").as("bucket"))
         .agg(min(col("offset")).as("start"))
         .select("file_name", "start")
         .collect()
@@ -158,27 +164,28 @@ class WikiRevisionScan(props: Map[String, String], required: StructType,
         .map { case (f, rows) => f -> rows.map(_.getLong(1)).toSeq.sorted }
     }.getOrElse(Map.empty)
 
-    statuses.flatMap { st =>
+    // splittability comes from the same codec lookup the reader uses to
+    // open the file: a codec file split into byte ranges would be read
+    // whole by every range
+    val codecs = new CompressionCodecFactory(conf)
+    files.flatMap { st =>
       val p = st.getPath.toString
-      // bz2 is splittable (BYBLOCK ranges over compressed bytes); gz is not
-      if (p.endsWith(".bz2") && st.getLen > maxSplit) {
-        val n = ((st.getLen + maxSplit - 1) / maxSplit).toInt
-        (0 until n).map(i => WikiRevisionInputPartition(p, i * maxSplit,
-          math.min((i + 1) * maxSplit, st.getLen)))
-      }
-      else if (p.endsWith(".bz2") || p.endsWith(".gz") || st.getLen <= maxSplit)
-        Seq(WikiRevisionInputPartition(p, 0L, Long.MaxValue))
-      else index.get(p) match {
-        case Some(starts) if starts.nonEmpty =>
-          // consecutive page-aligned range starts → partitions; the last
-          // range runs to EOF
-          starts.zip(starts.tail :+ Long.MaxValue).map { case (s, e) =>
-            WikiRevisionInputPartition(p, s, e)
-          }
-        case _ =>
-          val n = ((st.getLen + maxSplit - 1) / maxSplit).toInt
-          (0 until n).map(i => WikiRevisionInputPartition(p, i * maxSplit,
-            math.min((i + 1) * maxSplit, st.getLen)))
+      def ranges(maxSplit: Long) = FileSplits.ranges(st.getLen, maxSplit)
+        .map { case (s, e) => WikiRevisionInputPartition(p, s, e) }
+      codecs.getCodec(st.getPath) match {
+        case null => index.get(p) match {
+          case Some(starts) if starts.nonEmpty && st.getLen > plainSplit =>
+            // consecutive page-aligned range starts → partitions; the last
+            // range runs to EOF
+            starts.zip(starts.tail :+ Long.MaxValue).map { case (s, e) =>
+              WikiRevisionInputPartition(p, s, e)
+            }
+          case _ => ranges(plainSplit)
+        }
+        // bz2: BYBLOCK ranges over the compressed bytes
+        case _: SplittableCompressionCodec => ranges(blockSplit)
+        // gz, deflate, …: decompression is sequential, one partition
+        case _ => Seq(WikiRevisionInputPartition(p, 0L, Long.MaxValue))
       }
     }.toArray[InputPartition]
   }

@@ -1,10 +1,12 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, InputStream}
+import java.io.InputStream
+import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.io.compress.{CodecPool, CompressionCodecFactory, Decompressor,
+  SplitCompressionInputStream, SplittableCompressionCodec}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
@@ -44,38 +46,42 @@ class WikiRevisionPartitionReader(part: WikiRevisionInputPartition,
   //    LineRecordReader convention; the stream self-aligns to the first
   //    compression block of the range);
   //  - other/whole-file compressed: single partition, read everything.
-  private var pooledDecompressor: org.apache.hadoop.io.compress.Decompressor = _
+  // The planner keys splittability on the same codec lookup.
+  private val codec = new CompressionCodecFactory(hadoopConf).getCodec(new Path(part.path))
+  private var pooledDecompressor: Decompressor = _
 
-  private val streamSetup: (InputStream,
-      org.apache.hadoop.io.compress.SplitCompressionInputStream) = {
-    val conf = hadoopConf
+  private val (in, splitStream): (InputStream, SplitCompressionInputStream) = {
     val p = new Path(part.path)
-    val fs = FileSystem.get(p.toUri, conf)
-    val raw = fs.open(p)
-    val codec = new CompressionCodecFactory(conf).getCodec(p)
+    val raw = FileSystem.get(p.toUri, hadoopConf).open(p)
     codec match {
       case null =>
         if (part.start > 0) raw.seek(part.start)
-        (new BufferedInputStream(raw, 1 << 16), null)
-      case sc: org.apache.hadoop.io.compress.SplittableCompressionCodec
-          if part.end != Long.MaxValue =>
-        pooledDecompressor = org.apache.hadoop.io.compress.CodecPool.getDecompressor(codec)
+        (raw, null)
+      case sc: SplittableCompressionCodec if part.end != Long.MaxValue =>
+        pooledDecompressor = CodecPool.getDecompressor(codec)
         val cin = sc.createInputStream(raw, pooledDecompressor, part.start, part.end,
-          org.apache.hadoop.io.compress.SplittableCompressionCodec.READ_MODE.BYBLOCK)
+          SplittableCompressionCodec.READ_MODE.BYBLOCK)
         (cin, cin)
-      case c =>
-        (new BufferedInputStream(c.createInputStream(raw), 1 << 16), null)
+      case c => (c.createInputStream(raw), null)
     }
   }
-  private val in = streamSetup._1
-  private val splitStream = streamSetup._2
   // absolute position for the uncompressed case; decompressed byte count
   // otherwise (only compared against `end` in the uncompressed case)
-  private var pos: Long = if (splitStream == null && part.start >= 0 &&
-    !part.path.endsWith(".bz2") && !part.path.endsWith(".gz")) part.start else 0L
+  private var pos: Long = if (codec == null) part.start else 0L
 
-  private val PageOpen = "<page>".getBytes("UTF-8")
-  private val PageClose = "</page>".getBytes("UTF-8")
+  // One read buffer for all three modes, refilled only when the scanner
+  // needs its next byte: the split bz2 stream stops a read at a block
+  // end, so its getPos advances exactly when the first byte of the next
+  // block is consumed, as with byte-at-a-time reads.
+  private val buf = new Array[Byte](1 << 16)
+  private var bufPos = 0
+  private var bufLen = 0
+  // bytes of the page being captured; grows to the partition's largest page
+  private var page = new Array[Byte](1 << 16)
+  private var pageLen = 0
+
+  private val PageOpen = "<page>".getBytes(UTF_8)
+  private val PageClose = "</page>".getBytes(UTF_8)
 
   private var rows: Iterator[InternalRow] = Iterator.empty
   private var current: InternalRow = _
@@ -95,7 +101,7 @@ class WikiRevisionPartitionReader(part: WikiRevisionInputPartition,
   override def close(): Unit = {
     in.close()
     if (pooledDecompressor != null) {
-      org.apache.hadoop.io.compress.CodecPool.returnDecompressor(pooledDecompressor)
+      CodecPool.returnDecompressor(pooledDecompressor)
       pooledDecompressor = null
     }
   }
@@ -106,47 +112,62 @@ class WikiRevisionPartitionReader(part: WikiRevisionInputPartition,
     val tagPos = seek(PageOpen)
     if (tagPos < 0) return None
     if (splitStream == null && tagPos >= part.end) return None
-    val sb = new java.lang.StringBuilder(1 << 16)
-    if (!captureUntil(PageClose, sb)) return None // truncated trailing page
-    Some(sb.toString)
+    if (!captureUntil(PageClose)) return None // truncated trailing page
+    Some(new String(page, 0, pageLen, UTF_8))
+  }
+
+  /** True when `buf` has an unconsumed byte, refilling it if drained;
+    * false at EOF. */
+  private def fill(): Boolean = {
+    if (bufPos < bufLen) return true
+    val n = in.read(buf, 0, buf.length)
+    bufPos = 0
+    bufLen = math.max(n, 0)
+    n > 0
+  }
+
+  /** Consume `buf` until `tag` is complete or the buffer is drained,
+    * continuing a partial match of `matched` bytes; the new match length. */
+  private def scan(tag: Array[Byte], matched: Int): Int = {
+    var i = matched
+    var j = bufPos
+    while (j < bufLen && i < tag.length) {
+      val b = buf(j)
+      j += 1
+      if (b == tag(i)) i += 1
+      else i = if (b == tag(0)) 1 else 0
+    }
+    pos += j - bufPos
+    bufPos = j
+    i
   }
 
   /** Consume until `tag` fully matched; absolute position of its first
     * byte, or -1 at EOF. */
   private def seek(tag: Array[Byte]): Long = {
     var i = 0
-    var b = in.read()
-    while (b >= 0) {
-      pos += 1
-      if (b == tag(i)) {
-        i += 1
-        if (i == tag.length) return pos - tag.length
-      } else i = if (b == tag(0)) 1 else 0
-      b = in.read()
+    while (fill()) {
+      i = scan(tag, i)
+      if (i == tag.length) return pos - tag.length
     }
     -1L
   }
 
-  /** Capture content bytes until `tag` matched (tag excluded); false at
-    * EOF. Partial tag matches that fail are flushed back into the
-    * content. */
-  private def captureUntil(tag: Array[Byte], sb: java.lang.StringBuilder): Boolean = {
-    val buf = new java.io.ByteArrayOutputStream(1 << 16)
+  /** Capture bytes into `page` until `tag` matched (tag excluded); false
+    * at EOF. Every consumed byte is copied, so a partial tag match that
+    * fails is already content; a full match drops the tag's bytes. */
+  private def captureUntil(tag: Array[Byte]): Boolean = {
+    pageLen = 0
     var i = 0
-    var b = in.read()
-    while (b >= 0) {
-      pos += 1
-      if (b == tag(i)) {
-        i += 1
-        if (i == tag.length) {
-          sb.append(new String(buf.toByteArray, "UTF-8"))
-          return true
-        }
-      } else {
-        if (i > 0) { buf.write(tag, 0, i); i = 0 }
-        if (b == tag(0)) i = 1 else buf.write(b)
-      }
-      b = in.read()
+    while (fill()) {
+      val from = bufPos
+      i = scan(tag, i)
+      val n = bufPos - from
+      if (pageLen + n > page.length)
+        page = java.util.Arrays.copyOf(page, math.max(page.length * 2, pageLen + n))
+      System.arraycopy(buf, from, page, pageLen, n)
+      pageLen += n
+      if (i == tag.length) { pageLen -= tag.length; return true }
     }
     false
   }

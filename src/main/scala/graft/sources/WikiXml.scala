@@ -52,14 +52,8 @@ object WikiXml {
 
   def fileNames(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    val fs = FileSystem.get(new java.net.URI(path),
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
       spark.sparkContext.hadoopConfiguration)
-    val statuses = Option(fs.globStatus(new Path(path)))
-      .getOrElse(Array.empty).flatMap { st =>
-        if (st.isDirectory) fs.listStatus(st.getPath).filter(_.isFile)
-        else Array(st)
-      }
-    statuses.map(_.getPath.toString).toSeq.toDF("file_name")
+    FileSplits.list(fs, path).map(_.getPath.toString).toSeq.toDF("file_name")
   }
 }

@@ -3,13 +3,51 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.WikiXml
+import scala.jdk.CollectionConverters._
+import graft.sources.{FileSplits, WikiXml}
 
 class WikiSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private lazy val fixturePath: String = graft.sources.WikiFixtures.standardXmlPath
+
+  /** `bytes` written through a Hadoop codec to a temp file ending in
+    * `suffix`. */
+  private def compressed(codec: org.apache.hadoop.io.compress.CompressionCodec,
+                         bytes: Array[Byte], suffix: String): String = {
+    codec.asInstanceOf[org.apache.hadoop.conf.Configurable]
+      .setConf(new org.apache.hadoop.conf.Configuration())
+    val f = Files.createTempFile("wiki", suffix)
+    val out = codec.createOutputStream(Files.newOutputStream(f))
+    out.write(bytes)
+    out.close()
+    f.toString
+  }
+
+  private def bz2(bytes: Array[Byte]): String =
+    compressed(new org.apache.hadoop.io.compress.BZip2Codec(), bytes, ".xml.bz2")
+
+  /** A dump spanning more than two bz2 blocks. */
+  private lazy val noisyBz2: String = {
+    val f = bz2(graft.sources.WikiFixtures.noisyXml(2000).getBytes("UTF-8"))
+    assert(Files.size(Paths.get(f)) > 2 * 900 * 1000,
+      s"need >2 bz2 blocks, got ${Files.size(Paths.get(f))}")
+    f
+  }
+
+  /** Sorted (rev_id, text) rows, and raw (rev_id, md5) rows, of a read. */
+  private def typedRows(path: String, opts: Map[String, String]) =
+    WikiXml.read(spark, path, opts).select("rev_id", "text")
+      .as[(Long, String)].collect().sorted.toSeq
+  private def rawRows(path: String, opts: Map[String, String]) =
+    WikiXml.readRaw(spark, path, opts)
+      .select(col("rev_id"), md5(col("revision_xml")))
+      .as[(Long, String)].collect().sorted.toSeq
+  private val Whole = Map("maxSplitBytes" -> Long.MaxValue.toString)
+
+  private def numPartitions(path: String, opts: Map[String, String] = Map.empty) =
+    WikiXml.read(spark, path, opts).rdd.getNumPartitions
 
   test("full read: one row per revision, typed fields, unescaping") {
     val df = WikiXml.read(spark, fixturePath)
@@ -135,34 +173,93 @@ class WikiSourceSpec extends AnyFunSuite {
   }
 
   test("bz2-compressed dumps read as a single partition") {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val codec = new org.apache.hadoop.io.compress.BZip2Codec()
-    codec.setConf(conf)
-    val f = Files.createTempFile("testwiki", ".xml.bz2")
-    val out = codec.createOutputStream(Files.newOutputStream(f))
-    out.write(Files.readAllBytes(Paths.get(fixturePath)))
-    out.close()
-    val df = WikiXml.read(spark, f.toString)
+    val f = bz2(Files.readAllBytes(Paths.get(fixturePath)))
+    val df = WikiXml.read(spark, f)
     assert(df.rdd.getNumPartitions == 1)
     assert(df.count() == 5)
   }
 
   test("multi-block bz2 splits across partitions with exact results") {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val codec = new org.apache.hadoop.io.compress.BZip2Codec()
-    codec.setConf(conf)
-    val f = Files.createTempFile("noisywiki", ".xml.bz2")
-    val out = codec.createOutputStream(Files.newOutputStream(f))
-    out.write(graft.sources.WikiFixtures.noisyXml(2000).getBytes("UTF-8"))
-    out.close()
-    assert(Files.size(f) > 2 * 900 * 1000, s"need >2 bz2 blocks, got ${Files.size(f)}")
-    val whole = WikiXml.read(spark, f.toString)
-    val split = WikiXml.read(spark, f.toString, Map("maxSplitBytes" -> "400000"))
+    val whole = WikiXml.read(spark, noisyBz2)
+    val split = WikiXml.read(spark, noisyBz2, Map("maxSplitBytes" -> "400000"))
     assert(split.rdd.getNumPartitions > 3)
     assert(whole.count() == 2000)
     assert(split.count() == 2000)
     assert(split.agg(sum("rev_id")).as[Long].head() ==
       whole.agg(sum("rev_id")).as[Long].head())
+  }
+
+  test("multi-block bz2 splits by the derived size with exact results") {
+    val len = Files.size(Paths.get(noisyBz2))
+    val cores = spark.sparkContext.defaultParallelism
+    val split = math.max(FileSplits.Bzip2MaxBlock, (len + cores - 1) / cores)
+    val parts = numPartitions(noisyBz2)
+    assert(parts == ((len + split - 1) / split).toInt)
+    assert(parts > 1)
+    assert(typedRows(noisyBz2, Map.empty) == typedRows(noisyBz2, Whole))
+    assert(rawRows(noisyBz2, Map.empty) == rawRows(noisyBz2, Whole))
+  }
+
+  test("a non-splittable codec file is one partition whatever maxSplitBytes") {
+    // .deflate has no suffix rule: splittability must come from the codec
+    val f = compressed(new org.apache.hadoop.io.compress.DefaultCodec(),
+      graft.sources.WikiFixtures.bigXml(60).getBytes("UTF-8"), ".xml.deflate")
+    val df = WikiXml.read(spark, f, Map("maxSplitBytes" -> "1000"))
+    assert(df.rdd.getNumPartitions == 1)
+    assert(df.count() == 180)
+    assert(df.select("rev_id").distinct().count() == 180)
+  }
+
+  test("a plain dump above the floor plans one partition per core") {
+    val conf = spark.sessionState.conf
+    val cores = spark.sparkContext.defaultParallelism
+    // each core's share must exceed the open-cost floor
+    val target = cores * conf.filesOpenCostInBytes + (1 << 20)
+    val perPage = graft.sources.WikiFixtures.bigXml(100).length / 100
+    val f = Files.createTempFile("bigwiki-derived", ".xml")
+    Files.writeString(f, graft.sources.WikiFixtures.bigXml((target / perPage).toInt + 100))
+    assert(Files.size(f) > target)
+    assert(numPartitions(f.toString) == cores)
+    val split = WikiXml.read(spark, f.toString)
+    val whole = WikiXml.read(spark, f.toString, Whole)
+    assert(split.count() == whole.count())
+    assert(split.agg(sum("rev_id")).as[Long].head() ==
+      whole.agg(sum("rev_id")).as[Long].head())
+    assert(rawRows(f.toString, Map.empty) == rawRows(f.toString, Whole))
+  }
+
+  test("small fixtures stay one partition under the derived size") {
+    assert(numPartitions(fixturePath) == 1)
+  }
+
+  test("scanner hazards across the 64 KB refill point read identically at any split") {
+    val (bytes, expected) = BoundaryDump.build()
+    val f = Files.createTempFile("boundarywiki", ".xml")
+    Files.write(f, bytes)
+    val path = f.toString
+    val raw = rawRows(path, Whole)
+    assert(typedRows(path, Whole) == expected)
+    for (split <- Seq(65536, 131072, 100000, 7777)) {
+      val opts = Map("maxSplitBytes" -> split.toString)
+      assert(numPartitions(path, opts) > 1)
+      assert(typedRows(path, opts) == expected, s"typed, maxSplitBytes=$split")
+      assert(rawRows(path, opts) == raw, s"raw, maxSplitBytes=$split")
+    }
+    val doc = new String(bytes, "UTF-8")
+    WikiXml.readRaw(spark, path).select("revision_xml").as[String].collect()
+      .foreach(r => assert(doc.contains(r)))
+  }
+
+  test("no byte-size split constant in the sources package") {
+    // split sizes come from FileSplits (the input and the session), never
+    // from a per-source constant; needles are split so this file does not
+    // match itself
+    val literal = ("1024" + """L?\s*\*\s*1024|<<\s*[23]\d""").r
+    val found = java.nio.file.Files.walk(Paths.get("src/main/scala/graft/sources"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filter(p => literal.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).toSet
+    assert(found.isEmpty, s"split-size literal in: $found")
   }
 
   test("parser corner cases: missing ns, self-closing text, no comment, pageless file") {
@@ -236,5 +333,65 @@ class WikiSourceSpec extends AnyFunSuite {
     val df = WikiXml.readJson(spark, graft.sources.WikiFixtures.jsonPath)
     assert(df.count() == 2)
     assert(df.select(max("rev_id")).as[Long].head() == 6L)
+  }
+}
+
+/** A dump that puts each hazard of the reader's bulk scanner across a
+  * refill point of its 64 KB buffer (offsets multiple of 64 KB, as read
+  * from a partition starting at one): a `<page>` tag, a `</page>` tag, a
+  * false partial `</pag` inside text, a multi-byte UTF-8 character, and a
+  * page larger than the buffer. Spaces pad between pages and before
+  * `</page>`, where the parser ignores them. */
+object BoundaryDump {
+  val Refill = 1 << 16
+
+  private def head(id: Long): String =
+    s"<page>\n    <title>T$id</title>\n    <ns>0</ns>\n    <id>$id</id>\n" +
+      s"    <revision>\n      <id>$id</id>\n" +
+      "      <timestamp>2020-01-01T00:00:00Z</timestamp>\n" +
+      "      <text xml:space=\"preserve\">"
+  private val tail = "</text>\n    </revision>\n  "
+
+  /** The dump's bytes and its (rev_id, text) rows, sorted. */
+  def build(): (Array[Byte], Seq[(Long, String)]) = {
+    val out = new java.io.ByteArrayOutputStream()
+    val rows = Seq.newBuilder[(Long, String)]
+    def put(s: String): Unit = out.write(s.getBytes("UTF-8"))
+    /** Count of ASCII bytes that brings the write position to `before`
+      * bytes ahead of the next refill point. */
+    def gap(before: Int): Int = {
+      val b = ((out.size + before) / Refill + 1) * Refill
+      b - before - out.size
+    }
+    def page(id: Long, text: String, padClose: Int = -1): Unit = {
+      put(head(id) + text + tail)
+      if (padClose >= 0) put(" " * gap(padClose))
+      put("</page>\n")
+      rows += id -> text
+    }
+    /** A page whose text puts `marker` `before` bytes ahead of a refill. */
+    def straddle(id: Long, marker: String, before: Int): Unit = {
+      val at = out.size + head(id).getBytes("UTF-8").length
+      val fill = ((at + before) / Refill + 1) * Refill - before - at
+      page(id, "x" * fill + marker + " after")
+    }
+    put("<mediawiki>\n")
+    page(1, "plain")
+    put(" " * gap(3)); page(2, "page tag across the refill")
+    page(3, "close tag across the refill", padClose = 3)
+    straddle(4, "</pagination", 2)
+    straddle(5, "\u20ac and \ud834\udd1e", 1)
+    page(6, ("large page \u00fc " * 12000).trim)
+    page(7, "last")
+    put("</mediawiki>\n")
+    val bytes = out.toByteArray
+    // each hazard really spans a refill point
+    def spans(m: String): Boolean = {
+      val mb = m.getBytes("UTF-8")
+      bytes.indices.exists(i => i % Refill > Refill - mb.length &&
+        bytes.startsWith(mb, i))
+    }
+    Seq("<page>", "</page>", "</pagination", "\u20ac").foreach(m => assert(spans(m), m))
+    (bytes, rows.result().sorted)
   }
 }
