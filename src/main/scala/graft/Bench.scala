@@ -42,16 +42,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("WARN")
-    // materialize via the noop sink: unlike count(), it evaluates every
-    // output column (count lets Catalyst prune deterministic projections,
-    // which flattered map-only queries into column-pruned count-stars)
-    def run(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
     // warm the JVM/session (codegen, shuffle service, parquet footer cache)
     // so per-query numbers measure the queries, not startup
     spark.range(1000000).selectExpr("sum(id)").collect()
-    try SparkEntry.queries.get("q1_pricing_summary").foreach(f => run(f(spark, sfDir)))
-    catch { case _: Throwable => () } // warmup only; the timed run records the error
+    // warmup only; the timed run records the error
+    SparkEntry.queries.get("q1_pricing_summary").foreach(f => timed(f(spark, sfDir)))
     // run queries concurrently (Spark schedules concurrent jobs across the
     // local cores, as a shared cluster would); `value` is the true
     // wall-clock of the whole suite, `queries` are per-query latencies
@@ -69,14 +64,8 @@ object Bench {
     import scala.concurrent.duration.Duration
     val futures = suite.map { case (name, fn) =>
       Future {
-        val t0 = System.nanoTime()
-        // a crashed query must surface as an error, not masquerade as a
-        // fast timing — breakage and noise have to stay distinguishable
-        val err = try { run(fn(spark, sfDir)); None } catch {
-          case e: Throwable =>
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName))
-        }
-        (name, (System.nanoTime() - t0) / 1e9, err)
+        val (t, err) = timed(fn(spark, sfDir))
+        (name, t, err)
       }
     }
     val concResults = Await.result(Future.sequence(futures), Duration.Inf)
@@ -88,7 +77,7 @@ object Bench {
     // 5-9× swings on unchanged plans from that alone — so the concurrent
     // numbers are kept only as the suite-throughput wall above, and the
     // comparable per-query record is the sequential pass below.
-    // BEST-OF-2 per query (the ScaleProbe discipline, r11 item 2): one
+    // BEST-OF-2 per query (the sequential-probe discipline, r11 item 2): one
     // timing per query proved fragile — the r11 driver record ran 34%
     // above the builder's on identical code and unchanged plans, i.e.
     // transient environment contention, not the queries. min(2 runs)
@@ -115,22 +104,14 @@ object Bench {
         // pass on a memory-tight host
         sinceGc += 1
         if (sinceGc >= 50) { sinceGc = 0; System.gc() }
-        def once(): (Double, Option[String]) = {
-          val t0 = System.nanoTime()
-          val err = try { run(fn(spark, sfDir)); None } catch {
-            case e: Throwable =>
-              Some(Option(e.getMessage).getOrElse(e.getClass.getName))
-          }
-          ((System.nanoTime() - t0) / 1e9, err)
-        }
         val gc0 = gcMillis()
-        val (t1, e1) = once()
+        val (t1, e1) = timed(fn(spark, sfDir))
         if (e1.isDefined) (name, 0.0, e1)
         else {
           // run 1 succeeded: keep the clean t1 as the timing, but log a
           // run-2 failure as a transient_error (best-of-2 exists to
           // suppress noise, not to hide flakiness)
-          val (t2, e2) = once()
+          val (t2, e2) = timed(fn(spark, sfDir))
           gcSec(name) = (gcMillis() - gc0) / 1e3
           if (e2.isDefined) { transients(name) = e2.get; (name, t1, None) }
           else {
@@ -154,13 +135,8 @@ object Bench {
         name
     }.toSeq
     val rerun = contended.map { name =>
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val err = try { run(fn(spark, sfDir)); None } catch {
-        case e: Throwable =>
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName))
-      }
-      name -> (if (err.isDefined) -1.0 else (System.nanoTime() - t0) / 1e9)
+      val (t, err) = timed(SparkEntry.queries(name)(spark, sfDir))
+      name -> (if (err.isDefined) -1.0 else t)
     }.toMap
     val results = seqResults.map {
       case (name, t, None) if rerun.get(name).exists(_ > 0) =>
@@ -190,8 +166,25 @@ object Bench {
     spark.stop()
   }
 
+  /** Builds a query's frame and runs it to the noop sink: the seconds,
+    * and the error text when it failed. Unlike count(), the noop sink
+    * evaluates every output column (count lets Catalyst prune
+    * deterministic projections, which flattered map-only queries into
+    * column-pruned count-stars). A crashed query surfaces as an error,
+    * not as a fast timing: breakage and noise stay distinguishable. */
+  def timed(df: => org.apache.spark.sql.DataFrame): (Double, Option[String]) = {
+    val t0 = System.nanoTime()
+    val err = try { df.write.format("noop").mode("overwrite").save(); None }
+    catch {
+      case e: Throwable =>
+        Some(Option(e.getMessage).getOrElse(e.getClass.getName))
+    }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
   private def jstr(s: String): String = JsonUtil.jstr(s)
-  private def sec(v: Double): String = String.format(java.util.Locale.ROOT,
+  /** Seconds with three decimals, locale-independent (a JSON number). */
+  private[graft] def sec(v: Double): String = String.format(java.util.Locale.ROOT,
     "%.3f", java.lang.Double.valueOf(v))
 
   /** The bench harness that reads stdout keeps only its last ~2000

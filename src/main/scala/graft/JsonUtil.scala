@@ -2,10 +2,9 @@ package graft
 
 /** Minimal JSON string escaping shared by the measurement mains.
   *
-  * Bench and ScaleProbe each emit hand-assembled one-line JSON records;
-  * before r18, ScaleProbe escaped error messages with a narrow
-  * quote/backslash/CR/LF regex, so a tab or other control character in
-  * a Spark stack summary produced an invalid record (r17 ADVICE). One
+  * Bench and Probe each emit hand-assembled one-line JSON records; a
+  * narrow quote/backslash/CR/LF escape once let a tab or other control
+  * character in a Spark stack summary produce an invalid record. One
   * escaper, covering every char < 0x20, used by both.
   */
 object JsonUtil {

@@ -13,7 +13,7 @@ import java.nio.file.{Files, Path, Paths}
   * and inflated bench wall-clock ~30% — the filesystem was being
   * measured, not the code. Rooting everything per-process makes any
   * single run self-cleaning, and [[sweepStale]] (called at Bench /
-  * Verify / ScaleProbe startup) reclaims debris from crashed runs
+  * Verify / Probe startup) reclaims debris from crashed runs
   * whose hook never fired.
   *
   * NOT swept: the persistent cross-process caches that are pure

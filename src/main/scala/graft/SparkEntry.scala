@@ -60,73 +60,20 @@ object SparkEntry {
       dir.toString
     })
 
-  /** One deterministic PQ model (codebooks, codes) per (session, sf
-    * dir), trained once per process and EAGERLY checkpointed (it is
-    * consumed by concurrently-scheduled queries — the eager rule).
-    * ann_pq_topk / ann_rerank / ann_recall each retrained bit-identical
-    * codebooks (deterministic sharded-init Lloyd on the same corpus
-    * cast) — the model is a pure function of the corpus, so sharing
-    * moves COST only, never results; it is also what a production
-    * vector store does (codebooks persist beside the index, serving
-    * never retrains). The oracle replays the training chain per query
-    * as before. */
-  private val pqModels = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private def pqModel(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val k = (s, d)
-    val hit = pqModels.get(k)
-    if (hit != null) hit
-    else {
-      // same get/build/putIfAbsent discipline as [[sharedFrame]] — no
-      // work inside the CHM update (the nested-computeIfAbsent landmine)
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-      val (books, codes) = SimilarityOps.pqTrain(emb)
-      val v = (books.localCheckpoint(), codes.localCheckpoint())
-      val prev = pqModels.putIfAbsent(k, v)
-      if (prev != null) prev else v
-    }
-  }
-
-  /** One deterministic residual-IVFPQ model per (session, sf dir) —
-    * the [[pqModel]] discipline for the residual path: ann_ivfpq_
-    * residual (the serving row) and ann_recall's residual leg each
-    * retrained bit-identical coarse centroids + residual codebooks.
-    * Eagerly checkpointed (concurrent consumers); the oracles replay
-    * the full training chain per query as before. */
-  private val residualModels = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame, DataFrame)]()
-  private def residualModel(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val k = (s, d)
-    val hit = residualModels.get(k)
-    if (hit != null) hit
-    else {
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-      val (cents, cells, cent2, enc) = SimilarityOps.ivfpqResidualModel(emb)
-      val v = (cents.localCheckpoint(), cells.localCheckpoint(),
-        cent2.localCheckpoint(), enc.localCheckpoint())
-      val prev = residualModels.putIfAbsent(k, v)
-      if (prev != null) prev else v
-    }
-  }
-
-  /** Per-process shared retrieval legs (same contract as [[pqModel]]:
-    * deterministic pure functions of the corpus, eagerly checkpointed,
-    * shared so the cost is paid once per process — what a serving stack
-    * does with its built index). search_bm25 / search_rrf /
-    * search_hybrid / search_ndcg / search_rbo all ran the identical
-    * BM25(scan, join, merge) top-20 postings chain and the identical
-    * brute-cosine top-20 for query vector 0; the r13 driver record
-    * shows the duplication (search_rrf 1.07 → 1.65 s). */
-  private val sharedFrames = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-  private def sharedFrame(s: SparkSession, d: String, key: String)(
-      build: => DataFrame): DataFrame = {
+  /** Per-process shared materializations, one per (session, sf dir,
+    * key): deterministic pure functions of the corpus, eagerly
+    * checkpointed by their builders (they are consumed by concurrently
+    * scheduled queries — the eager rule), shared so the cost is paid
+    * once per process — what a serving stack does with its built index
+    * or a vector store with its codebooks. Sharing moves cost only,
+    * never results; each query's oracle still replays its chain. */
+  private val sharedStages = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, String), AnyRef]()
+  private def sharedStage[V <: AnyRef](s: SparkSession, d: String, key: String)(
+      build: => V): V = {
     val k = (s, d, key)
-    val hit = sharedFrames.get(k)
-    if (hit != null) hit
+    val hit = sharedStages.get(k)
+    if (hit != null) hit.asInstanceOf[V]
     else {
       // build OUTSIDE the map update: dedupLabels05 nests
       // jaccardPairs05, and a nested computeIfAbsent on one CHM throws
@@ -135,11 +82,44 @@ object SparkEntry {
       // tests shifted the fill order). A racing duplicate build is
       // benign: the chains are deterministic, so both values are
       // value-identical and putIfAbsent keeps exactly one.
-      val v = build.localCheckpoint()
-      val prev = sharedFrames.putIfAbsent(k, v)
-      if (prev != null) prev else v
+      val v = build
+      val prev = sharedStages.putIfAbsent(k, v)
+      if (prev != null) prev.asInstanceOf[V] else v
     }
   }
+
+  /** One shared frame: `build`, eagerly checkpointed. search_bm25 /
+    * search_rrf / search_hybrid / search_ndcg / search_rbo all ran the
+    * identical BM25(scan, join, merge) top-20 postings chain and the
+    * identical brute-cosine top-20 for query vector 0; the r13 driver
+    * record shows the duplication (search_rrf 1.07 → 1.65 s). */
+  private def sharedFrame(s: SparkSession, d: String, key: String)(
+      build: => DataFrame): DataFrame =
+    sharedStage(s, d, key)(build.localCheckpoint())
+
+  /** The PQ model (codebooks, codes): ann_pq_topk / ann_rerank /
+    * ann_recall each retrained bit-identical codebooks (deterministic
+    * sharded-init Lloyd on the same corpus cast). */
+  private def pqModel(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    sharedStage(s, d, "pq_model") {
+      val emb = t(s, d, "embeddings")
+        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val (books, codes) = SimilarityOps.pqTrain(emb)
+      (books.localCheckpoint(), codes.localCheckpoint())
+    }
+
+  /** The residual-IVFPQ model: ann_ivfpq_residual (the serving row) and
+    * ann_recall's residual leg each retrained bit-identical coarse
+    * centroids + residual codebooks. */
+  private def residualModel(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    sharedStage(s, d, "ivfpq_residual_model") {
+      val emb = t(s, d, "embeddings")
+        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val (cents, cells, cent2, enc) = SimilarityOps.ivfpqResidualModel(emb)
+      (cents.localCheckpoint(), cells.localCheckpoint(),
+        cent2.localCheckpoint(), enc.localCheckpoint())
+    }
 
   /** BM25 top-20 for the standard (scan, join, merge) query. */
   private def bm25Leg(s: SparkSession, d: String): DataFrame =
@@ -434,7 +414,7 @@ object SparkEntry {
   // Queries
   // ---------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- relational core over the TPC-H-ish tables ----
     "q1_pricing_summary" -> ((s, d) =>
       t(s, d, "lineitem")
