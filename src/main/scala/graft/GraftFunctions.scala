@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
 import graft.functions.{DiffFunctions, Hashing, TextFunctions}
 import graft.model.{Delta, Link, LinkCtx}
 
@@ -26,57 +27,38 @@ object GraftFunctions {
 
   // ---- Column-level helpers (the library API surface) ----
 
-  // Hot kernels build native codegen expressions directly (no UDF tier,
-  // no registry dependence); see graft.plans.TextKernels for the contract.
-  private def toExpr(c: Column) =
-    org.apache.spark.sql.graftshim.ColumnBridge.expression(c)
-  private def toCol(x: org.apache.spark.sql.catalyst.expressions.Expression) =
-    org.apache.spark.sql.graftshim.ColumnBridge.column(x)
+  // Native functions build their expression from the table directly (no
+  // registry dependence); see graft.plans.NativeFunctions.
+  private def native(name: String, args: Column*): Column =
+    ColumnBridge.column(graft.plans.NativeFunctions(name, args.map(ColumnBridge.expression)))
 
-  def extractLinks(c: Column): Column = toCol(graft.plans.ExtractLinks(toExpr(c)))
-  def extractLinksCtx(c: Column): Column =
-    toCol(graft.plans.ExtractLinksCtx(toExpr(c)))
-  def extractRefs(c: Column): Column = toCol(graft.plans.ExtractRefs(toExpr(c)))
-  def extractTemplates(c: Column): Column =
-    toCol(graft.plans.ExtractTemplates(toExpr(c)))
-  def plainText(c: Column): Column = toCol(graft.plans.PlainText(toExpr(c)))
-  def revDiff(a: Column, b: Column): Column =
-    toCol(graft.plans.RevDiff(toExpr(a), toExpr(b)))
-  def addedWords(a: Column, b: Column): Column =
-    toCol(graft.plans.AddedWords(toExpr(a), toExpr(b)))
-  def normalizeTitle(c: Column): Column =
-    toCol(graft.plans.NormalizeTitle(toExpr(c)))
-  def freebaseEncode(c: Column): Column =
-    toCol(graft.plans.FreebaseEncode(toExpr(c)))
-  def langId(c: Column): Column = toCol(graft.plans.LangId(toExpr(c)))
-  def decodeEz(c: Column, days: Column): Column =
-    toCol(graft.plans.DecodeEz(toExpr(c), toExpr(days)))
-  def cutLast(c: Column, n: Column): Column =
-    toCol(graft.plans.CutLast(toExpr(c), toExpr(n)))
-  def extractDomain(c: Column): Column =
-    toCol(graft.plans.ExtractDomain(toExpr(c)))
+  def extractLinks(c: Column): Column = native("extract_links", c)
+  def extractLinksCtx(c: Column): Column = native("extract_links_ctx", c)
+  def extractRefs(c: Column): Column = native("extract_refs", c)
+  def extractTemplates(c: Column): Column = native("extract_templates", c)
+  def plainText(c: Column): Column = native("plain_text", c)
+  def revDiff(a: Column, b: Column): Column = native("rev_diff", a, b)
+  def addedWords(a: Column, b: Column): Column = native("added_words", a, b)
+  def normalizeTitle(c: Column): Column = native("normalize_title", c)
+  def freebaseEncode(c: Column): Column = native("freebase_encode", c)
+  def langId(c: Column): Column = native("lang_id", c)
+  def decodeEz(c: Column, days: Column): Column = native("decode_ez", c, days)
+  def cutLast(c: Column, n: Column): Column = native("cut_last", c, n)
+  def extractDomain(c: Column): Column = native("extract_domain", c)
   def minhashSig(toks: Column, k: Column, num: Column): Column =
-    toCol(graft.plans.MinHashSig(toExpr(toks), toExpr(k), toExpr(num)))
-  def simhash64(toks: Column): Column =
-    toCol(graft.plans.SimHash64(toExpr(toks)))
+    native("minhash_sig", toks, k, num)
+  def simhash64(toks: Column): Column = native("simhash64", toks)
   def bandBuckets(sig: Column, bands: Column, rows: Column): Column =
-    toCol(graft.plans.BandBuckets(toExpr(sig), toExpr(bands), toExpr(rows)))
-  def signBitsCol(emb: Column, planes: Column): Column =
-    toCol(graft.plans.SignBits(toExpr(emb), toExpr(planes)))
-  def seededHash(c: Column, seed: Column): Column =
-    toCol(graft.plans.SeededHash(toExpr(c), toExpr(seed)))
+    native("band_buckets", sig, bands, rows)
+  def signBitsCol(emb: Column, planes: Column): Column = native("sign_bits", emb, planes)
+  def seededHash(c: Column, seed: Column): Column = native("seeded_hash", c, seed)
   def sortedIntersectCount(a: Column, b: Column): Column =
-    toCol(graft.plans.SortedIntersectCount(toExpr(a), toExpr(b)))
-  def shingleHashes(toks: Column, k: Int): Column =
-    toCol(graft.plans.ShingleHashes(toExpr(toks),
-      org.apache.spark.sql.catalyst.expressions.Literal(k)))
-  def fnv64(c: Column): Column = toCol(graft.plans.FnvHash64(toExpr(c)))
-  def cosineSim(a: Column, b: Column): Column =
-    toCol(graft.plans.CosineSim(toExpr(a), toExpr(b)))
-  def l2sqDist(a: Column, b: Column): Column =
-    toCol(graft.plans.L2SqDist(toExpr(a), toExpr(b)))
-  def rollingFingerprint(c: Column): Column =
-    toCol(graft.plans.RollingFingerprint(toExpr(c)))
+    native("sorted_intersect_count", a, b)
+  def shingleHashes(toks: Column, k: Int): Column = native("shingle_hashes", toks, lit(k))
+  def fnv64(c: Column): Column = native("fnv64", c)
+  def cosineSim(a: Column, b: Column): Column = native("cosine_sim", a, b)
+  def l2sqDist(a: Column, b: Column): Column = native("l2sq_dist", a, b)
+  def rollingFingerprint(c: Column): Column = native("rolling_fingerprint", c)
 
   /** Whitespace tokenization with lower-casing — the reference's default
     * analyzer path (SURVEY §2.7 F17); single definition in TermOps. */

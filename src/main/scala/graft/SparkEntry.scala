@@ -10337,7 +10337,8 @@ object SparkEntry {
       |  ELSE 'es' END AS pred_lang
       |FROM c""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  // built once, like `queries`: callers read it once per query name
+  lazy val oracleSql: Map[String, String] = Map(
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,
         | round(sum(l_extendedprice),2) AS sum_price, round(avg(l_discount),6) AS avg_disc,

@@ -153,7 +153,7 @@ object MultimodalOps {
     * downmixing (xsum ≈ √(energy_l·energy_r) ⇒ channels correlated ⇒
     * mono-safe; ≈ 0 ⇒ wide/decorrelated). Same frame geometry as
     * [[frameEnergy]]; deinterleave happens inside the codegen kernel
-    * ([[graft.plans.FrameEnergyStereo]]), so pixels/samples never
+    * (`frame_energy_stereo`, [[graft.plans.HashKernels.frameEnergyStereoData]]), so pixels/samples never
     * materialize as rows. */
   def frameEnergyStereo(df: DataFrame, binCol: String, frameSize: Int,
                         stride: Int): DataFrame = {
@@ -171,7 +171,7 @@ object MultimodalOps {
   /** Block-mean RESIZE of the string-as-grayscale payload (width-64
     * codepoint matrix → `grid`×`grid` thumbnail): the downsample verb
     * of the multimodal family as ONE codegen fold per document
-    * ([[graft.plans.BlockMeans]]) — pixels never materialize as rows;
+    * (`block_means`, [[graft.plans.HashKernels.blockMeansData]]) — pixels never materialize as rows;
     * what leaves the kernel is ≤ grid² (pr, pc, n_pix, mean_gray)
     * cells per doc (the r14 posexplode-per-character shape cost
     * corpus-length rows pre-combine for identical output). Exact
@@ -270,7 +270,7 @@ object MultimodalOps {
     * (the production input) are unaffected — they enter as unsigned
     * byte values. */
   def avgHash64(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // one codegen fold per doc (graft.plans.AHash64) — bit-identical to
+    // one codegen fold per doc (`ahash64`, HashKernels.aHash64Data) — bit-identical to
     // the r13 HOF aggregate chain (Round15Spec pins it) at ~1/17 the
     // per-byte cost: no per-char array ever materializes
     docs

@@ -1,0 +1,16 @@
+package graft.plans
+
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+
+/** ArrayData adapters for the VByte doc-vector codec
+  * (graft.functions.VByteCodec — byte-parity with the reference's
+  * VByteDocVector container). */
+object CodecKernels {
+  def encodeData(ids: ArrayData): Array[Byte] =
+    if (ids == null) null
+    else graft.functions.VByteCodec.encode(ids.toLongArray())
+
+  def decodeData(bytes: Array[Byte]): ArrayData =
+    if (bytes == null) null
+    else new GenericArrayData(graft.functions.VByteCodec.decode(bytes))
+}

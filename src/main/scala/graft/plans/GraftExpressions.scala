@@ -1,16 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the engine's hot hash kernels — the
-  * codegen tier of the UDF ladder (brief: native `Expression` with
-  * `doGenCode` beats a Scala UDF): no Row boxing, inlined into
-  * whole-stage codegen, null-safe.
-  */
+/** The `fnv64` kernel: the seed hash of the dedup/LSH family. */
 object GraftExpressions {
   /** FNV-1a over the raw UTF-8 bytes of a UTF8String — same result as
     * `Hashing.fnv1a` on the equivalent String, without materializing it. */
@@ -25,31 +17,4 @@ object GraftExpressions {
     }
     h
   }
-
-  /** True iff `e` is a foldable non-null IntegerType — the contract for
-    * compile-time-constant parameters (k, num, bands, rows, planes,
-    * days). The null check matters: these params are later unboxed with
-    * `eval().asInstanceOf[Int]`, so a `cast(null as int)` literal must
-    * fail analysis, not NPE at plan time. */
-  def nonNullIntLiteral(e: Expression): Boolean =
-    e.foldable && e.dataType == org.apache.spark.sql.types.IntegerType &&
-      e.eval() != null
-}
-
-/** `fnv64(string)` — seed hash of the dedup/LSH family as a codegen'd
-  * unary expression. */
-case class FnvHash64(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"fnv64 requires a string argument, got ${child.dataType.catalogString}")
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    GraftExpressions.fnv1aUtf8(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.GraftExpressions.fnv1aUtf8($c)")
-  override protected def withNewChildInternal(newChild: Expression): FnvHash64 =
-    copy(child = newChild)
-  override def prettyName: String = "fnv64"
 }

@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BitwiseCount, BitwiseXor, Expression, ExpressionInfo}
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** SparkSessionExtensions hook registering the engine's native
@@ -42,62 +42,17 @@ object GraftSparkExtensions {
           "actualNum" -> args.length.toString,
           "docroot" -> "https://spark.apache.org/docs/latest"))
 
-  private def unary(name: String, cls: Class[_], b: Expression => Expression)
-      : (String, ExpressionInfo, Builder) =
+  private def register(name: String, cls: Class[_], arity: Int,
+      b: Seq[Expression] => Expression): (String, ExpressionInfo, Builder) =
     (name, new ExpressionInfo(cls.getName, name),
-      (args: Seq[Expression]) => { checkArity(name, 1, args); b(args.head) })
+      (args: Seq[Expression]) => { checkArity(name, arity, args); b(args) })
 
-  private def binary(name: String, cls: Class[_],
-      b: (Expression, Expression) => Expression): (String, ExpressionInfo, Builder) =
-    (name, new ExpressionInfo(cls.getName, name),
-      (args: Seq[Expression]) => { checkArity(name, 2, args); b(args(0), args(1)) })
-
-  private def ternary(name: String, cls: Class[_],
-      b: (Expression, Expression, Expression) => Expression)
-      : (String, ExpressionInfo, Builder) =
-    (name, new ExpressionInfo(cls.getName, name),
-      (args: Seq[Expression]) =>
-        { checkArity(name, 3, args); b(args(0), args(1), args(2)) })
-
-  val functions: Seq[(String, ExpressionInfo, Builder)] = Seq(
-    unary("fnv64", classOf[FnvHash64], FnvHash64),
-    unary("vbyte_encode", classOf[VByteEncode], VByteEncode),
-    unary("vbyte_decode", classOf[VByteDecode], VByteDecode),
-    unary("extract_links", classOf[ExtractLinks], ExtractLinks),
-    unary("extract_links_ctx", classOf[ExtractLinksCtx], ExtractLinksCtx),
-    unary("extract_refs", classOf[ExtractRefs], ExtractRefs),
-    unary("extract_templates", classOf[ExtractTemplates], ExtractTemplates),
-    unary("plain_text", classOf[PlainText], PlainText),
-    binary("rev_diff", classOf[RevDiff], RevDiff),
-    binary("added_words", classOf[AddedWords], AddedWords),
-    unary("simhash64", classOf[SimHash64], SimHash64),
-    unary("lang_id", classOf[LangId], LangId),
-    unary("normalize_title", classOf[NormalizeTitle], NormalizeTitle),
-    unary("freebase_encode", classOf[FreebaseEncode], FreebaseEncode),
-    unary("rolling_fingerprint", classOf[RollingFingerprint], RollingFingerprint),
-    unary("ahash64", classOf[AHash64], AHash64),
-    unary("extract_domain", classOf[ExtractDomain], ExtractDomain),
-    binary("seeded_hash", classOf[SeededHash], SeededHash),
-    binary("sorted_intersect_count", classOf[SortedIntersectCount],
-      SortedIntersectCount),
-    binary("shingle_hashes", classOf[ShingleHashes], ShingleHashes),
-    binary("cut_last", classOf[CutLast], CutLast),
-    binary("decode_ez", classOf[DecodeEz], DecodeEz),
-    binary("sign_bits", classOf[SignBits], SignBits),
-    ternary("minhash_sig", classOf[MinHashSig], MinHashSig(_, _, _)),
-    ternary("band_buckets", classOf[BandBuckets], BandBuckets(_, _, _)),
-    ternary("frame_sigs", classOf[FrameSigs], FrameSigs(_, _, _)),
-    ternary("patch_sigs", classOf[PatchSigs], PatchSigs(_, _, _)),
-    ternary("frame_energy", classOf[FrameEnergy], FrameEnergy(_, _, _)),
-    ternary("block_means", classOf[BlockMeans], BlockMeans(_, _, _)),
-    ternary("frame_energy_stereo", classOf[FrameEnergyStereo],
-      FrameEnergyStereo(_, _, _)),
-    // hamming distance composes from built-ins: popcount(a xor b)
-    binary("hamming64",
-      classOf[org.apache.spark.sql.catalyst.expressions.BitwiseCount],
-      (a, b) =>
-        org.apache.spark.sql.catalyst.expressions.BitwiseCount(
-          org.apache.spark.sql.catalyst.expressions.BitwiseXor(a, b))))
+  val functions: Seq[(String, ExpressionInfo, Builder)] =
+    NativeFunctions.all.map(f =>
+      register(f.name, classOf[NativeCall], f.args.length, NativeCall(f, _))) :+
+      // hamming distance composes from built-ins: popcount(a xor b)
+      register("hamming64", classOf[BitwiseCount], 2,
+        args => BitwiseCount(BitwiseXor(args(0), args(1))))
 
   /** Runtime registration on an existing session (idempotent). After
     * this, `selectExpr("fnv64(col)")` / `expr("fnv64(col)")` plan the
