@@ -28,7 +28,8 @@ import graft.streaming.EventStreamOps
   *  - `sem <dir> [k…]`: semanticDedup seconds per cluster count;
   *  - `inc <dir>…`: the incremental connected-components fold alone;
   *  - `stream <dir> [q…]`: streaming-tier throughput and state size;
-  *  - `kernels <dir>`: the native text kernels, median of 3 runs.
+  *  - `kernels <dir>`: the native text kernels, median of 3 runs, and
+  *    one (`fnv64_transform`) evaluated inside a lambda, uncompiled.
   * `plan`, `final` and `time` default to every registered query.
   * SPARK_GRAFT_PROBE_PARTS sets the shuffle partitions (default: the
   * cores). Exits 2 on an unknown mode and 1 when a named query was
@@ -328,7 +329,12 @@ object Probe {
       "lang_id" -> (() => docs.select(g.langId(col("text")).as("l"))),
       "normalize_title" -> (() => docs.select(g.normalizeTitle(col("text")).as("n"))),
       "rolling_fingerprint" -> (() =>
-        docs.select(g.rollingFingerprint(col("text")).as("f"))))
+        docs.select(g.rollingFingerprint(col("text")).as("f"))),
+      // a native function inside a higher-order lambda never enters
+      // codegen: this times its interpreted eval, once per token, as
+      // DedupOps.suffixDupSpans runs it
+      "fnv64_transform" -> (() =>
+        docs.select(transform(col("toks"), t => g.fnv64(t)).as("h"))))
     try {
       kernels.foreach { case (_, mk) => secs(1)(mk()) } // warm codegen paths
       val js = kernels.map { case (n, mk) =>

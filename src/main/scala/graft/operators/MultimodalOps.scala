@@ -96,7 +96,7 @@ object MultimodalOps {
   /** Frame-sampling plumbing: explode a binary "video" into every `stride`th
     * fixed-size chunk (stand-in for frame extraction), keeping only compact
     * per-frame features downstream. The chunk hasher is the native
-    * `frame_sigs` expression (plans/HashExpressions.scala) — a per-row
+    * `frame_sigs` function (`HashKernels.frameSigsData`) — a per-row
     * hot path on video corpora, so it runs inside whole-stage codegen,
     * not as a UDF. It folds *unsigned* bytes (same convention as
     * `stubDecode`); the mm_frame_sample oracle replicates it via

@@ -20,6 +20,21 @@ import graft.functions.Hashing
   */
 object HashKernels {
 
+  /** FNV-1a over the raw UTF-8 bytes of a UTF8String — same result as
+    * `Hashing.fnv1a` on the equivalent String, without materializing it.
+    * The `fnv64` kernel: the seed hash of the dedup/LSH family. */
+  def fnv1aUtf8(s: UTF8String): Long = {
+    var h = graft.functions.Hashing.FnvOffset
+    val bytes = s.getBytes
+    var i = 0
+    while (i < bytes.length) {
+      h ^= (bytes(i) & 0xffL)
+      h *= graft.functions.Hashing.FnvPrime
+      i += 1
+    }
+    h
+  }
+
   /** FNV-1a folded over `toks[start .. start+k)` joined by a single
     * space — equals `Hashing.fnv1a(mkString(" "))` without building the
     * String (separator byte 0x20 folded between tokens). */
@@ -106,7 +121,7 @@ object HashKernels {
       while (i < n) {
         val h =
           if (a.isNullAt(i)) Hashing.fnv1a("")
-          else GraftExpressions.fnv1aUtf8(a.getUTF8String(i))
+          else fnv1aUtf8(a.getUTF8String(i))
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1
@@ -163,7 +178,7 @@ object HashKernels {
   }
 
   def seededData(s: UTF8String, seed: Int): Long =
-    Hashing.mix(GraftExpressions.fnv1aUtf8(s) ^ Hashing.mix(seed.toLong))
+    Hashing.mix(fnv1aUtf8(s) ^ Hashing.mix(seed.toLong))
 
   /** |A ∩ B| of two ASCENDING-sorted long arrays by a two-pointer merge
     * (equal runs count once, so the result is SET intersection size even

@@ -136,7 +136,7 @@ object NativeFunctions {
       StringType, PropagateOrKernel),
 
     // ---- hashes and signatures of the dedup/LSH family
-    fn("fnv64", GraftExpressions, "fnv1aUtf8", Str)(LongType, Propagate),
+    fn("fnv64", HashKernels, "fnv1aUtf8", Str)(LongType, Propagate),
     fn("seeded_hash", HashKernels, "seededData", Str, Int32)(LongType, Propagate),
     fn("rolling_fingerprint", HashKernels, "rollingData", Str)(LongType, Propagate),
     fn("minhash_sig", HashKernels, "minHashData", Tokens, IntLit, IntLit)(
@@ -237,17 +237,32 @@ case class NativeCall(fn: NativeFunction, children: Seq[Expression]) extends Exp
   private def nullArg(t: DataType): (String, Any) =
     if (t == IntegerType) ("0", 0) else ("null", null)
 
+  // interpreted eval runs per element inside higher-order lambdas (which
+  // never enter codegen), so everything but the data arguments is built
+  // once: the kernel argument array with literal and extra values filled
+  // in, the data positions, and the value each passes for a null
+  @transient private lazy val argTemplate: Array[AnyRef] =
+    (literals.map(_.orNull) ++ extra).map(_.asInstanceOf[AnyRef]).toArray
+  @transient private lazy val dataSlots: Array[Int] =
+    literals.indices.filter(literals(_).isEmpty).toArray
+  @transient private lazy val dataChildren: Array[Expression] = dataSlots.map(children)
+  @transient private lazy val nullArgs: Array[AnyRef] =
+    dataChildren.map(c => nullArg(c.dataType)._2.asInstanceOf[AnyRef])
+
   override def eval(input: InternalRow): Any = {
-    val values = literals.zip(children).map { case (l, c) => l.getOrElse(c.eval(input)) }
-    if (fn.nulls != ToKernel && values.contains(null)) null
-    else {
-      val args = values.zip(children).map {
-        case (null, c) => nullArg(c.dataType)._2
-        case (v, _) => v
-      } ++ extra
-      try fn.kernelMethod.invoke(null, args.map(_.asInstanceOf[AnyRef]): _*)
-      catch { case e: InvocationTargetException => throw e.getCause }
+    val args = argTemplate.clone()
+    val slots = dataSlots
+    val cs = dataChildren
+    var i = 0
+    while (i < slots.length) {
+      val v = cs(i).eval(input)
+      if (v != null) args(slots(i)) = v.asInstanceOf[AnyRef]
+      else if (fn.nulls == ToKernel) args(slots(i)) = nullArgs(i)
+      else return null
+      i += 1
     }
+    try fn.kernelMethod.invoke(null, args: _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
