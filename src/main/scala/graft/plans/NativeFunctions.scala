@@ -19,10 +19,7 @@ object NativeArg {
   /** Exactly type `t`. */
   final case class Of(t: DataType) extends NativeArg {
     def accepts(e: Expression): Boolean = e.dataType == t
-    def sql: String = t match {
-      case ArrayType(el, false) => s"array<${el.catalogString}> (no nulls)"
-      case _ => t.catalogString
-    }
+    def sql: String = t.catalogString
   }
 
   /** An array of one of `elems`, null elements allowed. */
@@ -167,7 +164,8 @@ object NativeFunctions {
       DoubleType, PropagateOrKernel),
 
     // ---- VByte doc-vector codec
-    fn("vbyte_encode", CodecKernels, "encodeData", Of(LongArray))(BinaryType, Propagate),
+    // a null element encodes to null: VByte has no null
+    fn("vbyte_encode", CodecKernels, "encodeData", Longs)(BinaryType, PropagateOrKernel),
     fn("vbyte_decode", CodecKernels, "decodeData", Bin)(LongArray, Propagate),
 
     // ---- media folds: per-byte work over media-scale payloads must stay

@@ -1,10 +1,6 @@
 package graft.sources
 
-import java.io.BufferedInputStream
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,25 +18,11 @@ object IndexSplits {
 
   def scanOffsets(file: String,
                   conf: Configuration = new Configuration()): Seq[Long] = {
-    val p = new Path(file)
-    if (new CompressionCodecFactory(conf).getCodec(p) != null) return Seq.empty
-    val fs = FileSystem.get(p.toUri, conf)
-    val in = new BufferedInputStream(fs.open(p), 1 << 16)
+    val in = new SplitStream(FileRange(file, 0L, Long.MaxValue), conf)
+    val tag = WikiRevisionPartitionReader.PageOpen
     try {
-      val tag = "<page>".getBytes("UTF-8")
-      val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var pos = 0L
-      var i = 0
-      var b = in.read()
-      while (b >= 0) {
-        pos += 1
-        if (b == tag(i)) {
-          i += 1
-          if (i == tag.length) { out += pos - tag.length; i = 0 }
-        } else i = if (b == tag(0)) 1 else 0
-        b = in.read()
-      }
-      out.toSeq
+      if (in.compressed) Seq.empty
+      else Iterator.continually(in.seek(tag)).takeWhile(_ >= 0).toVector
     } finally in.close()
   }
 

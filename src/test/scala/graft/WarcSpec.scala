@@ -121,6 +121,25 @@ class WarcSpec extends AnyFunSuite {
     Files.delete(f)
   }
 
+  test("bz2 archives split by compression block, each record once") {
+    val codec = new org.apache.hadoop.io.compress.BZip2Codec()
+    codec.setConf(new org.apache.hadoop.conf.Configuration())
+    val f = Files.createTempFile("test", ".warc.bz2")
+    val out = codec.createOutputStream(Files.newOutputStream(f))
+    out.write(WikiFixtures.bigWarc(2000).getBytes("UTF-8")); out.close()
+    assert(Files.size(f) > 2 * 400000, s"need several blocks, got ${Files.size(f)}")
+    val opts = Map("maxSplitBytes" -> "400000")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"record_id", length($"body")).as[(String, Int)].collect().toSeq
+    val whole = rows(Warc.read(spark, f.toString))
+    val split = Warc.read(spark, f.toString, opts)
+    assert(split.rdd.getNumPartitions > 1)
+    val got = rows(split)
+    assert(got.length == 2000 && got.map(_._1).distinct.length == 2000)
+    assert(got.toSet == whole.toSet)
+    Files.delete(f)
+  }
+
   test("a malformed Content-Length fails with the file and record named") {
     val bad = "WARC/1.0\r\n" +
       "WARC-Type: response\r\n" +
