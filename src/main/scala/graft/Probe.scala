@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ListenerBus
 import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 import graft.operators.{DedupOps, TermOps}
-import graft.streaming.EventStreamOps
+import graft.streaming.{EventStreamOps, StreamTrace}
 
 /** Dev probes: the questions the bench record does not answer yet —
   * which plan a query ran, where its time goes (scheduling floor, many
@@ -233,26 +233,20 @@ object Probe {
       .select("doc_id", "text").orderBy("doc_id").collect()
       .zipWithIndex.map { case (r, i) =>
         EventStreamOps.DocEvent(r.getLong(0), r.getString(1),
-          new java.sql.Timestamp(1700000000000L + i.toLong * streamTickMs))
+          StreamTrace.at(i.toLong * streamTickMs))
       }
     names.map { name =>
       val r: Either[String, String] = try {
-        implicit val sq = s.sqlContext
-        implicit val enc =
-          org.apache.spark.sql.Encoders.product[EventStreamOps.DocEvent]
-        val mem = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[EventStreamOps.DocEvent]
+        val src = StreamTrace.source[EventStreamOps.DocEvent](s)
         val chain = chains.toMap.getOrElse(name,
           sys.error(s"unknown streaming probe query: $name"))
-        val q = chain(mem.toDF())
-          .writeStream.format("noop").queryName(s"probe_$name")
-          .outputMode("append").start()
-        try {
-          val t0 = System.nanoTime()
-          docs.grouped(streamBatch).foreach { chunk =>
-            mem.addData(chunk.toSeq)
-            q.processAllAvailable()
-          }
+        // the clock starts at the first feed, after the query has started
+        var t0 = 0L
+        StreamTrace.drive(chain(src.toDF()), "noop", s"probe_$name", "append")(
+            docs.grouped(streamBatch).map { chunk => () =>
+              if (t0 == 0L) t0 = System.nanoTime()
+              src.addData(chunk.toSeq)
+            }) { q =>
           val wall = (System.nanoTime() - t0) / 1e9
           val progress = q.recentProgress.toSeq
           val maxState = progress
@@ -264,7 +258,7 @@ object Probe {
             s""""docs_per_sec":${f"${docs.length / wall}%.0f"},""" +
             s""""micro_batches":$nBatches,"max_state_rows":$maxState,""" +
             s""""batch_size":$streamBatch,"tick_ms":$streamTickMs}""")
-        } finally q.stop()
+        }
       } catch { case e: Throwable => Left(message(e)) }
       r match {
         case Right(j) => println(s"""{"stream_probe_row":{"$name":$j}}""")

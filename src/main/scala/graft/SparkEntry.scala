@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
+import graft.streaming.{EventStreamOps, StreamTrace}
+import graft.streaming.EventStreamOps.{Change, DocEvent, Event, FunnelEvent}
+import graft.streaming.StreamTrace.{at, wall, T0}
 
 /** Driver contract: one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the LLM-pipeline operators), each with a DuckDB oracle
@@ -23,22 +26,6 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.table(s, dir, name)
 
-  /** Cloned session for the streaming harness queries (shares the
-    * SparkContext, own SQLConf + temp-view catalog). A stateful streaming
-    * operator instantiates one state store per shuffle partition per
-    * micro-batch; these fixed few-row traces measure operator semantics,
-    * not data parallelism, so even 4 partitions were measurable pure
-    * state-store and task-scheduling overhead per micro-batch — 1
-    * partition cuts the per-batch floor 4× with identical output (state
-    * is hash-partitioned by key; the partition count never changes
-    * results). Production sizing guidance stays with the operators
-    * (streaming/EventStreamOps scaladoc): partitions follow key
-    * cardinality × event rate, set once at query start.
-    *
-    * ONE clone is cached per parent session (r12 flagged per-query
-    * newSession cost across 16 st_* rows): the clone's conf is never
-    * mutated after creation and memory-sink table names are unique per
-    * query, so concurrent st_* queries share it safely. */
   /** Process-lifetime scratch dirs for replayable demo tables (k32's
     * partition generations): written once per key, reused across
     * invocations of the same query builder. Lives under [[Scratch.root]]
@@ -102,9 +89,7 @@ object SparkEntry {
     * sharded-init Lloyd on the same corpus cast). */
   private def pqModel(s: SparkSession, d: String): (DataFrame, DataFrame) =
     sharedStage(s, d, "pq_model") {
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-      val (books, codes) = SimilarityOps.pqTrain(emb)
+      val (books, codes) = SimilarityOps.pqTrain(embeddings(s, d))
       (books.localCheckpoint(), codes.localCheckpoint())
     }
 
@@ -114,9 +99,8 @@ object SparkEntry {
   private def residualModel(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) =
     sharedStage(s, d, "ivfpq_residual_model") {
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-      val (cents, cells, cent2, enc) = SimilarityOps.ivfpqResidualModel(emb)
+      val (cents, cells, cent2, enc) =
+        SimilarityOps.ivfpqResidualModel(embeddings(s, d))
       (cents.localCheckpoint(), cells.localCheckpoint(),
         cent2.localCheckpoint(), enc.localCheckpoint())
     }
@@ -130,19 +114,22 @@ object SparkEntry {
   /** Brute-cosine top-20 for the standard query vector 0. */
   private def vecLeg(s: SparkSession, d: String): DataFrame =
     sharedFrame(s, d, "brute_v0_20") {
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       SimilarityOps.bruteForceTopK(emb,
         emb.filter(col("vec_id") === 0L), k = 20)
     }
+
+  /** The embeddings table with `embedding` cast to double[]: a plain
+    * read, neither shared nor checkpointed (that is [[embF64]]). */
+  private def embeddings(s: SparkSession, d: String): DataFrame =
+    t(s, d, "embeddings")
+      .withColumn("embedding", col("embedding").cast("array<double>"))
 
   /** The embeddings corpus cast to double[] — the prologue of the two
     * recall-audit rows. A pure column cast (no derivation), so sharing
     * moves scan+cast cost only; consumers time in-memory block reads. */
   private def embF64(s: SparkSession, d: String): DataFrame =
-    sharedFrame(s, d, "emb_f64")(
-      t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>")))
+    sharedFrame(s, d, "emb_f64")(embeddings(s, d))
 
   /** ONE corpus×corpus brute-cosine top-5 truth set (self excluded)
     * shared by the recall audits: ann_recall's 10-query truth IS this
@@ -273,23 +260,6 @@ object SparkEntry {
   // repartitions the post-hub-cut edge relation on the self-join key
   // inside nodeSimilarity/linkPredict, which survives coalescer-behavior
   // drift instead of encoding a byte constant against it.
-
-  private val streamSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private def streamSession(s: SparkSession): SparkSession =
-    streamSessions.computeIfAbsent(s, { parent =>
-      val ss = parent.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "1")
-      // r19 REJECTED experiment (VERDICT item 6): disabling no-data
-      // micro-batches (spark.sql.streaming.noDataMicroBatches.enabled=
-      // false) would cut ~3 of st_curate's 7 batches (~1.5 s of its
-      // 3.8 s) — but 9 of the 21 golden traces go RED: append-mode
-      // window flushes and watermark-eviction-dependent re-admissions
-      // (st_curate doc 6) NEED the watermark-advance batch. The
-      // per-batch floor decomposition lives in PLANS.md round-19
-      // (StreamFloor probe).
-      ss
-    })
 
   private val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
@@ -1276,8 +1246,7 @@ object SparkEntry {
       // id ASC) argmax tie-break encoded in the fold, so the selection
       // replays bit-identically — the corpus pass (bruteForceTopK) is
       // the only distributed work left.
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       val q = emb.filter(col("vec_id") === 0L)
       val cand = SimilarityOps.bruteForceTopK(emb, q, k = 20)
         .select(col("nbr_id").as("id"), col("sim").as("rel"))
@@ -1392,8 +1361,7 @@ object SparkEntry {
       // nearest neighbor inside the IVF top-5 (0 when cell pruning
       // evicted it) — the rank-position quality metric recall@k cannot
       // see. Both legs are the gated operators with their exact params
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       val q = emb.filter(col("vec_id") < 10)
       val truth = SimilarityOps.bruteForceTopK(emb, q, k = 1)
         .select(col("query_id"), col("nbr_id"))
@@ -1707,8 +1675,7 @@ object SparkEntry {
       // HNSW seeding; both sides key on the cell, so the join is a
       // SHUFFLE join (never a corpus-sized broadcast). See
       // SimilarityOps.knnGraph.
-      SimilarityOps.knnGraph(t(s, d, "embeddings")
-          .withColumn("embedding", col("embedding").cast("array<double>")),
+      SimilarityOps.knnGraph(embeddings(s, d),
         k = 5)
         .select(col("vec_id"), col("nbr_id"),
           round(col("sim"), 4).as("sim"), col("rank"))),
@@ -1721,8 +1688,7 @@ object SparkEntry {
       // Means fold in RANK order over the round-4 sims both engines
       // already agree on (the embed_knn_graph surface), so the whole
       // statistic replays exactly.
-      val knn = SimilarityOps.knnGraph(t(s, d, "embeddings")
-          .withColumn("embedding", col("embedding").cast("array<double>")),
+      val knn = SimilarityOps.knnGraph(embeddings(s, d),
         k = 5)
         .select(col("vec_id"), col("rank"), round(col("sim"), 4).as("sim"))
       knn.groupBy("vec_id")
@@ -1745,8 +1711,7 @@ object SparkEntry {
       // candidates stay corpus-linear. The production default at
       // 100 TB; the IVF rows stay as the exactness/tuning gates. See
       // SimilarityOps.knnGraphLshAuto and the SCALE.md switchover rule.
-      SimilarityOps.knnGraphLshAuto(t(s, d, "embeddings")
-          .withColumn("embedding", col("embedding").cast("array<double>")),
+      SimilarityOps.knnGraphLshAuto(embeddings(s, d),
         k = 5)
         .select(col("query_id"), col("nbr_id"),
           round(col("sim"), 4).as("sim"), col("rank"))),
@@ -1781,8 +1746,7 @@ object SparkEntry {
       // law (13×/9.6× at the r13 ×10 probes). The oracle recomputes
       // ⌈√N⌉ in SQL — the law itself is part of the gate; the fixed-16
       // row stays as the tuning-law gate.
-      SimilarityOps.knnGraphAuto(t(s, d, "embeddings")
-          .withColumn("embedding", col("embedding").cast("array<double>")),
+      SimilarityOps.knnGraphAuto(embeddings(s, d),
         k = 5)
         .select(col("vec_id"), col("nbr_id"),
           round(col("sim"), 4).as("sim"), col("rank"))),
@@ -1791,8 +1755,7 @@ object SparkEntry {
       // embed_ood on the ⌈√N⌉-cell graph — the OOD gate as it would
       // actually run at corpus scale (same rank-ordered fold over
       // round-4 sims both engines agree on)
-      val knn = SimilarityOps.knnGraphAuto(t(s, d, "embeddings")
-          .withColumn("embedding", col("embedding").cast("array<double>")),
+      val knn = SimilarityOps.knnGraphAuto(embeddings(s, d),
         k = 5)
         .select(col("vec_id"), col("rank"), round(col("sim"), 4).as("sim"))
       knn.groupBy("vec_id")
@@ -1814,8 +1777,7 @@ object SparkEntry {
       // monitor exactly this before trusting a graph). One self-join
       // of the ⌈√N⌉-cell auto graph on the reversed edge key; the
       // graph is built once and both sides read the checkpoint.
-      val knn = SimilarityOps.knnGraphAuto(t(s, d, "embeddings")
-          .withColumn("embedding", col("embedding").cast("array<double>")),
+      val knn = SimilarityOps.knnGraphAuto(embeddings(s, d),
         k = 5)
         .select(col("vec_id"), col("nbr_id"), col("rank"))
         .localCheckpoint() // two consumers: edge list + reversed probe
@@ -1835,8 +1797,7 @@ object SparkEntry {
       // scorecard behind ann_pq_topk's recall number (which subspace
       // is burning the code budget). Deterministic training replayed
       // by the oracle; m-row output
-      SimilarityOps.pqDistortion(t(s, d, "embeddings")
-          .withColumn("embedding", col("embedding").cast("array<double>")))
+      SimilarityOps.pqDistortion(embeddings(s, d))
         .select(col("s").cast("long").as("s"), col("n_vecs"),
           round(col("mse"), 6).as("mse"))),
 
@@ -1847,8 +1808,7 @@ object SparkEntry {
       // One materialized corpus read feeds the truth and all three
       // prefix paths (lazy: single action); slicing is a pure map, each
       // path is the brute broadcast-join shape.
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
         .localCheckpoint(false)
       def top5(dims: Option[Int]) = {
         val e = dims.map(n => emb.select(col("vec_id"),
@@ -1928,28 +1888,18 @@ object SparkEntry {
       // within each finalized window (the lambda read side; ranking
       // windows aren't streamable, so the top-k lives where it belongs:
       // on the materialized view, partitioned by window).
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.windowedCounts(mem.toDF(), "ts", "user_id",
-          "10 minutes", "5 minutes")
-        .writeStream.format("memory").queryName("st_topk_out")
-        .outputMode("complete").start()
-      def ev(u: Long, t: String) =
-        EventStreamOps.Event(u, java.sql.Timestamp.valueOf(t), 1.0)
-      try {
-        mem.addData(
-          ev(1, "2024-01-01 00:01:00"), ev(1, "2024-01-01 00:02:00"),
-          ev(1, "2024-01-01 00:03:00"), ev(2, "2024-01-01 00:04:00"),
-          ev(2, "2024-01-01 00:05:00"), ev(3, "2024-01-01 00:06:00"),
-          ev(2, "2024-01-01 00:11:00"), ev(2, "2024-01-01 00:12:00"),
-          ev(3, "2024-01-01 00:13:00"))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_topk_out")
+      StreamTrace.run[Event](s, "st_topk", "complete")(src =>
+        EventStreamOps.windowedCounts(src.toDF(), "ts", "user_id",
+          "10 minutes", "5 minutes"))(
+        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
+          Event(1, wall("2024-01-01 00:02:00"), 1.0),
+          Event(1, wall("2024-01-01 00:03:00"), 1.0),
+          Event(2, wall("2024-01-01 00:04:00"), 1.0),
+          Event(2, wall("2024-01-01 00:05:00"), 1.0),
+          Event(3, wall("2024-01-01 00:06:00"), 1.0),
+          Event(2, wall("2024-01-01 00:11:00"), 1.0),
+          Event(2, wall("2024-01-01 00:12:00"), 1.0),
+          Event(3, wall("2024-01-01 00:13:00"), 1.0)))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("window_start"))
             .orderBy(col("n_events").desc, col("user_id").asc)).cast("long"))
@@ -2139,8 +2089,7 @@ object SparkEntry {
       // top-5. Quantization error moves the final ordering; the re-rank
       // fixes ordering while keeping the scan compressed. Both candidate
       // join sides broadcast (O(queries·k) rows).
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       val q = emb.filter(col("vec_id") < 10)
       val cand = SimilarityOps.pqTopK(emb, q, k = 20,
           model = Some(pqModel(s, d)))
@@ -2477,39 +2426,30 @@ object SparkEntry {
       // reference distribution (broadcast literals) with the batch
       // stats_psi smoothing — the lambda read side, like st_topk.
       // Reference: uniform thirds over bins 0/1/2.
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = mem.toDF()
-        .withWatermark("ts", "5 minutes")
-        .withColumn("b", least(lit(2L), expr("CAST(value AS LONG) div 10")))
-        .groupBy(window(col("ts"), "10 minutes").as("w"), col("b"))
-        .agg(count(lit(1)).as("c"))
-        .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
-          .as("w_start"), col("b"), col("c"))
-        .writeStream.format("memory").queryName("st_psi_out")
-        .outputMode("complete").start()
-      def ev(t0: String, v: Double) =
-        EventStreamOps.Event(1L, java.sql.Timestamp.valueOf(t0), v)
-      try {
-        mem.addData( // window 00:00 skews low, 00:10 skews high
-          ev("2024-01-01 00:01:00", 1.0), ev("2024-01-01 00:02:00", 2.0),
-          ev("2024-01-01 00:03:00", 5.0), ev("2024-01-01 00:04:00", 12.0),
-          ev("2024-01-01 00:11:00", 25.0), ev("2024-01-01 00:12:00", 27.0),
-          ev("2024-01-01 00:13:00", 11.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      // serving-side PSI vs the uniform reference p = 1/3 per bin:
-      // full 3-bin grid per window, add-one smoothing on the observed
-      // side, ordered fold (the sink view is checkpointed so the
-      // windows×bins grid can self-join it without attribute conflicts)
-      val out = ss.table("st_psi_out").localCheckpoint()
+      val out = StreamTrace.run[Event](s, "st_psi", "complete")(src =>
+        src.toDF()
+          .withWatermark("ts", "5 minutes")
+          .withColumn("b", least(lit(2L), expr("CAST(value AS LONG) div 10")))
+          .groupBy(window(col("ts"), "10 minutes").as("w"), col("b"))
+          .agg(count(lit(1)).as("c"))
+          .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
+            .as("w_start"), col("b"), col("c")))(
+        Seq( // window 00:00 skews low, 00:10 skews high
+          Event(1L, wall("2024-01-01 00:01:00"), 1.0),
+          Event(1L, wall("2024-01-01 00:02:00"), 2.0),
+          Event(1L, wall("2024-01-01 00:03:00"), 5.0),
+          Event(1L, wall("2024-01-01 00:04:00"), 12.0),
+          Event(1L, wall("2024-01-01 00:11:00"), 25.0),
+          Event(1L, wall("2024-01-01 00:12:00"), 27.0),
+          Event(1L, wall("2024-01-01 00:13:00"), 11.0)))
+        // serving-side PSI vs the uniform reference p = 1/3 per bin:
+        // full 3-bin grid per window, add-one smoothing on the observed
+        // side, ordered fold (the sink view is checkpointed so the
+        // windows×bins grid can self-join it without attribute conflicts)
+        .localCheckpoint()
       val grid = out
         .select(col("w_start")).distinct()
-        .crossJoin(ss.range(0, 3).select(col("id").as("b")))
+        .crossJoin(out.sparkSession.range(0, 3).select(col("id").as("b")))
         .join(out, Seq("w_start", "b"), "left_outer")
         .select(col("w_start"), col("b"),
           coalesce(col("c"), lit(0L)).as("c"))
@@ -2975,34 +2915,23 @@ object SparkEntry {
       // (value, ts)-argmin/argmax aggregates — declarative, so Spark
       // merges partials across micro-batches like any windowed agg;
       // state is O(windows) structs, watermark-expired
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = mem.toDF()
-        .withWatermark("ts", "5 minutes")
-        .groupBy(window(col("ts"), "10 minutes").as("w"))
-        .agg(count(lit(1)).as("n"),
-          min_by(col("value"), col("ts")).as("open"),
-          max(col("value")).as("high"), min(col("value")).as("low"),
-          max_by(col("value"), col("ts")).as("close"))
-        .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("w_start"),
-          col("n"), col("open"), col("high"), col("low"), col("close"))
-        .writeStream.format("memory").queryName("st_ohlc_out")
-        .outputMode("complete").start()
-      def ev(t0: String, v: Double) =
-        EventStreamOps.Event(1L, java.sql.Timestamp.valueOf(t0), v)
-      try {
-        mem.addData(
-          ev("2024-01-01 00:01:00", 1.0), ev("2024-01-01 00:02:00", 5.0),
-          ev("2024-01-01 00:03:00", 0.5), ev("2024-01-01 00:09:00", 2.0),
-          ev("2024-01-01 00:12:00", 3.0), ev("2024-01-01 00:14:00", 1.5))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_ohlc_out")
+      StreamTrace.run[Event](s, "st_ohlc", "complete")(src =>
+        src.toDF()
+          .withWatermark("ts", "5 minutes")
+          .groupBy(window(col("ts"), "10 minutes").as("w"))
+          .agg(count(lit(1)).as("n"),
+            min_by(col("value"), col("ts")).as("open"),
+            max(col("value")).as("high"), min(col("value")).as("low"),
+            max_by(col("value"), col("ts")).as("close"))
+          .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
+              .as("w_start"),
+            col("n"), col("open"), col("high"), col("low"), col("close")))(
+        Seq(Event(1L, wall("2024-01-01 00:01:00"), 1.0),
+          Event(1L, wall("2024-01-01 00:02:00"), 5.0),
+          Event(1L, wall("2024-01-01 00:03:00"), 0.5),
+          Event(1L, wall("2024-01-01 00:09:00"), 2.0),
+          Event(1L, wall("2024-01-01 00:12:00"), 3.0),
+          Event(1L, wall("2024-01-01 00:14:00"), 1.5)))
     }),
 
     "dedup_bloom_seen" -> ((s, d) => {
@@ -3763,27 +3692,13 @@ object SparkEntry {
       // (Update mode) — the serving read keeps each key's LATEST row.
       // Two micro-batches exercise the state carry-over; α = 1/2 keeps
       // levels exact dyadic rationals, so the trace replays exactly.
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.ewmaByKey(mem.toDS())
-        .writeStream.format("memory").queryName("st_smooth_out")
-        .outputMode("update").start()
-      def ev(u: Long, t: String, v: Double) =
-        EventStreamOps.Event(u, java.sql.Timestamp.valueOf(t), v)
-      try {
-        mem.addData(
-          ev(1, "2024-01-01 00:01:00", 1.0), ev(1, "2024-01-01 00:02:00", 2.0),
-          ev(2, "2024-01-01 00:03:00", 10.0))
-        q.processAllAvailable()
-        mem.addData(
-          ev(1, "2024-01-01 00:04:00", 3.0), ev(2, "2024-01-01 00:05:00", 20.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_smooth_out")
+      StreamTrace.run[Event](s, "st_smooth", "update")(
+          EventStreamOps.ewmaByKey(_))(
+        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
+          Event(1, wall("2024-01-01 00:02:00"), 2.0),
+          Event(2, wall("2024-01-01 00:03:00"), 10.0)),
+        Seq(Event(1, wall("2024-01-01 00:04:00"), 3.0),
+          Event(2, wall("2024-01-01 00:05:00"), 20.0)))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)))
         .filter(col("rk") === 1)
@@ -3972,30 +3887,12 @@ object SparkEntry {
       // wins upserts, tombstone deletes, and a STALE change (key 1's
       // v2 arriving after v3) that must not regress the key — the
       // serving read keeps each key's newest emission
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[EventStreamOps.Change]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Change]
-      val q = EventStreamOps.cdcApply(mem.toDS())
-        .writeStream.format("memory").queryName("st_cdc_apply_out")
-        .outputMode("update").start()
-      import EventStreamOps.Change
-      try {
-        mem.addData(Change(1L, "upsert", 10.0, 1L),
-          Change(2L, "upsert", 20.0, 1L))
-        q.processAllAvailable()
-        mem.addData(Change(1L, "upsert", 11.0, 3L),
-          Change(2L, "delete", 0.0, 2L))
-        q.processAllAvailable()
+      StreamTrace.run[Change](s, "st_cdc_apply", "update")(
+          EventStreamOps.cdcApply(_))(
+        Seq(Change(1L, "upsert", 10.0, 1L), Change(2L, "upsert", 20.0, 1L)),
+        Seq(Change(1L, "upsert", 11.0, 3L), Change(2L, "delete", 0.0, 2L)),
         // stale v2 for key 1 (already at v3) + a fresh key
-        mem.addData(Change(1L, "upsert", 99.0, 2L),
-          Change(3L, "upsert", 30.0, 1L))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_cdc_apply_out")
+        Seq(Change(1L, "upsert", 99.0, 2L), Change(3L, "upsert", 30.0, 1L)))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("key")).orderBy(col("version").desc)))
         .filter(col("rk") === 1)
@@ -4008,34 +3905,19 @@ object SparkEntry {
       // at-or-after the previous stage's entry; a click BEFORE the
       // user's first view (u3 batch 1, u2 batch 4) never advances; a
       // repeat purchase (u1 batch 4) never re-fires
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[EventStreamOps.FunnelEvent]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.FunnelEvent]
-      val q = EventStreamOps.funnelStages(mem.toDS())
-        .writeStream.format("memory").queryName("st_funnel_out")
-        .outputMode("update").start()
-      def e(u: Long, t: String, ms: Long) = EventStreamOps.FunnelEvent(
-        u, t, new java.sql.Timestamp(1700000000000L + ms))
-      try {
-        mem.addData(e(1, "view", 0L), e(3, "click", 5000L))
-        q.processAllAvailable()
-        mem.addData(e(1, "click", 10000L), e(2, "view", 20000L))
-        q.processAllAvailable()
+      StreamTrace.run[FunnelEvent](s, "st_funnel", "update")(
+          EventStreamOps.funnelStages(_))(
+        Seq(FunnelEvent(1, "view", at(0L)), FunnelEvent(3, "click", at(5000L))),
+        Seq(FunnelEvent(1, "click", at(10000L)),
+          FunnelEvent(2, "view", at(20000L))),
         // u3's view and click land in ONE batch out of stage order in
         // arrival terms — the event-time sort admits both
-        mem.addData(e(3, "click", 40000L), e(3, "view", 30000L),
-          e(1, "purchase", 50000L))
-        q.processAllAvailable()
-        mem.addData(e(2, "click", 15000L), e(1, "purchase", 60000L))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_funnel_out")
-        .select(col("user_id"), col("stage"),
-          (col("ts_ms") - 1700000000000L).as("ts_ms"))
+        Seq(FunnelEvent(3, "click", at(40000L)),
+          FunnelEvent(3, "view", at(30000L)),
+          FunnelEvent(1, "purchase", at(50000L))),
+        Seq(FunnelEvent(2, "click", at(15000L)),
+          FunnelEvent(1, "purchase", at(60000L))))
+        .select(col("user_id"), col("stage"), (col("ts_ms") - T0).as("ts_ms"))
     }),
 
     "dedup_cross_corpus" -> ((s, d) => {
@@ -4639,8 +4521,7 @@ object SparkEntry {
 
     "cluster_kmeans" -> ((s, d) =>
       ClusterOps.kmeansAssign(
-        t(s, d, "embeddings")
-          .withColumn("embedding", col("embedding").cast("array<double>")),
+        embeddings(s, d),
         k = 8, iters = 2)),
 
     "cluster_silhouette" -> ((s, d) => {
@@ -4727,8 +4608,7 @@ object SparkEntry {
     }),
 
     "ann_ivf_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       SimilarityOps.ivfTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
         .select(col("query_id"), col("nbr_id"), round(col("sim"), 4).as("sim"),
           col("rank"))
@@ -4755,8 +4635,7 @@ object SparkEntry {
           (col("sq") === lit(0.0d)).as("is_zero"))),
 
     "ann_brute_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       SimilarityOps.bruteForceTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
         .select(col("query_id"), col("nbr_id"), round(col("sim"), 4).as("sim"),
           col("rank"))
@@ -4766,8 +4645,7 @@ object SparkEntry {
       // product-quantization ADC search: corpus as 8×16-code PQ codes,
       // deterministic per-subspace Lloyd codebooks, broadcast lookup
       // tables — the memory-bound ANN scale path (see SimilarityOps)
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       SimilarityOps.pqTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
           model = Some(pqModel(s, d)))
         .select(col("query_id"), col("nbr_id"),
@@ -4784,8 +4662,7 @@ object SparkEntry {
       // memory/recall ladder, and the cheapest scan a vector store can
       // ship. Corpus side carries only (vec_id, sig) into the distance
       // pass; full vectors surface for the 10×20 re-rank only.
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       SimilarityOps.bqTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
         .select(col("query_id"), col("nbr_id"),
           round(col("sim"), 4).as("sim"), col("rank"))
@@ -4795,8 +4672,7 @@ object SparkEntry {
       // scalar-quantization (SQ8) search: 1 byte/dim against the
       // per-dim min/max envelope, midpoint reconstruction, full scan —
       // the no-training compression rung between brute and PQ
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       SimilarityOps.sqTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
         .select(col("query_id"), col("nbr_id"),
           round(col("sim"), 4).as("sim"), col("rank"))
@@ -4810,8 +4686,7 @@ object SparkEntry {
       // construction — the post-filter alternative (global top-k, then
       // filter) silently returns < k when the class is rare. The label
       // join hash-partitions the corpus; queries broadcast
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       val c = emb.select(col("vec_id").as("nbr_id"), col("label"),
         col("embedding").as("nbr_emb"))
       val q = emb.filter(col("vec_id") < 10)
@@ -4832,8 +4707,7 @@ object SparkEntry {
       // IVFPQ: coarse cells prune to ~nProbe/nCentroids of the corpus,
       // PQ ADC answers distances inside the pruned set — the
       // billion-vector recipe, fully deterministic (see SimilarityOps)
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       SimilarityOps.ivfpqTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
           model = Some(pqModel(s, d)))
         .select(col("query_id"), col("nbr_id"),
@@ -4841,8 +4715,7 @@ object SparkEntry {
     }),
 
     "ann_lsh_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       SimilarityOps.lshTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
         .select(col("query_id"), col("nbr_id"), round(col("sim"), 4).as("sim"),
           col("rank"))
@@ -4860,8 +4733,7 @@ object SparkEntry {
       // process-shared with ann_recall's residual leg — the pqModel
       // discipline; serving reads checkpoints, the oracle still
       // replays the full training chain
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
         .localCheckpoint(eager = false)
       SimilarityOps.ivfpqResidualTopK(emb, emb.filter(col("vec_id") < 10),
           k = 5, model = Some(residualModel(s, d)))
@@ -4877,8 +4749,7 @@ object SparkEntry {
       // deployed IVF index). Centroids, cell assignment, truth and the
       // cast corpus are shared single-computation stages across the
       // three legs, so the sweep pays one training, three probe joins.
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
         .localCheckpoint(eager = false)
       val q = emb.filter(col("vec_id") < 10)
       val brute = SimilarityOps.bruteForceTopK(emb, q, k = 5)
@@ -5734,8 +5605,7 @@ object SparkEntry {
     // the non-broadcast shuffle-join path (PlanSpec pins the no-broadcast
     // plan shape)
     "ann_lsh_join" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
       SimilarityOps.lshTopKJoin(emb, emb, k = 3)
         .select(col("query_id"), col("nbr_id"), round(col("sim"), 4).as("sim"),
           col("rank"))
@@ -6211,28 +6081,16 @@ object SparkEntry {
 
     "st_windowed_counts" -> ((s, _) => {
       // streaming through the correctness gate: a deterministic event
-      // trace flows through readStream-equivalent MemoryStream into the
+      // trace flows through an in-memory stream source into the
       // watermarked windowed-count operator; the finished micro-batch
       // result is the query output
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.windowedCounts(mem.toDF(), "ts", "user_id",
-          "10 minutes", "5 minutes")
-        .writeStream.format("memory").queryName("st_wc_out")
-        .outputMode("complete").start()
-      try {
-        mem.addData(
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 1.0),
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:04:00"), 2.0),
-          EventStreamOps.Event(2, java.sql.Timestamp.valueOf("2024-01-01 00:12:00"), 3.0),
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:13:00"), 4.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_wc_out")
+      StreamTrace.run[Event](s, "st_windowed_counts", "complete")(src =>
+        EventStreamOps.windowedCounts(src.toDF(), "ts", "user_id",
+          "10 minutes", "5 minutes"))(
+        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
+          Event(1, wall("2024-01-01 00:04:00"), 2.0),
+          Event(2, wall("2024-01-01 00:12:00"), 3.0),
+          Event(1, wall("2024-01-01 00:13:00"), 4.0)))
         .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
           col("user_id"), col("n_events"))
     }),
@@ -6248,30 +6106,23 @@ object SparkEntry {
       // one-batch-behind semantic (a real operational gotcha). The
       // trace is harness metadata (StreamingQueryProgress), not data
       // rows — at scale this reads the same way from the progress API
-      // regardless of input volume.
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.windowedCounts(mem.toDF(), "ts", "user_id",
-          "10 minutes", "5 minutes")
-        .writeStream.format("memory").queryName("st_wml_out")
-        .outputMode("complete").start()
-      def ev(t: String) =
-        EventStreamOps.Event(1, java.sql.Timestamp.valueOf(t), 1.0)
-      val progress =
-        try {
-          mem.addData(ev("2024-01-01 00:01:00"), ev("2024-01-01 00:05:00"))
-          q.processAllAvailable()
-          mem.addData(ev("2024-01-01 00:09:00"), ev("2024-01-01 00:12:00"))
-          q.processAllAvailable()
-          mem.addData(ev("2024-01-01 00:20:00"))
-          q.processAllAvailable()
-          q.recentProgress.toSeq.filter(_.numInputRows > 0)
-            .map(p => (p.eventTime.get("max"), p.eventTime.get("watermark")))
-        } finally q.stop()
+      // regardless of input volume. The trace reads the stream's
+      // progress, not its sink, so it runs the harness steps itself.
+      val src = StreamTrace.source[Event](StreamTrace.session(s))
+      val batches = Seq(
+        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
+          Event(1, wall("2024-01-01 00:05:00"), 1.0)),
+        Seq(Event(1, wall("2024-01-01 00:09:00"), 1.0),
+          Event(1, wall("2024-01-01 00:12:00"), 1.0)),
+        Seq(Event(1, wall("2024-01-01 00:20:00"), 1.0)))
+      val progress = StreamTrace.drive(
+          EventStreamOps.windowedCounts(src.toDF(), "ts", "user_id",
+            "10 minutes", "5 minutes"),
+          "memory", "st_watermark_lag", "complete")(
+          batches.iterator.map(b => () => src.addData(b))) { q =>
+        q.recentProgress.toSeq.filter(_.numInputRows > 0)
+          .map(p => (p.eventTime.get("max"), p.eventTime.get("watermark")))
+      }
       import s.implicits._
       val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
       progress.zipWithIndex
@@ -6292,30 +6143,16 @@ object SparkEntry {
       // batch sketch — same seed-suffixed FNV bucket family as
       // SketchOps.countMin. The sentinel advances the watermark past both
       // data windows; its own window stays open and unemitted
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.countMinCells(mem.toDF(), "ts", "user_id",
-          "10 minutes", "10 minutes", depth = 2, width = 256)
-        .writeStream.format("memory").queryName("st_cms_out")
-        .outputMode("append").start()
-      try {
-        mem.addData(
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 1.0),
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:04:00"), 2.0),
-          EventStreamOps.Event(2, java.sql.Timestamp.valueOf("2024-01-01 00:12:00"), 3.0),
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:13:00"), 4.0))
-        q.processAllAvailable()
+      StreamTrace.run[Event](s, "st_cms", "append")(src =>
+        EventStreamOps.countMinCells(src.toDF(), "ts", "user_id",
+          "10 minutes", "10 minutes", depth = 2, width = 256))(
+        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
+          Event(1, wall("2024-01-01 00:04:00"), 2.0),
+          Event(2, wall("2024-01-01 00:12:00"), 3.0),
+          Event(1, wall("2024-01-01 00:13:00"), 4.0)),
         // watermark sentinel: 00:40 − 10 min closes the 00:00 and 00:10
         // windows
-        mem.addData(EventStreamOps.Event(99,
-          java.sql.Timestamp.valueOf("2024-01-01 00:40:00"), 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_cms_out")
+        Seq(Event(99, wall("2024-01-01 00:40:00"), 0.0)))
         .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
           col("j"), col("bucket"), col("cnt"))
     }),
@@ -6329,34 +6166,17 @@ object SparkEntry {
       // arrival AT the watermark is dropped as late by the stateful-op
       // filter, so the trace keeps a strict margin.) The sentinel
       // advances the watermark past both data windows
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.throttleEventTime(mem.toDS(),
-          windowMs = 600000L, maxPerWindow = 2, watermark = "10 minutes")
-        .toDF()
-        .writeStream.format("memory").queryName("st_throttle_out")
-        .outputMode("append").start()
-      try {
-        mem.addData(
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:05:00"), 3.0),
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:07:00"), 4.0),
-          EventStreamOps.Event(2, java.sql.Timestamp.valueOf("2024-01-01 00:12:00"), 5.0))
-        q.processAllAvailable()
+      StreamTrace.run[Event](s, "st_throttle", "append")(
+          EventStreamOps.throttleEventTime(_, windowMs = 600000L,
+            maxPerWindow = 2, watermark = "10 minutes"))(
+        Seq(Event(1, wall("2024-01-01 00:05:00"), 3.0),
+          Event(1, wall("2024-01-01 00:07:00"), 4.0),
+          Event(2, wall("2024-01-01 00:12:00"), 5.0)),
         // within-watermark out-of-order arrival + a second-window event
-        mem.addData(
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:06:00"), 3.5),
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:14:00"), 6.0))
-        q.processAllAvailable()
+        Seq(Event(1, wall("2024-01-01 00:06:00"), 3.5),
+          Event(1, wall("2024-01-01 00:14:00"), 6.0)),
         // sentinel: watermark 00:40 − 10 min = 00:30 closes both windows
-        mem.addData(EventStreamOps.Event(99,
-          java.sql.Timestamp.valueOf("2024-01-01 00:40:00"), 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_throttle_out")
+        Seq(Event(99, wall("2024-01-01 00:40:00"), 0.0)))
         .select(col("user_id"),
           date_format(timestamp_millis(col("w_start_ms")),
             "yyyy-MM-dd HH:mm:ss").as("w_start"),
@@ -6372,32 +6192,18 @@ object SparkEntry {
       // and with the batch sketch_hll registers — the distinct-count
       // half of the lambda pattern (st_cms is the frequency half).
       // User 1 appears twice in window 0: one register, max'd
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.hllCells(mem.toDF(), "ts", "user_id",
-          "10 minutes", "10 minutes", p = 6)
-        .writeStream.format("memory").queryName("st_hll_out")
-        .outputMode("append").start()
-      try {
-        mem.addData(
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 1.0),
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:04:00"), 2.0),
-          EventStreamOps.Event(2, java.sql.Timestamp.valueOf("2024-01-01 00:05:00"), 3.0),
-          EventStreamOps.Event(3, java.sql.Timestamp.valueOf("2024-01-01 00:07:00"), 4.0),
-          EventStreamOps.Event(2, java.sql.Timestamp.valueOf("2024-01-01 00:12:00"), 5.0),
-          EventStreamOps.Event(3, java.sql.Timestamp.valueOf("2024-01-01 00:13:00"), 6.0))
-        q.processAllAvailable()
+      StreamTrace.run[Event](s, "st_hll", "append")(src =>
+        EventStreamOps.hllCells(src.toDF(), "ts", "user_id",
+          "10 minutes", "10 minutes", p = 6))(
+        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
+          Event(1, wall("2024-01-01 00:04:00"), 2.0),
+          Event(2, wall("2024-01-01 00:05:00"), 3.0),
+          Event(3, wall("2024-01-01 00:07:00"), 4.0),
+          Event(2, wall("2024-01-01 00:12:00"), 5.0),
+          Event(3, wall("2024-01-01 00:13:00"), 6.0)),
         // watermark sentinel: 00:40 − 10 min closes both data windows;
         // its own window stays open and unemitted
-        mem.addData(EventStreamOps.Event(99,
-          java.sql.Timestamp.valueOf("2024-01-01 00:40:00"), 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_hll_out")
+        Seq(Event(99, wall("2024-01-01 00:40:00"), 0.0)))
         .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
           col("bucket"), col("rho"))
     }),
@@ -6406,32 +6212,18 @@ object SparkEntry {
       // streaming data-quality monitor: per finalized window, violation
       // counts of the declared checks (negative value; user id outside
       // the known range) — the ingest-time sibling of stats_expectations
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.windowedExpectations(mem.toDF(), "ts",
+      StreamTrace.run[Event](s, "st_expectations", "append")(src =>
+        EventStreamOps.windowedExpectations(src.toDF(), "ts",
           "10 minutes", "10 minutes",
           Seq("n_value_negative" -> (col("value") < 0),
-            "n_user_unknown" -> (col("user_id") > 2)))
-        .writeStream.format("memory").queryName("st_exp_out")
-        .outputMode("append").start()
-      try {
-        mem.addData(
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 1.0),
-          EventStreamOps.Event(2, java.sql.Timestamp.valueOf("2024-01-01 00:04:00"), -2.0),
-          EventStreamOps.Event(5, java.sql.Timestamp.valueOf("2024-01-01 00:12:00"), 3.0),
-          EventStreamOps.Event(1, java.sql.Timestamp.valueOf("2024-01-01 00:13:00"), -1.0))
-        q.processAllAvailable()
+            "n_user_unknown" -> (col("user_id") > 2))))(
+        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
+          Event(2, wall("2024-01-01 00:04:00"), -2.0),
+          Event(5, wall("2024-01-01 00:12:00"), 3.0),
+          Event(1, wall("2024-01-01 00:13:00"), -1.0)),
         // sentinel closes the 00:00 and 00:10 windows; its own window
         // (00:40) stays open and unemitted
-        mem.addData(EventStreamOps.Event(2,
-          java.sql.Timestamp.valueOf("2024-01-01 00:40:00"), 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_exp_out")
+        Seq(Event(2, wall("2024-01-01 00:40:00"), 0.0)))
         .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
           col("n_value_negative"), col("n_user_unknown"))
     }),
@@ -8013,8 +7805,7 @@ object SparkEntry {
       // global argmin (ties to the smaller id). cover_sim is the
       // selected point's similarity to its nearest prior center — the
       // coverage-radius curve a pruning run monitors.
-      val emb = t(s, d, "embeddings")
-        .withColumn("embedding", col("embedding").cast("array<double>"))
+      val emb = embeddings(s, d)
         .select("vec_id", "embedding")
       var centers = emb.filter(col("vec_id") === 0L)
       var out = centers.select(lit(0).as("step"), col("vec_id"),
@@ -8533,27 +8324,11 @@ object SparkEntry {
     "st_sessions" -> ((s, _) => {
       // streaming sessionizer through the gate: deterministic two-batch
       // trace; sessions close via the later-event gap path (timeout off)
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.sessionize(mem.toDS(), gapMs = 60000L,
-          idleTimeout = false)
-        .writeStream.format("memory").queryName("st_sess_out")
-        .outputMode("append").start()
-      // epoch millis directly (Timestamp.valueOf would shift with the
-      // JVM default zone and break the literal oracle)
-      def e(u: Long, ms: Long, v: Double) =
-        EventStreamOps.Event(u, new java.sql.Timestamp(1700000000000L + ms), v)
-      try {
-        mem.addData(e(1, 0L, 1.0), e(1, 30000L, 2.0), e(2, 10000L, 4.0))
-        q.processAllAvailable()
-        mem.addData(e(1, 3600000L, 5.0), e(2, 3600000L, 6.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_sess_out")
+      StreamTrace.run[Event](s, "st_sessions", "append")(
+          EventStreamOps.sessionize(_, gapMs = 60000L, idleTimeout = false))(
+        Seq(Event(1, at(0L), 1.0), Event(1, at(30000L), 2.0),
+          Event(2, at(10000L), 4.0)),
+        Seq(Event(1, at(3600000L), 5.0), Event(2, at(3600000L), 6.0)))
         .select(col("user_id"), col("start_ms"), col("end_ms"),
           col("n_events"), col("sum_value"))
     }),
@@ -8563,27 +8338,13 @@ object SparkEntry {
       // st_sessions plus a watermark-pushing sentinel key (filtered out)
       // so every session closes by watermark, not wall clock — the
       // emitted set is replay-deterministic (see StreamingSpec)
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.sessionizeEventTime(mem.toDS(), gapMs = 60000L,
-          watermark = "10 seconds")
-        .writeStream.format("memory").queryName("st_sess_evt_out")
-        .outputMode("append").start()
-      def e(u: Long, ms: Long, v: Double) =
-        EventStreamOps.Event(u, new java.sql.Timestamp(1700000000000L + ms), v)
-      try {
-        mem.addData(e(1, 0L, 1.0), e(1, 30000L, 2.0), e(2, 10000L, 4.0))
-        q.processAllAvailable()
-        mem.addData(e(1, 3600000L, 5.0), e(2, 3600000L, 6.0))
-        q.processAllAvailable()
-        mem.addData(e(9, 10000000L, 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_sess_evt_out")
+      StreamTrace.run[Event](s, "st_sessions_event", "append")(
+          EventStreamOps.sessionizeEventTime(_, gapMs = 60000L,
+            watermark = "10 seconds"))(
+        Seq(Event(1, at(0L), 1.0), Event(1, at(30000L), 2.0),
+          Event(2, at(10000L), 4.0)),
+        Seq(Event(1, at(3600000L), 5.0), Event(2, at(3600000L), 6.0)),
+        Seq(Event(9, at(10000000L), 0.0)))
         .filter(col("user_id") =!= 9L)
         .select(col("user_id"), col("start_ms"), col("end_ms"),
           col("n_events"), col("sum_value"))
@@ -8593,32 +8354,20 @@ object SparkEntry {
       // stream-static enrichment through the gate: the live feed joins a
       // dim table derived from the batch events table (tier = user_id%3)
       // and aggregates per (10-min window, tier); the second batch
-      // updates an existing window in complete mode
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val dim = t(ss, d, "events").select(col("user_id")).distinct()
-        .withColumn("tier",
-          concat(lit("t"), pmod(col("user_id"), lit(3L)).cast("string")))
-      val q = EventStreamOps.enrichedWindowedSums(mem.toDF(), dim, "user_id",
+      // updates an existing window in complete mode. The dim table is
+      // read on the stream's (cloned) session.
+      StreamTrace.run[Event](s, "st_static_join", "complete") { src =>
+        val dim = t(src.sparkSession, d, "events").select(col("user_id"))
+          .distinct()
+          .withColumn("tier",
+            concat(lit("t"), pmod(col("user_id"), lit(3L)).cast("string")))
+        EventStreamOps.enrichedWindowedSums(src.toDF(), dim, "user_id",
           "tier", "ts", "10 minutes")
-        .writeStream.format("memory").queryName("st_sj_out")
-        .outputMode("complete").start()
-      def e(u: Long, t: String, v: Double) =
-        EventStreamOps.Event(u, java.sql.Timestamp.valueOf(t), v)
-      try {
-        mem.addData(
-          e(1, "2024-01-01 00:01:00", 1.5), // tier t1, window 00:00
-          e(4, "2024-01-01 00:04:00", 2.5), // tier t1, same window
-          e(2, "2024-01-01 00:12:00", 3.0)) // tier t2, window 00:10
-        q.processAllAvailable()
-        mem.addData(e(1, "2024-01-01 00:13:00", 4.0)) // t1 joins window 00:10
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_sj_out")
+      }(
+        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.5), // tier t1, window 00:00
+          Event(4, wall("2024-01-01 00:04:00"), 2.5), // tier t1, same window
+          Event(2, wall("2024-01-01 00:12:00"), 3.0)), // tier t2, window 00:10
+        Seq(Event(1, wall("2024-01-01 00:13:00"), 4.0))) // t1 joins window 00:10
         .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
           .as("w_start"), col("tier"), col("n_events"), col("sum_value"))
     }),
@@ -8629,38 +8378,23 @@ object SparkEntry {
       // evicts its state (within-horizon semantics); a late duplicate
       // (ts < watermark) never reaches the operator. Sentinel key 9 only
       // pushes the watermark and is filtered from the result.
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.dedupWithinWatermark(mem.toDF(), Seq("user_id"),
-          "ts", "1 minute")
-        .writeStream.format("memory").queryName("st_dedup_out")
-        .outputMode("append").start()
-      def e(u: Long, ms: Long, v: Double) =
-        EventStreamOps.Event(u, new java.sql.Timestamp(1700000000000L + ms), v)
-      try {
+      StreamTrace.run[Event](s, "st_dedup", "append")(src =>
+        EventStreamOps.dedupWithinWatermark(src.toDF(), Seq("user_id"),
+          "ts", "1 minute"))(
         // batch 1: key 1 duplicated inside the batch (identical rows, so
         // the surviving copy is unambiguous)
-        mem.addData(e(1, 0L, 1.0), e(1, 0L, 1.0), e(2, 10000L, 2.0))
-        q.processAllAvailable()
+        Seq(Event(1, at(0L), 1.0), Event(1, at(0L), 1.0),
+          Event(2, at(10000L), 2.0)),
         // batch 2: key 1 again while its state is live -> dropped
-        mem.addData(e(1, 30000L, 9.0), e(3, 40000L, 3.0))
-        q.processAllAvailable()
+        Seq(Event(1, at(30000L), 9.0), Event(3, at(40000L), 3.0)),
         // batch 3: sentinel pushes the watermark to 3_540_000 ms,
         // evicting every earlier key's state
-        mem.addData(e(9, 3600000L, 0.0))
-        q.processAllAvailable()
+        Seq(Event(9, at(3600000L), 0.0)),
         // batch 4: key 2 re-arrives past its horizon -> re-emitted;
         // key 3 re-arrives with ts < watermark -> dropped as late
-        mem.addData(e(2, 3600000L, 7.0), e(3, 100000L, 9.9))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_dedup_out").filter(col("user_id") =!= 9L)
-        .select(col("user_id"),
-          (unix_millis(col("ts")) - 1700000000000L).as("ts_ms"),
+        Seq(Event(2, at(3600000L), 7.0), Event(3, at(100000L), 9.9)))
+        .filter(col("user_id") =!= 9L)
+        .select(col("user_id"), (unix_millis(col("ts")) - T0).as("ts_ms"),
           col("value").as("v"))
     }),
 
@@ -8672,48 +8406,31 @@ object SparkEntry {
       // near-dup re-emits; a late near-dup (ts < watermark) never
       // reaches the operator. Band buckets for the trace texts are
       // pinned in StreamingSpec against the batch minhash kernel.
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[EventStreamOps.DocEvent]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.DocEvent]
-      val q = EventStreamOps.neardupWithinWatermark(mem.toDF(), "text", "ts",
-          "1 minute")
-        .writeStream.format("memory").queryName("st_neardup_out")
-        .outputMode("append").start()
-      def e(id: Long, ms: Long, text: String) = EventStreamOps.DocEvent(
-        id, text, new java.sql.Timestamp(1700000000000L + ms))
       val fox = "the quick brown fox jumps over the lazy dog"
-      try {
+      StreamTrace.run[DocEvent](s, "st_neardup", "append")(src =>
+        EventStreamOps.neardupWithinWatermark(src.toDF(), "text", "ts",
+          "1 minute"))(
         // batch 1: two unrelated docs -> both emit
-        mem.addData(e(1, 0L, fox),
-          e(2, 10000L, "completely unrelated payload about parquet row groups"))
-        q.processAllAvailable()
+        Seq(DocEvent(1, fox, at(0L)), DocEvent(2,
+          "completely unrelated payload about parquet row groups", at(10000L))),
         // batch 2: doc 3 = case/whitespace variant of doc 1 (all bands
         // equal), doc 4 = one-token edit (shares band 2) -> both drop;
         // doc 5 is fresh -> emits
-        mem.addData(
-          e(3, 20000L, "The  Quick Brown FOX jumps over the LAZY dog"),
-          e(4, 30000L, "the quick brown fox leaps over the lazy dog"),
-          e(5, 40000L, "another fully distinct sentence mentioning shuffle exchanges"))
-        q.processAllAvailable()
+        Seq(DocEvent(3, "The  Quick Brown FOX jumps over the LAZY dog", at(20000L)),
+          DocEvent(4, "the quick brown fox leaps over the lazy dog", at(30000L)),
+          DocEvent(5,
+            "another fully distinct sentence mentioning shuffle exchanges",
+            at(40000L))),
         // batch 3: sentinel pushes the watermark to 3_540_000 ms,
         // evicting every claimed bucket
-        mem.addData(e(9, 3600000L, "watermark sentinel advancing event time"))
-        q.processAllAvailable()
+        Seq(DocEvent(9, "watermark sentinel advancing event time", at(3600000L))),
         // batch 4: doc 6 is a near-dup of the (evicted) doc 1 -> re-emits
         // (within-horizon semantics); doc 7 replays doc 3's text with
         // ts < watermark -> dropped as late
-        mem.addData(
-          e(6, 3600000L, "the quick brown fox jumps over the lazy cat"),
-          e(7, 100000L, "The  Quick Brown FOX jumps over the LAZY dog"))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_neardup_out").filter(col("doc_id") =!= 9L)
-        .select(col("doc_id"),
-          (unix_millis(col("ts")) - 1700000000000L).as("ts_ms"))
+        Seq(DocEvent(6, "the quick brown fox jumps over the lazy cat", at(3600000L)),
+          DocEvent(7, "The  Quick Brown FOX jumps over the LAZY dog", at(100000L))))
+        .filter(col("doc_id") =!= 9L)
+        .select(col("doc_id"), (unix_millis(col("ts")) - T0).as("ts_ms"))
     }),
 
     "st_substring" -> ((s, _) => {
@@ -8726,45 +8443,30 @@ object SparkEntry {
       // duplicate contributes nothing, a half-overlapping doc emits
       // only its new tail window, eviction re-admits, a late replay
       // never reaches the operator. State is O(windows-in-horizon).
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[EventStreamOps.DocEvent]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.DocEvent]
-      val q = EventStreamOps.substringNovelWindows(mem.toDF(), "text", "ts",
-          "1 minute", w = 4, stride = 4, shingleK = 2)
-        .writeStream.format("memory").queryName("st_substring_out")
-        .outputMode("append").start()
-      def e(id: Long, ms: Long, text: String) = EventStreamOps.DocEvent(
-        id, text, new java.sql.Timestamp(1700000000000L + ms))
       val eight = "alpha beta gamma delta epsilon zeta eta theta"
-      try {
+      StreamTrace.run[DocEvent](s, "st_substring", "append")(src =>
+        EventStreamOps.substringNovelWindows(src.toDF(), "text", "ts",
+          "1 minute", w = 4, stride = 4, shingleK = 2))(
         // batch 1: doc 1 (8 tokens → 2 disjoint windows, both novel);
         // doc 2 (4 tokens → 1 novel window)
-        mem.addData(e(1, 0L, eight), e(2, 10000L, "one two three four"))
-        q.processAllAvailable()
+        Seq(DocEvent(1, eight, at(0L)),
+          DocEvent(2, "one two three four", at(10000L))),
         // batch 2: doc 3 duplicates doc 1 exactly → both windows
         // claimed, nothing emits; doc 4 overlaps doc 1's second window
         // → window 0 drops, window 1 (the novel tail) emits
-        mem.addData(e(3, 20000L, eight),
-          e(4, 30000L, "epsilon zeta eta theta iota kappa lambda mu"))
-        q.processAllAvailable()
+        Seq(DocEvent(3, eight, at(20000L)),
+          DocEvent(4, "epsilon zeta eta theta iota kappa lambda mu", at(30000L))),
         // batch 3: sentinel pushes the watermark to 3_540_000 ms,
         // evicting every claimed sketch
-        mem.addData(e(9, 3600000L, "sentinel watermark advance tick"))
-        q.processAllAvailable()
+        Seq(DocEvent(9, "sentinel watermark advance tick", at(3600000L))),
         // batch 4: doc 6 replays doc 1 past the horizon → both windows
         // re-emit (within-horizon semantics); doc 7 replays doc 4 with
         // ts < watermark → dropped as late
-        mem.addData(e(6, 3600000L, eight),
-          e(7, 100000L, "epsilon zeta eta theta iota kappa lambda mu"))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_substring_out").filter(col("doc_id") =!= 9L)
+        Seq(DocEvent(6, eight, at(3600000L)),
+          DocEvent(7, "epsilon zeta eta theta iota kappa lambda mu", at(100000L))))
+        .filter(col("doc_id") =!= 9L)
         .select(col("doc_id"), col("win_idx"),
-          (unix_millis(col("ts")) - 1700000000000L).as("ts_ms"))
+          (unix_millis(col("ts")) - T0).as("ts_ms"))
     }),
 
     "st_curate" -> ((s, _) => {
@@ -8776,77 +8478,49 @@ object SparkEntry {
       // against the live original, a clean doc passes, and the original
       // re-admits after watermark eviction — the admitted stream is the
       // verdict.
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc =
-        org.apache.spark.sql.Encoders.product[EventStreamOps.DocEvent]
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.DocEvent]
-      val q = EventStreamOps.curateStream(mem.toDF(), "text", "ts",
-          "1 minute", minChars = 20)
-        .writeStream.format("memory").queryName("st_curate_out")
-        .outputMode("append").start()
-      def e(id: Long, ms: Long, text: String) = EventStreamOps.DocEvent(
-        id, text, new java.sql.Timestamp(1700000000000L + ms))
       val fox = "the quick brown fox jumps over the lazy dog"
-      try {
+      StreamTrace.run[DocEvent](s, "st_curate", "append")(src =>
+        EventStreamOps.curateStream(src.toDF(), "text", "ts",
+          "1 minute", minChars = 20))(
         // batch 1: original admits; exact copy drops (stage 2); short
         // doc dies at the gate (stage 1); whitespace variant drops at
         // the band stage (stage 3: different hash, identical tokens)
-        mem.addData(e(1, 0L, fox), e(2, 10000L, fox),
-          e(3, 20000L, "tiny doc"),
-          e(4, 30000L, "the  quick brown fox jumps over the lazy dog"))
-        q.processAllAvailable()
+        Seq(DocEvent(1, fox, at(0L)), DocEvent(2, fox, at(10000L)),
+          DocEvent(3, "tiny doc", at(20000L)),
+          DocEvent(4, "the  quick brown fox jumps over the lazy dog", at(30000L))),
         // batch 2: fresh clean doc admits
-        mem.addData(e(5, 40000L,
-          "completely unrelated payload about parquet row groups"))
-        q.processAllAvailable()
+        Seq(DocEvent(5, "completely unrelated payload about parquet row groups",
+          at(40000L))),
         // batch 3: sentinel pushes the watermark to 3_540_000 ms,
         // evicting the hash and band state of every earlier doc
-        mem.addData(e(9, 3600000L,
-          "watermark sentinel advancing event time"))
-        q.processAllAvailable()
+        Seq(DocEvent(9, "watermark sentinel advancing event time", at(3600000L))),
         // batch 4: the original's text re-arrives past its horizon ->
         // re-admitted; a late short doc is still gated (stateless)
-        mem.addData(e(6, 3600000L, fox), e(7, 100000L, "tiny doc"))
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_curate_out").filter(col("doc_id") =!= 9L)
-        .select(col("doc_id"),
-          (unix_millis(col("ts")) - 1700000000000L).as("ts_ms"),
+        Seq(DocEvent(6, fox, at(3600000L)), DocEvent(7, "tiny doc", at(100000L))))
+        .filter(col("doc_id") =!= 9L)
+        .select(col("doc_id"), (unix_millis(col("ts")) - T0).as("ts_ms"),
           col("n_chars"))
     }),
 
     "st_stream_join" -> ((s, _) => {
       // watermarked stream-stream interval join through the gate:
       // clicks attribute to same-user impressions at most 30 minutes
-      // older; the out-of-window click matches nothing
-      val ss = streamSession(s)
-      implicit val sq = ss.sqlContext
-      import graft.streaming.EventStreamOps
-      implicit val enc = org.apache.spark.sql.Encoders.product[EventStreamOps.Event]
-      val imps = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val clicks = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[EventStreamOps.Event]
-      val q = EventStreamOps.intervalJoin(imps.toDF(), clicks.toDF(),
-          "user_id", "ts", "value", "1 minute", "30 minutes")
-        .writeStream.format("memory").queryName("st_join_out")
-        .outputMode("append").start()
-      def e(u: Long, ms: Long, v: Double) =
-        EventStreamOps.Event(u, new java.sql.Timestamp(1700000000000L + ms), v)
-      try {
-        imps.addData(e(1, 0L, 100.0), e(2, 10000L, 200.0))
-        q.processAllAvailable()
-        clicks.addData(e(1, 300000L, 1.0), e(1, 600000L, 2.0),
-          e(2, 2400000L, 3.0)) // user-2 click is 39:50 after the impression
-        q.processAllAvailable()
-      } finally q.stop()
-      ss.table("st_join_out")
+      // older; the out-of-window click matches nothing. Two sources, so
+      // the trace runs the harness steps itself.
+      val ss = StreamTrace.session(s)
+      val imps = StreamTrace.source[Event](ss)
+      val clicks = StreamTrace.source[Event](ss)
+      StreamTrace.drive(EventStreamOps.intervalJoin(imps.toDF(), clicks.toDF(),
+          "user_id", "ts", "value", "1 minute", "30 minutes"),
+          "memory", "st_stream_join", "append")(Iterator(
+        () => imps.addData(Event(1, at(0L), 100.0), Event(2, at(10000L), 200.0)),
+        // the user-2 click is 39:50 after its impression
+        () => clicks.addData(Event(1, at(300000L), 1.0),
+          Event(1, at(600000L), 2.0), Event(2, at(2400000L), 3.0))))(
+        _ => ss.table("st_stream_join"))
         .select(col("user_id"),
-          (unix_millis(col("left_ts")) - 1700000000000L).as("imp_ms"),
-          (unix_millis(col("right_ts")) - 1700000000000L).as("click_ms"),
+          (unix_millis(col("left_ts")) - T0).as("imp_ms"),
+          (unix_millis(col("right_ts")) - T0).as("click_ms"),
           col("left_value").as("imp_value"),
           col("right_value").as("click_value"))
     }),

@@ -58,8 +58,8 @@ object LayoutOps {
   /** Range layout on one key: one sampled range exchange, each output
     * file covering a contiguous, near-disjoint `keyCol` interval — the
     * precondition that makes file-level min/max skipping
-    * ([[manifestPrunedScan]]) effective. The single-dimension sibling of
-    * [[zorder]]. */
+    * ([[graft.sources.IndexedFileIndex]] over [[writeManifestTable]])
+    * effective. The single-dimension sibling of [[zorder]]. */
   def writeRangeLayout(df: DataFrame, keyCol: String, path: String,
                        numFiles: Int): Unit =
     df.repartitionByRange(numFiles, col(keyCol))
@@ -76,29 +76,6 @@ object LayoutOps {
       .groupBy(input_file_name().as("file"))
       .agg(min(col(keyCol)).as("min_k"), max(col(keyCol)).as("max_k"),
         count(lit(1)).as("n_rows"))
-
-  /** Manifest-pruned range scan: read ONLY the files whose [min,max]
-    * intersects [lo,hi], then apply the exact predicate. Returns the
-    * pruned frame plus (files read, files total) so callers can assert
-    * skipping happened. The manifest collect is metadata-scale (one row
-    * per FILE — the same driver-safe planning tier as
-    * `IndexSplits.build`); a deployment with millions of files keeps the
-    * manifest as a table and intersects per scan unit instead of
-    * collecting, but the reader API here takes explicit paths. The
-    * residual filter stays because file ranges OVERLAP the query range at
-    * the edges — pruning must never drop rows, which is exactly what the
-    * oracle's full-scan filter checks. */
-  def manifestPrunedScan(spark: org.apache.spark.sql.SparkSession,
-                         path: String, keyCol: String,
-                         lo: Long, hi: Long): (DataFrame, Int, Int) = {
-    val mf = fileManifest(spark, path, keyCol)
-      .select(col("file"), col("min_k").cast("long"), col("max_k").cast("long"))
-      .collect()
-    val keep = mf.filter(r => r.getLong(2) >= lo && r.getLong(1) <= hi)
-      .map(_.getString(0))
-    val pruned = prunedRead(spark, path, keyCol, lo, hi, keep.toIndexedSeq)
-    (pruned, keep.length, mf.length)
-  }
 
   /** Copy-on-write DELETE WHERE (the Delta/Iceberg COW path, the
     * sibling of the merge-on-read deletion vectors): only files that
@@ -169,47 +146,11 @@ object LayoutOps {
     * Iceberg/Delta metadata-dir convention — `_`-prefixed paths are
     * invisible to Spark's data-file listing, so `spark.read.parquet(path)`
     * still sees only data). Written once per layout job, appended on
-    * ingest; every later range scan plans against it via
-    * [[manifestPrunedScanTable]]. */
+    * ingest; every later range scan plans against it through
+    * [[graft.sources.IndexedFileIndex]]. */
   def writeManifestTable(spark: org.apache.spark.sql.SparkSession,
                          path: String, keyCol: String): Unit =
     fileManifest(spark, path, keyCol)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/_manifest")
-
-  /** Table-driven manifest pruning (round-10, VERDICT item 5): the
-    * manifest stays a DataFrame and the range intersection runs as a
-    * DISTRIBUTED filter over the manifest table — the driver never
-    * materializes the full manifest. Only the MATCHING file paths come
-    * back to build the scan, which is the floor any engine pays:
-    * Spark's own InMemoryFileIndex holds exactly the selected file list
-    * on the driver for every parquet scan, and Iceberg's planning works
-    * the same way (manifest filter job → matched data files). So driver
-    * memory is O(files actually read), not O(files in the table), and
-    * the intersection cost itself scales out with the cluster.
-    *
-    * The returned frame's plan is a pure FileScan over the matched
-    * files + residual filter — no manifest subtree, no collect, on the
-    * query path (pinned in Round10OpsSpec). */
-  def manifestPrunedScanTable(spark: org.apache.spark.sql.SparkSession,
-                              path: String, keyCol: String,
-                              lo: Long, hi: Long): (DataFrame, Int) = {
-    import spark.implicits._
-    val keep = spark.read.parquet(s"$path/_manifest")
-      .filter(col("max_k").cast("long") >= lo &&
-        col("min_k").cast("long") <= hi)
-      .select(col("file")).as[String].collect()
-    (prunedRead(spark, path, keyCol, lo, hi, keep.toIndexedSeq), keep.length)
-  }
-
-  /** Scan construction shared by both pruning planners: read only `keep`,
-    * then the exact residual predicate (file ranges overlap the query
-    * range at the edges — pruning must never drop rows). */
-  private def prunedRead(spark: org.apache.spark.sql.SparkSession,
-                         path: String, keyCol: String, lo: Long, hi: Long,
-                         keep: Seq[String]): DataFrame =
-    if (keep.isEmpty) // preserve schema; the filter makes it empty
-      spark.read.parquet(path).filter(lit(false))
-    else spark.read.parquet(keep: _*)
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi)
 }

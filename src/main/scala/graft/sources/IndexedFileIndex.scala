@@ -9,11 +9,12 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, explode, array, lit, countDistinct}
 import org.apache.spark.sql.types.StructType
 
-/** Zone-map / bloom file skipping wired into PLANNING — the composable
-  * sibling of `LayoutOps.manifestPrunedScanTable` (which prunes well but
-  * only through its explicit-path API). This `FileIndex` wraps Spark's
+/** Zone-map / bloom file skipping wired into PLANNING: the one reader
+  * that prunes on the layout artifacts (`k15_manifest_skip` and the
+  * other skipping rows read through it). This `FileIndex` wraps Spark's
   * own `InMemoryFileIndex` and consults the table-maintenance artifacts
-  * the layout jobs already write beside the data:
+  * the layout jobs (`LayoutOps.writeManifestTable` and siblings) already
+  * write beside the data:
   *
   *  - `_manifest` (file, min_k, max_k): per-FILE zone maps → range
   *    predicates on `keyCol` drop files whose [min,max] misses the

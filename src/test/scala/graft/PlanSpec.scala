@@ -298,24 +298,12 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
   }
 
-  // excluded from whole-suite sweeps: streaming queries and sink round-
-  // trips (building them executes side effects — writes, temp dirs,
-  // full streaming traces), the one deliberately-imperative seam
-  // (per-file split-offset scan), and mapPartitions-based multimodal
-  // decode (object serde, not a UDF). Frame sampling is native now
-  // (frame_sigs expression), so mm_frame_sample is swept like any query.
-  private val sweepExcluded = Set("st_windowed_counts", "st_sessions",
-    "st_sessions_event", "st_dedup", "st_neardup", "st_stream_join",
-    "st_static_join", "k1_tsv_roundtrip", "k2_parquet_roundtrip",
-    "k5_json_roundtrip", "k6_compressed_sink", "k7_dict_roundtrip",
-    "k8_orc_roundtrip", "k9_upsert", "k10_seqfile_roundtrip",
-    "k12_partitioned_scan", "k13_compaction", "k14_bucketed_join",
-    "k15_manifest_skip", "k32_partition_evolution", "st_cms", "st_expectations", "st_hll",
-    "st_throttle", "k19_inverted_index", "s19_split_index")
-
+  // whole-suite sweeps skip `Sweep.excluded` (SparkTestBase). Frame
+  // sampling is native now (frame_sigs expression), so mm_frame_sample is
+  // swept like any query.
   private lazy val sweepPlans: Seq[(String, String)] =
     SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(sweepExcluded)
+      .filterNot(Sweep.excluded)
       .map { name =>
         name -> SparkEntry.queries(name)(spark, sf)
           .queryExecution.executedPlan.toString

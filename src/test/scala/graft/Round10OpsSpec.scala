@@ -2,51 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.LayoutOps
 
 /** Round-10 operator pins. */
 class Round10OpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  // ---- table-driven manifest pruning (VERDICT r9 item 5) ----
-
-  test("manifestPrunedScanTable prunes via the manifest TABLE, " +
-    "no manifest subtree on the query path") {
-    val dir = graft.Scratch.dir("r10_mf")
-      .toString + "/t"
-    val df = (1L to 400L).map(i => (i, i % 5)).toDF("id", "g")
-    LayoutOps.writeRangeLayout(df, "id", dir, numFiles = 8)
-    LayoutOps.writeManifestTable(spark, dir, "id")
-    // the `_`-prefixed manifest dir is invisible to the data listing
-    assert(spark.read.parquet(dir).count() == 400)
-    val (pruned, nRead) =
-      LayoutOps.manifestPrunedScanTable(spark, dir, "id", 100L, 180L)
-    assert(nRead > 0 && nRead < 8, s"read $nRead of 8 files")
-    assert(pruned.select("id").as[Long].collect().toSet ==
-      (100L to 180L).toSet)
-    // query path is a pure pruned FileScan: one scan, over data files
-    // only — the manifest intersection happened at planning, not here
-    val p = pruned.queryExecution.executedPlan.toString
-    assert("FileScan parquet".r.findAllIn(p).length == 1, p)
-    assert(!p.contains("_manifest"), p)
-    // and the scan's file index holds exactly the matched subset
-    val scanned = pruned.select(input_file_name()).distinct().count()
-    assert(scanned == nRead, s"scan touched $scanned files, planned $nRead")
-  }
-
-  test("manifestPrunedScanTable with an empty match returns an empty " +
-    "frame with the data schema") {
-    val dir = graft.Scratch.dir("r10_mf2")
-      .toString + "/t"
-    val df = (1L to 50L).map(i => (i, i % 3)).toDF("id", "g")
-    LayoutOps.writeRangeLayout(df, "id", dir, numFiles = 2)
-    LayoutOps.writeManifestTable(spark, dir, "id")
-    val (pruned, nRead) =
-      LayoutOps.manifestPrunedScanTable(spark, dir, "id", 1000L, 2000L)
-    assert(nRead == 0 && pruned.count() == 0)
-    assert(pruned.columns.toSeq == Seq("id", "g"))
-  }
 
   // ---- shared IVF stages: the cents0/cells0 fast path is an identity ----
 

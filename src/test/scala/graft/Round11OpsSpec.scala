@@ -143,6 +143,11 @@ class Round11OpsSpec extends AnyFunSuite {
     assert(byV.count() == 1L)
     // no predicate on k: full read
     assert(graft.sources.IndexedFileIndex.read(spark, dir, "k").count() == 4000L)
+    // a range no file covers: zero rows, with the data schema
+    val none = graft.sources.IndexedFileIndex.read(spark, dir, "k")
+      .filter(col("k") >= 10000L && col("k") < 20000L)
+    assert(none.count() == 0L)
+    assert(none.columns.toSeq == Seq("k", "v"))
   }
 
   test("indexed read prunes bloom-qualified partition directories for " +

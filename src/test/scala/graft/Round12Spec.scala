@@ -15,20 +15,10 @@ class Round12Spec extends AnyFunSuite {
 
   // --- session-conf hygiene (r11 item 5) -------------------------------
 
-  // building these executes side effects that don't belong in a
-  // build-only sweep (full streaming traces, sink round-trip writes) —
-  // the same exclusion set PlanSpec's plan sweep uses; every excluded
-  // streaming query runs on a CLONED session (streamSession), so a conf
-  // leak there cannot touch the shared session by construction
-  private val confSweepExcluded = Set("st_windowed_counts", "st_sessions",
-    "st_sessions_event", "st_dedup", "st_neardup", "st_stream_join",
-    "st_static_join", "k1_tsv_roundtrip", "k2_parquet_roundtrip",
-    "k5_json_roundtrip", "k6_compressed_sink", "k7_dict_roundtrip",
-    "k8_orc_roundtrip", "k9_upsert", "k10_seqfile_roundtrip",
-    "k12_partitioned_scan", "k13_compaction", "k14_bucketed_join",
-    "k15_manifest_skip", "k32_partition_evolution", "st_cms", "st_expectations", "st_hll",
-    "st_throttle", "k19_inverted_index", "s19_split_index")
-
+  // `Sweep.excluded` (SparkTestBase) skips the builders with side
+  // effects; every st_* query runs on the StreamTrace session clone
+  // (`StreamTrace.session`), so a conf leak there cannot touch the
+  // shared session by construction
   test("no query builder mutates the shared session conf (k30-style " +
     "leaks caught across the full map)") {
     // Tables.compatConfs legitimately sets two layout-compat keys on
@@ -40,7 +30,7 @@ class Round12Spec extends AnyFunSuite {
     // clean) — the per-iteration baseline names exactly the leaker
     var before = spark.conf.getAll
     val offenders = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(confSweepExcluded)
+      .filterNot(Sweep.excluded)
       .flatMap { name =>
         SparkEntry.queries(name)(spark, sf) // build only — no execution
         val after = spark.conf.getAll

@@ -39,21 +39,6 @@ class Round15Spec extends AnyFunSuite {
   private val allSfs = Seq("/root/testdata/sf0.001",
     "/root/testdata/sf0.01", "/root/testdata/sf0.1")
 
-  // building these executes side effects that don't belong in a
-  // build-only sweep (full streaming traces, sink round-trip writes) —
-  // the PlanSpec / Round12Spec exclusion set. Streaming goldens are
-  // tiny fixed traces gated row-for-row, and the sink round-trips
-  // re-emit already-gated relations — neither adds libm exposure.
-  private val sweepExcluded = Set("st_windowed_counts", "st_sessions",
-    "st_sessions_event", "st_dedup", "st_neardup", "st_stream_join",
-    "st_static_join", "k1_tsv_roundtrip", "k2_parquet_roundtrip",
-    "k5_json_roundtrip", "k6_compressed_sink", "k7_dict_roundtrip",
-    "k8_orc_roundtrip", "k9_upsert", "k10_seqfile_roundtrip",
-    "k12_partitioned_scan", "k13_compaction", "k14_bucketed_join",
-    "k15_manifest_skip", "k32_partition_evolution", "st_cms",
-    "st_expectations", "st_hll", "st_throttle", "k19_inverted_index",
-    "s19_split_index")
-
   private def isLibm(e: Expression): Boolean = e match {
     case _: Exp | _: Expm1 | _: Log | _: Logarithm | _: Log2 |
          _: Log10 | _: Log1p | _: Pow => true
@@ -128,11 +113,14 @@ class Round15Spec extends AnyFunSuite {
   }
 
   /** Registry-wide discovery at the cheapest SF: which gated queries
-    * pass through libm anywhere in their plan? */
+    * pass through libm anywhere in their plan? `Sweep.excluded` skips the
+    * builders with side effects: streaming goldens are tiny fixed traces
+    * gated row-for-row, and the sink round-trips re-emit already-gated
+    * relations — neither adds libm exposure. */
   private lazy val libmQueries: Seq[String] = {
     val sf = allSfs.head
     SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(sweepExcluded)
+      .filterNot(Sweep.excluded)
       .filter { name =>
         val plan = SparkEntry.queries(name)(spark, sf)
           .queryExecution.analyzed

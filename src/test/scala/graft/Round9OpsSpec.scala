@@ -179,19 +179,6 @@ class Round9OpsSpec extends AnyFunSuite {
     assert(a == b && a.size == 10)
   }
 
-  // ---- LayoutOps manifest skipping ----
-
-  test("manifestPrunedScan reads a strict file subset and loses no rows") {
-    val dir = graft.Scratch.dir("r9_mf")
-      .toString + "/t"
-    val df = (1L to 400L).map(i => (i, i % 5)).toDF("id", "g")
-    LayoutOps.writeRangeLayout(df, "id", dir, numFiles = 8)
-    val (pruned, nRead, nTotal) =
-      LayoutOps.manifestPrunedScan(spark, dir, "id", 100L, 180L)
-    assert(nRead < nTotal && nRead > 0, s"read $nRead of $nTotal files")
-    assert(pruned.select("id").as[Long].collect().toSet == (100L to 180L).toSet)
-  }
-
   // ---- k14 bucketed join + downstream agg: zero exchanges ----
 
   test("k14 bucketed join and its downstream aggregation plan zero exchanges") {
