@@ -277,9 +277,8 @@ object Probe {
     // documents at sf0.1 is 5k rows: replicate (SPARK_GRAFT_KB_REPL,
     // default 16) so each kernel runs for seconds, not milliseconds;
     // copies differ by a suffix so no cross-row memoization could flatter
-    // a run. Two bounded token arrays for the diff kernels: a
-    // full-document DP diff is quadratic by design, and the reference
-    // diffs at paragraph granularity, mirrored by the 200-token cap.
+    // a run. The diff and hashing kernels read the first 200 tokens;
+    // `rev_diff_long` builds revision-sized arrays from them.
     val repl = envInt("SPARK_GRAFT_KB_REPL", 16)
     val docs = Tables.table(spark, dir, "documents")
       .select(col("doc_id"), explode(sequence(lit(0), lit(repl - 1))).as("copy"),
@@ -311,6 +310,18 @@ object Probe {
       "rev_diff" -> (() =>
         docs.select(explode(g.revDiff(col("toks"), col("toks2"))).as("d"))
           .select(col("d.op"))),
+      // 4000 tokens a side (the 200-token window repeated) with three
+      // local edits: a CHANGE, a DELETE and an INSERT; the time includes
+      // building the two arrays, `a` once per row in its own projection
+      "rev_diff_long" -> (() => {
+        val a = col("a")
+        docs.select(slice(flatten(array_repeat(col("toks"),
+            ceil(lit(4000) / size(col("toks"))).cast("int"))), 1, 4000).as("a"))
+          .select(explode(g.revDiff(a, concat(slice(a, 1, 999), array(lit("zz")),
+            slice(a, 1001, 1000), slice(a, 2002, 999), array(lit("yy")),
+            slice(a, 3001, 1000)))).as("d"))
+          .select(col("d.op"))
+      }),
       "added_words" -> (() =>
         docs.select(explode(g.addedWords(col("toks"), col("toks2"))).as("w"))),
       "minhash_sig" -> (() =>

@@ -10,57 +10,133 @@ import scala.collection.mutable.ArrayBuffer
   */
 object DiffFunctions {
 
-  /** Longest-common-subsequence-based edit script between two token lists.
-    * Contiguous runs of deletes+inserts at the same position merge into a
-    * CHANGE delta, mirroring difflib's chunk semantics. */
+  /** Shortest edit script between two token lists, as difflib chunks:
+    * each maximal run of deletes+inserts between two aligned tokens is one
+    * delta, a CHANGE when it both deletes and inserts.
+    *
+    * Time O((N+M)·D) and space O(N+M), for N and M tokens and D deleted
+    * plus inserted tokens: the common prefix and suffix are trimmed, then
+    * Myers' middle-snake divide and conquer (Myers 1986, §4b) aligns the
+    * rest. Ties between equally short scripts go to the common prefix
+    * before the suffix, and inside the middle-snake search to a delete
+    * over an insert; so where the alignment is ambiguous (repeated
+    * tokens), chunks may sit elsewhere than a full LCS table would put
+    * them, with the same, minimal, number of edited tokens. */
   def diff(orig: Seq[String], rev: Seq[String]): Seq[Delta] = {
     val a = if (orig == null) IndexedSeq.empty[String] else orig.toIndexedSeq
     val b = if (rev == null) IndexedSeq.empty[String] else rev.toIndexedSeq
     val n = a.length; val m = b.length
-    // DP LCS table; fine for revision-sized paragraph/word lists. For very
-    // long inputs callers should diff at paragraph granularity first (as the
-    // reference does via extractParagraph).
-    val dp = Array.ofDim[Int](n + 1, m + 1)
-    var i = n - 1
-    while (i >= 0) {
-      var j = m - 1
-      while (j >= 0) {
-        dp(i)(j) =
-          if (a(i) == b(j)) dp(i + 1)(j + 1) + 1
-          else math.max(dp(i + 1)(j), dp(i)(j + 1))
-        j -= 1
-      }
-      i -= 1
-    }
+    val matched = new Aligner(a, b).matched
     val out = ArrayBuffer.empty[Delta]
     var x = 0; var y = 0
-    val delBuf = ArrayBuffer.empty[String]
-    val insBuf = ArrayBuffer.empty[String]
-    var chunkX = 0; var chunkY = 0
-    def flush(): Unit = {
-      if (delBuf.nonEmpty || insBuf.nonEmpty) {
-        val op =
-          if (delBuf.nonEmpty && insBuf.nonEmpty) "CHANGE"
-          else if (delBuf.nonEmpty) "DELETE"
-          else "INSERT"
-        out += Delta(op, chunkX, chunkY, delBuf.toSeq, insBuf.toSeq)
-        delBuf.clear(); insBuf.clear()
-      }
-    }
     while (x < n || y < m) {
-      if (x < n && y < m && a(x) == b(y)) {
-        flush(); x += 1; y += 1
-      } else {
-        if (delBuf.isEmpty && insBuf.isEmpty) { chunkX = x; chunkY = y }
-        if (y >= m || (x < n && dp(x + 1)(y) >= dp(x)(y + 1))) {
-          delBuf += a(x); x += 1
-        } else {
-          insBuf += b(y); y += 1
-        }
+      if (x < n && matched(x) == y) { x += 1; y += 1 }
+      else {
+        val chunkX = x; val chunkY = y
+        while (x < n && matched(x) < 0) x += 1
+        y = if (x < n) matched(x) else m
+        val op =
+          if (x > chunkX && y > chunkY) "CHANGE"
+          else if (x > chunkX) "DELETE"
+          else "INSERT"
+        out += Delta(op, chunkX, chunkY, a.slice(chunkX, x), b.slice(chunkY, y))
       }
     }
-    flush()
     out.toSeq
+  }
+
+  /** `matched(i)` is the index in `b` aligned with `a(i)`, or -1 where
+    * `a(i)` is deleted, on one shortest edit path. */
+  private final class Aligner(a: IndexedSeq[String], b: IndexedSeq[String]) {
+    val matched: Array[Int] = Array.fill(a.length)(-1)
+    // furthest-reaching x per diagonal, forward and reverse; sized by the
+    // first (largest) subproblem and reused by the smaller ones
+    private var vf: Array[Int] = _
+    private var vb: Array[Int] = _
+    private var splitX = 0
+    private var splitY = 0
+    align(0, a.length, 0, b.length)
+
+    private def align(aLo0: Int, aHi0: Int, bLo0: Int, bHi0: Int): Unit = {
+      var aLo = aLo0; var aHi = aHi0; var bLo = bLo0; var bHi = bHi0
+      while (aLo < aHi && bLo < bHi && a(aLo) == b(bLo)) {
+        matched(aLo) = bLo; aLo += 1; bLo += 1
+      }
+      while (aLo < aHi && bLo < bHi && a(aHi - 1) == b(bHi - 1)) {
+        aHi -= 1; bHi -= 1; matched(aHi) = bHi
+      }
+      if (aLo < aHi && bLo < bHi && middle(aLo, aHi, bLo, bHi)) {
+        val x = splitX; val y = splitY
+        align(aLo, x, bLo, y)
+        align(x, aHi, y, bHi)
+      }
+    }
+
+    /** Finds where the forward and reverse furthest-reaching paths over
+      * a[aLo, aHi) × b[bLo, bHi) first overlap, and stores that point of a
+      * shortest path in (splitX, splitY). It is neither corner of the box,
+      * as both ends differ after trimming, so both halves are smaller.
+      * False when the ranges share no token, so every token is an edit. */
+    private def middle(aLo: Int, aHi: Int, bLo: Int, bHi: Int): Boolean = {
+      val n = aHi - aLo; val m = bHi - bLo
+      val maxD = (n + m + 1) / 2
+      val len = 2 * maxD + 2
+      if (vf == null) { vf = new Array[Int](len); vb = new Array[Int](len) }
+      java.util.Arrays.fill(vf, 0, len, -1)
+      java.util.Arrays.fill(vb, 0, len, -1)
+      vf(maxD + 1) = 0; vb(maxD + 1) = 0
+      val delta = n - m
+      val odd = (delta & 1) != 0
+      // diagonals that left the box stop being extended
+      var fLo = 0; var fHi = 0; var rLo = 0; var rHi = 0
+      var d = 0
+      while (d < maxD) {
+        var k = -d + fLo
+        while (k <= d - fHi) {
+          val i = maxD + k
+          var x =
+            if (k == -d || (k != d && vf(i - 1) < vf(i + 1))) vf(i + 1)
+            else vf(i - 1) + 1
+          var y = x - k
+          while (x < n && y < m && a(aLo + x) == b(bLo + y)) { x += 1; y += 1 }
+          vf(i) = x
+          if (x > n) fHi += 2
+          else if (y > m) fLo += 2
+          else if (odd) {
+            val j = maxD + delta - k
+            if (j >= 0 && j < len && vb(j) != -1 && x >= n - vb(j)) {
+              splitX = aLo + x; splitY = bLo + y
+              return true
+            }
+          }
+          k += 2
+        }
+        k = -d + rLo
+        while (k <= d - rHi) {
+          val i = maxD + k
+          var x =
+            if (k == -d || (k != d && vb(i - 1) < vb(i + 1))) vb(i + 1)
+            else vb(i - 1) + 1
+          var y = x - k
+          while (x < n && y < m && a(aHi - 1 - x) == b(bHi - 1 - y)) {
+            x += 1; y += 1
+          }
+          vb(i) = x
+          if (x > n) rHi += 2
+          else if (y > m) rLo += 2
+          else if (!odd) {
+            val j = maxD + delta - k
+            if (j >= 0 && j < len && vf(j) != -1 && vf(j) >= n - x) {
+              splitX = aLo + vf(j); splitY = bLo + vf(j) - (delta - k)
+              return true
+            }
+          }
+          k += 2
+        }
+        d += 1
+      }
+      false
+    }
   }
 
   /** Words present in `rev` but not in `orig` (multiset difference) — the

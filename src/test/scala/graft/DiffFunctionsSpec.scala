@@ -56,4 +56,30 @@ class DiffFunctionsSpec extends AnyFunSuite {
     assert(DiffFunctions.addedWords(null, Seq("x")) == Seq("x"))
     assert(DiffFunctions.addedWords(Seq("x"), null) == Seq.empty)
   }
+
+  test("60k tokens a side with 3 local edits: exact deltas, no n·m table") {
+    // distinct tokens, so the alignment is unique; a full LCS table here
+    // would be 60001² ints (~14 GB), past any test heap
+    val orig = (0 until 60000).map(i => s"t$i")
+    val rev = orig.slice(0, 10000) ++ Seq("u") ++ orig.slice(10001, 30000) ++
+      orig.slice(30002, 50000) ++ Seq("v", "w") ++ orig.slice(50000, 60000)
+    val deltas = DiffFunctions.diff(orig, rev)
+    assert(deltas == Seq(
+      Delta("CHANGE", 10000, 10000, Seq("t10000"), Seq("u")),
+      Delta("DELETE", 30000, 30000, Seq("t30000", "t30001"), Seq.empty),
+      Delta("INSERT", 50000, 49998, Seq.empty, Seq("v", "w"))))
+    assert(LcsOracle.replay(orig, deltas) == rev)
+  }
+
+  test("disjoint vocabularies (D = N + M) give one CHANGE of everything") {
+    val a = (0 until 2000).map(i => s"a$i")
+    val b = (0 until 2000).map(i => s"b$i")
+    assert(DiffFunctions.diff(a, b) == Seq(Delta("CHANGE", 0, 0, a, b)))
+  }
+
+  test("a repeated token is inserted after the common prefix, as the DP did") {
+    val expect = Seq(Delta("INSERT", 1, 1, Seq.empty, Seq("s")))
+    assert(DiffFunctions.diff(Seq("s"), Seq("s", "s")) == expect)
+    assert(LcsOracle.diff(Seq("s"), Seq("s", "s")) == expect)
+  }
 }

@@ -67,7 +67,8 @@ class ProbeSpec extends AnyFunSuite {
     assert(t.get("stream_probe_row").get("st_neardup").get("rows").asInt == 500, t)
     val (okK, _, Seq(k)) = probe("kernels")
     assert(okK)
-    assert(k.get("kernel_bench").fieldNames.asScala.toSeq.contains("rev_diff"), k)
+    val kernels = k.get("kernel_bench").fieldNames.asScala.toSeq
+    assert(kernels.contains("rev_diff") && kernels.contains("rev_diff_long"), k)
   }
 
   test("an unknown mode is an error row, not an exception") {

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 import graft.functions.{DiffFunctions, Hashing, TextFunctions}
-import graft.model.Delta
 
 /** Property tests for the pure kernels (SURVEY §5 names title
   * normalization, link extraction and the diff as property-friendly). */
@@ -25,27 +24,38 @@ class PropertiesSpec extends AnyFunSuite {
     .flatMap(n => Gen.listOfN(n, Gen.alphaChar).map(_.mkString))
   private val tokenList: Gen[List[String]] = Gen.listOf(word)
 
-  test("diff deltas replay orig into rev") {
-    def apply(orig: IndexedSeq[String], deltas: Seq[Delta]): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      var i = 0
-      deltas.foreach { d =>
-        while (i < d.origPos) { out += orig(i); i += 1 }
-        out ++= d.revLines
-        i += d.origLines.length
-      }
-      while (i < orig.length) { out += orig(i); i += 1 }
-      out.toSeq
+  /** Two token lists over one 2-6 word vocabulary, so tokens repeat and
+    * many alignments tie. */
+  private val vocabPair: Gen[(List[String], List[String])] =
+    Gen.chooseNum(2, 6).flatMap { v =>
+      val tok = Gen.chooseNum(0, v - 1).map(i => s"w$i")
+      Gen.zip(Gen.listOf(tok), Gen.listOf(tok))
     }
+
+  test("diff deltas replay orig into rev") {
     forAll(tokenList, tokenList) { (a, b) =>
-      val deltas = DiffFunctions.diff(a, b)
-      assert(apply(a.toIndexedSeq, deltas) == b)
+      assert(LcsOracle.replay(a.toIndexedSeq, DiffFunctions.diff(a, b)) == b)
+    }
+    samples(vocabPair, 1000).foreach { case (a, b) =>
+      assert(LcsOracle.replay(a.toIndexedSeq, DiffFunctions.diff(a, b)) == b)
+    }
+  }
+
+  test("diff edits the fewest tokens: deleted + inserted = n + m - 2·LCS") {
+    samples(vocabPair, 1000).foreach { case (a, b) =>
+      val edited = DiffFunctions.diff(a, b)
+        .map(d => d.origLines.length + d.revLines.length).sum
+      assert(edited == a.length + b.length - 2 * LcsOracle.lcs(a, b), (a, b))
     }
   }
 
   test("diff of identical lists is empty; delta count bounded by edits") {
     forAll(tokenList) { a =>
       assert(DiffFunctions.diff(a, a).isEmpty)
+    }
+    // chunks sit between aligned tokens, so there are at most LCS + 1
+    samples(vocabPair, 1000).foreach { case (a, b) =>
+      assert(DiffFunctions.diff(a, b).length <= LcsOracle.lcs(a, b) + 1, (a, b))
     }
   }
 
