@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ListenerBus
 import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 import graft.operators.{DedupOps, TermOps}
+import graft.queries.Query
 import graft.streaming.{EventStreamOps, StreamTrace}
 
 /** Dev probes: the questions the bench record does not answer yet —
@@ -35,7 +36,6 @@ import graft.streaming.{EventStreamOps, StreamTrace}
   * cores). Exits 2 on an unknown mode and 1 when a named query was
   * unknown or failed; a failure is an error row and the run goes on. */
 object Probe {
-  private type Query = (SparkSession, String) => DataFrame
   private val modes = Seq("plan", "final", "time", "sem", "inc", "stream", "kernels")
   val usage = s"usage: graft.Probe <${modes.mkString("|")}> <dir> [args...]"
 
@@ -96,7 +96,7 @@ object Probe {
     * probe that throws prints an error row and the run goes on; true
     * when every probe succeeded. */
   private def eachQuery(mode: String, names: Seq[String])(
-      probe: (String, Query) => Unit): Boolean =
+      probe: (String, Query.Build) => Unit): Boolean =
     names.map { n =>
       val err = SparkEntry.queries.get(n) match {
         case None => Some("unknown query")
@@ -140,7 +140,7 @@ object Probe {
   /** The `time` row of one query; the first failed run ends it. Counters
     * come from the fastest run: a shared-frame build lands in run 1, so
     * run 2 shows the steady-state shape. */
-  private def time(spark: SparkSession, dir: String)(n: String, q: Query): Unit = {
+  private def time(spark: SparkSession, dir: String)(n: String, q: Query.Build): Unit = {
     val sc = spark.sparkContext
     def attempts(left: Int): List[(Double, Option[String], Counters)] = {
       val c = new Counters(n)

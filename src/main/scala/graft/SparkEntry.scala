@@ -1,16 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.streaming.{EventStreamOps, StreamTrace}
-import graft.streaming.EventStreamOps.{Change, DocEvent, Event, FunnelEvent}
-import graft.streaming.StreamTrace.{at, wall, T0}
+import graft.queries._
+import graft.queries.QueryKit.t
 
 /** Driver contract: one `queries` entry per implemented operator from
   * SURVEY.md §2 (+ the LLM-pipeline operators), each with a DuckDB oracle
-  * in `oracleSql` (same column names, deterministic values).
+  * in `oracleSql` (same column names, deterministic values). Both derive
+  * from the [[Query]] records the family objects in `graft.queries`
+  * declare, one record per query.
   *
   * Conventions for oracle stability:
   *  - timestamps leave the plan as formatted strings (parquet tz-metadata
@@ -23,295 +23,38 @@ import graft.streaming.StreamTrace.{at, wall, T0}
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
+  /** Every registered query, family by family. */
+  lazy val all: Seq[Query] = checked(Seq(Relational.all, TimeSeries.all,
+    Storage.all, Sources.all, Stats.all, Text.all, Dedup.all, Retrieval.all,
+    Graph.all, Multimodal.all, Curation.all, Streaming.all).flatten)
 
-  /** Process-lifetime scratch dirs for replayable demo tables (k32's
-    * partition generations): written once per key, reused across
-    * invocations of the same query builder. Lives under [[Scratch.root]]
-    * (one shutdown hook reclaims everything — r16 hygiene). Only for
-    * data that is a pure function of the key — queries whose semantics
-    * need a FRESH dir per run (upsert/compaction state) call
-    * [[Scratch.dir]] directly. */
-  private val scratchDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  /** Per-process scratch parquet keyed by the FULL `key` (callers pass
-    * e.g. "k32_" + the sf-dir path, so two different dirs can never
-    * collide into one cache slot — the r13 32-bit-hashCode advice);
-    * only the temp-directory NAME is sanitized/truncated. */
-  private def scratchDir(key: String)(write: String => Unit): String =
-    scratchDirs.computeIfAbsent(key, { _ =>
-      val prefix = key.replaceAll("[^A-Za-z0-9_-]", "_").takeRight(48)
-      val dir = Scratch.dir(prefix)
-      write(dir.toString)
-      dir.toString
-    })
-
-  /** Per-process shared materializations, one per (session, sf dir,
-    * key): deterministic pure functions of the corpus, eagerly
-    * checkpointed by their builders (they are consumed by concurrently
-    * scheduled queries — the eager rule), shared so the cost is paid
-    * once per process — what a serving stack does with its built index
-    * or a vector store with its codebooks. Sharing moves cost only,
-    * never results; each query's oracle still replays its chain. */
-  private val sharedStages = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), AnyRef]()
-  private def sharedStage[V <: AnyRef](s: SparkSession, d: String, key: String)(
-      build: => V): V = {
-    val k = (s, d, key)
-    val hit = sharedStages.get(k)
-    if (hit != null) hit.asInstanceOf[V]
-    else {
-      // build OUTSIDE the map update: dedupLabels05 nests
-      // jaccardPairs05, and a nested computeIfAbsent on one CHM throws
-      // "Recursive update" whenever the two keys hash to the same bin —
-      // population-order dependent (7 specs tripped it in r15 when new
-      // tests shifted the fill order). A racing duplicate build is
-      // benign: the chains are deterministic, so both values are
-      // value-identical and putIfAbsent keeps exactly one.
-      val v = build
-      val prev = sharedStages.putIfAbsent(k, v)
-      if (prev != null) prev.asInstanceOf[V] else v
-    }
+  /** `qs` unchanged, or an error naming every name declared twice: a
+    * duplicate would otherwise shadow the earlier query in `queries`. */
+  private[graft] def checked(qs: Seq[Query]): Seq[Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"query names declared twice: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
   }
 
-  /** One shared frame: `build`, eagerly checkpointed. search_bm25 /
-    * search_rrf / search_hybrid / search_ndcg / search_rbo all ran the
-    * identical BM25(scan, join, merge) top-20 postings chain and the
-    * identical brute-cosine top-20 for query vector 0; the r13 driver
-    * record shows the duplication (search_rrf 1.07 → 1.65 s). */
-  private def sharedFrame(s: SparkSession, d: String, key: String)(
-      build: => DataFrame): DataFrame =
-    sharedStage(s, d, key)(build.localCheckpoint())
+  lazy val queries: Map[String, Query.Build] =
+    all.map(q => q.name -> q.build).toMap
 
-  /** The PQ model (codebooks, codes): ann_pq_topk / ann_rerank /
-    * ann_recall each retrained bit-identical codebooks (deterministic
-    * sharded-init Lloyd on the same corpus cast). */
-  private def pqModel(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    sharedStage(s, d, "pq_model") {
-      val (books, codes) = SimilarityOps.pqTrain(embeddings(s, d))
-      (books.localCheckpoint(), codes.localCheckpoint())
-    }
-
-  /** The residual-IVFPQ model: ann_ivfpq_residual (the serving row) and
-    * ann_recall's residual leg each retrained bit-identical coarse
-    * centroids + residual codebooks. */
-  private def residualModel(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    sharedStage(s, d, "ivfpq_residual_model") {
-      val (cents, cells, cent2, enc) =
-        SimilarityOps.ivfpqResidualModel(embeddings(s, d))
-      (cents.localCheckpoint(), cells.localCheckpoint(),
-        cent2.localCheckpoint(), enc.localCheckpoint())
-    }
-
-  /** BM25 top-20 for the standard (scan, join, merge) query. */
-  private def bm25Leg(s: SparkSession, d: String): DataFrame =
-    sharedFrame(s, d, "bm25_sjm20")(
-      TermOps.bm25Search(t(s, d, "documents"), "doc_id", "text",
-        queryTerms = Seq("scan", "join", "merge"), k = 20))
-
-  /** Brute-cosine top-20 for the standard query vector 0. */
-  private def vecLeg(s: SparkSession, d: String): DataFrame =
-    sharedFrame(s, d, "brute_v0_20") {
-      val emb = embeddings(s, d)
-      SimilarityOps.bruteForceTopK(emb,
-        emb.filter(col("vec_id") === 0L), k = 20)
-    }
-
-  /** The embeddings table with `embedding` cast to double[]: a plain
-    * read, neither shared nor checkpointed (that is [[embF64]]). */
-  private def embeddings(s: SparkSession, d: String): DataFrame =
-    t(s, d, "embeddings")
-      .withColumn("embedding", col("embedding").cast("array<double>"))
-
-  /** The embeddings corpus cast to double[] — the prologue of the two
-    * recall-audit rows. A pure column cast (no derivation), so sharing
-    * moves scan+cast cost only; consumers time in-memory block reads. */
-  private def embF64(s: SparkSession, d: String): DataFrame =
-    sharedFrame(s, d, "emb_f64")(embeddings(s, d))
-
-  /** ONE corpus×corpus brute-cosine top-5 truth set (self excluded)
-    * shared by the recall audits: ann_recall's 10-query truth IS this
-    * set filtered to query_id < 10 — bruteForceTopK ranks each query
-    * against the whole corpus independently (same sim, same
-    * (sim DESC, nbr_id) tie-break), so the restriction is
-    * value-identical and the corpus-quadratic brute pass is paid once
-    * per process instead of once per audit row (r16 judge item 3; the
-    * two rows pinned 5.37 + 4.94 s with duplicated brute legs). */
-  private def bruteTop5(s: SparkSession, d: String): DataFrame =
-    sharedFrame(s, d, "brute_top5")(
-      SimilarityOps.bruteForceTopK(embF64(s, d), embF64(s, d), k = 5))
-
-  /** Per-doc hot verdicts of the two substring-dedup tiers (exact
-    * suffix-array, approx window-MinHash) at the standard parameters —
-    * the frame BOTH calibration rows (corpus-wide confusion table +
-    * per-source rollup) aggregate from. Sharing is legitimate here for
-    * the same reason as dedupLabels05: the tier GENERATORS have their
-    * own gates (dedup_substring / dedup_substring_approx build their
-    * own chains); the calibration rows are downstream consumers of the
-    * verdicts, and a deployment materializes the verdict table once per
-    * snapshot. Pure deterministic function of the corpus. */
-  private def substringVerdicts(s: SparkSession, d: String): DataFrame =
-    sharedFrame(s, d, "substr_verdicts") {
-      val docs = t(s, d, "documents")
-      val ex = DedupOps.suffixDupSpans(docs, "doc_id", "text",
-          cap = 24, minSpan = 8)
-        .select(col("doc_id"),
-          (col("n_dup_pos") * 2 >= col("n_pos")).as("ehot"))
-      val ap = DedupOps.windowMinhashSpans(docs, "doc_id", "text",
-          w = 16, stride = 8, shingleK = 4, minCount = 2L)
-        .select(col("doc_id"),
-          (col("n_dup_windows") * 2 >= col("n_windows")).as("ahot"))
-      ex.join(ap, Seq("doc_id"))
-    }
-
-  /** Planted "audio" clips for mm_audio_neardup: `blocks` frames of 32
-    * bytes each — 16 loud chars (one uniform code per frame, walking
-    * `'A' + (i·step) mod 26`, so the energy curve has dense local
-    * maxima) + 16 quiet pad chars the 32-byte frame stride never reads.
-    * Deterministic Scala constants interpolated verbatim into BOTH the
-    * Spark union and the oracle VALUES (chars are [A-Za0] only — SQL-
-    * literal-safe). */
-  private def audioClip(step: Int, blocks: Int): String =
-    (0 until blocks).map { i =>
-      ('A' + (i * step) % 26).toChar.toString * 16 + "a" * 16
-    }.mkString
-  // step 11 × 24 blocks → 9 peaks → 8 gap-2 landmarks (exactly the
-  // support cut); step 7 needs 36 blocks for its 8 gap-3/4 landmarks
-  /** Planted "images" for mm_neardup_eval: 16 text rows × 64 chars →
-    * a 2×8 grid of 8×8 uniform patch blocks (the mm_neardup
-    * width=64/patch=8 geometry, no row clamping). `fill(pr, pc)` picks
-    * each block's character; all fills are SQL-literal-safe ASCII and
-    * the four fixtures are interpolated verbatim into BOTH the Spark
-    * union and the oracle VALUES. Truth by construction: base↔edit
-    * share 15/16 patches (≥ 4/5 → labeled positive), base↔half and
-    * edit↔half share 8/16 (< 4/5 → labeled negative), other shares 0
-    * with everything (negative, never even a candidate). Per-key df ≤ 3
-    * — far under the 20 hub cut — and no organic document contains
-    * these uniform synthetic blocks. */
-  private def imageFixture(fill: (Int, Int) => Char): String =
-    (0 until 16).map { r =>
-      (0 until 8).map(pc => fill(r / 8, pc).toString * 8).mkString
-    }.mkString
-  private lazy val imgBase = imageFixture((pr, pc) =>
-    ('A' + pr * 8 + pc).toChar)
-  private lazy val imgEdit = imageFixture((pr, pc) =>
-    if (pr == 0 && pc == 0) '1' else ('A' + pr * 8 + pc).toChar)
-  private lazy val imgHalf = imageFixture((pr, pc) =>
-    if ((pr + pc) % 2 == 0) ('a' + pr * 8 + pc).toChar
-    else ('A' + pr * 8 + pc).toChar)
-  private lazy val imgOther = imageFixture((_, _) => 'z')
-
-  private lazy val audioClipBase = audioClip(11, 24)
-  // pad frame '0' (codepoint 48) is genuinely LOWER-energy than every
-  // loud code ('A'..'Z', 65..90) — before r18 the pad was 'b' (98,
-  // louder than any loud frame), and the base/shift landmark identity
-  // held only because frame 0 can never be a peak (no lag neighbor);
-  // with a truly quiet pad the identity no longer leans on that
-  // boundary rule (r17 ADVICE)
-  private lazy val audioClipShift = "0" * 32 + audioClipBase
-  private lazy val audioClipOther = audioClip(7, 36)
-
-  /** The corpus near-dup backbone shared by the CC family: the
-    * prefix-filtered jaccard pair set at the standard threshold 0.5,
-    * and the connected-components labeling over it. dedup_components /
-    * dedup_canonical / dedup_cluster_profile / sample_split_leakfree
-    * each re-ran the identical chain (≈3.1–3.7 s apiece in the r13
-    * driver record) and graph_cc_incremental re-generated the pairs; a
-    * production pipeline materializes pairs and labels once per
-    * snapshot and serves every consumer from them. dedup_jaccard /
-    * dedup_jaccard_prefix keep building their own — they gate the pair
-    * generators themselves. */
-  private def jaccardPairs05(s: SparkSession, d: String): DataFrame =
-    sharedFrame(s, d, "jacc05")(
-      DedupOps.jaccardPairsPrefix(t(s, d, "documents"), "doc_id", "text",
-        threshold = 0.5))
-
-  /** CC labels (node, component) over [[jaccardPairs05]]. */
-  private def dedupLabels05(s: SparkSession, d: String): DataFrame =
-    sharedFrame(s, d, "jacc05_cc")(
-      DedupOps.connectedComponents(jaccardPairs05(s, d)))
+  // built once, like `queries`: callers read it once per query name
+  lazy val oracleSql: Map[String, String] =
+    all.map(q => q.name -> q.oracleSql).toMap
 
   /** Every registered query that reads a process-shared materialization
-    * ([[sharedFrame]] / [[pqModel]]): within one process, the FIRST
-    * toucher pays the build and siblings time a localCheckpoint read,
-    * so per-query timings for these rows are not chain costs. The bench
-    * record carries this list (`shared_stage_readers`) so a reader of
+    * (`sharesStage`): within one process, the FIRST toucher pays the
+    * build and siblings time a localCheckpoint read, so per-query
+    * timings for these rows are not chain costs. The bench record
+    * carries this list (`shared_stage_readers`) so a reader of
     * BENCH_r*.json can't misread a shared row as a full-chain timing —
     * suite totals stay honest either way (the build is paid exactly
-    * once, inside the suite). Keep in sync with the
-    * jaccardPairs05 / dedupLabels05 / bm25Leg / bruteCosV0 / pqModel
-    * call sites; SharedStageSpec audits it against the source. */
-  val sharedStageReaders: Seq[String] = Seq(
-    "ann_ivfpq_residual", "ann_ivfpq_topk", "ann_pq_topk", "ann_recall",
-    "ann_rerank",
-    "curate_e2e",
-    "dedup_canonical", "dedup_cluster_profile", "dedup_components",
-    "dedup_substring_eval", "dedup_substring_src_eval",
-    "embed_knn_recall_lsh",
-    "graph_cc_incremental", "sample_split_leakfree",
-    "search_bm25", "search_hybrid", "search_ndcg", "search_rbo",
-    "search_rrf")
-
-  // The r18 `explodeSession` clone (per-query AQE coalesce-floor 64k for
-  // the Σdf² pair-explosion queries) is retired in r19: the explosion
-  // parallelism is now an explicit shape — GraphOps.fanOutByKey
-  // repartitions the post-hub-cut edge relation on the self-join key
-  // inside nodeSimilarity/linkPredict, which survives coalescer-behavior
-  // drift instead of encoding a byte constant against it.
-
-  private val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
-  /** The hashed-linear serve-time scorer's unrounded logit per doc —
-    * shared by `curate_classifier` (keep decision) and
-    * `stats_calibration` (reliability audit); the ordered fold over the
-    * bucket-sorted feature array is engine-exact, so both gates see the
-    * identical z. */
-  private def classifierZ(s: SparkSession, d: String): DataFrame =
-    TermOps.featureHash(t(s, d, "documents"), "doc_id", "text", dim = 256)
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("bucket"), col("weight"))))
-        .as("arr"))
-      .select(col("doc_id"),
-        aggregate(col("arr"), lit(0.0d), (acc, x) =>
-          acc + (SimilarityOps.hash32Col(x.getField("bucket")
-              .cast("long") + lit(1L)).cast("double") /
-              lit(2147483648.0) - lit(1.0)) *
-            x.getField("weight").cast("double")).as("z"))
-
-  /** Decile-bin reliability table + expected calibration error of the
-    * [[classifierZ]] sigmoid score against a caller-supplied binary
-    * label relation `(doc_id, y)` — shared by `stats_calibration`
-    * (lang labels) and `curate_calibration` (Gopher-gate labels).
-    * Bins are deciles of the ROUNDED score (floor on identical IEEE
-    * doubles both engines); per-bin sums are exact integers (score is
-    * round(·,4) → ten-thousandth longs; the n-weighted ECE numerator
-    * is micro-unit integers in DECIMAL(38,0), cast BEFORE the multiply
-    * so the 2^63 headroom is real — HUGEINT-mirrored in the oracle). */
-  private def calibrationEce(s: SparkSession, d: String,
-                             lab: DataFrame): DataFrame = {
-    val scored = classifierZ(s, d)
-      .select(col("doc_id"),
-        round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 4).as("score"))
-    val bins = scored.join(lab, Seq("doc_id"))
-      .withColumn("bin",
-        least(floor(col("score") * 10).cast("int"), lit(9)))
-      .groupBy("bin")
-      .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
-        sum(round(col("score") * 10000).cast("long")).as("s4"))
-      .select(col("bin"), col("n"), col("n_pos"),
-        round(col("s4").cast("double") / 10000.0 / col("n"), 6).as("conf"),
-        round(col("n_pos").cast("double") / col("n"), 6).as("acc"))
-      .withColumn("gap", round(abs(col("acc") - col("conf")), 6))
-    bins.withColumn("bin", col("bin").cast("long"))
-      .withColumn("ece", round(
-        sum(col("n").cast("decimal(38,0)") *
-          round(col("gap") * 1000000).cast("long"))
-          .over(Window.partitionBy())
-          .cast("double") / 1000000.0 /
-          sum(col("n")).over(Window.partitionBy()), 6))
-  }
+    * once, inside the suite). Round15Spec audits the flags against the
+    * shared-stage call sites. */
+  lazy val sharedStageReaders: Seq[String] =
+    all.filter(_.sharesStage).map(_.name).sorted
 
   /** curate_e2e's near-dup candidate stage — the PREFIX-FILTERED
     * (Bayardo) pair join: byte-identical pairs to the plain inverted-
@@ -347,16710 +90,4 @@ object SparkEntry {
         round(sum(col("o_totalprice")), 2).as("revenue"))
       .orderBy(col("n_name"), col("c_mktsegment"))
   }
-
-  // ---------------------------------------------------------------------
-  // Fixture frames for the scalar-function golden queries (inline, no
-  // external data; oracles are literal expected VALUES).
-  // ---------------------------------------------------------------------
-
-  private def textFixture(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(
-      (1L, "See [[Spark|the engine]] and [[Scala]] but not [[File:x.png|img]] or [[#frag]]."),
-      (2L, "'''Bold''' text with [[link|word]] and <ref>x</ref> {{tmpl}} &amp; http://u.com end"),
-      (3L, "refs http://a.com/x more http://b.io/y done {{Infobox x|a}} {{cite web|u}} {{Portal}} {{Good one}}")
-    ).toDF("fid", "text")
-  }
-
-  private def titleFixture(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq((1L, "foo bar#sec"), (2L, "a&b=c"), (3L, "\"quoted title\""),
-      (4L, "héllo wörld"), (5L, "wiki page"))
-      .toDF("fid", "title")
-  }
-
-  private def samplerFixture(s: SparkSession): DataFrame = {
-    import s.implicits._
-    // (event_id, key, ts-offset-sec, len): hand-traced through the
-    // reference carry rules — see RevisionOpsSpec for the derivation.
-    Seq((1L, "A", 1, 1000.0), (2L, "A", 2, 1005.0), (3L, "A", 3, 1200.0),
-      (4L, "A", 4, 1250.0), (5L, "A", 5, 2000.0), (6L, "B", 1, 50.0))
-      .toDF("event_id", "key", "off", "len")
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("off")))
-      .drop("off")
-  }
-
-  // ---------------------------------------------------------------------
-  // Queries
-  // ---------------------------------------------------------------------
-
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational core over the TPC-H-ish tables ----
-    "q1_pricing_summary" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_price"),
-          round(avg(col("l_discount")), 6).as("avg_disc"),
-          count(lit(1)).as("n_rows"))),
-
-    "q3_top_revenue" -> ((s, d) =>
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, d, "customer")), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("o_orderkey"), col("c_mktsegment"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey"))
-        .limit(10)),
-
-    "q5_local_supplier" -> ((s, d) => {
-      // TPC-H Q5 shape — the six-table join-order/broadcast anchor:
-      // revenue by nation where the customer and the supplier share a
-      // nation, region- and year-filtered. Declared flat and left to
-      // Catalyst/AQE: region⋈nation is pinned broadcast (25 rows);
-      // supplier/customer broadcast at test scale and degrade to
-      // shuffled hash joins on the keys at 100 TB — the filters land
-      // before every join, so each stage's build side is minimal.
-      val asiaNations = t(s, d, "nation")
-        .join(t(s, d, "region").filter(col("r_name") === "ASIA"),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"))
-      t(s, d, "lineitem")
-        .join(t(s, d, "orders")
-            .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-              col("o_orderdate") < lit("1997-01-01").cast("timestamp")),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .join(t(s, d, "supplier"),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(asiaNations),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"))
-    }),
-
-    "q18_large_orders" -> ((s, d) => {
-      // TPC-H Q18 shape — the having-semi-join anchor: orders whose
-      // total quantity crosses a threshold, re-joined to their header
-      // and customer. The qualifying set is the per-key aggregate
-      // filtered BEFORE any wide join (map-side partial sum, one
-      // exchange on l_orderkey), so the expensive join fan-in only ever
-      // sees qualifying keys; quantities are integer-valued doubles, so
-      // the > 350 cut has no float boundary.
-      val big = t(s, d, "lineitem")
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity")).as("qty"))
-        .filter(col("qty") > 350.0)
-      t(s, d, "orders")
-        .join(big, col("o_orderkey") === col("l_orderkey"))
-        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("o_orderkey"),
-          date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss")
-            .as("o_orderdate"),
-          col("o_totalprice"), round(col("qty"), 2).as("qty"))
-    }),
-
-    "q21_blame_supplier" -> ((s, d) => {
-      // TPC-H Q21 shape — the exists/not-exists blame anchor: suppliers
-      // whose shipment was late (> 90 days after the order date,
-      // integer-exact epoch-second arithmetic — this corpus carries no
-      // commit/receipt dates) in a MULTI-supplier finished order where
-      // NO OTHER supplier was late. EXISTS compiles to a left-semi and
-      // NOT EXISTS to a left-anti, both shuffled on l_orderkey so the
-      // big relations co-locate once; supplier/nation broadcast. The
-      // (numwait DESC, s_name) order with unique names makes the
-      // LIMIT 100 cut deterministic.
-      // r18 optimization (guide §2.4/§3): the semi+anti formulation read
-      // lineitem three times and shuffled three pair relations (l1,
-      // others-distinct, lateOthers-distinct) plus two join exchanges.
-      // EXISTS/NOT EXISTS over the same order are a per-order aggregate:
-      // group once to (orderkey, suppkey, late_lines), then per order
-      // count suppliers and late suppliers — a blamed supplier is a late
-      // one in a multi-supplier order whose late-supplier count is
-      // exactly 1 (itself). numwait sums the pair's late LINE count,
-      // which is what the row-per-late-line semi/anti chain counted.
-      // One lineitem scan, one pair exchange, one order-keyed window.
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-      val ord = t(s, d, "orders").filter(col("o_orderstatus") === "F")
-        .select(col("o_orderkey"), col("o_orderdate"))
-      val joined = li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .withColumn("late", col("l_shipdate").cast("long") -
-          col("o_orderdate").cast("long") > lit(90L * 86400L))
-      val grp = joined.groupBy(col("l_orderkey"), col("l_suppkey"))
-        .agg(sum(when(col("late"), 1L).otherwise(0L)).as("late_lines"))
-      val w = Window.partitionBy(col("l_orderkey"))
-      val blamed = grp
-        .withColumn("n_supp", count(lit(1)).over(w))
-        .withColumn("n_late_supp",
-          sum(when(col("late_lines") > 0L, 1L).otherwise(0L)).over(w))
-        .filter(col("late_lines") > 0L && col("n_supp") >= 2L &&
-          col("n_late_supp") === 1L)
-      blamed
-        .join(broadcast(t(s, d, "supplier")
-          .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, d, "nation")
-          .select(col("n_nationkey"), col("n_name"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("s_name"), col("n_name"))
-        .agg(sum(col("late_lines")).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name").asc)
-        .limit(100)
-    }),
-
-    "p1_filter_eq" -> ((s, d) =>
-      t(s, d, "documents").filter(col("lang") === "en")
-        .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))),
-
-    "p3_time_range" -> ((s, d) =>
-      t(s, d, "events")
-        .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
-          col("ts") < lit("2024-01-07").cast("timestamp"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))),
-
-    // same predicate over the µs-rewritten events table: the production
-    // layout where ts predicates prune parquet row groups (PlanSpec pins
-    // the PushedFilters claim; this row pins value-identity with p3)
-    "p3_time_range_us" -> ((s, d) =>
-      Tables.eventsMicros(s, d)
-        .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
-          col("ts") < lit("2024-01-07").cast("timestamp"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))),
-
-    "p4_projection" -> ((s, d) =>
-      t(s, d, "documents").filter(col("n_chars") > 200)
-        .select(col("doc_id"), col("lang"), col("n_chars"))),
-
-    "p5_len_filter" -> ((s, d) =>
-      t(s, d, "documents")
-        .filter(col("n_chars") >= 11 && col("n_chars") <= 1000000)
-        .agg(count(lit(1)).as("n_docs"), round(avg(col("n_chars")), 4).as("avg_chars"))),
-
-    "p7_filter_sort" -> ((s, d) =>
-      t(s, d, "events").filter(col("event_type") === "purchase")
-        .orderBy(col("ts"), col("event_id"))
-        .select(col("event_id"), date_format(col("ts"), tsFmt).as("ts_str"),
-          round(col("value"), 2).as("value"))),
-
-    "p8_semijoin" -> ((s, d) => {
-      import s.implicits._
-      val seeds = Seq(1L, 2L, 3L, 5L, 8L, 13L, 21L, 34L).toDF("user_id")
-      t(s, d, "events").join(broadcast(seeds), Seq("user_id"), "left_semi")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-    }),
-
-    "j1_broadcast_join" -> ((s, d) =>
-      t(s, d, "orders")
-        .join(broadcast(t(s, d, "customer")), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"),
-          round(sum(col("o_totalprice")), 2).as("sum_price"))),
-
-    "j2_double_join" -> ((s, d) =>
-      t(s, d, "customer")
-        .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(count(lit(1)).as("n_cust"), round(avg(col("c_acctbal")), 4).as("avg_bal"))),
-
-    "j4_left_coalesce" -> ((s, d) =>
-      t(s, d, "events")
-        .join(broadcast(t(s, d, "customer")),
-          col("user_id") * 20 === col("c_custkey"), "left")
-        .select(coalesce(col("c_mktsegment"), lit("UNRESOLVED")).as("segment"))
-        .groupBy(col("segment")).agg(count(lit(1)).as("n_events"))),
-
-    "j5_freebase_join" -> ((s, d) =>
-      t(s, d, "documents")
-        .withColumn("fb_key",
-          GraftFunctions.freebaseEncode(concat(col("lang"), lit("/"), col("source"))))
-        .groupBy(col("fb_key")).agg(count(lit(1)).as("n_docs"))),
-
-    // ---- aggregations ----
-    "a1_max_timestamp" -> ((s, d) =>
-      t(s, d, "events").agg(
-        date_format(max(col("ts")), tsFmt).as("max_ts"),
-        date_format(min(col("ts")), tsFmt).as("min_ts"),
-        count(lit(1)).as("n_events"))),
-
-    "a2_group_min" -> ((s, d) =>
-      t(s, d, "events").groupBy(col("user_id"))
-        .agg(date_format(min(col("ts")), tsFmt).as("first_ts"),
-          count(lit(1)).as("n_events"))),
-
-    "a3_distinct_count" -> ((s, d) =>
-      t(s, d, "events").agg(
-        countDistinct(col("user_id")).as("n_users"),
-        countDistinct(col("event_type")).as("n_types"))),
-
-    "a4_term_stats" -> ((s, d) =>
-      TermOps.termStats(t(s, d, "documents"), "doc_id", "text", minDf = 5L)),
-
-    // F17 analyzer seam: the same stats under the unicode-punctuation
-    // tokenizer (each analyzer vs its own oracle)
-    "a4_term_stats_unicode" -> ((s, d) =>
-      TermOps.termStats(t(s, d, "documents"), "doc_id", "text", minDf = 5L,
-        analyzer = TermOps.Unicode)),
-
-    "text_zipf" -> ((s, d) => {
-      // Zipf-law fit over the top-50 corpus terms: OLS of ln(cf) on
-      // ln(rank) — slope ≈ −1 is the healthy-natural-text signature, a
-      // flat slope flags templated/boilerplate corpora and a cliff
-      // flags vocabulary collapse (the corpus-health scorecard beside
-      // text_ttr/text_quality). The heavy lifting is one term-frequency
-      // aggregation (map-side combined) + TakeOrdered(50); the fit then
-      // runs over exactly 50 points as ONE rank-ordered fold of
-      // (x, y, xy, x², y²) products — both engines fold identical
-      // doubles in identical order, so the unrounded co-moments match
-      // bit-for-bit before the mirrored slope/intercept/r² divisions.
-      val top = TermOps.termStats(t(s, d, "documents"), "doc_id", "text")
-        .select(col("term"), col("cf"))
-        .orderBy(col("cf").desc, col("term").asc).limit(50)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("cf").desc, col("term").asc)))
-      val pts = top.select(col("rank"),
-          log(col("rank").cast("double")).as("x"),
-          log(col("cf").cast("double")).as("y"))
-        .select(col("rank"), col("x"), col("y"),
-          (col("x") * col("y")).as("xy"), (col("x") * col("x")).as("xx"),
-          (col("y") * col("y")).as("yy"))
-      val zero = array(lit(0.0d), lit(0.0d), lit(0.0d), lit(0.0d), lit(0.0d))
-      pts.agg(count(lit(1)).cast("double").as("n"),
-          array_sort(collect_list(struct(col("rank"), col("x"), col("y"),
-            col("xy"), col("xx"), col("yy")))).as("arr"))
-        .withColumn("s", aggregate(col("arr"), zero, (acc, p) => array(
-          acc.getItem(0) + p.getField("x"), acc.getItem(1) + p.getField("y"),
-          acc.getItem(2) + p.getField("xy"), acc.getItem(3) + p.getField("xx"),
-          acc.getItem(4) + p.getField("yy"))))
-        .select(col("n"), col("s").getItem(0).as("sx"),
-          col("s").getItem(1).as("sy"), col("s").getItem(2).as("sxy"),
-          col("s").getItem(3).as("sxx"), col("s").getItem(4).as("syy"))
-        .withColumn("slope", (col("n") * col("sxy") - col("sx") * col("sy")) /
-          (col("n") * col("sxx") - col("sx") * col("sx")))
-        .select(col("n").cast("long").as("n_terms"),
-          round(col("slope"), 6).as("slope"),
-          round((col("sy") - col("slope") * col("sx")) / col("n"), 6)
-            .as("intercept"),
-          round(((col("n") * col("sxy") - col("sx") * col("sy")) *
-            (col("n") * col("sxy") - col("sx") * col("sy"))) /
-            ((col("n") * col("sxx") - col("sx") * col("sx")) *
-             (col("n") * col("syy") - col("sy") * col("sy"))), 6).as("r2"))
-    }),
-
-    "a10_tf_unicode" -> ((s, d) =>
-      TermOps.tfPostings(t(s, d, "documents"), "doc_id", "text",
-          analyzer = TermOps.Unicode)
-        .filter(col("tf") >= 3)),
-
-    "a5_dictionary" -> ((s, d) =>
-      TermOps.dictionary(t(s, d, "documents"), "doc_id", "text", minDf = 5L)),
-
-    "a5_dict_scalable" -> ((s, d) =>
-      // same ids as a5_dictionary, produced by the range-partitioned rank
-      // (no single-task global window) — both run against the same oracle
-      TermOps.dictionaryScalable(t(s, d, "documents"), "doc_id", "text",
-        minDf = 5L, buckets = 8)),
-
-    "a7_cooccurrence" -> ((s, d) => {
-      val c = t(s, d, "events")
-        .groupBy(col("user_id"), to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("c"))
-      val a = c.select(col("user_id"), col("day"), col("event_type").as("type_a"), col("c").as("ca"))
-      val b = c.select(col("user_id"), col("day"), col("event_type").as("type_b"), col("c").as("cb"))
-      a.join(b, Seq("user_id", "day")).filter(col("type_a") < col("type_b"))
-        .groupBy(col("type_a"), col("type_b"))
-        .agg(sum(least(col("ca"), col("cb"))).as("w"), count(lit(1)).as("n_pairs"))
-    }),
-
-    "a8_dense_series" -> ((s, d) =>
-      RevisionOps.denseDailyCounts(t(s, d, "events"), "event_type", "ts",
-        "2024-01-01", "2024-01-31")),
-
-    "a9_vector_sum" -> ((s, d) =>
-      // unordered double sum, JUSTIFIED (r14 sweep): embedding cells
-      // carry full random mantissas, so the sum's distance to a 0.0005
-      // rounding boundary is uniform ~1e-4 while reorder error is
-      // ~√n·eps·Σ|e| ≈ 1e-13 — nine orders of margin, and the fixture
-      // surface is measured stable across 13 rounds of partition-order
-      // shuffles. Integer-scaling is impossible here without changing
-      // the operator's semantics (the data is not fixed-decimal).
-      t(s, d, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "e")))
-        .groupBy(col("label"), col("pos"))
-        .agg(round(sum(col("e")), 3).as("s"))),
-
-    "a10_tf_postings" -> ((s, d) =>
-      TermOps.tfPostings(t(s, d, "documents"), "doc_id", "text")
-        .filter(col("tf") >= 3)),
-
-    "a12_doc_length" -> ((s, d) =>
-      TermOps.docLengths(t(s, d, "documents"), "doc_id", "text")),
-
-    "a13_distinct_pairs" -> ((s, d) =>
-      t(s, d, "events").select(col("user_id"), col("event_type")).distinct()),
-
-    "a6_doc_vectors" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val dict = TermOps.dictionary(docs, "doc_id", "text", minDf = 5L)
-      TermOps.docVectors(docs, "doc_id", "text", dict)
-        .select(col("doc_id"), size(col("term_ids")).as("n_ids"))
-    }),
-
-    // ---- sorts / windows / time ----
-    "o1_sort_limit" -> ((s, d) =>
-      t(s, d, "events").orderBy(col("ts"), col("event_id")).limit(100)
-        .select(col("event_id"), date_format(col("ts"), tsFmt).as("ts_str"),
-          col("event_type"))),
-
-    "w1_lag_pairs" -> ((s, d) =>
-      RevisionOps.pairs(t(s, d, "events"), "user_id", "ts",
-          Seq("event_id", "value"), "event_id")
-        .select(col("event_id"), col("prev_event_id"),
-          round(col("value") - col("prev_value"), 2).as("value_delta"))),
-
-    "t1_roundup_hour" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(date_format(RevisionOps.roundUp(col("ts"), 3600L), "yyyy-MM-dd HH:mm:ss")
-          .as("bucket"))
-        .agg(count(lit(1)).as("n_events"))),
-
-    "t1_roundup_day_anchored" -> ((s, d) =>
-      // day buckets anchored at 01:00, the reference's day semantics
-      t(s, d, "events")
-        .groupBy(date_format(RevisionOps.roundUp(col("ts"), 86400L, 3600L),
-          "yyyy-MM-dd HH:mm:ss").as("bucket"))
-        .agg(count(lit(1)).as("n_events"))),
-
-    "t2_interval_bucket" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(RevisionOps.intervalBucket(col("ts"), 21600000L).as("bucket"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))),
-
-    // ---- date/format scalar functions ----
-    "f7_day_format" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(date_format(col("ts"), "yyyyMMdd").as("day"))
-        .agg(count(lit(1)).as("n_events"))),
-
-    "f9_elastic_time" -> ((s, d) =>
-      t(s, d, "events").groupBy(col("event_type"))
-        .agg(date_format(max(col("ts")), "yyyy-MM-dd'T'HH:mm:ss").as("last_elastic"))),
-
-    "f10_one_day_more" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(date_format(col("ts"), "yyyyMMdd").as("day"),
-          GraftFunctions.oneDayMore(date_format(col("ts"), "yyyyMMdd")).as("next_day"))
-        .agg(count(lit(1)).as("n_events"))),
-
-    "f15_json_field" -> ((s, d) =>
-      t(s, d, "events")
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-        .groupBy(col("event_type"))
-        .agg(sum(col("k")).as("sum_k"), round(avg(col("k")), 4).as("avg_k"))),
-
-    // ---- LLM-pipeline: dedup / similarity / text analysis / multimodal ----
-    "dedup_exact" -> ((s, d) =>
-      DedupOps.exactGroups(t(s, d, "documents"), "doc_id", "text")),
-
-    "dedup_minhash_cand" -> ((s, d) =>
-      DedupOps.verifiedNearDups(t(s, d, "documents"), "doc_id", "text",
-          threshold = 0.4)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))),
-
-    "dedup_simhash" -> ((s, d) =>
-      DedupOps.simhashCandidates(t(s, d, "documents"), "doc_id", "text")
-        .filter(col("hamming") <= 8)),
-
-    "dedup_jaccard" -> ((s, d) =>
-      DedupOps.jaccardPairs(t(s, d, "documents"), "doc_id", "text",
-        threshold = 0.5)),
-
-    "dedup_containment" -> ((s, d) => {
-      // planted boilerplate-wrapped supersets: every 97th doc reappears
-      // embedded in a wrapper page, so (doc, wrapper) pairs score ~1.0
-      // containment regardless of how small the doc is relative to the
-      // page — the asymmetric-dup case symmetric jaccard under-scores
-      val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-      val wrapped = docs.filter(col("doc_id") % 97 === 0)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"),
-          concat(lit("begin wrapper header "), col("text"),
-            lit(" end wrapper footer")).as("text"))
-      DedupOps.containmentPairs(docs.unionByName(wrapped), "doc_id", "text",
-        threshold = 0.9)
-    }),
-
-    "stats_profile" -> ((s, d) =>
-      TextAnalysisOps.corpusProfile(t(s, d, "documents"), "lang", "n_chars")),
-
-    "text_boilerplate" -> ((s, _) => {
-      // line-level boilerplate strip over an authored multi-line fixture:
-      // the banner lines repeat across docs (df >= 2) and must vanish,
-      // unique content lines survive in order
-      import s.implicits._
-      Seq(
-        (1L, "unique first line\nsubscribe to our newsletter\nreal content one"),
-        (2L, "subscribe to our newsletter\nreal content two\ncookie banner text"),
-        (3L, "cookie banner text\nreal content three"),
-        (4L, "subscribe to our newsletter\ncookie banner text"))
-        .toDF("doc_id", "text")
-        .transform(df =>
-          TextAnalysisOps.stripBoilerplate(df, "doc_id", "text", minDf = 2L))
-    }),
-
-    "text_contamination" -> ((s, d) => {
-      // decontamination scan: the two lowest-id documents act as the
-      // "benchmark" probe set; every corpus doc sharing an 8-gram with
-      // them (themselves + their near-dups) surfaces with its count
-      val docs = t(s, d, "documents")
-      TextAnalysisOps.contamination(docs, "doc_id", "text",
-        docs.filter(col("doc_id") <= 2), "doc_id", "text", n = 8)
-    }),
-
-    "dedup_components" -> ((s, d) =>
-      // near-dup clustering: pairwise jaccard output → connected
-      // components (component id = min doc id, the deterministic keeper).
-      // Pair generation via the lossless prefix filter (gated
-      // byte-identical to the plain inverted-index join by
-      // dedup_jaccard_prefix) — fat shingle buckets never fan out.
-      dedupLabels05(s, d)
-        .select(col("node").as("doc_id"), col("component"))),
-
-    "dedup_canonical" -> ((s, d) => {
-      // the per-document curation decision downstream of clustering:
-      // every doc → (canonical id, keep?) — filter(keep) IS the deduped
-      // corpus, the rest is the redirect map
-      val docs = t(s, d, "documents")
-      DedupOps.canonicalKeepList(docs, "doc_id", dedupLabels05(s, d))
-    }),
-
-    "sample_split_leakfree" -> ((s, d) => {
-      // leakage-free train/val/test split: a near-dup CLUSTER lands in
-      // exactly one split — membership hashes the cluster's canonical
-      // representative, not the doc, so a test doc can never have a
-      // near-duplicate in train (the classic eval-contamination bug a
-      // doc-keyed split like sample_split permits). Same 90/5/5 hash
-      // convention as sample_split; singletons hash their own id.
-      val docs = t(s, d, "documents")
-      val canon = DedupOps.canonicalKeepList(docs, "doc_id",
-        dedupLabels05(s, d))
-      val b = pmod(expr("fnv64(concat(cast(canonical as string), '#split'))")
-        .bitwiseAND(lit(4294967295L)), lit(100L))
-      canon.select(col("doc_id"), col("canonical"),
-        when(b < 90, "train").when(b < 95, "val").otherwise("test")
-          .as("split"))
-    }),
-
-    "dedup_minhash_eval" -> ((s, d) =>
-      // the approximation-cost gauge for the LSH text-dedup path (the
-      // ann_recall of the dedup family): exact-jaccard truth pairs vs
-      // the banded-MinHash pipeline's verified candidates — recall =
-      // the fraction of true near-dups the banding didn't lose. Both
-      // legs read ONE materialized tokenize pass + ONE materialized
-      // hashed-shingle pass (DedupOps.minhashRecallStats — the
-      // ann_recall shared-stage treatment, r11 item 3)
-      DedupOps.minhashRecallStats(t(s, d, "documents"), "doc_id", "text",
-        truthThreshold = 0.5, candThreshold = 0.4)),
-
-    "curate_e2e" -> ((s, d) => {
-      // the full curation decision table — every document gets exactly
-      // one verdict by fixed precedence: quality floor → benchmark
-      // contamination (integer threshold: 2·hits ≥ grams ⟺ frac ≥ 0.5,
-      // no rounding boundary) → exact-dup loser → near-dup non-
-      // canonical → train/val/test hash split. The one relation a
-      // downstream trainer consumes; each stage is the already-gated
-      // operator, composed
-      // the document relation feeds four gate subtrees (quality base,
-      // contamination, exact dedup, near-dup CC) — materialize ONE
-      // tokenize pass alongside the scan and let every stage read it
-      // (the FromToks seams; r12: tokenizing per stage cost ~1s at
-      // sf0.1). LAZY checkpoint: the builder is sequential — the first
-      // CC-round job materializes the blocks, nothing races
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"), col("text"),
-          TermOps.tokens(col("text")).as("toks"))
-        .localCheckpoint(false)
-      val base = docs.select(col("doc_id"),
-        (size(col("toks")) < 20).as("low_q"),
-        pmod(expr("fnv64(concat(cast(doc_id as string), '#split'))")
-          .bitwiseAND(lit(4294967295L)), lit(100L)).as("b"))
-      val contam = TextAnalysisOps.overlapFractionFromToks(docs, "doc_id",
-          "toks", docs.filter(col("doc_id") % 97 === 0), "toks", n = 8)
-        .select(col("doc_id"),
-          (col("n_hits") * 2 >= col("n_grams")).as("contam"))
-      val exactKeep = DedupOps.exactGroups(docs, "doc_id", "text")
-        .select(col("keep_id").as("doc_id"), lit(true).as("e_keep"))
-      // near-dup verdicts read the process-shared jaccard-0.5 CC frame
-      // (dedupLabels05), exactly as dedup_canonical / sample_split_
-      // leakfree do: the prefix filter is LOSSLESS, so the pair set is
-      // identical by construction to curateNearDupPairs(docs) — sharing
-      // moves cost only, never results (r15 judge item 2; the rebuilt
-      // fixpoint was the suite's #1 row at 6.6 s clean-probe). The
-      // curateNearDupPairs seam stays (Round12Spec pins its plan; it
-      // remains the documented stage of the composition).
-      val nearKeep = DedupOps.canonicalKeepList(docs, "doc_id",
-          dedupLabels05(s, d))
-        .select(col("doc_id"), col("keep").as("n_keep"))
-      base
-        .join(contam, Seq("doc_id"), "left_outer")
-        .join(exactKeep, Seq("doc_id"), "left_outer")
-        .join(nearKeep, Seq("doc_id"))
-        .select(col("doc_id"),
-          when(col("low_q"), "low_quality")
-            .when(coalesce(col("contam"), lit(false)), "contaminated")
-            .when(col("e_keep").isNull, "dup_exact")
-            .when(!col("n_keep"), "dup_near")
-            .when(col("b") < 90, "train")
-            .when(col("b") < 95, "val")
-            .otherwise("test").as("decision"))
-    }),
-
-    "dedup_jaccard_prefix" -> ((s, d) =>
-      // lossless prefix-filtered all-pairs join (Bayardo et al.
-      // WWW'07): byte-identical result to dedup_jaccard — the oracle
-      // IS the full-join SQL — but candidates come from joining only
-      // each doc's rarest shingles, so the fat inverted-index buckets
-      // never fan out
-      DedupOps.jaccardPairsPrefix(t(s, d, "documents"), "doc_id", "text",
-        threshold = 0.5)),
-
-    "dedup_cluster_profile" -> ((s, d) =>
-      // dedup QA scorecard: the duplicate-cluster size distribution —
-      // (cluster size → #clusters, #docs bound up in them). The number
-      // a curation run eyeballs before trusting a dedup pass: a fat
-      // tail here means a boilerplate template is gluing the corpus
-      // together. O(dup docs) input, O(distinct sizes) output.
-      dedupLabels05(s, d)
-        .groupBy(col("component")).agg(count(lit(1)).as("sz"))
-        .groupBy(col("sz")).agg(count(lit(1)).as("n_clusters"))
-        .select(col("sz"), col("n_clusters"),
-          (col("sz") * col("n_clusters")).as("n_docs_in"))),
-
-    "dedup_incremental" -> ((s, d) => {
-      // snapshot-over-snapshot exact dedup: even-id docs play the
-      // already-indexed corpus, odd-id docs the new crawl. The organic
-      // corpus has no exact dups, so planted rows (ids above the corpus
-      // range, same convention as dedup_embedding) exercise all three
-      // outcomes: dup-of-index, dup-within-snapshot, genuinely new
-      import s.implicits._
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val planted = Seq(
-        (9000001L, "planted incremental duplicate alpha alpha beta"),
-        (9000002L, "planted incremental duplicate alpha alpha beta"),
-        (9000003L, "planted incremental duplicate gamma delta epsilon"),
-        (9000004L, "planted incremental duplicate gamma delta epsilon"),
-        (9000005L, "planted incremental unique zeta eta theta"))
-        .toDF("doc_id", "text")
-      val indexed = docs.filter(col("doc_id") % 2 === 0)
-        .unionByName(planted.filter(col("doc_id") === 9000001L))
-      val newer = docs.filter(col("doc_id") % 2 === 1)
-        .unionByName(planted.filter(col("doc_id") > 9000001L))
-      DedupOps.incrementalExact(newer, "doc_id", "text", indexed)
-    }),
-
-    "pack_sequences" -> ((s, d) =>
-      // per-shard token-budget sequence packing (training-data prep);
-      // shard = source so packing parallelizes by shard, never a global
-      // single-partition window
-      PackOps.packSequences(t(s, d, "documents"), "doc_id", "text",
-        "source", budget = 2048)),
-
-    "pack_chunks" -> ((s, d) =>
-      // sliding-window chunking (RAG / long-context windows): 64-token
-      // windows advancing by 48 (16-token overlap), tail covered by the
-      // start grid; pure map + generator — zero exchanges (PlanSpec pin)
-      PackOps.chunkWindows(t(s, d, "documents"), "doc_id", "text",
-        winTokens = 64, strideTokens = 48)),
-
-    "dedup_spans" -> ((s, d) =>
-      // exact-substring-dedup signal (Lee et al. 2021) at 8-token
-      // window granularity: per-doc duplicated-window fraction
-      DedupOps.duplicatedSpans(t(s, d, "documents"), "doc_id", "text",
-        w = 8, minCount = 2L)),
-
-    "dedup_substring" -> ((s, d) =>
-      // the same Lee et al. signal at FULL resolution via the sorted
-      // suffix-array form: per position, the LCP with its sorted
-      // neighbor = the longest exactly-duplicated substring starting
-      // there (dedup_spans' fixed windows approximate this). Suffixes
-      // travel as 64-bit token-hash arrays and sort within leading-
-      // 4-gram groups — the sharded-suffix-array layout — so nothing
-      // ever compares across a posting boundary.
-      // See DedupOps.suffixDupSpans.
-      DedupOps.suffixDupSpans(t(s, d, "documents"), "doc_id", "text",
-        cap = 24, minSpan = 8)),
-
-    "dedup_substring_approx" -> ((s, d) =>
-      // the tier BETWEEN dedup_spans (exact fixed windows) and
-      // dedup_substring (exact suffix array): strided 16-token windows
-      // sketched by bottom-1 MinHash over their 4-shingles — windows
-      // sharing the sketch collide with probability = shingle Jaccard,
-      // so NEAR-duplicate spans surface too. One 8-byte key per
-      // window through the corpus-wide pass; the 100 TB default the
-      // exact SA row calibrates. See DedupOps.windowMinhashSpans.
-      DedupOps.windowMinhashSpans(t(s, d, "documents"), "doc_id", "text",
-        w = 16, stride = 8, shingleK = 4, minCount = 2L)),
-
-    "dedup_substring_eval" -> ((s, d) => {
-      // the calibration made concrete: doc-level agreement between the
-      // exact SA tier and the approx window-MinHash tier at the
-      // standard hot-doc verdict (duplicated mass ≥ half — integer
-      // cross-multiply, the curate_e2e convention). A deployment runs
-      // this on a sample to license the cheap tier corpus-wide; the
-      // four-cell confusion table is the whole decision input. Inner
-      // join: both tiers must cover the doc (approx needs ≥ 16 tokens).
-      // The verdict frame is process-shared with the per-source rollup
-      // (substringVerdicts); the tier generators keep their own gates.
-      substringVerdicts(s, d)
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("ehot") && col("ahot"), 1L).otherwise(0L))
-            .as("n_both_hot"),
-          sum(when(col("ehot") && !col("ahot"), 1L).otherwise(0L))
-            .as("n_exact_only"),
-          sum(when(!col("ehot") && col("ahot"), 1L).otherwise(0L))
-            .as("n_approx_only"))
-        .withColumn("agreement", round(
-          (col("n_docs") - col("n_exact_only") - col("n_approx_only"))
-            .cast("double") / col("n_docs"), 4))
-    }),
-
-    "dedup_substring_src_eval" -> ((s, d) =>
-      // the tier calibration rolled up PER SOURCE: which feed's
-      // duplicated mass the cheap tier is missing (exact-only) or
-      // over-flagging (approx-only) — the table that decides where the
-      // exact SA tier's budget goes at 100 TB (run it only on feeds
-      // whose exact-only mass is material; trust the 8-byte sketch on
-      // the rest). Reads the same process-shared verdict frame as the
-      // corpus-wide confusion row, plus one (doc_id, source) join.
-      substringVerdicts(s, d)
-        .join(t(s, d, "documents").select(col("doc_id"), col("source")),
-          Seq("doc_id"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("ehot") && col("ahot"), 1L).otherwise(0L))
-            .as("n_both_hot"),
-          sum(when(col("ehot") && !col("ahot"), 1L).otherwise(0L))
-            .as("n_exact_only"),
-          sum(when(!col("ehot") && col("ahot"), 1L).otherwise(0L))
-            .as("n_approx_only"))
-        .withColumn("agreement", round(
-          (col("n_docs") - col("n_exact_only") - col("n_approx_only"))
-            .cast("double") / col("n_docs"), 4))),
-
-    "dedup_paragraph" -> ((s, d) => {
-      import s.implicits._
-      // line-level corpus dedup + in-order reconstruction (the C4/CCNet
-      // boilerplate rule: a line survives only at its globally-first
-      // occurrence). Organic docs are single-line — the exact-dedup
-      // degenerate case; the planted multi-line docs prove first-wins
-      // election across AND within docs, ordered reconstruction, and a
-      // doc losing every line (n_kept = 0)
-      val planted = Seq(
-        (9000001L, "alpha beta\ncommon boilerplate line\ngamma"),
-        (9000002L, "common boilerplate line\ndelta\ncommon boilerplate line"),
-        (9000003L, "common boilerplate line")).toDF("doc_id", "text")
-      DedupOps.dedupLines(
-        t(s, d, "documents").select(col("doc_id"), col("text"))
-          .unionByName(planted), "doc_id", "text")
-    }),
-
-    "pack_shards" -> ((s, d) =>
-      // balanced training-shard manifests: snake (boustrophedon) deal
-      // over the size-descending EXACT rank — the LPT approximation a
-      // distributed engine can run; the rank comes from the compressed-
-      // histogram two-phase (PackOps.exactRank), so no global-sort
-      // window ever owns the corpus. Per-shard totals are the artifact
-      PackOps.snakeShards(t(s, d, "documents"), "doc_id", "n_chars",
-          nShards = 8)
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("size")).as("sum_chars"),
-          min(col("size")).as("min_chars"),
-          max(col("size")).as("max_chars"))),
-
-    "sample_curriculum" -> ((s, d) => {
-      // curriculum schedule: ntile(4) phases over (n_chars, doc_id)
-      // difficulty order with SQL-standard tile sizing, computed from
-      // the distributed exact rank instead of a single-task ntile
-      // window; the per-phase language mix is the designer's audit
-      val docs = t(s, d, "documents")
-      PackOps.curriculumPhases(docs, "doc_id", "n_chars", phases = 4)
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(col("phase"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("difficulty")).as("min_chars"),
-          max(col("difficulty")).as("max_chars"))
-    }),
-
-    "search_rbo" -> ((s, d) => {
-      // rank-biased overlap (Webber et al., TOIS 2010) between the BM25
-      // lexical top-20 and the dense cosine top-20 — the retriever-
-      // agreement audit run before trusting either as the other's
-      // teacher. A common doc enters at depth g = max(rank_a, rank_b);
-      // truncated RBO_.9 = Σ_{d=1..20} 0.1·0.9^(d-1)·|A_d∩B_d|/d via a
-      // 20-row depth table (non-equi join against literals, never the
-      // corpus). Both legs are this repo's own gated operators
-      val text = bm25Leg(s, d)
-        .withColumn("text_rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("int"))
-        .select(col("doc_id"), col("text_rank"))
-      val vec = vecLeg(s, d)
-        .select(col("nbr_id").as("doc_id"), col("rank").as("vec_rank"))
-      TermOps.rankOverlapByDepth(text, vec, "doc_id",
-          "text_rank", "vec_rank", depth = 20)
-        .agg(
-          round(coalesce(sum(lit(0.1) * pow(lit(0.9), col("d") - 1) *
-            col("a_d") / col("d")), lit(0.0)), 6).as("rbo"),
-          coalesce(max(when(col("d") === 10, col("a_d"))), lit(0L))
-            .as("overlap_at_10"),
-          coalesce(max(when(col("d") === 20, col("a_d"))), lit(0L))
-            .as("overlap_at_20"))
-    }),
-
-    "stats_gini" -> ((s, d) => {
-      // Gini concentration of per-user event counts — the "is my corpus
-      // owned by a few heavy keys" balance audit. G = 2·Σ i·cᵢ/(n·Σc) −
-      // (n+1)/n over ascending-sorted counts: integer sums until ONE
-      // final division, and the rank comes from PackOps.exactRank so
-      // even the O(keys) aggregate never needs a global-sort window
-      val counts = t(s, d, "events").groupBy(col("user_id"))
-        .agg(count(lit(1)).as("c"))
-      PackOps.exactRank(counts, "c", "user_id")
-        .agg(count(lit(1)).as("n_users"), sum(col("c")).as("total"),
-          sum(col("rank") * col("c")).as("ic"))
-        .select(col("n_users"), col("total"),
-          round(lit(2.0) * col("ic") / (col("n_users") * col("total")) -
-            (col("n_users") + 1).cast("double") / col("n_users"), 6)
-            .as("gini"))
-    }),
-
-    "stats_qnorm" -> ((s, d) => {
-      // cross-source quantile calibration: a quality threshold tuned on
-      // one source transfers only if "top 10% of src3" means the same
-      // thing globally — pr_src is the within-source percent_rank
-      // (partitioned window, scale-safe), pr_global comes from the
-      // distributed exactRank, and delta is the calibration gap a
-      // curation gate must correct for
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"), col("n_chars"), col("source"))
-      val n = docs.count()
-      val wSrc = Window.partitionBy(col("source"))
-        .orderBy(col("n_chars"), col("doc_id"))
-      PackOps.exactRank(docs, "n_chars", "doc_id")
-        .withColumn("pr_src", percent_rank().over(wSrc))
-        .select(col("doc_id"), col("source"),
-          round(col("pr_src"), 6).as("pr_src"),
-          round((col("rank") - 1).cast("double") / lit((n - 1).toDouble), 6)
-            .as("pr_global"))
-        .withColumn("delta", round(col("pr_src") - col("pr_global"), 6))
-    }),
-
-    "stats_bootstrap" -> ((s, d) => {
-      // Poisson bootstrap (the distributed resampling scheme: per-doc
-      // resample weights ~ Poisson(1), no global sampling state) for
-      // the mean doc length, 32 resamples. Weights come from an integer
-      // inverse-CDF: hash32(doc_id·32+b+1) against floor(CDF·2³²)
-      // thresholds — all-integer branch, engine-exact; Σw and Σw·x are
-      // integers, mean_b is one double division. One (b)-keyed exchange
-      // after map-side combine; B multiplies map work, not shuffle keys
-      val T = Seq(1580030168L, 3160060337L, 3950075421L, 4213413783L,
-        4279248373L, 4292415291L)
-      t(s, d, "documents").select(col("doc_id"), col("n_chars"))
-        .select(col("doc_id"), col("n_chars"),
-          explode(sequence(lit(0), lit(31))).as("b"))
-        .withColumn("h",
-          SimilarityOps.hash32Col(col("doc_id") * 32 + col("b") + 1))
-        .withColumn("w",
-          when(col("h") < T(0), 0L).when(col("h") < T(1), 1L)
-            .when(col("h") < T(2), 2L).when(col("h") < T(3), 3L)
-            .when(col("h") < T(4), 4L).when(col("h") < T(5), 5L)
-            .otherwise(6L))
-        .groupBy(col("b"))
-        .agg(sum(col("w")).as("sum_w"),
-          sum(col("w") * col("n_chars")).as("sum_wx"))
-        .select(col("b"), col("sum_w"), col("sum_wx"),
-          round(col("sum_wx").cast("double") / col("sum_w"), 6)
-            .as("mean_b"))
-    }),
-
-    "stats_divergence" -> ((s, d) =>
-      // corpus-slice divergence: KL/JS between English and the rest
-      // over the DSIR bucket convention — the audit that quantifies how
-      // non-representative a slice is before mixture reweighting
-      TextAnalysisOps.unigramDivergence(t(s, d, "documents"), "text",
-        col("lang") === "en", dim = 64)),
-
-    "pack_e2e" -> ((s, d) => {
-      // end-to-end corpus → training-shards composition: token counts →
-      // snake-balanced shards (by token size) → per-shard contiguous
-      // 2048-token sequence packing — each stage is its own gated
-      // operator; this pins the composed artifact a shard writer emits
-      val tc = t(s, d, "documents")
-        .select(col("doc_id"),
-          TextAnalysisOps.wsTokenCount(col("text")).cast("long").as("nt"))
-      val sh = PackOps.snakeShards(tc, "doc_id", "nt", nShards = 8)
-      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      sh.withColumn("cb", coalesce(sum(col("size")).over(w), lit(0L)))
-        .withColumn("seq", expr("cb div 2048"))
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("size")).as("sum_tokens"),
-          (max(col("seq")) + 1).as("n_seqs"))
-    }),
-
-    "search_prf" -> ((s, d) => {
-      // pseudo-relevance feedback (RM1-lite query expansion): the top-10
-      // BM25 docs of the seed query act as the relevance model, their
-      // term frequencies aggregate (seed terms excluded), and the top-5
-      // terms are the expansion — the classic two-pass retrieval loop,
-      // costing one postings pass + one tf aggregation over 10 docs
-      val docs = t(s, d, "documents")
-      val qTerms = Seq("scan", "join", "merge")
-      val top = TermOps.bm25Search(docs, "doc_id", "text", qTerms, k = 10)
-        .select(col("doc_id"))
-      // join BEFORE tokenizing: only the 10 feedback docs explode (the
-      // BM25 pass is the only full-corpus pass this query needs)
-      TermOps.termFrequencies(docs.join(top, Seq("doc_id")),
-          "doc_id", "text")
-        .filter(!col("term").isin(qTerms: _*))
-        .groupBy("term")
-        .agg(sum(col("tf")).as("tf_sum"), count(lit(1)).as("n_docs"))
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("tf_sum").desc, col("term"))).cast("int"))
-        .filter(col("rank") <= 5)
-        .select(col("rank"), col("term"), col("tf_sum"), col("n_docs"))
-    }),
-
-    "search_mmr" -> ((s, d) => {
-      // Maximal Marginal Relevance re-ranking (λ = 1/2): greedy
-      // diversity selection over the brute-force top-20 of query vector
-      // 0 — each of 5 unrolled steps scores the remaining candidates
-      // λ·rel − (1−λ)·max-sim-to-selected and takes the argmax (ties to
-      // the smaller id). The steps run on the CHECKPOINTED 20-row
-      // candidate set and its 380-cell pairwise-sim table — model-scale
-      // relations, so the sequential greedy loop costs five tiny joins,
-      // never a corpus pass. Completes the retrieval family's diversity
-      // axis (RRF fuses, RBO compares, nDCG grades, MMR diversifies).
-      // r18 optimization (guide §1/§2.4): the join-per-step formulation
-      // ran 28 one-task jobs (JobProbe: 28 jobs / 28 stages / 28 tasks,
-      // 0 MB shuffled) — pure scheduling floor on a 20-row relation.
-      // The greedy loop now runs as unrolled expressions over ONE
-      // collected 20-row array: same doubles (the cosine kernel and the
-      // 0.5·rel − 0.5·msim arithmetic are unchanged; max-over-selected
-      // becomes greatest() of the identical values), same (score DESC,
-      // id ASC) argmax tie-break encoded in the fold, so the selection
-      // replays bit-identically — the corpus pass (bruteForceTopK) is
-      // the only distributed work left.
-      val emb = embeddings(s, d)
-      val q = emb.filter(col("vec_id") === 0L)
-      val cand = SimilarityOps.bruteForceTopK(emb, q, k = 20)
-        .select(col("nbr_id").as("id"), col("sim").as("rel"))
-        .join(emb.select(col("vec_id").as("id"), col("embedding")),
-          Seq("id"))
-      // one row holding the candidate set, id-ascending (ids unique)
-      val folded = cand.agg(array_sort(collect_list(
-        struct(col("id"), col("rel"), col("embedding")))).as("arr"))
-      val negInf = lit(Double.NegativeInfinity)
-      def pick(scoreOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-               taken: Seq[org.apache.spark.sql.Column])
-          : org.apache.spark.sql.Column = {
-        val remaining =
-          if (taken.isEmpty) col("arr")
-          else filter(col("arr"), x =>
-            taken.map(t => x.getField("id") =!= t.getField("id"))
-              .reduce(_ && _))
-        aggregate(remaining,
-          struct(lit(-1L).as("id"), negInf.as("score"),
-            lit(0.0d).as("rel"),
-            array().cast("array<double>").as("embedding")),
-          (acc, x) => {
-            val sc = scoreOf(x)
-            when(sc > acc.getField("score") ||
-                (sc === acc.getField("score") &&
-                  x.getField("id") < acc.getField("id")),
-              struct(x.getField("id").as("id"), sc.as("score"),
-                x.getField("rel").as("rel"),
-                x.getField("embedding").as("embedding")))
-              .otherwise(acc)
-          })
-      }
-      // step 1: argmax rel; steps 2..5: argmax 0.5·rel − 0.5·max sim
-      // to the already-selected set (ties to the smaller id, as the
-      // orderBy(score DESC, id) limit 1 it replaces). Later steps
-      // reference the s1..s(k−1) COLUMNS so the expression tree stays
-      // linear in the step count.
-      val withSel = (1 to 5).foldLeft(folded) { case (df, step) =>
-        val taken = (1 until step).map(i => col(s"s$i"))
-        val c =
-          if (step == 1) pick(x => x.getField("rel"), taken)
-          else pick(x => {
-            val sims = taken.map(t => SimilarityOps.cosine(
-              x.getField("embedding"), t.getField("embedding")))
-            val msim = if (sims.size == 1) sims.head else greatest(sims: _*)
-            lit(0.5) * x.getField("rel") - lit(0.5) * msim
-          }, taken)
-        df.withColumn(s"s$step", c)
-      }
-      withSel
-        .select(explode(array((1 to 5).map { i =>
-          struct(lit(i).as("step"), col(s"s$i.id").as("id"),
-            col(s"s$i.rel").as("rel"))
-        }: _*)).as("sel"))
-        .select(col("sel.step").as("step"), col("sel.id").as("id"),
-          round(col("sel.rel"), 6).as("rel"))
-    }),
-
-    "search_ndcg" -> ((s, d) => {
-      // nDCG@20 of the BM25 ranking against dense-top-20 membership as
-      // binary relevance — completes the retrieval-eval trio (RRF fuses,
-      // RBO measures agreement, nDCG grades one list by the other).
-      // DCG sums rel/log2(rank+1) over the 20-row BM25 list; IDCG is
-      // the all-relevant prefix — corpus only appears in the two legs
-      val text = bm25Leg(s, d)
-        .withColumn("text_rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("int"))
-        .select(col("doc_id"), col("text_rank"))
-      val vec = vecLeg(s, d)
-        .select(col("nbr_id").as("doc_id"), col("rank").as("vec_rank"))
-      val ln2 = log(lit(2.0))
-      val dcg = text.join(vec, Seq("doc_id"), "left_outer")
-        .agg(sum(when(col("vec_rank").isNotNull, 1L).otherwise(0L))
-            .as("n_rel"),
-          sum(when(col("vec_rank").isNotNull,
-            lit(1.0) / (log(col("text_rank") + 1) / ln2))
-            .otherwise(lit(0.0))).as("dcg0"))
-      val idcg = s.range(1, 21)
-        .agg(sum(lit(1.0) / (log(col("id") + 1) / ln2)).as("idcg0"))
-      dcg.crossJoin(idcg).select(col("n_rel"),
-        round(col("dcg0"), 6).as("dcg"), round(col("idcg0"), 6).as("idcg"),
-        round(col("dcg0") / col("idcg0"), 6).as("ndcg"))
-    }),
-
-    "graph_cc_incremental" -> ((s, d) => {
-      // warm-start clustering maintenance: CC over 2/3 of the near-dup
-      // pairs becomes the PREVIOUS labeling; the remaining 1/3 arrive
-      // as the new batch and fold in via incrementalComponents. The
-      // oracle replays from-scratch CC over ALL pairs — equivalence of
-      // incremental and full recompute IS the gate
-      // the pair set feeds both the warm labeling and the new batch —
-      // the process-shared materialization (jaccardPairs05) serves both
-      val pairs = jaccardPairs05(s, d)
-      val fresh = pairs.filter(pmod(col("id_a") + col("id_b"), lit(3)) === 0)
-      // the warm labeling itself is ALSO a pure function of the corpus
-      // (CC fixpoint over the deterministic 2/3 split), so it
-      // checkpoints once per process (r17 judge item 6) — a production
-      // maintainer reads yesterday's labels from a snapshot, it does
-      // not re-derive them per refresh. The gated semantics — the
-      // INCREMENTAL fold equals a from-scratch recompute — still runs
-      // fresh on every execution
-      val warmLabels = sharedFrame(s, d, "ccwarm")(
-        DedupOps.connectedComponents(
-          pairs.filter(pmod(col("id_a") + col("id_b"), lit(3)) =!= 0)))
-      DedupOps.incrementalComponents(warmLabels, fresh)
-        .select(col("node").as("doc_id"), col("component"))
-    }),
-
-    "ann_mrr" -> ((s, d) => {
-      // MRR@5 of the IVF path against brute-force truth: for each of
-      // the 10 standard query vectors, the reciprocal rank of the TRUE
-      // nearest neighbor inside the IVF top-5 (0 when cell pruning
-      // evicted it) — the rank-position quality metric recall@k cannot
-      // see. Both legs are the gated operators with their exact params
-      val emb = embeddings(s, d)
-      val q = emb.filter(col("vec_id") < 10)
-      val truth = SimilarityOps.bruteForceTopK(emb, q, k = 1)
-        .select(col("query_id"), col("nbr_id"))
-      val ivf = SimilarityOps.ivfTopK(emb, q, k = 5)
-        .select(col("query_id"), col("nbr_id"), col("rank"))
-      // unordered double sum, JUSTIFIED (r14 sweep, covers the
-      // reciprocal-rank family incl. search_rrf): ≤10 terms drawn from
-      // {1, 1/2, …, 1/5}, reorder error < 1e-14 against ≥1e-7 measured
-      // boundary margins at all 3 SFs — seven orders of headroom.
-      truth.join(ivf, Seq("query_id", "nbr_id"), "left_outer")
-        .agg(count(lit(1)).as("n_queries"),
-          sum(when(col("rank").isNotNull, 1L).otherwise(0L)).as("n_hit"),
-          round(sum(coalesce(lit(1.0) / col("rank"), lit(0.0))) /
-            count(lit(1)), 6).as("mrr"))
-    }),
-
-    "t25_backtest" -> ((s, d) => {
-      // walk-forward 1-step-ahead backtest of the Holt smoother — the
-      // EVAL row the forecasting family lacked (does the model actually
-      // predict?): at every step the PRE-update state forecasts the
-      // incoming day, the absolute error accumulates INSIDE the same
-      // ordered fold (state widens to [l, b, Σ|err|, n] — the t14
-      // list-state discipline), and MAE = Σ|err|/n per event_type.
-      // Daily sums are exact integer cents, so both engines fold
-      // identical IEEE sequences.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(sum(col("cents")).as("c"))
-      daily.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_days"),
-          array_sort(collect_list(struct(col("day"), col("c")))).as("a"))
-        .withColumn("xs",
-          expr("transform(a, p -> CAST(p.c AS DOUBLE) / 100.0D)"))
-        .withColumn("st", expr(
-          """aggregate(slice(xs, 2, size(xs) - 1),
-            |  array(element_at(xs, 1), 0.0D, 0.0D, 0.0D),
-            |  (acc, x) -> array(
-            |    0.5D * x + 0.5D * (element_at(acc, 1) + element_at(acc, 2)),
-            |    0.25D * ((0.5D * x + 0.5D * (element_at(acc, 1) +
-            |      element_at(acc, 2))) - element_at(acc, 1))
-            |      + 0.75D * element_at(acc, 2),
-            |    element_at(acc, 3) +
-            |      abs(x - (element_at(acc, 1) + element_at(acc, 2))),
-            |    element_at(acc, 4) + 1.0D))""".stripMargin))
-        .select(col("event_type"), col("n_days"),
-          round(element_at(col("st"), 3) / element_at(col("st"), 4), 6)
-            .as("mae"),
-          round(element_at(col("st"), 1) + element_at(col("st"), 2), 6)
-            .as("forecast"))
-    }),
-
-    "t14_holt" -> ((s, d) => {
-      // Holt's linear (level+trend) smoothing per user over the
-      // day-aggregated value series, α=1/2 β=1/4 (binary fractions).
-      // Daily sums are exact INTEGER cents, so the fold starts from
-      // identical doubles on any engine; the recurrence is one ordered
-      // fold over each user's day-sorted array (state O(1), arrays
-      // bounded by a user's active days); forecast = level + trend
-      val daily = t(s, d, "events")
-        .select(col("user_id"),
-          expr("CAST(ts AS LONG) div 86400").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy(col("user_id"), col("day"))
-        .agg(sum(col("cents")).as("c"))
-      daily.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_days"),
-          array_sort(collect_list(struct(col("day"), col("c")))).as("a"))
-        .withColumn("xs", expr("transform(a, p -> CAST(p.c AS DOUBLE) / 100.0D)"))
-        .withColumn("st", expr(
-          """aggregate(slice(xs, 2, size(xs) - 1),
-            |  named_struct('l', element_at(xs, 1), 'b', CAST(0.0 AS DOUBLE)),
-            |  (acc, x) -> named_struct(
-            |    'l', 0.5D * x + 0.5D * (acc.l + acc.b),
-            |    'b', 0.25D * ((0.5D * x + 0.5D * (acc.l + acc.b)) - acc.l)
-            |         + 0.75D * acc.b))""".stripMargin))
-        .select(col("user_id"), col("n_days"),
-          round(col("st.l"), 6).as("level"),
-          round(col("st.b"), 6).as("trend"),
-          round(col("st.l") + col("st.b"), 6).as("forecast"))
-    }),
-
-    "curate_card" -> ((s, d) => {
-      // the one-row corpus health card a dataset release ships with:
-      // size, source/language diversity (entropy over the lang mix),
-      // exact-duplicate rate, mean length, and PII incidence — every
-      // number derived by this engine's own gated kernels
-      val docs = t(s, d, "documents")
-      val base = docs.agg(
-        count(lit(1)).as("n_docs"),
-        countDistinct(col("source")).as("n_sources"),
-        countDistinct(col("lang")).as("n_langs"),
-        countDistinct(md5(col("text"))).as("n_distinct"),
-        sum(col("n_chars")).as("sum_chars"),
-        sum(when(col("text").rlike(
-            "https?://[^\\s]+|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}|[0-9]{7,}"),
-          1L).otherwise(0L)).as("n_pii"))
-      val ent = t(s, d, "documents").groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"))
-        .agg(sum(col("n")).as("nn"),
-          array_sort(collect_list(struct(col("lang"), col("n")))).as("arr"))
-        .select(round(aggregate(col("arr"), lit(0.0d), (acc, x) =>
-          acc - (x.getField("n").cast("double") / col("nn").cast("double")) *
-            log(x.getField("n").cast("double") / col("nn").cast("double"))),
-          6).as("lang_entropy"))
-      base.crossJoin(ent).select(col("n_docs"), col("n_sources"),
-        col("n_langs"),
-        round(lit(1.0) - col("n_distinct").cast("double") / col("n_docs"), 6)
-          .as("dup_rate"),
-        round(col("sum_chars").cast("double") / col("n_docs"), 6)
-          .as("mean_chars"),
-        round(col("n_pii").cast("double") / col("n_docs"), 6).as("pii_rate"),
-        col("lang_entropy"))
-    }),
-
-    "stats_spearman" -> ((s, d) => {
-      // monotone drift audit: Spearman rank correlation between event
-      // VALUE and event TIME per event_type — "is this metric trending"
-      // without assuming linearity. Ranks are doubled average ranks
-      // (2·rank + ties − 1: integral even under ties; Pearson is
-      // scale-invariant so ρ is unchanged), so every sum is an exact
-      // integer and the only doubles are in the one final expression,
-      // written operand-for-operand the same on both engines. Plan
-      // shape: ONE event_type exchange feeds both rank windows (tsec is
-      // near-unique, so the PackOps.avgRank2 histogram would BE the
-      // corpus here — measured 3.3× on the ×10 replica vs 1.3× for the
-      // direct partitioned windows; avgRank2 stays the right tool for
-      // ties-heavy value domains), then one group-agg.
-      val ev = t(s, d, "events").select(col("event_type"),
-        expr("CAST(ts AS LONG)").as("tsec"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      def r2(v: String) =
-        lit(2L) * rank().over(
-          Window.partitionBy("event_type").orderBy(col(v))) +
-          count(lit(1)).over(Window.partitionBy("event_type", v)) - 1
-      ev.withColumn("r2x", r2("tsec")).withColumn("r2y", r2("cents"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("r2x")).as("sx"), sum(col("r2y")).as("sy"),
-          sum(col("r2x") * col("r2y")).as("sxy"),
-          sum(col("r2x") * col("r2x")).as("sxx"),
-          sum(col("r2y") * col("r2y")).as("syy"))
-        .select(col("event_type"), col("n"),
-          round((col("n").cast("double") * col("sxy") -
-              col("sx").cast("double") * col("sy")) /
-            (sqrt(col("n").cast("double") * col("sxx") -
-                col("sx").cast("double") * col("sx")) *
-              sqrt(col("n").cast("double") * col("syy") -
-                col("sy").cast("double") * col("sy"))), 6).as("spearman"))
-    }),
-
-    "t15_acf" -> ((s, d) => {
-      // autocorrelation of the DAILY event-count series per event_type at
-      // lags 1..7 — the periodicity detector behind the t11 seasonal
-      // profile (a weekly cycle shows as an acf peak at k=7). Series is
-      // the dense day grid (missing days count 0, as a counting process
-      // must); the standard estimator r_k = Σ(x_t−x̄)(x_{t+k}−x̄)/Σ(x−x̄)²
-      // is cleared of the rational x̄ by scaling num and den by n², so
-      // every aggregate is an exact integer and the one double division
-      // replays bit-identically. Lag pairs come from an equi-join of the
-      // grid against itself on (type, day+k) — dense grid ⇒ exactly the
-      // t ≤ n−k pairs — never a window over the series.
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"), explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-        .localCheckpoint() // reused by the base stats and the lag pairs
-      val base = grid.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("c").as("s"),
-          sum(col("c") * col("c")).as("q"))
-      val pairs = grid
-        .select(col("event_type"), col("day"), col("c"),
-          explode(sequence(lit(1L), lit(7L))).as("k"))
-        .withColumn("day2", col("day") + col("k"))
-        .join(grid.select(col("event_type"), col("day").as("day2"),
-          col("c").as("c2")), Seq("event_type", "day2"))
-        .groupBy("event_type", "k")
-        .agg(sum(col("c") * col("c2")).as("sxy"),
-          sum(col("c")).as("sh"), sum(col("c2")).as("st"))
-      pairs.join(base, "event_type")
-        .withColumn("num", (col("n") * col("n")).cast("double") * col("sxy") -
-          col("n").cast("double") * col("s") * (col("sh") + col("st")) +
-          (col("n") - col("k")).cast("double") * col("s") * col("s"))
-        .withColumn("den", (col("n") * col("n")).cast("double") * col("q") -
-          col("n").cast("double") * col("s") * col("s"))
-        .filter(col("den") > 0)
-        .select(col("event_type"), col("k"), col("n"),
-          round(col("num") / col("den"), 6).as("acf"))
-    }),
-
-    "t16_decay" -> ((s, d) => {
-      // recency-weighted engagement per user: Σ cents·2^(20−age_days)
-      // over a 20-day horizon with a 1-day half-life — the freshness
-      // score feeds retention triage. Weights are integral POWERS OF TWO
-      // (pow(2, k) is exact for integer k), so the weighted sum is one
-      // exact LONG and the final /2^20 division is the only double. The
-      // "now" anchor is the corpus max day: a one-row broadcast, not a
-      // driver round-trip.
-      val ev = t(s, d, "events").select(col("user_id"),
-        expr("CAST(ts AS LONG) div 86400").as("day"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      val now = ev.agg(max("day").as("now_day"))
-      ev.crossJoin(broadcast(now))
-        .withColumn("age", col("now_day") - col("day"))
-        .filter(col("age") <= 20)
-        .withColumn("w", expr("CAST(pow(2, 20 - age) AS BIGINT)"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_recent"),
-          sum(col("cents") * col("w")).as("raw"))
-        .select(col("user_id"), col("n_recent"),
-          round(col("raw").cast("double") / lit(1048576.0), 6).as("decayed"))
-    }),
-
-    "stats_analyze" -> ((s, d) => {
-      // ANALYZE-style one-pass column statistics — rows, nulls, exact
-      // NDV, min/max per column: the CBO inputs every engine collects
-      // before planning. ONE aggregation pass (the four distinct counts
-      // share a single Expand+shuffle); the per-column long format is an
-      // explode over the already-aggregated single row, so no second
-      // scan and no per-column job.
-      val ev = t(s, d, "events").select(col("event_id"), col("user_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-        col("event_type"))
-      def nulls(c: String) = sum(when(col(c).isNull, 1L).otherwise(0L))
-      val one = ev.agg(count(lit(1)).as("n_rows"),
-        nulls("event_id").as("u1"), countDistinct(col("event_id")).as("d1"),
-        min("event_id").as("mi1"), max("event_id").as("ma1"),
-        nulls("user_id").as("u2"), countDistinct(col("user_id")).as("d2"),
-        min("user_id").as("mi2"), max("user_id").as("ma2"),
-        nulls("cents").as("u3"), countDistinct(col("cents")).as("d3"),
-        min("cents").as("mi3"), max("cents").as("ma3"),
-        nulls("event_type").as("u4"), countDistinct(col("event_type")).as("d4"))
-      one.select(col("n_rows"), explode(array(
-          struct(lit("event_id").as("col_name"), col("u1").as("n_nulls"),
-            col("d1").as("ndv"), col("mi1").as("min_v"), col("ma1").as("max_v")),
-          struct(lit("user_id").as("col_name"), col("u2").as("n_nulls"),
-            col("d2").as("ndv"), col("mi2").as("min_v"), col("ma2").as("max_v")),
-          struct(lit("cents").as("col_name"), col("u3").as("n_nulls"),
-            col("d3").as("ndv"), col("mi3").as("min_v"), col("ma3").as("max_v")),
-          struct(lit("event_type").as("col_name"), col("u4").as("n_nulls"),
-            col("d4").as("ndv"), lit(null).cast("long").as("min_v"),
-            lit(null).cast("long").as("max_v")))).as("c"))
-        .select(col("c.col_name").as("col_name"), col("n_rows"),
-          col("c.n_nulls").as("n_nulls"), col("c.ndv").as("ndv"),
-          col("c.min_v").as("min_v"), col("c.max_v").as("max_v"))
-    }),
-
-    "text_ttr" -> ((s, d) =>
-      // lexical diversity per doc: type-token ratio off the whitespace
-      // analyzer (F17 seam) — the vocabulary-collapse signal that
-      // catches template/generated text the repetition scorer's fixed
-      // n-gram window can miss. Pure map: tokenize, distinct within the
-      // row's own array, two sizes and one division — zero exchanges.
-      t(s, d, "documents")
-        .select(col("doc_id"), TermOps.tokens(col("text")).as("tok"))
-        .select(col("doc_id"), size(col("tok")).cast("long").as("n_tokens"),
-          size(array_distinct(col("tok"))).cast("long").as("n_types"))
-        .filter(col("n_tokens") > 0)
-        .withColumn("ttr",
-          round(col("n_types").cast("double") / col("n_tokens"), 6))),
-
-    "embed_drift" -> ((s, d) => {
-      // per-label embedding centroid vs the global centroid — the
-      // encoder-drift audit run before trusting cosine across slices
-      // (a label whose centroid points away from the corpus mean needs
-      // its own calibration). One (label, pos)-keyed exchange builds the
-      // per-label per-dim sums; the GLOBAL centroid re-aggregates those
-      // O(labels × 64) sums — the corpus is scanned once. Output is one
-      // row per label: n, centroid L2 norm, cosine to the global mean.
-      val e = t(s, d, "embeddings")
-        .select(col("label"),
-          posexplode(col("embedding").cast("array<double>"))
-            .as(Seq("pos", "x")))
-      val byLabel = e.groupBy("label", "pos")
-        .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-        .withColumn("mu", col("sx") / col("n"))
-        .localCheckpoint() // feeds both the global re-agg and the cosine
-      val global = byLabel.groupBy("pos")
-        .agg((sum(col("sx")) / sum(col("n"))).as("gmu"))
-      byLabel.join(global, "pos")
-        .groupBy("label")
-        .agg(max("n").as("n_vecs"),
-          sum(col("mu") * col("gmu")).as("dot"),
-          sum(col("mu") * col("mu")).as("nl"),
-          sum(col("gmu") * col("gmu")).as("ng"))
-        .select(col("label"), col("n_vecs"),
-          round(sqrt(col("nl")), 6).as("centroid_norm"),
-          round(col("dot") / (sqrt(col("nl")) * sqrt(col("ng"))), 6)
-            .as("cos_to_global"))
-    }),
-
-    "embed_outliers" -> ((s, d) =>
-      // per-vector cosine to its OWN label centroid, flagged below 0.0
-      // (this corpus' cosines span [-0.3, 0.47], so a textbook 0.5
-      // would flag everything) — the mislabel/off-distribution audit
-      // beside embed_drift's label-level view; centroid is one
-      // (label, dim) exchange, the per-vector pass is a broadcast-join
-      // pure map
-      SimilarityOps.centroidOutliers(t(s, d, "embeddings"),
-        "vec_id", "label", "embedding", threshold = 0.0)),
-
-    "embed_knn_graph" -> ((s, d) =>
-      // corpus-wide 5-NN graph through the IVF cell prune — the graph
-      // construction primitive under semantic dedup / label prop /
-      // HNSW seeding; both sides key on the cell, so the join is a
-      // SHUFFLE join (never a corpus-sized broadcast). See
-      // SimilarityOps.knnGraph.
-      SimilarityOps.knnGraph(embeddings(s, d),
-        k = 5)
-        .select(col("vec_id"), col("nbr_id"),
-          round(col("sim"), 4).as("sim"), col("rank"))),
-
-    "embed_ood" -> ((s, d) => {
-      // out-of-distribution score per vector: 1 − mean cosine to its
-      // 5 nearest neighbors (the kNN-distance outlier detector — the
-      // standard OOD gate on training-data embeddings; a vector far
-      // from everything is a candidate junk/contamination row).
-      // Means fold in RANK order over the round-4 sims both engines
-      // already agree on (the embed_knn_graph surface), so the whole
-      // statistic replays exactly.
-      val knn = SimilarityOps.knnGraph(embeddings(s, d),
-        k = 5)
-        .select(col("vec_id"), col("rank"), round(col("sim"), 4).as("sim"))
-      knn.groupBy("vec_id")
-        .agg(count(lit(1)).as("n_nbrs"),
-          array_sort(collect_list(struct(col("rank"), col("sim"))))
-            .as("arr"))
-        .withColumn("s", aggregate(col("arr"), lit(0.0d),
-          (a, x) => a + x.getField("sim")))
-        .select(col("vec_id"), col("n_nbrs"),
-          round(col("s") / col("n_nbrs"), 6).as("avg_sim"),
-          round(lit(1.0) - col("s") / col("n_nbrs"), 6).as("ood"))
-    }),
-
-    "embed_knn_graph_lsh" -> ((s, d) =>
-      // the LINEAR-cost kNN-graph escape leg (r16 ×100 probes: the IVF
-      // legs' in-cell pair volume is N²/cells at fixed 16 cells — 294×
-      // wall at ×100 — and N^1.5 at ⌈√N⌉ cells — 207×): occupancy-
-      // targeted LSH grows the plane count with the corpus (integer
-      // search, oracle-replayed) so bucket size stays ~128 and
-      // candidates stay corpus-linear. The production default at
-      // 100 TB; the IVF rows stay as the exactness/tuning gates. See
-      // SimilarityOps.knnGraphLshAuto and the SCALE.md switchover rule.
-      SimilarityOps.knnGraphLshAuto(embeddings(s, d),
-        k = 5)
-        .select(col("query_id"), col("nbr_id"),
-          round(col("sim"), 4).as("sim"), col("rank"))),
-
-    "embed_knn_recall_lsh" -> ((s, d) => {
-      // recall@5 of the linear LSH graph leg against the brute truth —
-      // the audit that LICENSES embed_knn_graph_lsh as the 100 TB
-      // default (a leg is only a default when its recall is measured,
-      // not assumed). Truth is brute by definition (the ann_recall
-      // harness-by-construction pattern); a deployment audits on a
-      // sample. Both legs rank on the UNROUNDED sim with the nbr_id
-      // tie-break, so the pair-set join replays exactly.
-      // corpus cast + corpus-wide brute truth are the process-shared
-      // embF64/bruteTop5 frames (built once, also serving ann_recall)
-      val emb = embF64(s, d)
-      val truth = bruteTop5(s, d)
-        .select(col("query_id"), col("nbr_id"))
-      val got = SimilarityOps.knnGraphLshAuto(emb, k = 5)
-        .select(col("query_id"), col("nbr_id"), lit(1L).as("hit"))
-      truth.join(got, Seq("query_id", "nbr_id"), "left_outer")
-        .agg(count(lit(1)).as("n_truth"),
-          coalesce(sum("hit"), lit(0L)).as("n_hit"))
-        .select(col("n_truth"), col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_truth"), 4)
-            .as("recall"))
-    }),
-
-    "embed_knn_graph_auto" -> ((s, d) =>
-      // the scale-shaped default for the k-NN graph family: nCentroids
-      // = ⌈√N⌉ from one cheap count (SimilarityOps.knnGraphAuto), so
-      // cell-join candidates grow ~n^1.5 instead of the fixed-16 n²
-      // law (13×/9.6× at the r13 ×10 probes). The oracle recomputes
-      // ⌈√N⌉ in SQL — the law itself is part of the gate; the fixed-16
-      // row stays as the tuning-law gate.
-      SimilarityOps.knnGraphAuto(embeddings(s, d),
-        k = 5)
-        .select(col("vec_id"), col("nbr_id"),
-          round(col("sim"), 4).as("sim"), col("rank"))),
-
-    "embed_ood_auto" -> ((s, d) => {
-      // embed_ood on the ⌈√N⌉-cell graph — the OOD gate as it would
-      // actually run at corpus scale (same rank-ordered fold over
-      // round-4 sims both engines agree on)
-      val knn = SimilarityOps.knnGraphAuto(embeddings(s, d),
-        k = 5)
-        .select(col("vec_id"), col("rank"), round(col("sim"), 4).as("sim"))
-      knn.groupBy("vec_id")
-        .agg(count(lit(1)).as("n_nbrs"),
-          array_sort(collect_list(struct(col("rank"), col("sim"))))
-            .as("arr"))
-        .withColumn("s", aggregate(col("arr"), lit(0.0d),
-          (a, x) => a + x.getField("sim")))
-        .select(col("vec_id"), col("n_nbrs"),
-          round(col("s") / col("n_nbrs"), 6).as("avg_sim"),
-          round(lit(1.0) - col("s") / col("n_nbrs"), 6).as("ood"))
-    }),
-
-    "embed_knn_symmetry" -> ((s, d) => {
-      // k-NN graph health: per-rank mutual-neighbor rate (is A's
-      // neighbor's neighbor A?) — the standard diagnostic for ANN
-      // graph quality (a low mutual rate at rank 1 means the cell
-      // prune is truncating true neighborhoods; HNSW/NSW builders
-      // monitor exactly this before trusting a graph). One self-join
-      // of the ⌈√N⌉-cell auto graph on the reversed edge key; the
-      // graph is built once and both sides read the checkpoint.
-      val knn = SimilarityOps.knnGraphAuto(embeddings(s, d),
-        k = 5)
-        .select(col("vec_id"), col("nbr_id"), col("rank"))
-        .localCheckpoint() // two consumers: edge list + reversed probe
-      val rev = knn.select(col("nbr_id").as("vec_id"),
-        col("vec_id").as("nbr_id"), lit(1L).as("m"))
-      knn.join(rev, Seq("vec_id", "nbr_id"), "left_outer")
-        .groupBy("rank")
-        .agg(count(lit(1)).as("n_edges"),
-          sum(coalesce(col("m"), lit(0L))).as("n_mutual"))
-        .select(col("rank"), col("n_edges"), col("n_mutual"),
-          round(col("n_mutual").cast("double") / col("n_edges"), 4)
-            .as("mutual_frac"))
-    }),
-
-    "embed_pq_distortion" -> ((s, d) =>
-      // per-subspace PQ reconstruction MSE — the quantization-error
-      // scorecard behind ann_pq_topk's recall number (which subspace
-      // is burning the code budget). Deterministic training replayed
-      // by the oracle; m-row output
-      SimilarityOps.pqDistortion(embeddings(s, d))
-        .select(col("s").cast("long").as("s"), col("n_vecs"),
-          round(col("mse"), 6).as("mse"))),
-
-    "embed_matryoshka" -> ((s, d) => {
-      // Matryoshka-truncation audit (Kusupati et al. 2022): recall@5 of
-      // prefix-dim brute search against the full-64-dim truth — the
-      // serve-at-lower-dim go/no-go before shipping truncated indexes.
-      // One materialized corpus read feeds the truth and all three
-      // prefix paths (lazy: single action); slicing is a pure map, each
-      // path is the brute broadcast-join shape.
-      val emb = embeddings(s, d)
-        .localCheckpoint(false)
-      def top5(dims: Option[Int]) = {
-        val e = dims.map(n => emb.select(col("vec_id"),
-          slice(col("embedding"), 1, n).as("embedding"))).getOrElse(emb)
-        SimilarityOps.bruteForceTopK(e, e.filter(col("vec_id") < 10), k = 5)
-          .select(col("query_id"), col("nbr_id"))
-      }
-      val truth = top5(None).localCheckpoint(false)
-      Seq(8, 16, 32).map { n =>
-          top5(Some(n)).join(truth, Seq("query_id", "nbr_id"))
-            .agg(count(lit(1)).as("n_hits"))
-            .select(lit(n).as("dims"), col("n_hits"))
-        }.reduce(_ unionAll _)
-        .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
-        .select(col("dims"), col("n_hits"), col("n_truth"),
-          round(col("n_hits").cast("double") / col("n_truth"), 4).as("recall"))
-    }),
-
-    "graph_clustering" -> ((s, d) => {
-      // local clustering coefficient over the part co-order graph (same
-      // deterministic %4 node subsample as the census) — the
-      // community-structure audit per node: how much of each node's
-      // neighborhood is itself connected. Triangles are found once each
-      // by the degree-ordered orientation and credit all three corners
-      // via a 3-row explode; coeff = 2T/(d(d−1)) is one double division
-      // over exact integers.
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-      GraphOps.clusteringCoefficient(edges)
-    }),
-
-    "graph_kcore" -> ((s, d) => {
-      // 4-round 3-core peel of the part co-order graph — the dense-core
-      // extractor (spam/bot rings, tight co-citation cores). Bounded-
-      // round semantics like the two-round HITS: engine and oracle both
-      // run EXACTLY 4 "drop degree<3 nodes and their edges" passes, so
-      // the result is deterministic whether or not the peel converged;
-      // each round is one degree count + two semi-joins, edge list
-      // checkpointed so plan depth stays O(1).
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-      GraphOps.kcore(edges, k = 3, rounds = 4)
-    }),
-
-    "graph_ktruss" -> ((s, d) => {
-      // 2-round 4-truss peel of the part co-order graph: the EDGE-level
-      // dense-community extractor (edges in < k−2 triangles drop) that
-      // survives hub nodes a k-core keeps — the spam-ring / tight-
-      // co-citation cut one notch stricter than graph_kcore. Bounded-
-      // round semantics: engine and oracle both run exactly 2 passes;
-      // triangles enumerate once each via the degree-oriented wedge
-      // join (the graph_triangles orientation).
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-      GraphOps.ktruss(edges, k = 4, rounds = 2)
-    }),
-
-    "st_topk" -> ((s, _) => {
-      // continuous per-window heavy hitters: the streaming windowed
-      // aggregation materializes (window, key, count) — bounded state,
-      // same operator as st_windowed_counts — and the SERVING read ranks
-      // within each finalized window (the lambda read side; ranking
-      // windows aren't streamable, so the top-k lives where it belongs:
-      // on the materialized view, partitioned by window).
-      StreamTrace.run[Event](s, "st_topk", "complete")(src =>
-        EventStreamOps.windowedCounts(src.toDF(), "ts", "user_id",
-          "10 minutes", "5 minutes"))(
-        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
-          Event(1, wall("2024-01-01 00:02:00"), 1.0),
-          Event(1, wall("2024-01-01 00:03:00"), 1.0),
-          Event(2, wall("2024-01-01 00:04:00"), 1.0),
-          Event(2, wall("2024-01-01 00:05:00"), 1.0),
-          Event(3, wall("2024-01-01 00:06:00"), 1.0),
-          Event(2, wall("2024-01-01 00:11:00"), 1.0),
-          Event(2, wall("2024-01-01 00:12:00"), 1.0),
-          Event(3, wall("2024-01-01 00:13:00"), 1.0)))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("window_start"))
-            .orderBy(col("n_events").desc, col("user_id").asc)).cast("long"))
-        .filter(col("rk") <= 2)
-        .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
-            .as("w_start"),
-          col("user_id"), col("n_events"), col("rk"))
-    }),
-
-    "stats_welch" -> ((s, d) => {
-      // Welch's t per source vs the REST of the corpus (the A/B quality
-      // audit behind "did source X drift"): means and variances from
-      // exact integer (n, Σx, Σx²) co-moments — the totals RE-AGGREGATE
-      // the O(sources) per-source moments and the rest-side moments are
-      // SUBTRACTED from the one-row broadcast total, so the corpus is
-      // scanned and aggregated exactly once. The t statistic is one
-      // mirrored double expression; n²-products are cast to double
-      // first (mirrored) so no LONG overflow at any SF. The Σx²
-      // accumulator is DECIMAL(38,0): per-row squares fit a long, but
-      // their corpus sum passes 2^63 near 4·10^11 docs — DuckDB's
-      // sum(BIGINT) is already HUGEINT, so the decimal sum mirrors it
-      // exactly and the downstream double products see the same value.
-      val docs = t(s, d, "documents").select(col("source"), col("n_chars"))
-      val bySrc = docs.groupBy("source").agg(count(lit(1)).as("n1"),
-        sum("n_chars").as("s1"),
-        sum((col("n_chars") * col("n_chars")).cast("decimal(38,0)"))
-          .as("q1"))
-        .localCheckpoint() // two consumers (totals re-agg + the t join)
-      val tot = bySrc.agg(sum("n1").as("nt"), sum("s1").as("st"),
-        sum("q1").as("qt"))
-      bySrc.crossJoin(broadcast(tot))
-        .withColumn("n2", col("nt") - col("n1"))
-        .withColumn("s2", col("st") - col("s1"))
-        .withColumn("q2", col("qt") - col("q1"))
-        .filter(col("n1") > 1 && col("n2") > 1)
-        .withColumn("m1", col("s1").cast("double") / col("n1"))
-        .withColumn("m2", col("s2").cast("double") / col("n2"))
-        .withColumn("v1", (col("n1").cast("double") * col("q1") -
-            col("s1").cast("double") * col("s1")) /
-          (col("n1").cast("double") * (col("n1") - 1)))
-        .withColumn("v2", (col("n2").cast("double") * col("q2") -
-            col("s2").cast("double") * col("s2")) /
-          (col("n2").cast("double") * (col("n2") - 1)))
-        .select(col("source"), col("n1").as("n"),
-          round(col("m1"), 6).as("mean_chars"),
-          round((col("m1") - col("m2")) /
-            sqrt(col("v1") / col("n1") + col("v2") / col("n2")), 6)
-            .as("welch_t"))
-    }),
-
-    "t30_granger" -> ((s, d) => {
-      // Granger causality (p = 1) between the click and purchase daily
-      // series — "do clicks predict tomorrow's purchases beyond what
-      // purchases predict themselves?", the forecasting family's
-      // causal-screening row. Restricted model y_t ~ y_{t−1} vs
-      // unrestricted y_t ~ y_{t−1} + x_{t−1}; F = (RSS_r − RSS_u)·
-      // (n−3)/RSS_u from the closed-form 2-regressor OLS over exact
-      // integer co-moments on the dense gap-filled day grid (the
-      // t17_ols conventions; the n-scaled centered co-moments are
-      // mirrored double products). Both directions in one grid pass;
-      // degenerate series (zero determinant / zero residual) yield
-      // null, never NaN. Grid fanout is bounded by the day span.
-      val daily = t(s, d, "events")
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("day")
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
-            .as("ck"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("pu"))
-      val grid = daily.agg(min("day").as("d0"), max("day").as("d1"))
-        .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("day"), "left_outer")
-        .select(col("day"), coalesce(col("ck"), lit(0L)).as("ck"),
-          coalesce(col("pu"), lit(0L)).as("pu"))
-      val w = Window.orderBy(col("day"))
-      val lagged = grid
-        .withColumn("ck1", lag(col("ck"), 1).over(w))
-        .withColumn("pu1", lag(col("pu"), 1).over(w))
-        .filter(col("ck1").isNotNull)
-        .localCheckpoint() // two consumers (both directions)
-      def dir(y: String, u: String, v: String, label: String) = {
-        def a(sp: String, sq: String, spq: String) =
-          col("n").cast("double") * col(spq) -
-            col(sp).cast("double") * col(sq)
-        lagged.agg(count(lit(1)).as("n"),
-            sum(col(u)).as("su"), sum(col(v)).as("sv"),
-            sum(col(y)).as("sy"),
-            sum(col(u) * col(u)).as("suu"), sum(col(v) * col(v)).as("svv"),
-            sum(col(u) * col(v)).as("suv"), sum(col(u) * col(y)).as("suy"),
-            sum(col(v) * col(y)).as("svy"), sum(col(y) * col(y)).as("syy"))
-          .withColumn("auu", a("su", "su", "suu"))
-          .withColumn("avv", a("sv", "sv", "svv"))
-          .withColumn("auv", a("su", "sv", "suv"))
-          .withColumn("auy", a("su", "sy", "suy"))
-          .withColumn("avy", a("sv", "sy", "svy"))
-          .withColumn("ayy", a("sy", "sy", "syy"))
-          .withColumn("det",
-            col("auu") * col("avv") - col("auv") * col("auv"))
-          .withColumn("b", when(col("det") =!= 0.0, (col("auy") * col("avv") -
-            col("avy") * col("auv")) / col("det")))
-          .withColumn("c", when(col("det") =!= 0.0, (col("avy") * col("auu") -
-            col("auy") * col("auv")) / col("det")))
-          .withColumn("qr",
-            col("ayy") - col("auy") * col("auy") / col("auu"))
-          .withColumn("qu",
-            col("ayy") - col("b") * col("auy") - col("c") * col("avy"))
-          .withColumn("f", when(col("det") =!= 0.0 && col("qu") > 0.0,
-            (col("qr") - col("qu")) *
-              (col("n").cast("double") - lit(3.0)) / col("qu")))
-          .select(lit(label).as("direction"), col("n"),
-            round(col("b"), 6).as("ar_coef"),
-            round(col("c"), 6).as("causal_coef"),
-            round(col("f"), 6).as("f_stat"),
-            (col("f") > lit(4.0)).as("granger"))
-      }
-      dir("pu", "pu1", "ck1", "click->purchase")
-        .unionByName(dir("ck", "ck1", "pu1", "purchase->click"))
-    }),
-
-    "t17_ols" -> ((s, d) => {
-      // OLS linear trend of the daily event-count series per event_type
-      // (slope/intercept/R² — the model-free complement of t14_holt's
-      // recursive smoother): x = day index on the dense grid, y = count,
-      // every co-moment an exact integer, the three outputs mirrored
-      // double expressions over them. Grid fanout is bounded by the day
-      // span; the only corpus exchange is the (type, day) count.
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"), col("d0"),
-          explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .select(col("event_type"), (col("day") - col("d0")).as("x"),
-          coalesce(col("c"), lit(0L)).as("y"))
-      grid.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y") * col("y")).as("syy"))
-        .withColumn("dx", col("n").cast("double") * col("sxx") -
-          col("sx").cast("double") * col("sx"))
-        .withColumn("dy", col("n").cast("double") * col("syy") -
-          col("sy").cast("double") * col("sy"))
-        .withColumn("cv", col("n").cast("double") * col("sxy") -
-          col("sx").cast("double") * col("sy"))
-        .filter(col("dx") > 0 && col("dy") > 0)
-        .select(col("event_type"), col("n"),
-          round(col("cv") / col("dx"), 6).as("slope"),
-          round((col("sy").cast("double") - col("cv") / col("dx") * col("sx"))
-            / col("n"), 6).as("intercept"),
-          round(col("cv") * col("cv") / (col("dx") * col("dy")), 6).as("r2"))
-    }),
-
-    "k22_dynamic_overwrite" -> ((s, d) => {
-      // dynamic partition overwrite — the Hive/Delta replaceWhere ingest
-      // pattern: a full partitioned write, then a second write in
-      // DYNAMIC overwrite mode that replaces ONLY the partitions present
-      // in the new batch (here: 'en' re-scored +1000 chars); untouched
-      // partitions keep their original files. The read-back aggregate
-      // proves exactly one partition changed.
-      val dir = Scratch.dir("k22")
-        .toString + "/t"
-      // n_chars cast up front: the overwrite batch adds a LONG literal,
-      // and a source that stores int32 would otherwise leave the
-      // directory with mixed int/long files (bit us on the ×10 replica)
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"), col("lang"),
-          col("n_chars").cast("long").as("n_chars"))
-      docs.write.partitionBy("lang").parquet(dir)
-      docs.filter(col("lang") === "en")
-        .withColumn("n_chars", col("n_chars") + 1000L)
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("lang").parquet(dir)
-      s.read.parquet(dir).groupBy("lang")
-        .agg(count(lit(1)).as("n"), sum("n_chars").as("sum_chars"))
-    }),
-
-    "ann_rerank" -> ((s, d) => {
-      // two-stage ANN serving (the FAISS/DiskANN refine pattern): the
-      // compressed PQ/ADC stage shortlists k=20 candidates per query —
-      // approximate SCORES, cheap scan — then the exact-cosine re-rank
-      // touches only the 10×20 candidate pairs' true vectors and emits
-      // top-5. Quantization error moves the final ordering; the re-rank
-      // fixes ordering while keeping the scan compressed. Both candidate
-      // join sides broadcast (O(queries·k) rows).
-      val emb = embeddings(s, d)
-      val q = emb.filter(col("vec_id") < 10)
-      val cand = SimilarityOps.pqTopK(emb, q, k = 20,
-          model = Some(pqModel(s, d)))
-        .select(col("query_id"), col("nbr_id"))
-      val scored = emb
-        .select(col("vec_id").as("nbr_id"), col("embedding").as("nbr_emb"))
-        .join(broadcast(cand), "nbr_id")
-        .join(broadcast(q.select(col("vec_id").as("query_id"),
-          col("embedding").as("q_emb"))), "query_id")
-        .withColumn("sim", SimilarityOps.cosine(col("q_emb"), col("nbr_emb")))
-      scored.withColumn("rank", row_number().over(
-          Window.partitionBy("query_id")
-            .orderBy(col("sim").desc, col("nbr_id").asc)).cast("int"))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("nbr_id"),
-          round(col("sim"), 4).as("sim"), col("rank"))
-    }),
-
-    "layout_depth" -> ((s, d) => {
-      // clustering-depth audit of a file layout (the metric Delta's
-      // OPTIMIZE ZORDER reports): per-file [min,max] key intervals from
-      // the manifest, then a sweep line over the O(2·files) boundary
-      // points — avg/max number of files a point predicate must read.
-      // Depth 1 = perfectly clustered; ≈ n_files = hash-scattered. Both
-      // layouts are DETERMINISTIC so the oracle replays them: 'range' =
-      // value-proportional split on the key domain (rank-free — an
-      // exactRank bucket here would histogram the near-unique event_id,
-      // i.e. re-sort the corpus in one task; the value split is a pure
-      // map after a one-row max broadcast), 'hash' = hash32 % 8 (the
-      // anti-pattern). The sweep window runs over metadata-scale rows
-      // (2 per file), same tier as layout_range_bounds.
-      val ev = t(s, d, "events").select(col("event_id"))
-      val mx = ev.agg(max("event_id").as("mx"))
-      val clustered = ev.crossJoin(broadcast(mx))
-        .select(lit("range").as("layout"),
-          expr("CAST(event_id * 8 div (mx + 1) AS BIGINT)").as("f"),
-          col("event_id"))
-      val hashed = ev.select(lit("hash").as("layout"),
-        pmod(SimilarityOps.hash32Col(col("event_id")), lit(8L)).as("f"),
-        col("event_id"))
-      val mf = clustered.unionByName(hashed)
-        .groupBy("layout", "f")
-        .agg(min("event_id").as("mn"), max("event_id").as("mx"))
-        .localCheckpoint() // O(files) rows, two consumers (mn + mx points)
-      val pts = mf.select(col("layout"), col("mn").as("t"), lit(1L).as("delta"))
-        .unionByName(mf.select(col("layout"), (col("mx") + 1).as("t"),
-          lit(-1L).as("delta")))
-        .groupBy("layout", "t").agg(sum("delta").as("delta"))
-      val w = Window.partitionBy("layout").orderBy("t")
-      pts.withColumn("depth", sum(col("delta")).over(w))
-        .withColumn("len", lead(col("t"), 1).over(w) - col("t"))
-        .filter(col("len").isNotNull && col("depth") > 0)
-        .groupBy("layout")
-        .agg(max(col("depth")).as("max_depth"),
-          round(sum(col("depth") * col("len")).cast("double") /
-            sum(col("len")), 6).as("avg_depth"))
-    }),
-
-    "t18_decompose" -> ((s, d) => {
-      // STL-lite weekly decomposition of the daily count series per
-      // event_type: trend = 7-day centered moving average, seasonal =
-      // per-weekday mean of the detrended series, strength = 1 −
-      // SS_within/SS_total over the weekday grouping (variance explained
-      // by seasonality). Everything rides ×420 integers (420 = lcm of
-      // the edge-window sizes 4..7, so the moving average is INTEGRAL:
-      // trend420 = windowSum · 420/windowCount) — the only doubles are
-      // mirrored final divisions, and the 7-term weekday fold is an
-      // ORDERED array fold, so cross-engine sums can't reorder.
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"), explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-      val wMa = Window.partitionBy("event_type").orderBy("day")
-        .rowsBetween(-3, 3)
-      val det = grid
-        .withColumn("trend420",
-          sum(col("c")).over(wMa) * (lit(420L) / count(lit(1)).over(wMa))
-            .cast("long"))
-        .withColumn("det", lit(420L) * col("c") - col("trend420"))
-        .withColumn("weekday", pmod(col("day") + 4, lit(7)))
-      val byW = det.groupBy("event_type", "weekday")
-        .agg(count(lit(1)).as("n_days"), sum("det").as("s_num"))
-        .localCheckpoint() // two consumers: the seasonal rows + strength
-      val strength = byW
-        .groupBy("event_type")
-        .agg(array_sort(collect_list(struct(col("weekday"), col("s_num"),
-          col("n_days")))).as("arr"))
-        .join(det.groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum("det").as("sd"),
-            sum(col("det") * col("det")).as("sdd")), "event_type")
-        .select(col("event_type"),
-          aggregate(col("arr"), lit(0.0d), (acc, x) =>
-            acc + x.getField("s_num").cast("double") *
-              x.getField("s_num") / x.getField("n_days")).as("ssb"),
-          (col("sdd").cast("double") -
-            col("sd").cast("double") * col("sd") / col("n")).as("sst"))
-        .filter(col("sst") > 0)
-        .select(col("event_type"),
-          round(greatest(lit(0.0),
-            lit(1.0) - (col("sst") - col("ssb")) / col("sst")), 6)
-            .as("strength"))
-      byW.join(strength, "event_type")
-        .select(col("event_type"), col("weekday"), col("n_days"),
-          round(col("s_num").cast("double") / (col("n_days") * 420), 6)
-            .as("seasonal"),
-          col("strength"))
-    }),
-
-    "k23_bloom_skip" -> ((s, d) => {
-      // file-level bloom skipping for POINT lookups on a key zone maps
-      // cannot help with: user_id is scattered across every file group,
-      // so every file's [min,max] contains every probe — but a per-group
-      // bloom position set over user_id (2 seed-suffixed FNV hashes into
-      // 4096 bits, the j7 family) qualifies only the groups that may
-      // contain the key. The data lands hive-partitioned by file group,
-      // the `_bloom` index is a TABLE beside it, and the lookup is a
-      // PLAIN FILTERED READ through IndexedFileIndex — the FileIndex
-      // consults `_bloom` at planning time and lists only qualified
-      // partition directories (pinned in PlanSpec/Round11OpsSpec); the
-      // n_files_qualified audit leg replays the qualification as a
-      // metadata-scale join. Probe −999 is absent: its row pins that
-      // misses cost only false-positive file reads, never wrong rows.
-      import s.implicits._
-      val dir = Scratch.dir("k23")
-        .toString + "/t"
-      val ev = t(s, d, "events").select(col("event_id"), col("user_id"))
-        .withColumn("g", pmod(SimilarityOps.hash32Col(col("event_id")), lit(8L)))
-      ev.write.partitionBy("g").parquet(dir)
-      def pos(key: org.apache.spark.sql.Column, i: Int) =
-        PruneOps.bloomPos(key, i, 4096)
-      ev.select(col("g"),
-          explode(array(pos(col("user_id"), 0), pos(col("user_id"), 1))).as("p"))
-        .distinct()
-        .write.mode("overwrite").parquet(s"$dir/_bloom")
-      val bloom = s.read.parquet(s"$dir/_bloom")
-      val pr = Seq(1L, 2L, -999L).toDF("probe_user")
-        .select(col("probe_user"), pos(col("probe_user"), 0).as("p0"),
-          pos(col("probe_user"), 1).as("p1"))
-      val qual = pr
-        .join(bloom.select(col("g"), col("p").as("p0")), Seq("p0"))
-        .join(bloom.select(col("g"), col("p").as("p1")), Seq("g", "p1"))
-        .select(col("probe_user"), col("g"))
-      val hits = graft.sources.IndexedFileIndex.read(s, dir, "user_id")
-        .filter(col("user_id").isin(1L, 2L, -999L)) // bloom-pruned listing
-        .groupBy(col("user_id").as("probe_user"))
-        .agg(count(lit(1)).as("n_rows"), sum("event_id").as("sum_id"))
-      pr.select("probe_user")
-        .join(qual.groupBy("probe_user")
-          .agg(count(lit(1)).as("n_files_qualified")),
-          Seq("probe_user"), "left_outer")
-        .join(hits, Seq("probe_user"), "left_outer")
-        .select(col("probe_user"),
-          coalesce(col("n_files_qualified"), lit(0L)).as("n_files_qualified"),
-          coalesce(col("n_rows"), lit(0L)).as("n_rows"),
-          coalesce(col("sum_id"), lit(0L)).as("sum_id"))
-    }),
-
-    "t19_holt_winters" -> ((s, d) => {
-      // additive Holt-Winters (level + trend + weekly seasonal) per
-      // event_type over the dense daily count series — the seasonal
-      // extension of t14's Holt smoother. α=1/2, β=1/4, γ=1/4 (binary
-      // fractions); state is a 9-element DOUBLE list [l, b, s₁..s₇]
-      // folded once over each type's day-sorted array (s₁ is always the
-      // seasonal due next; each step shifts it out and appends the
-      // updated value) — O(1) state, types smooth in parallel, and the
-      // LIST state is exactly the shape DuckDB's list_reduce folds
-      // correctly (the t14 struct-state caveat).
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"), explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-      grid.groupBy("event_type")
-        .agg(count(lit(1)).as("n_days"),
-          array_sort(collect_list(struct(col("day"), col("c")))).as("a"))
-        .withColumn("xs", expr("transform(a, p -> CAST(p.c AS DOUBLE))"))
-        .withColumn("st", expr(
-          """aggregate(slice(xs, 2, size(xs) - 1),
-            |  concat(array(element_at(xs, 1), CAST(0.0 AS DOUBLE)),
-            |         array_repeat(CAST(0.0 AS DOUBLE), 7)),
-            |  (acc, y) -> concat(
-            |    array(
-            |      0.5D * (y - element_at(acc, 3))
-            |        + 0.5D * (element_at(acc, 1) + element_at(acc, 2)),
-            |      0.25D * ((0.5D * (y - element_at(acc, 3))
-            |          + 0.5D * (element_at(acc, 1) + element_at(acc, 2)))
-            |        - element_at(acc, 1)) + 0.75D * element_at(acc, 2)),
-            |    slice(acc, 4, 6),
-            |    array(0.25D * (y - (0.5D * (y - element_at(acc, 3))
-            |        + 0.5D * (element_at(acc, 1) + element_at(acc, 2))))
-            |      + 0.75D * element_at(acc, 3))))""".stripMargin))
-        .select(col("event_type"), col("n_days"),
-          round(element_at(col("st"), 1), 6).as("level"),
-          round(element_at(col("st"), 2), 6).as("trend"),
-          round(element_at(col("st"), 1) + element_at(col("st"), 2) +
-            element_at(col("st"), 3), 6).as("forecast"))
-    }),
-
-    "k24_deletion_vectors" -> ((s, d) => {
-      // merge-on-read deletion vectors (the Delta/Iceberg DV pattern):
-      // deletes land as an id list BESIDE the data (`_dv`), reads apply
-      // them as an anti-join — no base rewrite on the delete path — and
-      // compaction later applies the DV physically. Both read paths are
-      // aggregated side by side: identical numbers prove the rewrite is
-      // read-equivalent, which is the whole DV contract.
-      val dir = Scratch.dir("k24")
-        .toString + "/t"
-      val docs = t(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      docs.write.parquet(s"$dir/base")
-      docs.filter(col("doc_id") % 13 === 0).select(col("doc_id"))
-        .write.parquet(s"$dir/_dv")
-      def morRead = s.read.parquet(s"$dir/base")
-        .join(s.read.parquet(s"$dir/_dv"), Seq("doc_id"), "left_anti")
-      morRead.write.parquet(s"$dir/compacted") // DV applied physically
-      def agg(df: DataFrame, path: String) =
-        df.agg(lit(path).as("read_path"), count(lit(1)).as("n_rows"),
-          sum(col("n_chars")).as("sum_chars"),
-          countDistinct(col("lang")).as("n_langs"))
-      agg(morRead, "merge_on_read")
-        .unionByName(agg(s.read.parquet(s"$dir/compacted"), "compacted"))
-    }),
-
-    "text_novelty" -> ((s, d) => {
-      // corpus-order novelty: the fraction of a doc's distinct 3-gram
-      // shingles whose FIRST corpus occurrence (min doc_id) is this doc
-      // — the redundancy-over-time signal behind "is the crawl still
-      // contributing new content". Shingles ride as 64-bit FNV keys
-      // (the jaccardPairs convention); the first-occurrence map is a
-      // partition-only min WINDOW on the one (shingle)-keyed exchange —
-      // no self-join, no checkpoint, the corpus shuffles once on h and
-      // once on doc_id (the 4.1× join-back variant is in SCALE.md).
-      val hashed = t(s, d, "documents")
-        .select(col("doc_id"), TermOps.tokens(col("text")).as("toks"))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), explode(array_distinct(
-          graft.GraftFunctions.shingleHashes(col("toks"), 3))).as("h"))
-      hashed
-        .withColumn("first_doc",
-          min(col("doc_id")).over(Window.partitionBy("h")))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_shingles"),
-          sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L))
-            .as("n_novel"))
-        .withColumn("novelty",
-          round(col("n_novel").cast("double") / col("n_shingles"), 6))
-    }),
-
-    "k26_copy_into" -> ((s, d) => {
-      // idempotent file ingest (COPY INTO / Auto Loader semantics): a
-      // load log beside the target records ingested file names; each
-      // run lists the source, LEFT-ANTI-joins the log (metadata vs
-      // metadata — the log is never collected, so the plan carries no
-      // literal file list however many files the cumulative log holds),
-      // broadcast-SEMI-joins the data side against the per-batch fresh
-      // list, appends, and logs — so re-running an ingest (the crashed-
-      // orchestrator retry) cannot double-load. The gate runs the
-      // ingest TWICE and proves the target equals the source exactly.
-      val dir = Scratch.dir("k26")
-        .toString
-      t(s, d, "documents").select(col("doc_id"), col("n_chars"))
-        .repartition(4).write.parquet(s"$dir/src")
-      MergeOps.copyInto(s, s"$dir/src", s"$dir/target", s"$dir/_load_log")
-      MergeOps.copyInto(s, s"$dir/src", s"$dir/target", s"$dir/_load_log")
-      val log = s.read.parquet(s"$dir/_load_log")
-      s.read.parquet(s"$dir/target")
-        .agg(count(lit(1)).as("n_rows"), sum(col("doc_id")).as("sum_ids"),
-          sum(col("n_chars")).as("sum_chars"))
-        .crossJoin(broadcast(log.agg(
-          countDistinct(col("f")).as("n_files_logged"))))
-    }),
-
-    "mm_audio_fp" -> ((s, d) =>
-      // landmark audio fingerprint (MultimodalOps.audioFingerprint):
-      // energy-curve local maxima anchor (gap, q-energy, q-energy)
-      // landmark hashes, XOR-folded per medium — translation-invariant,
-      // level-tolerant, exact integers end to end; frame stats shuffle,
-      // payload bytes never do
-      MultimodalOps.audioFingerprint(
-        t(s, d, "documents").select(col("doc_id"),
-          encode(col("text"), "UTF-8").as("payload")),
-        "doc_id", "payload", frameSize = 16, stride = 2)),
-
-    "mm_vad" -> ((s, d) => {
-      // voice-activity segmentation over the frame-energy series — the
-      // operation frame_energy's scaladoc promises: frames below the
-      // energy threshold are silence, contiguous voiced runs collapse
-      // into segments (count via the run-start flags, one partitioned
-      // window), and the trim stats per medium are what an audio
-      // pipeline uses to drop dead air BEFORE decoding.
-      val en = MultimodalOps.frameEnergy(
-        t(s, d, "documents")
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
-        "payload", frameSize = 16, stride = 2)
-        .withColumn("voiced", col("energy") > 150000L)
-      val w = Window.partitionBy("doc_id").orderBy("frame_idx")
-      en.withColumn("starts", (col("voiced") &&
-          !coalesce(lag(col("voiced"), 1).over(w), lit(false))).cast("long"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_frames"),
-          sum(col("voiced").cast("long")).as("n_voiced"),
-          sum(col("starts")).as("n_segments"))
-        .withColumn("voiced_ratio",
-          round(col("n_voiced").cast("double") / col("n_frames"), 6))
-    }),
-
-    "t24_heatmap" -> ((s, d) => {
-      // weekday × hour activity heatmap (the calendar view every ops
-      // dashboard opens with): exact counts per cell + the cell's share
-      // of total — one (dow, hour) exchange, the share via a one-row
-      // broadcast total re-aggregated from the cells.
-      val cells = t(s, d, "events")
-        .select(pmod(expr("CAST(ts AS LONG) div 86400") + 4, lit(7))
-            .as("dow"),
-          expr("CAST(ts AS LONG) div 3600 % 24").as("hour"))
-        .groupBy("dow", "hour").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // total re-agg + the share join
-      cells.crossJoin(broadcast(cells.agg(sum("n").as("nt"))))
-        .select(col("dow"), col("hour"), col("n"),
-          round(col("n").cast("double") / col("nt"), 6).as("share"))
-    }),
-
-    "st_psi" -> ((s, _) => {
-      // streaming drift monitor: each watermarked window emits its
-      // binned value counts (bounded state — O(windows × bins)); the
-      // SERVING read computes PSI per finalized window against a fixed
-      // reference distribution (broadcast literals) with the batch
-      // stats_psi smoothing — the lambda read side, like st_topk.
-      // Reference: uniform thirds over bins 0/1/2.
-      val out = StreamTrace.run[Event](s, "st_psi", "complete")(src =>
-        src.toDF()
-          .withWatermark("ts", "5 minutes")
-          .withColumn("b", least(lit(2L), expr("CAST(value AS LONG) div 10")))
-          .groupBy(window(col("ts"), "10 minutes").as("w"), col("b"))
-          .agg(count(lit(1)).as("c"))
-          .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("w_start"), col("b"), col("c")))(
-        Seq( // window 00:00 skews low, 00:10 skews high
-          Event(1L, wall("2024-01-01 00:01:00"), 1.0),
-          Event(1L, wall("2024-01-01 00:02:00"), 2.0),
-          Event(1L, wall("2024-01-01 00:03:00"), 5.0),
-          Event(1L, wall("2024-01-01 00:04:00"), 12.0),
-          Event(1L, wall("2024-01-01 00:11:00"), 25.0),
-          Event(1L, wall("2024-01-01 00:12:00"), 27.0),
-          Event(1L, wall("2024-01-01 00:13:00"), 11.0)))
-        // serving-side PSI vs the uniform reference p = 1/3 per bin:
-        // full 3-bin grid per window, add-one smoothing on the observed
-        // side, ordered fold (the sink view is checkpointed so the
-        // windows×bins grid can self-join it without attribute conflicts)
-        .localCheckpoint()
-      val grid = out
-        .select(col("w_start")).distinct()
-        .crossJoin(out.sparkSession.range(0, 3).select(col("id").as("b")))
-        .join(out, Seq("w_start", "b"), "left_outer")
-        .select(col("w_start"), col("b"),
-          coalesce(col("c"), lit(0L)).as("c"))
-      grid.groupBy("w_start")
-        .agg(sum("c").as("n"),
-          array_sort(collect_list(struct(col("b"), col("c")))).as("arr"))
-        .select(col("w_start"), col("n"),
-          round(aggregate(col("arr"), lit(0.0d), (acc, x) => {
-            val qv = (x.getField("c").cast("double") + 1) / (col("n") + 3)
-            val p = lit(1.0) / 3
-            acc + (p - qv) * log(p / qv)
-          }), 6).as("psi"))
-    }),
-
-    "w9_asof_tolerance" -> ((s, d) => {
-      // as-of join with MAX STALENESS (pandas merge_asof's tolerance):
-      // a match older than the bound is dropped to nulls instead of
-      // silently joining stale state — the contract a feature-store
-      // lookup actually wants. Same one-pass nearest carry; the
-      // tolerance is a post-filter on the carried delta.
-      val ev = t(s, d, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("ts"), col("user_id"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("view_id"))
-        .withColumn("vts", col("ts"))
-      AsofOps.asofJoin(purchases, views, "user_id", "ts",
-          Seq("view_id", "vts"))
-        .withColumn("stale",
-          expr("CAST(ts AS LONG) - CAST(vts AS LONG)") > 3600L)
-        .select(col("event_id"), date_format(col("ts"), tsFmt).as("ts_str"),
-          when(col("stale"), lit(null).cast("long"))
-            .otherwise(col("view_id")).as("view_id"),
-          coalesce(col("stale"), lit(false)).as("dropped_stale"))
-    }),
-
-    "text_line_stats" -> ((s, d) =>
-      // line-structure profile per doc (the boilerplate-adjacent signal
-      // the char-level quality metrics miss): line count, blank-line
-      // ratio, mean non-blank line length — pure map, zero exchanges
-      t(s, d, "documents")
-        .select(col("doc_id"), split(col("text"), "\n").as("ls"))
-        .select(col("doc_id"), size(col("ls")).cast("long").as("n_lines"),
-          size(filter(col("ls"), l => length(l) === 0)).cast("long")
-            .as("n_blank"),
-          aggregate(filter(col("ls"), l => length(l) > 0), lit(0L),
-            (acc, l) => acc + length(l)).as("sum_len"))
-        .select(col("doc_id"), col("n_lines"), col("n_blank"),
-          round(col("n_blank").cast("double") / col("n_lines"), 6)
-            .as("blank_ratio"),
-          when(col("n_lines") - col("n_blank") > 0,
-            round(col("sum_len").cast("double") /
-              (col("n_lines") - col("n_blank")), 6)).as("mean_line_len"))),
-
-    "search_snippet" -> ((s, d) => {
-      // snippet selection for serving: per matching doc, the 16-token
-      // window bucket holding the MOST query-term hits (the highlight
-      // the result page shows). Query-term postings filter BEFORE any
-      // shuffle (the phrase-match discipline), buckets are pos div 16,
-      // argmax ties to the earliest bucket.
-      val qTerms = Seq("scan", "join", "merge")
-      val hits = TermOps.positionalPostings(t(s, d, "documents"),
-          "doc_id", "text")
-        .filter(col("term").isin(qTerms: _*))
-        .withColumn("bucket", expr("pos div 16"))
-        .groupBy("doc_id", "bucket").agg(count(lit(1)).as("n_hits"))
-      hits.groupBy("doc_id")
-        .agg(min_by(struct(col("bucket"), col("n_hits")),
-          struct(lit(0L) - col("n_hits"), col("bucket"))).as("b"),
-          sum(col("n_hits")).as("total_hits"))
-        .select(col("doc_id"), col("b.bucket").as("best_bucket"),
-          col("b.n_hits").as("best_hits"), col("total_hits"))
-    }),
-
-    "stats_psi" -> ((s, d) => {
-      // population stability index between the first and second half of
-      // the event-time span — the MLOps-standard binned drift score
-      // beside the rank-exact KS and the JS divergence: clamped
-      // fixed-width value bins (101 of them), add-one smoothing on the
-      // full grid so empty bins enter finitely, PSI = Σ (p−q)·ln(p/q)
-      // as one ORDERED fold (the stats_divergence convention). Exact
-      // integer counts until the fold.
-      val ev = t(s, d, "events")
-        .select(expr("CAST(ts AS LONG) div 86400").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-      val mid = ev.agg(expr("(min(day) + max(day)) div 2").as("mid"))
-      val binned = ev.crossJoin(broadcast(mid))
-        .withColumn("h", when(col("day") <= col("mid"), 0).otherwise(1))
-        .withColumn("b", greatest(lit(-50L),
-          least(lit(50L), expr("cents div 100"))))
-        .groupBy("h", "b").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // totals + the grid join
-      val tot = binned.groupBy("h").agg(sum("c").as("n"))
-      val grid = binned.sparkSession.range(-50, 51)
-        .select(col("id").as("b"))
-        .join(binned.filter(col("h") === 0)
-          .select(col("b"), col("c").as("c0")), Seq("b"), "left_outer")
-        .join(binned.filter(col("h") === 1)
-          .select(col("b"), col("c").as("c1")), Seq("b"), "left_outer")
-        .select(col("b"), coalesce(col("c0"), lit(0L)).as("c0"),
-          coalesce(col("c1"), lit(0L)).as("c1"))
-      val n0 = tot.filter(col("h") === 0).select(col("n").as("n0"))
-      val n1 = tot.filter(col("h") === 1).select(col("n").as("n1"))
-      grid.crossJoin(broadcast(n0)).crossJoin(broadcast(n1))
-        .agg(max(col("n0")).as("n_ref"), max(col("n1")).as("n_cur"),
-          count(lit(1)).as("n_bins"),
-          array_sort(collect_list(struct(col("b"), col("c0"), col("c1"),
-            col("n0"), col("n1")))).as("arr"))
-        .select(col("n_ref"), col("n_cur"), col("n_bins"),
-          round(aggregate(col("arr"), lit(0.0d), (acc, x) => {
-            val p = (x.getField("c0").cast("double") + 1) /
-              (x.getField("n0") + 101)
-            val q = (x.getField("c1").cast("double") + 1) /
-              (x.getField("n1") + 101)
-            acc + (p - q) * log(p / q)
-          }), 6).as("psi"))
-    }),
-
-    "pack_efficiency" -> ((s, d) => {
-      // packing-waste audit of the pack_e2e shard artifact: per shard,
-      // the padding fraction a 2048-token sequence writer pays —
-      // (n_seqs·2048 − Σtokens)/(n_seqs·2048) — the utilization number
-      // a training-throughput dashboard tracks. Same snake-shard +
-      // cumulative-fill chain; one extra mirrored division.
-      val tc = t(s, d, "documents")
-        .select(col("doc_id"),
-          TextAnalysisOps.wsTokenCount(col("text")).cast("long").as("nt"))
-      val sh = PackOps.snakeShards(tc, "doc_id", "nt", nShards = 8)
-      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      sh.withColumn("cb", coalesce(sum(col("size")).over(w), lit(0L)))
-        .withColumn("seq", expr("cb div 2048"))
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("size")).as("sum_tokens"),
-          (max(col("seq")) + 1).as("n_seqs"))
-        .select(col("shard"), col("n_docs"), col("sum_tokens"), col("n_seqs"),
-          round((col("n_seqs") * 2048 - col("sum_tokens")).cast("double") /
-            (col("n_seqs") * 2048), 6).as("waste"))
-    }),
-
-    "t33_week_over_week" -> ((s, d) => {
-      // week-over-week growth per event_type on the dense daily grid —
-      // the dashboard ratio every metrics page ships (lag 7 on the
-      // zero-filled grid so a missing day reads as 0, not as a silent
-      // 7-day shift). Integer counts, one mirrored division; the lag
-      // window orders by the grid's unique day.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"),
-          explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-      val w = Window.partitionBy("event_type").orderBy("day")
-      grid.withColumn("c7", lag(col("c"), 7).over(w))
-        .filter(col("c7").isNotNull && col("c7") > 0)
-        .select(col("event_type"), col("day"), col("c"), col("c7"),
-          round((col("c") - col("c7")).cast("double") / col("c7"), 6)
-            .as("wow"))
-    }),
-
-    "stats_runs_test" -> ((s, d) => {
-      // Wald–Wolfowitz runs test on the daily up/down sequence per
-      // event_type — the randomness monitor beside the trend kit (MK
-      // asks "is it drifting", this asks "is it even random": too few
-      // runs = momentum/regime, too many = oscillation). Signs from
-      // day-over-day deltas on the dense grid (zeros drop, the
-      // standard convention); R, n1, n2 are exact integers off two lag
-      // windows; μ/σ are rationals of those integers and z uses only
-      // IEEE-exact division and sqrt.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"),
-          explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-      val w = Window.partitionBy("event_type").orderBy("day")
-      val signs = grid
-        .withColumn("prev", lag(col("c"), 1).over(w))
-        .filter(col("prev").isNotNull && col("c") =!= col("prev"))
-        .withColumn("sgn", when(col("c") > col("prev"), 1).otherwise(-1))
-      val runs = signs
-        .withColumn("psgn", lag(col("sgn"), 1).over(w))
-        .groupBy("event_type")
-        .agg(sum(when(col("sgn") === 1, 1L).otherwise(0L)).as("n1"),
-          sum(when(col("sgn") === -1, 1L).otherwise(0L)).as("n2"),
-          (sum(when(col("psgn").isNull ||
-            col("psgn") =!= col("sgn"), 1L).otherwise(0L))).as("r"))
-      runs.filter(col("n1") > 0 && col("n2") > 0)
-        .withColumn("nn", (col("n1") + col("n2")).cast("double"))
-        .withColumn("mu",
-          lit(2.0) * col("n1") * col("n2") / col("nn") + 1.0)
-        .withColumn("v", lit(2.0) * col("n1") * col("n2") *
-          (lit(2.0) * col("n1") * col("n2") - col("nn")) /
-          (col("nn") * col("nn") * (col("nn") - 1.0)))
-        .filter(col("v") > 0)
-        .select(col("event_type"), col("n1"), col("n2"), col("r"),
-          round(col("mu"), 6).as("mu_runs"),
-          round((col("r").cast("double") - col("mu")) / sqrt(col("v")), 6)
-            .as("z"))
-    }),
-
-    "t31_theil_sen" -> ((s, d) => {
-      // Theil-Sen robust trend per event_type — the slope ESTIMATE that
-      // pairs with stats_mann_kendall's significance test (the two are
-      // the standard nonparametric trend kit: MK says "is it drifting",
-      // Theil-Sen says "by how much per day", both immune to the
-      // outlier days that wreck an OLS fit). slope = exact lower median
-      // of the O(days²) pairwise slopes, intercept = lower median of
-      // the per-day residual intercepts — both medians by the rank rule
-      // over (value, unique-day tiebreak), so the pick is engine-exact;
-      // every slope is one IEEE division of exact integers. Pair fanout
-      // lives on the ≤31-row grid tier, never the corpus.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"),
-          explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-        .localCheckpoint() // pairs ×2 + the intercept pass
-      val a = grid.select(col("event_type"), col("day").as("di"),
-        col("c").as("ci"))
-      val b = grid.select(col("event_type"), col("day").as("dj"),
-        col("c").as("cj"))
-      val wS = Window.partitionBy("event_type")
-        .orderBy(col("sl"), col("di"), col("dj"))
-      val wT = Window.partitionBy("event_type")
-      val slope = a.join(b, Seq("event_type")).filter(col("di") < col("dj"))
-        .withColumn("sl", (col("cj") - col("ci")).cast("double") /
-          (col("dj") - col("di")).cast("double"))
-        .withColumn("rn", row_number().over(wS))
-        .withColumn("np", count(lit(1)).over(wT))
-        .filter(col("rn") === floor((col("np") - 1) * 0.5) + 1)
-        .select(col("event_type"), col("sl").as("slope"), col("np"))
-      val wI = Window.partitionBy("event_type")
-        .orderBy(col("b0"), col("day"))
-      grid.join(broadcast(slope), "event_type")
-        .withColumn("b0",
-          col("c").cast("double") - col("slope") * col("day"))
-        .withColumn("rn", row_number().over(wI))
-        .withColumn("n", count(lit(1)).over(wT))
-        .filter(col("rn") === floor((col("n") - 1) * 0.5) + 1)
-        .select(col("event_type"), col("n").as("n_days"),
-          col("np").as("n_pairs"), round(col("slope"), 6).as("slope"),
-          round(col("b0"), 6).as("intercept"))
-    }),
-
-    "stats_prop_ztest" -> ((s, d) => {
-      // two-proportion z-test on user conversion between the even/odd
-      // arms — the proportions sibling of stats_welch (means) and
-      // stats_power (pre-flight): the A/B readout for binary metrics.
-      // "Converted" = ≥1 HIGH-VALUE purchase (≥ 95.00 — plain ≥1
-      // purchase saturates at 100% on this corpus and the z-test
-      // degenerates). Counts are exact integers; the pooled-variance
-      // z uses only IEEE-exact division and sqrt — no libm surface.
-      // One user-keyed aggregation, then a one-row fold.
-      val conv = t(s, d, "events")
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "purchase" &&
-            round(col("value") * 100) >= 9500, 1L).otherwise(0L))
-          .as("converted"))
-        .withColumn("arma", col("user_id") % 2 === 0)
-      conv.agg(
-          sum(when(col("arma"), 1L).otherwise(0L)).as("n1"),
-          sum(when(col("arma"), col("converted")).otherwise(0L)).as("x1"),
-          sum(when(!col("arma"), 1L).otherwise(0L)).as("n2"),
-          sum(when(!col("arma"), col("converted")).otherwise(0L)).as("x2"))
-        .withColumn("p1", col("x1").cast("double") / col("n1"))
-        .withColumn("p2", col("x2").cast("double") / col("n2"))
-        .withColumn("pp", (col("x1") + col("x2")).cast("double") /
-          (col("n1") + col("n2")).cast("double"))
-        .filter(col("pp") > 0 && col("pp") < 1)
-        .withColumn("z", (col("p1") - col("p2")) /
-          sqrt(col("pp") * (lit(1.0) - col("pp")) *
-            (lit(1.0) / col("n1") + lit(1.0) / col("n2"))))
-        .select(col("n1"), col("x1"), col("n2"), col("x2"),
-          round(col("p1"), 6).as("p1"), round(col("p2"), 6).as("p2"),
-          round(col("z"), 6).as("z"))
-    }),
-
-    "stats_mann_kendall" -> ((s, d) => {
-      // Mann-Kendall trend test per event_type over the dense daily
-      // count series — the nonparametric "is this metric drifting"
-      // monitor (no linearity or normality assumption; the t17_ols
-      // slope's distribution-free sibling). S = Σ_{i<j} sign(c_j−c_i)
-      // and the tie-corrected variance are EXACT integers off the
-      // O(days²)-per-type pair join (days ≈ 31 — the grid tier, never
-      // the corpus); z's one division and sqrt are IEEE-exact both
-      // engines, so the statistic replays bit-identically.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"),
-          explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-        .localCheckpoint() // three consumers: pairs ×2 sides + ties
-      val a = grid.select(col("event_type"), col("day").as("di"),
-        col("c").as("ci"))
-      val b = grid.select(col("event_type"), col("day").as("dj"),
-        col("c").as("cj"))
-      val sPairs = a.join(b, Seq("event_type"))
-        .filter(col("di") < col("dj"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("cj") > col("ci"), 1L)
-            .when(col("cj") < col("ci"), -1L).otherwise(0L)).as("s"))
-      val base = grid.groupBy("event_type").agg(count(lit(1)).as("n"))
-      val ties = grid.groupBy("event_type", "c")
-        .agg(count(lit(1)).as("tt"))
-        .groupBy("event_type")
-        .agg(sum(col("tt") * (col("tt") - 1) * (lit(2L) * col("tt") + 5))
-          .as("tie_term"))
-      sPairs.join(base, "event_type").join(ties, "event_type")
-        .withColumn("var_s",
-          (col("n") * (col("n") - 1) * (lit(2L) * col("n") + 5) -
-            col("tie_term")).cast("double") / 18.0)
-        .filter(col("var_s") > 0)
-        .withColumn("z",
-          when(col("s") > 0, (col("s").cast("double") - 1) /
-            sqrt(col("var_s")))
-            .when(col("s") < 0, (col("s").cast("double") + 1) /
-              sqrt(col("var_s")))
-            .otherwise(lit(0.0)))
-        .select(col("event_type"), col("n"), col("s"),
-          round(col("var_s"), 6).as("var_s"), round(col("z"), 6).as("z"))
-    }),
-
-    "stats_friedman" -> ((s, d) => {
-      // Friedman test: do the event types rank consistently across
-      // days? — the repeated-measures companion to stats_kruskal
-      // (blocks = days, treatments = event types, response = daily
-      // cent volume; zero-filled on the dense grid so every block
-      // ranks all k treatments). Doubled average ranks (2·rank +
-      // ties − 1, the spearman/kruskal convention) keep every sum
-      // integral; Σ R2_t² folds in event_type order (the r14
-      // ordered-fold discipline); the tie correction divides by
-      // n·(k³−k) with Σ(t³−t) summed over per-block tie groups — all
-      // exact integers until the two mirrored final divisions.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy("event_type", "day").agg(sum(col("cents")).as("x"))
-      val types = daily.select("event_type").distinct()
-      val days = daily.select("day").distinct()
-      val grid = types.crossJoin(days)
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("x", coalesce(col("x"), lit(0L)))
-      val r2 = grid
-        .withColumn("r2",
-          lit(2L) * rank().over(
-            Window.partitionBy("day").orderBy(col("x"))) +
-            count(lit(1)).over(Window.partitionBy("day", "x")) - 1)
-      val byType = r2.groupBy("event_type")
-        .agg(count(lit(1)).as("n_b"), sum(col("r2")).as("rr2"))
-      val tieSum = grid.groupBy("day", "x").agg(count(lit(1)).as("t"))
-        .agg(coalesce(sum(col("t") * col("t") * col("t") - col("t")),
-          lit(0L)).as("tie3"))
-      byType
-        .agg(count(lit(1)).as("k"), max(col("n_b")).as("n"),
-          array_sort(collect_list(struct(col("event_type"), col("rr2"))))
-            .as("arr"))
-        .withColumn("sr2", expr(
-          """aggregate(arr, 0.0D, (acc, x) ->
-            |  acc + CAST(x.rr2 AS DOUBLE) * CAST(x.rr2 AS DOUBLE))"""
-            .stripMargin))
-        .crossJoin(broadcast(tieSum))
-        // R = R2/2 ⇒ 12/(nk(k+1))·ΣR² − 3n(k+1) = 3·ΣR2²/(nk(k+1)) − 3n(k+1)
-        .withColumn("chi2",
-          lit(3.0) * col("sr2") /
-            (col("n").cast("double") * col("k") * (col("k") + 1)) -
-            lit(3.0) * col("n").cast("double") * (col("k") + 1))
-        .withColumn("cc", lit(1.0) - col("tie3").cast("double") /
-          (col("n").cast("double") *
-            (col("k").cast("double") * col("k") * col("k") - col("k"))))
-        .filter(col("cc") > 0)
-        .select(col("k").cast("int").as("k"), col("n").cast("long").as("n"),
-          round(col("chi2"), 6).as("chi2"),
-          round(col("chi2") / col("cc"), 6).as("chi2_tie_corrected"))
-    }),
-
-    "stats_kruskal" -> ((s, d) => {
-      // Kruskal-Wallis H (tie-corrected): the k-sample rank test beside
-      // the 2-sample Mann-Whitney AUC — "does value differ across event
-      // types" without normality assumptions. GLOBAL doubled average
-      // ranks come from PackOps.avgRank2 over the cents HISTOGRAM
-      // (value domain is rounded cents, so distinct ≪ rows — exactly
-      // the regime the histogram discipline is for); every sum is an
-      // exact integer, H and the tie correction are mirrored doubles.
-      // Ranks are GLOBAL by definition here (g = lit(1)), so avgRank2's
-      // cumulative window runs single-partition over the whole cents
-      // histogram — acceptable because that histogram is O(distinct
-      // rounded cents) ≈ 10⁴ rows at any corpus size (the value domain,
-      // not the row count, bounds it); if the domain ever widened to
-      // row-scale, the fix is a two-level partial-histogram merge, not
-      // a bigger window.
-      // With r2 = 2·rank: H = 3/(N(N+1))·Σ R2_g²/n_g − 3(N+1), then
-      // H /= 1 − Σ(t³−t)/(N³−N) over the tie-group sizes t.
-      val ev = t(s, d, "events").select(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .withColumn("g", lit(1))
-      val ranked = ev.join(
-        PackOps.avgRank2(ev, "g", "cents"), Seq("g", "cents"))
-      // Σ R2_g²/n_g folds in event_type order (r14 sweep: the ≤k-row
-      // unordered double sum was the stats_sequential failure class)
-      val byType = ranked.groupBy("event_type")
-        .agg(count(lit(1)).as("ng"), sum(col("r2")).as("rg2"))
-        .agg(count(lit(1)).as("k"), sum(col("ng")).as("n"),
-          array_sort(collect_list(struct(col("event_type"), col("rg2"),
-            col("ng")))).as("arr"))
-        .withColumn("s", expr(
-          """aggregate(arr, 0.0D, (acc, x) ->
-            |  acc + CAST(x.rg2 AS DOUBLE) * CAST(x.rg2 AS DOUBLE) /
-            |    CAST(x.ng AS DOUBLE))""".stripMargin))
-      val ties = ev.groupBy("cents").agg(count(lit(1)).as("t"))
-        .agg(sum(col("t") * col("t") * col("t") - col("t")).as("tt"))
-      byType.crossJoin(broadcast(ties))
-        .withColumn("h0", lit(3.0) * col("s") /
-          (col("n").cast("double") * (col("n") + 1)) -
-          lit(3.0) * (col("n") + 1))
-        .withColumn("c", lit(1.0) - col("tt").cast("double") /
-          (col("n").cast("double") * col("n") * col("n") - col("n")))
-        .filter(col("c") > 0)
-        .select(col("k"), col("n"), round(col("h0"), 6).as("h"),
-          round(col("h0") / col("c"), 6).as("h_tie_corrected"))
-    }),
-
-    "t23_ohlc" -> ((s, d) =>
-      // OHLC bars per (event_type, day) — the time-series summarizer
-      // every metrics store ships: open/close via (ts, id)-ordered
-      // argmin/argmax (map-side combinable, no window sort), high/low
-      // plain min/max, all exact integer cents
-      t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG)").as("tsec"),
-          expr("CAST(ts AS LONG) div 86400").as("day"), col("event_id"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy("event_type", "day")
-        .agg(count(lit(1)).as("n"),
-          min_by(col("cents"), struct(col("tsec"), col("event_id")))
-            .as("open_c"),
-          max(col("cents")).as("high_c"), min(col("cents")).as("low_c"),
-          max_by(col("cents"), struct(col("tsec"), col("event_id")))
-            .as("close_c"))),
-
-    "st_ohlc" -> ((s, _) => {
-      // streaming OHLC per 10-minute window: open/close are stateful
-      // (value, ts)-argmin/argmax aggregates — declarative, so Spark
-      // merges partials across micro-batches like any windowed agg;
-      // state is O(windows) structs, watermark-expired
-      StreamTrace.run[Event](s, "st_ohlc", "complete")(src =>
-        src.toDF()
-          .withWatermark("ts", "5 minutes")
-          .groupBy(window(col("ts"), "10 minutes").as("w"))
-          .agg(count(lit(1)).as("n"),
-            min_by(col("value"), col("ts")).as("open"),
-            max(col("value")).as("high"), min(col("value")).as("low"),
-            max_by(col("value"), col("ts")).as("close"))
-          .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss")
-              .as("w_start"),
-            col("n"), col("open"), col("high"), col("low"), col("close")))(
-        Seq(Event(1L, wall("2024-01-01 00:01:00"), 1.0),
-          Event(1L, wall("2024-01-01 00:02:00"), 5.0),
-          Event(1L, wall("2024-01-01 00:03:00"), 0.5),
-          Event(1L, wall("2024-01-01 00:09:00"), 2.0),
-          Event(1L, wall("2024-01-01 00:12:00"), 3.0),
-          Event(1L, wall("2024-01-01 00:14:00"), 1.5)))
-    }),
-
-    "dedup_bloom_seen" -> ((s, d) => {
-      // approximate incremental dedup against a BLOOM of the historical
-      // seen-set — the 100 TB shape of dedup_incremental: the exact
-      // seen-set is too big to join every ingest batch against, but its
-      // bloom broadcasts (here deliberately undersized so false
-      // positives exist and the oracle must replay them bit-for-bit).
-      // The exact `truly_seen` column beside the flag makes the FP rate
-      // auditable; a production flow exact-checks ONLY the flagged
-      // slice (a |flagged|-sized join, not |batch|).
-      val docs = t(s, d, "documents")
-      val seenKeys = docs.filter(col("doc_id") % 3 =!= 0)
-        .select(md5(col("text")).as("h"))
-      val batch = docs.filter(col("doc_id") % 3 === 0)
-        .withColumn("h", md5(col("text")))
-      PruneOps.bloomFlag(batch, "h", seenKeys, "h", "maybe_seen",
-          mBits = 4096, k = 2)
-        .join(seenKeys.distinct().withColumn("truly_seen", lit(true)),
-          Seq("h"), "left_outer")
-        .select(col("doc_id"), col("maybe_seen"),
-          coalesce(col("truly_seen"), lit(false)).as("truly_seen"))
-    }),
-
-    "w8_session_native" -> ((s, d) =>
-      // Spark's BUILT-IN session_window aggregation (the native sibling
-      // of the hand-built w6 gap sessionizer): one session-window
-      // groupBy, merge rule = next event strictly inside [start,
-      // last + gap) — the oracle replays that exact comparator (a gap
-      // of EXACTLY 15 min starts a new session). Same single-exchange
-      // shape as any keyed aggregation.
-      t(s, d, "events")
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "15 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"),
-          round(sum(col("value")), 2).as("sum_value"))
-        .select(col("user_id"),
-          date_format(col("sw.start"), tsFmt).as("start_str"),
-          col("n_events"), col("sum_value"))),
-
-    "stats_retention" -> ((s, d) => {
-      // classic cohort-retention triangle: users cohorted by first-seen
-      // week, per (cohort_week, age_weeks) the fraction of the cohort
-      // active — the engagement decay curve every analytics deployment
-      // ships. One user-keyed min pass (cohort), one broadcast-able
-      // cohort-size relation, one (cohort, age) distinct-count.
-      val ev = t(s, d, "events").select(col("user_id"),
-        expr("CAST(ts AS LONG) div 604800").as("week"))
-      val cohort = ev.groupBy("user_id").agg(min("week").as("c_week"))
-      val sizes = cohort.groupBy("c_week").agg(count(lit(1)).as("n_cohort"))
-      ev.join(cohort, "user_id")
-        .groupBy(col("c_week"), (col("week") - col("c_week")).as("age_weeks"))
-        .agg(countDistinct(col("user_id")).as("n_active"))
-        .join(broadcast(sizes), "c_week")
-        .select(col("c_week"), col("age_weeks"), col("n_active"),
-          col("n_cohort"),
-          round(col("n_active").cast("double") / col("n_cohort"), 6)
-            .as("retention"))
-    }),
-
-    "stats_capture_recapture" -> ((s, d) => {
-      // Chapman capture-recapture estimate of the total user population
-      // from two observation windows (the first 4 hours of the span's
-      // day 1 and of day 2 — half-span windows see EVERY user on this
-      // corpus and estimate trivially): n1/n2 marked per window, m
-      // recaptured in both, N̂ = (n1+1)(n2+1)/(m+1) − 1 — the dedup /
-      // coverage estimator for "how many distinct users exist beyond
-      // what either window saw". One user-keyed exchange to O(users)
-      // membership rows, then a single aggregate; integers until the
-      // final division.
-      val ev = t(s, d, "events")
-        .select(expr("CAST(ts AS LONG)").as("sec"), col("user_id"))
-      val t0 = ev.agg(min("sec").as("t0"))
-      ev.crossJoin(broadcast(t0))
-        .withColumn("off", col("sec") - col("t0"))
-        .groupBy("user_id")
-        .agg(max(when(col("off") < 14400L, 1L).otherwise(0L)).as("in1"),
-          max(when(col("off") >= 86400L && col("off") < 100800L, 1L)
-            .otherwise(0L)).as("in2"))
-        .agg(sum("in1").as("n1"), sum("in2").as("n2"),
-          sum(when(col("in1") === 1L && col("in2") === 1L, 1L)
-            .otherwise(0L)).as("m"))
-        .select(col("n1"), col("n2"), col("m"),
-          // (n1+1)(n2+1) is ~users² — DECIMAL(38,0) (HUGEINT in the
-          // oracle) keeps it exact past the ~3·10⁹-user BIGINT ceiling
-          round(((col("n1") + 1L).cast("decimal(38,0)") *
-              (col("n2") + 1L)).cast("double") /
-            (col("m") + 1L).cast("double") - 1.0, 4).as("chapman"))
-    }),
-
-    "stats_tost" -> ((s, d) => {
-      // TOST equivalence test (Schuirmann 1987): are the two halves of
-      // the corpus the SAME within a margin — the flip side of
-      // difference testing, the check a data-pipeline A/B needs before
-      // declaring a refactor harmless. Arms are doc_id parity; margin
-      // Δ = 5 % of the pooled mean; both one-sided Welch z's must
-      // clear 1.645 (normal approx on these n's, stated). Everything
-      // derives from one pass of exact integer (n, Σx, Σx²) co-moments
-      // per arm — the stats_welch machinery with a two-sided gate.
-      val docs = t(s, d, "documents")
-        .select((col("doc_id") % 2 === 0).as("arma"), col("n_chars"))
-      docs.agg(
-          sum(when(col("arma"), 1L).otherwise(0L)).as("n1"),
-          sum(when(col("arma"), col("n_chars")).otherwise(0L)).as("s1"),
-          sum(when(col("arma"), (col("n_chars") * col("n_chars"))
-              .cast("decimal(38,0)"))
-            .otherwise(lit(0L).cast("decimal(38,0)"))).as("q1"),
-          sum(when(!col("arma"), 1L).otherwise(0L)).as("n2"),
-          sum(when(!col("arma"), col("n_chars")).otherwise(0L)).as("s2"),
-          sum(when(!col("arma"), (col("n_chars") * col("n_chars"))
-              .cast("decimal(38,0)"))
-            .otherwise(lit(0L).cast("decimal(38,0)"))).as("q2"))
-        .withColumn("m1", col("s1").cast("double") / col("n1"))
-        .withColumn("m2", col("s2").cast("double") / col("n2"))
-        .withColumn("v1", (col("n1").cast("double") * col("q1") -
-            col("s1").cast("double") * col("s1")) /
-          (col("n1").cast("double") * (col("n1") - 1)))
-        .withColumn("v2", (col("n2").cast("double") * col("q2") -
-            col("s2").cast("double") * col("s2")) /
-          (col("n2").cast("double") * (col("n2") - 1)))
-        .withColumn("se", sqrt(col("v1") / col("n1") + col("v2") / col("n2")))
-        .withColumn("dm", lit(0.05) * (col("s1") + col("s2")).cast("double") /
-          (col("n1") + col("n2")).cast("double"))
-        .withColumn("t_lower", (col("m1") - col("m2") + col("dm")) / col("se"))
-        .withColumn("t_upper", (col("dm") - (col("m1") - col("m2"))) / col("se"))
-        .select(col("n1"), col("n2"),
-          round(col("m1") - col("m2"), 6).as("delta"),
-          round(col("dm"), 6).as("margin"),
-          round(col("t_lower"), 6).as("t_lower"),
-          round(col("t_upper"), 6).as("t_upper"),
-          (col("t_lower") > 1.645 && col("t_upper") > 1.645).as("equivalent"))
-    }),
-
-    "stats_power" -> ((s, d) => {
-      // A/B pre-flight power analysis: the minimum detectable effect
-      // (MDE) at α = 0.05 / power 0.8 for the doc-halves experiment —
-      // the number a pipeline owner reads BEFORE launching an A/B to
-      // know whether the corpus can even resolve the effect size they
-      // care about. Arms are doc_id parity (the stats_tost split);
-      // se from exact BIGINT (n, Σx, Σx²) co-moments (the stats_welch
-      // machinery), MDE = (z_{0.975} + z_{0.8})·se with the z's as
-      // exact shared literals (normal approximation, stated); relative
-      // MDE divides by the pooled mean. One corpus scan, one-row output.
-      val docs = t(s, d, "documents")
-        .select((col("doc_id") % 2 === 0).as("arma"), col("n_chars"))
-      docs.agg(
-          sum(when(col("arma"), 1L).otherwise(0L)).as("n1"),
-          sum(when(col("arma"), col("n_chars")).otherwise(0L)).as("s1"),
-          sum(when(col("arma"), (col("n_chars") * col("n_chars"))
-              .cast("decimal(38,0)"))
-            .otherwise(lit(0L).cast("decimal(38,0)"))).as("q1"),
-          sum(when(!col("arma"), 1L).otherwise(0L)).as("n2"),
-          sum(when(!col("arma"), col("n_chars")).otherwise(0L)).as("s2"),
-          sum(when(!col("arma"), (col("n_chars") * col("n_chars"))
-              .cast("decimal(38,0)"))
-            .otherwise(lit(0L).cast("decimal(38,0)"))).as("q2"))
-        .withColumn("v1", (col("n1").cast("double") * col("q1") -
-            col("s1").cast("double") * col("s1")) /
-          (col("n1").cast("double") * (col("n1") - 1)))
-        .withColumn("v2", (col("n2").cast("double") * col("q2") -
-            col("s2").cast("double") * col("s2")) /
-          (col("n2").cast("double") * (col("n2") - 1)))
-        .withColumn("se", sqrt(col("v1") / col("n1") + col("v2") / col("n2")))
-        .withColumn("mde", (lit(1.96) + lit(0.8416)) * col("se"))
-        .select(col("n1"), col("n2"),
-          round(col("se"), 6).as("se"),
-          round(col("mde"), 6).as("mde_abs"),
-          round(col("mde") / ((col("s1") + col("s2")).cast("double") /
-            (col("n1") + col("n2")).cast("double")), 6).as("mde_rel"))
-    }),
-
-    "stats_sequential" -> ((s, d) => {
-      // mSPRT always-valid sequential A/B monitor (Johari et al. 2017):
-      // the peeking-safe p-value a dashboard can refresh daily without
-      // inflating false positives. Arms are even/odd users; per-day
-      // cumulative (n, Σv) per arm feed the mixture likelihood ratio
-      // Λ_n (mixture variance τ² = σ², pooled), and the always-valid
-      // p is 1/runmax(Λ). `value` is 2-decimal by fixture contract, so
-      // it scales to exact cent-longs: every co-moment (n, Σv, Σv²) is
-      // a BIGINT in both engines — the stats_welch/stats_tost
-      // convention — and the ln/exp/√ chain runs on identical doubles
-      // (round 12's unrounded double Σv² was the one red hash).
-      // Everything after the day grain is a ≤ |days|-row relation.
-      val ev = t(s, d, "events").select(to_date(col("ts")).as("day"),
-        (col("user_id") % 2 === 0).as("arma"),
-        round(col("value") * 100).cast("long").as("v"))
-      // Σv² promotes to DECIMAL(38,0): cent² per row fits a long, but
-      // the corpus sum passes 2^63 near 10^10 events — DuckDB's
-      // sum(BIGINT) is HUGEINT already, so this mirrors it exactly
-      val sig = ev.agg(count(lit(1)).as("nn"), sum(col("v")).as("sv"),
-          sum((col("v") * col("v")).cast("decimal(38,0)")).as("qv"))
-        .select(round((col("nn").cast("double") * col("qv") -
-            col("sv").cast("double") * col("sv")) /
-          (col("nn").cast("double") * (col("nn") - 1)) / 10000.0, 6)
-          .as("s2"))
-      val daily = ev.groupBy(col("day"))
-        .agg(sum(when(col("arma"), 1L).otherwise(0L)).as("na_d"),
-          sum(when(col("arma"), col("v")).otherwise(0L)).as("sa_d"),
-          sum(when(!col("arma"), 1L).otherwise(0L)).as("nb_d"),
-          sum(when(!col("arma"), col("v")).otherwise(0L)).as("sb_d"))
-      val wd = Window.orderBy(col("day"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val st = daily.select(col("day"),
-          sum(col("na_d")).over(wd).as("na"),
-          sum(col("sa_d")).over(wd).as("sa"),
-          sum(col("nb_d")).over(wd).as("nb"),
-          sum(col("sb_d")).over(wd).as("sb"))
-        .crossJoin(broadcast(sig))
-        .withColumn("neff", (col("na") * col("nb")).cast("double") /
-          (col("na") + col("nb")).cast("double"))
-        .withColumn("delta", (col("sa").cast("double") / col("na") -
-          col("sb").cast("double") / col("nb")) / 100.0)
-        .withColumn("lnlam",
-          lit(0.5) * log(col("s2") / (col("s2") + col("neff") * col("s2"))) +
-            col("neff") * col("neff") * col("s2") * col("delta") * col("delta") /
-              (lit(2.0) * col("s2") * (col("s2") + col("neff") * col("s2"))))
-      // libm defense (r14): lnlam is the only cell here that passes
-      // through ln/exp — functions whose last-ulp is NOT pinned by
-      // IEEE 754 and may differ between this JVM and the checker's
-      // DuckDB build. Round it to 4 decimals FIRST, run the runmax
-      // over the rounded values (max over identical decimals is
-      // engine-exact), and emit p at 4 decimals from that exact lnmax:
-      // a 1-ulp ln/exp divergence now flips a digit only within 1e-7
-      // of a 1e-4 boundary, and Round14Spec's boundary canary asserts
-      // every cell at all 3 SFs sits ≥1e-3 rounding-units clear.
-      st.withColumn("lnr", round(col("lnlam"), 4))
-        .withColumn("lnmax", max(col("lnr")).over(wd))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("na"), col("nb"), round(col("delta"), 6).as("delta"),
-          col("lnr").as("log_lambda"),
-          round(least(lit(1.0), exp(-col("lnmax"))), 4).as("p"))
-    }),
-
-    "stats_cohen_kappa" -> ((s, d) => {
-      // Cohen's κ between two independent quality judges — do my two
-      // curation filters agree beyond chance? Judge A is the Gopher
-      // hard-rule gate (TextAnalysisOps.gopherRules `keep`), judge B a
-      // lexical-diversity gate (TTR ≥ 1/2, integer cross-multiply).
-      // κ = (n·agree − Σ marginal products) / (n² − Σ marginal
-      // products) — integer-exact until the final division. The n²
-      // products run in DECIMAL(38,0) (long n² overflows past ~3·10^9
-      // docs); the oracle's mirrors are HUGEINT — same exact integers.
-      // Two doc-grain map passes joined on doc_id, one final
-      // aggregate; nothing wider than the doc id and two bits ever
-      // shuffles.
-      val dec = "decimal(38,0)"
-      val docs = t(s, d, "documents")
-      val ja = TextAnalysisOps.gopherRules(docs, "doc_id", "text")
-        .select(col("doc_id"), col("keep").as("ja"))
-      val tk = TermOps.tokens(col("text"))
-      val jb = docs.select(col("doc_id"),
-        (size(array_distinct(tk)) * 2 >= size(tk)).as("jb"))
-      ja.join(jb, "doc_id")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("ja") && col("jb"), 1L).otherwise(0L)).as("n11"),
-          sum(when(col("ja") && !col("jb"), 1L).otherwise(0L)).as("n10"),
-          sum(when(!col("ja") && col("jb"), 1L).otherwise(0L)).as("n01"),
-          sum(when(!col("ja") && !col("jb"), 1L).otherwise(0L)).as("n00"))
-        .select(col("n"), col("n11"), col("n10"), col("n01"), col("n00"),
-          round((col("n").cast(dec) * (col("n11") + col("n00")) -
-              ((col("n11") + col("n10")).cast(dec) *
-                 (col("n11") + col("n01")) +
-               (col("n01") + col("n00")).cast(dec) *
-                 (col("n10") + col("n00"))))
-              .cast("double") /
-            (col("n").cast(dec) * col("n") -
-              ((col("n11") + col("n10")).cast(dec) *
-                 (col("n11") + col("n01")) +
-               (col("n01") + col("n00")).cast(dec) *
-                 (col("n10") + col("n00"))))
-              .cast("double"), 6).as("kappa"))
-    }),
-
-    "stats_levene" -> ((s, d) => {
-      // Brown–Forsythe variance-homogeneity test across event types:
-      // per-group deviations |x − group median| (exact lower-median —
-      // the value at rank floor((n-1)/2)+1, which depends only on the
-      // VALUE distribution, so the compressed (value → count)
-      // histogram + cumulative-rank rule of PackOps.exactRank computes
-      // it with O(distinct values) window work per group instead of a
-      // per-group row_number sort of ALL rows — at 100 TB that sort
-      // was ~8 single-partition passes of 12.5 TB each; r13, same
-      // result by the rank argument). Then the one-way F on the
-      // deviations: medians broadcast (≤ |types| rows); the deviation
-      // pass is a pure map; the test statistic folds from per-group
-      // (n, Σz, Σz²) — one group-keyed exchange, then a ≤ |types|-row
-      // aggregate.
-      // r14 determinism hardening: `value` is 2-decimal by fixture
-      // contract, so the whole statistic scales to exact cent-longs —
-      // z in cents is an exact BIGINT, every co-moment (n, Σz, Σz²) is
-      // integer-exact in both engines (the stats_welch convention; the
-      // 1/10⁴ cent² scale cancels between F's numerator and
-      // denominator), and the ONLY order-dependent float — Σ_g s_g²/n_g
-      // over the ≤|types| group rows — folds in event_type order on
-      // both sides (array_sort + aggregate ↔ list ORDER BY +
-      // list_reduce), so no hashed output derives from an unordered
-      // double sum.
-      val ev = t(s, d, "events")
-        .select(col("event_type"),
-          round(col("value") * 100).cast("long").as("vc"), col("event_id"))
-      val hist = ev.groupBy(col("event_type"), col("vc"))
-        .agg(count(lit(1)).as("c"))
-      val wCum = Window.partitionBy(col("event_type")).orderBy(col("vc"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wT = Window.partitionBy(col("event_type"))
-      val med = hist
-        .withColumn("cum", sum(col("c")).over(wCum))
-        .withColumn("cnt", sum(col("c")).over(wT))
-        .filter(col("cum") >= floor((col("cnt") - 1) * 0.5) + 1)
-        .groupBy(col("event_type")).agg(min(col("vc")).as("medc"))
-      val grp = ev.join(broadcast(med), "event_type")
-        .select(col("event_type"),
-          abs(col("vc") - col("medc")).as("zc"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_g"),
-          sum(col("zc")).as("s_gc"),
-          sum((col("zc") * col("zc")).cast("decimal(38,0)")).as("ss_gc"))
-      grp.agg(sum(col("n_g")).as("n"),
-          count(lit(1)).as("k"),
-          sum(col("s_gc")).as("s"),
-          sum(col("ss_gc")).as("ssq"),
-          array_sort(collect_list(
-            struct(col("event_type"), col("s_gc"), col("n_g")))).as("arr"))
-        .withColumn("sgsq", expr(
-          """aggregate(arr, 0.0D, (acc, x) ->
-            |  acc + CAST(x.s_gc AS DOUBLE) * CAST(x.s_gc AS DOUBLE) /
-            |    CAST(x.n_g AS DOUBLE))""".stripMargin))
-        .select(col("k").cast("int").as("k"),
-          col("n").cast("long").as("n"),
-          round(((col("sgsq") -
-              col("s").cast("double") * col("s").cast("double") /
-                col("n").cast("double")) /
-              (col("k").cast("double") - 1.0)) /
-            ((col("ssq").cast("double") - col("sgsq")) /
-              (col("n").cast("double") - col("k").cast("double"))), 6)
-            .as("f_bf"))
-    }),
-
-    "a19_mode" -> ((s, d) =>
-      // statistical mode per group (§2.5 completeness): each user's
-      // modal event_type, ties to the lexicographically smallest —
-      // max_by over the (user, type) counts, map-side combinable
-      t(s, d, "events")
-        .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
-        .groupBy("user_id")
-        .agg(min_by(struct(col("event_type").as("mode_type"), col("n")),
-          struct((lit(0L) - col("n")).as("negn"), col("event_type"))).as("m"))
-        .select(col("user_id"), col("m.mode_type").as("mode_type"),
-          col("m.n").as("n_mode"))),
-
-    "o8_set_ops" -> ((s, d) => {
-      // set operators (SURVEY §2.6's "available for free" row, now
-      // gated): INTERSECT / EXCEPT / UNION over the clicker and buyer
-      // user sets — audience overlap arithmetic. Each op is one
-      // distinct + one hash set-op exchange; the three one-row
-      // aggregates union into the audit relation.
-      val ev = t(s, d, "events")
-      val clickers = ev.filter(col("event_type") === "click")
-        .select(col("user_id")).distinct()
-      val buyers = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id")).distinct()
-      def agg(df: DataFrame, op: String) =
-        df.agg(lit(op).as("op"), count(lit(1)).as("n_users"),
-          coalesce(sum(col("user_id")), lit(0L)).as("sum_ids"))
-      agg(clickers.intersect(buyers), "intersect")
-        .unionByName(agg(clickers.except(buyers), "except"))
-        .unionByName(agg(clickers.union(buyers).distinct(), "union"))
-    }),
-
-    "t22_interarrival" -> ((s, d) => {
-      // inter-arrival gap distribution per user (engagement-cadence
-      // audit): gaps from one lag window, then EXACT rank-rule order
-      // statistics off each user's sorted gap array — median idx
-      // (n+1) div 2, p90 idx ceil(0.9n) = (9n+9) div 10, all integer
-      // seconds. Arrays are bounded by a user's event count; users
-      // aggregate in parallel.
-      val w = Window.partitionBy("user_id").orderBy("tsec")
-      t(s, d, "events")
-        .select(col("user_id"), expr("CAST(ts AS LONG)").as("tsec"))
-        .withColumn("gap", col("tsec") - lag(col("tsec"), 1).over(w))
-        .filter(col("gap").isNotNull)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_gaps"),
-          min(col("gap")).as("min_gap"), max(col("gap")).as("max_gap"),
-          array_sort(collect_list(col("gap"))).as("a"))
-        .select(col("user_id"), col("n_gaps"), col("min_gap"),
-          element_at(col("a"), expr("CAST((n_gaps + 1) div 2 AS INT)"))
-            .as("median_gap"),
-          element_at(col("a"), expr("CAST((9 * n_gaps + 9) div 10 AS INT)"))
-            .as("p90_gap"),
-          col("max_gap"))
-    }),
-
-    "f19_url_params" -> ((s, _) => {
-      import s.implicits._
-      // URL query-string parsing (F-family coverage beside
-      // extract_domain / canonicalization): str_to_map over the part
-      // after '?', exploded to (param, value) rows — pure map
-      Seq((1L, "https://ex.com/a?x=1&y=2"), (2L, "https://ex.com/b?x=3"),
-        (3L, "https://ex.com/c"))
-        .toDF("fid", "url")
-        .select(col("fid"),
-          explode(expr("str_to_map(get(split(url, '\\\\?'), 1), '&', '=')"))
-            .as(Seq("param", "value")))
-    }),
-
-    "mm_scene_cut" -> ((s, d) => {
-      // scene-cut detection over the frame-energy series (the media
-      // segmentation proxy: a hard cut is the frame with the largest
-      // energy jump): per media, lag-delta over the gated frame_energy
-      // kernel, argmax via max_by — one partitioned window + one
-      // argmax aggregation, ties to the earliest frame.
-      val en = MultimodalOps.frameEnergy(
-        t(s, d, "documents")
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
-        "payload", frameSize = 16, stride = 2)
-      val w = Window.partitionBy("doc_id").orderBy("frame_idx")
-      en.withColumn("dE", col("energy") - lag(col("energy"), 1).over(w))
-        .filter(col("dE").isNotNull)
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_deltas"),
-          max_by(struct(col("frame_idx"), abs(col("dE")).as("jump")),
-            struct(abs(col("dE")), lit(0L) - col("frame_idx"))).as("c"))
-        .select(col("doc_id"), col("n_deltas"),
-          col("c.frame_idx").as("cut_frame"), col("c.jump").as("jump"))
-    }),
-
-    "graph_conductance" -> ((s, d) => {
-      // conductance of the parity cut on the part co-order graph —
-      // φ(S) = cut(S, S̄)/min(vol S, vol S̄), the partition-quality
-      // audit (low φ = the cut respects community structure). Exact
-      // integer cut and volume sums, one mirrored division.
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val und = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
-        .distinct()
-        .withColumn("sa", pmod(expr("a div 4"), lit(2)))
-        .withColumn("sb", pmod(expr("b div 4"), lit(2)))
-      und.agg(count(lit(1)).as("n_edges"),
-          sum(when(col("sa") =!= col("sb"), 1L).otherwise(0L)).as("n_cut"),
-          sum(when(col("sa") === 0, 1L).otherwise(0L) +
-            when(col("sb") === 0, 1L).otherwise(0L)).as("vol0"),
-          sum(when(col("sa") === 1, 1L).otherwise(0L) +
-            when(col("sb") === 1, 1L).otherwise(0L)).as("vol1"))
-        .select(col("n_edges"), col("n_cut"), col("vol0"), col("vol1"),
-          round(col("n_cut").cast("double") /
-            least(col("vol0"), col("vol1")), 6).as("conductance"))
-    }),
-
-    "k25_manifest_append" -> ((s, d) => {
-      // incremental zone-map maintenance on APPEND: each ingest batch
-      // writes its own range layout and manifests ONLY its own files —
-      // the combined index is the union of per-batch manifests, so the
-      // old data is never rescanned (the Iceberg append contract). The
-      // pruned band scan then plans across both batches' matched files;
-      // equivalence with the full filter is the gate, as in k15.
-      val dir = Scratch.dir("k25")
-        .toString
-      val ev = t(s, d, "events")
-        .select(col("event_id"), col("user_id"), col("value"))
-      val b1 = ev.filter(col("event_id") % 2 === 0)
-      val b2 = ev.filter(col("event_id") % 2 === 1)
-      LayoutOps.writeRangeLayout(b1, "event_id", s"$dir/b1", numFiles = 4)
-      LayoutOps.writeRangeLayout(b2, "event_id", s"$dir/b2", numFiles = 4)
-      // incremental index: manifest(b2) is built from batch-2 files only
-      val mf = LayoutOps.fileManifest(s, s"$dir/b1", "event_id")
-        .unionByName(LayoutOps.fileManifest(s, s"$dir/b2", "event_id"))
-      val mx = ev.agg(max(col("event_id"))).first().getLong(0)
-      val (lo, hi) = (mx / 4, mx / 2)
-      val keep = mf.filter(col("max_k").cast("long") >= lo &&
-          col("min_k").cast("long") <= hi)
-        .select(col("file")).collect().map(_.getString(0)).toSeq
-      s.read.parquet(keep: _*)
-        .filter(col("event_id").between(lo, hi))
-        .agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("sum_id"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"),
-          round(sum(col("value")), 2).as("sum_value"))
-    }),
-
-    "t21_ccf" -> ((s, d) => {
-      // cross-correlation between the click and purchase daily series at
-      // lags −7..+7 — the lead-lag discovery tool ("do purchases trail
-      // clicks, and by how many days"). Both series live on ONE dense
-      // global day grid (missing days are 0 — counting processes), all
-      // co-moments are exact integers, and r_k is one mirrored double
-      // expression normalized by the full-series σx·σy. Lag pairs via
-      // the equi-join on day+k, the t15 shape.
-      val daily = t(s, d, "events")
-        .select(expr("CAST(ts AS LONG) div 86400").as("day"),
-          col("event_type"))
-        .groupBy("day").agg(
-          sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
-      val grid = daily.agg(min("day").as("d0"), max("day").as("d1"))
-        .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("day"), "left_outer")
-        .select(col("day"), coalesce(col("x"), lit(0L)).as("x"),
-          coalesce(col("y"), lit(0L)).as("y"))
-        .localCheckpoint() // base stats + 15 lag joins
-      val base = grid.agg(count(lit(1)).as("n"), sum("x").as("sx"),
-        sum("y").as("sy"), sum(col("x") * col("x")).as("qx"),
-        sum(col("y") * col("y")).as("qy"))
-      grid.select(col("day"), col("x"),
-          explode(sequence(lit(-7L), lit(7L))).as("k"))
-        .withColumn("day2", col("day") + col("k"))
-        .join(grid.select(col("day").as("day2"), col("y").as("y2")),
-          Seq("day2"))
-        .groupBy("k")
-        .agg(count(lit(1)).as("cnt"), sum(col("x") * col("y2")).as("sxy"),
-          sum(col("x")).as("sxw"), sum(col("y2")).as("syw"))
-        .crossJoin(broadcast(base))
-        .select(col("k"), col("cnt"),
-          round(((col("n") * col("n")).cast("double") * col("sxy") -
-            col("n").cast("double") * (col("sx") * col("syw") +
-              col("sy") * col("sxw")) +
-            col("cnt").cast("double") * (col("sx") * col("sy"))) /
-            (col("n").cast("double") *
-              sqrt((col("n").cast("double") * col("qx") -
-                col("sx").cast("double") * col("sx")) *
-                (col("n").cast("double") * col("qy") -
-                  col("sy").cast("double") * col("sy")))), 6).as("ccf"))
-    }),
-
-    "text_keywords" -> ((s, d) => {
-      // per-document keyword extraction: top-3 terms by tf·idf — the
-      // summary/labeling primitive every corpus browser ships. One
-      // (term)-keyed df pass broadcasts back onto the (doc, term) tf
-      // relation; the per-doc top-3 is a WindowGroupLimit (pre-shuffle
-      // heaps, the o7 shape), never a global sort.
-      // NO checkpoint here: both consumers re-run the map-only tokenize
-      // (pipelined, embarrassingly parallel) rather than serializing a
-      // corpus-sized (doc, term, tf) materialization — measured 3.1×
-      // at ×10 with the eager checkpoint vs 1.6× without
-      val tf = TermOps.termFrequencies(t(s, d, "documents"), "doc_id", "text")
-      val dft = tf.groupBy("term").agg(count(lit(1)).as("df"))
-      val n = tf.select(countDistinct(col("doc_id")).as("nd"))
-      tf.join(dft, "term").crossJoin(broadcast(n))
-        .withColumn("score",
-          col("tf") * log(col("nd").cast("double") / col("df")))
-        .withColumn("rk", row_number().over(Window.partitionBy("doc_id")
-          .orderBy(col("score").desc, col("term").asc)))
-        .filter(col("rk") <= 3)
-        .select(col("doc_id"), col("rk"), col("term"),
-          round(col("score"), 6).as("score"))
-    }),
-
-    "search_mlt" -> ((s, d) => {
-      // more-like-this retrieval: the query is DERIVED from a document
-      // (doc 0's top-3 tf·idf terms, ties → term asc) and fed to the
-      // gated BM25 ranker, query doc excluded — the "related documents"
-      // feature. The 3-term query collects on the driver because the
-      // query IS the serving-side input of any retrieval path (metadata
-      // scale, same tier as the manifest path lists).
-      import s.implicits._
-      val docs = t(s, d, "documents")
-      // NARROW derivation: only doc 0's own vocabulary needs df — its
-      // term set (one document, bounded) filters the corpus scan, so
-      // the derivation never builds the full (doc, term, tf) relation
-      // (which made the first cut 3.4× at ×10)
-      val d0tf = docs.filter(col("doc_id") === 0L)
-        .select(explode(TermOps.tokens(col("text"))).as("term"))
-        .groupBy("term").agg(count(lit(1)).as("tf"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val d0terms = d0tf.keys.toSeq
-      val dfMap = docs
-        .select(explode(array_distinct(filter(TermOps.tokens(col("text")),
-          t => t.isin(d0terms: _*)))).as("term"))
-        .groupBy("term").agg(count(lit(1)).as("df"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // nd = docs with ≥ 1 token (the tf relation's doc universe)
-      val nd = docs.filter(size(TermOps.tokens(col("text"))) > 0)
-        .count().toDouble
-      val qTerms = d0terms
-        .map(t0 => (t0, d0tf(t0) * math.log(nd / dfMap(t0))))
-        .sortBy { case (t0, sc) => (-sc, t0) }.take(3).map(_._1)
-      TermOps.bm25Search(docs, "doc_id", "text", qTerms, k = 21)
-        .filter(col("doc_id") =!= 0L)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("int"))
-        .filter(col("rank") <= 20)
-        .select(col("rank"), col("doc_id"), round(col("score"), 4).as("score"))
-    }),
-
-    "sample_contrastive" -> ((s, d) => {
-      // contrastive pair mining for embedding training: per anchor, the
-      // hardest POSITIVE (nearest same-label vector by exact cosine) and
-      // a deterministic hash-drawn NEGATIVE (different label) — the
-      // (anchor, pos, neg) triplets a contrastive loss consumes. Both
-      // picks are one corpus pass against the broadcast 20-anchor set
-      // with map-side max_by/min_by argmax aggregation; at larger
-      // anchor counts the positive leg becomes IVF-per-label (the gated
-      // ann path), same contract.
-      val emb = t(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>")
-          .as("embedding"), col("label"))
-        .localCheckpoint() // anchors + the two scans
-      val anchors = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("anchor_id"),
-          col("embedding").as("a_emb"), col("label").as("a_label"))
-      val pos = emb.crossJoin(broadcast(anchors))
-        .filter(col("label") === col("a_label") &&
-          col("vec_id") =!= col("anchor_id"))
-        .withColumn("sim", SimilarityOps.cosine(col("a_emb"), col("embedding")))
-        .groupBy("anchor_id")
-        .agg(max_by(struct(col("vec_id").as("pos_id"), col("sim")),
-          struct(col("sim"), lit(0L) - col("vec_id"))).as("p"))
-        .select(col("anchor_id"), col("p.pos_id").as("pos_id"),
-          round(col("p.sim"), 4).as("pos_sim"))
-      val neg = emb.crossJoin(broadcast(anchors.select("anchor_id", "a_label")))
-        .filter(col("label") =!= col("a_label"))
-        .withColumn("h",
-          SimilarityOps.hash32Col(col("anchor_id") * 1000003L + col("vec_id")))
-        .groupBy("anchor_id")
-        .agg(min_by(col("vec_id"), struct(col("h"), col("vec_id")))
-          .as("neg_id"))
-      pos.join(neg, Seq("anchor_id"))
-    }),
-
-    "t20_pacf" -> ((s, d) => {
-      // partial autocorrelation at lags 1..7 per event_type — the AR
-      // order-selection diagnostic beside t15's ACF (pacf_k ≈ 0 beyond
-      // the true AR order). Levinson-Durbin recursion over the SAME
-      // exact-integer ACF chain as t15: the per-type [r₁..r₇] array is
-      // assembled ordered, and the recursion is one nested ORDERED fold
-      // (state = [m, φ₁..φ_m, pacf₁..pacf_m], growing by 2 per lag) —
-      // identical operation order on both engines ⇒ bit-identical
-      // doubles before the final round. O(cells) work per type after
-      // the t15-shaped grid aggregations.
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"), explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-        .localCheckpoint() // base stats + 7 lag joins (the t15 shape)
-      val base = grid.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("c").as("s"),
-          sum(col("c") * col("c")).as("q"))
-      val acf = grid
-        .select(col("event_type"), col("day"), col("c"),
-          explode(sequence(lit(1L), lit(7L))).as("k"))
-        .withColumn("day2", col("day") + col("k"))
-        .join(grid.select(col("event_type"), col("day").as("day2"),
-          col("c").as("c2")), Seq("event_type", "day2"))
-        .groupBy("event_type", "k")
-        .agg(sum(col("c") * col("c2")).as("sxy"),
-          sum(col("c")).as("sh"), sum(col("c2")).as("st"))
-        .join(base, "event_type")
-        .select(col("event_type"), col("k"),
-          (((col("n") * col("n")).cast("double") * col("sxy") -
-            col("n").cast("double") * col("s") * (col("sh") + col("st")) +
-            (col("n") - col("k")).cast("double") * col("s") * col("s")) /
-            ((col("n") * col("n")).cast("double") * col("q") -
-              col("n").cast("double") * col("s") * col("s"))).as("r"))
-      acf.groupBy("event_type")
-        .agg(array_sort(collect_list(struct(col("k"), col("r")))).as("ra"))
-        .withColumn("racf", expr("transform(ra, p -> p.r)"))
-        .withColumn("st", expr(
-          // Levinson-Durbin: acc = [m, phi_1..phi_m, pacf_1..pacf_m]
-          """aggregate(sequence(1, 7), array(CAST(0.0 AS DOUBLE)),
-            |  (acc, k) -> concat(
-            |    array(CAST(k AS DOUBLE)),
-            |    transform(slice(sequence(1, 7), 1, CAST(element_at(acc, 1) AS INT)),
-            |      j -> element_at(acc, 1 + j)
-            |        - ((element_at(racf, k)
-            |             - aggregate(slice(sequence(1, 7), 1, CAST(element_at(acc, 1) AS INT)),
-            |                 CAST(0.0 AS DOUBLE),
-            |                 (s2, j2) -> s2 + element_at(acc, 1 + j2)
-            |                   * element_at(racf, k - j2)))
-            |           / (CAST(1.0 AS DOUBLE)
-            |             - aggregate(slice(sequence(1, 7), 1, CAST(element_at(acc, 1) AS INT)),
-            |                 CAST(0.0 AS DOUBLE),
-            |                 (s3, j3) -> s3 + element_at(acc, 1 + j3)
-            |                   * element_at(racf, j3))))
-            |          * element_at(acc, 1 + CAST(element_at(acc, 1) AS INT) + 1 - j)),
-            |    array((element_at(racf, k)
-            |             - aggregate(slice(sequence(1, 7), 1, CAST(element_at(acc, 1) AS INT)),
-            |                 CAST(0.0 AS DOUBLE),
-            |                 (s4, j4) -> s4 + element_at(acc, 1 + j4)
-            |                   * element_at(racf, k - j4)))
-            |           / (CAST(1.0 AS DOUBLE)
-            |             - aggregate(slice(sequence(1, 7), 1, CAST(element_at(acc, 1) AS INT)),
-            |                 CAST(0.0 AS DOUBLE),
-            |                 (s5, j5) -> s5 + element_at(acc, 1 + j5)
-            |                   * element_at(racf, j5)))),
-            |    slice(acc, 2 + CAST(element_at(acc, 1) AS INT),
-            |      CAST(element_at(acc, 1) AS INT)),
-            |    array((element_at(racf, k)
-            |             - aggregate(slice(sequence(1, 7), 1, CAST(element_at(acc, 1) AS INT)),
-            |                 CAST(0.0 AS DOUBLE),
-            |                 (s6, j6) -> s6 + element_at(acc, 1 + j6)
-            |                   * element_at(racf, k - j6)))
-            |           / (CAST(1.0 AS DOUBLE)
-            |             - aggregate(slice(sequence(1, 7), 1, CAST(element_at(acc, 1) AS INT)),
-            |                 CAST(0.0 AS DOUBLE),
-            |                 (s7, j7) -> s7 + element_at(acc, 1 + j7)
-            |                   * element_at(racf, j7))))))""".stripMargin))
-        .select(col("event_type"),
-          posexplode(expr("slice(st, 2 + 7, 7)")).as(Seq("k0", "pacf")))
-        .select(col("event_type"), (col("k0") + 1).cast("long").as("k"),
-          round(col("pacf"), 6).as("pacf"))
-    }),
-
-    "w7_asof_nearest" -> ((s, d) => {
-      // nearest-in-time as-of join (either direction): each purchase
-      // picks the CLOSEST view, not merely the latest preceding one —
-      // the alignment rule for sensor/metric joins where the next
-      // reading can be closer than the previous. One sorted pass per
-      // key carries both neighbors (AsofOps.asofNearest); selection
-      // compares EXACT microsecond distance (oracle: ORDER BY delta_us)
-      // so same-second neighbors never pseudo-tie; the reported delta
-      // stays in whole floor-seconds; exact-equidistant prefers prev.
-      val ev = t(s, d, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("ts"), col("user_id"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("view_id"))
-      AsofOps.asofNearest(purchases, views, "user_id", "ts", Seq("view_id"))
-        .select(col("event_id"), date_format(col("ts"), tsFmt).as("ts_str"),
-          date_format(col("matched_ts"), tsFmt).as("matched_ts_str"),
-          col("delta"), col("view_id"))
-    }),
-
-    "pack_doc_mask" -> ((s, d) => {
-      // packed sequences WITH document-boundary masks — the artifact an
-      // attention-masking trainer actually needs: per (shard, seq), the
-      // in-sequence start offset of every packed document, in pack
-      // order. Same snake-shard + contiguous-fill chain as pack_e2e;
-      // the boundary list is an ordered array fold (sorted by doc_id,
-      // the cumulative order), emitted as a comma-joined string so the
-      // gate compares it byte-for-byte.
-      val tc = t(s, d, "documents")
-        .select(col("doc_id"),
-          TextAnalysisOps.wsTokenCount(col("text")).cast("long").as("nt"))
-      val sh = PackOps.snakeShards(tc, "doc_id", "nt", nShards = 8)
-      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      sh.withColumn("cb", coalesce(sum(col("size")).over(w), lit(0L)))
-        .withColumn("seq", expr("cb div 2048"))
-        .withColumn("off", col("cb") % 2048)
-        .groupBy(col("shard"), col("seq"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("size")).as("sum_tokens"),
-          array_join(transform(
-            array_sort(collect_list(struct(col("doc_id"), col("off")))),
-            p => p.getField("off").cast("string")), ",").as("boundaries"))
-    }),
-
-    "st_smooth" -> ((s, _) => {
-      // streaming per-key EWMA: O(1) state (count + level), batch rows
-      // fold in event-time order, updated levels emit every batch
-      // (Update mode) — the serving read keeps each key's LATEST row.
-      // Two micro-batches exercise the state carry-over; α = 1/2 keeps
-      // levels exact dyadic rationals, so the trace replays exactly.
-      StreamTrace.run[Event](s, "st_smooth", "update")(
-          EventStreamOps.ewmaByKey(_))(
-        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
-          Event(1, wall("2024-01-01 00:02:00"), 2.0),
-          Event(2, wall("2024-01-01 00:03:00"), 10.0)),
-        Seq(Event(1, wall("2024-01-01 00:04:00"), 3.0),
-          Event(2, wall("2024-01-01 00:05:00"), 20.0)))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)))
-        .filter(col("rk") === 1)
-        .select(col("user_id"), col("n_events"),
-          round(col("level"), 6).as("level"))
-    }),
-
-    "k29_quarantine" -> ((s, d) => {
-      import s.implicits._
-      // write-time constraint enforcement with a QUARANTINE table (the
-      // Delta CHECK-constraint / DLT expect-or-drop shape): every row
-      // routes exactly once — clean rows to the target, violations to
-      // quarantine stamped with the FIRST failing rule (fixed
-      // precedence: null id ≻ empty text ≻ out-of-domain lang) so a
-      // pipeline can replay quarantined rows after a fix. The gate
-      // reads BOTH written tables back and reconciles counts/sums per
-      // destination and reason.
-      val planted = Seq(
-        (Option(9000001L), "", "en"),
-        (Option(9000002L), "ok text here", "xx"),
-        (Option.empty[Long], "no id row", "en"),
-        (Option(9000004L), "fine document text", "de")
-      ).toDF("doc_id", "text", "lang")
-      val routed = t(s, d, "documents")
-        .select(col("doc_id"), col("text"), col("lang"))
-        .unionByName(planted)
-        .withColumn("reason",
-          when(col("doc_id").isNull, "null_id")
-            .when(col("text").isNull || length(col("text")) === 0,
-              "empty_text")
-            .when(!col("lang").isin("en", "de", "es", "fr", "zh"),
-              "bad_lang"))
-      val dir = Scratch.dir("k29")
-        .toString
-      routed.filter(col("reason").isNull).drop("reason")
-        .write.parquet(s"$dir/target")
-      routed.filter(col("reason").isNotNull)
-        .write.parquet(s"$dir/quarantine")
-      s.read.parquet(s"$dir/target")
-        .agg(count(lit(1)).as("n"),
-          sum(coalesce(col("doc_id"), lit(0L))).as("sum_ids"))
-        .select(lit("target").as("dest"), lit("ok").as("reason"),
-          col("n"), col("sum_ids"))
-        .unionByName(s.read.parquet(s"$dir/quarantine")
-          .groupBy(col("reason"))
-          .agg(count(lit(1)).as("n"),
-            sum(coalesce(col("doc_id"), lit(0L))).as("sum_ids"))
-          .select(lit("quarantine").as("dest"), col("reason"),
-            col("n"), col("sum_ids")))
-    }),
-
-    "k31_delete_where" -> ((s, d) => {
-      // copy-on-write DELETE WHERE (the Delta/Iceberg COW path, the
-      // sibling of k24's merge-on-read deletion vectors): only files
-      // CONTAINING matches are rewritten without the deleted rows;
-      // untouched files move into the new table version as-is (here a
-      // byte copy; a production table format re-links the file in
-      // metadata — zero data movement). The range layout localizes the
-      // doc_id band to a file subset, so the rewrite touches < total
-      // files (pinned in Round11OpsSpec); the gate is the filtered
-      // aggregate.
-      val dir = Scratch.dir("k31")
-        .toString
-      LayoutOps.writeRangeLayout(
-        t(s, d, "documents").select(col("doc_id"), col("n_chars")),
-        "doc_id", s"$dir/v1", numFiles = 4)
-      LayoutOps.deleteWhereCow(s, s"$dir/v1", s"$dir/v2",
-        col("doc_id") % 100L === 7L && col("doc_id") < 200L)
-      s.read.parquet(s"$dir/v2")
-        .agg(count(lit(1)).as("n_rows"), sum(col("doc_id")).as("sum_ids"),
-          sum(col("n_chars")).as("sum_chars"))
-    }),
-
-    "k30_bucket_prune" -> ((s, d) => {
-      // bucket PRUNING, the other payoff of paying the shuffle at write
-      // time (k14 pins the zero-exchange join): a point lookup on the
-      // bucketing key plans only the key's bucket — at 1000 buckets a
-      // 100 TB table answers the lookup from 0.1% of its files, no
-      // index needed. Round11OpsSpec pins SelectedBucketsCount 1/8 in
-      // the scan; the oracle is the plain filtered aggregate.
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"))
-      BucketedTables.writeBucketed(li, "k30_lineitem", "l_orderkey", 8)
-      // DisableUnnecessaryBucketedScan would un-bucket a scan no join
-      // exploits — but pruning NEEDS the bucketed scan; keep it (the
-      // conf only trades one-file-per-bucket task granularity, which
-      // is exactly what a pruned point lookup wants). The flag is
-      // scoped to a CLONED session (own SQLConf, shared catalog +
-      // SparkContext): it must hold at planning time — when the caller
-      // executes the returned frame, after this builder returns — so a
-      // set/finally-restore here would restore too early, and setting
-      // it on `s` would leak into every later query of a shared
-      // Verify/Bench session (r11 finding)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false")
-      ss.table("k30_lineitem")
-        .filter(col("l_orderkey") === 7L)
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"))
-    }),
-
-    "k28_shallow_clone" -> ((s, d) => {
-      // SHALLOW CLONE (Delta CLONE semantics): a clone is METADATA ONLY
-      // — the source's current file list recorded beside the clone, no
-      // data copied — and it pins a snapshot: the source keeps evolving
-      // (an append lands after cloning), the clone still reads exactly
-      // the files it recorded. The file-list collect at clone read is
-      // the InMemoryFileIndex floor (O(files of the clone), the k25
-      // discipline). The gate shows source and clone DIVERGING: source
-      // sees the append, clone doesn't.
-      import s.implicits._
-      val dir = Scratch.dir("k28")
-        .toString
-      t(s, d, "documents").select(col("doc_id"), col("n_chars"))
-        .repartition(4).write.parquet(s"$dir/src")
-      s.read.parquet(s"$dir/src")
-        .select(input_file_name().as("f")).distinct()
-        .write.parquet(s"$dir/clone/_files")
-      // the source evolves AFTER the clone
-      Seq((9000001L, 11L), (9000002L, 22L), (9000003L, 33L))
-        .toDF("doc_id", "n_chars")
-        .write.mode("append").parquet(s"$dir/src")
-      val cloneFiles = s.read.parquet(s"$dir/clone/_files")
-        .collect().map(_.getString(0)).toIndexedSeq
-      val clone = s.read.parquet(cloneFiles: _*)
-      val src = s.read.parquet(s"$dir/src")
-      src.agg(count(lit(1)).as("n_src"), sum(col("doc_id")).as("sum_src"))
-        .crossJoin(broadcast(clone.agg(count(lit(1)).as("n_clone"),
-          sum(col("doc_id")).as("sum_clone"))))
-    }),
-
-    "k27_zorder_skip" -> ((s, d) => {
-      // 2-D data skipping through the planning-time index: events land
-      // Z-ORDERED on (user_id, event_id) so every file covers a tight
-      // rectangle in BOTH dimensions, the long-format multi-column
-      // manifest (`_manifest_multi`, the Delta/Iceberg column-stats
-      // shape) records each file's per-column [min, max], and a plain
-      // filtered read through IndexedFileIndex prunes files for a
-      // predicate on EITHER dimension — here a user_id band and an
-      // event_id band in one conjunction (files must intersect both).
-      // The oracle's full-scan filter proves pruning dropped nothing;
-      // Round11OpsSpec pins files-read < total.
-      val ev = t(s, d, "events")
-        .select(col("event_id"), col("user_id"), col("value"))
-      val dir = Scratch.dir("k27")
-        .toString + "/ev"
-      LayoutOps.zorder(ev, pmod(col("user_id"), lit(65536L)),
-          pmod(col("event_id"), lit(65536L)), numFiles = 8)
-        .write.parquet(dir)
-      LayoutOps.writeMultiManifest(s, dir, Seq("user_id", "event_id"))
-      val mx = ev.agg(max(col("user_id")).as("mu"), max(col("event_id"))
-        .as("me")).first()
-      val (mu, me) = (mx.getLong(0), mx.getLong(1))
-      graft.sources.IndexedFileIndex.read(s, dir, "user_id")
-        .filter(col("user_id") >= mu / 4 && col("user_id") <= mu / 2 &&
-          col("event_id") <= me / 2)
-        .agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("sum_eid"),
-          min(col("user_id")).as("min_uid"), max(col("user_id")).as("max_uid"),
-          round(sum(col("value")), 2).as("sum_value"))
-    }),
-
-    "sketch_bloom_fpr" -> ((s, _) => {
-      // the bloom family's SIZING math, measured: 200 members in a
-      // deliberately small m=4096 / k=2 filter, probed with 1000
-      // disjoint keys — the measured false-positive rate lands beside
-      // the (1 − e^{−kn/m})^k estimate the operators' scaladocs size
-      // by. The eval row for j7/bloomFlag, the way dedup_minhash_eval
-      // evals the banding family. exp argument is the exact dyadic
-      // −400/4096, so both engines call exp on the identical double.
-      val members = s.range(0, 200).select(col("id").as("mk"))
-      val probes = s.range(100000, 101000).select(col("id").as("pk"))
-      PruneOps.bloomFlag(probes, "pk", members, "mk", "maybe",
-          mBits = 4096, k = 2)
-        .agg(count(lit(1)).as("n_probes"),
-          sum(col("maybe").cast("long")).as("n_flagged"))
-        .select(col("n_probes"), col("n_flagged"),
-          round(col("n_flagged").cast("double") / col("n_probes"), 6)
-            .as("fpr"),
-          round(pow(lit(1.0) - exp(lit(-0.09765625)), 2), 6)
-            .as("fpr_theory"))
-    }),
-
-    "st_cdc_apply" -> ((s, _) => {
-      // streaming CDC apply (EventStreamOps.cdcApply): latest-version-
-      // wins upserts, tombstone deletes, and a STALE change (key 1's
-      // v2 arriving after v3) that must not regress the key — the
-      // serving read keeps each key's newest emission
-      StreamTrace.run[Change](s, "st_cdc_apply", "update")(
-          EventStreamOps.cdcApply(_))(
-        Seq(Change(1L, "upsert", 10.0, 1L), Change(2L, "upsert", 20.0, 1L)),
-        Seq(Change(1L, "upsert", 11.0, 3L), Change(2L, "delete", 0.0, 2L)),
-        // stale v2 for key 1 (already at v3) + a fresh key
-        Seq(Change(1L, "upsert", 99.0, 2L), Change(3L, "upsert", 30.0, 1L)))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("key")).orderBy(col("version").desc)))
-        .filter(col("rk") === 1)
-        .select(col("key"), col("value"), col("version"), col("deleted"))
-    }),
-
-    "st_funnel" -> ((s, _) => {
-      // streaming funnel progression (EventStreamOps.funnelStages), the
-      // ingest-time sibling of w10_funnel: each stage fires once, only
-      // at-or-after the previous stage's entry; a click BEFORE the
-      // user's first view (u3 batch 1, u2 batch 4) never advances; a
-      // repeat purchase (u1 batch 4) never re-fires
-      StreamTrace.run[FunnelEvent](s, "st_funnel", "update")(
-          EventStreamOps.funnelStages(_))(
-        Seq(FunnelEvent(1, "view", at(0L)), FunnelEvent(3, "click", at(5000L))),
-        Seq(FunnelEvent(1, "click", at(10000L)),
-          FunnelEvent(2, "view", at(20000L))),
-        // u3's view and click land in ONE batch out of stage order in
-        // arrival terms — the event-time sort admits both
-        Seq(FunnelEvent(3, "click", at(40000L)),
-          FunnelEvent(3, "view", at(30000L)),
-          FunnelEvent(1, "purchase", at(50000L))),
-        Seq(FunnelEvent(2, "click", at(15000L)),
-          FunnelEvent(1, "purchase", at(60000L))))
-        .select(col("user_id"), col("stage"), (col("ts_ms") - T0).as("ts_ms"))
-    }),
-
-    "dedup_cross_corpus" -> ((s, d) => {
-      // benchmark decontamination at the NEAR-DUP level (the sibling of
-      // text_contamination's exact n-gram rule): banded-MinHash buckets
-      // per side, candidates only ACROSS the train/eval split, exact
-      // Jaccard verification ≥ 0.4 — a lightly-edited eval doc slips
-      // past exact n-grams but not past this. Halves by doc_id parity
-      // stand in for the train/benchmark corpora.
-      val docs = t(s, d, "documents")
-      DedupOps.crossCorpusNearDups(
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text", threshold = 0.4)
-    }),
-
-    "stats_mutual_info" -> ((s, d) => {
-      // mutual information I(event_type; weekday) in bits — the
-      // feature-relevance audit between two categoricals, from EXACT
-      // cell/margin counts; the only doubles are inside one ORDERED
-      // fold over the ≤ |X|·|Y| sorted cells (the stats_divergence
-      // ln(x)/ln(2) convention), so engines can't reorder the sum.
-      val ev = t(s, d, "events").select(col("event_type"),
-        pmod(expr("CAST(ts AS LONG) div 86400") + 4, lit(7)).as("weekday"))
-      val cells = ev.groupBy("event_type", "weekday")
-        .agg(count(lit(1)).as("nxy"))
-        .localCheckpoint() // feeds margins and the fold
-      val mx = cells.groupBy("event_type").agg(sum("nxy").as("nx"))
-      val my = cells.groupBy("weekday").agg(sum("nxy").as("ny"))
-      val n = cells.agg(sum("nxy").as("nn"))
-      cells.join(mx, "event_type").join(my, "weekday")
-        .crossJoin(broadcast(n))
-        .agg(count(lit(1)).as("n_cells"),
-          array_sort(collect_list(struct(col("event_type"), col("weekday"),
-            col("nxy"), col("nx"), col("ny"), col("nn")))).as("arr"))
-        .select(col("n_cells"),
-          round(aggregate(col("arr"), lit(0.0d), (acc, x) =>
-            acc + x.getField("nxy").cast("double") / x.getField("nn") *
-              (log(x.getField("nxy").cast("double") * x.getField("nn") /
-                (x.getField("nx").cast("double") * x.getField("ny"))) /
-                log(lit(2.0)))), 6).as("mi_bits"))
-    }),
-
-    "embed_bias_proj" -> ((s, d) => {
-      // linear probe along the difference-of-means direction (the
-      // debiasing/steering primitive: WEAT-style bias axes, concept
-      // probes): w = mean(label 0) − mean(label 1) per dimension, then
-      // every vector's projection ⟨x, w⟩ as an ordered fold against the
-      // broadcast 64-weight direction — one (label, dim) aggregate
-      // builds the model, one map scores the corpus
-      val emb = t(s, d, "embeddings")
-        .withColumn("emb", col("embedding").cast("array<double>"))
-      val mom = emb.filter(col("label").isin(0, 1))
-        .select(col("label"), posexplode(col("emb")).as(Seq("i", "x")))
-        .groupBy("i")
-        .agg(
-          (sum(when(col("label") === 0, col("x")).otherwise(lit(0.0d))) /
-            sum(when(col("label") === 0, 1L).otherwise(0L))).as("m0"),
-          (sum(when(col("label") === 1, col("x")).otherwise(lit(0.0d))) /
-            sum(when(col("label") === 1, 1L).otherwise(0L))).as("m1"))
-      val dir = mom
-        .agg(transform(array_sort(collect_list(
-          struct(col("i"), (col("m0") - col("m1")).as("w")))),
-          x => x.getField("w")).as("w"))
-      emb.crossJoin(broadcast(dir))
-        .select(col("vec_id"), col("label"),
-          round(aggregate(zip_with(col("emb"), col("w"), (a, b) => a * b),
-            lit(0.0d), (acc, x) => acc + x), 6).as("proj"))
-    }),
-
-    "embed_effective_rank" -> ((s, d) => {
-      // embedding-space collapse metrics WITHOUT an eigendecomposition:
-      // for the mean-corrected scatter A, participation ratio
-      // (tr A)²/‖A‖_F² = (Σλ)²/Σλ² — the effective number of active
-      // directions (d when isotropic, →1 when collapsed) — plus the
-      // per-vector total variance and normalized Frobenius mass, all
-      // straight from the d² cells one self-join already produced
-      val emb = t(s, d, "embeddings")
-      val a = SimilarityOps.scatterMatrix(emb)
-      val n = emb.agg(count(lit(1)).cast("double").as("n"))
-      a.agg(
-          sum(when(col("i") === col("j"), col("aij")).otherwise(lit(0.0d)))
-            .as("tr"),
-          sum(col("aij") * col("aij")).as("fro2"))
-        .crossJoin(broadcast(n))
-        .select(round(col("tr") / col("n"), 6).as("var_total"),
-          round(col("fro2") / (col("n") * col("n")), 6).as("fro_norm"),
-          round(col("tr") * col("tr") / col("fro2"), 4).as("pr"))
-    }),
-
-    "embed_pca_power" -> ((s, d) =>
-      // dominant principal component by 3 power rounds on the exact
-      // 64×64 scatter (SimilarityOps.pcaTop): λ is the top-direction
-      // variance mass (the "is the space collapsing" drift number),
-      // the leading components seed whitening/debias transforms. All
-      // matrix·vector and norm steps are ordered folds, v₀ = 1⃗ —
-      // engine-identical IEEE sequences; covariance sum-order noise is
-      // the only divergence and rounding absorbs it
-      SimilarityOps.pcaTop(t(s, d, "embeddings"), iters = 3)
-        .select(round(col("lambda"), 4).as("lam") +:
-          (1 to 8).map(k =>
-            round(element_at(col("v"), k), 6).as(s"c$k")): _*)),
-
-    "embed_whiten" -> ((s, d) =>
-      // whitening statistics per embedding dimension (the retrieval
-      // preprocessing step: mean-center + unit-scale before cosine):
-      // one (pos)-keyed pass over the posexploded corpus yields the
-      // 64-row (μ, σ) transform table — the artifact a serving layer
-      // broadcasts. Population σ from the same two float sums.
-      t(s, d, "embeddings")
-        .select(posexplode(col("embedding").cast("array<double>"))
-          .as(Seq("pos", "x")))
-        .groupBy("pos")
-        .agg(count(lit(1)).as("n"), sum("x").as("s"),
-          sum(col("x") * col("x")).as("q"))
-        .select(col("pos").cast("long").as("pos"), col("n"),
-          round(col("s") / col("n"), 6).as("mu"),
-          round(sqrt((col("q") - col("s") * col("s") / col("n")) /
-            col("n")), 6).as("sigma"))),
-
-    "a18_grouping_sets" -> ((s, d) => {
-      // explicit GROUPING SETS — the third of the aggregation-lattice
-      // trio (a14 ROLLUP, a17 CUBE): a hand-picked subset of the
-      // lattice in ONE Expand + ONE shuffle, with the grouping id
-      // computed explicitly (grouping(a)·2 + grouping(b)) so both
-      // engines agree bit-for-bit on which row is which subtotal.
-      t(s, d, "lineitem").createOrReplaceTempView("lineitem_gs")
-      s.sql("""
-        SELECT coalesce(l_returnflag, '_all') AS flag,
-               coalesce(l_linestatus, '_all') AS status,
-               CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus)
-                    AS BIGINT) AS gid,
-               count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-        FROM lineitem_gs
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                (l_returnflag), ())""")
-    }),
-
-    "text_langid_eval" -> ((s, d) =>
-      // confusion matrix of the n-gram lang-id heuristic against the
-      // labeled lang column — the precision audit a heuristic gate needs
-      // before it filters a corpus (which languages it eats, which it
-      // leaks). One tokenise map + one (label, prediction) exchange.
-      TextAnalysisOps.withLangId(t(s, d, "documents"), "text")
-        .groupBy(col("lang"), col("pred_lang"))
-        .agg(count(lit(1)).as("n"))),
-
-    "curate_source_contamination" -> ((s, d) => {
-      // per-source contamination audit — text_overlap_frac's graded
-      // 8-gram benchmark overlap (every 97th doc plays the benchmark,
-      // the curate_e2e convention) rolled up to the acquisition
-      // channel: the table a curation run reads to decide which feed
-      // to drop or re-crawl when leakage concentrates in one source.
-      // Contamination is the integer cross-multiply 2·hits ≥ grams
-      // (no rounded-0.5 boundary); docs too short to produce an 8-gram
-      // count as clean (no grams → nothing to leak).
-      val docs = t(s, d, "documents")
-      val contam = TextAnalysisOps.overlapFraction(docs, "doc_id", "text",
-          docs.filter(col("doc_id") % 97 === 0), "text", n = 8)
-        .select(col("doc_id"),
-          (col("n_hits") * 2 >= col("n_grams")).as("contam"))
-      docs.select(col("doc_id"), col("source"))
-        .join(contam, Seq("doc_id"), "left_outer")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(coalesce(col("contam"), lit(false)), 1L)
-            .otherwise(0L)).as("n_contam"))
-        .withColumn("contam_rate",
-          round(col("n_contam").cast("double") / col("n_docs"), 4))
-    }),
-
-    "curate_source_card" -> ((s, d) =>
-      // per-source health card — the groupBy sibling of the corpus-wide
-      // curate_card: each ingestion source gets its own size, exact-dup
-      // rate, mean length, PII incidence and language spread, so a bad
-      // feed is visible BEFORE it dilutes the release-card averages
-      t(s, d, "documents").groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("lang")).as("n_langs"),
-          countDistinct(md5(col("text"))).as("n_distinct"),
-          sum(col("n_chars")).as("sum_chars"),
-          sum(when(col("text").rlike(
-              "https?://[^\\s]+|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}|[0-9]{7,}"),
-            1L).otherwise(0L)).as("n_pii"))
-        .select(col("source"), col("n_docs"), col("n_langs"),
-          round(lit(1.0) - col("n_distinct").cast("double") / col("n_docs"), 6)
-            .as("dup_rate"),
-          round(col("sum_chars").cast("double") / col("n_docs"), 6)
-            .as("mean_chars"),
-          round(col("n_pii").cast("double") / col("n_docs"), 6)
-            .as("pii_rate"))),
-
-    "graph_assortativity" -> ((s, d) => {
-      // degree assortativity of the part co-order graph: Pearson r of
-      // (deg_u, deg_v) over the symmetrized edge list — do high-degree
-      // parts co-order with each other (assortative, r>0) or with
-      // leaves (disassortative, r<0)? Two broadcast-able degree joins +
-      // exact integer co-moments; the final r is one mirrored double
-      // expression (the stats_spearman convention).
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val und = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
-        .distinct().localCheckpoint() // feeds degrees AND the pair list
-      val deg = und.select(col("a").as("node"))
-        .unionByName(und.select(col("b").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("deg"))
-      val pairs = und
-        .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-        .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
-        .select(col("da").as("x"), col("db").as("y"))
-      val sym = pairs.unionByName(
-        pairs.select(col("y").as("x"), col("x").as("y")))
-      sym.agg(count(lit(1)).as("m2"), sum("x").as("sx"), sum("y").as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"))
-        .select(expr("m2 div 2").as("n_edges"),
-          round((col("m2").cast("double") * col("sxy") -
-              col("sx").cast("double") * col("sy")) /
-            (sqrt(col("m2").cast("double") * col("sxx") -
-                col("sx").cast("double") * col("sx")) *
-              sqrt(col("m2").cast("double") * col("sxx") -
-                col("sy").cast("double") * col("sy"))), 6)
-            .as("assortativity"))
-    }),
-
-    "k21_schema_evolve" -> ((s, d) => {
-      // schema-evolution-tolerant scan: an old batch without `lang` and
-      // a new batch with it land in one dataset; mergeSchema widens the
-      // read schema and back-fills nulls — the contract a long-lived
-      // 100 TB corpus dir depends on as columns accrete
-      val docs = t(s, d, "documents")
-      val dir = Scratch.dir("k21").toString
-      docs.filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("n_chars"))
-        .write.mode("overwrite").parquet(dir + "/b1")
-      docs.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), col("n_chars"), col("lang"))
-        .write.mode("overwrite").parquet(dir + "/b2")
-      s.read.option("mergeSchema", "true")
-        .parquet(dir + "/b1", dir + "/b2")
-        .groupBy(coalesce(col("lang"), lit("_missing")).as("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-    }),
-
-    "shuffle_epoch" -> ((s, d) =>
-      // deterministic sharded training-order shuffle for 2 epochs
-      PackOps.epochShuffle(t(s, d, "documents"), "doc_id",
-        epochs = 2, shards = 8)),
-
-    "sample_temperature" -> ((s, d) =>
-      // T=2 source rebalancing, integer-exact keep rule
-      PackOps.temperatureResample(t(s, d, "documents"), "doc_id", "source")),
-
-    "graph_random_walk" -> ((s, d) => {
-      // deterministic "random" walks (the node2vec/DeepWalk sampling
-      // primitive): from the 5 smallest nodes of the undirected
-      // supplier⋈part graph, 3 steps where the next hop is the neighbor
-      // minimizing fnv64(cur#step#neighbor) — hash-derived choice, so
-      // walks replay identically on any engine/retry (the property that
-      // makes walk corpora reproducible). Each step is one edge join +
-      // one per-walk argmin window; steps unroll like the bounded
-      // fixpoint rounds.
-      val dir = t(s, d, "lineitem")
-        .select(col("l_suppkey").as("u"), col("l_partkey").as("v"))
-        .distinct()
-      val edges = dir.unionByName(
-          dir.select(col("v").as("u"), col("u").as("v"))).distinct()
-        .localCheckpoint()
-      val seeds = edges.select(col("u")).distinct()
-        .orderBy(col("u")).limit(5)
-        .select(col("u").as("walk_id"), col("u").as("node"))
-      var frontier = seeds
-      var out = seeds.withColumn("step", lit(0))
-      for (step <- 1 to 3) {
-        // r18 optimization (guide §2.3): per-walk argmin as a grouped
-        // min(struct(h, v)) — map-side partial aggregation instead of
-        // the row_number window's full per-partition sort; the (h, v)
-        // lexicographic struct order IS the window's (h ASC, v ASC)
-        // tie-break, so the chosen neighbor is identical
-        frontier = frontier
-          .join(edges, frontier("node") === edges("u"))
-          .withColumn("h", call_function("fnv64", concat(
-            col("node").cast("string"), lit(s"#$step#"),
-            col("v").cast("string"))))
-          .groupBy("walk_id")
-          .agg(min(struct(col("h"), col("v"))).as("m"))
-          .select(col("walk_id"), col("m.v").as("node"))
-        out = out.unionByName(frontier.withColumn("step", lit(step)))
-      }
-      out.select(col("walk_id"), col("step"), col("node"))
-    }),
-
-    "graph_ppr" -> ((s, d) =>
-      // personalized PageRank from suppliers {1, 2}: proximity to the
-      // seed set — the related-entities / recommendation ranking global
-      // pagerank can't express (teleport returns to the seeds, so mass
-      // decays with walk distance from them). 3 rounds, same plan
-      // shape per round as graph_pagerank
-      GraphOps.personalizedPagerank(
-        t(s, d, "lineitem")
-          .select(col("l_suppkey").as("src"), col("l_partkey").as("dst"))
-          .distinct(),
-        seeds = Seq(1L, 2L), iters = 3)
-        .select(col("node"), round(col("rank"), 8).as("rank"))),
-
-    "graph_pagerank" -> ((s, d) =>
-      // centrality over the supplier→part link graph, 3 power rounds;
-      // the edge relation checkpoints once, only ranks re-shuffle
-      GraphOps.pagerank(
-        t(s, d, "lineitem")
-          .select(col("l_suppkey").as("src"), col("l_partkey").as("dst"))
-          .distinct(),
-        iters = 3)
-        .select(col("node"), round(col("rank"), 8).as("rank"))),
-
-    "graph_label_prop" -> ((s, d) => {
-      // two-round label propagation over the bipartite supplier→part
-      // graph: parts take the majority nation of their suppliers, then
-      // suppliers re-label from their parts — each round is ONE count
-      // aggregation + one rank window, ties break to the smaller label
-      // (fully deterministic). The semi-supervised labeling shape at
-      // scale: rounds touch bounded relations, never per-pair state
-      val edges = t(s, d, "lineitem")
-        .select(col("l_suppkey").as("src"), col("l_partkey").as("dst"))
-        .distinct()
-        // two consumers (one per round's join) — but both live in the
-        // ONE final action, so checkpoint lazily (the r13 sequential-
-        // chain rule): the first consumer materializes it in-job
-        .localCheckpoint(false)
-      val sup = t(s, d, "supplier")
-        .select(col("s_suppkey").as("src"), col("s_nationkey").as("label"))
-      def majority(df: DataFrame, key: String) = {
-        val w = Window.partitionBy(col(key))
-          .orderBy(col("cnt").desc, col("label").asc)
-        df.groupBy(col(key), col("label")).agg(count(lit(1)).as("cnt"))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col(key), col("label"))
-      }
-      val partLab = majority(edges.join(sup, Seq("src")), "dst")
-      val supLab = majority(edges.join(partLab, Seq("dst")), "src")
-      partLab.select(lit("part").as("node_type"), col("dst").as("node_id"),
-          col("label"))
-        .unionByName(supLab.select(lit("supplier").as("node_type"),
-          col("src").as("node_id"), col("label")))
-    }),
-
-    "graph_modularity" -> ((s, d) => {
-      // Newman modularity of the label_prop partition on the undirected
-      // supplier–part graph: per community c, Q_c = e_c/m − (d_c/2m)² —
-      // the quality score that decides whether a community structure is
-      // real or noise. Everything is integer until one final division:
-      // Q_c = (4·m·e_c − d_c²)/(4m²), with the m·e_c and d_c²
-      // products in DECIMAL(38,0) (BIGINT versions overflow past
-      // m ~ 10⁹ edges) — HUGEINT on the DuckDB side, the same exact
-      // integers. One edge-keyed join against the broadcast label
-      // map, two bounded aggregates.
-      val edges = t(s, d, "lineitem")
-        .select(col("l_suppkey").as("src"), col("l_partkey").as("dst"))
-        .distinct()
-      // r18: a lazy checkpoint of `lab` (its chain feeds two subtrees)
-      // probed ~0.4 s SLOWER at sf0.1 — runtime exchange reuse already
-      // dedupes the chain and the independent subtrees overlap on idle
-      // cores. Left un-materialized (measured, not assumed).
-      val lab = queries("graph_label_prop")(s, d)
-      val supLab = lab.filter(col("node_type") === "supplier")
-        .select(col("node_id").as("src"), col("label").as("lab_s"))
-      val partLab = lab.filter(col("node_type") === "part")
-        .select(col("node_id").as("dst"), col("label").as("lab_p"))
-      val eIn = edges.join(supLab, "src").join(partLab, "dst")
-        .filter(col("lab_s") === col("lab_p"))
-        .groupBy(col("lab_s").as("label"))
-        .agg(count(lit(1)).as("e_in"))
-      val dTot = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .join(supLab, "src").select(col("lab_s").as("label"), col("deg"))
-        .unionByName(edges.groupBy(col("dst")).agg(count(lit(1)).as("deg"))
-          .join(partLab, "dst")
-          .select(col("lab_p").as("label"), col("deg")))
-        .groupBy(col("label")).agg(sum(col("deg")).as("d_tot"))
-      val mRow = edges.agg(count(lit(1)).as("m"))
-      dTot.join(eIn, Seq("label"), "left")
-        .na.fill(0L, Seq("e_in"))
-        .crossJoin(broadcast(mRow))
-        .select(col("label"), col("e_in"), col("d_tot"),
-          round((lit(4L) * col("m").cast("decimal(38,0)") * col("e_in") -
-              col("d_tot").cast("decimal(38,0)") * col("d_tot"))
-              .cast("double") /
-            (lit(4L) * col("m").cast("decimal(38,0)") * col("m"))
-              .cast("double"), 6)
-            .as("q_contrib"))
-    }),
-
-    "graph_degree_profile" -> ((s, d) => {
-      // graph QA scorecard: log2-bucketed in/out-degree histogram of
-      // the supplier→part link graph. Bucketing is integer-exact
-      // (bin-string length, no float log); output is O(log maxdeg)
-      // rows per side — the shape check run before any graph job
-      val edges = t(s, d, "lineitem")
-        .select(col("l_suppkey").as("src"), col("l_partkey").as("dst"))
-        .distinct()
-      def profile(side: String, keyCol: String) =
-        edges.groupBy(col(keyCol)).agg(count(lit(1)).as("deg"))
-          .select(lit(side).as("side"),
-            (length(bin(col("deg"))) - 1).as("log2_deg"))
-          .groupBy(col("side"), col("log2_deg"))
-          .agg(count(lit(1)).as("n_nodes"))
-      profile("out", "src").unionByName(profile("in", "dst"))
-    }),
-
-    "graph_triangles" -> ((s, d) => {
-      // triangle census over the part co-order graph (parts sharing an
-      // order); degree-ordered orientation keeps the wedge set O(m^1.5).
-      // The deterministic node subsample (every 4th part) bounds the
-      // census cost — co-order graphs densify superlinearly with SF and
-      // the full-graph census is the same plan at 16× the edges
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
-        .distinct()
-      GraphOps.triangleStats(edges)
-    }),
-
-    "graph_node_sim" -> ((s, d) =>
-      // neighbor-set Jaccard between suppliers via shared parts —
-      // link-based node similarity; pairs only through a shared dst
-      // with the hub cut, never node × node
-      GraphOps.nodeSimilarity(
-        t(s, d, "lineitem").select(
-          col("l_suppkey").as("src"), col("l_partkey").as("dst")))),
-
-    "graph_link_predict" -> ((s, d) =>
-      // resource-allocation link prediction between suppliers via
-      // shared parts — the degree-penalized upgrade of graph_node_sim's
-      // raw overlap (a part served by 3 suppliers is stronger evidence
-      // than one served by 60); same shared-dst + hub-cut candidate
-      // discipline, RA = Σ 1/deg(z) as an ordered fold of exact-integer
-      // reciprocals. See GraphOps.linkPredict.
-      GraphOps.linkPredict(
-        t(s, d, "lineitem").select(
-          col("l_suppkey").as("src"), col("l_partkey").as("dst")))),
-
-    "graph_hits" -> ((s, d) => {
-      // two integer HITS rounds on the supplier→part graph (hub⁰ = 1):
-      // auth¹ = in-degree, hub¹ = Σ auth¹ over a supplier's parts,
-      // auth² = Σ hub¹ over a part's suppliers — mutual-reinforcement
-      // ranking with every score an exact integer sum (the float
-      // normalization HITS usually carries rescales but never reorders,
-      // so it's omitted); top-20 parts by (auth², id)
-      val e = t(s, d, "lineitem")
-        .select(col("l_suppkey").as("src"), col("l_partkey").as("dst"))
-        .distinct()
-      val auth1 = e.groupBy("dst").agg(count(lit(1)).as("auth1"))
-      val hub1 = e.join(auth1, "dst").groupBy("src")
-        .agg(sum("auth1").as("hub1"))
-      val auth2 = e.join(hub1, "src").groupBy("dst")
-        .agg(sum("hub1").as("auth2"))
-      auth2.join(auth1, "dst")
-        .orderBy(col("auth2").desc, col("dst").asc).limit(20)
-        .select(col("dst").as("node_id"), col("auth1"), col("auth2"))
-    }),
-
-    "stats_chisq" -> ((s, d) =>
-      // is language independent of source? chi² over the lang×source
-      // contingency table, zero-cells included, ordered-fold sum
-      ValidationOps.chiSquare(t(s, d, "documents"), "lang", "source")),
-
-    "stats_mad" -> ((s, d) => {
-      // median absolute deviation per lang — the robust scale estimate
-      // beside stats_winsorize (one wild outlier moves stddev; MAD
-      // doesn't). Both medians use the exact lower-quantile_disc rule
-      // (stats_group_quantiles convention) on integer n_chars, so the
-      // whole statistic is integer-exact; the deviation pass re-uses
-      // the lang hash partitioning
-      val docs = t(s, d, "documents")
-        .select(col("lang"), col("n_chars"), col("doc_id"))
-      val wA = Window.partitionBy(col("lang"))
-      val med = docs
-        .withColumn("r", row_number().over(Window.partitionBy(col("lang"))
-          .orderBy(col("n_chars"), col("doc_id"))))
-        .withColumn("n", count(lit(1)).over(wA))
-        .groupBy(col("lang"))
-        .agg(max(col("n")).as("n_docs"),
-          max(when(col("r") === floor((col("n") - 1) * 0.5) + 1,
-            col("n_chars"))).as("med"))
-      docs.join(broadcast(med), "lang")
-        .withColumn("dev", abs(col("n_chars") - col("med")))
-        .withColumn("r", row_number().over(Window.partitionBy(col("lang"))
-          .orderBy(col("dev"), col("doc_id"))))
-        .withColumn("n", count(lit(1)).over(wA))
-        .groupBy(col("lang"))
-        .agg(max(col("n_docs")).as("n_docs"), max(col("med")).as("median"),
-          max(when(col("r") === floor((col("n") - 1) * 0.5) + 1,
-            col("dev"))).as("mad"))
-    }),
-
-    "stats_hhi" -> ((s, d) => {
-      // Herfindahl–Hirschman concentration of the corpus over sources,
-      // by doc count and by char mass — the one-number diversity
-      // scorecard a mixture planner reads first (HHI → 1 means one
-      // source owns the corpus; 1/HHI is the "effective source
-      // count"). Exact integer cells; the Σp² folds run over the
-      // source-ordered ≤|sources| rows on both engines.
-      val cells = t(s, d, "documents").groupBy("source")
-        .agg(count(lit(1)).as("nd"), sum(col("n_chars")).as("nc"))
-      cells.agg(count(lit(1)).as("n_sources"),
-          sum(col("nd")).as("td"), sum(col("nc")).as("tc"),
-          array_sort(collect_list(struct(col("source"), col("nd"),
-            col("nc")))).as("arr"))
-        .withColumn("hhi_docs", aggregate(col("arr"), lit(0.0d),
-          (acc, x) => acc + (x.getField("nd").cast("double") / col("td")) *
-            (x.getField("nd").cast("double") / col("td"))))
-        .withColumn("hhi_chars", aggregate(col("arr"), lit(0.0d),
-          (acc, x) => acc + (x.getField("nc").cast("double") / col("tc")) *
-            (x.getField("nc").cast("double") / col("tc"))))
-        .select(col("n_sources"),
-          round(col("hhi_docs"), 6).as("hhi_docs"),
-          round(col("hhi_chars"), 6).as("hhi_chars"),
-          round(lit(1.0) / col("hhi_docs"), 4).as("eff_sources_docs"),
-          round(lit(1.0) / col("hhi_chars"), 4).as("eff_sources_chars"))
-    }),
-
-    "text_bigram_entropy" -> ((s, d) => {
-      // corpus conditional entropy rate H(next | prev) of the bigram
-      // distribution, in bits — the information-theoretic corpus-health
-      // number beside text_perplexity (a low rate flags templated /
-      // repetitive corpora long before eyeballing does): H = Σ_prev
-      // p(prev) · H(next|prev), with each inner entropy folded over the
-      // cur-sorted cells of ONE prev (partitioned — no fold ever sees
-      // more than a vocabulary's worth of cells) and the outer fold
-      // over the prev-sorted vocabulary tier (the a5/o2 dictionary
-      // tier; its documented scalable escape applies past ~10⁷ types).
-      // Exact integer counts; ln(x)/ln(2.0) on identical doubles both
-      // engines (the stats_divergence convention).
-      val cells = t(s, d, "documents")
-        .select(TermOps.tokens(col("text")).as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(explode(expr(
-          """zip_with(slice(toks, 1, size(toks) - 1),
-            |         slice(toks, 2, size(toks) - 1),
-            |         (a, b) -> struct(a AS prev, b AS cur))""".stripMargin))
-          .as("bg"))
-        .select(col("bg.prev").as("prev"), col("bg.cur").as("cur"))
-        .groupBy("prev", "cur").agg(count(lit(1)).as("c"))
-      val perPrev = cells.groupBy("prev")
-        .agg(sum(col("c")).as("cp"),
-          array_sort(collect_list(struct(col("cur"), col("c")))).as("arr"))
-        .withColumn("hp", aggregate(col("arr"), lit(0.0d),
-          (acc, x) => acc - (x.getField("c").cast("double") / col("cp")) *
-            (log(x.getField("c").cast("double") / col("cp")) /
-              log(lit(2.0)))))
-        .select(col("prev"), col("cp"), col("hp"))
-      perPrev.agg(sum(col("cp")).as("n_bigrams"),
-          count(lit(1)).as("vocab_prev"),
-          array_sort(collect_list(struct(col("prev"), col("cp"),
-            col("hp")))).as("arr"))
-        .withColumn("h", aggregate(col("arr"), lit(0.0d),
-          (acc, x) => acc + (x.getField("cp").cast("double") /
-            col("n_bigrams")) * x.getField("hp")))
-        .select(col("n_bigrams"), col("vocab_prev"),
-          round(col("h"), 6).as("cond_entropy_bits"),
-          round(pow(lit(2.0), col("h")), 4).as("bg_perplexity"))
-    }),
-
-    "stats_entropy" -> ((s, d) => {
-      // per-source language-mix entropy — the diversity profile a
-      // mixture planner reads next to stats_histogram_grouped: H = 0
-      // means a single-language source, ln(n_langs) means uniform.
-      // Counts exact; the −Σ p·ln p sum is an ordered fold over the
-      // lang-sorted cell array (engine-identical IEEE order)
-      val c = t(s, d, "documents")
-        .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("n"))
-      c.groupBy(col("source"))
-        .agg(sum("n").as("n_docs"),
-          count(lit(1)).cast("int").as("n_langs"),
-          array_sort(collect_list(struct(col("lang"), col("n")))).as("arr"))
-        .select(col("source"), col("n_docs"), col("n_langs"),
-          round(aggregate(col("arr"), lit(0.0d), (acc, x) =>
-            acc - (x.getField("n").cast("double") /
-                col("n_docs").cast("double")) *
-              log(x.getField("n").cast("double") /
-                col("n_docs").cast("double"))), 6).as("entropy"))
-    }),
-
-    "stats_skew" -> ((s, d) =>
-      // group-size histogram: the pre-flight skew diagnostic
-      SkewOps.groupSizeHistogram(t(s, d, "lineitem"), "l_partkey")),
-
-    "stats_heavy_keys" -> ((s, d) =>
-      SkewOps.heavyKeys(t(s, d, "events"), "user_id", k = 10)),
-
-    "search_phrase" -> ((s, d) =>
-      TermOps.phraseMatch(t(s, d, "documents"), "doc_id", "text",
-        Seq("batch", "table"))),
-
-    "cluster_kmeans" -> ((s, d) =>
-      ClusterOps.kmeansAssign(
-        embeddings(s, d),
-        k = 8, iters = 2)),
-
-    "cluster_silhouette" -> ((s, d) => {
-      // centroid-based silhouette of the cluster_kmeans partition — the
-      // cluster-quality scorecard (is k=8 a real structure or noise?):
-      // per vector, a = cosine distance to its OWN final centroid, b =
-      // distance to the nearest OTHER centroid, s = (b−a)/max(a,b);
-      // reported as the per-cluster mean. Simplified (centroid-based,
-      // not pairwise) silhouette — the O(n·k) form that scales; true
-      // pairwise silhouette is O(n²) and exists only inside SemDeDup's
-      // bounded clusters. Per-point s rounds to 6 before the rank-
-      // ordered mean fold (the embed_ood convention), so both engines
-      // fold identical doubles in identical order.
-      ClusterOps.silhouette(
-        t(s, d, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>")
-            .as("embedding")),
-        k = 8, iters = 2)
-    }),
-
-    "text_perplexity" -> ((s, d) =>
-      TextAnalysisOps.bigramSurprisal(t(s, d, "documents"), "doc_id", "text")),
-
-    "curate_ccnet" -> ((s, d) => {
-      // CCNet-style per-language perplexity bucketing (Wenzek et al.
-      // 2020): language-ID each doc, score it with the smoothed bigram
-      // surprisal, and split EACH language into head/middle/tail
-      // terciles by surprisal rank — the classic "keep the head and
-      // middle, drop the tail" web-corpus curation gate. Ranks use the
-      // ROUNDED surprisal with doc_id tiebreak (deterministic across
-      // engines); bucket cuts are integer cross-multiplies. Docs with
-      // < 2 tokens have no bigram score and drop (inner join), exactly
-      // as CCNet drops unscoreable docs. Both component chains are
-      // this suite's own gated operators.
-      val docs = t(s, d, "documents")
-      val lang = TextAnalysisOps.withLangId(docs, "text")
-        .select(col("doc_id"), col("pred_lang"))
-      val ppl = TextAnalysisOps.bigramSurprisal(docs, "doc_id", "text")
-        .select(col("doc_id"), col("mean_bg_surprisal"))
-      val wr = Window.partitionBy(col("pred_lang"))
-        .orderBy(col("mean_bg_surprisal"), col("doc_id"))
-      lang.join(ppl, "doc_id")
-        .withColumn("r", row_number().over(wr))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy(col("pred_lang"))))
-        .select(col("doc_id"), col("pred_lang"),
-          col("mean_bg_surprisal").as("surprisal"),
-          when(col("r") * 3 <= col("n"), "head")
-            .when(col("r") * 3 <= col("n") * 2, "middle")
-            .otherwise("tail").as("bucket"))
-    }),
-
-    "curate_url_dedup" -> ((s, d) =>
-      // canonical-URL dedup over a deterministic URL fixture derived
-      // from the documents table (mixed-case host, default port,
-      // tracking params, fragment — each normalization rule exercised)
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          concat(lit("HTTPS://WWW."), col("source"), lit(".Example.COM:443/docs/"),
-            pmod(col("doc_id"), lit(50L)), lit("/?utm_source=feed&id="),
-            pmod(col("doc_id"), lit(7L)), lit("&utm_campaign="), col("source"),
-            lit("#sec"), pmod(col("doc_id"), lit(3L))).as("url"))
-        .select(col("doc_id"),
-          graft.functions.UrlFunctions.normalizeUrl(col("url")).as("norm_url"))
-        .groupBy("norm_url")
-        .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_id"))),
-
-    "dedup_embedding" -> ((s, d) => {
-      import s.implicits._
-      // planted identical-vector pairs (ids far above the corpus range):
-      // the organic corpus has no pair ≥ 0.99, so without them the oracle
-      // hash-match would only ever prove the *absence* of false positives
-      def v(f: Int => Float) = (0 until 64).map(f).toArray
-      val planted = Seq(
-        (9000001L, v(i => (i + 1).toFloat)),
-        (9000002L, v(i => (i + 1).toFloat)),
-        (9000003L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000004L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000005L, v(i => ((i * 11) % 64 + 1).toFloat))
-      ).toDF("vec_id", "embedding")
-      SimilarityOps.embeddingNearDups(
-        t(s, d, "embeddings").select("vec_id", "embedding").unionByName(planted),
-        threshold = 0.99)
-    }),
-
-    "ann_ivf_topk" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      SimilarityOps.ivfTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
-        .select(col("query_id"), col("nbr_id"), round(col("sim"), 4).as("sim"),
-          col("rank"))
-    }),
-
-    "embed_project" -> ((s, d) =>
-      // JL random projection 64 → 8 dims as a pure map (plan-time
-      // weight literals, sequential fold): the pre-ANN shrink step —
-      // no training job, no model state, embarrassingly parallel
-      SimilarityOps.project(t(s, d, "embeddings"), "vec_id", "embedding",
-        inDims = 64, outDims = 8)),
-
-    "embed_quality" -> ((s, d) =>
-      // embedding QA: per-vector dimensionality + L2 norm (ordered
-      // fold) + degenerate-vector flag — the gate that catches the
-      // zero vectors and wrong-width rows an upstream encoder bug
-      // ships before they poison every cosine downstream
-      t(s, d, "embeddings")
-        .select(col("vec_id"), size(col("embedding")).as("n_dims"),
-          aggregate(col("embedding").cast("array<double>"), lit(0.0d),
-            (acc, x) => acc + x * x).as("sq"))
-        .select(col("vec_id"), col("n_dims"),
-          round(sqrt(col("sq")), 4).as("l2_norm"),
-          (col("sq") === lit(0.0d)).as("is_zero"))),
-
-    "ann_brute_topk" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      SimilarityOps.bruteForceTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
-        .select(col("query_id"), col("nbr_id"), round(col("sim"), 4).as("sim"),
-          col("rank"))
-    }),
-
-    "ann_pq_topk" -> ((s, d) => {
-      // product-quantization ADC search: corpus as 8×16-code PQ codes,
-      // deterministic per-subspace Lloyd codebooks, broadcast lookup
-      // tables — the memory-bound ANN scale path (see SimilarityOps)
-      val emb = embeddings(s, d)
-      SimilarityOps.pqTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
-          model = Some(pqModel(s, d)))
-        .select(col("query_id"), col("nbr_id"),
-          round(col("adc"), 4).as("adc"), col("rank"))
-    }),
-
-    "ann_bq_topk" -> ((s, d) => {
-      // binary-quantization ANN (the Lucene/Elastic 2024 recipe): each
-      // vector compresses to a 64-bit SIGN mask (bit i = emb[i] > 0),
-      // the shortlist ranks by hamming distance (bit_count of XOR —
-      // pure integer, engine-exact, no float compare anywhere), and
-      // exact cosine re-ranks the top-20 down to 5. 64× compression
-      // with one-instruction distances — the rung below SQ8 on the
-      // memory/recall ladder, and the cheapest scan a vector store can
-      // ship. Corpus side carries only (vec_id, sig) into the distance
-      // pass; full vectors surface for the 10×20 re-rank only.
-      val emb = embeddings(s, d)
-      SimilarityOps.bqTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
-        .select(col("query_id"), col("nbr_id"),
-          round(col("sim"), 4).as("sim"), col("rank"))
-    }),
-
-    "ann_sq_topk" -> ((s, d) => {
-      // scalar-quantization (SQ8) search: 1 byte/dim against the
-      // per-dim min/max envelope, midpoint reconstruction, full scan —
-      // the no-training compression rung between brute and PQ
-      val emb = embeddings(s, d)
-      SimilarityOps.sqTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
-        .select(col("query_id"), col("nbr_id"),
-          round(col("sim"), 4).as("sim"), col("rank"))
-    }),
-
-    "ann_filtered_topk" -> ((s, d) => {
-      // filtered ANN — top-k among vectors sharing the query's label
-      // (the metadata-constrained search every vector store fields).
-      // PRE-filter strategy: the label equi-join prunes before any
-      // distance math, so recall within the class is exact by
-      // construction — the post-filter alternative (global top-k, then
-      // filter) silently returns < k when the class is rare. The label
-      // join hash-partitions the corpus; queries broadcast
-      val emb = embeddings(s, d)
-      val c = emb.select(col("vec_id").as("nbr_id"), col("label"),
-        col("embedding").as("nbr_emb"))
-      val q = emb.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("label"),
-          col("embedding").as("q_emb"))
-      c.join(broadcast(q), Seq("label"))
-        .filter(col("nbr_id") =!= col("query_id"))
-        .withColumn("sim", SimilarityOps.cosine(col("q_emb"), col("nbr_emb")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("query_id").orderBy(col("sim").desc,
-            col("nbr_id").asc)))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("label"), col("nbr_id"),
-          round(col("sim"), 4).as("sim"), col("rank"))
-    }),
-
-    "ann_ivfpq_topk" -> ((s, d) => {
-      // IVFPQ: coarse cells prune to ~nProbe/nCentroids of the corpus,
-      // PQ ADC answers distances inside the pruned set — the
-      // billion-vector recipe, fully deterministic (see SimilarityOps)
-      val emb = embeddings(s, d)
-      SimilarityOps.ivfpqTopK(emb, emb.filter(col("vec_id") < 10), k = 5,
-          model = Some(pqModel(s, d)))
-        .select(col("query_id"), col("nbr_id"),
-          round(col("adc"), 4).as("adc"), col("rank"))
-    }),
-
-    "ann_lsh_topk" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      SimilarityOps.lshTopK(emb, emb.filter(col("vec_id") < 10), k = 5)
-        .select(col("query_id"), col("nbr_id"), round(col("sim"), 4).as("sim"),
-          col("rank"))
-    }),
-
-    "ann_ivfpq_residual" -> ((s, d) => {
-      // FAISS-standard residual IVFPQ: PQ codes quantize the residual
-      // against the assigned coarse centroid — sharper codes at the
-      // same bits (see SimilarityOps.ivfpqResidualTopK; ann_recall
-      // measures the gap vs plain IVFPQ). The cast corpus is lazily
-      // localCheckpoint'ed: the Lloyd/PQ training passes re-read
-      // in-memory blocks instead of re-running the parquet scan + cast
-      // per pass (the ann_recall treatment)
-      // the trained model (coarse cells + residual codebooks/codes) is
-      // process-shared with ann_recall's residual leg — the pqModel
-      // discipline; serving reads checkpoints, the oracle still
-      // replays the full training chain
-      val emb = embeddings(s, d)
-        .localCheckpoint(eager = false)
-      SimilarityOps.ivfpqResidualTopK(emb, emb.filter(col("vec_id") < 10),
-          k = 5, model = Some(residualModel(s, d)))
-        .select(col("query_id"), col("nbr_id"),
-          round(col("adc"), 4).as("adc"), col("rank"))
-    }),
-
-    "ann_nprobe_curve" -> ((s, d) => {
-      // the IVF TUNING curve: recall@5 at nProbe = 1 / 2 / 4 against
-      // the shared brute-force truth — the lsh_curve sibling for the
-      // cell-probing knob (how many coarse cells must a query visit
-      // before recall plateaus — THE capacity-vs-quality dial of a
-      // deployed IVF index). Centroids, cell assignment, truth and the
-      // cast corpus are shared single-computation stages across the
-      // three legs, so the sweep pays one training, three probe joins.
-      val emb = embeddings(s, d)
-        .localCheckpoint(eager = false)
-      val q = emb.filter(col("vec_id") < 10)
-      val brute = SimilarityOps.bruteForceTopK(emb, q, k = 5)
-        .select("query_id", "nbr_id").localCheckpoint(eager = false)
-      val centsDf = SimilarityOps.ivfCentroids(emb)
-        .localCheckpoint(eager = false)
-      val cells = SimilarityOps.ivfCellAssign(emb, centsDf)
-        .localCheckpoint(eager = false)
-      def leg(np: Int) =
-        SimilarityOps.ivfTopK(emb, q, k = 5, nProbe = np,
-            cents0 = Some(centsDf), cells0 = Some(cells))
-          .select("query_id", "nbr_id")
-          .join(brute, Seq("query_id", "nbr_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(np).as("nprobe"), col("n_hits"),
-            round(col("n_hits") / lit(50.0), 4).as("recall_at_5"))
-      leg(1).unionByName(leg(2)).unionByName(leg(4))
-    }),
-
-    "ann_recall" -> ((s, d) => {
-      // recall@5 per approximate path vs the brute-force truth — the
-      // answer-quality number every approximate 100 TB ANN deployment
-      // must watch (sq included: quantization error is its only loss
-      // source, so its recall bounds the pruned paths'). The brute set
-      // is 50 rows; localCheckpoint so the per-path semi-joins read a
-      // materialized relation instead of re-running the scan.
-      // the corpus is read ONCE: localCheckpoint materializes the cast
-      // vectors so each of the seven path subtrees (brute + six
-      // approximate) scans in-memory blocks instead of re-running the
-      // parquet scan + cast — results unchanged, only the cost moves.
-      // Derived checkpoints here are LAZY (eager = false): they still
-      // materialize once (local checkpointing caches partitions on
-      // first compute), but inside the single result job instead of as
-      // a string of eager scheduling-overhead-bound mini-jobs —
-      // measured best of the eager/lazy/hybrid variants at sf0.1
-      // (6.2 s vs 7.1-7.4 s; PLANS.md round-10 entry). The corpus cast
-      // and the brute truth are the process-shared embF64/bruteTop5
-      // frames (r17): the truth for queries vec_id < 10 is exactly the
-      // corpus-wide truth restricted to those queries.
-      val emb = embF64(s, d)
-      val q = emb.filter(col("vec_id") < 10)
-      val brute = bruteTop5(s, d).filter(col("query_id") < 10)
-        .select("query_id", "nbr_id")
-      // shared stages across paths (all deterministic, so results are
-      // identical — only the cost moves): the PQ model trains ONCE for
-      // the exhaustive and coarse-pruned ADC paths (the residual path
-      // necessarily trains its own codebooks on residuals), and the IVF
-      // coarse-centroid pick is computed once for ivf + ivfpq
-      val model = Some(pqModel(s, d)) // process-shared trained codebooks
-      // r19 REJECTED experiment (VERDICT item 4): dropping these lazy
-      // checkpoints in favor of runtime stage reuse left the job count
-      // EXACTLY at 55 and recomputed ~1.7 MB of shuffle (probe 2.35 →
-      // 2.63 s) — the 55 one-task jobs are the training/serving
-      // chains' own materializations, not checkpoint glue. The audit's
-      // 8 legs already run as ONE action (a single unioned frame).
-      val centsDf = SimilarityOps.ivfCentroids(emb)
-        .localCheckpoint(eager = false)
-      val cents = Some(centsDf)
-      // cell assignment is also shared: one corpus×centroids cosine pass
-      // serves both the ivf and ivfpq paths
-      val cells = Some(SimilarityOps.ivfCellAssign(emb, centsDf)
-        .localCheckpoint(eager = false))
-      def rec(name: String, df: DataFrame): DataFrame =
-        df.select("query_id", "nbr_id")
-          .join(brute, Seq("query_id", "nbr_id"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(name).as("path"), col("n_hits"),
-            round(col("n_hits") / lit(50.0), 4).as("recall_at_5"))
-      // ONE ADC pass serves two rows: pqTopK(k=20)'s rank ≤ 5 prefix IS
-      // pqTopK(k=5) (same ordering, wider filter), and the full 20 are
-      // the refine path's shortlist — the scan cost is paid once
-      val pq20 = SimilarityOps.pqTopK(emb, q, k = 20, model = model)
-        .localCheckpoint(eager = false)
-      rec("ivf", SimilarityOps.ivfTopK(emb, q, k = 5, cents0 = cents,
-        cells0 = cells))
-        .unionByName(rec("lsh", SimilarityOps.lshTopK(emb, q, k = 5)))
-        .unionByName(rec("sq", SimilarityOps.sqTopK(emb, q, k = 5)))
-        .unionByName(rec("pq", pq20.filter(col("rank") <= 5)))
-        .unionByName(rec("ivfpq", SimilarityOps.ivfpqTopK(emb, q, k = 5,
-          model = model, cents0 = cents, cells0 = cells)))
-        .unionByName(rec("ivfpq_res",
-          SimilarityOps.ivfpqResidualTopK(emb, q, k = 5,
-            model = Some(residualModel(s, d)))))
-        .unionByName(rec("bq", SimilarityOps.bqTopK(emb, q, k = 5)))
-        .unionByName(rec("rerank", {
-          // the two-stage refine path (X157): exact cosine over the
-          // shared shortlist, top-5 — its recall row shows what the
-          // refine stage buys back over raw pq
-          val cand = pq20.select(col("query_id"), col("nbr_id"))
-          emb.select(col("vec_id").as("nbr_id"), col("embedding").as("nbr_emb"))
-            .join(broadcast(cand), "nbr_id")
-            .join(broadcast(q.select(col("vec_id").as("query_id"),
-              col("embedding").as("q_emb"))), "query_id")
-            .withColumn("sim",
-              SimilarityOps.cosine(col("q_emb"), col("nbr_emb")))
-            .withColumn("rank", row_number().over(Window
-              .partitionBy("query_id")
-              .orderBy(col("sim").desc, col("nbr_id").asc)))
-            .filter(col("rank") <= 5)
-        }))
-    }),
-
-    "dedup_semantic" -> ((s, d) => {
-      import s.implicits._
-      // SemDeDup composition: k-means clusters + within-cluster cosine
-      // pruning (DedupOps.semanticDedup). Same planted near-identical
-      // vectors as dedup_embedding — the organic corpus has no pair
-      // ≥ 0.99, so without them the gate would only prove absence.
-      def v(f: Int => Float) = (0 until 64).map(f).toArray
-      val planted = Seq(
-        (9000001L, v(i => (i + 1).toFloat)),
-        (9000002L, v(i => (i + 1).toFloat)),
-        (9000003L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000004L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000005L, v(i => ((i * 11) % 64 + 1).toFloat))
-      ).toDF("vec_id", "embedding")
-      val emb = t(s, d, "embeddings").select("vec_id", "embedding")
-        .unionByName(planted)
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-      DedupOps.semanticDedup(emb, k = 8, iters = 2, threshold = 0.99)
-    }),
-
-    "dedup_lsh_curve" -> ((s, _) => {
-      // the banding S-curve table the MinHash family is TUNED with:
-      // P(candidate | Jaccard s) = 1 − (1 − s^r)^b for every (b, r)
-      // split of the 8-hash signature across a Jaccard grid — the
-      // threshold-selection artifact (b=4,r=2's midpoint sits near the
-      // 0.4–0.5 thresholds the dedup gates use). Pure arithmetic on a
-      // 36-cell grid; powers are REPEATED-MULTIPLY folds (not libm
-      // pow), so both engines walk identical IEEE sequences.
-      import s.implicits._
-      val grid = (1 to 9).map(_ / 10.0)
-      val brs = Seq((1, 8), (2, 4), (4, 2), (8, 1))
-      val rows = for (sj <- grid; (b, r) <- brs) yield (sj, b, r)
-      rows.toDF("s", "b", "r")
-        .withColumn("sr", aggregate(sequence(lit(1), col("r")),
-          lit(1.0d), (acc, _) => acc * col("s")))
-        .withColumn("p", round(lit(1.0) -
-          aggregate(sequence(lit(1), col("b")), lit(1.0d),
-            (acc, _) => acc * (lit(1.0) - col("sr"))), 6))
-        .select(col("s"), col("b"), col("r"), col("p"))
-    }),
-
-    "dedup_semantic_auto" -> ((s, d) => {
-      import s.implicits._
-      // the k ∝ √N SemDeDup default (DedupOps.semanticDedupAuto): same
-      // planted pairs and threshold as dedup_semantic, but k = ⌈√N⌉
-      // from a cheap count — the shape whose within-cluster pair work
-      // stays Θ(N) as the corpus grows (the fixed-k query measured 28×
-      // at ×10 data; this one is the scale default). The oracle replays
-      // the SAME ⌈√N⌉ inside SQL, so k-agreement is part of the gate.
-      def v(f: Int => Float) = (0 until 64).map(f).toArray
-      val planted = Seq(
-        (9000001L, v(i => (i + 1).toFloat)),
-        (9000002L, v(i => (i + 1).toFloat)),
-        (9000003L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000004L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000005L, v(i => ((i * 11) % 64 + 1).toFloat))
-      ).toDF("vec_id", "embedding")
-      val emb = t(s, d, "embeddings").select("vec_id", "embedding")
-        .unionByName(planted)
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-      DedupOps.semanticDedupAuto(emb, iters = 2, threshold = 0.99)
-    }),
-
-    "dedup_semantic_approx" -> ((s, d) => {
-      import s.implicits._
-      // SemDeDup's true-100 TB rung: the flat k = ⌈√N⌉ assignment is
-      // O(N·k) = O(N^1.5) cosine work — the real scale bottleneck once
-      // pair work is already Θ(N). ClusterOps.twoLevelAssign routes
-      // vectors through g = ⌈√k⌉ super-cells (O(N·√k)); this row is
-      // the ann_recall discipline applied to dedup — one audit row of
-      // assignment agreement + dropped-set recall vs the exact flat
-      // argmax, so the approximation's cost is always measured, never
-      // assumed. Same planted dups + threshold as dedup_semantic_auto.
-      def v(f: Int => Float) = (0 until 64).map(f).toArray
-      val planted = Seq(
-        (9000001L, v(i => (i + 1).toFloat)),
-        (9000002L, v(i => (i + 1).toFloat)),
-        (9000003L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000004L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000005L, v(i => ((i * 11) % 64 + 1).toFloat))
-      ).toDF("vec_id", "embedding")
-      val emb = t(s, d, "embeddings").select("vec_id", "embedding")
-        .unionByName(planted)
-        .withColumn("embedding", col("embedding").cast("array<double>"))
-        .localCheckpoint(eager = false)
-      val n = emb.count()
-      val k = math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
-      val g = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
-      val (cents, asnE) = ClusterOps.kmeansModel(
-        emb.select(col("vec_id"), col("embedding")), k, iters = 2)
-      val exact = asnE.localCheckpoint(eager = false)
-      val approx = ClusterOps.twoLevelAssign(emb, cents, g)
-        .localCheckpoint(eager = false)
-      def dropped(asn: DataFrame) = {
-        val v2 = emb.join(asn, "vec_id")
-        val a = v2.select(col("cluster"), col("vec_id").as("id_a"),
-          col("embedding").as("emb_a"))
-        val b = v2.select(col("cluster"), col("vec_id").as("id_b"),
-          col("embedding").as("emb_b"))
-        a.join(b, Seq("cluster")).filter(col("id_a") < col("id_b"))
-          .filter(SimilarityOps.cosine(col("emb_a"), col("emb_b")) >= 0.99)
-          .select(col("id_b").as("vec_id")).distinct()
-      }
-      // r18 optimization (guide §1/§2.4): the three dropped-set counts
-      // ran as three separate aggregate+crossJoin subtrees over two
-      // eagerly-checkpointed drop sets (JobProbe: 61 jobs for this row,
-      // ~0 MB shuffled — scheduling floor, not data). One full-outer
-      // join computes |E|, |A| and |E∩A| in a single pass, each drop
-      // set has exactly one consumer (so no checkpoint at all), and the
-      // identical exact/approx chains feed the same counts.
-      val dstats = dropped(exact).withColumn("e", lit(1L))
-        .join(dropped(approx).withColumn("a", lit(1L)),
-          Seq("vec_id"), "full_outer")
-        // coalesce around each sum (r18 ADVICE): with BOTH drop sets
-        // empty the full-outer join has zero rows and a bare sum()
-        // would emit NULL where the oracle's count(*) emits 0 — a
-        // latent data-dependent mismatch (non-empty on all shipped SFs,
-        // so hashes are unchanged by this guard)
-        .agg(coalesce(sum(coalesce(col("e"), lit(0L))), lit(0L))
-            .as("n_dropped_exact"),
-          coalesce(sum(coalesce(col("a"), lit(0L))), lit(0L))
-            .as("n_dropped_approx"),
-          coalesce(sum(when(col("e").isNotNull && col("a").isNotNull, 1L)
-            .otherwise(0L)), lit(0L)).as("n_dropped_both"))
-      val agree = exact
-        .join(approx.withColumnRenamed("cluster", "ca"), "vec_id")
-        .agg(count(lit(1)).as("n_vecs"),
-          sum(when(col("cluster") === col("ca"), 1L).otherwise(0L))
-            .as("n_agree"))
-      agree
-        .crossJoin(broadcast(dstats))
-        .select(col("n_vecs"), lit(k).as("k"), lit(g).as("g"),
-          col("n_agree"),
-          round(col("n_agree").cast("double") / col("n_vecs"), 4)
-            .as("agree_frac"),
-          col("n_dropped_exact"), col("n_dropped_approx"),
-          col("n_dropped_both"),
-          round(col("n_dropped_both").cast("double") /
-            greatest(col("n_dropped_exact"), lit(1L)), 4).as("drop_recall"))
-    }),
-
-    "dedup_url" -> ((s, _) => {
-      import s.implicits._
-      // URL canonical-identity dedup (TextAnalysisOps.canonicalizeUrl):
-      // the re-crawl grouping rule — scheme/fragment/query dropped, host
-      // case-folded and de-www'd, trailing slash stripped, path case
-      // PRESERVED. The fixture drives each rule: 1/2/3/6 collapse, 4
-      // stays (path case), 5 stays (subdomain), 7/8 collapse (query vs
-      // trailing slash). At 100 TB this is one hash groupBy on the
-      // canonical string — the cheapest dedup family member.
-      val urls = Seq(
-        (1L, "https://WWW.Example.com/Path/Article?utm=x#frag"),
-        (2L, "https://example.com/Path/Article"),
-        (3L, "http://example.com/Path/Article/"),
-        (4L, "https://example.com/path/article"),
-        (5L, "https://sub.example.com/Path/Article"),
-        (6L, "HTTP://WWW.EXAMPLE.COM/Path/Article#x"),
-        (7L, "https://example.com/other?q=1"),
-        (8L, "https://example.com/other/")
-      ).toDF("fid", "url")
-      val canon = urls.select(col("fid"),
-        TextAnalysisOps.canonicalizeUrl(col("url")).as("canon"))
-      val keepers = canon.groupBy("canon").agg(min("fid").as("keep_id"))
-      canon.join(keepers, Seq("canon"))
-        .select(col("fid"), col("canon"),
-          (col("fid") === col("keep_id")).as("keep"),
-          when(col("fid") =!= col("keep_id"), col("keep_id")).as("dup_of"))
-    }),
-
-    "dedup_normalized" -> ((s, d) => {
-      import s.implicits._
-      // dedup on the NORMALIZED text (lowercase, digit runs → <num>,
-      // whitespace collapsed — the text_num_normalize kernel): catches
-      // near-copies that differ only in case, spacing, or numbers
-      // (timestamps, view counters), which exact dedup misses and
-      // MinHash doesn't need. The planted trio collapses to one keeper;
-      // organic docs keep their exact-dedup grouping (word-soup text
-      // has no digits, so normalization there is just lowercase).
-      val planted = Seq(
-        (9200001L, "Breaking News 2024: markets up 500 points"),
-        (9200002L, "breaking news 2025:  markets up  700 points"),
-        (9200003L, "BREAKING NEWS 9999: Markets UP 1 points"),
-        (9200004L, "an entirely different planted document")
-      ).toDF("doc_id", "text")
-      val norm = trim(regexp_replace(
-        regexp_replace(lower(col("text")), lit("[0-9]+"), lit("<num>")),
-        lit("\\s+"), lit(" ")))
-      t(s, d, "documents").select("doc_id", "text").unionByName(planted)
-        .select(col("doc_id"), md5(norm).as("norm_hash"))
-        .withColumn("keep_id",
-          min(col("doc_id")).over(Window.partitionBy("norm_hash")))
-        .select(col("doc_id"), col("norm_hash"),
-          (col("doc_id") === col("keep_id")).as("keep"))
-    }),
-
-    "pack_span_corruption" -> ((s, d) => {
-      // T5-style span-corruption layout (the denoising-pretraining
-      // transform): deterministic span STARTS (low-32-folded FNV of
-      // (doc, pos) ≡ 0 mod 20 ≈ 5% of positions), each start masking a
-      // 3-token span clipped at the doc end; overlaps merge through the
-      // DISTINCT covered set. Per doc: token/start/masked counts + mask
-      // fraction — the layout audit a corruption writer ships (the
-      // actual sentinel-token rewrite is a map over this assignment).
-      val toks = t(s, d, "documents")
-        .select(col("doc_id"),
-          posexplode(TermOps.tokens(col("text"))).as(Seq("pos", "tok")))
-      val n = toks.groupBy("doc_id").agg(count(lit(1)).as("n_tokens"))
-      val starts = toks.filter(pmod(
-          expr("fnv64(concat(cast(doc_id as string), '#', cast(pos as string)))")
-            .bitwiseAND(lit(4294967295L)), lit(20L)) === 0L)
-        .select(col("doc_id"), col("pos").as("st"))
-      val nStarts = starts.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_starts"))
-      val covered = starts.join(n, Seq("doc_id"))
-        .select(col("doc_id"), explode(sequence(col("st"),
-          least(col("st") + 2, col("n_tokens") - 1))).as("mp"))
-        .distinct()
-        .groupBy("doc_id").agg(count(lit(1)).as("n_masked"))
-      n.join(nStarts, Seq("doc_id"), "left_outer")
-        .join(covered, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), col("n_tokens"),
-          coalesce(col("n_starts"), lit(0L)).as("n_starts"),
-          coalesce(col("n_masked"), lit(0L)).as("n_masked"),
-          round(coalesce(col("n_masked"), lit(0L)).cast("double") /
-            col("n_tokens"), 4).as("mask_frac"))
-    }),
-
-    "pack_fim" -> ((s, d) => {
-      // fill-in-the-middle packing layout (Bavarian et al. 2022, the
-      // span-corruption sibling for autoregressive infilling): half
-      // the docs (hash-decided) reorder as PSM — <pre> prefix <suf>
-      // suffix <mid> middle — with both split points hash-derived
-      // uniform over [0, n]; the other half pass through untouched.
-      // Beyond the piece-length arithmetic, the gate pins the fnv64
-      // fingerprint of the ACTUAL emitted token stream, so the reorder
-      // itself is verified, not just its bookkeeping. Pure per-doc
-      // map — zero exchanges, the pack_span_corruption scale shape.
-      def h32(tag: String): org.apache.spark.sql.Column =
-        expr(s"fnv64(concat(cast(doc_id as string), '#$tag'))")
-          .bitwiseAND(lit(4294967295L))
-      val cut = t(s, d, "documents")
-        .select(col("doc_id"), TermOps.tokens(col("text")).as("tk"))
-        .filter(size(col("tk")) >= 2)
-        .withColumn("n", size(col("tk")).cast("long"))
-        .withColumn("fim", pmod(h32("fim"), lit(2L)) === 0L)
-        .withColumn("c1", pmod(h32("cut1"), col("n") + lit(1L)))
-        .withColumn("c2", pmod(h32("cut2"), col("n") + lit(1L)))
-        .withColumn("lo", least(col("c1"), col("c2")))
-        .withColumn("hi", greatest(col("c1"), col("c2")))
-      cut.select(col("doc_id"), col("n").as("n_tokens"), col("fim"),
-        when(col("fim"), col("lo")).otherwise(col("n")).as("pre_len"),
-        when(col("fim"), col("hi") - col("lo")).otherwise(lit(0L))
-          .as("mid_len"),
-        when(col("fim"), col("n") - col("hi")).otherwise(lit(0L))
-          .as("suf_len"),
-        when(col("fim"), col("n") + lit(3L)).otherwise(col("n"))
-          .as("out_len"),
-        graft.GraftFunctions.fnv64(when(col("fim"),
-            array_join(concat(
-              array(lit("<pre>")),
-              expr("slice(tk, 1, cast(lo as int))"),
-              array(lit("<suf>")),
-              expr("slice(tk, cast(hi as int) + 1, cast(n - hi as int))"),
-              array(lit("<mid>")),
-              expr("slice(tk, cast(lo as int) + 1, cast(hi - lo as int))")),
-              " "))
-          .otherwise(array_join(col("tk"), " "))).as("layout_fp"))
-    }),
-
-    "text_readability" -> ((s, d) => {
-      import s.implicits._
-      // Flesch reading-ease (the curation-filter classic): words =
-      // whitespace tokens, sentences = [.!?]+ runs (floored at 1 — the
-      // word-soup corpus has none), syllables ≈ vowel-group runs per
-      // text (the standard regex approximation). Score arithmetic on
-      // identical literal doubles both engines; planted prose pins real
-      // sentence/syllable behavior beside the soup.
-      val planted = Seq(
-        (9300001L, "The cat sat. The dog ran fast! Is it good?"),
-        (9300002L,
-          "Comprehensive establishments demonstrate extraordinary capabilities.")
-      ).toDF("doc_id", "text")
-      t(s, d, "documents").select("doc_id", "text").unionByName(planted)
-        .select(col("doc_id"),
-          size(regexp_extract_all(col("text"), lit("[^\\s]+"), lit(0)))
-            .as("n_words"),
-          greatest(size(regexp_extract_all(col("text"), lit("[.!?]+"),
-            lit(0))), lit(1)).as("n_sents"),
-          size(regexp_extract_all(lower(col("text")), lit("[aeiouy]+"),
-            lit(0))).as("n_syll"))
-        .filter(col("n_words") > 0)
-        .select(col("doc_id"), col("n_words"), col("n_sents"), col("n_syll"),
-          round(lit(206.835) -
-            lit(1.015) * (col("n_words").cast("double") / col("n_sents")) -
-            lit(84.6) * (col("n_syll").cast("double") / col("n_words")), 4)
-            .as("flesch"))
-    }),
-
-    "text_num_normalize" -> ((s, d) => {
-      import s.implicits._
-      // digit-run normalization (the GPT-2/C4 vocabulary-compaction
-      // preprocessing step): lowercase, every digit run → <num>,
-      // whitespace collapsed — plus the digit-run count on the
-      // ORIGINAL text; only changed docs emit (the corpus is again
-      // the false-positive control)
-      val planted = Seq(
-        (9100001L, "Call 911 or wait 30 minutes for THE 2nd response"),
-        (9100002L, "IPv4 10.0.0.1  port  8080"),
-        (9100003L, "no digits here at all")
-      ).toDF("doc_id", "text")
-      t(s, d, "documents").select("doc_id", "text").unionByName(planted)
-        .select(col("doc_id"),
-          size(regexp_extract_all(col("text"), lit("[0-9]+"), lit(0)))
-            .as("n_nums"),
-          trim(regexp_replace(
-            regexp_replace(lower(col("text")), lit("[0-9]+"), lit("<num>")),
-            lit("\\s+"), lit(" "))).as("norm"))
-        .filter(col("n_nums") > 0)
-    }),
-
-    "text_pii_scrub" -> ((s, d) => {
-      import s.implicits._
-      // PII redaction over corpus ∪ planted fixtures
-      // (TextAnalysisOps.piiScrub): emails scrub before phones (fixed,
-      // mirrored order), counts ride along, and only flagged docs
-      // return — the organic corpus is the false-positive control (a
-      // spurious match would surface as an extra row). Planted row 4
-      // pins the boundary cases: spaced-out non-email, short digit run.
-      val planted = Seq(
-        (9000001L,
-          "contact alice.smith+test@Example.COM or bob@sub.domain.org today"),
-        (9000002L, "call 555-123-4567 or 555.987.6543 before noon"),
-        (9000003L, "mixed: carol@x.io then 800-555-0199 but not fragment@nodot"),
-        (9000004L, "edge not-an-email @ spaced.com and 12-345-6789 short")
-      ).toDF("doc_id", "text")
-      val corpus = t(s, d, "documents").select("doc_id", "text")
-        .unionByName(planted)
-      TextAnalysisOps.piiScrub(corpus, "doc_id", "text")
-        .filter(col("n_emails") + col("n_phones") > 0)
-    }),
-
-    "w14_rfm" -> ((s, d) => {
-      // RFM segmentation (recency / frequency / monetary terciles —
-      // the classic customer-value grid): per-user last-seen age,
-      // event count, and exact cents total; each metric tercile-ranked
-      // ((rank−1)·3 ÷ n, ties to the smaller user id) and the 27-cell
-      // segment grid aggregated. The rank windows run over USERS
-      // (≪ events, the w13 note); monetary sums are per-event rounded
-      // cents, so everything is integer-exact.
-      val ev = t(s, d, "events")
-      val mx = ev.agg(max(expr("CAST(ts AS LONG)")).as("mx"))
-      val per = ev.groupBy("user_id").agg(
-          max(expr("CAST(ts AS LONG)")).as("last_s"),
-          count(lit(1)).as("freq"),
-          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-        .crossJoin(broadcast(mx))
-        .withColumn("rec_days", expr("(mx - last_s) div 86400"))
-      val n = per.agg(count(lit(1)).as("n"))
-      def tercile(c: String) = expr(
-        s"((rank_$c - 1) * 3) div n + 1")
-      val ranked = per
-        .withColumn("rank_r", row_number().over(
-          Window.orderBy(col("rec_days"), col("user_id"))))
-        .withColumn("rank_f", row_number().over(
-          Window.orderBy(col("freq"), col("user_id"))))
-        .withColumn("rank_m", row_number().over(
-          Window.orderBy(col("cents"), col("user_id"))))
-        .crossJoin(broadcast(n))
-      ranked
-        .select(tercile("r").as("r_bucket"), tercile("f").as("f_bucket"),
-          tercile("m").as("m_bucket"), col("cents"))
-        .groupBy("r_bucket", "f_bucket", "m_bucket")
-        .agg(count(lit(1)).as("n_users"), sum(col("cents")).as("sum_cents"))
-    }),
-
-    "w13_time_to_convert" -> ((s, d) => {
-      // funnel latency distribution: per converting user, floor-seconds
-      // from first view to the first purchase at-or-after it, then the
-      // exact rank-rule quantiles (the t22 (n+1)÷2 / (9n+9)÷10
-      // convention, ties to the smaller user id) — the "how long does
-      // conversion take" readout beside w10's "how many convert". The
-      // global rank window runs over CONVERTING USERS (≪ events);
-      // at a scale where even that is too large, PackOps.exactRank's
-      // histogram form replaces the row_number (latencies in whole
-      // seconds are exactly its distinct ≪ rows regime)
-      val ev = t(s, d, "events")
-        .select(col("user_id"), col("event_type"), col("ts"))
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts").as("v_ts"))
-      val lat = ev.filter(col("event_type") === "purchase")
-        .join(v, Seq("user_id")).filter(col("ts") >= col("v_ts"))
-        .groupBy("user_id").agg(min("ts").as("p_ts"))
-        .join(v, Seq("user_id"))
-        .select(col("user_id"),
-          (expr("CAST(p_ts AS LONG)") - expr("CAST(v_ts AS LONG)"))
-            .as("lat_s"))
-      val ranked = lat.withColumn("rn", row_number().over(
-        Window.orderBy(col("lat_s"), col("user_id"))))
-      val n = lat.agg(count(lit(1)).as("n"))
-      ranked.crossJoin(broadcast(n))
-        .filter(col("rn") === expr("(n + 1) div 2") ||
-          col("rn") === expr("(9 * n + 9) div 10"))
-        .select(col("n"),
-          when(col("rn") === expr("(n + 1) div 2"), lit("median"))
-            .otherwise(lit("p90")).as("stat"),
-          col("lat_s"))
-    }),
-
-    "t29_changepoint" -> ((s, d) => {
-      // depth-2 binary segmentation changepoint detection (Scott &
-      // Knott style) over the dense daily event-count series: level 1
-      // picks the split minimizing total within-segment SSE over the
-      // whole series, level 2 re-splits each half — up to 3
-      // changepoints, the regime-shift detector behind t12_cusum's
-      // single-shift argmax. Every SSE derives from integer prefix
-      // sums (n, Σy, Σy²) via ONE cumulative window over the ≤|days|
-      // grid; costs are mirrored double expressions; argmin ties
-      // break to the smaller split index. The global-window sort runs
-      // on the day grid, never the corpus.
-      val daily = t(s, d, "events")
-        .select(expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("day").agg(count(lit(1)).as("y"))
-      val grid = daily.agg(min("day").as("d0"), max("day").as("d1"))
-        .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("day"), "left")
-        .select(col("day"), coalesce(col("y"), lit(0L)).as("y"))
-      val wOrd = Window.orderBy(col("day"))
-      val wCum = wOrd.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)
-      val p = grid.select(
-          row_number().over(wOrd).cast("long").as("i"),
-          sum(col("y")).over(wCum).as("cy"),
-          sum(col("y") * col("y")).over(wCum).as("cy2"))
-        .localCheckpoint(eager = false)
-      val tot = p.orderBy(col("i").desc).limit(1)
-        .select(col("i").as("n"), col("cy").as("tcy"),
-          col("cy2").as("tcy2"))
-      // SSE of [a, b] from prefix rows: (cy2b-cy2a) - (cyb-cya)²/len
-      def sse(cyb: org.apache.spark.sql.Column,
-              cy2b: org.apache.spark.sql.Column,
-              cya: org.apache.spark.sql.Column,
-              cy2a: org.apache.spark.sql.Column,
-              len: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        (cy2b - cy2a).cast("double") -
-          (cyb - cya).cast("double") * (cyb - cya) / len
-      def bestSplit(lo: org.apache.spark.sql.Column, hiRow: DataFrame,
-                    loCy: org.apache.spark.sql.Column,
-                    loCy2: org.apache.spark.sql.Column): DataFrame = {
-        // hiRow: 1 row with (hi, hcy, hcy2); candidates s in (lo, hi]
-        val cands = p.as("s")
-          .join(p.as("pv"), col("pv.i") === col("s.i") - 1)
-          .crossJoin(broadcast(hiRow))
-          .filter(col("s.i") > lo + 1 && col("s.i") <= col("hi"))
-        cands.select(col("s.i").as("split_i"),
-            (sse(col("pv.cy"), col("pv.cy2"), loCy, loCy2,
-              col("s.i") - 1 - lo) +
-             sse(col("hcy"), col("hcy2"), col("pv.cy"), col("pv.cy2"),
-               col("hi") - col("s.i") + 1)).as("child_sse"),
-            sse(col("hcy"), col("hcy2"), loCy, loCy2,
-              col("hi") - lo).as("seg_sse"))
-          .orderBy(col("child_sse").asc, col("split_i").asc).limit(1)
-          .select(col("split_i"),
-            (col("seg_sse") - col("child_sse")).as("gain"))
-      }
-      val totR = tot.select(col("n").as("hi"), col("tcy").as("hcy"),
-        col("tcy2").as("hcy2")).localCheckpoint(eager = false)
-      val b1 = bestSplit(lit(0L), totR, lit(0L), lit(0L))
-        .localCheckpoint(eager = false)
-      // boundary prefix row at s1-1 (the level-2 segment edge)
-      val bl = p.crossJoin(broadcast(b1))
-        .filter(col("i") === col("split_i") - 1)
-        .select(col("i").as("hi"), col("cy").as("hcy"),
-          col("cy2").as("hcy2")).localCheckpoint(eager = false)
-      val left2 = bestSplit(lit(0L), bl, lit(0L), lit(0L))
-      val right2 = {
-        val blB = bl.select(col("hi").as("lo0"), col("hcy").as("lcy"),
-          col("hcy2").as("lcy2"))
-        val cands = p.as("s")
-          .join(p.as("pv"), col("pv.i") === col("s.i") - 1)
-          .crossJoin(broadcast(totR)).crossJoin(broadcast(blB))
-          .filter(col("s.i") > col("lo0") + 1 && col("s.i") <= col("hi"))
-        cands.select(col("s.i").as("split_i"),
-            (sse(col("pv.cy"), col("pv.cy2"), col("lcy"), col("lcy2"),
-              col("s.i") - 1 - col("lo0")) +
-             sse(col("hcy"), col("hcy2"), col("pv.cy"), col("pv.cy2"),
-               col("hi") - col("s.i") + 1)).as("child_sse"),
-            sse(col("hcy"), col("hcy2"), col("lcy"), col("lcy2"),
-              col("hi") - col("lo0")).as("seg_sse"))
-          .orderBy(col("child_sse").asc, col("split_i").asc).limit(1)
-          .select(col("split_i"),
-            (col("seg_sse") - col("child_sse")).as("gain"))
-      }
-      b1.select(lit(1).as("level"), col("split_i"),
-          round(col("gain"), 6).as("gain"))
-        .unionByName(left2.select(lit(2).as("level"), col("split_i"),
-          round(col("gain"), 6).as("gain")))
-        .unionByName(right2.select(lit(3).as("level"), col("split_i"),
-          round(col("gain"), 6).as("gain")))
-    }),
-
-    "t28_theil_sen" -> ((s, d) => {
-      // Theil–Sen robust trend: the MEDIAN of all pairwise slopes over
-      // each event_type's daily cents series — immune to the outlier
-      // days that drag an OLS fit (t17's sibling the way t27's MAD
-      // shadows t10's z-score). Slopes are one exact integer-difference
-      // division; the median is an exact rank pick (ties ordered by the
-      // pair's days). Pair volume is O(T²) per series in series LENGTH
-      // (not corpus size) — ~10³ pairs for a month; years-long series
-      // use the classic hash-sampled pair subset.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy("event_type", "day").agg(sum(col("cents")).as("c"))
-        .localCheckpoint()
-      val pairs = daily.alias("a").join(daily.alias("b"),
-          col("a.event_type") === col("b.event_type") &&
-            col("a.day") < col("b.day"))
-        .select(col("a.event_type").as("event_type"),
-          ((col("b.c") - col("a.c")).cast("double") /
-            (col("b.day") - col("a.day"))).as("slope"),
-          col("a.day").as("d1"), col("b.day").as("d2"))
-      val n = pairs.groupBy("event_type").agg(count(lit(1)).as("n_pairs"))
-      pairs.withColumn("rn", row_number().over(
-          Window.partitionBy("event_type")
-            .orderBy(col("slope"), col("d1"), col("d2"))))
-        .join(n, Seq("event_type"))
-        .filter(col("rn") === expr("(n_pairs + 1) div 2"))
-        .select(col("event_type"), col("n_pairs"),
-          round(col("slope"), 6).as("slope"))
-    }),
-
-    "t27_anomaly_mad" -> ((s, d) => {
-      // robust anomaly scoring: the median/MAD z-score over each
-      // event_type's daily cents series — t10's trailing z-score flags
-      // against a mean/std a single spike INFLATES; median/MAD is the
-      // outlier-resistant production variant. Median and MAD come from
-      // exact per-group rank picks ((n+1)÷2, ties (value, day)); the
-      // only division is the final score, MAD floored at 1 cent.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy("event_type", "day").agg(sum(col("cents")).as("c"))
-      val n = daily.groupBy("event_type").agg(count(lit(1)).as("n"))
-      val med = daily
-        .withColumn("rn", row_number().over(Window.partitionBy("event_type")
-          .orderBy(col("c"), col("day"))))
-        .join(n, Seq("event_type"))
-        .filter(col("rn") === expr("(n + 1) div 2"))
-        .select(col("event_type"), col("c").as("med"))
-      val mad = daily.join(med, Seq("event_type"))
-        .withColumn("ad", abs(col("c") - col("med")))
-        .withColumn("rn", row_number().over(Window.partitionBy("event_type")
-          .orderBy(col("ad"), col("day"))))
-        .join(n, Seq("event_type"))
-        .filter(col("rn") === expr("(n + 1) div 2"))
-        .select(col("event_type"), greatest(col("ad"), lit(1L)).as("mad"))
-      daily.join(med, Seq("event_type")).join(mad, Seq("event_type"))
-        .select(col("event_type"), col("day"), col("c"),
-          round((col("c") - col("med")).cast("double") /
-            (lit(1.4826) * col("mad")), 4).as("z"),
-          (abs((col("c") - col("med")).cast("double") /
-            (lit(1.4826) * col("mad"))) > 3.0).as("is_anomaly"))
-    }),
-
-    "t26_wow_growth" -> ((s, d) => {
-      // week-over-week growth per event_type (the dashboard staple):
-      // weekly counts, the lag-week ratio, and the absolute delta —
-      // one aggregate + one partitioned lag window; first weeks emit
-      // null growth (no fabricated baseline)
-      val w = Window.partitionBy("event_type").orderBy("week")
-      t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 604800").as("week"))
-        .groupBy("event_type", "week")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("prev_n", lag(col("n"), 1).over(w))
-        .select(col("event_type"), col("week"), col("n"),
-          (col("n") - col("prev_n")).as("delta"),
-          round(col("n").cast("double") / col("prev_n"), 6).as("wow"))
-    }),
-
-    "w12_transitions" -> ((s, d) => {
-      // event-type transition matrix (the user-journey Sankey feed /
-      // first-order Markov model of behavior): consecutive event pairs
-      // per user in (ts, event_id) order, counted per (from, to) with
-      // the per-source transition probability — one lag window + one
-      // aggregation, the w-family's behavioral-model row
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      t(s, d, "events")
-        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-        .withColumn("nxt", lead(col("event_type"), 1).over(w))
-        .filter(col("nxt").isNotNull)
-        .groupBy(col("event_type").as("from_type"), col("nxt").as("to_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("p", round(col("n").cast("double") /
-          sum(col("n")).over(Window.partitionBy("from_type")), 6))
-    }),
-
-    "w10_funnel" -> ((s, d) => {
-      // ordered conversion funnel view → click → purchase: a user
-      // advances a stage only with an event AT OR AFTER their entry
-      // into the previous stage (min-ts semantics, exact µs). Two
-      // user-keyed joins + per-user min aggregates — the event-analytics
-      // staple the window family lacked; the three stage counts meet in
-      // broadcast one-row crossJoins.
-      val ev = t(s, d, "events")
-        .select(col("user_id"), col("event_type"), col("ts"))
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts").as("v_ts"))
-      val c = ev.filter(col("event_type") === "click")
-        .join(v, Seq("user_id")).filter(col("ts") >= col("v_ts"))
-        .groupBy("user_id").agg(min("ts").as("c_ts"))
-      val p = ev.filter(col("event_type") === "purchase")
-        .join(c, Seq("user_id")).filter(col("ts") >= col("c_ts"))
-        .select("user_id").distinct()
-      v.agg(count(lit(1)).as("n_view"))
-        .crossJoin(broadcast(c.agg(count(lit(1)).as("n_view_click"))))
-        .crossJoin(broadcast(p.agg(count(lit(1)).as("n_full"))))
-    }),
-
-    "w11_attribution" -> ((s, d) => {
-      // last-touch attribution: each purchase credits the LATEST
-      // preceding click/view on its user within a 1-day lookback, else
-      // 'unattributed' — the revenue-accounting consumer of the as-of
-      // family (one asofJoin pass; staleness is a post-filter, the w9
-      // discipline; touch ties at one (user, ts) resolve to the max
-      // event_id, the w7 convention). Revenue rolls up by channel.
-      val ev = t(s, d, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-      val touches = ev.filter(col("event_type").isin("click", "view"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("user_id", "ts").orderBy(col("event_id").desc)))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("ts"),
-          col("event_type").as("channel"), col("event_id").as("touch_id"))
-        .withColumn("tts", col("ts"))
-      AsofOps.asofJoin(purchases, touches, "user_id", "ts",
-          Seq("channel", "touch_id", "tts"))
-        .withColumn("attr_channel",
-          when(col("tts").isNull ||
-            expr("CAST(ts AS LONG) - CAST(tts AS LONG)") > 86400L,
-            lit("unattributed")).otherwise(col("channel")))
-        .groupBy("attr_channel")
-        .agg(count(lit(1)).as("n_purchases"),
-          round(sum(col("value")), 2).as("revenue"))
-    }),
-
-    "stats_ab_srm" -> ((s, d) => {
-      // sample-ratio-mismatch check (the first thing an experimentation
-      // platform tests before reading an A/B result): observed 90/5/5
-      // split occupancy vs expected, per-bucket χ² terms and the total
-      // — completes the experimentation trio (SRM gate → CUPED variance
-      // → AUC/calibration readouts). Uses the canonical split hash, so
-      // it audits the very assignment sample_split ships.
-      val b = t(s, d, "documents")
-        .withColumn("bb", pmod(
-          expr("fnv64(concat(cast(doc_id as string), '#split'))")
-            .bitwiseAND(lit(4294967295L)), lit(100L)))
-        .withColumn("split", when(col("bb") < 90, "train")
-          .when(col("bb") < 95, "val").otherwise("test"))
-      val obs = b.groupBy("split").agg(count(lit(1)).as("n_obs"))
-      val tot = b.agg(count(lit(1)).cast("double").as("n"))
-      obs.crossJoin(broadcast(tot))
-        .withColumn("n_exp", col("n") *
-          when(col("split") === "train", lit(0.90d)).otherwise(lit(0.05d)))
-        .withColumn("chi_term", (col("n_obs") - col("n_exp")) *
-          (col("n_obs") - col("n_exp")) / col("n_exp"))
-        .select(col("split"), col("n_obs"),
-          round(col("n_exp"), 2).as("n_exp"),
-          round(col("chi_term"), 6).as("chi_term"),
-          round(sum(col("chi_term")).over(Window.partitionBy()), 6)
-            .as("chi2"))
-    }),
-
-    "stats_cuped" -> ((s, d) => {
-      // CUPED variance reduction (the A/B-analytics staple beside
-      // stats_auc/retention): per-user pre metric x (even event_ids)
-      // and experiment metric y (odd), θ = cov/var over users, and the
-      // residual variance var(y) − cov²/var(x) with its reduction
-      // share — how much a covariate-adjusted metric tightens. All
-      // population moments from one per-user pass + one tiny aggregate;
-      // the arithmetic chain is textually mirrored in the oracle.
-      // r14 cent-long hardening: per-user x/y are exact cent BIGINTs
-      // and every population co-moment is an exact integer (cross
-      // products in DECIMAL(38,0) ↔ HUGEINT — a per-user cent total
-      // squared passes 2^63 well before web scale); θ and reduction
-      // are scale-free (cent² cancels), var_y/var_adj divide the cent²
-      // moments by 10⁴ once at the end. No unordered double sum feeds
-      // the hash.
-      val per = t(s, d, "events")
-        .select(col("user_id"), col("event_id"),
-          round(col("value") * 100).cast("long").as("vc"))
-        .groupBy("user_id").agg(
-          sum(when(pmod(col("event_id"), lit(2L)) === 0L, col("vc"))
-            .otherwise(lit(0L))).as("x"),
-          sum(when(pmod(col("event_id"), lit(2L)) === 1L, col("vc"))
-            .otherwise(lit(0L))).as("y"))
-      per.agg(count(lit(1)).cast("double").as("n"),
-          sum(col("x")).cast("double").as("sx"),
-          sum(col("y")).cast("double").as("sy"),
-          sum((col("x").cast("decimal(38,0)") * col("y")))
-            .cast("double").as("sxy"),
-          sum((col("x").cast("decimal(38,0)") * col("x")))
-            .cast("double").as("sxx"),
-          sum((col("y").cast("decimal(38,0)") * col("y")))
-            .cast("double").as("syy"))
-        .select(col("n"),
-          (col("sxy") / col("n") -
-            col("sx") / col("n") * (col("sy") / col("n"))).as("covxy"),
-          (col("sxx") / col("n") -
-            col("sx") / col("n") * (col("sx") / col("n"))).as("varx"),
-          (col("syy") / col("n") -
-            col("sy") / col("n") * (col("sy") / col("n"))).as("vary"))
-        .select(col("n").cast("long").as("n_users"),
-          round(col("covxy") / col("varx"), 6).as("theta"),
-          round(col("vary") / 10000.0, 4).as("var_y"),
-          round((col("vary") - col("covxy") * col("covxy") / col("varx"))
-            / 10000.0, 4).as("var_adj"),
-          round(col("covxy") * col("covxy") /
-            (col("varx") * col("vary")), 6).as("reduction"))
-    }),
-
-    "stats_calibration" -> ((s, d) => {
-      // reliability table + expected calibration error for the
-      // serve-time classifier (stats_auc's sibling: AUC ranks, ECE
-      // audits the probabilities themselves). Shares the exact
-      // classifierZ fold with curate_classifier; the binary target is
-      // lang='en' (deterministic stand-in labels). The decile-bin ECE
-      // machinery is the shared calibrationEce helper.
-      calibrationEce(s, d, t(s, d, "documents")
-        .select(col("doc_id"), (col("lang") === "en").cast("int").as("y")))
-    }),
-
-    "curate_calibration" -> ((s, d) => {
-      // the quality classifier CALIBRATED AGAINST THE GOPHER GATE — the
-      // go/no-go audit before a pipeline swaps rule-filtering for
-      // model-filtering: if the model's score deciles don't track the
-      // rule gate's pass rate, thresholding the score reproduces
-      // neither the rules nor anything better. Same decile-bin ECE
-      // machinery as stats_calibration; labels are gopherRules.keep
-      // (both chains are gated elsewhere — this row composes them).
-      calibrationEce(s, d,
-        TextAnalysisOps.gopherRules(t(s, d, "documents"), "doc_id", "text")
-          .select(col("doc_id"), col("keep").cast("int").as("y")))
-    }),
-
-    // corpus-vs-corpus: the whole embeddings table queries itself through
-    // the non-broadcast shuffle-join path (PlanSpec pins the no-broadcast
-    // plan shape)
-    "ann_lsh_join" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      SimilarityOps.lshTopKJoin(emb, emb, k = 3)
-        .select(col("query_id"), col("nbr_id"), round(col("sim"), 4).as("sim"),
-          col("rank"))
-    }),
-
-    "text_quality" -> ((s, d) =>
-      TextAnalysisOps.qualityMetrics(t(s, d, "documents"), "doc_id", "text")),
-
-    "text_stopword_ratio" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"),
-          TextAnalysisOps.stopwordRatio(col("text")).as("sw_ratio"))),
-
-    "text_lang_id" -> ((s, d) =>
-      TextAnalysisOps.withLangId(t(s, d, "documents"), "text")
-        .select(col("doc_id"), col("pred_lang"))),
-
-    "text_pii_mask" -> ((s, d) => {
-      // PII scrubbing (the Dolma/CCNet pre-training hygiene pass):
-      // emails, IPv4s and phone-shaped tokens counted and masked to
-      // typed placeholders. The fixture plants one of each per doc by
-      // identical concatenation on both engines (the f20_html_text
-      // convention) so every rule fires on every row; on real data the
-      // same chain applies to the raw text column. Pure codegen regexp
-      // chain (three counts + three global replaces), RE2-safe
-      // patterns — no lookarounds, no backrefs.
-      val payload = concat(
-        lit("reach "), col("source"), lit(".team@example.com or 10.0."),
-        pmod(col("doc_id"), lit(256)).cast("string"), lit("."),
-        pmod(col("doc_id") * 7, lit(256)).cast("string"),
-        lit(" tel 555-"),
-        lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0"),
-        lit(" :: "), substring(col("text"), 1, 120))
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val ip = "([0-9]{1,3}\\.){3}[0-9]{1,3}"
-      val phone = "555-[0-9]{4}"
-      t(s, d, "documents")
-        .select(col("doc_id"), payload.as("raw"))
-        // counts via the DSL (a SQL-literal '$pat' would re-interpret
-        // backslashes: '\.'' parses to '.' and over-counts)
-        .select(col("doc_id"),
-          regexp_count(col("raw"), lit(email)).cast("long").as("n_email"),
-          regexp_count(col("raw"), lit(ip)).cast("long").as("n_ip"),
-          regexp_count(col("raw"), lit(phone)).cast("long").as("n_phone"),
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(col("raw"), lit(email), lit("<EMAIL>")),
-              lit(ip), lit("<IP>")),
-            lit(phone), lit("<PHONE>")).as("masked"))
-    }),
-
-    "f20_html_text" -> ((s, d) => {
-      // HTML → clean text (GraftFunctions.htmlText): the extractor
-      // between the s21 WARC loader and the text pipeline — script/
-      // style/comment blocks drop, tags strip, common entities decode,
-      // whitespace collapses. The fixture wraps each doc's fields in a
-      // synthetic page built by identical concatenation on both
-      // engines (the curate_url_dedup convention), exercising every
-      // rule; on real WARC payloads the same function applies to the
-      // response body column. Pure codegen regexp chain — no UDF.
-      val html = concat(
-        lit("<html><head><script type=\"text/javascript\">var x = 1 < 2;" +
-          "</script><style>.c{color:red}</style><title>"),
-        col("source"), lit("</title></head><body><h1>"), col("lang"),
-        lit("</h1><!-- boilerplate --><p>"), substring(col("text"), 1, 100),
-        lit(" &amp; entities &lt;kept&gt; &quot;right&quot;&nbsp;&#39;ok&#39;" +
-          "</p></body></html>"))
-      t(s, d, "documents")
-        .select(col("doc_id"), GraftFunctions.htmlText(html).as("clean"))
-        .select(col("doc_id"), col("clean"),
-          length(col("clean")).as("n_chars_clean"))
-    }),
-
-    "text_llm_watermark" -> ((s, d) => {
-      // greenlist-watermark detector (Kirchenbauer et al. 2023, "A
-      // Watermark for Large Language Models"): a watermarking LLM
-      // biases each token toward a pseudorandom "green list" seeded by
-      // the previous token; the detector recounts — for every bigram,
-      // green = low bit of fnv64("prev cur") — and scores the excess
-      // over the n/2 null with z = (2G − n)/√n. Flag at z > 4
-      // (~3·10⁻⁵ false-positive rate). Unwatermarked text scores ~0;
-      // the operator is the screening harness a training-data pipeline
-      // runs to keep synthetic/LLM text out of the corpus. Everything
-      // is integer until z: the bigram fold runs inside the tokens
-      // array (no explode of positions), one doc-keyed aggregation.
-      val tk = TermOps.tokens(col("text"))
-      t(s, d, "documents").select(col("doc_id"), tk.as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("doc_id"), explode(expr(
-          """zip_with(slice(toks, 1, size(toks) - 1),
-            |         slice(toks, 2, size(toks) - 1),
-            |         (a, b) -> concat(a, ' ', b))""".stripMargin))
-          .as("bg"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"),
-          sum(pmod(GraftFunctions.fnv64(col("bg")), lit(2L))).as("green"))
-        .withColumn("zraw", (lit(2.0) * col("green") - col("n_bigrams")) /
-          sqrt(col("n_bigrams").cast("double")))
-        .select(col("doc_id"), col("n_bigrams"), col("green"),
-          round(col("zraw"), 6).as("z"),
-          (col("zraw") > 4.0).as("flagged"))
-    }),
-
-    "text_fingerprint" -> ((s, d) =>
-      TextAnalysisOps.withFingerprint(t(s, d, "documents"), "text")
-        .select(col("doc_id"), col("fingerprint"))),
-
-    "text_scrub" -> ((s, d) => {
-      import s.implicits._
-      // planted rows prove the substitutions fire; the organic corpus
-      // proves no false positives
-      val planted = Seq(
-        (9000001L, "contact bob@example.com or https://ex.com/a?b=1 ref 55512345678 end"),
-        (9000002L, "no pii here at all")).toDF("doc_id", "text")
-      t(s, d, "documents").select(col("doc_id"), col("text"))
-        .unionByName(planted)
-        .select(col("doc_id"), TextAnalysisOps.scrubPii(col("text")).as("scrubbed"))
-    }),
-
-    "text_repetition" -> ((s, d) => {
-      import s.implicits._
-      val planted = Seq(
-        (9000001L, "spam spam spam spam spam spam"),
-        (9000002L, "all words here are fully distinct tokens")).toDF("doc_id", "text")
-      t(s, d, "documents").select(col("doc_id"), col("text"))
-        .unionByName(planted)
-        .select(col("doc_id"),
-          TextAnalysisOps.repetitionRatio(col("text")).as("rep_ratio"))
-    }),
-
-    "text_surprisal" -> ((s, d) =>
-      TextAnalysisOps.surprisal(t(s, d, "documents"), "doc_id", "text")),
-
-    "sample_stratified" -> ((s, d) =>
-      // deterministic stratified sampling: per-language rates via a
-      // hash-threshold on doc_id — reproducible across runs/engines,
-      // map-only, no RNG state
-      t(s, d, "documents")
-        .filter(SimilarityOps.hash32Col(col("doc_id") + lit(1L)) % 100 <
-          when(col("lang") === "en", lit(30)).otherwise(lit(10)))
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_sampled"))),
-
-    "sample_neyman" -> ((s, d) => {
-      // Neyman allocation (n_h ∝ N_h·S_h): the DESIGN table a 1000-doc
-      // stratified draw starts from — high-variance strata get more
-      // budget than proportional allocation would give. S_h from exact
-      // integer co-moments (stats_moments convention — Σx² and the
-      // nh·sxx − sx² products in DECIMAL(38,0), HUGEINT on the DuckDB
-      // side, so neither engine overflows at 10^11+ docs); the
-      // Σ N_h·S_h normalizer is an ordered fold over the lang-sorted
-      // strata; allocations floor, so the output is engine-exact
-      val dec = "decimal(38,0)"
-      val agg = t(s, d, "documents")
-        .select(col("lang"), col("n_chars").as("x"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("nh"), sum("x").as("sx"),
-          sum((col("x") * col("x")).cast(dec)).as("sxx"))
-      val wh = agg.select(col("lang"), col("nh"),
-          sqrt((col("sxx") * col("nh") -
-              col("sx").cast(dec) * col("sx"))
-            .cast("double") /
-            (col("nh") * (col("nh") - lit(1L))).cast("double")).as("sd"))
-        .withColumn("w", col("nh").cast("double") * col("sd"))
-      // tot derives from wh, so alias both sides — a bare crossJoin
-      // leaves `w` ambiguous between the branch and its own subtree
-      val tot = wh
-        .agg(array_sort(collect_list(struct(col("lang"), col("w"))))
-          .as("arr"))
-        .select(aggregate(col("arr"), lit(0.0d),
-          (a, x) => a + x.getField("w")).as("W"))
-      wh.alias("wh").crossJoin(broadcast(tot).alias("tt"))
-        .select(col("wh.lang").as("lang"), col("wh.nh").as("n_rows"),
-          round(col("wh.sd"), 4).as("stddev"),
-          floor(lit(1000.0) * col("wh.w") / col("tt.W")).cast("long")
-            .as("alloc"))
-    }),
-
-    "mm_bytes" -> ((s, d) =>
-      t(s, d, "documents")
-        .select(col("doc_id"), octet_length(col("text")).as("n_bytes"))),
-
-    "mm_frame_sample" -> ((s, d) =>
-      // frame-sampling plumbing over a binary payload: every 32nd-byte
-      // chunk of 16 bytes becomes a (frame_idx, frame_sig) feature row
-      MultimodalOps.sampleFrames(
-          t(s, d, "documents")
-            .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
-          "payload", frameSize = 16, stride = 2)
-        .select(col("doc_id"), col("frame_idx"), col("frame_sig"))),
-
-    "mm_frame_energy" -> ((s, d) =>
-      // frame level metering over the payload (16-byte frames, every
-      // 2nd sampled): exact integer energy + peak per frame — the
-      // silence/VAD gate a media pipeline applies before decoding
-      MultimodalOps.frameEnergy(
-          t(s, d, "documents")
-            .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
-          "payload", frameSize = 16, stride = 2)
-        .select(col("doc_id"), col("frame_idx"), col("energy"), col("peak"))),
-
-    "mm_frame_energy_stereo" -> ((s, d) =>
-      // multi-channel metering: the payload read as interleaved L/R
-      // samples (the PCM convention) — per-channel energy/peak plus
-      // the exact Σ l·r cross-sum, the stereo-width signal a downmix
-      // gate thresholds. Deinterleave runs inside the codegen kernel;
-      // same frame geometry as mm_frame_energy.
-      MultimodalOps.frameEnergyStereo(
-          t(s, d, "documents")
-            .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
-          "payload", frameSize = 16, stride = 2)
-        .select(col("doc_id"), col("frame_idx"), col("energy_l"),
-          col("energy_r"), col("peak_l"), col("peak_r"), col("xsum"))),
-
-    "mm_patches" -> ((s, d) =>
-      // 2D patch grid over the payload-as-byte-matrix (width 64, 8×8
-      // patches): the ViT patch-extraction shape with the native
-      // patch_sigs kernel standing in for the embedding batch
-      MultimodalOps.samplePatches(
-          t(s, d, "documents")
-            .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
-          "payload", width = 64, patch = 8)
-        .select(col("doc_id"), col("pr"), col("pc"), col("patch_sig"))),
-
-    "mm_resize" -> ((s, d) =>
-      // block-mean RESIZE of the synthetic grayscale (width-64 byte
-      // matrix → 8×8 thumbnail): the downsample verb of the multimodal
-      // family (mm_patches extracts, mm_phash fingerprints, this one
-      // resamples — the thumbnail a curation UI or a low-res model
-      // input needs). One native fold per doc (block_means) — the
-      // pixels never leave the kernel, the plan sees ≤64 cells/doc,
-      // zero exchanges. See MultimodalOps.blockMeanResize.
-      MultimodalOps.blockMeanResize(
-        t(s, d, "documents"), "doc_id", "text", width = 64, grid = 8)),
-
-    "mm_tone_profile" -> ((s, d) =>
-      // per-image tone profile off the 8×8 thumbnail: dark/mid/bright
-      // zone counts (0-63 / 64-191 / 192-255) + min/max/contrast of the
-      // block means — the exposure histogram a vision-curation pass
-      // buckets or filters by (all-dark and zero-contrast images are
-      // the classic junk classes). Composes the same block_means kernel
-      // as mm_resize, so pixels never leave codegen; ONE aggregation on
-      // doc_id, every output an exact integer.
-      MultimodalOps.blockMeanResize(
-          t(s, d, "documents"), "doc_id", "text", width = 64, grid = 8)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_blocks"),
-          min(col("mean_gray")).as("g_min"),
-          max(col("mean_gray")).as("g_max"),
-          sum(when(col("mean_gray") < 64, 1L).otherwise(0L)).as("n_dark"),
-          sum(when(col("mean_gray") >= 64 && col("mean_gray") < 192, 1L)
-            .otherwise(0L)).as("n_mid"),
-          sum(when(col("mean_gray") >= 192, 1L).otherwise(0L))
-            .as("n_bright"))
-        .select(col("doc_id"), col("n_blocks"), col("g_min"), col("g_max"),
-          (col("g_max") - col("g_min")).as("contrast"),
-          col("n_dark"), col("n_mid"), col("n_bright"))),
-
-    "mm_phash" -> ((s, d) =>
-      // 64-bit average-hash (aHash) perceptual signature over the
-      // synthetic grayscale — exact integer cross-multiply bits, pure
-      // map, zero exchanges (plan-pinned); the dedup complement of
-      // mm_patches' locality-preserving patch signatures (aHash is
-      // the global-layout fingerprint, patches are the local ones).
-      // See MultimodalOps.avgHash64.
-      MultimodalOps.avgHash64(t(s, d, "documents"), "doc_id", "text")),
-
-    "mm_phash_neardup" -> ((s, d) => {
-      // perceptual near-dup pairs: aHash signatures bucketed by four
-      // 16-bit bands (pairs only ever form inside a (band, value)
-      // bucket — never all-pairs), verified by exact popcount ≤ 12.
-      // Planted variants (every 53rd doc with a 4-char suffix — a
-      // "small pixel edit") land within a few bits of their original,
-      // so the gate has guaranteed positives on any corpus.
-      val base = t(s, d, "documents").select(col("doc_id"), col("text"))
-      val planted = base.filter(col("doc_id") % 53 === 0)
-        .select((col("doc_id") + lit(2000000L)).as("doc_id"),
-          concat(col("text"), lit(" zq")).as("text"))
-      MultimodalOps.phashNearDup(
-        MultimodalOps.avgHash64(base.unionByName(planted),
-          "doc_id", "text"),
-        "doc_id", maxHamming = 12)
-    }),
-
-    "mm_audio_neardup" -> ((s, d) => {
-      // AUDIO near-dup pairs — the modality symmetry completer (images
-      // have mm_phash_neardup; this consumes mm_audio_fp's landmark
-      // constellation as a similarity key): per medium, a SimHash over
-      // the landmark hash set (MultimodalOps.audioSimhash — hamming-
-      // robust, unlike the XOR fold fp, where one differing landmark
-      // re-randomizes half the bits), then the SAME banded-hamming join
-      // recipe (16-bit bands; candidates only ever form inside a
-      // (band, value) bucket — never all-pairs), exact popcount ≤ 6.
-      // Planted overlapping clips: clipShift = one genuinely-quiet
-      // 32-byte '0' pad frame (energy below every 'A'..'Z' loud code,
-      // AND frame 0 is peak-ineligible anyway — no lag neighbor; two
-      // independent reasons the pad can't mint a landmark)
-      // + clipBase, so the shared region's frames ALIGN to the stride
-      // and its landmarks are identical (landmark keys carry gaps and
-      // quantized energies, never absolute offsets); clipOther walks a
-      // different code sequence — guaranteed positive and negative on
-      // any corpus.
-      import s.implicits._
-      val planted = Seq(
-        (9000001L, audioClipBase), (9000002L, audioClipShift),
-        (9000003L, audioClipOther)).toDF("doc_id", "text")
-      val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        .unionByName(planted)
-      // support cut: a majority vote over < 8 landmarks is not a stable
-      // signature (1-2 landmark docs inherit the raw hash bits and
-      // identical-landmark classes would pair quadratically) — the same
-      // degenerate-key discipline as the dedup family's hub cuts
-      MultimodalOps.phashNearDup(
-        MultimodalOps.audioSimhash(
-          docs.select(col("doc_id"),
-            encode(col("text"), "UTF-8").as("payload")),
-          "doc_id", "payload", frameSize = 16, stride = 2)
-          .filter(col("n_landmarks") >= 8),
-        "doc_id", maxHamming = 6)
-    }),
-
-    "mm_neardup" -> ((s, d) =>
-      // perceptual near-dup pairs over the payload patch grid: ≥ 4/5 of
-      // aligned sub-hub patch signatures coincide — the image-side
-      // dedup family member (localized edits only kill their own
-      // patches); integer accept test, inverted-index candidates only
-      MultimodalOps.nearDupImages(
-        t(s, d, "documents")
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload")),
-        "doc_id", "payload", width = 64, patch = 8)),
-
-    "mm_neardup_eval" -> ((s, d) => {
-      // Precision/recall of BOTH perceptual near-dup tiers at their
-      // shipping thresholds, on planted corpora with labeled positives
-      // AND negatives (the dedup_minhash_eval discipline — r17 judge
-      // item 5: the families proved candidates-only-via-buckets but
-      // never their miss rates). Each chain runs over documents ∪ its
-      // planted fixtures — the planted pairs must survive the hub cuts
-      // and band buckets in full organic company — and the confusion
-      // table restricts to planted-planted pairs (organic pairs are
-      // unlabeled). Image tier: ≥ 4/5 aligned patch overlap; audio
-      // tier: landmark-SimHash hamming ≤ 6.
-      import s.implicits._
-      val plantedI = Seq(
-        (9100001L, imgBase), (9100002L, imgEdit),
-        (9100003L, imgHalf), (9100004L, imgOther)).toDF("doc_id", "text")
-      val predI = MultimodalOps.nearDupImages(
-          t(s, d, "documents").select(col("doc_id"), col("text"))
-            .unionByName(plantedI)
-            .select(col("doc_id"),
-              encode(col("text"), "UTF-8").as("payload")),
-          "doc_id", "payload", width = 64, patch = 8)
-        .filter(col("doc_a") >= 9100001L && col("doc_b") >= 9100001L)
-        .select(lit("image").as("medium"), col("doc_a").as("id_a"),
-          col("doc_b").as("id_b"))
-      val plantedA = Seq(
-        (9000001L, audioClipBase), (9000002L, audioClipShift),
-        (9000003L, audioClipOther)).toDF("doc_id", "text")
-      val predA = MultimodalOps.phashNearDup(
-          MultimodalOps.audioSimhash(
-            t(s, d, "documents").select(col("doc_id"), col("text"))
-              .unionByName(plantedA)
-              .select(col("doc_id"),
-                encode(col("text"), "UTF-8").as("payload")),
-            "doc_id", "payload", frameSize = 16, stride = 2)
-            .filter(col("n_landmarks") >= 8),
-          "doc_id", maxHamming = 6)
-        .filter(col("id_a").between(9000001L, 9000003L) &&
-          col("id_b").between(9000001L, 9000003L))
-        .select(lit("audio").as("medium"), col("id_a"), col("id_b"))
-      val truth = Seq(
-        ("audio", 9000001L, 9000002L, 1), ("audio", 9000001L, 9000003L, 0),
-        ("audio", 9000002L, 9000003L, 0),
-        ("image", 9100001L, 9100002L, 1), ("image", 9100001L, 9100003L, 0),
-        ("image", 9100001L, 9100004L, 0), ("image", 9100002L, 9100003L, 0),
-        ("image", 9100002L, 9100004L, 0), ("image", 9100003L, 9100004L, 0))
-        .toDF("medium", "id_a", "id_b", "is_pos")
-      truth.join(
-          predI.unionByName(predA).withColumn("hit", lit(1)),
-          Seq("medium", "id_a", "id_b"), "left")
-        .withColumn("pred", coalesce(col("hit"), lit(0)))
-        .groupBy("medium").agg(
-          sum(col("is_pos")).as("n_pos"),
-          sum(lit(1) - col("is_pos")).as("n_neg"),
-          sum(col("is_pos") * col("pred")).as("tp"),
-          sum((lit(1) - col("is_pos")) * col("pred")).as("fp"),
-          sum(col("is_pos") * (lit(1) - col("pred"))).as("fn"),
-          sum((lit(1) - col("is_pos")) * (lit(1) - col("pred"))).as("tn"))
-        .withColumn("precision",
-          round(when(col("tp") + col("fp") === 0, lit(0.0))
-            .otherwise(col("tp").cast("double") /
-              (col("tp") + col("fp"))), 6))
-        .withColumn("recall",
-          round(col("tp").cast("double") / col("n_pos"), 6))
-    }),
-
-    "mm_media_meta" -> ((s, d) =>
-      MultimodalOps.withMediaMeta(
-          t(s, d, "documents").withColumn("payload", encode(col("text"), "UTF-8")),
-          "payload")
-        .select(col("doc_id"), col("media_meta.width").as("width"),
-          col("media_meta.height").as("height"),
-          col("media_meta.format").as("format"),
-          col("media_meta.n_bytes").as("n_bytes"))),
-
-    "mm_png_meta" -> ((s, _) => {
-      // real-decode path of the multimodal seam: authored PNGs through
-      // javax.imageio; n_bytes is encoder-dependent, so the oracle pins
-      // dimensions and format only
-      import s.implicits._
-      def png(w: Int, h: Int): Array[Byte] = {
-        val img = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var x = 0
-        while (x < w) {
-          var y = 0
-          while (y < h) { img.setRGB(x, y, (x * 31 + y * 7) & 0xffffff); y += 1 }
-          x += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        bos.toByteArray
-      }
-      MultimodalOps.withMediaMeta(
-          Seq((1L, png(5, 3)), (2L, png(17, 9)), (3L, png(64, 64)))
-            .toDF("doc_id", "payload"),
-          "payload")
-        .select(col("doc_id"), col("media_meta.width").as("width"),
-          col("media_meta.height").as("height"),
-          col("media_meta.format").as("format"))
-    }),
-
-    // ---- golden fixture queries for the scalar kernels ----
-    "f1_extract_links" -> ((s, _) =>
-      textFixture(s).filter(col("fid") === 1L)
-        .select(explode(GraftFunctions.extractLinks(col("text"))).as("l"))
-        .select(col("l.anchor").as("anchor"), col("l.target").as("target"))),
-
-    "f3_extract_refs" -> ((s, _) =>
-      textFixture(s)
-        .select(col("fid"), size(GraftFunctions.extractRefs(col("text"))).as("n_refs"))),
-
-    "f4_extract_templates" -> ((s, _) =>
-      textFixture(s).filter(col("fid") === 3L)
-        .select(explode(GraftFunctions.extractTemplates(col("text"))).as("template"))),
-
-    "f11_plain_text" -> ((s, _) =>
-      textFixture(s).filter(col("fid") === 2L)
-        .select(GraftFunctions.plainText(col("text")).as("plain"))),
-
-    "f13_normalize_title" -> ((s, _) =>
-      titleFixture(s)
-        .select(col("fid"), GraftFunctions.normalizeTitle(col("title")).as("norm"))),
-
-    "f5_extract_domain" -> ((s, _) => {
-      import s.implicits._
-      Seq((1L, "http://www.bbc.co.uk/news"), (2L, "https://example.com/x?y"),
-        (3L, "not a url"))
-        .toDF("fid", "url")
-        .select(col("fid"),
-          GraftFunctions.extractDomain(col("url")).as("domain"))
-    }),
-
-    "f18_decode_ez" -> ((s, _) => {
-      import s.implicits._
-      Seq((1L, "AB5C3,CA1B2")).toDF("fid", "ez")
-        .select(col("fid"),
-          posexplode(GraftFunctions.decodeEz(col("ez"), lit(5))).as(Seq("day", "views")))
-    }),
-
-    "s8_sampler_fixture" -> ((s, _) =>
-      RevisionOps.changeRatioSample(samplerFixture(s), "key", "ts", "len")
-        .select(col("event_id"))),
-
-    "st_windowed_counts" -> ((s, _) => {
-      // streaming through the correctness gate: a deterministic event
-      // trace flows through an in-memory stream source into the
-      // watermarked windowed-count operator; the finished micro-batch
-      // result is the query output
-      StreamTrace.run[Event](s, "st_windowed_counts", "complete")(src =>
-        EventStreamOps.windowedCounts(src.toDF(), "ts", "user_id",
-          "10 minutes", "5 minutes"))(
-        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
-          Event(1, wall("2024-01-01 00:04:00"), 2.0),
-          Event(2, wall("2024-01-01 00:12:00"), 3.0),
-          Event(1, wall("2024-01-01 00:13:00"), 4.0)))
-        .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
-          col("user_id"), col("n_events"))
-    }),
-
-    "st_watermark_lag" -> ((s, _) => {
-      // streaming OBSERVABILITY: per-batch watermark lag (max event
-      // time seen vs the watermark the batch ran with) — the first
-      // number an on-call reads when a streaming pipeline's windows
-      // stop closing. Spark's watermark is computed at the END of a
-      // batch and applied to the NEXT one, so batch 1 runs at the
-      // epoch-0 initial watermark and every later batch lags exactly
-      // one batch's max − delay: the golden trace pins that
-      // one-batch-behind semantic (a real operational gotcha). The
-      // trace is harness metadata (StreamingQueryProgress), not data
-      // rows — at scale this reads the same way from the progress API
-      // regardless of input volume. The trace reads the stream's
-      // progress, not its sink, so it runs the harness steps itself.
-      val src = StreamTrace.source[Event](StreamTrace.session(s))
-      val batches = Seq(
-        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
-          Event(1, wall("2024-01-01 00:05:00"), 1.0)),
-        Seq(Event(1, wall("2024-01-01 00:09:00"), 1.0),
-          Event(1, wall("2024-01-01 00:12:00"), 1.0)),
-        Seq(Event(1, wall("2024-01-01 00:20:00"), 1.0)))
-      val progress = StreamTrace.drive(
-          EventStreamOps.windowedCounts(src.toDF(), "ts", "user_id",
-            "10 minutes", "5 minutes"),
-          "memory", "st_watermark_lag", "complete")(
-          batches.iterator.map(b => () => src.addData(b))) { q =>
-        q.recentProgress.toSeq.filter(_.numInputRows > 0)
-          .map(p => (p.eventTime.get("max"), p.eventTime.get("watermark")))
-      }
-      import s.implicits._
-      val fmt = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
-      progress.zipWithIndex
-        .map { case ((mx, wm), i) => (i + 1, mx, wm) }
-        .toDF("batch_seq", "max_raw", "wm_raw")
-        .select(col("batch_seq"),
-          date_format(to_timestamp(col("max_raw"), fmt), "yyyy-MM-dd HH:mm:ss")
-            .as("max_event"),
-          date_format(to_timestamp(col("wm_raw"), fmt), "yyyy-MM-dd HH:mm:ss")
-            .as("watermark"),
-          (unix_timestamp(to_timestamp(col("max_raw"), fmt)) -
-            unix_timestamp(to_timestamp(col("wm_raw"), fmt))).as("lag_s"))
-    }),
-
-    "st_cms" -> ((s, _) => {
-      // streaming count-min: each finalized window emits its bounded
-      // depth×width cells (append mode), which merge cell-wise with the
-      // batch sketch — same seed-suffixed FNV bucket family as
-      // SketchOps.countMin. The sentinel advances the watermark past both
-      // data windows; its own window stays open and unemitted
-      StreamTrace.run[Event](s, "st_cms", "append")(src =>
-        EventStreamOps.countMinCells(src.toDF(), "ts", "user_id",
-          "10 minutes", "10 minutes", depth = 2, width = 256))(
-        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
-          Event(1, wall("2024-01-01 00:04:00"), 2.0),
-          Event(2, wall("2024-01-01 00:12:00"), 3.0),
-          Event(1, wall("2024-01-01 00:13:00"), 4.0)),
-        // watermark sentinel: 00:40 − 10 min closes the 00:00 and 00:10
-        // windows
-        Seq(Event(99, wall("2024-01-01 00:40:00"), 0.0)))
-        .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
-          col("j"), col("bucket"), col("cnt"))
-    }),
-
-    "st_throttle" -> ((s, _) => {
-      // event-time admission control (≤ 2 events per user per 10-min
-      // window, chosen in EVENT-TIME order): the out-of-order 00:06
-      // arrival in the second batch still beats the already-arrived
-      // 00:07 event — admission is a function of event times, not
-      // arrival. (00:06 > the 00:02 watermark after batch 1 — an
-      // arrival AT the watermark is dropped as late by the stateful-op
-      // filter, so the trace keeps a strict margin.) The sentinel
-      // advances the watermark past both data windows
-      StreamTrace.run[Event](s, "st_throttle", "append")(
-          EventStreamOps.throttleEventTime(_, windowMs = 600000L,
-            maxPerWindow = 2, watermark = "10 minutes"))(
-        Seq(Event(1, wall("2024-01-01 00:05:00"), 3.0),
-          Event(1, wall("2024-01-01 00:07:00"), 4.0),
-          Event(2, wall("2024-01-01 00:12:00"), 5.0)),
-        // within-watermark out-of-order arrival + a second-window event
-        Seq(Event(1, wall("2024-01-01 00:06:00"), 3.5),
-          Event(1, wall("2024-01-01 00:14:00"), 6.0)),
-        // sentinel: watermark 00:40 − 10 min = 00:30 closes both windows
-        Seq(Event(99, wall("2024-01-01 00:40:00"), 0.0)))
-        .select(col("user_id"),
-          date_format(timestamp_millis(col("w_start_ms")),
-            "yyyy-MM-dd HH:mm:ss").as("w_start"),
-          col("seq"),
-          date_format(timestamp_millis(col("ts_ms")),
-            "yyyy-MM-dd HH:mm:ss").as("ts"),
-          col("value"))
-    }),
-
-    "st_hll" -> ((s, _) => {
-      // streaming distinct-count sketch: each finalized window emits its
-      // ≤ 2^p HLL registers (append mode), max-mergeable across windows
-      // and with the batch sketch_hll registers — the distinct-count
-      // half of the lambda pattern (st_cms is the frequency half).
-      // User 1 appears twice in window 0: one register, max'd
-      StreamTrace.run[Event](s, "st_hll", "append")(src =>
-        EventStreamOps.hllCells(src.toDF(), "ts", "user_id",
-          "10 minutes", "10 minutes", p = 6))(
-        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
-          Event(1, wall("2024-01-01 00:04:00"), 2.0),
-          Event(2, wall("2024-01-01 00:05:00"), 3.0),
-          Event(3, wall("2024-01-01 00:07:00"), 4.0),
-          Event(2, wall("2024-01-01 00:12:00"), 5.0),
-          Event(3, wall("2024-01-01 00:13:00"), 6.0)),
-        // watermark sentinel: 00:40 − 10 min closes both data windows;
-        // its own window stays open and unemitted
-        Seq(Event(99, wall("2024-01-01 00:40:00"), 0.0)))
-        .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
-          col("bucket"), col("rho"))
-    }),
-
-    "st_expectations" -> ((s, _) => {
-      // streaming data-quality monitor: per finalized window, violation
-      // counts of the declared checks (negative value; user id outside
-      // the known range) — the ingest-time sibling of stats_expectations
-      StreamTrace.run[Event](s, "st_expectations", "append")(src =>
-        EventStreamOps.windowedExpectations(src.toDF(), "ts",
-          "10 minutes", "10 minutes",
-          Seq("n_value_negative" -> (col("value") < 0),
-            "n_user_unknown" -> (col("user_id") > 2))))(
-        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.0),
-          Event(2, wall("2024-01-01 00:04:00"), -2.0),
-          Event(5, wall("2024-01-01 00:12:00"), 3.0),
-          Event(1, wall("2024-01-01 00:13:00"), -1.0)),
-        // sentinel closes the 00:00 and 00:10 windows; its own window
-        // (00:40) stays open and unemitted
-        Seq(Event(2, wall("2024-01-01 00:40:00"), 0.0)))
-        .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
-          col("n_value_negative"), col("n_user_unknown"))
-    }),
-
-    "s8_sampler_events" -> ((s, d) =>
-      // the sampler at data scale: keyed by user, "length" = value column
-      RevisionOps.changeRatioSample(t(s, d, "events"), "user_id", "ts", "value",
-          tieBreak = "event_id")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_kept"))),
-
-    // ---- custom XML / JSON revision sources (golden fixtures) ----
-    "s3_xml_scan" -> ((s, _) =>
-      graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath,
-          Map("onlyArticles" -> "true", "skipRedirects" -> "true"))
-        .select(col("page_id"), col("rev_id"),
-          date_format(col("timestamp"), "yyyy-MM-dd HH:mm:ss").as("ts_str"),
-          col("user"), col("user_id"), col("minor"))),
-
-    "s11_header_scan" -> ((s, _) =>
-      graft.sources.WikiXml.readHeaders(s, graft.sources.WikiFixtures.standardXmlPath)
-        .groupBy(col("page_id"))
-        .agg(count(lit(1)).as("n_revs"), max(col("rev_id")).as("max_rev"))),
-
-    // S2: verbatim per-revision XML — fingerprinted (md5 + length) so the
-    // oracle literals stay readable; the expected values are derived from
-    // the fixture file with an independent regex extractor, not this scan
-    "s2_raw_xml" -> ((s, _) =>
-      graft.sources.WikiXml.readRaw(s, graft.sources.WikiFixtures.standardXmlPath)
-        .select(col("page_id"), col("rev_id"),
-          md5(col("revision_xml")).as("xml_md5"),
-          length(col("revision_xml")).as("n_chars"))),
-
-    "s5_revision_pairs" -> ((s, _) =>
-      RevisionOps.pairs(
-          graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath),
-          "page_id", "timestamp", Seq("rev_id"), "rev_id")
-        .select(col("rev_id"), col("prev_rev_id"))),
-
-    "s15_json_scan" -> ((s, _) =>
-      graft.sources.WikiXml.readJson(s, graft.sources.WikiFixtures.jsonPath)
-        .select(col("page_id"), col("rev_id"), col("parent_id"),
-          col("timestamp").as("ts_ms"), col("user"))),
-
-    "f16_rev_diff" -> ((s, _) => {
-      import s.implicits._
-      val orig = Seq("The quick brown fox jumps over the lazy dog",
-        "This sentence stays the same", "But this will be removed.",
-        "This will be the same.")
-      val rev = Seq("And this has been added.",
-        "That quick brown fox jumped over a lazy dog.",
-        "This sentence stays the same", "And this has been newly added.",
-        "This will be the same.")
-      Seq((1L, orig, rev)).toDF("fid", "orig", "rev")
-        .select(col("fid"), explode(GraftFunctions.revDiff(col("orig"), col("rev"))).as("d"))
-        .select(col("fid"), col("d.op").as("op"), col("d.origPos").as("orig_pos"),
-          col("d.revPos").as("rev_pos"), size(col("d.origLines")).as("n_orig"),
-          size(col("d.revLines")).as("n_rev"))
-    }),
-
-    "w2_change_sampling" -> ((s, d) => {
-      // approximate window-based variant of S8 (SURVEY §2.8): keep rows
-      // whose value moved >10% vs the previous row of the same user
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      t(s, d, "events")
-        .withColumn("prev_value", lag(col("value"), 1).over(w))
-        .filter(col("prev_value").isNull ||
-          abs(col("value") - col("prev_value")) / greatest(abs(col("prev_value")), lit(1.0)) > 0.1)
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_kept"))
-    }),
-
-    "a13_id_title_map" -> ((s, _) =>
-      graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath)
-        .select(col("page_id"), col("page_title")).distinct()),
-
-    "p2_redirect_filter" -> ((s, _) =>
-      graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath,
-          Map("skipRedirects" -> "true"))
-        .select(col("rev_id"))),
-
-    "f14_iso_parse" -> ((s, _) => {
-      import s.implicits._
-      Seq((1L, "2021-03-04T05:06:07Z"), (2L, "1999-12-31T23:59:59Z"))
-        .toDF("fid", "iso")
-        .select(col("fid"),
-          date_format(GraftFunctions.isoTimestamp(col("iso")),
-            "yyyy-MM-dd HH:mm:ss").as("parsed"))
-    }),
-
-    "k4_count_only" -> ((s, d) =>
-      t(s, d, "lineitem").agg(count(lit(1)).as("n_rows"))),
-
-    "o2_dict_sort" -> ((s, d) =>
-      TermOps.termStats(t(s, d, "documents"), "doc_id", "text", minDf = 5L)
-        .withColumn("term_rank",
-          row_number().over(Window.orderBy(col("term").asc)))
-        .select(col("term"), col("term_rank"))),
-
-    "s6_revision_diffs" -> ((s, _) => {
-      val revs = graft.sources.WikiXml
-        .read(s, graft.sources.WikiFixtures.standardXmlPath)
-        .withColumn("toks", TermOps.tokens(col("text")))
-      RevisionOps.diffs(revs, "page_id", "timestamp", "toks", "rev_id",
-          GraftFunctions.revDiff)
-        .select(col("rev_id"), size(col("deltas")).as("n_deltas"))
-    }),
-
-    "s7_bucket_pairs" -> ((s, d) => {
-      // S7: collapse to the last event per (user, rounded-up hour), then
-      // pair consecutive buckets per user
-      val b = t(s, d, "events")
-        .withColumn("bucket",
-          date_format(RevisionOps.roundUp(col("ts"), 3600L), "yyyy-MM-dd HH:mm:ss"))
-        .groupBy(col("user_id"), col("bucket"))
-        .agg(max_by(col("event_id"), col("ts")).as("last_event_id"))
-      val w = Window.partitionBy("user_id").orderBy("bucket")
-      b.withColumn("prev_bucket", lag(col("bucket"), 1).over(w))
-        .withColumn("prev_event_id", lag(col("last_event_id"), 1).over(w))
-    }),
-
-    "s12_link_profile" -> ((s, _) =>
-      graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath)
-        .select(col("rev_id"), explode(GraftFunctions.extractLinks(col("text"))).as("l"))
-        .select(col("rev_id"), col("l.anchor").as("anchor"), col("l.target").as("target"))),
-
-    "s13_bow_scan" -> ((s, _) =>
-      BowOps.changedWordBow(
-        graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath),
-        "page_id", "timestamp", "text", "rev_id")),
-
-    "s14_concat_scan" -> ((s, _) =>
-      BowOps.concatPatches(
-          graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath),
-          "page_id", "timestamp", "text", "rev_id")
-        .select(col("page_id"), col("first_text"),
-          size(col("patch_words")).as("n_patch_words"))),
-
-    "s20_clean_text" -> ((s, _) =>
-      graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath)
-        .select(col("rev_id"), GraftFunctions.plainText(col("text")).as("plain"))),
-
-    "s18_sql_surface" -> ((s, d) => {
-      Tables.registerAll(s, d)
-      s.sql("""SELECT o_orderpriority, count(*) AS n_orders,
-              | round(sum(o_totalprice), 2) AS sum_price
-              |FROM orders JOIN customer ON o_custkey = c_custkey
-              |WHERE c_mktsegment <> 'BUILDING'
-              |GROUP BY o_orderpriority""".stripMargin)
-    }),
-
-    "j3_ts_dict" -> ((s, d) => {
-      val dict = t(s, d, "events").groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("type_id",
-          row_number().over(Window.orderBy(col("n").desc, col("event_type").asc)))
-        .select("event_type", "type_id")
-      t(s, d, "events")
-        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-        .join(broadcast(dict), Seq("event_type"))
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("type_id"), col("cnt"))
-    }),
-
-    "f2_extract_links_ctx" -> ((s, _) => {
-      import s.implicits._
-      Seq((1L, "0123456789[[T|a]]post")).toDF("fid", "text")
-        .select(col("fid"), explode(GraftFunctions.extractLinksCtx(col("text"))).as("l"))
-        .select(col("fid"), col("l.anchor").as("anchor"), col("l.target").as("target"),
-          col("l.offset").as("offset"), col("l.pre").as("pre"), col("l.post").as("post"))
-    }),
-
-    "f6_cut_last" -> ((s, _) => {
-      import s.implicits._
-      Seq((1L, "abcdef"), (2L, "ab")).toDF("fid", "v")
-        .select(col("fid"),
-          GraftFunctions.cutLast(col("v"), lit(2)).as("cut"))
-    }),
-
-    "f8_hour_to_day" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(GraftFunctions.yyyymmddhhToDay(
-          date_format(col("ts"), "yyyyMMddHH")).as("day"))
-        .agg(count(lit(1)).as("n_events"))),
-
-    "j1_anchor_graph" -> ((s, _) => {
-      // J1/J2: anchors ⋈ broadcast id-title map → resolved edge list
-      // (unresolved targets drop out, the reference's inner-join semantics)
-      val revs = graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.graphXmlPath)
-      val idmap = revs.select(col("page_title").as("title"),
-        col("page_id").as("dst_id")).distinct()
-      revs.select(col("page_id").as("src_id"),
-          explode(GraftFunctions.extractLinks(col("text"))).as("l"))
-        .join(broadcast(idmap), col("l.target") === col("title"))
-        .groupBy(col("src_id"), col("dst_id"))
-        .agg(count(lit(1)).as("n_links"))
-    }),
-
-    "o5_salted_agg" -> ((s, d) =>
-      SkewOps.saltedSum(t(s, d, "events"), "event_type", "value")
-        .select(col("event_type"), round(col("sum_value"), 2).as("sum_value"),
-          col("n_rows"))),
-
-    "o9_key_cap_audit" -> ((s, d) =>
-      // the flag half of the key-sanity cap (r11 item 6): what
-      // capHotKeys(85) drops from events — one never-skewed count
-      // aggregation, O(1) output. 85 sits inside the organic per-user
-      // distribution at every SF (max 86-99), so the capped branch is
-      // EXERCISED by the gate, not just compiled
-      SkewOps.hotKeyAudit(t(s, d, "events"), "user_id", maxRows = 85L)),
-
-    "s8_sampler_capped" -> ((s, d) =>
-      // the S8 carry sampler behind the key-sanity cap — the documented
-      // mitigation for its sequential-per-key floor (r11 skew table:
-      // 2.9× under a planted 50%-of-events user; capped: the hot key
-      // never reaches the carry scan). Semantics: identical to
-      // s8_sampler_events on every surviving key; over-cap keys are
-      // excluded wholesale (and surfaced by o9_key_cap_audit)
-      RevisionOps.changeRatioSample(
-          SkewOps.capHotKeys(t(s, d, "events"), "user_id", maxRows = 85L),
-          "user_id", "ts", "value", tieBreak = "event_id")
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_kept"))),
-
-    "w12_transitions_capped" -> ((s, d) => {
-      // w12's transition matrix behind the same cap: the per-user lag
-      // window is the other sequential-per-key op the r11 probe flagged
-      // (2.6×) — capped, the hot user's events never enter the window
-      val ev = SkewOps.capHotKeys(t(s, d, "events"), "user_id",
-        maxRows = 85L)
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      ev.select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-        .withColumn("nxt", lead(col("event_type"), 1).over(w))
-        .filter(col("nxt").isNotNull)
-        .groupBy(col("event_type").as("from_type"), col("nxt").as("to_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("p", round(col("n").cast("double") /
-          sum(col("n")).over(Window.partitionBy("from_type")), 6))
-    }),
-
-    "fnv64_native" -> ((s, _) => {
-      import s.implicits._
-      Seq((1L, "abc"), (2L, ""), (3L, "hello world"), (4L, "graft"))
-        .toDF("fid", "v")
-        .selectExpr("fid", "fnv64(v) AS h")
-    }),
-
-    "a11_tf_ts_index" -> ((s, _) =>
-      graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath)
-        .select(col("page_id"),
-          date_format(col("timestamp"), "yyyy-MM-dd HH:mm:ss").as("ts_str"),
-          explode(TermOps.tokens(col("text"))).as("word"))
-        .groupBy(col("word"), col("page_id"), col("ts_str"))
-        .agg(count(lit(1)).as("tf"))),
-
-    "pv_pipeline" -> ((s, _) => {
-      import s.implicits._
-      val lines = Seq(
-        "en.z Foo_bar#x 10 AB5C3,CA1B2",
-        "en.z foo_bar 7 AA7",
-        "de.z Ignored 5 AA5",
-        "en.z Baz 2 BA2").toDF("value")
-      PageviewOps.pipeline(lines, days = 5)
-        .select(col("title"), col("total"),
-          posexplode(col("daily")).as(Seq("day", "views")))
-    }),
-
-    "w4_asof_join" -> ((s, d) => {
-      // as-of join: each purchase picks up the user's latest view at or
-      // before it (right side pre-aggregated to unique (user, ts) for
-      // determinism)
-      val ev = t(s, d, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("ts"), col("user_id"))
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("last_view_id"))
-      AsofOps.asofJoin(purchases, views, "user_id", "ts", Seq("last_view_id"))
-        .select(col("event_id"), date_format(col("ts"), tsFmt).as("ts_str"),
-          col("last_view_id"))
-    }),
-
-    "w5_range_join" -> ((s, d) => {
-      // bucketed range join: events falling in each signup's 2-day window
-      val ev = t(s, d, "events")
-      val intervals = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("start_ts"),
-          (col("ts") + expr("INTERVAL 2 DAYS")).as("end_ts"),
-          col("event_id").as("signup_id"))
-      AsofOps.rangeJoin(ev, intervals, "user_id", "ts",
-          "start_ts", "end_ts", bucketMs = 86400000L)
-        .groupBy(col("signup_id"))
-        .agg(count(lit(1)).as("n_in_window"),
-          round(sum(col("value")), 2).as("sum_value"))
-    }),
-
-    "w15_overlap_join" -> ((s, d) => {
-      // interval×interval overlap join (bucketed, exactly-once): which
-      // purchase attribution windows [ts, +1d) intersect which signup
-      // onboarding windows [ts, +2d) for the same user — the
-      // interval-interval sibling of w5's point-in-interval, still an
-      // equality join on (user, bucket), never non-equi
-      val ev = t(s, d, "events")
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("s_start"),
-          (col("ts") + expr("INTERVAL 2 DAYS")).as("s_end"),
-          col("event_id").as("signup_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_start"),
-          (col("ts") + expr("INTERVAL 1 DAYS")).as("p_end"),
-          col("event_id").as("purchase_id"))
-      AsofOps.intervalOverlapJoin(signups, purchases, "user_id",
-          "s_start", "s_end", "p_start", "p_end", bucketMs = 86400000L)
-        .groupBy(col("signup_id"))
-        .agg(count(lit(1)).as("n_overlap"),
-          min(col("purchase_id")).as("first_purchase"))
-    }),
-
-    "search_bm25" -> ((s, d) => bm25Leg(s, d)),
-
-
-    "search_maxscore" -> ((s, d) =>
-      // MaxScore-pruned exact BM25 top-20 on a skewed-df query: 'dup'
-      // (df ≈ 5 % of docs, UB ≈ 6.6) vs near-stopwords 'scan'/'join'
-      // (UB ≈ 0.5 each) — docs without the rare term upper-bound at
-      // ~1.0, far below the seed threshold, so ~95 % of matching docs
-      // never reach exact scoring (Round12Spec pins the fraction and
-      // the byte-equality with the unpruned scorer); the oracle is the
-      // UNPRUNED bm25 chain, so losslessness is the gate
-      TermOps.maxScoreSearch(t(s, d, "documents"), "doc_id", "text",
-        queryTerms = Seq("dup", "scan", "join"), k = 20)),
-
-    "search_lm_dirichlet" -> ((s, d) =>
-      // query-likelihood retrieval with Dirichlet smoothing (µ = 2000)
-      // on the BM25 query — the language-model scorer beside the
-      // probabilistic one; every doc scores (smoothing pays the
-      // background probability for missing terms), the ln argument is
-      // one ratio of exact BIGINTs, ranking on the rounded score.
-      // See TermOps.qlDirichletSearch.
-      TermOps.qlDirichletSearch(t(s, d, "documents"), "doc_id", "text",
-        queryTerms = Seq("scan", "join", "merge"), k = 20)),
-
-    "sketch_kmv" -> ((s, d) => {
-      // KMV distinct sketch: k=64 exercises the estimator on user_id
-      // (distinct count > k), k=256 the exact small-set path is avoided
-      // on event_id (every event distinct)
-      val ev = t(s, d, "events")
-      SketchOps.kmvDistinct(ev, "user_id", k = 64)
-        .withColumn("key", lit("user_id"))
-        .unionByName(SketchOps.kmvDistinct(ev, "event_id", k = 256)
-          .withColumn("key", lit("event_id")))
-    }),
-
-    "sketch_join_size" -> ((s, d) => {
-      // join-cardinality estimation from sketches: |A ⋈ B on user_id|
-      // estimated by the CMS inner product min_j Σ_b A_j[b]·B_j[b]
-      // (the AGMS/count-min join-size estimator, Alon et al. '99 /
-      // Cormode-Muthukrishnan '05) — the optimizer-grade statistic.
-      // Exact needs a per-key join; the sketch answer costs O(d·w)
-      // cells no matter how many keys. est ≥ exact (collisions add)
-      val ev = t(s, d, "events")
-      val a = ev.filter(col("event_id") % 2 === 0)
-      val b = ev.filter(col("event_id") % 2 =!= 0)
-      val exact = a.groupBy(col("user_id")).agg(count(lit(1)).as("ca"))
-        .join(b.groupBy(col("user_id")).agg(count(lit(1)).as("cb")),
-          Seq("user_id"))
-        .agg(sum(col("ca") * col("cb")).as("exact_size"))
-      val est = SketchOps.countMin(a, "user_id", depth = 3, width = 256)
-        .withColumnRenamed("cnt", "ca")
-        .join(SketchOps.countMin(b, "user_id", depth = 3, width = 256)
-          .withColumnRenamed("cnt", "cb"), Seq("j", "bucket"))
-        .groupBy(col("j")).agg(sum(col("ca") * col("cb")).as("ip"))
-        .agg(min(col("ip")).as("cms_est"))
-      exact.crossJoin(est)
-        .select(col("exact_size"), col("cms_est"),
-          round(col("cms_est").cast("double") / col("exact_size"), 4)
-            .as("inflation"))
-    }),
-
-    "layout_range_bounds" -> ((s, d) => {
-      // exact equi-depth range-partitioner bounds (8 buckets over
-      // n_chars): what a range-layout writer feeds its partitioner.
-      // Spark's own RangePartitioner samples; this computes the bounds
-      // EXACTLY at the same scale safety by running the cumulative
-      // window over the compressed (value → count) histogram —
-      // O(distinct values) rows, never O(rows)
-      val h = t(s, d, "documents").groupBy(col("n_chars").as("v"))
-        .agg(count(lit(1)).as("cnt"))
-      val wCum = Window.orderBy(col("v"))
-      val wAll = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      val cum = h.withColumn("cum", sum(col("cnt")).over(wCum))
-        .withColumn("total", sum(col("cnt")).over(wAll))
-      cum.agg(max(col("total")).as("n_rows"),
-        (1 until 8).map(i =>
-          min(when(col("cum") >= expr(s"(total - 1) * $i div 8") + 1,
-            col("v"))).as(s"b$i")): _*)
-    }),
-
-    "sketch_kmv_pairs" -> ((s, d) =>
-      // cross-corpus overlap matrix from sketches alone: per-lang term
-      // vocabularies → k=128 KMV sketches → pairwise jaccard / union /
-      // intersection estimates on groups×k rows — the corpora never
-      // meet in a key join (Beyer et al. SIGMOD'07 multiset estimators)
-      SketchOps.kmvPairwise(
-          t(s, d, "documents").select(col("lang"),
-            explode(TermOps.tokens(col("text"))).as("term")),
-          "lang", "term", k = 128)
-        .select(col("g_a").as("lang_a"), col("g_b").as("lang_b"),
-          col("k_union"), col("rho"), col("union_est"), col("inter_est"))),
-
-    "a17_cube" -> ((s, d) =>
-      // the full grouping lattice over (lang, source) — CUBE plans ONE
-      // Expand over 4 grouping sets feeding one partial+final hash
-      // aggregate (the a14 ROLLUP story completed): every marginal a
-      // mixture dashboard reads, for one shuffle. Null keys out as
-      // sentinels to keep the compare null-free
-      t(s, d, "documents")
-        .cube(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .select(coalesce(col("lang"), lit("ALL")).as("lang"),
-          coalesce(col("source"), lit("ALL")).as("source"),
-          col("n_docs"), col("sum_chars"))),
-
-    "k19_inverted_index" -> ((s, d) => {
-      // the reference's core build-then-serve shape (dictionary + doc
-      // vectors, Hedera's BuildVByteDocVectors lineage) as a bucketed
-      // table: postings written bucketed+sorted BY TERM, so an
-      // index-served term lookup aggregates with ZERO exchanges — the
-      // shuffle was paid once at build time. The oracle recomputes from
-      // raw documents: equality proves the index round-trip faithful
-      val postings = TermOps.tfPostings(t(s, d, "documents"), "doc_id", "text")
-      operators.BucketedTables.writeBucketed(postings, "k19_idx", "term", 4)
-      s.table("k19_idx")
-        .filter(col("term").isin("scan", "join", "merge"))
-        .groupBy(col("term"))
-        .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-    }),
-
-    "stats_benford" -> ((s, d) => {
-      // leading-digit distribution of n_chars (the Benford profile):
-      // the anomaly scan over numeric corpus metadata — synthetic or
-      // truncated data shows up as a digit-histogram distortion long
-      // before anyone reads a document. Integer counts + one ratio
-      val digits = t(s, d, "documents")
-        .select(substring(col("n_chars").cast("string"), 1, 1)
-          .cast("int").as("digit"))
-        .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-      digits.withColumn("frac",
-          round(col("n").cast("double") /
-            sum(col("n")).over(Window.partitionBy()), 4))
-        .select(col("digit"), col("n"), col("frac"))
-    }),
-
-    "a16_feature_hash" -> ((s, d) =>
-      // hashing-trick vectorization (dim 256): fixed-dimension sparse
-      // features with NO dictionary pass — the deterministic 1-in-13
-      // doc slice bounds the matrix rows across scale factors
-      TermOps.featureHash(
-        t(s, d, "documents").filter(col("doc_id") % 13 === 0),
-        "doc_id", "text", dim = 256)),
-
-    "sample_dsir" -> ((s, d) =>
-      // DSIR importance weights: raw corpus vs the deterministic
-      // doc_id % 7 target slice (stand-in for the curated/in-domain
-      // corpus a production run would point at); selection = top-weight
-      TextAnalysisOps.dsirWeights(t(s, d, "documents"), "doc_id", "text",
-        isTarget = col("doc_id") % 7 === 0)),
-
-    "text_token_count" -> ((s, d) => {
-      // token-budget estimation per doc: whitespace words vs the
-      // GPT-2-ish pre-tokenizer split (TermOps.Bpe) — the context-window
-      // planning number; pure map, zero exchanges
-      val ws = size(TermOps.tokens(col("text")))
-      val bpe = size(TermOps.tokens(col("text"), TermOps.Bpe))
-      t(s, d, "documents").select(col("doc_id"),
-        ws.as("n_ws"), bpe.as("n_bpe"),
-        when(ws === 0, lit(0.0))
-          .otherwise(round(bpe.cast("double") / ws.cast("double"), 4))
-          .as("bpe_per_ws"))
-    }),
-
-    "text_gopher_rules" -> ((s, d) =>
-      // the Gopher hard-rule gate bits (Rae et al. 2021 §A1.1) — every
-      // rule an integer cross-multiplied compare, pure map
-      TextAnalysisOps.gopherRules(t(s, d, "documents"), "doc_id", "text")),
-
-    "bpe_train" -> ((s, d) =>
-      // distributed BPE merge training (3 greedy rounds over the
-      // corpus word-frequency table) — the tokenizer-TRAINING half of
-      // the F17 seam; the learned merge table is the artifact a real
-      // pipeline ships to its serving tokenizer. See TermOps.bpeTrain.
-      TermOps.bpeTrain(t(s, d, "documents"), "doc_id", "text",
-        rounds = 3)),
-
-    "bpe_apply" -> ((s, d) =>
-      // the SERVING half of bpe_train: apply the freshly learned merge
-      // table to the corpus word table and audit what the vocabulary
-      // buys — pieces per word (fertility) and chars per piece
-      // (compression) over frequency-weighted exact integers. The
-      // train→apply loop a tokenizer team runs before shipping a vocab.
-      // See TermOps.bpeSegment.
-      TermOps.bpeSegment(t(s, d, "documents"), "doc_id", "text",
-        rounds = 3)),
-
-    "text_fertility" -> ((s, d) => {
-      // tokenizer fertility (BPE-ish pieces per whitespace word) BY
-      // LANGUAGE — the aggregate tokenizer-choice audit over
-      // text_token_count's per-doc signal: a language whose fertility
-      // runs hot pays proportionally more context window. One exchange
-      // on the |langs|-sized key; token counting stays map-side.
-      val ws = size(TermOps.tokens(col("text"))).cast("long")
-      val bpe = size(TermOps.tokens(col("text"), TermOps.Bpe)).cast("long")
-      val chars = aggregate(
-        transform(TermOps.tokens(col("text")), x => length(x).cast("long")),
-        lit(0L), (a, x) => a + x)
-      t(s, d, "documents")
-        .groupBy("lang")
-        .agg(sum(ws).as("n_ws"), sum(bpe).as("n_bpe"),
-          sum(chars).as("n_tok_chars"))
-        .select(col("lang"), col("n_ws"), col("n_bpe"),
-          round(col("n_bpe").cast("double") /
-            greatest(col("n_ws"), lit(1L)).cast("double"), 4).as("fertility"),
-          round(col("n_tok_chars").cast("double") /
-            greatest(col("n_ws"), lit(1L)).cast("double"), 4).as("avg_tok_len"))
-    }),
-
-    "text_oov_rate" -> ((s, d) => {
-      // tokenizer-vocabulary coverage: OOV fraction per doc against the
-      // corpus dictionary (minDf ≥ 5) — the go/no-go before committing
-      // a tokenizer; vocab is bounded so it broadcasts, corpus pays one
-      // doc-keyed exchange
-      val docs = t(s, d, "documents")
-      TextAnalysisOps.oovProfile(docs, "doc_id", "text",
-        TermOps.termStats(docs, "doc_id", "text", minDf = 5L)
-          .select(col("term")))
-    }),
-
-    "text_distinctive" -> ((s, d) => {
-      // per-lang distinctive terms: rank by lang-tf / corpus-df — the
-      // integer-rational tf-idf proxy (one exact-rounded division, so
-      // rank order replays identically in any engine; ties break on
-      // term). The per-source vocabulary fingerprint a mixture planner
-      // reads next to the KMV overlap matrix
-      val toks = t(s, d, "documents").select(col("lang"), col("doc_id"),
-        explode(TermOps.tokens(col("text"))).as("term"))
-      val langTf = toks.groupBy(col("lang"), col("term"))
-        .agg(count(lit(1)).as("tf_lang"))
-      val dfc = toks.select(col("doc_id"), col("term")).distinct()
-        .groupBy(col("term")).agg(count(lit(1)).as("df_corpus"))
-      val w = Window.partitionBy(col("lang"))
-        .orderBy((col("tf_lang").cast("double") / col("df_corpus")).desc,
-          col("term").asc)
-      langTf.join(dfc, Seq("term"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("lang"), col("term"), col("tf_lang"), col("df_corpus"),
-          col("rank"))
-    }),
-
-    "sample_split" -> ((s, d) => {
-      // deterministic train/val/test assignment (the canonical ML
-      // split): hash-bucket each doc id 90/5/5, emitted as the
-      // per-(split, lang) balance table a pipeline audits — membership
-      // is a pure function of the id, so reruns, late-arriving shards
-      // and incremental refreshes all agree
-      // fold to the low 32 bits FIRST (power-of-two, so signed &
-      // unsigned agree), then take the non-power-of-two bucket modulus
-      // of that non-negative value — % 100 straight off the signed
-      // 64-bit hash would disagree with an unsigned replay
-      t(s, d, "documents")
-        .withColumn("b", pmod(
-          expr("fnv64(concat(cast(doc_id as string), '#split'))")
-            .bitwiseAND(lit(4294967295L)), lit(100L)))
-        .withColumn("split", when(col("b") < 90, "train")
-          .when(col("b") < 95, "val").otherwise("test"))
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n_docs"))
-    }),
-
-    "text_overlap_frac" -> ((s, d) => {
-      // graded decontamination: every 97th doc plays the benchmark set;
-      // each corpus doc reports the fraction of its distinct 8-grams
-      // that are benchmark-tainted (bench docs themselves score 1.0 —
-      // the self-hit sanity rows)
-      val docs = t(s, d, "documents")
-      TextAnalysisOps.overlapFraction(docs, "doc_id", "text",
-        docs.filter(col("doc_id") % 97 === 0), "text", n = 8)
-    }),
-
-    "w6_sessionize" -> ((s, d) =>
-      // gap-based batch sessionization (6h gap over the events table):
-      // one key-shuffle window + a reused-partitioning aggregation; the
-      // streaming sibling (st_sessions_event) emits the same shape
-      SessionOps.sessionize(t(s, d, "events"), "user_id", "ts", "value",
-          gapMs = 21600000L)
-        .withColumn("sum_value", round(col("sum_value"), 2))),
-
-    "w19_rfm" -> ((s, d) => {
-      // RFM segmentation (the classic customer-value scorecard):
-      // recency = days since last purchase, frequency = purchase
-      // count, monetary = cent volume; each dimension scores 1-5 by
-      // exact user quintile (the stats_ipw rank rule — integer
-      // cross-multiply cuts off PackOps.exactRank's histogram rank, no
-      // global user sort), rfm = 100r + 10f + m. Purchasers only; one
-      // user-keyed aggregation, three O(distinct)-tier rank passes
-      // joined back on user_id.
-      val per = t(s, d, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          expr("CAST(ts AS LONG) div 86400").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy("user_id")
-        .agg(max(col("day")).as("last_day"), count(lit(1)).as("f"),
-          sum(col("cents")).as("m"))
-        .localCheckpoint() // the now-scalar + three rank passes
-      val now = per.agg(max(col("last_day")).as("now_day"))
-      val base = per.crossJoin(broadcast(now))
-        .withColumn("recency", col("now_day") - col("last_day"))
-        .select(col("user_id"), col("recency"), col("f"), col("m"))
-        .localCheckpoint() // three exactRank consumers
-      val n = base.count()
-      def quintile(valueCol: String, score: String,
-                   invert: Boolean): DataFrame =
-        PackOps.exactRank(base.select(col("user_id"),
-            col(valueCol)), valueCol, "user_id")
-          .withColumn("q",
-            when(col("rank") * 5 <= n, 1)
-              .when(col("rank") * 5 <= n * 2, 2)
-              .when(col("rank") * 5 <= n * 3, 3)
-              .when(col("rank") * 5 <= n * 4, 4).otherwise(5))
-          .select(col("user_id"),
-            (if (invert) lit(6) - col("q") else col("q")).as(score))
-      base
-        .join(quintile("recency", "r_score", invert = true), "user_id")
-        .join(quintile("f", "f_score", invert = false), "user_id")
-        .join(quintile("m", "m_score", invert = false), "user_id")
-        .select(col("user_id"), col("recency").as("recency_days"),
-          col("f").as("frequency"),
-          round(col("m").cast("double") / 100.0, 2).as("monetary"),
-          col("r_score"), col("f_score"), col("m_score"),
-          (col("r_score") * 100 + col("f_score") * 10 + col("m_score"))
-            .as("rfm"))
-    }),
-
-    "w18_event_paths" -> ((s, d) => {
-      // path analysis (the product-analytics staple beside funnels —
-      // which 3-step behavior sequences actually happen?): each user's
-      // (ts, event_id)-ordered event stream yields its step 3-grams
-      // IN-ARRAY (one user-keyed aggregation builds the ordered
-      // sequence, the zip_with-of-shifted-slices kernel grams it — no
-      // positions explode, no self-joins), then one global count ranks
-      // the top 10 paths. Per-user arrays are bounded by events/user;
-      // a pathological hot user would go through the o9 key-cap audit.
-      val seqs = t(s, d, "events")
-        .select(col("user_id"), expr("CAST(ts AS LONG)").as("tsec"),
-          col("event_id"), col("event_type"))
-        .groupBy("user_id")
-        .agg(array_sort(collect_list(struct(col("tsec"), col("event_id"),
-          col("event_type")))).as("a"))
-        .select(col("user_id"),
-          expr("transform(a, x -> x.event_type)").as("steps"))
-      seqs
-        .select(explode(expr(
-          """zip_with(slice(steps, 1, greatest(size(steps) - 2, 0)),
-            |  zip_with(slice(steps, 2, greatest(size(steps) - 2, 0)),
-            |           slice(steps, 3, greatest(size(steps) - 2, 0)),
-            |    (b, c) -> concat(b, '>', c)),
-            |  (a, bc) -> concat(a, '>', bc))""".stripMargin))
-          .as("path"))
-        .groupBy("path").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("path").asc)
-        .limit(10)
-    }),
-
-    "o6_salted_join" -> ((s, d) =>
-      // salted shuffle join: every part key's lineitem rows split across
-      // 8 salts; result is exactly the plain equi-join (the oracle IS
-      // the plain join), PlanSpec pins that no broadcast happens
-      SkewOps.saltedJoin(
-          t(s, d, "lineitem").select(col("l_partkey"), col("l_quantity")),
-          t(s, d, "part").select(col("p_partkey").as("l_partkey"),
-            col("p_brand")),
-          "l_partkey", salts = 8)
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"))),
-
-    "t4_rolling" -> ((s, d) => {
-      // rolling 1-hour window per user (RANGE frame on epoch seconds):
-      // the time-series primitive the dense-series family lacked; one
-      // key shuffle, frames slide within partitions
-      val w = Window.partitionBy(col("user_id")).orderBy(col("tsec"))
-        .rangeBetween(-3600L, 0L)
-      // rolling SUM, not avg: a sum of 2-decimal inputs is an exact
-      // 2-decimal number, so the rounding can never sit on a boundary
-      // (an avg CAN land exactly on .xx5 — e.g. mean of two values —
-      // where the engines' last-ulp difference flips the rounded digit)
-      t(s, d, "events")
-        .select(col("event_id"), col("user_id"),
-          col("ts").cast("long").as("tsec"), col("value"))
-        .withColumn("n_win", count(lit(1)).over(w))
-        .withColumn("sum_win", round(sum(col("value")).over(w), 2))
-        .select(col("event_id"), col("user_id"), col("tsec"),
-          col("n_win"), col("sum_win"))
-    }),
-
-    "t8_ewma" -> ((s, d) => {
-      // bounded-horizon EWMA (adjusted form, alpha = 1/2, horizon 8):
-      // each row's smoothed value is a fixed dot product over its last
-      // 8 observations — truncating the geometric tail (< 2^-8) turns
-      // the sequential recurrence into ONE window pass (a single key
-      // shuffle), and the 2^-j weights are exact binary fractions, so
-      // any engine replays the arithmetic bit-identically
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("tsec"), col("event_id"))
-      val xs = (0 until 8).map(j =>
-        if (j == 0) col("value") else lag(col("value"), j).over(w))
-      val num = xs.zipWithIndex.map { case (x, j) =>
-        when(x.isNotNull, x * lit(math.pow(0.5, j))).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      val den = xs.zipWithIndex.map { case (x, j) =>
-        when(x.isNotNull, lit(math.pow(0.5, j))).otherwise(lit(0.0)) }
-        .reduce(_ + _)
-      t(s, d, "events")
-        .select(col("event_id"), col("user_id"),
-          col("ts").cast("long").as("tsec"), col("value"))
-        .withColumn("ewma", round(num / den, 4))
-        .drop("value")
-    }),
-
-    "t9_interval_union" -> ((s, d) => {
-      // interval-union length per user (sweep line): every event opens
-      // a 15-min half-open interval; union length = Σ of inter-point
-      // gaps where the running open-count is positive. One key shuffle,
-      // all integer-second arithmetic; zero-length tie segments make
-      // the point ordering ambiguity harmless
-      val pts = t(s, d, "events")
-        .select(col("user_id"), col("ts").cast("long").as("st"))
-        .select(col("user_id"), explode(array(
-          struct(col("st").as("t"), lit(1).as("delta")),
-          struct((col("st") + 900).as("t"), lit(-1).as("delta")))).as("p"))
-        .select(col("user_id"), col("p.t").as("t"), col("p.delta").as("delta"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("t"), col("delta"))
-      pts.withColumn("active", sum(col("delta")).over(w))
-        .withColumn("nxt", lead(col("t"), 1).over(w))
-        .groupBy(col("user_id"))
-        .agg(sum(when(col("active") > 0 && col("nxt").isNotNull,
-            col("nxt") - col("t")).otherwise(0L)).as("union_sec"),
-          sum(when(col("delta") === 1, 1L).otherwise(0L)).as("n_intervals"))
-    }),
-
-    "t10_anomaly" -> ((s, d) => {
-      // per-type daily volume anomalies: trailing-week z-score from
-      // exact integer sums (ValidationOps.rollingZScore) — the spike
-      // monitor over the same daily grid t5 fills
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-      ValidationOps.rollingZScore(daily, "event_type", "day", "n")
-    }),
-
-    "t11_seasonal" -> ((s, d) => {
-      // day-of-week seasonal profile per event type (index = dow mean /
-      // overall daily mean): the calendar-period decomposition the
-      // anomaly monitor (t10) normalizes against when traffic has a
-      // weekly shape. All counts exact; the index is ONE division of
-      // integer products ((Σ_dow·days_all)/(days_dow·Σ_all))
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-      val dow = daily
-        .withColumn("dow", pmod(col("day"), lit(7L)).cast("int"))
-        .groupBy("event_type", "dow")
-        .agg(count(lit(1)).as("n_days"), sum("n").as("sum_n"))
-      val tot = daily.groupBy("event_type")
-        .agg(count(lit(1)).as("days_all"), sum("n").as("sum_all"))
-      dow.join(broadcast(tot), "event_type")
-        .select(col("event_type"), col("dow"), col("n_days"),
-          round(col("sum_n").cast("double") /
-            col("n_days").cast("double"), 4).as("mean_n"),
-          round((col("sum_n") * col("days_all")).cast("double") /
-            (col("n_days") * col("sum_all")).cast("double"), 6)
-            .as("seasonal_idx"))
-    }),
-
-    "t12_cusum" -> ((s, d) => {
-      // CUSUM changepoint per event type over the daily series: where
-      // did the baseline volume shift? (t10 flags local spikes; this
-      // locates the level change.) All-integer argmax
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("n"))
-      ValidationOps.cusumChangepoint(daily, "event_type", "day", "n")
-    }),
-
-    "t13_twa" -> ((s, d) => {
-      // time-weighted average per user (each value holds until the next
-      // event): Σ v·Δt / Σ Δt over the ordered series — the standard
-      // irregular-series aggregate (sensor/price data), where a plain
-      // avg over-weights bursts. Δt is exact integer seconds from one
-      // lead window; the float Σ v·Δt runs as an ordered fold over the
-      // user's ts-sorted contributions so engines agree bit-exactly.
-      // Per-user array state is the same bounded-horizon contract as
-      // the sessionizer buffers
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("tsec"), col("event_id"))
-      val ev = t(s, d, "events")
-        .select(col("user_id"), col("event_id"),
-          expr("CAST(ts AS LONG)").as("tsec"), col("value"))
-        .withColumn("dt", lead(col("tsec"), 1).over(w) - col("tsec"))
-        .filter(col("dt").isNotNull)
-      ev.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_holds"),
-          sum(col("dt")).as("span_sec"),
-          array_sort(collect_list(struct(col("tsec"), col("event_id"),
-            (col("value") * col("dt").cast("double")).as("vdt"))))
-            .as("arr"))
-        .select(col("user_id"), col("n_holds"), col("span_sec"),
-          round(aggregate(col("arr"), lit(0.0d),
-              (a, x) => a + x.getField("vdt")) /
-            col("span_sec").cast("double"), 6).as("twa"))
-    }),
-
-    "t5_locf" -> ((s, d) => {
-      // dense (event_type × day) grid with last-observation-carried-
-      // forward fill — the resample/gap-fill primitive. Grid = distinct
-      // types × the global day span (both tiny: broadcast); fill = the
-      // grouped-max-over-cumulative-count trick: grp counts observed
-      // days so far, so every gap row shares its grp with exactly one
-      // observed row and max() carries that value forward. Both windows
-      // and the final shape ride ONE exchange on event_type (the
-      // (event_type, grp) window re-uses the event_type hash
-      // partitioning — subset-clustering satisfies the distribution)
-      val ev = t(s, d, "events").select(col("event_type"),
-        expr("CAST(ts AS LONG) div 86400").as("day"), col("value"))
-      val daily = ev.groupBy("event_type", "day")
-        .agg(count(lit(1)).as("n_obs"), round(sum(col("value")), 2).as("day_sum"))
-      val days = ev.agg(min("day").as("d0"), max("day").as("d1"))
-        .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      val grid = ev.select("event_type").distinct().crossJoin(days)
-      grid.join(daily, Seq("event_type", "day"), "left")
-        .withColumn("grp", count(col("day_sum"))
-          .over(Window.partitionBy("event_type").orderBy("day")))
-        .withColumn("locf_sum",
-          max(col("day_sum")).over(Window.partitionBy("event_type", "grp")))
-        .select(col("event_type"), col("day"),
-          coalesce(col("n_obs"), lit(0L)).as("n_events"),
-          coalesce(col("locf_sum"), lit(0.0)).as("locf_sum"))
-    }),
-
-    "t7_interp" -> ((s, d) => {
-      // linear-interpolation gap-fill — the smooth companion to t5's
-      // LOCF. Same dense grid; each gap day takes
-      // pv + (nv-pv)·(day-pd)/(nd-pd) between its bracketing
-      // observations, found with the grouped-max trick run in BOTH
-      // directions (forward grp for prev, backward grp for next); both
-      // directions and the final projection ride the one event_type
-      // partitioning. Leading/trailing gaps fall back to the nearest
-      // observation (coalesce), so the series is total
-      val ev = t(s, d, "events").select(col("event_type"),
-        expr("CAST(ts AS LONG) div 86400").as("day"), col("value"))
-      val daily = ev.groupBy("event_type", "day")
-        .agg(round(sum(col("value")), 2).as("day_sum"))
-      val days = ev.agg(min("day").as("d0"), max("day").as("d1"))
-        .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-      val grid = ev.select("event_type").distinct().crossJoin(days)
-      val wF = Window.partitionBy("event_type").orderBy(col("day"))
-      val wB = Window.partitionBy("event_type").orderBy(col("day").desc)
-      val g = grid.join(daily, Seq("event_type", "day"), "left")
-        .withColumn("gf", count(col("day_sum")).over(wF))
-        .withColumn("gb", count(col("day_sum")).over(wB))
-      val pv = max(col("day_sum")).over(Window.partitionBy("event_type", "gf"))
-      val pd = min(col("day")).over(Window.partitionBy("event_type", "gf"))
-      val nv = max(col("day_sum")).over(Window.partitionBy("event_type", "gb"))
-      val nd = max(col("day")).over(Window.partitionBy("event_type", "gb"))
-      g.withColumn("pv", pv).withColumn("pd", pd)
-        .withColumn("nv", nv).withColumn("nd", nd)
-        .select(col("event_type"), col("day"),
-          round(coalesce(col("day_sum"),
-            col("pv") + (col("nv") - col("pv")) * (col("day") - col("pd")) /
-              (col("nd") - col("pd")),
-            col("pv"), col("nv")), 4).as("interp_sum"))
-    }),
-
-    "a14_rollup" -> ((s, d) =>
-      // multi-level aggregation in one pass: ROLLUP plans a single
-      // Expand over 3 grouping sets — (type, day), (type), () — feeding
-      // one partial+final hash aggregate, so subtotals and the grand
-      // total cost one shuffle instead of three queries; null grouping
-      // keys go out as sentinels to keep the compare null-free
-      t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"), col("value"))
-        .rollup(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .select(coalesce(col("event_type"), lit("ALL")).as("event_type"),
-          coalesce(col("day"), lit(-1L)).as("day"),
-          col("n_events"), col("sum_value"))),
-
-    "stats_group_quantiles" -> ((s, d) => {
-      // exact per-group quantiles via the explicit lower-quantile_disc
-      // rule (element at row floor((n-1)·p)+1 of the ascending sort):
-      // rank and group size come from two frames of the same window
-      // family and the groupBy re-uses the lang partitioning, so the
-      // whole query is ONE exchange. Exact-by-rule beats
-      // percentile_approx here: the rule is engine-replicable, an
-      // approx sketch never hash-matches. (For a pathological single
-      // giant group the same shape holds — the sort is within-group
-      // range-partitioned, not single-task.)
-      val wRank = Window.partitionBy(col("lang"))
-        .orderBy(col("n_chars"), col("doc_id"))
-      val wAll = Window.partitionBy(col("lang"))
-      t(s, d, "documents")
-        .select(col("lang"), col("n_chars"), col("doc_id"))
-        .withColumn("r", row_number().over(wRank))
-        .withColumn("n", count(lit(1)).over(wAll))
-        .groupBy(col("lang"))
-        .agg(max(col("n")).as("n_docs"),
-          max(when(col("r") === floor((col("n") - 1) * 0.5) + 1,
-            col("n_chars"))).as("p50_chars"),
-          max(when(col("r") === floor((col("n") - 1) * 0.9) + 1,
-            col("n_chars"))).as("p90_chars"))
-    }),
-
-    "stats_winsorize" -> ((s, d) => {
-      // per-group winsorized aggregates: clamp at the exact rank-rule
-      // p05/p95 (the stats_group_quantiles convention), then sum the
-      // clamped values — the robust corpus statistic outliers can't
-      // drag. Rank, group size, both bounds and the final aggregation
-      // all share the lang partitioning: ONE exchange end-to-end, and
-      // every output is an exact integer (no float boundary risk)
-      val wRank = Window.partitionBy(col("lang"))
-        .orderBy(col("n_chars"), col("doc_id"))
-      val wAll = Window.partitionBy(col("lang"))
-      t(s, d, "documents")
-        .select(col("lang"), col("n_chars"), col("doc_id"))
-        .withColumn("r", row_number().over(wRank))
-        .withColumn("n", count(lit(1)).over(wAll))
-        .withColumn("lo", max(when(col("r") ===
-          floor((col("n") - 1) * 0.05) + 1, col("n_chars"))).over(wAll))
-        .withColumn("hi", max(when(col("r") ===
-          floor((col("n") - 1) * 0.95) + 1, col("n_chars"))).over(wAll))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(greatest(least(col("n_chars"), col("hi")), col("lo")))
-            .as("sum_winsorized"),
-          sum(when(col("n_chars") < col("lo"), 1L).otherwise(0L))
-            .as("n_clamped_low"),
-          sum(when(col("n_chars") > col("hi"), 1L).otherwise(0L))
-            .as("n_clamped_high"))
-    }),
-
-    "search_boolean" -> ((s, d) =>
-      TermOps.booleanSearch(t(s, d, "documents"), "doc_id", "text",
-        Seq("scan", "join", "merge"))),
-
-    "search_fuzzy" -> ((s, d) => {
-      // SymSpell deletion-neighborhood fuzzy lookup: typo'd queries are
-      // DERIVED from the corpus (top-20 df terms with the 2nd char
-      // dropped — self-contained ground truth), matched back against
-      // the vocabulary via the deletion index + levenshtein verify.
-      // Never an O(vocab) scan per query.
-      val dict = TermOps.termStats(t(s, d, "documents"), "doc_id", "text",
-          minDf = 1L)
-        .filter(length(col("term")) >= 4)
-        .select(col("term"), col("df"))
-      val typos = dict.orderBy(col("df").desc, col("term").asc).limit(20)
-        .select(concat(col("term").substr(lit(1), lit(1)),
-          col("term").substr(lit(3), length(col("term")))).as("typo"))
-        .distinct()
-      TermOps.fuzzyLookup(typos, dict)
-    }),
-
-    "search_rrf" -> ((s, d) => {
-      // hybrid retrieval: BM25 lexical ranking ⊕ embedding cosine
-      // ranking fused by reciprocal-rank fusion (Cormack et al., SIGIR
-      // 2009: Σ 1/(60 + rank) — rank-only fusion needs no score
-      // calibration between the two systems, which is why it's the
-      // default hybrid in RAG stacks). Both legs are this repo's own
-      // gated operators; doc_id ≡ vec_id aligns the corpora. Integer
-      // ranks → the fused score is two exact divisions, engine-stable
-      val text = bm25Leg(s, d)
-        .withColumn("text_rank", row_number().over(
-          Window.orderBy(col("score").desc, col("doc_id").asc)).cast("int"))
-        .select(col("doc_id"), col("text_rank"))
-      val vec = vecLeg(s, d)
-        .select(col("nbr_id").as("doc_id"), col("rank").as("vec_rank"))
-      text.join(vec, Seq("doc_id"), "full_outer")
-        .withColumn("rrf",
-          round(coalesce(lit(1.0) / (lit(60) + col("text_rank")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60) + col("vec_rank")), lit(0.0)), 6))
-        .orderBy(col("rrf").desc, col("doc_id").asc).limit(10)
-        .select(col("doc_id"), col("text_rank"), col("vec_rank"), col("rrf"))
-    }),
-
-    "search_hybrid" -> ((s, d) => {
-      // score-fused hybrid retrieval: min-max normalize each leg's
-      // top-20 scores to [0, 1] and fuse 50/50 — the calibrated
-      // complement of search_rrf's rank-only fusion (score fusion
-      // preserves MARGIN information ranks throw away; it's the right
-      // fusion when both scorers are calibrated, as here where both
-      // legs are this repo's own gated operators). Normalization runs
-      // on each leg's ROUNDED score surface (bm25's round-4 scores,
-      // cosine rounded 4 after the unrounded-sim top-20 cut), so the
-      // min-max arithmetic sees engine-identical doubles; a doc
-      // missing from one leg contributes 0 from it. doc_id ≡ vec_id.
-      val text = bm25Leg(s, d)
-        .select(col("doc_id"), col("score"))
-      val tb = text.agg(min("score").as("tmin"), max("score").as("tmax"))
-      val tN = text.crossJoin(broadcast(tb))
-        .select(col("doc_id"),
-          when(col("tmax") === col("tmin"), lit(1.0))
-            .otherwise((col("score") - col("tmin")) /
-              (col("tmax") - col("tmin"))).as("nt"))
-      val vec = vecLeg(s, d)
-        .select(col("nbr_id").as("doc_id"), round(col("sim"), 4).as("vsim"))
-      val vb = vec.agg(min("vsim").as("vmin"), max("vsim").as("vmax"))
-      val vN = vec.crossJoin(broadcast(vb))
-        .select(col("doc_id"),
-          when(col("vmax") === col("vmin"), lit(1.0))
-            .otherwise((col("vsim") - col("vmin")) /
-              (col("vmax") - col("vmin"))).as("nv"))
-      tN.join(vN, Seq("doc_id"), "full_outer")
-        .withColumn("hybrid", lit(0.5) * coalesce(col("nt"), lit(0.0)) +
-          lit(0.5) * coalesce(col("nv"), lit(0.0)))
-        .orderBy(col("hybrid").desc, col("doc_id").asc).limit(10)
-        .select(col("doc_id"),
-          round(coalesce(col("nt"), lit(0.0)), 6).as("norm_text"),
-          round(coalesce(col("nv"), lit(0.0)), 6).as("norm_vec"),
-          round(col("hybrid"), 6).as("hybrid"))
-    }),
-
-    "funnel_steps" -> ((s, d) =>
-      // 3-step first-touch funnel view → click → purchase; per-step
-      // frontier = one row per surviving user, joins keyed on user_id
-      FunnelOps.funnel(t(s, d, "events"), "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"))),
-
-    "w16_funnel_window" -> ((s, d) =>
-      // TIME-BOXED funnel: the whole view → click → purchase chain
-      // must complete within 48 h of the user's earliest view (the
-      // ClickHouse-windowFunnel shape with a stated first-touch
-      // anchor) — conversion-rate analytics where an eventual
-      // conversion months later must NOT count. Median view→click gap
-      // in this corpus is ~32 h, so the 48 h box genuinely splits
-      // converters. See FunnelOps.windowedFunnel.
-      FunnelOps.windowedFunnel(t(s, d, "events"), "user_id",
-        "event_type", "ts", Seq("view", "click", "purchase"),
-        windowUs = 172800000000L)),
-
-    "stats_did" -> ((s, d) => {
-      // difference-in-differences: the causal-inference workhorse for
-      // a rollout without randomization — did the treated cohort's
-      // metric move MORE than the control's across the same period
-      // boundary? Treatment = even user_id, periods split at the
-      // integer midpoint day; `value` scales to exact cent-longs (the
-      // stats_sequential convention) so all four cell means and the
-      // DiD estimate derive from BIGINT sums with mirrored final
-      // divisions.
-      val ev = t(s, d, "events").select(
-        expr("CAST(ts AS LONG) div 86400").as("day"),
-        (col("user_id") % 2 === 0).as("treat"),
-        round(col("value") * 100).cast("long").as("v"))
-      val mid = ev.agg(expr("(min(day) + max(day) + 1) div 2").as("mid"))
-      def cell(p: org.apache.spark.sql.Column): (org.apache.spark.sql
-          .Column, org.apache.spark.sql.Column) =
-        (sum(when(p, 1L).otherwise(0L)), sum(when(p, col("v"))
-          .otherwise(0L)))
-      val post = col("day") >= col("mid")
-      val (ntp, stp) = cell(col("treat") && post)
-      val (nt0, st0) = cell(col("treat") && !post)
-      val (ncp, scp) = cell(!col("treat") && post)
-      val (nc0, sc0) = cell(!col("treat") && !post)
-      ev.crossJoin(broadcast(mid))
-        .agg(ntp.as("n_tp"), stp.as("s_tp"), nt0.as("n_t0"),
-          st0.as("s_t0"), ncp.as("n_cp"), scp.as("s_cp"),
-          nc0.as("n_c0"), sc0.as("s_c0"))
-        .withColumn("m_tp", col("s_tp").cast("double") / col("n_tp") / 100.0)
-        .withColumn("m_t0", col("s_t0").cast("double") / col("n_t0") / 100.0)
-        .withColumn("m_cp", col("s_cp").cast("double") / col("n_cp") / 100.0)
-        .withColumn("m_c0", col("s_c0").cast("double") / col("n_c0") / 100.0)
-        .select(col("n_tp"), col("n_t0"), col("n_cp"), col("n_c0"),
-          round(col("m_tp"), 6).as("mean_treat_post"),
-          round(col("m_t0"), 6).as("mean_treat_pre"),
-          round(col("m_cp"), 6).as("mean_ctrl_post"),
-          round(col("m_c0"), 6).as("mean_ctrl_pre"),
-          round((col("m_tp") - col("m_t0")) - (col("m_cp") - col("m_c0")),
-            6).as("did"))
-    }),
-
-    "stats_ipw" -> ((s, d) => {
-      // stratified-propensity treatment-effect estimate (IPW with
-      // stratum propensities, a.k.a. subclassification — Rosenbaum &
-      // Rubin 1984): users stratify into activity quintiles (exact
-      // rank rule, integer cross-multiply cuts — no global sort of
-      // users), propensity p_s = treated share of the stratum, and the
-      // ATE reweights per-stratum mean differences by stratum size —
-      // the confounder-adjusted sibling of stats_did for when
-      // treatment correlates with activity. Outcomes are exact
-      // cent-longs per user (the stats_sequential convention); every
-      // mean is one mirrored division, and the 5-term ATE sum folds in
-      // stratum order. A stratum missing an arm reports NULL (and
-      // contributes nothing) rather than a fake zero.
-      val ue = t(s, d, "events").groupBy("user_id")
-        .agg(count(lit(1)).as("n_ev"),
-          sum(round(col("value") * 100).cast("long")).as("cents"))
-      val tot = ue.agg(count(lit(1)).as("n_users"))
-      val cells = PackOps.exactRank(ue, "n_ev", "user_id")
-        .crossJoin(broadcast(tot))
-        .withColumn("stratum",
-          when(col("rank") * 5 <= col("n_users"), 1)
-            .when(col("rank") * 5 <= col("n_users") * 2, 2)
-            .when(col("rank") * 5 <= col("n_users") * 3, 3)
-            .when(col("rank") * 5 <= col("n_users") * 4, 4)
-            .otherwise(5))
-        .withColumn("treat", col("user_id") % 2 === 0)
-        .groupBy("stratum")
-        .agg(count(lit(1)).as("n_s"),
-          sum(when(col("treat"), 1L).otherwise(0L)).as("n_t"),
-          sum(when(col("treat"), col("cents")).otherwise(0L)).as("c_t"),
-          sum(when(!col("treat"), col("cents")).otherwise(0L)).as("c_c"))
-        .withColumn("n_c", col("n_s") - col("n_t"))
-        .withColumn("m_t", when(col("n_t") > 0,
-          col("c_t").cast("double") / col("n_t") / 100.0))
-        .withColumn("m_c", when(col("n_c") > 0,
-          col("c_c").cast("double") / col("n_c") / 100.0))
-        .withColumn("diff", col("m_t") - col("m_c"))
-        // two consumers (the ATE fold + the final projection) — the
-        // repo's eager-materialization rule; without it the whole
-        // exactRank + stratum chain re-runs for the second consumer
-        .localCheckpoint()
-      val ate = cells
-        .agg(array_sort(collect_list(when(col("diff").isNotNull,
-            struct(col("stratum"), (col("diff") * col("n_s")).as("w")))))
-            .as("arr"),
-          sum(when(col("diff").isNotNull, col("n_s"))).as("nn"))
-        .select((aggregate(col("arr"), lit(0.0d),
-          (acc, x) => acc + x.getField("w")) / col("nn")).as("ate_raw"))
-      cells.crossJoin(broadcast(ate))
-        .select(col("stratum"), col("n_s"), col("n_t"),
-          round(col("n_t").cast("double") / col("n_s"), 6).as("p_treat"),
-          round(col("m_t"), 6).as("mean_treat"),
-          round(col("m_c"), 6).as("mean_ctrl"),
-          round(col("diff"), 6).as("diff"),
-          round(col("ate_raw"), 6).as("ate"))
-    }),
-
-    "a15_pivot" -> ((s, d) => {
-      // wide-format pivot via conditional aggregates over an EXPLICIT
-      // value list: long-to-wide for ONE aggregation exchange (pinned).
-      // Dataset.pivot would plan a two-phase aggregate — a pre-agg on
-      // (dow, event_type) plus a PivotFirst pass, i.e. a second keyed
-      // shuffle — which a fixed value list makes unnecessary; count of
-      // a when() is never null, so no fill pass either
-      val vals = Seq("click", "error", "purchase", "signup", "view")
-      t(s, d, "events")
-        .select(expr("(CAST(ts AS LONG) div 86400) % 7").as("dow"),
-          col("event_type"))
-        .groupBy("dow")
-        .agg(count(when(col("event_type") === vals.head, 1)).as(vals.head),
-          vals.tail.map(v =>
-            count(when(col("event_type") === v, 1)).as(v)): _*)
-    }),
-
-    "stats_corr" -> ((s, d) => {
-      // per-lang Pearson correlation of chars vs tokens from exact
-      // integer co-moments, so the final corr is ONE fixed double
-      // expression over identical inputs on both engines. Spark's
-      // built-in corr() keeps incremental double co-moments —
-      // summation-order-dependent, it could never hash-match an oracle.
-      // The product-moment sums and the closed-form n·sxy − sx·sy
-      // products run in DECIMAL(38,0) (per-row products fit a long;
-      // the corpus sums and the n-scaled differences pass 2^63 around
-      // 10^10-10^11 docs) — DuckDB's sum(BIGINT) is HUGEINT and its
-      // mirrored products are HUGEINT, the same exact integers.
-      val dec = "decimal(38,0)"
-      val base = t(s, d, "documents").select(col("lang"),
-        col("n_chars").as("x"),
-        size(TermOps.tokens(col("text"))).cast("long").as("y"))
-      base.groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum((col("x") * col("y")).cast(dec)).as("sxy"),
-          sum((col("x") * col("x")).cast(dec)).as("sxx"),
-          sum((col("y") * col("y")).cast(dec)).as("syy"))
-        .select(col("lang"), col("n").as("n_docs"),
-          round((col("n") * col("sxy") -
-              (col("sx").cast(dec) * col("sy"))).cast("double") /
-            sqrt((col("n") * col("sxx") -
-                (col("sx").cast(dec) * col("sx"))).cast("double") *
-              (col("n") * col("syy") -
-                (col("sy").cast(dec) * col("sy"))).cast("double")), 4)
-            .as("corr_chars_tokens"))
-    }),
-
-    "stats_moments" -> ((s, d) => {
-      // per-lang skewness of doc length from exact integer co-moments,
-      // then ONE fixed-order double expression — same
-      // engine-replicability contract as stats_corr; sqrt(m2)*m2
-      // instead of pow(m2,1.5) so both engines run the identical IEEE
-      // op sequence. The x² and x³ sums run in DECIMAL(38,0): per-row
-      // powers fit a long (5000³ ≈ 1.25e11) but the x³ corpus sum
-      // passes 2^63 near 7·10^7 docs — DuckDB's sum(BIGINT) is
-      // HUGEINT, the same exact integer. (x⁴/kurtosis would fit the
-      // decimal headroom too now; out of scope, not out of range.)
-      val dec = "decimal(38,0)"
-      val agg = t(s, d, "documents")
-        .select(col("lang"), col("n_chars").as("x"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-          sum((col("x") * col("x")).cast(dec)).as("sxx"),
-          sum((col("x") * col("x") * col("x")).cast(dec)).as("sxxx"))
-      val mean = col("sx").cast("double") / col("n")
-      val m2 = col("sxx").cast("double") / col("n") - mean * mean
-      val m3 = col("sxxx").cast("double") / col("n") -
-        lit(3.0) * mean * (col("sxx").cast("double") / col("n")) +
-        lit(2.0) * mean * mean * mean
-      agg.select(col("lang"), col("n").as("n_docs"),
-        round(mean, 4).as("mean_chars"),
-        round(m3 / (sqrt(m2) * m2), 4).as("skew_chars"))
-    }),
-
-    "sample_bottomk" -> ((s, d) =>
-      // deterministic uniform sample: bottom-100 docs by keyed hash —
-      // the reproducible form of reservoir sampling (same rows whatever
-      // the partitioning/order/cluster), TakeOrderedAndProject plan
-      SketchOps.bottomKSample(
-        t(s, d, "documents").select(col("doc_id")), "doc_id", 100, "bk")),
-
-    "t6_sliding_distinct" -> ((s, d) => {
-      // trailing-7-day distinct users per day with BOUNDED fanout: the
-      // scalable form of sliding count-distinct. (day,user) distinct
-      // first (shrinks to active-pairs), explode each pair into the ≤7
-      // window-days it serves, distinct again, count — state is never
-      // a per-window user list, and every stage is a keyed exchange
-      // over at most 7× the active-pair count. A window-function
-      // count-distinct doesn't exist; recomputing each window from raw
-      // events would be 7 full passes
-      val ev = t(s, d, "events")
-        .select(expr("CAST(ts AS LONG) div 86400").as("day"), col("user_id"))
-        .distinct()
-      val mx = ev.agg(max("day").as("m"))
-      ev.select(explode(sequence(col("day"), col("day") + 6)).as("day"),
-          col("user_id"))
-        .distinct()
-        .crossJoin(broadcast(mx))
-        .filter(col("day") <= col("m"))
-        .groupBy("day").agg(count(lit(1)).as("n_users_7d"))
-    }),
-
-    "stats_histogram" -> ((s, d) => {
-      // fixed-width binned value profile with cumulative fraction — the
-      // ONE-PASS MERGEABLE complement to the exact rank-rule quantiles:
-      // bin counts merge by sum across any partitioning (the 100 TB
-      // profile is agg-only), and quantile read-off is the first bin
-      // with cum_frac ≥ p. The global window runs on O(bins) rows, not
-      // O(events); cum/n is a ratio of exact longs so the rounded
-      // fraction is engine-identical
-      val bins = t(s, d, "events")
-        .select(floor(col("value") / 8.0).cast("long").as("bin"))
-        .groupBy("bin").agg(count(lit(1)).as("cnt"))
-      val n = bins.agg(sum("cnt").as("n"))
-      bins.withColumn("cum", sum("cnt").over(Window.orderBy("bin")))
-        .crossJoin(broadcast(n))
-        .select(col("bin"), (col("bin") * 8.0).as("lo"), col("cnt"),
-          round(col("cum").cast("double") / col("n"), 4).as("cum_frac"))
-    }),
-
-    "stats_histogram_grouped" -> ((s, d) => {
-      // per-GROUP mergeable histogram — the per-source/lang distribution
-      // profile a mixture planner reads: same fixed bins as
-      // stats_histogram but keyed by event_type, counts mergeable by sum
-      // across any partitioning, output O(groups × bins) rows, and the
-      // cumulative window runs per group on those O(bins) rows only
-      val bins = t(s, d, "events")
-        .select(col("event_type"),
-          floor(col("value") / 8.0).cast("long").as("bin"))
-        .groupBy("event_type", "bin").agg(count(lit(1)).as("cnt"))
-      val n = bins.groupBy("event_type").agg(sum("cnt").as("n"))
-      bins.withColumn("cum",
-          sum("cnt").over(Window.partitionBy("event_type").orderBy("bin")))
-        .join(broadcast(n), Seq("event_type"))
-        .select(col("event_type"), col("bin"), (col("bin") * 8.0).as("lo"),
-          col("cnt"),
-          round(col("cum").cast("double") / col("n"), 4).as("cum_frac"))
-    }),
-
-    "k11_vbyte_roundtrip" -> ((s, d) => {
-      // the reference's compressed doc-vector container (closes the
-      // "parquet replaces the VByte blobs" delta): sorted dictionary ids
-      // per doc encode into VByteDocVector bytes — Hadoop VInts via
-      // WritableUtils, byte-parity by construction — and decode back.
-      // Output = exploded (doc_id, id) plus the blob byte length, whose
-      // oracle recomputes the VInt length rule arithmetically, so a
-      // codec defect in either direction cannot hash-match
-      val docs = t(s, d, "documents")
-      val dict = TermOps.dictionary(docs, "doc_id", "text", minDf = 5L)
-      TermOps.docVectors(docs, "doc_id", "text", dict)
-        .select(col("doc_id"),
-          expr("vbyte_encode(transform(term_ids, x -> bigint(x)))").as("vec"))
-        .select(col("doc_id"), length(col("vec")).cast("long").as("n_bytes"),
-          explode(expr("vbyte_decode(vec)")).as("id"))
-    }),
-
-    "k12_partitioned_scan" -> ((s, d) => {
-      // hive-style partitioned layout + partition pruning: events
-      // written partitionBy(event_type), read back filtered to one
-      // value — the scan plans PartitionFilters and touches ONE
-      // directory (pinned in PlanSpec), the bedrock layout move for
-      // selective scans over 100 TB tables (the z-order file-level
-      // pruning in layout_zorder is its within-partition complement)
-      val dir = Scratch.dir("k12")
-        .toString + "/t"
-      t(s, d, "events").select(col("event_id"), col("event_type"), col("value"))
-        .write.partitionBy("event_type").parquet(dir)
-      s.read.parquet(dir).filter(col("event_type") === "click")
-        .select(col("event_id"), round(col("value"), 2).as("value"))
-    }),
-
-    "k32_partition_evolution" -> ((s, d) => {
-      // partition-layout EVOLUTION: the table's first day landed
-      // partitioned by day only; the layout then evolved to (day, hour)
-      // for all later data — the Iceberg partition-evolution shape,
-      // where old files keep their coarse layout and new files are
-      // finer, and a reader must prune BOTH generations without a
-      // rewrite. The serving read unions the two generations
-      // (allowMissingColumns fills hr = null for the coarse files) and
-      // filters a time slice; the optimizer pushes the day predicate
-      // into both branches' PartitionFilters and the hour predicate
-      // into the fine branch (Round12Spec pins the per-branch file
-      // counts). At 100 TB this is the difference between rewriting
-      // history on every layout change and never rewriting at all.
-      // the demo slice is the table's first three days (coarse day 1,
-      // evolved days 2-3): layout behavior is day-count-independent,
-      // and the repartition on the partition columns keeps the write
-      // one file per directory — without it the fine write fans every
-      // shuffle partition into every (day, hr) dir, a small-file storm
-      val all = t(s, d, "events")
-        .select(col("event_id"), col("ts"), col("event_type"),
-          col("value"),
-          date_format(col("ts"), "yyyy-MM-dd").as("day"),
-          hour(col("ts")).as("hr"))
-      val minDay = all.agg(min(col("day"))).head().getString(0)
-      val lastDay = java.time.LocalDate.parse(minDay).plusDays(2).toString
-      val ev = all.filter(col("day") <= lastDay)
-      // the two generations are a pure function of the sf dir: write
-      // them ONCE per process and reuse across invocations (best-of-2
-      // bench re-runs previously re-wrote both generations into a
-      // fresh leaked temp dir each pass); the scratch dir is removed
-      // on JVM exit
-      val base = scratchDir("k32_" + d) { b =>
-        ev.filter(col("day") === minDay).drop("hr")
-          .repartition(col("day"))
-          .write.partitionBy("day").parquet(b + "/gen_day")
-        ev.filter(col("day") =!= minDay)
-          .repartition(col("day"), col("hr"))
-          .write.partitionBy("day", "hr").parquet(b + "/gen_day_hour")
-      }
-      val (genA, genB) = (base + "/gen_day", base + "/gen_day_hour")
-      // hr reads back as INT partition values; coarse files re-derive
-      // it from content so the logical schema is uniform
-      val gens = s.read.parquet(genA)
-        .withColumn("hr", hour(col("ts")))
-        .unionByName(s.read.parquet(genB)
-          .withColumn("hr", col("hr").cast("int")))
-        // partition-column inference reads the yyyy-MM-dd dirs back as
-        // DATE; the oracle (and the repo rule) emits day as a string
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-      // the early-hours slice: the fine generation prunes to 6/24 of
-      // its partitions; the coarse generation cannot hour-prune and
-      // scans its day whole — exactly the read-amplification gap
-      // partition evolution trades away for old files
-      gens.filter(col("hr") < 6)
-        .groupBy(col("day"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_v"))
-    }),
-
-    "k13_compaction" -> ((s, d) => {
-      // small-file compaction round-trip: events land as 64 small files
-      // (hive-partitioned by g = event_id % 64 — the post-ingest mess),
-      // then CompactionOps packs them into target-sized bins and the
-      // partitionBy(bin) rewrite emits ONE file per bin (n_files pins
-      // it). Row counts stand in for byte sizes so the DuckDB oracle
-      // can replay the bin assignment — same packer either way.
-      val smallDir = Scratch.dir("k13")
-        .toString + "/small"
-      val outDir = Scratch.dir("k13")
-        .toString + "/compacted"
-      // r18 optimization (guide §6): repartition BY g before the
-      // partitionBy(g) write — without it every scan task wrote a file
-      // into every g dir (~scan-tasks × 64 small files; JobProbe read
-      // them back as 235 tasks), which over-delivered on "64 small
-      // files" and made the read-back pay the per-file open cost the
-      // row exists to measure. One file per g is the stated fixture.
-      t(s, d, "events").withColumn("g", pmod(col("event_id"), lit(64L)))
-        .repartition(64, col("g"))
-        .write.partitionBy("g").parquet(smallDir)
-      // partition-column type inference reads g back as INT; re-derive
-      // it from content so the bin map joins on a stable long key
-      val small = s.read.parquet(smallDir).drop("g")
-        .withColumn("g", pmod(col("event_id"), lit(64L)))
-      val stats = small.groupBy("g").agg(count(lit(1)).as("sz"))
-      val bins = CompactionOps.assignBins(stats, "g", "sz", target = 1500L)
-      CompactionOps.compact(small, "g", bins)
-        .write.partitionBy("bin").parquet(outDir)
-      s.read.parquet(outDir)
-        .withColumn("f", input_file_name())
-        .groupBy(col("bin").cast("long").as("bin"))
-        .agg(countDistinct(col("f")).as("n_files"),
-          count(lit(1)).as("n_rows"),
-          sum(col("event_id")).as("sum_id"),
-          min(col("event_id")).as("min_id"),
-          max(col("event_id")).as("max_id"))
-    }),
-
-    "k10_seqfile_roundtrip" -> ((s, d) => {
-      // K2c: the reference's native SequenceFile container round-trips
-      // — existing Hadoop consumers could read this output unchanged
-      val dir = Scratch.dir("k10")
-        .toString + "/seq"
-      graft.sources.GraftSinks.writeSequenceFile(
-        t(s, d, "documents").select(col("doc_id"), col("text")), dir)
-      graft.sources.GraftSinks.readSequenceFile(s, dir, "doc_id", "text")
-    }),
-
-    "k9_upsert" -> ((s, d) => {
-      // MERGE-shaped incremental maintenance round-trip: every 10th doc
-      // re-scored (lang→'xx', n_chars bumped), one new doc appended;
-      // updates override, unmatched base rows pass through, and the
-      // merged corpus round-trips through the parquet sink
-      val base = t(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val rescored = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("xx").as("lang"),
-          (col("n_chars") + 1000000L).as("n_chars"))
-      val inserted = base.agg(max(col("doc_id")).as("doc_id"))
-        .select((col("doc_id") + 1L).as("doc_id"),
-          lit("new").as("lang"), lit(1L).as("n_chars"))
-      val merged = MergeOps.upsert(base,
-        rescored.unionByName(inserted), "doc_id")
-      val dir = Scratch.dir("k9").toString
-      graft.sources.GraftSinks.writeParquet(merged, dir, compression = "zstd")
-      s.read.parquet(dir)
-    }),
-
-    "o7_topk_group" -> ((s, d) => {
-      // group-wise top-k: top-3 highest-price lineitems per supplier.
-      // Spark plans a WindowGroupLimit (per-task top-k heaps BEFORE the
-      // key exchange — pinned in PlanSpec), so no group's full row set
-      // ever shuffles: the group-wise sibling of TakeOrderedAndProject
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc,
-          col("l_linenumber").asc)
-      t(s, d, "lineitem")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
-        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-          col("l_extendedprice"), col("rn"))
-    }),
-
-    "sketch_quantile_hist" -> ((s, d) => {
-      // mergeable equi-width histogram quantile sketch + error audit —
-      // the quantile member of the sketch family (CMS=frequency,
-      // HLL=distinct, KMV=set ops, bloom=membership): 128 integer
-      // bucket counts are map-side combinable (that IS mergeability —
-      // shards union by adding counts), the estimate reads the bucket
-      // upper edge at the cumulative cut, and the row carries the
-      // EXACT quantile (rank rule over the value histogram) beside it
-      // so the sketch's error is measured, never assumed (the
-      // ann_recall discipline). All integer cents until the /100.
-      val ev = t(s, d, "events")
-        .select(expr("CAST(round(value * 100) AS BIGINT)").as("vc"))
-      val bounds = ev.agg(min("vc").as("lo"), max("vc").as("hi"),
-        count(lit(1)).as("n"))
-      val buckets = ev.crossJoin(broadcast(bounds))
-        .withColumn("b", expr(
-          "CAST((vc - lo) * 128 div (hi - lo + 1) AS INT)"))
-        .groupBy("b").agg(count(lit(1)).as("cnt"))
-      val wCum = Window.orderBy(col("b"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val cum = buckets.withColumn("cum", sum(col("cnt")).over(wCum))
-        .crossJoin(broadcast(bounds))
-        .localCheckpoint() // three quantile cuts read it
-      val hist = ev.groupBy("vc").agg(count(lit(1)).as("c"))
-        .withColumn("cumv", sum(col("c")).over(Window.orderBy(col("vc"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .crossJoin(broadcast(bounds))
-        .localCheckpoint()
-      def cut(q: Double) = {
-        val target = ceil(lit(q) * col("n")).cast("long")
-        val est = cum.filter(col("cum") >= target)
-          .agg(min(col("b")).as("bq")).crossJoin(broadcast(bounds))
-          .select(lit(q).as("q"),
-            round((col("lo") + (col("bq") + 1) * (col("hi") - col("lo") + 1)
-              .cast("double") / 128.0) / 100.0, 6).as("est"))
-        val exact = hist.filter(col("cumv") >= target)
-          .agg((min(col("vc")).cast("double") / 100.0).as("exact"))
-        // abs_err derives from the two ROUNDED readouts on both engines
-        est.crossJoin(broadcast(exact))
-          .select(col("q"), col("est"), round(col("exact"), 6).as("exact"))
-          .withColumn("abs_err", round(abs(col("est") - col("exact")), 6))
-      }
-      cut(0.5).unionByName(cut(0.9)).unionByName(cut(0.99))
-    }),
-
-    "sketch_kmv_grouped" -> ((s, d) =>
-      // per-group KMV distinct: approx distinct users per event type with
-      // O(k) state per group — k=64 keeps sf0.01 (150 users) on the
-      // estimator path and sf0.001 (15 users) on the exact-count path
-      SketchOps.kmvDistinctByKey(t(s, d, "events"), "event_type",
-        "user_id", k = 64)),
-
-    "sketch_countmin" -> ((s, d) => {
-      // count-min frequency sketch over event user_ids (3×256 cells,
-      // narrow enough that sf0.01's key set forces real bucket
-      // collisions), estimates answered for every distinct user and
-      // joined to the exact counts — n_est >= n_exact always, equality
-      // where no collision inflated any of the 3 cells
-      val ev = t(s, d, "events")
-      val exact = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
-      SketchOps.countMinEstimates(ev, "user_id", ev, depth = 3, width = 256)
-        .join(exact, Seq("user_id"))
-        .select(col("user_id"), col("n_exact"), col("n_est"))
-    }),
-
-    "sketch_hll" -> ((s, d) =>
-      // HyperLogLog distinct-user summary: 64 registers, exact-integer
-      // register sum, linear-counting small-range correction — sf0.001
-      // (15 users) lands on the LC branch, sf0.1 (1500) on the raw one
-      SketchOps.hllSummary(t(s, d, "events"), "user_id")),
-
-    "sketch_hll_merge" -> ((s, d) => {
-      // the merge law through the gate: registers computed per shard and
-      // merged by cell-wise MAX must equal the whole-set registers — the
-      // oracle computes them globally, so a hash match proves that
-      // distributed/incremental HLL maintenance loses nothing
-      val ev = t(s, d, "events")
-      (0 until 4)
-        .map(i => SketchOps.hllRegisters(
-          ev.filter(col("event_id") % 4 === i), "user_id"))
-        .reduce(_ unionByName _)
-        .groupBy("bucket").agg(max(col("rho")).as("rho"))
-    }),
-
-    "stats_quantile_est" -> ((s, d) =>
-      // approximate per-type quantiles read off the mergeable fixed-bin
-      // histogram (error <= bin width): the O(groups×bins) sketch path
-      // beside the exact rank-rule stats_group_quantiles
-      SketchOps.histogramQuantiles(t(s, d, "events"), "event_type", "value",
-        binWidth = 8.0, probs = Seq(0.5, 0.9, 0.99))),
-
-    "sample_temp_targets" -> ((s, d) => {
-      // temperature-flattened source mixing TARGETS (the planning
-      // artifact beside sample_temperature's per-doc keep rule —
-      // that one selects documents, this one emits the per-source
-      // budget table a mixer schedules against): multilingual/domain
-      // rebalancing recipe: p_i^{1/T} renormalized, T = 2 so the power
-      // is an EXACT IEEE sqrt): per source the natural share, the
-      // flattened share, and the integer target count ⌊p_T·N⌋ a
-      // resampler would draw — rare sources up-weighted, the head
-      // flattened, all arithmetic mirrored
-      val src = t(s, d, "documents").groupBy("source")
-        .agg(count(lit(1)).as("n"))
-      val tot = src.agg(sum(col("n")).cast("double").as("total"),
-        sum(sqrt(col("n").cast("double"))).as("ssum"))
-      src.crossJoin(broadcast(tot))
-        .select(col("source"), col("n"),
-          round(col("n") / col("total"), 6).as("p"),
-          round(sqrt(col("n").cast("double")) / col("ssum"), 6).as("p_temp"),
-          floor(sqrt(col("n").cast("double")) / col("ssum") * col("total"))
-            .cast("long").as("n_target"))
-    }),
-
-    "sample_kcenter" -> ((s, d) => {
-      // greedy k-center (farthest-point) coreset selection — the
-      // diversity data-pruning primitive (pick the next example
-      // FARTHEST from everything already kept): 4 unrolled steps from
-      // seed vector 0, each one corpus × ≤5-center broadcast cosine
-      // pass + a per-vector max (exact — max is order-free) + one
-      // global argmin (ties to the smaller id). cover_sim is the
-      // selected point's similarity to its nearest prior center — the
-      // coverage-radius curve a pruning run monitors.
-      val emb = embeddings(s, d)
-        .select("vec_id", "embedding")
-      var centers = emb.filter(col("vec_id") === 0L)
-      var out = centers.select(lit(0).as("step"), col("vec_id"),
-        lit(null).cast("double").as("cover_sim"))
-      for (step <- 1 to 4) {
-        val far = emb.crossJoin(broadcast(
-            centers.select(col("embedding").as("cemb"))))
-          .withColumn("sim",
-            SimilarityOps.cosine(col("embedding"), col("cemb")))
-          .groupBy("vec_id")
-          .agg(max(col("sim")).as("maxsim"),
-            first(col("embedding")).as("embedding"))
-          .orderBy(col("maxsim").asc, col("vec_id").asc).limit(1)
-          .localCheckpoint()
-        centers = centers.unionByName(far.select("vec_id", "embedding"))
-        out = out.unionByName(far.select(lit(step).as("step"),
-          col("vec_id"), round(col("maxsim"), 6).as("cover_sim")))
-      }
-      out
-    }),
-
-    "curate_mix_temperature" -> ((s, d) => {
-      // temperature-scaled source mixing weights (the multilingual /
-      // multi-source sampling staple: w_i ∝ p_i^T, upweighting tail
-      // sources): T = 0.5 — the sqrt point of the usual 0.3–0.7 band —
-      // chosen deliberately because sqrt is IEEE-exact-rounded on both
-      // engines (pow(p, 0.7) would be a libm surface, the
-      // stats_sequential class). One corpus aggregate to O(sources)
-      // rows; the normalizing Σ√n folds in source order; √N cancels so
-      // w = √n_i / Σ√n_j exactly.
-      val bySrc = t(s, d, "documents").groupBy("source")
-        .agg(count(lit(1)).as("n_docs"))
-      val tot = bySrc
-        .agg(sum("n_docs").as("nt"),
-          array_sort(collect_list(struct(col("source"), col("n_docs"))))
-            .as("arr"))
-        .withColumn("z", expr(
-          "aggregate(arr, 0.0D, (acc, x) -> " +
-            "acc + sqrt(CAST(x.n_docs AS DOUBLE)))"))
-        .select("nt", "z")
-      bySrc.crossJoin(broadcast(tot))
-        .select(col("source"), col("n_docs"),
-          round(col("n_docs").cast("double") / col("nt"), 6).as("p"),
-          round(sqrt(col("n_docs").cast("double")) / col("z"), 6)
-            .as("w_temp"))
-    }),
-
-    "sample_mixture" -> ((s, d) =>
-      // exact-count training-mix sampling: per-lang targets, lowest-hash
-      // rank per domain; fr excluded by the spec, es target above the
-      // group size at sf<=0.01 -> the take-all clamp path
-      PackOps.mixtureSample(t(s, d, "documents"), "doc_id", "lang",
-        Map("en" -> 50L, "de" -> 40L, "es" -> 100L, "zh" -> 20L))),
-
-    "k14_bucketed_join" -> ((s, d) => {
-      // co-located bucketed join: both sides written bucketBy(8) on the
-      // join key, so the merge join AND the downstream per-order
-      // aggregation run with ZERO exchanges (pinned in Round9OpsSpec) —
-      // the shuffle is paid once at write time and amortized over every
-      // later join on the key
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-      val ord = t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
-      BucketedTables.writeBucketed(li, "k14_lineitem", "l_orderkey", 8)
-      BucketedTables.writeBucketed(ord, "k14_orders", "o_orderkey", 8)
-      s.table("k14_lineitem").hint("merge")
-        .join(s.table("k14_orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_custkey"))
-        .agg(count(lit(1)).as("n_items"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("revenue"))
-    }),
-
-    "k15_manifest_skip" -> ((s, d) => {
-      // zone-map file skipping COMPOSED INTO THE READ PATH: range layout
-      // by event_id, per-file min/max manifest persisted as a TABLE next
-      // to the data, then a plain filtered read through
-      // IndexedFileIndex — the FileIndex consults `_manifest` during
-      // planning (distributed intersection, only matched paths reach the
-      // driver), so skipping rides any `.filter` instead of an
-      // explicit-path API; the oracle's full-scan filter proves pruning
-      // dropped nothing (files-read < total pinned in Round11OpsSpec)
-      val ev = t(s, d, "events")
-        .select(col("event_id"), col("user_id"), col("value"))
-      val dir = Scratch.dir("k15")
-        .toString + "/ev"
-      LayoutOps.writeRangeLayout(ev, "event_id", dir, numFiles = 8)
-      LayoutOps.writeManifestTable(s, dir, "event_id")
-      val mx = ev.agg(max(col("event_id"))).first().getLong(0)
-      val pruned = graft.sources.IndexedFileIndex.read(s, dir, "event_id")
-        .filter(col("event_id") >= mx / 4 && col("event_id") <= mx / 2)
-      pruned.agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("sum_id"),
-        min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"),
-        round(sum(col("value")), 2).as("sum_value"))
-    }),
-
-    "sample_gumbel_topk" -> ((s, d) =>
-      // Gumbel-top-k: exact weight-proportional sample without
-      // replacement in one pass — the distributed replacement for
-      // sequential weighted draws when mixing corpus sources
-      SketchOps.gumbelTopK(t(s, d, "documents"), "doc_id", "n_chars",
-          k = 100)
-        .select(col("rank"), col("doc_id"), col("w"),
-          round(col("gumbel_key"), 4).as("gumbel_key"))),
-
-    "sample_priority" -> ((s, d) =>
-      // DLT priority sampling: weight = n_chars, top-100 priorities with
-      // the (k+1)-th-priority estimator weights; the priority is one
-      // IEEE multiply + divide per row (no libm), so both engines select
-      // the identical sample and agree on w_est bit-for-bit pre-round
-      SketchOps.prioritySample(t(s, d, "documents"), "doc_id", "n_chars",
-          k = 100)
-        .select(col("doc_id"), col("w"),
-          round(col("priority"), 4).as("priority"),
-          round(col("w_est"), 4).as("w_est"))),
-
-    "stats_expectations" -> ((s, d) =>
-      // Deequ-style declarative data-quality gate: six checks in ONE
-      // aggregation pass (uniqueness rides the same Aggregate via
-      // Expand); the text-length reconciliation is a real cross-column
-      // constraint on the driver data
-      ValidationOps.expectations(t(s, d, "documents"),
-        Seq(
-          "doc_id_not_null" -> col("doc_id").isNull,
-          "lang_in_domain" -> (col("lang").isNull ||
-            !col("lang").isin("en", "de", "es", "fr", "zh")),
-          "n_chars_positive" -> (col("n_chars") <= 0L),
-          "text_nonempty" -> (length(col("text")) === 0),
-          "n_chars_matches_text" ->
-            (length(col("text")).cast("long") =!= col("n_chars"))),
-        uniqueKeys = Seq("doc_id_unique" -> "doc_id"))),
-
-    "k17_snapshot" -> ((s, d) => {
-      // time-travel reads over an append-only versioned history: v1 =
-      // base corpus, v2 = every 10th doc rescored, v3 = every 97th doc
-      // tombstoned; the as-of-2 and as-of-3 snapshots differ exactly by
-      // the deletions, and any past state stays reproducible
-      val base = t(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val v1 = base.withColumn("version", lit(1L))
-        .withColumn("deleted", lit(false))
-      val v2 = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("xx").as("lang"),
-          (col("n_chars") + 1000000L).as("n_chars"))
-        .withColumn("version", lit(2L)).withColumn("deleted", lit(false))
-      val v3 = base.filter(col("doc_id") % 97 === 0)
-        .withColumn("version", lit(3L)).withColumn("deleted", lit(true))
-      val hist = v1.unionByName(v2).unionByName(v3).localCheckpoint()
-      Seq(2L, 3L).map(v =>
-          MergeOps.snapshotAsOf(hist, "doc_id", "version", v)
-            .withColumn("as_of", lit(v)))
-        .reduce(_ unionByName _)
-        .select(col("as_of"), col("doc_id"), col("lang"), col("n_chars"))
-    }),
-
-    "k20_vacuum" -> ((s, d) => {
-      // retention vacuum over the k17 history: expire below version 2 —
-      // per-key chains collapse to one compacted base row, horizon
-      // tombstones vanish, the tail passes through. As-of reads at ≥ 2
-      // stay exactly reproducible (Round9OpsSpec pins the equivalence)
-      val base = t(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val v1 = base.withColumn("version", lit(1L))
-        .withColumn("deleted", lit(false))
-      val v2 = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("xx").as("lang"),
-          (col("n_chars") + 1000000L).as("n_chars"))
-        .withColumn("version", lit(2L)).withColumn("deleted", lit(false))
-      val v3 = base.filter(col("doc_id") % 97 === 0)
-        .withColumn("version", lit(3L)).withColumn("deleted", lit(true))
-      val hist = v1.unionByName(v2).unionByName(v3).localCheckpoint()
-      MergeOps.expireVersions(hist, "doc_id", "version", minVersion = 2L)
-        .select(col("version"), col("doc_id"), col("lang"),
-          col("n_chars"), col("deleted"))
-    }),
-
-    "k18_cdc" -> ((s, d) => {
-      // change-data-capture between the base corpus and its next
-      // release: every 10th doc rescored (update), every 101st dropped
-      // (delete), one appended (insert) — unchanged rows never leave
-      // the one full-outer join; the diff is |changes|-sized
-      val base = t(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val rescored = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("xx").as("lang"),
-          (col("n_chars") + 1000000L).as("n_chars"))
-      val inserted = base.agg(max(col("doc_id")).as("doc_id"))
-        .select((col("doc_id") + 1L).as("doc_id"),
-          lit("new").as("lang"), lit(1L).as("n_chars"))
-      val newSnap = MergeOps.upsert(base,
-          rescored.unionByName(inserted), "doc_id")
-        .filter(col("doc_id") % 101 =!= 0)
-      MergeOps.cdcDiff(base, newSnap, "doc_id")
-    }),
-
-    "graph_bfs" -> ((s, d) => {
-      // multi-source frontier BFS over the undirected supplier—part
-      // graph (parts offset into their own id space): exact hop
-      // distances ≤ 2 from the nation<5 suppliers; the oracle replays
-      // the expansion as a recursive CTE with UNION dedup
-      val li = t(s, d, "lineitem")
-        .select(col("l_suppkey").as("src"),
-          (col("l_partkey") + 1000000L).as("dst"))
-        .distinct()
-      val edges = li.unionByName(
-        li.select(col("dst").as("src"), col("src").as("dst")))
-      val seeds = t(s, d, "supplier").filter(col("s_nationkey") < 5)
-        .select(col("s_suppkey").as("node"))
-      GraphOps.bfs(edges, seeds, maxHops = 2)
-    }),
-
-    "graph_reciprocity" -> ((s, d) => {
-      // reciprocity of the directed part-succession graph: the
-      // fraction of edges whose reverse edge also exists — the
-      // one-number directedness gauge beside graph_scc (reciprocity
-      // ~1 means the "succession" is really co-occurrence; ~0 means
-      // genuine ordering). Same deterministic edge derivation as
-      // graph_scc; the reverse test is one self left-semi join on the
-      // (src, dst) key — never a pair materialization.
-      val w = Window.partitionBy(col("l_orderkey"))
-        .orderBy(col("l_linenumber"), col("l_partkey"))
-      val edges = t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-        .withColumn("nxt", lead(col("l_partkey"), 1).over(w))
-        .filter(col("nxt").isNotNull && col("nxt") =!= col("l_partkey"))
-        .select(col("l_partkey").as("src"), col("nxt").as("dst"))
-        .distinct()
-        .localCheckpoint() // three consumers (both semi sides + count)
-      val recip = edges
-        .join(edges.select(col("dst").as("src"), col("src").as("dst")),
-          Seq("src", "dst"), "left_semi")
-        .agg(count(lit(1)).as("n_reciprocal"))
-      edges.agg(count(lit(1)).as("n_edges"))
-        .crossJoin(broadcast(recip))
-        .select(col("n_edges"), col("n_reciprocal"),
-          round(col("n_reciprocal").cast("double") / col("n_edges"), 6)
-            .as("reciprocity"))
-    }),
-
-    "graph_scc" -> ((s, d) => {
-      // strongly-connected components (bounded 3-round forward-backward
-      // coloring) over the DIRECTED part-succession graph: an edge
-      // part_i → part_{i+1} for consecutive line numbers of the same
-      // order — "what gets ordered after what". Cycles are real here
-      // (parts co-occur in different successions across orders), and
-      // SCC is the directed-graph primitive the rest of the graph
-      // family lacks (pagerank/bfs are directed but component-blind;
-      // dedup's CC is undirected). The oracle unrolls the identical
-      // rounds — bounded-round semantics, the graph_kcore contract.
-      // l_linenumber is NOT unique within an order in this corpus
-      // (11.8k dup pairs at sf0.01) — l_partkey joins the sort key so
-      // the succession is total-ordered identically on both engines.
-      val w = Window.partitionBy(col("l_orderkey"))
-        .orderBy(col("l_linenumber"), col("l_partkey"))
-      val edges = t(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-        .withColumn("nxt", lead(col("l_partkey"), 1).over(w))
-        .filter(col("nxt").isNotNull && col("nxt") =!= col("l_partkey"))
-        .select(col("l_partkey").as("src"), col("nxt").as("dst"))
-      GraphOps.sccColor(edges, rounds = 3)
-    }),
-
-    "stats_drift" -> ((s, d) =>
-      // two-sample KS drift per event type: even event_ids are the
-      // reference batch, odd the new batch — rank-exact ECDF gap, no
-      // approximation, the distribution-shift monitor beside the
-      // constraint-based stats_expectations
-      ValidationOps.ksDrift(t(s, d, "events"), "event_type", "value",
-        col("event_id") % 2 === 1)),
-
-    "stats_fdr" -> ((s, d) => {
-      // Benjamini-Hochberg FDR over the per-type KS drift monitors —
-      // the multiple-testing correction a fleet of drift alarms needs
-      // before paging anyone: asymptotic p ≈ min(1, 2e^{−2λ²}) with
-      // λ = D·√(n_a·n_b/(n_a+n_b)) on the ROUNDED gate D (identical
-      // doubles both engines), then reject ranks ≤ max{k: p ≤ kα/m}
-      // at α = 0.05. m is tiny (one test per type) — the whole
-      // correction runs on the aggregated test table.
-      val ks = ValidationOps.ksDrift(t(s, d, "events"), "event_type",
-        "value", col("event_id") % 2 === 1)
-      val m = ks.agg(count(lit(1)).cast("double").as("m"))
-      val lam = sqrt(col("n_a").cast("double") * col("n_b") /
-        (col("n_a") + col("n_b"))) * col("ks")
-      val p = ks
-        .withColumn("p",
-          least(lit(1.0), lit(2.0) * exp(lit(-2.0) * lam * lam)))
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("p"), col("event_type"))).cast("int"))
-      val km = p.crossJoin(broadcast(m))
-        .filter(col("p") <= col("rank").cast("double") * lit(0.05) / col("m"))
-        .agg(coalesce(max(col("rank")), lit(0)).as("kmax"))
-      p.crossJoin(broadcast(km))
-        .select(col("event_type"), col("ks"), round(col("p"), 6).as("p"),
-          col("rank"), (col("rank") <= col("kmax")).as("reject"))
-    }),
-
-    "stats_auc" -> ((s, d) =>
-      // does doc length separate English from non-English? Probably not
-      // (AUC ≈ 0.5) — and that NUMBER is the point: the ranking-metric
-      // harness a quality-classifier score gets evaluated with before it
-      // gates a corpus. Tie-corrected Mann-Whitney, integer-exact until
-      // one final division
-      ValidationOps.rocAuc(t(s, d, "documents"), col("n_chars"),
-        col("lang") === "en")),
-
-    "k16_incr_agg" -> ((s, d) => {
-      // incremental aggregation maintenance: per-user state from the 70%
-      // base batch (localCheckpoint = the materialized state table)
-      // merges with the 30% delta batch's partial state — base data is
-      // never rescanned; the oracle recomputes from scratch, so the hash
-      // match proves the merge law
-      val ev = t(s, d, "events")
-      val state = MergeOps.aggState(
-        ev.filter(col("event_id") % 10 < 7), "user_id", "value")
-        .localCheckpoint()
-      MergeOps.mergeAggState(state,
-          MergeOps.aggState(ev.filter(col("event_id") % 10 >= 7),
-            "user_id", "value"), "user_id")
-        .select(col("user_id"), col("n"), round(col("sum_v"), 2).as("sum_v"),
-          col("min_v"), col("max_v"))
-    }),
-
-    "k33_ivm_join" -> ((s, d) => {
-      // incremental JOIN-view maintenance: the stored view J0 = A⋈B
-      // (localCheckpoint = the materialized view) refreshes under
-      // append deltas on BOTH sides via the delta algebra
-      // J0 ∪ ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB — base never re-joins base; the
-      // oracle recomputes the full join from scratch, so the hash
-      // match proves the algebra loses and duplicates nothing
-      val o = t(s, d, "orders")
-        .select(col("o_orderkey"), col("o_orderpriority"))
-      val li = t(s, d, "lineitem")
-        .select(col("l_orderkey").as("o_orderkey"),
-          col("l_extendedprice"), col("l_discount"), col("l_linenumber"))
-      val aBase = o.filter(col("o_orderkey") % 11 =!= 0)
-      val aDelta = o.filter(col("o_orderkey") % 11 === 0)
-      val bBase = li.filter(col("l_linenumber") % 4 =!= 0)
-      val bDelta = li.filter(col("l_linenumber") % 4 === 0)
-      val j0 = aBase.join(bBase, Seq("o_orderkey")).localCheckpoint()
-      MergeOps.deltaJoinRefresh(j0, aBase, bBase, aDelta, bDelta,
-          Seq("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-            .as("revenue"))
-    }),
-
-    "j8_fuzzy_join" -> ((s, d) => {
-      // fuzzy record-linkage join: odd customers get a deterministic
-      // one-char deletion (the char before the last drops — a dirty
-      // import feed), then link back against the clean even-customer
-      // names at edit distance ≤ 1 via symmetric-delete blocking +
-      // exact levenshtein verify — the oracle is the naive quadratic
-      // levenshtein join, so blocking losslessness is the gate
-      val cust = t(s, d, "customer").select(col("c_custkey"), col("c_name"))
-      val clean = cust.filter(col("c_custkey") % 2 === 0)
-        .select(col("c_custkey").as("clean_key"),
-          col("c_name").as("clean_name"))
-      val dirty = cust.filter(col("c_custkey") % 2 === 1)
-        .select(col("c_custkey").as("dirty_key"),
-          concat(col("c_name").substr(lit(1), length(col("c_name")) - 2),
-            col("c_name").substr(length(col("c_name")), lit(1)))
-            .as("dirty_name"))
-      DedupOps.fuzzyJoin(dirty, clean, "dirty_key", "dirty_name",
-        "clean_key", "clean_name")
-    }),
-
-    "j7_bloom_prune" -> ((s, d) => {
-      // bloom-pruned scan: keep-set = suppliers of nations 0-4, bitmap
-      // 4096 bits / 3 hashes (deliberately undersized so false positives
-      // occur and the oracle must reproduce them bit-for-bit), big side
-      // filtered map-side with no shuffle/join (PlanSpec pins the shape)
-      val keep = t(s, d, "supplier").filter(col("s_nationkey") < 5)
-      PruneOps.bloomPrune(t(s, d, "lineitem"), "l_suppkey",
-          keep, "s_suppkey", mBits = 4096, k = 3)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_rows"),
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          countDistinct(col("l_suppkey")).as("n_supp"))
-    }),
-
-    "layout_zorder" -> ((s, d) => {
-      // Morton layout: z-value over (user_id low bits, day-of-epoch) —
-      // the write-order key that makes parquet min/max stats prune on
-      // EITHER dimension; the oracle replicates the bit-interleave, and
-      // the aggregate per z-octant shows each octant covers a tight
-      // user×time rectangle (the pruning argument in numbers)
-      val ev = t(s, d, "events")
-      // day-of-epoch via integer div on epoch seconds: timezone-free and
-      // identical in both engines (events are 2024+, always positive)
-      val z = LayoutOps.zValue(
-        col("user_id").bitwiseAND(lit(0xFFFFL)),
-        expr("CAST(ts AS LONG) div 86400"))
-      ev.withColumn("z", z)
-        .withColumn("day", expr("CAST(ts AS LONG) div 86400"))
-        .groupBy(call_function("shiftright", col("z"), lit(8)).as("zbucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("user_id")).as("min_user"), max(col("user_id")).as("max_user"),
-          min(col("day")).as("min_day"), max(col("day")).as("max_day"),
-          min(col("z")).as("min_z"), max(col("z")).as("max_z"))
-    }),
-
-    "j6_wikistats" -> ((s, _) => {
-      // J6 end-to-end: pageview agg → redirect re-merge → re-aggregate →
-      // title→id join (reference: etc/match_wikistats.sh:34-41,
-      // python/local_redirect.py:12-36)
-      import s.implicits._
-      val lines = Seq(
-        "en.z Foo_bar#x 10 AB5C3,CA1B2",
-        "en.z foo_bar 7 AA7",
-        "en.z Old_name 4 BA4",
-        "de.z Ignored 5 AA5",
-        "en.z Baz 2 BA2").toDF("value")
-      val redirects = Seq(("Old_name", "Baz")).toDF("src_title", "dst_title")
-      val idmap = Seq(("Foo_bar", 100L), ("Baz", 200L), ("Other", 300L))
-        .toDF("rtitle", "page_id")
-      graft.jobs.MatchWikistats.chain(lines, redirects, idmap, days = 5)
-        .select(col("page_id"), col("title"), col("total"),
-          posexplode(col("daily")).as(Seq("day", "views")))
-    }),
-
-    // ---- sink round-trips (K1/K5/K7): write with the engine's sink, read
-    // back, emit rows; the oracle reads the original table directly ----
-    "k1_tsv_roundtrip" -> ((s, d) => {
-      val dir = Scratch.dir("k1").toString
-      graft.sources.GraftSinks.writeTsv(
-        t(s, d, "nation").select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
-        dir)
-      s.read.schema("n_nationkey INT, n_name STRING, n_regionkey INT")
-        .option("sep", "\t").csv(dir)
-    }),
-
-    "k5_json_roundtrip" -> ((s, d) => {
-      val dir = Scratch.dir("k5").toString
-      graft.sources.GraftSinks.writeJson(
-        t(s, d, "region").select(col("r_regionkey"), col("r_name")), dir)
-      s.read.schema("r_regionkey INT, r_name STRING").json(dir)
-    }),
-
-    "k7_dict_roundtrip" -> ((s, d) => {
-      val dir = Scratch.dir("k7").toString
-      graft.sources.GraftSinks.writeDictionary(
-        TermOps.dictionary(t(s, d, "documents"), "doc_id", "text", minDf = 5L), dir)
-      s.read.parquet(dir)
-    }),
-
-    "s10_time_window_scan" -> ((s, _) =>
-      // S10: beginTime inclusive (rev 101 sits exactly on it), endTime
-      // exclusive (rev 103 sits exactly on it) — the half-open contract
-      graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath,
-          Map("beginTime" -> "2020-01-01T00:00:00Z",
-            "endTime" -> "2021-01-01T00:00:00Z"))
-        .select(col("rev_id"))),
-
-    "k2_parquet_roundtrip" -> ((s, d) => {
-      val dir = Scratch.dir("k2").toString
-      graft.sources.GraftSinks.writeParquet(
-        t(s, d, "region").select(col("r_regionkey"), col("r_name")), dir,
-        compression = "zstd")
-      s.read.parquet(dir)
-    }),
-
-    "k8_orc_roundtrip" -> ((s, d) => {
-      // K2b: the ORC columnar sink round-trips with schema and values
-      val dir = Scratch.dir("k8").toString
-      graft.sources.GraftSinks.writeOrc(
-        t(s, d, "customer").select(col("c_custkey"), col("c_mktsegment")),
-        dir, compression = "zlib")
-      s.read.orc(dir)
-    }),
-
-    "k6_compressed_sink" -> ((s, d) => {
-      // K6: compression option on the TSV sink (gzip), transparent on read
-      val dir = Scratch.dir("k6").toString
-      graft.sources.GraftSinks.writeTsv(
-        t(s, d, "nation").select(col("n_nationkey"), col("n_name")), dir,
-        compression = Some("gzip"))
-      s.read.schema("n_nationkey INT, n_name STRING")
-        .option("sep", "\t").csv(dir)
-    }),
-
-    // S21: WARC web-archive source (reference ClueWeb09WarcLoader) —
-    // typed record fields + body fingerprint over the authored fixture;
-    // oracle literals computed by an independent Python md5 over the
-    // same authored record bodies
-    "s21_warc_scan" -> ((s, _) =>
-      graft.sources.Warc.read(s, graft.sources.WikiFixtures.standardWarcPath)
-        .select(col("record_id"), col("warc_type"), col("trec_id"),
-          md5(col("body")).as("body_md5"),
-          col("content_length"))),
-
-    "s17_file_names" -> ((s, _) => {
-      // S17: one row per dump file in a directory (FileNullInputFormat)
-      val dir = Scratch.dir("s17")
-      java.nio.file.Files.writeString(dir.resolve("a.xml"), "<x/>")
-      java.nio.file.Files.writeString(dir.resolve("b.xml"), "<y/>")
-      java.nio.file.Files.writeString(dir.resolve("c.xml"), "<z/>")
-      graft.sources.WikiXml.fileNames(s, dir.toString)
-        .agg(count(lit(1)).as("n_files"))
-    }),
-
-    "s19_split_index" -> ((s, _) => {
-      // S19: the split-index build finds exactly one offset per <page>,
-      // strictly increasing within the file
-      // file lives under the per-process Scratch root (a bare temp-file
-      // call leaked one top-level /tmp xml per run; the r16 audit only
-      // watched directory creation — Round17Spec now watches files too)
-      val f = Scratch.dir("s19").resolve("dump.xml")
-      java.nio.file.Files.writeString(f, graft.sources.WikiFixtures.bigXml(60))
-      val idx = graft.sources.IndexSplits.build(s, f.toString)
-      idx.agg(count(lit(1)).as("n_offsets"),
-        countDistinct(col("offset")).as("n_distinct"),
-        (min(col("offset")) >= 0).as("non_negative"))
-    }),
-
-    "st_sessions" -> ((s, _) => {
-      // streaming sessionizer through the gate: deterministic two-batch
-      // trace; sessions close via the later-event gap path (timeout off)
-      StreamTrace.run[Event](s, "st_sessions", "append")(
-          EventStreamOps.sessionize(_, gapMs = 60000L, idleTimeout = false))(
-        Seq(Event(1, at(0L), 1.0), Event(1, at(30000L), 2.0),
-          Event(2, at(10000L), 4.0)),
-        Seq(Event(1, at(3600000L), 5.0), Event(2, at(3600000L), 6.0)))
-        .select(col("user_id"), col("start_ms"), col("end_ms"),
-          col("n_events"), col("sum_value"))
-    }),
-
-    "st_sessions_event" -> ((s, _) => {
-      // the event-time sessionizer through the gate: same trace as
-      // st_sessions plus a watermark-pushing sentinel key (filtered out)
-      // so every session closes by watermark, not wall clock — the
-      // emitted set is replay-deterministic (see StreamingSpec)
-      StreamTrace.run[Event](s, "st_sessions_event", "append")(
-          EventStreamOps.sessionizeEventTime(_, gapMs = 60000L,
-            watermark = "10 seconds"))(
-        Seq(Event(1, at(0L), 1.0), Event(1, at(30000L), 2.0),
-          Event(2, at(10000L), 4.0)),
-        Seq(Event(1, at(3600000L), 5.0), Event(2, at(3600000L), 6.0)),
-        Seq(Event(9, at(10000000L), 0.0)))
-        .filter(col("user_id") =!= 9L)
-        .select(col("user_id"), col("start_ms"), col("end_ms"),
-          col("n_events"), col("sum_value"))
-    }),
-
-    "st_static_join" -> ((s, d) => {
-      // stream-static enrichment through the gate: the live feed joins a
-      // dim table derived from the batch events table (tier = user_id%3)
-      // and aggregates per (10-min window, tier); the second batch
-      // updates an existing window in complete mode. The dim table is
-      // read on the stream's (cloned) session.
-      StreamTrace.run[Event](s, "st_static_join", "complete") { src =>
-        val dim = t(src.sparkSession, d, "events").select(col("user_id"))
-          .distinct()
-          .withColumn("tier",
-            concat(lit("t"), pmod(col("user_id"), lit(3L)).cast("string")))
-        EventStreamOps.enrichedWindowedSums(src.toDF(), dim, "user_id",
-          "tier", "ts", "10 minutes")
-      }(
-        Seq(Event(1, wall("2024-01-01 00:01:00"), 1.5), // tier t1, window 00:00
-          Event(4, wall("2024-01-01 00:04:00"), 2.5), // tier t1, same window
-          Event(2, wall("2024-01-01 00:12:00"), 3.0)), // tier t2, window 00:10
-        Seq(Event(1, wall("2024-01-01 00:13:00"), 4.0))) // t1 joins window 00:10
-        .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
-          .as("w_start"), col("tier"), col("n_events"), col("sum_value"))
-    }),
-
-    "st_dedup" -> ((s, _) => {
-      // streaming exact dedup through the gate: in-batch and cross-batch
-      // duplicates of a live key drop; a key re-emits once the watermark
-      // evicts its state (within-horizon semantics); a late duplicate
-      // (ts < watermark) never reaches the operator. Sentinel key 9 only
-      // pushes the watermark and is filtered from the result.
-      StreamTrace.run[Event](s, "st_dedup", "append")(src =>
-        EventStreamOps.dedupWithinWatermark(src.toDF(), Seq("user_id"),
-          "ts", "1 minute"))(
-        // batch 1: key 1 duplicated inside the batch (identical rows, so
-        // the surviving copy is unambiguous)
-        Seq(Event(1, at(0L), 1.0), Event(1, at(0L), 1.0),
-          Event(2, at(10000L), 2.0)),
-        // batch 2: key 1 again while its state is live -> dropped
-        Seq(Event(1, at(30000L), 9.0), Event(3, at(40000L), 3.0)),
-        // batch 3: sentinel pushes the watermark to 3_540_000 ms,
-        // evicting every earlier key's state
-        Seq(Event(9, at(3600000L), 0.0)),
-        // batch 4: key 2 re-arrives past its horizon -> re-emitted;
-        // key 3 re-arrives with ts < watermark -> dropped as late
-        Seq(Event(2, at(3600000L), 7.0), Event(3, at(100000L), 9.9)))
-        .filter(col("user_id") =!= 9L)
-        .select(col("user_id"), (unix_millis(col("ts")) - T0).as("ts_ms"),
-          col("value").as("v"))
-    }),
-
-    "st_neardup" -> ((s, _) => {
-      // streaming MinHash near-dup dedup through the gate: a case/
-      // whitespace variant (identical token stream → all bands match)
-      // and a one-token edit (shares a band) both drop against a live
-      // original; unrelated docs pass; after watermark eviction a
-      // near-dup re-emits; a late near-dup (ts < watermark) never
-      // reaches the operator. Band buckets for the trace texts are
-      // pinned in StreamingSpec against the batch minhash kernel.
-      val fox = "the quick brown fox jumps over the lazy dog"
-      StreamTrace.run[DocEvent](s, "st_neardup", "append")(src =>
-        EventStreamOps.neardupWithinWatermark(src.toDF(), "text", "ts",
-          "1 minute"))(
-        // batch 1: two unrelated docs -> both emit
-        Seq(DocEvent(1, fox, at(0L)), DocEvent(2,
-          "completely unrelated payload about parquet row groups", at(10000L))),
-        // batch 2: doc 3 = case/whitespace variant of doc 1 (all bands
-        // equal), doc 4 = one-token edit (shares band 2) -> both drop;
-        // doc 5 is fresh -> emits
-        Seq(DocEvent(3, "The  Quick Brown FOX jumps over the LAZY dog", at(20000L)),
-          DocEvent(4, "the quick brown fox leaps over the lazy dog", at(30000L)),
-          DocEvent(5,
-            "another fully distinct sentence mentioning shuffle exchanges",
-            at(40000L))),
-        // batch 3: sentinel pushes the watermark to 3_540_000 ms,
-        // evicting every claimed bucket
-        Seq(DocEvent(9, "watermark sentinel advancing event time", at(3600000L))),
-        // batch 4: doc 6 is a near-dup of the (evicted) doc 1 -> re-emits
-        // (within-horizon semantics); doc 7 replays doc 3's text with
-        // ts < watermark -> dropped as late
-        Seq(DocEvent(6, "the quick brown fox jumps over the lazy cat", at(3600000L)),
-          DocEvent(7, "The  Quick Brown FOX jumps over the LAZY dog", at(100000L))))
-        .filter(col("doc_id") =!= 9L)
-        .select(col("doc_id"), (unix_millis(col("ts")) - T0).as("ts_ms"))
-    }),
-
-    "st_substring" -> ((s, _) => {
-      // streaming SUBSTRING dedup through the gate — the stream form of
-      // the window-MinHash tier (batch/stream symmetry for the newest
-      // dedup tier, as st_dedup/st_neardup are for exact and MinHash):
-      // docs explode into strided 4-token windows, each claiming its
-      // 8-byte bottom-1 MinHash sketch within the watermark horizon;
-      // the emitted stream is the NOVEL spans. The trace drives: a full
-      // duplicate contributes nothing, a half-overlapping doc emits
-      // only its new tail window, eviction re-admits, a late replay
-      // never reaches the operator. State is O(windows-in-horizon).
-      val eight = "alpha beta gamma delta epsilon zeta eta theta"
-      StreamTrace.run[DocEvent](s, "st_substring", "append")(src =>
-        EventStreamOps.substringNovelWindows(src.toDF(), "text", "ts",
-          "1 minute", w = 4, stride = 4, shingleK = 2))(
-        // batch 1: doc 1 (8 tokens → 2 disjoint windows, both novel);
-        // doc 2 (4 tokens → 1 novel window)
-        Seq(DocEvent(1, eight, at(0L)),
-          DocEvent(2, "one two three four", at(10000L))),
-        // batch 2: doc 3 duplicates doc 1 exactly → both windows
-        // claimed, nothing emits; doc 4 overlaps doc 1's second window
-        // → window 0 drops, window 1 (the novel tail) emits
-        Seq(DocEvent(3, eight, at(20000L)),
-          DocEvent(4, "epsilon zeta eta theta iota kappa lambda mu", at(30000L))),
-        // batch 3: sentinel pushes the watermark to 3_540_000 ms,
-        // evicting every claimed sketch
-        Seq(DocEvent(9, "sentinel watermark advance tick", at(3600000L))),
-        // batch 4: doc 6 replays doc 1 past the horizon → both windows
-        // re-emit (within-horizon semantics); doc 7 replays doc 4 with
-        // ts < watermark → dropped as late
-        Seq(DocEvent(6, eight, at(3600000L)),
-          DocEvent(7, "epsilon zeta eta theta iota kappa lambda mu", at(100000L))))
-        .filter(col("doc_id") =!= 9L)
-        .select(col("doc_id"), col("win_idx"),
-          (unix_millis(col("ts")) - T0).as("ts_ms"))
-    }),
-
-    "st_curate" -> ((s, _) => {
-      // composed streaming curation (EventStreamOps.curateStream):
-      // quality gate → exact dedup → banded near-dup in ONE append
-      // query, every stage's state watermark-bounded. The trace drives
-      // each stage: a too-short doc dies at the stateless gate (even
-      // arriving late), an exact copy and a whitespace variant drop
-      // against the live original, a clean doc passes, and the original
-      // re-admits after watermark eviction — the admitted stream is the
-      // verdict.
-      val fox = "the quick brown fox jumps over the lazy dog"
-      StreamTrace.run[DocEvent](s, "st_curate", "append")(src =>
-        EventStreamOps.curateStream(src.toDF(), "text", "ts",
-          "1 minute", minChars = 20))(
-        // batch 1: original admits; exact copy drops (stage 2); short
-        // doc dies at the gate (stage 1); whitespace variant drops at
-        // the band stage (stage 3: different hash, identical tokens)
-        Seq(DocEvent(1, fox, at(0L)), DocEvent(2, fox, at(10000L)),
-          DocEvent(3, "tiny doc", at(20000L)),
-          DocEvent(4, "the  quick brown fox jumps over the lazy dog", at(30000L))),
-        // batch 2: fresh clean doc admits
-        Seq(DocEvent(5, "completely unrelated payload about parquet row groups",
-          at(40000L))),
-        // batch 3: sentinel pushes the watermark to 3_540_000 ms,
-        // evicting the hash and band state of every earlier doc
-        Seq(DocEvent(9, "watermark sentinel advancing event time", at(3600000L))),
-        // batch 4: the original's text re-arrives past its horizon ->
-        // re-admitted; a late short doc is still gated (stateless)
-        Seq(DocEvent(6, fox, at(3600000L)), DocEvent(7, "tiny doc", at(100000L))))
-        .filter(col("doc_id") =!= 9L)
-        .select(col("doc_id"), (unix_millis(col("ts")) - T0).as("ts_ms"),
-          col("n_chars"))
-    }),
-
-    "st_stream_join" -> ((s, _) => {
-      // watermarked stream-stream interval join through the gate:
-      // clicks attribute to same-user impressions at most 30 minutes
-      // older; the out-of-window click matches nothing. Two sources, so
-      // the trace runs the harness steps itself.
-      val ss = StreamTrace.session(s)
-      val imps = StreamTrace.source[Event](ss)
-      val clicks = StreamTrace.source[Event](ss)
-      StreamTrace.drive(EventStreamOps.intervalJoin(imps.toDF(), clicks.toDF(),
-          "user_id", "ts", "value", "1 minute", "30 minutes"),
-          "memory", "st_stream_join", "append")(Iterator(
-        () => imps.addData(Event(1, at(0L), 100.0), Event(2, at(10000L), 200.0)),
-        // the user-2 click is 39:50 after its impression
-        () => clicks.addData(Event(1, at(300000L), 1.0),
-          Event(1, at(600000L), 2.0), Event(2, at(2400000L), 3.0))))(
-        _ => ss.table("st_stream_join"))
-        .select(col("user_id"),
-          (unix_millis(col("left_ts")) - T0).as("imp_ms"),
-          (unix_millis(col("right_ts")) - T0).as("click_ms"),
-          col("left_value").as("imp_value"),
-          col("right_value").as("click_value"))
-    }),
-
-    "curate_classifier" -> ((s, d) => {
-      // model-based quality gating plumbing (the fastText/DCLM-filter
-      // shape): hashed bag-of-words features × a broadcast weight
-      // vector → logit → sigmoid → keep. Weights here are
-      // deterministic hash stand-ins (training happens offline; at
-      // serve time a linear scorer IS just this broadcast dot product
-      // — a pure map over the corpus after one explode+agg). The logit
-      // is an ordered fold over the bucket-sorted feature array, so
-      // the keep decision (z ≥ 0, evaluated on the unrounded logit) is
-      // engine-exact; only the displayed sigmoid touches libm
-      val z = classifierZ(s, d)
-      z.select(col("doc_id"), round(col("z"), 4).as("z"),
-        round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 4).as("score"),
-        (col("z") >= 0.0).as("keep"))
-    }),
-
-    "curate_mix_waterfill" -> ((s, d) => {
-      // mixture-planning waterfill: split a training budget (9/10 of
-      // the corpus, in chars — high enough that small sources cap on
-      // the organic fixture) across sources EQUALLY — except a source
-      // smaller than its equal share contributes everything it has and
-      // its shortfall redistributes to the rest (the classic
-      // waterfilling allocation a data-mixture planner runs before
-      // sampling; sample_mixture/temperature then EXECUTE a plan like
-      // this one). One ascending pass decides the caps: source at rank
-      // k (of S, by (avail, source)) is capped iff
-      // avail·(S−k+1) ≤ T − Σ_{i<k} avail_i — equivalent to the
-      // iterative fixpoint by the downward-closure of caps (verified
-      // by simulation against 5000 random instances); the equal share
-      // then splits the remaining budget with the integer remainder
-      // going to the first residue sources in rank order. All integer
-      // → engine-exact. O(sources) rows after one corpus aggregation.
-      val avail = t(s, d, "documents").groupBy("source")
-        .agg(sum(col("n_chars")).as("avail"))
-      val tot = avail.agg(sum("avail").as("total"),
-        count(lit(1)).as("ns"))
-      val wRank = Window.orderBy(col("avail"), col("source"))
-      val flagged = avail.crossJoin(broadcast(tot))
-        .withColumn("budget", expr("(total * 9) div 10"))
-        .withColumn("rk", row_number().over(wRank).cast("long"))
-        .withColumn("cumprev", coalesce(sum(col("avail")).over(
-          wRank.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("capped", col("avail") * (col("ns") - col("rk") + 1L)
-          <= col("budget") - col("cumprev"))
-      val caps = flagged.agg(
-        sum(when(col("capped"), col("avail")).otherwise(0L)).as("cap_sum"),
-        sum(when(col("capped"), 1L).otherwise(0L)).as("n_capped"))
-      flagged.crossJoin(broadcast(caps))
-        .withColumn("m", col("ns") - col("n_capped"))
-        .withColumn("brem", col("budget") - col("cap_sum"))
-        .withColumn("alloc", when(col("capped") || col("m") === 0L,
-            col("avail"))
-          .otherwise(expr("brem div m") +
-            when(col("rk") - col("n_capped") <= col("brem") % col("m"), 1L)
-              .otherwise(0L)))
-        .select(col("source"), col("avail"), col("budget"),
-          col("capped"), col("alloc"))
-    }),
-
-    "curate_budget" -> ((s, d) => {
-      // budget-constrained selection: per lang, rank docs longest-first
-      // (deterministic doc_id tie-break) and keep while the cumulative
-      // token count stays within a 2000-token stratum budget — the
-      // greedy fill a token-budgeted mixture draw runs. One exchange on
-      // lang; integers throughout
-      val docs = t(s, d, "documents")
-        .select(col("lang"), col("doc_id"),
-          size(TermOps.tokens(col("text"))).cast("long").as("n_tokens"))
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(col("n_tokens").desc, col("doc_id").asc)
-      docs.withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-        .filter(col("cum_tokens") <= 2000L)
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          max(col("cum_tokens")).as("n_tokens_kept"))
-    }),
-
-    "curate_release" -> ((s, d) => {
-      // the END-TO-END corpus release: exact-dedup survivors → quality/
-      // language gate (one map-only pass) → deterministic 90/5/5 split
-      // (the sample_split hash rule) → the per-split release manifest a
-      // training run consumes (doc counts, token budget, language
-      // spread, id range). Composes the gated chains; one dedup
-      // aggregation + one semi-join + one split aggregation.
-      val docs = t(s, d, "documents")
-      val keep = DedupOps.exactGroups(docs, "doc_id", "text")
-        .select(col("keep_id").as("doc_id"))
-      TextAnalysisOps.withLangId(docs, "text")
-        .withColumn("n_tokens", size(TermOps.tokens(col("text"))))
-        .filter(col("n_tokens") >= 20 && col("pred_lang") === "en")
-        .join(keep, Seq("doc_id"), "left_semi")
-        .withColumn("b", pmod(
-          expr("fnv64(concat(cast(doc_id as string), '#split'))")
-            .bitwiseAND(lit(4294967295L)), lit(100L)))
-        .withColumn("split", when(col("b") < 90, "train")
-          .when(col("b") < 95, "val").otherwise("test"))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("sum_tokens"),
-          countDistinct(col("lang")).as("n_langs"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-    }),
-
-    "curate_docs" -> ((s, d) => {
-      // composed training-data curation pipeline: quality floor (≥ 20
-      // tokens) + language filter (en) computed in ONE map-only pass over
-      // the docs (no metric joins), then a semi-join against the
-      // exact-dedup survivors — the only shuffle besides the dedup
-      // aggregation itself. The shape a 100 TB pretraining-corpus pass
-      // runs; CuratePlanSpec pins it.
-      val docs = t(s, d, "documents")
-      val keep = DedupOps.exactGroups(docs, "doc_id", "text")
-        .select(col("keep_id").as("doc_id"))
-      TextAnalysisOps.withLangId(docs, "text")
-        .withColumn("n_tokens", size(TermOps.tokens(col("text"))))
-        .filter(col("n_tokens") >= 20 && col("pred_lang") === "en")
-        .join(keep, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("n_tokens"), col("pred_lang"))
-    })
-  )
-
-  // ---------------------------------------------------------------------
-  // DuckDB oracles
-  // ---------------------------------------------------------------------
-
-  private val tokensSub =
-    """SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\s+')) AS term
-      |FROM documents""".stripMargin
-
-  /** Mirrors `SimilarityOps.l2sq` op-for-op (sequential left-fold of
-    * squared differences over `d`-dim double arrays) so DuckDB produces
-    * bit-identical doubles. */
-  private def l2sqSql(a: String, b: String, d: Int): String =
-    s"list_reduce(list_prepend(0.0, list_transform(generate_series(1, $d), " +
-      s"i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))), (acc, x) -> acc + x)"
-
-  /** The PQ oracle chain (shared by ann_pq_topk and ann_ivfpq_topk):
-    * per-subspace Lloyd training, encoding, ADC tables and the
-    * ordered-fold distance sums, mirroring SimilarityOps.pqAdcRank.
-    * `ivfPruned` restricts the scored set to the IVF coarse cells the
-    * query probes (SimilarityOps.ivfpqTopK). */
-  private def pqAdcOracleSql(ivfPruned: Boolean, k: Int = 5): String = {
-    def centFrom(assigned: String) =
-      s"""SELECT s, code, list(cv ORDER BY dim) AS cent FROM (
-         |   SELECT u.s AS s, u.code AS code, u.dim AS dim, avg(u.v) AS cv FROM (
-         |     SELECT sub.s, a.code, unnest(sub.sub) AS v,
-         |            generate_subscripts(sub.sub, 1) AS dim
-         |     FROM sub JOIN $assigned a USING (vec_id, s)) u
-         |   GROUP BY s, code, dim) g
-         | GROUP BY s, code""".stripMargin
-    def assignFrom(cent: String) =
-      s"""SELECT sub.vec_id, sub.s, $cent.code,
-         |  row_number() OVER (PARTITION BY sub.vec_id, sub.s
-         |    ORDER BY ${l2sqSql("sub.sub", s"$cent.cent", 8)} ASC,
-         |             $cent.code ASC) AS rn
-         | FROM sub JOIN $cent ON sub.s = $cent.s""".stripMargin
-    val ivfCtes =
-      s"""cents AS (
-         |  SELECT vec_id AS cent_id, emb AS cent_emb FROM e
-         |  ORDER BY ${hash32Sql("(vec_id + 1)")}, vec_id LIMIT 16),
-         |csc AS (
-         |  SELECT e.vec_id, c.cent_id,
-         |   row_number() OVER (PARTITION BY e.vec_id
-         |     ORDER BY ${cosSql("e.emb", "c.cent_emb")} DESC, c.cent_id ASC) AS rn
-         |  FROM e CROSS JOIN cents c),
-         |cells AS (SELECT vec_id, cent_id FROM csc WHERE rn = 1),
-         |probes AS (SELECT vec_id AS query_id, cent_id FROM csc
-         |           WHERE vec_id < 10 AND rn <= 3),
-         |cand AS (SELECT p.query_id, c.vec_id
-         |         FROM cells c JOIN probes p USING (cent_id)
-         |         WHERE c.vec_id <> p.query_id),""".stripMargin
-    val sc =
-      if (ivfPruned)
-        """sc AS (SELECT cand.query_id, cand.vec_id, a2.s, qt.d
-          |       FROM cand JOIN a2 ON cand.vec_id = a2.vec_id
-          |       JOIN qt ON qt.query_id = cand.query_id
-          |         AND qt.s = a2.s AND qt.code = a2.code)""".stripMargin
-      else
-        """sc AS (SELECT qt.query_id, a2.vec_id, qt.s, qt.d
-          |       FROM a2 JOIN qt ON a2.s = qt.s AND a2.code = qt.code
-          |       WHERE a2.vec_id <> qt.query_id)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-       |           FROM embeddings),
-       |${if (ivfPruned) ivfCtes else ""}
-       |sub AS (SELECT vec_id, s, emb[(s*8+1):(s*8+8)] AS sub
-       |        FROM e, unnest(generate_series(0, 7)) AS t(s)),
-       |a0 AS (SELECT vec_id, s, vec_id % 16 AS code FROM sub),
-       |c1 AS (${centFrom("a0")}),
-       |d1 AS (${assignFrom("c1")}),
-       |a1 AS (SELECT vec_id, s, code FROM d1 WHERE rn = 1),
-       |c2 AS (${centFrom("a1")}),
-       |d2 AS (${assignFrom("c2")}),
-       |a2 AS (SELECT vec_id, s, code FROM d2 WHERE rn = 1),
-       |qt AS (SELECT sub.vec_id AS query_id, sub.s, c2.code,
-       |        ${l2sqSql("sub.sub", "c2.cent", 8)} AS d
-       |       FROM sub JOIN c2 ON sub.s = c2.s WHERE sub.vec_id < 10),
-       |$sc,
-       |ad AS (SELECT query_id, vec_id,
-       |        list_reduce(list_prepend(0.0, list(d ORDER BY s)),
-       |          (acc, x) -> acc + x) AS adc
-       |       FROM sc GROUP BY query_id, vec_id),
-       |r AS (SELECT query_id, vec_id AS nbr_id, adc,
-       |       CAST(row_number() OVER (PARTITION BY query_id
-       |         ORDER BY adc ASC, vec_id ASC) AS INT) AS rank FROM ad)
-       |SELECT query_id, nbr_id, round(adc, 4) AS adc, rank
-       |FROM r WHERE rank <= $k""".stripMargin
-  }
-
-  /** Residual-IVFPQ replay (SimilarityOps.ivfpqResidualTopK): the same
-    * coarse-cell and Lloyd chains as [[pqAdcOracleSql]], but the `sub`
-    * relation slices RESIDUALS (vector − assigned centroid), queries
-    * form one residual per probed cell, and the ADC lookup keys on
-    * (query, cell, subspace, code). */
-  private lazy val pqResidualOracleSql: String = {
-    def centFrom(assigned: String) =
-      s"""SELECT s, code, list(cv ORDER BY dim) AS cent FROM (
-         |   SELECT u.s AS s, u.code AS code, u.dim AS dim, avg(u.v) AS cv FROM (
-         |     SELECT sub.s, a.code, unnest(sub.sub) AS v,
-         |            generate_subscripts(sub.sub, 1) AS dim
-         |     FROM sub JOIN $assigned a USING (vec_id, s)) u
-         |   GROUP BY s, code, dim) g
-         | GROUP BY s, code""".stripMargin
-    def assignFrom(cent: String) =
-      s"""SELECT sub.vec_id, sub.s, $cent.code,
-         |  row_number() OVER (PARTITION BY sub.vec_id, sub.s
-         |    ORDER BY ${l2sqSql("sub.sub", s"$cent.cent", 8)} ASC,
-         |             $cent.code ASC) AS rn
-         | FROM sub JOIN $cent ON sub.s = $cent.s""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-       |           FROM embeddings),
-       |kd0 AS (SELECT vec_id % 16 AS cluster, unnest(emb) AS v,
-       |        generate_subscripts(emb, 1) AS dim FROM e),
-       |kcent0 AS (SELECT cluster, list(cv ORDER BY dim) AS centroid FROM
-       |  (SELECT cluster, dim, avg(v) AS cv FROM kd0 GROUP BY cluster, dim) g
-       |  GROUP BY cluster),
-       |kar0 AS (SELECT e.vec_id, c.cluster, row_number() OVER (PARTITION BY e.vec_id
-       |         ORDER BY ${cosSql("e.emb", "c.centroid")} DESC, c.cluster ASC) AS rn
-       |        FROM e CROSS JOIN kcent0 c),
-       |kasn0 AS (SELECT vec_id, cluster FROM kar0 WHERE rn = 1),
-       |kd1 AS (SELECT a.cluster, unnest(e2.emb) AS v,
-       |        generate_subscripts(e2.emb, 1) AS dim
-       |       FROM e e2 JOIN kasn0 a ON e2.vec_id = a.vec_id),
-       |kcent1 AS (SELECT cluster, list(cv ORDER BY dim) AS centroid FROM
-       |  (SELECT cluster, dim, avg(v) AS cv FROM kd1 GROUP BY cluster, dim) g
-       |  GROUP BY cluster),
-       |cents AS (SELECT cluster AS cent_id, centroid AS cent_emb FROM kcent1),
-       |csc AS (
-       |  SELECT e.vec_id, e.emb, c.cent_id, c.cent_emb,
-       |   row_number() OVER (PARTITION BY e.vec_id
-       |     ORDER BY ${cosSql("e.emb", "c.cent_emb")} DESC, c.cent_id ASC) AS rn
-       |  FROM e CROSS JOIN cents c),
-       |cellsfull AS (SELECT vec_id, cent_id, cent_emb, emb
-       |              FROM csc WHERE rn = 1),
-       |resid AS (SELECT vec_id, cent_id,
-       |           list_transform(generate_series(1, 64),
-       |             i -> emb[i] - cent_emb[i]) AS emb
-       |          FROM cellsfull),
-       |sub AS (SELECT vec_id, s, emb[(s*8+1):(s*8+8)] AS sub
-       |        FROM resid, unnest(generate_series(0, 7)) AS t(s)),
-       |a0 AS (SELECT vec_id, s, vec_id % 16 AS code FROM sub),
-       |c1 AS (${centFrom("a0")}),
-       |d1 AS (${assignFrom("c1")}),
-       |a1 AS (SELECT vec_id, s, code FROM d1 WHERE rn = 1),
-       |c2 AS (${centFrom("a1")}),
-       |d2 AS (${assignFrom("c2")}),
-       |a2 AS (SELECT vec_id, s, code FROM d2 WHERE rn = 1),
-       |probes AS (SELECT vec_id AS query_id, cent_id,
-       |            list_transform(generate_series(1, 64),
-       |              i -> emb[i] - cent_emb[i]) AS q_res
-       |           FROM csc WHERE vec_id < 10 AND rn <= 3),
-       |qsub AS (SELECT query_id, cent_id, s,
-       |          q_res[(s*8+1):(s*8+8)] AS sub
-       |         FROM probes, unnest(generate_series(0, 7)) AS t(s)),
-       |qt AS (SELECT qsub.query_id, qsub.cent_id, qsub.s, c2.code,
-       |        ${l2sqSql("qsub.sub", "c2.cent", 8)} AS d
-       |       FROM qsub JOIN c2 ON qsub.s = c2.s),
-       |cand AS (SELECT p.query_id, c.vec_id, c.cent_id
-       |         FROM cellsfull c JOIN probes p USING (cent_id)
-       |         WHERE c.vec_id <> p.query_id),
-       |sc AS (SELECT cand.query_id, cand.vec_id, a2.s, qt.d
-       |       FROM cand JOIN a2 ON cand.vec_id = a2.vec_id
-       |       JOIN qt ON qt.query_id = cand.query_id
-       |         AND qt.cent_id = cand.cent_id
-       |         AND qt.s = a2.s AND qt.code = a2.code),
-       |ad AS (SELECT query_id, vec_id,
-       |        list_reduce(list_prepend(0.0, list(d ORDER BY s)),
-       |          (acc, x) -> acc + x) AS adc
-       |       FROM sc GROUP BY query_id, vec_id),
-       |r AS (SELECT query_id, vec_id AS nbr_id, adc,
-       |       CAST(row_number() OVER (PARTITION BY query_id
-       |         ORDER BY adc ASC, vec_id ASC) AS INT) AS rank FROM ad)
-       |SELECT query_id, nbr_id, round(adc, 4) AS adc, rank
-       |FROM r WHERE rank <= 5""".stripMargin
-  }
-
-  /** PQ reconstruction-MSE replay: the [[pqAdcOracleSql]] Lloyd chain
-    * (sub → a0 → c1 → a1 → c2 → a2), then avg l2sq between each
-    * subvector and its assigned final centroid. */
-  private lazy val pqDistortionOracleSql: String = {
-    def centFrom(assigned: String) =
-      s"""SELECT s, code, list(cv ORDER BY dim) AS cent FROM (
-         |   SELECT u.s AS s, u.code AS code, u.dim AS dim, avg(u.v) AS cv FROM (
-         |     SELECT sub.s, a.code, unnest(sub.sub) AS v,
-         |            generate_subscripts(sub.sub, 1) AS dim
-         |     FROM sub JOIN $assigned a USING (vec_id, s)) u
-         |   GROUP BY s, code, dim) g
-         | GROUP BY s, code""".stripMargin
-    def assignFrom(cent: String) =
-      s"""SELECT sub.vec_id, sub.s, $cent.code,
-         |  row_number() OVER (PARTITION BY sub.vec_id, sub.s
-         |    ORDER BY ${l2sqSql("sub.sub", s"$cent.cent", 8)} ASC,
-         |             $cent.code ASC) AS rn
-         | FROM sub JOIN $cent ON sub.s = $cent.s""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-       |           FROM embeddings),
-       |sub AS (SELECT vec_id, s, emb[(s*8+1):(s*8+8)] AS sub
-       |        FROM e, unnest(generate_series(0, 7)) AS t(s)),
-       |a0 AS (SELECT vec_id, s, vec_id % 16 AS code FROM sub),
-       |c1 AS (${centFrom("a0")}),
-       |d1 AS (${assignFrom("c1")}),
-       |a1 AS (SELECT vec_id, s, code FROM d1 WHERE rn = 1),
-       |c2 AS (${centFrom("a1")}),
-       |d2 AS (${assignFrom("c2")}),
-       |a2 AS (SELECT vec_id, s, code FROM d2 WHERE rn = 1),
-       |dist AS (SELECT a2.s AS s, ${l2sqSql("sub.sub", "c2.cent", 8)} AS dd
-       |         FROM sub JOIN a2 USING (vec_id, s)
-       |         JOIN c2 ON c2.s = a2.s AND c2.code = a2.code)
-       |SELECT s, CAST(count(*) AS BIGINT) AS n_vecs,
-       | round(avg(dd), 6) AS mse
-       |FROM dist GROUP BY s""".stripMargin
-  }
-
-  /** Corpus-wide k-NN-graph replay (SimilarityOps.knnGraph): the
-    * annIvfSql chain with every vector as a query, parameterized by the
-    * coarse-cell pick. Gates `embed_knn_graph` (fixed 16 cells) and
-    * `embed_knn_graph_auto` (⌈√N⌉ cells recomputed in SQL — the
-    * knnGraphAuto law is part of the gate), and feeds the two
-    * `embed_ood*` rank-ordered folds. */
-  private def knnGraphSqlFor(centsCte: String): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-       |           FROM embeddings),
-       |$centsCte,
-       |cscore AS MATERIALIZED (
-       |  SELECT e.vec_id, e.emb, c.cent_id,
-       |   ${cosSql("e.emb", "c.cent_emb")} AS csim
-       |  FROM e CROSS JOIN cents c),
-       |ranked AS (
-       |  SELECT vec_id, emb, cent_id,
-       |   row_number() OVER (PARTITION BY vec_id
-       |     ORDER BY csim DESC, cent_id ASC) AS crank
-       |  FROM cscore),
-       |cells AS (SELECT vec_id AS nbr_id, emb AS nbr_emb, cent_id
-       |          FROM ranked WHERE crank = 1),
-       |probes AS (SELECT vec_id AS query_id, emb AS q_emb, cent_id
-       |           FROM ranked WHERE crank <= 3),
-       |scored AS (
-       |  SELECT p.query_id, n.nbr_id,
-       |   ${cosSql("p.q_emb", "n.nbr_emb")} AS sim
-       |  FROM cells n JOIN probes p USING (cent_id)
-       |  WHERE n.nbr_id <> p.query_id),
-       |r AS (
-       |  SELECT query_id, nbr_id, sim,
-       |   CAST(row_number() OVER (PARTITION BY query_id
-       |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)
-       |SELECT query_id AS vec_id, nbr_id, round(sim, 4) AS sim, rank
-       |FROM r WHERE rank <= 5""".stripMargin
-
-  private lazy val knnGraphSql: String = knnGraphSqlFor(
-    s"""cents AS (
-       |  SELECT vec_id AS cent_id, emb AS cent_emb FROM e
-       |  ORDER BY ${hash32Sql("(vec_id + 1)")}, vec_id LIMIT 16)""".stripMargin)
-
-  /** ⌈√N⌉ cells, recomputed in SQL from the corpus count — the
-    * knnGraphAuto scale law replayed as a row_number cut over the same
-    * deterministic hash order ivfCentroids uses. */
-  private lazy val knnGraphAutoSql: String = knnGraphSqlFor(
-    s"""cnt AS (SELECT greatest(CAST(ceil(sqrt(count(*))) AS BIGINT),
-       |  1) AS kk FROM e),
-       |cents AS (
-       |  SELECT vec_id AS cent_id, emb AS cent_emb FROM (
-       |    SELECT vec_id, emb, row_number() OVER (
-       |      ORDER BY ${hash32Sql("(vec_id + 1)")}, vec_id) AS hrn
-       |    FROM e) h, cnt
-       |  WHERE hrn <= kk)""".stripMargin)
-
-  /** The brute-force / IVF / LSH oracle chains as vals: each gates its
-    * own query AND feeds the recall harness ([[annRecallSql]]) as a
-    * subquery, so both gates replay literally identical SQL. */
-  /** Block-mean resize oracle chain (the per-character pixel replay of
-    * the native block_means kernel, codepoint luminance, integer-mean
-    * cells) — gates `mm_resize` and feeds the tone rollup
-    * (`mm_tone_profile`). */
-  private lazy val blockMeansSql: String =
-    """WITH p AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS len,
-      |    list_transform(regexp_split_to_array(text, ''),
-      |      c -> CAST(unicode(c) AS BIGINT)) AS px
-      |  FROM documents WHERE length(text) > 0),
-      |g AS (SELECT doc_id, len, unnest(px) AS v,
-      |       CAST(generate_subscripts(px, 1) - 1 AS BIGINT) AS i
-      |      FROM p)
-      |SELECT doc_id, (i // 64) * 8 // ((len + 63) // 64) AS pr,
-      | (i % 64) // 8 AS pc, CAST(count(*) AS BIGINT) AS n_pix,
-      | CAST(sum(v) AS BIGINT) // count(*) AS mean_gray
-      |FROM g GROUP BY 1, 2, 3""".stripMargin
-
-  /** One BPE pair-count + argmax round over word table `sTab` —
-    * emits CTEs `p_tag` (pair counts) and `b_tag` (the argmax merge
-    * under the exact (count DESC, l, r) order). */
-  private def bpePairsFromSql(sTab: String, tag: String): String =
-    s"""p_$tag AS (
-       |  SELECT pr[1] AS l, pr[2] AS r,
-       |   CAST(sum(cnt) AS BIGINT) AS pair_count
-       |  FROM (SELECT unnest(list_transform(
-       |          generate_series(1, len(syms) - 1),
-       |          i -> [syms[i], syms[i + 1]])) AS pr, cnt
-       |        FROM $sTab WHERE len(syms) >= 2)
-       |  GROUP BY 1, 2),
-       |b_$tag AS (SELECT l, r, pair_count FROM p_$tag
-       |           ORDER BY pair_count DESC, l ASC, r ASC LIMIT 1)"""
-      .stripMargin
-
-  /** The greedy left-to-right non-overlapping merge application fold —
-    * emits CTE `outTab` = `inTab` with merge `bTab` applied (mirrors
-    * TermOps.bpeCore's aggregate fold). */
-  private def bpeMergeFromSql(inTab: String, bTab: String,
-                              outTab: String): String =
-    s"""$outTab AS MATERIALIZED (
-       |  SELECT list_reduce(list_prepend(CAST([] AS VARCHAR[]),
-       |          list_transform(syms, x -> [x])),
-       |         (acc, xw) -> CASE WHEN len(acc) > 0
-       |             AND acc[-1] = b.l AND xw[1] = b.r
-       |           THEN list_append(acc[1:len(acc) - 1], b.l || b.r)
-       |           ELSE list_append(acc, xw[1]) END) AS syms, cnt
-       |  FROM $inTab CROSS JOIN $bTab b)""".stripMargin
-
-  /** The 3-round BPE training chain (word table w, merges b_1..b_3,
-    * applied tables s1/s2) — shared verbatim by the `bpe_train` gate
-    * and the `bpe_apply` audit (which extends it with the final
-    * apply). Emits the CTE list WITHOUT the leading WITH. */
-  private lazy val bpeChainSql: String =
-    s"""w AS MATERIALIZED (
-       |  SELECT regexp_split_to_array(term, '') AS syms,
-       |   CAST(count(*) AS BIGINT) AS cnt
-       |  FROM ($tokensSub) WHERE term <> '' GROUP BY term),
-       |${bpePairsFromSql("w", "1")},
-       |${bpeMergeFromSql("w", "b_1", "s1")},
-       |${bpePairsFromSql("s1", "2")},
-       |${bpeMergeFromSql("s1", "b_2", "s2")},
-       |${bpePairsFromSql("s2", "3")}""".stripMargin
-
-  /** Patch-signature oracle chain (the 2D patch grid with the base-31
-    * fold in HUGEINT, zero-byte corner patches excluded) — gates
-    * `mm_patches` and feeds the image near-dup chain (`mm_neardup`).
-    * Parameterized over the (doc_id, text) relation so
-    * `mm_neardup_eval` can run the identical chain over
-    * documents ∪ the planted image fixtures. */
-  private def patchSigSqlFor(rel: String): String =
-    s"""WITH p AS (
-      |  SELECT doc_id, text,
-      |   CAST(ceil(strlen(text) / 64.0) AS INT) AS rows
-      |  FROM $rel),
-      |g AS (
-      |  SELECT doc_id, text, rows, pr.i AS pr, pc.j AS pc
-      |  FROM p,
-      |   unnest(generate_series(0, CAST(ceil(rows / 8.0) AS INT) - 1)) AS pr(i),
-      |   unnest(generate_series(0, 7)) AS pc(j)),
-      |s AS (
-      |  SELECT doc_id, pr, pc,
-      |   list_reduce(list_prepend('', list_transform(
-      |     generate_series(pr * 8, least(rows, pr * 8 + 8) - 1),
-      |     r -> substr(text, r * 64 + pc * 8 + 1, 8))),
-      |    (acc, x) -> acc || x) AS patch
-      |  FROM g),
-      |h AS (
-      |  SELECT doc_id, pr, pc,
-      |   list_reduce(list_prepend(1125899906842597::HUGEINT,
-      |     list_transform(regexp_split_to_array(patch, ''),
-      |       c -> unicode(c)::HUGEINT)),
-      |     (hh, c) -> (hh * 31 + c) % 18446744073709551616::HUGEINT) AS hv
-      |  FROM s WHERE patch <> '')
-      |SELECT doc_id, CAST(pr AS INT) AS pr, CAST(pc AS INT) AS pc,
-      | CAST(CASE WHEN hv >= 9223372036854775808::HUGEINT
-      |   THEN hv - 18446744073709551616::HUGEINT ELSE hv END AS BIGINT)
-      |   AS patch_sig
-      |FROM h""".stripMargin
-
-  private lazy val patchSigSql: String = patchSigSqlFor("documents")
-
-  /** Banded audio-SimHash near-dup pair chain over documents ∪ the
-    * planted clips (landmark extraction → per-bit ±1 votes → 16-bit
-    * band buckets → exact popcount ≤ 6) — the `mm_audio_neardup`
-    * oracle, nested by `mm_neardup_eval` for the audio leg of the
-    * planted-pair confusion table. */
-  private lazy val audioNearDupSql: String =
-    s"""WITH base AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT * FROM (VALUES
-       |    (9000001, '$audioClipBase'),
-       |    (9000002, '$audioClipShift'),
-       |    (9000003, '$audioClipOther')) v(doc_id, text)),
-       |fr AS (
-       |  SELECT doc_id, text, i AS off
-       |  FROM base, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-       |e AS (
-       |  SELECT doc_id, off,
-       |   list_reduce(list_prepend(0::BIGINT, list_transform(
-       |     regexp_split_to_array(substr(text, off + 1, 16), ''),
-       |     c -> unicode(c)::BIGINT * unicode(c)::BIGINT)),
-       |    (a, b) -> a + b) AS energy
-       |  FROM fr),
-       |pk AS (SELECT doc_id, off, energy,
-       |        lag(energy) OVER (PARTITION BY doc_id ORDER BY off) AS pe,
-       |        lead(energy) OVER (PARTITION BY doc_id ORDER BY off) AS ne
-       |       FROM e),
-       |peaks AS (SELECT doc_id, off, energy FROM pk
-       |          WHERE pe IS NOT NULL AND ne IS NOT NULL
-       |            AND energy > pe AND energy > ne),
-       |l0 AS (SELECT doc_id, off, energy,
-       |        lead(off) OVER (PARTITION BY doc_id ORDER BY off) AS nf,
-       |        lead(energy) OVER (PARTITION BY doc_id ORDER BY off) AS nen
-       |       FROM peaks),
-       |lm AS (SELECT doc_id,
-       |        CAST((nf - off) // 32 AS VARCHAR) || '|' ||
-       |        CAST(energy // 1024 AS VARCHAR) || '|' ||
-       |        CAST(nen // 1024 AS VARCHAR) AS lk
-       |       FROM l0 WHERE nf IS NOT NULL AND (nf - off) // 32 <= 8),
-       |h AS (SELECT doc_id, ${fnvSql("lk")} AS fu FROM lm),
-       |bits AS (
-       |  SELECT doc_id, b,
-       |   sum(CASE WHEN (fu // (1::HUGEINT << b)) % 2 = 1
-       |     THEN 1 ELSE -1 END) AS acc
-       |  FROM h, unnest(generate_series(0, 63)) AS t(b)
-       |  GROUP BY doc_id, b),
-       |nl AS (SELECT doc_id, count(*) AS n_lm FROM h GROUP BY 1),
-       |sigs AS (
-       |  SELECT doc_id,
-       |   sum(CASE WHEN acc > 0 THEN (1::HUGEINT << b) ELSE 0::HUGEINT END)
-       |     AS su
-       |  FROM bits JOIN nl USING (doc_id)
-       |  WHERE n_lm >= 8 GROUP BY doc_id),
-       |sigc AS (
-       |  SELECT doc_id,
-       |   CAST(CASE WHEN su >= 9223372036854775808::HUGEINT
-       |     THEN su - 18446744073709551616::HUGEINT ELSE su END AS BIGINT)
-       |     AS sig,
-       |   CAST(su % 65536 AS BIGINT) AS c0,
-       |   CAST((su // 65536) % 65536 AS BIGINT) AS c1,
-       |   CAST((su // 4294967296) % 65536 AS BIGINT) AS c2,
-       |   CAST((su // 281474976710656) % 65536 AS BIGINT) AS c3
-       |  FROM sigs)
-       |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       | CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
-       |FROM sigc a JOIN sigc b ON a.doc_id < b.doc_id
-       | AND (a.c0 = b.c0 OR a.c1 = b.c1 OR a.c2 = b.c2 OR a.c3 = b.c3)
-       |WHERE bit_count(xor(a.sig, b.sig)) <= 6""".stripMargin
-
-  /** Image patch-overlap near-dup pair chain over a patch-signature
-    * chain (candidates only via shared (position, signature) postings
-    * with the df ≤ 20 hub cut; integer 5·shared ≥ 4·max accept) — the
-    * `mm_neardup` oracle, parameterized over the signature chain so
-    * `mm_neardup_eval` runs the identical tail over
-    * documents ∪ the planted image fixtures. */
-  private def imageNearDupSqlFor(sigSql: String): String =
-    s"""WITH sg AS (SELECT doc_id, pr, pc, patch_sig
-       |            FROM ($sigSql) t),
-       |pdf AS (SELECT pr, pc, patch_sig, count(*) AS sdf
-       |        FROM sg GROUP BY 1, 2, 3),
-       |keyed AS (SELECT sg.doc_id, sg.pr, sg.pc, sg.patch_sig
-       |          FROM sg JOIN pdf ON sg.pr = pdf.pr AND sg.pc = pdf.pc
-       |            AND sg.patch_sig = pdf.patch_sig
-       |          WHERE pdf.sdf <= 20),
-       |cnt AS (SELECT doc_id, count(*) AS n FROM keyed GROUP BY doc_id),
-       |pr2 AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |         count(*) AS n_shared
-       |        FROM keyed a JOIN keyed b ON a.pr = b.pr AND a.pc = b.pc
-       |          AND a.patch_sig = b.patch_sig AND a.doc_id < b.doc_id
-       |        GROUP BY 1, 2)
-       |SELECT doc_a, doc_b, CAST(n_shared AS BIGINT) AS n_shared,
-       | CAST(ca.n AS BIGINT) AS n_a, CAST(cb.n AS BIGINT) AS n_b,
-       | round(CAST(n_shared AS DOUBLE) / greatest(ca.n, cb.n), 6)
-       |   AS overlap_frac
-       |FROM pr2 JOIN cnt ca ON pr2.doc_a = ca.doc_id
-       |JOIN cnt cb ON pr2.doc_b = cb.doc_id
-       |WHERE n_shared * 5 >= greatest(ca.n, cb.n) * 4""".stripMargin
-
-  /** aHash replay over any (doc_id, text) relation — the
-    * `MultimodalOps.avgHash64` chain: per-block integer sums, the
-    * cross-multiplied mean compare, and the bit fold in HUGEINT
-    * wrapped to the signed BIGINT Spark emits. Gates `mm_phash` and
-    * feeds `mm_phash_neardup`'s banded join. */
-  private def phashSqlFor(rel: String): String =
-    s"""WITH php AS (SELECT doc_id, text,
-       |         CAST(length(text) AS BIGINT) AS len
-       |        FROM $rel WHERE length(text) > 0),
-       |phc AS (SELECT doc_id, len,
-       |       list_transform(regexp_split_to_array(text, ''),
-       |         ch -> CAST(unicode(ch) AS BIGINT)) AS cs
-       |      FROM php),
-       |pht AS (SELECT doc_id, len, cs,
-       |       list_reduce(list_prepend(CAST(0 AS BIGINT), cs),
-       |         (a, x) -> a + x) AS stot
-       |      FROM phc),
-       |phb AS (SELECT doc_id, len,
-       |       list_reduce(list_prepend(CAST(0 AS HUGEINT),
-       |        list_transform(generate_series(0, 63), b ->
-       |         CASE WHEN
-       |          list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |            cs[(b * len // 64 + 1):((b + 1) * len // 64)]),
-       |           (a, x) -> a + x) * len >
-       |          stot * ((b + 1) * len // 64 - b * len // 64)
-       |         THEN (CAST(1 AS HUGEINT) << b)
-       |         ELSE CAST(0 AS HUGEINT) END)),
-       |        (a, x) -> a + x) AS hv
-       |      FROM pht)
-       |SELECT doc_id, len AS n_pix,
-       | CAST(CASE WHEN hv >= 9223372036854775808::HUGEINT
-       |   THEN hv - 18446744073709551616::HUGEINT ELSE hv END AS BIGINT)
-       |   AS phash
-       |FROM phb""".stripMargin
-
-  /** Feature-hash oracle chain (the hashing trick replayed: bucket =
-    * low 8 hash bits, sign = bit 8, exact integer weight sums) — gates
-    * `a16_feature_hash` and feeds `curate_classifier`; `docFilter` is a
-    * WHERE clause ('' = whole corpus). */
-  private def featureHashSql(docFilter: String): String =
-    s"""WITH tf AS (
-       |  SELECT doc_id, term, count(*) AS tf FROM (
-       |    SELECT doc_id, unnest(list_filter(
-       |      regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')) AS term
-       |    FROM documents $docFilter)
-       |  GROUP BY doc_id, term),
-       |h AS (SELECT doc_id, tf, ${fnvSql("term")} AS h FROM tf),
-       |b AS (
-       |  SELECT doc_id, CAST(h % 256 AS INT) AS bucket,
-       |   CASE WHEN (h // 256) % 2 = 1 THEN tf ELSE -tf END AS w
-       |  FROM h)
-       |SELECT doc_id, bucket, CAST(sum(w) AS BIGINT) AS weight
-       |FROM b GROUP BY doc_id, bucket""".stripMargin
-
-  /** Smoothed bigram-surprisal oracle chain — gates `text_perplexity`
-    * and feeds `curate_ccnet` as a nested relation, so both replay
-    * literally identical SQL. */
-  private lazy val surprisalSql: String =
-    s"""WITH arrs AS (SELECT doc_id,
-       |  list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS a
-       |  FROM documents),
-       |bgs AS (SELECT doc_id, bg, count(*) AS n,
-       |         string_split(bg, ' ')[1] AS w1 FROM
-       |  (SELECT doc_id, unnest(list_transform(generate_series(1, len(a) - 1),
-       |     i -> a[i] || ' ' || a[i+1])) AS bg
-       |   FROM arrs WHERE len(a) >= 2) x GROUP BY doc_id, bg),
-       |c2 AS (SELECT bg, CAST(sum(n) AS BIGINT) AS c2 FROM bgs GROUP BY bg),
-       |c1 AS (SELECT w1, CAST(sum(n) AS BIGINT) AS c1 FROM bgs GROUP BY w1),
-       |vv AS (SELECT count(DISTINCT term) AS v FROM ($tokensSub) z
-       |       WHERE term <> '')
-       |SELECT doc_id, count(*) AS n_distinct_bg,
-       | round(sum(n * -ln((c2.c2 + 0.5)/(c1.c1 + 0.5*vv.v))) /
-       |   CAST(sum(n) AS DOUBLE), 4) AS mean_bg_surprisal
-       |FROM bgs JOIN c2 USING (bg) JOIN c1 USING (w1) CROSS JOIN vv
-       |GROUP BY doc_id""".stripMargin
-
-  /** Two-round label-propagation oracle chain — gates `graph_label_prop`
-    * and feeds `graph_modularity` as a nested relation, so both replay
-    * literally identical SQL. */
-  private lazy val labelPropSql: String =
-    """WITH e AS (
-      |  SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
-      |sup AS (SELECT s_suppkey AS src, s_nationkey AS label FROM supplier),
-      |p1 AS (
-      |  SELECT dst, label, count(*) AS cnt
-      |  FROM e JOIN sup USING (src) GROUP BY dst, label),
-      |pl AS (
-      |  SELECT dst, label FROM (
-      |   SELECT dst, label, row_number() OVER (PARTITION BY dst
-      |     ORDER BY cnt DESC, label) AS rn FROM p1) WHERE rn = 1),
-      |s1 AS (
-      |  SELECT src, pl.label, count(*) AS cnt
-      |  FROM e JOIN pl USING (dst) GROUP BY src, pl.label),
-      |sl AS (
-      |  SELECT src, label FROM (
-      |   SELECT src, label, row_number() OVER (PARTITION BY src
-      |     ORDER BY cnt DESC, label) AS rn FROM s1) WHERE rn = 1)
-      |SELECT 'part' AS node_type, dst AS node_id, label FROM pl
-      |UNION ALL
-      |SELECT 'supplier' AS node_type, src AS node_id, label FROM sl""".stripMargin
-
-  /** Gopher hard-rule oracle chain — gates `text_gopher_rules` and
-    * feeds `stats_cohen_kappa` (judge A) as a nested relation, so both
-    * replay literally identical SQL. Every rule is an integer
-    * cross-multiplied compare — no float boundary anywhere. */
-  private lazy val gopherSql: String =
-    """WITH b AS (
-      | SELECT doc_id,
-      |  list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |    x -> x <> '') AS tk,
-      |  string_split(text, chr(10)) AS ln, text AS t
-      | FROM documents),
-      |m AS (
-      | SELECT doc_id,
-      |  CAST(len(tk) AS BIGINT) AS n_words,
-      |  CAST(coalesce(list_sum(list_transform(tk, x -> length(x))), 0)
-      |    AS BIGINT) AS sum_len,
-      |  CAST(length(t) - length(replace(t, '#', '')) AS BIGINT) AS n_hash,
-      |  CAST(length(t) - length(replace(t, '...', '')) AS BIGINT) // 3
-      |    AS n_ell,
-      |  CAST(len(ln) AS BIGINT) AS n_lines,
-      |  CAST(len(list_filter(ln, x -> x LIKE '- %' OR x LIKE '* %'))
-      |    AS BIGINT) AS n_bullet,
-      |  CAST(len(list_filter(ln, x -> x LIKE '%...')) AS BIGINT) AS n_ellend,
-      |  CAST(len(list_filter(tk, x -> regexp_matches(x, '[a-z]')))
-      |    AS BIGINT) AS n_alpha,
-      |  CAST((CASE WHEN list_contains(tk, 'the') THEN 1 ELSE 0 END)
-      |   + (CASE WHEN list_contains(tk, 'a') THEN 1 ELSE 0 END)
-      |   + (CASE WHEN list_contains(tk, 'in') THEN 1 ELSE 0 END)
-      |   + (CASE WHEN list_contains(tk, 'is') THEN 1 ELSE 0 END)
-      |   + (CASE WHEN list_contains(tk, 'and') THEN 1 ELSE 0 END)
-      |   + (CASE WHEN list_contains(tk, 'of') THEN 1 ELSE 0 END)
-      |   + (CASE WHEN list_contains(tk, 'to') THEN 1 ELSE 0 END)
-      |   + (CASE WHEN list_contains(tk, 'with') THEN 1 ELSE 0 END)
-      |   AS BIGINT) AS n_stop
-      | FROM b),
-      |r AS (
-      | SELECT doc_id, n_words, n_lines,
-      |  (n_words >= 50 AND n_words <= 100000) AS r_word_count,
-      |  (3 * n_words <= sum_len AND sum_len <= 10 * n_words) AS r_mean_len,
-      |  (10 * (n_hash + n_ell) <= n_words) AS r_symbol,
-      |  (10 * n_bullet <= 9 * n_lines) AS r_bullet,
-      |  (10 * n_ellend <= 3 * n_lines) AS r_ellipsis,
-      |  (5 * n_alpha >= 4 * n_words) AS r_alpha,
-      |  (n_stop >= 2) AS r_stop
-      | FROM m)
-      |SELECT doc_id, n_words, n_lines, r_word_count, r_mean_len, r_symbol,
-      | r_bullet, r_ellipsis, r_alpha, r_stop,
-      | (r_word_count AND r_mean_len AND r_symbol AND r_bullet
-      |  AND r_ellipsis AND r_alpha AND r_stop) AS keep
-      |FROM r""".stripMargin
-
-  /** BM25 oracle chain — gates `search_bm25` and feeds the RRF fusion
-    * ([[oracleSql]] `search_rrf`) as a CTE, so both replay literally
-    * identical SQL. */
-  private lazy val bm25Sql: String = bm25SqlFor(Seq("scan", "join", "merge"))
-
-  /** [[bm25Sql]] parameterized by the query-term set — `search_maxscore`
-    * gates the MaxScore-pruned engine path against the SAME exact
-    * full-scoring chain on its skewed-df query (the pruning is lossless,
-    * so the oracle is the unpruned law verbatim — the
-    * dedup_jaccard_prefix convention). */
-  private def bm25SqlFor(terms: Seq[String]): String =
-    s"""WITH tf AS (
-       |  SELECT doc_id, term, tf FROM ($tfSub)
-       |  WHERE term IN (${terms.map(t => s"'$t'").mkString(", ")})),
-       |dfs AS (SELECT term, count(*) AS term_df FROM tf GROUP BY term),
-       |dl AS (
-       |  SELECT doc_id, len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-       |    x -> x <> '')) AS doc_len
-       |  FROM documents),
-       |g AS (SELECT count(*) AS n_docs, avg(doc_len) AS avgdl FROM dl),
-       |contrib AS (
-       |  SELECT tf.doc_id,
-       |   ln(1.0 + (g.n_docs - dfs.term_df + 0.5) / (dfs.term_df + 0.5))
-       |     * tf.tf * 2.2
-       |     / (tf.tf + 1.2 * (0.25 + 0.75 * dl.doc_len / g.avgdl)) AS c
-       |  FROM tf JOIN dfs USING (term) JOIN dl ON tf.doc_id = dl.doc_id
-       |  CROSS JOIN g)
-       |SELECT doc_id, round(sum(c), 4) AS score
-       |FROM contrib GROUP BY doc_id
-       |ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin
-
-  private lazy val annBruteSql: String =
-    """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-      |           FROM embeddings WHERE vec_id < 10),
-      |s AS (SELECT query_id, vec_id AS nbr_id,
-      |       list_cosine_similarity(qe, CAST(embedding AS DOUBLE[])) AS sim
-      |      FROM embeddings CROSS JOIN q WHERE vec_id <> query_id),
-      |r AS (SELECT query_id, nbr_id, sim,
-      |       CAST(row_number() OVER (PARTITION BY query_id
-      |         ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM s)
-      |SELECT query_id, nbr_id, round(sim,4) AS sim, rank FROM r WHERE rank <= 5""".stripMargin
-
-  /** Top-5 brute id pairs at an optional prefix-dim truncation — the
-    * [[annBruteSql]] chain parameterized for the matryoshka audit. */
-  private def matryoshkaTopSql(dims: Option[Int]): String = {
-    val v = dims.map(n => s"(CAST(embedding AS DOUBLE[]))[1:$n]")
-      .getOrElse("CAST(embedding AS DOUBLE[])")
-    s"""SELECT query_id, nbr_id FROM (
-       |WITH q AS (SELECT vec_id AS query_id, $v AS qe
-       |           FROM embeddings WHERE vec_id < 10),
-       |s AS (SELECT query_id, vec_id AS nbr_id,
-       |       list_cosine_similarity(qe, $v) AS sim
-       |      FROM embeddings CROSS JOIN q WHERE vec_id <> query_id),
-       |r AS (SELECT query_id, nbr_id, sim,
-       |       row_number() OVER (PARTITION BY query_id
-       |         ORDER BY sim DESC, nbr_id ASC) AS rank FROM s)
-       |SELECT query_id, nbr_id FROM r WHERE rank <= 5)""".stripMargin
-  }
-
-  /** The IVF chain with a parameterized probe count — `annIvfSql` is
-    * the nProbe = 3 instance (the gated operator); the nprobe-curve
-    * oracle nests the 1/2/4 instances against the same brute truth. */
-  private def annIvfSqlFor(nProbe: Int): String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       |cents AS (
-       |  SELECT vec_id AS cent_id, emb AS cent_emb FROM e
-       |  ORDER BY ${hash32Sql("(vec_id + 1)")}, vec_id LIMIT 16),
-       |cscore AS (
-       |  SELECT e.vec_id, e.emb, c.cent_id,
-       |   ${cosSql("e.emb", "c.cent_emb")} AS csim
-       |  FROM e CROSS JOIN cents c),
-       |ranked AS (
-       |  SELECT vec_id, emb, cent_id,
-       |   row_number() OVER (PARTITION BY vec_id
-       |     ORDER BY csim DESC, cent_id ASC) AS crank
-       |  FROM cscore),
-       |cells AS (SELECT vec_id AS nbr_id, emb AS nbr_emb, cent_id
-       |          FROM ranked WHERE crank = 1),
-       |probes AS (SELECT vec_id AS query_id, emb AS q_emb, cent_id
-       |           FROM ranked WHERE vec_id < 10 AND crank <= $nProbe),
-       |scored AS (
-       |  SELECT p.query_id, n.nbr_id,
-       |   ${cosSql("p.q_emb", "n.nbr_emb")} AS sim
-       |  FROM cells n JOIN probes p USING (cent_id)
-       |  WHERE n.nbr_id <> p.query_id),
-       |r AS (
-       |  SELECT query_id, nbr_id, sim,
-       |   CAST(row_number() OVER (PARTITION BY query_id
-       |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)
-       |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank FROM r
-       |WHERE rank <= 5""".stripMargin
-
-  private lazy val annIvfSql: String = annIvfSqlFor(3)
-
-  private lazy val annLshSql: String =
-    s"""WITH $lshSigSub,
-       |qsig AS (
-       |  SELECT e.vec_id AS query_id, e.emb AS q_emb,
-       |   CASE WHEN b = -1 THEN s.bucket
-       |        ELSE xor(s.bucket, 1::BIGINT << b) END AS bucket
-       |  FROM e JOIN sig s USING (vec_id),
-       |       unnest(generate_series(-1, 3)) AS t(b)
-       |  WHERE e.vec_id < 10),
-       |cand AS (
-       |  SELECT q.query_id, q.q_emb, ce.vec_id AS nbr_id, ce.emb AS nbr_emb
-       |  FROM qsig q JOIN sig c ON q.bucket = c.bucket
-       |       JOIN e ce ON ce.vec_id = c.vec_id
-       |  WHERE c.vec_id <> q.query_id),
-       |scored AS (
-       |  SELECT query_id, nbr_id, ${cosSql("q_emb", "nbr_emb")} AS sim FROM cand),
-       |r AS (
-       |  SELECT query_id, nbr_id, sim,
-       |   CAST(row_number() OVER (PARTITION BY query_id
-       |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)
-       |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank FROM r
-       |WHERE rank <= 5""".stripMargin
-
-  /** Recall@5 per pruned ANN path vs the brute-force truth: each path's
-    * full oracle SQL runs as a subquery (DuckDB allows CTEs inside
-    * derived tables), the (query_id, nbr_id) sets intersect, and
-    * recall = hits / (10 queries × k=5). */
-  /** SQ8 oracle chain: per-dim envelope as dim-ordered lists, the same
-    * quantize → midpoint-reconstruct chain inside an index lambda
-    * (every float literal ::DOUBLE — bare decimals parse as DECIMAL),
-    * then the ordered-fold cosine. Gates `ann_sq_topk` and feeds the
-    * recall harness. */
-  private lazy val annSqSql: String =
-    s"""WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-       |            FROM embeddings),
-       |dimstat AS (
-       |  SELECT i, min(e[i]) AS mn, max(e[i]) AS mx
-       |  FROM emb, unnest(generate_series(1, 64)) AS t(i) GROUP BY i),
-       |st AS (SELECT list(mn ORDER BY i) AS mns,
-       |        list(mx ORDER BY i) AS mxs FROM dimstat),
-       |rec AS (
-       |  SELECT vec_id AS nbr_id,
-       |   list_transform(e, (x, i) -> CASE WHEN mxs[i] = mns[i] THEN mns[i]
-       |     ELSE mns[i] + (least(255.0::DOUBLE, greatest(0.0::DOUBLE,
-       |       floor((x - mns[i]) * 255.0::DOUBLE / (mxs[i] - mns[i]))))
-       |       + 0.5::DOUBLE) * (mxs[i] - mns[i]) / 256.0::DOUBLE END) AS re
-       |  FROM emb, st),
-       |q AS (SELECT vec_id AS query_id, e AS qe FROM emb
-       |      WHERE vec_id < 10),
-       |sc AS (SELECT query_id, nbr_id, ${cosSql("qe", "re")} AS sim
-       |       FROM rec CROSS JOIN q WHERE nbr_id <> query_id),
-       |r AS (SELECT query_id, nbr_id, sim,
-       |       CAST(row_number() OVER (PARTITION BY query_id
-       |         ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM sc)
-       |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank FROM r
-       |WHERE rank <= 5""".stripMargin
-
-  /** Two-stage refine replay: PQ/ADC shortlist at k=20, exact cosine
-    * over the candidate pairs only, re-ranked to top-5. Gates
-    * `ann_rerank` and the recall harness's `rerank` row. */
-  private lazy val annRerankSql: String =
-    s"""WITH cand AS (
-       |  SELECT query_id, nbr_id FROM (${pqAdcOracleSql(ivfPruned = false, k = 20)}) c),
-       |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-       |      FROM embeddings),
-       |sc AS (SELECT c.query_id, c.nbr_id,
-       |        ${cosSql("qe.emb", "ne.emb")} AS sim
-       |       FROM cand c JOIN e qe ON qe.vec_id = c.query_id
-       |            JOIN e ne ON ne.vec_id = c.nbr_id),
-       |r AS (SELECT query_id, nbr_id, sim,
-       |       CAST(row_number() OVER (PARTITION BY query_id
-       |         ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM sc)
-       |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank FROM r
-       |WHERE rank <= 5""".stripMargin
-
-  /** Binary-quantization replay (SimilarityOps.bqTopK): sign mask
-    * folded in HUGEINT then wrapped to the signed BIGINT Spark holds
-    * (the patchSigSql convention — BIGINT << 63 overflows, probed);
-    * hamming = bit_count(xor), integer-exact everywhere; exact-cosine
-    * re-rank of the top-20. Gates `ann_bq_topk` and feeds the recall
-    * harness's bq leg. */
-  private lazy val annBqSql: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-       |           FROM embeddings),
-       |sg AS MATERIALIZED (SELECT vec_id, emb,
-       |   CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
-       |        THEN h - 18446744073709551616::HUGEINT ELSE h END
-       |     AS BIGINT) AS sig
-       |  FROM (SELECT vec_id, emb,
-       |     list_reduce(list_prepend(0::HUGEINT,
-       |       list_transform(generate_series(0, 63),
-       |         i -> CASE WHEN emb[i + 1] > 0.0::DOUBLE
-       |              THEN (1::HUGEINT << i) ELSE 0::HUGEINT END)),
-       |       (acc, x) -> acc + x) AS h
-       |    FROM e) t),
-       |q AS (SELECT vec_id AS query_id, sig AS q_sig, emb AS q_emb
-       |      FROM sg WHERE vec_id < 10),
-       |sh AS (SELECT q.query_id, s.vec_id AS nbr_id, s.emb AS nbr_emb,
-       |   row_number() OVER (PARTITION BY q.query_id
-       |     ORDER BY bit_count(xor(s.sig, q.q_sig)) ASC,
-       |              s.vec_id ASC) AS hrank
-       |  FROM sg s CROSS JOIN q WHERE s.vec_id <> q.query_id),
-       |r AS (SELECT sh.query_id, sh.nbr_id,
-       |   ${cosSql("sh.nbr_emb", "q.q_emb")} AS sim
-       |  FROM sh JOIN q USING (query_id) WHERE sh.hrank <= 20),
-       |f AS (SELECT query_id, nbr_id, sim,
-       |   CAST(row_number() OVER (PARTITION BY query_id
-       |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM r)
-       |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank
-       |FROM f WHERE rank <= 5""".stripMargin
-
-  private lazy val annRecallSql: String = {
-    def ids(sql: String) = s"SELECT query_id, nbr_id FROM (\n$sql\n) pp"
-    def row(name: String, sql: String) =
-      s"""SELECT '$name' AS path,
-         | (SELECT count(*) FROM (${ids(sql)}) p
-         |    JOIN (${ids(annBruteSql)}) b USING (query_id, nbr_id)) AS n_hits""".stripMargin
-    val rows = Seq(
-      "ivf" -> annIvfSql, "lsh" -> annLshSql, "sq" -> annSqSql,
-      "pq" -> pqAdcOracleSql(ivfPruned = false),
-      "ivfpq" -> pqAdcOracleSql(ivfPruned = true),
-      "ivfpq_res" -> pqResidualOracleSql,
-      "bq" -> annBqSql,
-      "rerank" -> annRerankSql)
-      .map { case (n, q) => row(n, q) }.mkString("\nUNION ALL\n")
-    s"""SELECT path, n_hits, round(n_hits / 50.0, 4) AS recall_at_5
-       |FROM (\n$rows\n) u""".stripMargin
-  }
-
-  /** Mirrors `SimilarityOps.cosine` op-for-op (sequential left-fold dot and
-    * norms over 64-dim double arrays, then dot/(na*nb)) so DuckDB produces
-    * bit-identical doubles. */
-  /** The SemDeDup oracle chain (2-round Lloyd replay over embeddings ∪
-    * planted near-dups, then within-cluster cosine pruning) with the
-    * cluster count `kSql` as a SQL scalar expression — "8" replays the
-    * pinned-k query, a ⌈√N⌉ subquery over `base` replays the adaptive
-    * default (so k-agreement between the engines is itself gated). */
-  /** The deterministic SemDeDup training prologue (planted-union base,
-    * 2-round Lloyd at `kSql` clusters, final assignment `asn` +
-    * centroids `cent1`) — shared by [[semDedupSql]] and the two-level
-    * approx-assignment audit ([[semDedupApproxSql]]). cent0/cent1/asn
-    * are MATERIALIZED: the approx chain references cent1 five times
-    * (the graph_ktruss re-expansion lesson). */
-  private def semDedupCtes(kSql: String): String =
-    s"""base AS MATERIALIZED (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-       |  UNION ALL
-       |  SELECT 9000000 + j AS vec_id,
-       |   list_transform(generate_series(0, 63), i -> CAST(
-       |     CASE WHEN j <= 2 THEN i + 1
-       |          WHEN j <= 4 THEN (i * 37) % 64 + 1
-       |          ELSE (i * 11) % 64 + 1 END AS DOUBLE)) AS emb
-       |  FROM unnest(generate_series(1, 5)) AS t(j)),
-       |d0 AS (SELECT vec_id % $kSql AS cluster, unnest(emb) AS v,
-       |        generate_subscripts(emb, 1) AS dim FROM base),
-       |cent0 AS MATERIALIZED (SELECT cluster, list(cv ORDER BY dim) AS centroid FROM
-       |  (SELECT cluster, dim, avg(v) AS cv FROM d0 GROUP BY cluster, dim) g
-       |  GROUP BY cluster),
-       |a0 AS (SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id
-       |        ORDER BY list_cosine_similarity(emb, centroid) DESC, cluster ASC) AS rn
-       |       FROM base CROSS JOIN cent0),
-       |asn0 AS (SELECT vec_id, cluster FROM a0 WHERE rn = 1),
-       |d1 AS (SELECT a.cluster, unnest(e.emb) AS v, generate_subscripts(e.emb, 1) AS dim
-       |       FROM base e JOIN asn0 a ON e.vec_id = a.vec_id),
-       |cent1 AS MATERIALIZED (SELECT cluster, list(cv ORDER BY dim) AS centroid FROM
-       |  (SELECT cluster, dim, avg(v) AS cv FROM d1 GROUP BY cluster, dim) g
-       |  GROUP BY cluster),
-       |a1 AS (SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id
-       |        ORDER BY list_cosine_similarity(emb, centroid) DESC, cluster ASC) AS rn
-       |       FROM base CROSS JOIN cent1),
-       |asn AS MATERIALIZED (SELECT vec_id, cluster FROM a1 WHERE rn = 1)""".stripMargin
-
-  private def semDedupSql(kSql: String): String =
-    s"""WITH ${semDedupCtes(kSql)},
-       |v AS (SELECT b.vec_id, b.emb, a.cluster FROM base b JOIN asn a USING (vec_id)),
-       |dropped AS (
-       |  SELECT DISTINCT b.vec_id FROM v a JOIN v b
-       |  ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-       |  WHERE ${cosSql("a.emb", "b.emb")} >= 0.99)
-       |SELECT v.vec_id, CAST(v.cluster AS INT) AS cluster,
-       | (d.vec_id IS NULL) AS keep
-       |FROM v LEFT JOIN dropped d ON v.vec_id = d.vec_id""".stripMargin
-
-  /** Two-level assignment audit replay (ClusterOps.twoLevelAssign over
-    * the semDedup ⌈√N⌉ training): g = ⌈√k⌉ super-cells from mod-g mean
-    * init + one Lloyd refinement over the k centroid rows, vectors
-    * route super → within-cell argmax; agreement + dropped-set recall
-    * compare against the flat-argmax `asn`. Assignment argmaxes use
-    * native list_cosine_similarity (the kmeans convention), threshold
-    * compares use the bit-parity cosine fold (the dropped convention). */
-  private lazy val semDedupApproxSql: String =
-    s"""WITH ${semDedupCtes(
-        "(SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM base)")},
-       |kk AS (SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) AS k FROM base),
-       |gg AS (SELECT greatest(CAST(ceil(sqrt(k)) AS BIGINT), 1) AS g FROM kk),
-       |si AS (SELECT cluster % (SELECT g FROM gg) AS super,
-       |        unnest(centroid) AS v,
-       |        generate_subscripts(centroid, 1) AS dim FROM cent1),
-       |sup0 AS (SELECT super, list(cv ORDER BY dim) AS supc FROM
-       |  (SELECT super, dim, avg(v) AS cv FROM si GROUP BY super, dim) q
-       |  GROUP BY super),
-       |ca0 AS (SELECT cluster, super, row_number() OVER (PARTITION BY cluster
-       |        ORDER BY list_cosine_similarity(centroid, supc) DESC, super ASC) AS rn
-       |       FROM cent1 CROSS JOIN sup0),
-       |cm0 AS (SELECT cluster, super FROM ca0 WHERE rn = 1),
-       |s1 AS (SELECT m.super AS super, unnest(c.centroid) AS v,
-       |        generate_subscripts(c.centroid, 1) AS dim
-       |       FROM cent1 c JOIN cm0 m USING (cluster)),
-       |sup1 AS MATERIALIZED (SELECT super, list(cv ORDER BY dim) AS supc FROM
-       |  (SELECT super, dim, avg(v) AS cv FROM s1 GROUP BY super, dim) q
-       |  GROUP BY super),
-       |ca1 AS (SELECT cluster, super, row_number() OVER (PARTITION BY cluster
-       |        ORDER BY list_cosine_similarity(centroid, supc) DESC, super ASC) AS rn
-       |       FROM cent1 CROSS JOIN sup1),
-       |cmap AS MATERIALIZED (SELECT cluster, super FROM ca1 WHERE rn = 1),
-       |live AS (SELECT sup1.super, sup1.supc FROM sup1
-       |         JOIN (SELECT DISTINCT super FROM cmap) l USING (super)),
-       |vs AS (SELECT b.vec_id, s.super, row_number() OVER (PARTITION BY b.vec_id
-       |        ORDER BY list_cosine_similarity(b.emb, s.supc) DESC, s.super ASC) AS rn
-       |       FROM base b CROSS JOIN live s),
-       |vsup AS (SELECT vec_id, super FROM vs WHERE rn = 1),
-       |fa AS (SELECT b.vec_id, c.cluster, row_number() OVER (PARTITION BY b.vec_id
-       |        ORDER BY list_cosine_similarity(b.emb, c.centroid) DESC, c.cluster ASC) AS rn
-       |       FROM base b JOIN vsup u ON b.vec_id = u.vec_id
-       |       JOIN cmap m ON m.super = u.super
-       |       JOIN cent1 c ON c.cluster = m.cluster),
-       |apx AS MATERIALIZED (SELECT vec_id, cluster FROM fa WHERE rn = 1),
-       |vE AS (SELECT b.vec_id, b.emb, a.cluster
-       |       FROM base b JOIN asn a USING (vec_id)),
-       |dE AS MATERIALIZED (
-       |  SELECT DISTINCT y.vec_id FROM vE x JOIN vE y
-       |  ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-       |  WHERE ${cosSql("x.emb", "y.emb")} >= 0.99),
-       |vA AS (SELECT b.vec_id, b.emb, a.cluster
-       |       FROM base b JOIN apx a USING (vec_id)),
-       |dA AS MATERIALIZED (
-       |  SELECT DISTINCT y.vec_id FROM vA x JOIN vA y
-       |  ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-       |  WHERE ${cosSql("x.emb", "y.emb")} >= 0.99),
-       |ag AS (SELECT CAST(count(*) AS BIGINT) AS n_vecs,
-       |        CAST(sum(CASE WHEN a.cluster = p.cluster THEN 1 ELSE 0 END)
-       |          AS BIGINT) AS n_agree
-       |       FROM asn a JOIN apx p USING (vec_id))
-       |SELECT ag.n_vecs, CAST(kk.k AS INT) AS k, CAST(gg.g AS INT) AS g,
-       | ag.n_agree,
-       | round(CAST(ag.n_agree AS DOUBLE) / ag.n_vecs, 4) AS agree_frac,
-       | (SELECT CAST(count(*) AS BIGINT) FROM dE) AS n_dropped_exact,
-       | (SELECT CAST(count(*) AS BIGINT) FROM dA) AS n_dropped_approx,
-       | (SELECT CAST(count(*) AS BIGINT)
-       |    FROM dE JOIN dA USING (vec_id)) AS n_dropped_both,
-       | round(CAST((SELECT count(*) FROM dE JOIN dA USING (vec_id)) AS DOUBLE)
-       |   / greatest((SELECT count(*) FROM dE), 1), 4) AS drop_recall
-       |FROM ag, kk, gg""".stripMargin
-
-  /** The deterministic 2-round Lloyd chain (ClusterOps.kmeansModel,
-    * k = 8, sharded init) as a CTE prologue — shared by the
-    * cluster_kmeans gate and cluster_silhouette, which scores the same
-    * final (cent1, asn1) pair. cent0/cent1 are MATERIALIZED so the
-    * silhouette's cross join replays the trained centroids instead of
-    * re-expanding the whole chain per reference. */
-  private lazy val kmeansCtes: String =
-    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      |d0 AS (SELECT vec_id % 8 AS cluster, unnest(emb) AS v,
-      |        generate_subscripts(emb, 1) AS dim FROM e),
-      |cent0 AS MATERIALIZED (SELECT cluster, list(cv ORDER BY dim) AS centroid FROM
-      |  (SELECT cluster, dim, avg(v) AS cv FROM d0 GROUP BY cluster, dim) g
-      |  GROUP BY cluster),
-      |a0 AS (SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id
-      |        ORDER BY list_cosine_similarity(emb, centroid) DESC, cluster ASC) AS rn
-      |       FROM e CROSS JOIN cent0),
-      |asn0 AS (SELECT vec_id, cluster FROM a0 WHERE rn = 1),
-      |d1 AS (SELECT a.cluster, unnest(e.emb) AS v, generate_subscripts(e.emb, 1) AS dim
-      |       FROM e JOIN asn0 a ON e.vec_id = a.vec_id),
-      |cent1 AS MATERIALIZED (SELECT cluster, list(cv ORDER BY dim) AS centroid FROM
-      |  (SELECT cluster, dim, avg(v) AS cv FROM d1 GROUP BY cluster, dim) g
-      |  GROUP BY cluster),
-      |a1 AS (SELECT vec_id, cluster, row_number() OVER (PARTITION BY vec_id
-      |        ORDER BY list_cosine_similarity(emb, centroid) DESC, cluster ASC) AS rn
-      |       FROM e CROSS JOIN cent1),
-      |asn1 AS MATERIALIZED (SELECT vec_id, cluster FROM a1 WHERE rn = 1)""".stripMargin
-
-  private def cosSql(a: String, b: String): String =
-    s"(list_reduce(list_prepend(0.0, list_transform(generate_series(1,64), i -> $a[i] * $b[i])), (acc, x) -> acc + x) / " +
-      s"(sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1,64), i -> $a[i] * $a[i])), (acc, x) -> acc + x)) * " +
-      s"sqrt(list_reduce(list_prepend(0.0, list_transform(generate_series(1,64), i -> $b[i] * $b[i])), (acc, x) -> acc + x))))"
-
-  /** Mirrors `SimilarityOps.hash32` (fold to 32 bits, then
-    * multiply/xorshift/multiply with sub-2^31 constants — all
-    * intermediates < 2^63 → plain BIGINT SQL) for an arbitrary
-    * non-negative key expr. */
-  /** FNV-1a over the ASCII string expression `ks`, as unsigned HUGEINT
-    * (mirrors Hashing.fnv1a / the native fnv64 expression). The xor of a
-    * full FNV state with a byte only ever touches the low 7 bits for
-    * ASCII inputs, so it runs in BIGINT — the dedup_simhash trick. */
-  private def fnvSql(ks: String): String =
-    s"""list_reduce(list_prepend(14695981039346656037::HUGEINT,
-       |   list_transform(regexp_split_to_array($ks, ''), c -> unicode(c)::HUGEINT)),
-       |   (hh, c) -> ((hh - hh % 128 +
-       |     xor(CAST(hh % 128 AS BIGINT), CAST(c AS BIGINT))::HUGEINT)
-       |     * 1099511628211) % 18446744073709551616::HUGEINT)""".stripMargin
-
-  /** The mean-corrected embedding scatter matrix as a WITH prefix
-    * ending in CTE `am` (i, j, aij), with `nn` holding the corpus count
-    * — the oracle twin of `SimilarityOps.scatterMatrix`, shared by the
-    * embed_pca_power and embed_effective_rank oracles. */
-  private lazy val scatterSql: String =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-      |           FROM embeddings),
-      |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM e),
-      |dd AS (SELECT vec_id, generate_subscripts(emb, 1) AS i,
-      |        unnest(emb) AS x FROM e),
-      |m AS (SELECT i, sum(x) / (SELECT n FROM nn) AS mu FROM dd GROUP BY i),
-      |c AS (SELECT a.i AS i, b.i AS j, sum(a.x * b.x) AS sxx
-      |      FROM dd a JOIN dd b USING (vec_id) GROUP BY 1, 2),
-      |am AS (SELECT c.i, c.j,
-      |        sxx - (SELECT n FROM nn) * mi.mu * mj.mu AS aij
-      |       FROM c JOIN m mi ON c.i = mi.i JOIN m mj ON c.j = mj.i)"""
-      .stripMargin
-
-  /** Rank-exact two-sample KS per event type (even vs odd event_ids)
-    * — shared by stats_drift (the monitor) and stats_fdr (the
-    * multiple-testing correction over those monitors). */
-  private lazy val ksDriftSql: String =
-    """WITH cells AS (
-      |  SELECT event_type, value AS v,
-      |   CAST(count(*) FILTER (WHERE event_id % 2 = 0) AS BIGINT) AS ca,
-      |   CAST(count(*) FILTER (WHERE event_id % 2 = 1) AS BIGINT) AS cb
-      |  FROM events GROUP BY 1, 2),
-      |t AS (SELECT event_type, CAST(sum(ca) AS BIGINT) AS n_a,
-      |   CAST(sum(cb) AS BIGINT) AS n_b FROM cells GROUP BY 1),
-      |c AS (SELECT event_type,
-      |   CAST(sum(ca) OVER (PARTITION BY event_type ORDER BY v)
-      |     AS BIGINT) AS cuma,
-      |   CAST(sum(cb) OVER (PARTITION BY event_type ORDER BY v)
-      |     AS BIGINT) AS cumb
-      |  FROM cells)
-      |SELECT c.event_type, t.n_a, t.n_b,
-      | round(max(abs(CAST(cuma AS DOUBLE) / CAST(n_a AS DOUBLE)
-      |   - CAST(cumb AS DOUBLE) / CAST(n_b AS DOUBLE))), 6) AS ks
-      |FROM c JOIN t USING (event_type)
-      |GROUP BY 1, 2, 3""".stripMargin
-
-  /** The hashed-linear logit chain as a WITH prefix ending in CTE `z`
-    * (doc_id, z) — the oracle twin of [[classifierZ]], shared by the
-    * curate_classifier and stats_calibration oracles. */
-  private lazy val classifierZSql: String =
-    s"""WITH w AS (SELECT doc_id, bucket, weight,
-       |       (${hash32Sql("(bucket + 1)")} / 2147483648.0::DOUBLE
-       |         - 1.0::DOUBLE) * weight AS term
-       |      FROM (${featureHashSql("")}) f),
-       |z AS (SELECT doc_id,
-       |       list_reduce(list_prepend(0.0::DOUBLE,
-       |         list(term ORDER BY bucket)), (acc, x) -> acc + x) AS z
-       |      FROM w GROUP BY doc_id)""".stripMargin
-
-  private def hash32Sql(k: String): String = {
-    // (k % m + m) % m = pmod: parity with hash32Col for negative keys too
-    val u0 = s"((($k) % 4294967296 + 4294967296) % 4294967296)"
-    val u1 = s"(($u0 * 1540483477) % 4294967296)"
-    s"((xor($u1, $u1 // 65536) * 1372383749) % 4294967296)"
-  }
-
-  /** The decile-bin reliability/ECE oracle over [[classifierZSql]]'s
-    * sigmoid score, parameterized by the label relation — mirrors
-    * `calibrationEce`; gates `stats_calibration` (lang labels) and
-    * `curate_calibration` (Gopher-gate labels). */
-  private def calibrationSqlFor(labSql: String): String =
-    s"""$classifierZSql,
-       |scored AS (SELECT doc_id,
-       |   round(1.0::DOUBLE / (1.0::DOUBLE + exp(-z)), 4) AS score FROM z),
-       |lab AS ($labSql),
-       |b AS (SELECT least(CAST(floor(score * 10) AS INT), 9) AS bin,
-       |       count(*) AS n, sum(y) AS n_pos,
-       |       sum(CAST(round(score * 10000) AS BIGINT)) AS s4
-       |      FROM scored JOIN lab USING (doc_id) GROUP BY 1),
-       |g AS (SELECT bin, n, n_pos,
-       |       round(CAST(s4 AS DOUBLE) / 10000.0 / n, 6) AS conf,
-       |       round(CAST(n_pos AS DOUBLE) / n, 6) AS acc
-       |      FROM b),
-       |g2 AS (SELECT *, round(abs(acc - conf), 6) AS gap FROM g)
-       |SELECT bin, n, CAST(n_pos AS BIGINT) AS n_pos, conf, acc, gap,
-       | round(CAST(sum(CAST(n AS HUGEINT) *
-       |       CAST(round(gap * 1000000) AS BIGINT))
-       |     OVER () AS DOUBLE) / 1000000.0
-       |   / sum(n) OVER (), 6) AS ece
-       |FROM g2""".stripMargin
-
-  /** Mirrors `SimilarityOps.planeWeight(p, i-1, 64)` for column `p` and
-    * 1-based lambda index `i`. */
-  private val planeWeightSql: String =
-    hash32Sql("(p*64 + i)") + " / 2147483648.0 - 1.0"
-
-  /** The suffix-array replay (dedup_substring's oracle): 4-gram-
-    * partitioned neighbor sort on the token list, mirrored [go, n]
-    * list-state LCP folds. A shared val so dedup_substring_eval can
-    * nest the SAME chain (edit THIS, not copies). */
-  private lazy val suffixDupSql: String =
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
-        |    '\s+'), x -> x <> '') AS tk
-        |  FROM documents),
-        |tkn AS (SELECT doc_id, tk FROM tk WHERE len(tk) > 0),
-        |sfx AS (
-        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-        |   tk[i:least(len(tk), i + 23)] AS arr
-        |  FROM tkn, unnest(generate_series(1, len(tk))) AS g(i)),
-        |s2 AS (
-        |  SELECT doc_id, pos, arr,
-        |   array_to_string(arr[1:least(len(arr), 4)], ' ') AS gkey
-        |  FROM sfx),
-        |nb AS (
-        |  SELECT doc_id, pos, arr,
-        |   lag(arr) OVER w AS pa, lead(arr) OVER w AS na
-        |  FROM s2
-        |  WINDOW w AS (PARTITION BY gkey ORDER BY arr, doc_id, pos)),
-        |lc AS (
-        |  SELECT doc_id,
-        |   greatest(
-        |    CASE WHEN pa IS NULL THEN 0 ELSE
-        |     list_reduce(list_prepend([1::BIGINT, 0::BIGINT],
-        |       list_transform(generate_series(1, least(len(arr), len(pa))),
-        |        j -> [CASE WHEN arr[j] = pa[j] THEN 1::BIGINT
-        |              ELSE 0::BIGINT END, 0::BIGINT])),
-        |      (ac, x) -> CASE WHEN ac[1] = 1 AND x[1] = 1
-        |        THEN [1::BIGINT, ac[2] + 1]
-        |        ELSE [0::BIGINT, ac[2]] END)[2] END,
-        |    CASE WHEN na IS NULL THEN 0 ELSE
-        |     list_reduce(list_prepend([1::BIGINT, 0::BIGINT],
-        |       list_transform(generate_series(1, least(len(arr), len(na))),
-        |        j -> [CASE WHEN arr[j] = na[j] THEN 1::BIGINT
-        |              ELSE 0::BIGINT END, 0::BIGINT])),
-        |      (ac, x) -> CASE WHEN ac[1] = 1 AND x[1] = 1
-        |        THEN [1::BIGINT, ac[2] + 1]
-        |        ELSE [0::BIGINT, ac[2]] END)[2] END) AS dup_len
-        |  FROM nb)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pos,
-        | CAST(max(dup_len) AS BIGINT) AS max_dup_len,
-        | CAST(sum(CASE WHEN dup_len >= 8 THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_dup_pos,
-        | round(CAST(sum(CASE WHEN dup_len >= 8 THEN 1 ELSE 0 END)
-        |   AS DOUBLE) / count(*), 4) AS dup_frac
-        |FROM lc GROUP BY doc_id""".stripMargin
-
-  /** The bottom-1 window-MinHash replay (dedup_substring_approx's
-    * oracle): strided windows, min over the 13 in-window 4-gram fnv
-    * hashes wrapped to SIGNED BIGINT before the min, dedup_spans-
-    * style frequency join. Shared with dedup_substring_eval. */
-  private lazy val windowMinhashSql: String =
-      s"""WITH arrs AS (
-         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
-         |    '\\s+'), x -> x <> '') AS a
-         |  FROM documents),
-         |win AS (
-         |  SELECT doc_id, i, a[i:i+15] AS warr
-         |  FROM arrs, unnest(generate_series(1, len(a) - 15, 8)) AS t(i)
-         |  WHERE len(a) >= 16),
-         |gr AS (
-         |  SELECT doc_id, i,
-         |   CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
-         |     THEN h - 18446744073709551616::HUGEINT ELSE h END AS BIGINT)
-         |     AS hs
-         |  FROM (SELECT doc_id, i,
-         |         ${fnvSql("array_to_string(warr[j:j+3], ' ')")} AS h
-         |        FROM win, unnest(generate_series(1, 13)) AS g(j))),
-         |sk AS (SELECT doc_id, i, min(hs) AS mh FROM gr GROUP BY doc_id, i),
-         |pd AS (SELECT doc_id, mh, count(*) AS c FROM sk GROUP BY doc_id, mh),
-         |dup AS (SELECT mh FROM pd GROUP BY mh HAVING sum(c) >= 2)
-         |SELECT pd.doc_id, CAST(sum(c) AS BIGINT) AS n_windows,
-         | CAST(sum(CASE WHEN dup.mh IS NOT NULL THEN c ELSE 0 END)
-         |   AS BIGINT) AS n_dup_windows,
-         | round(sum(CASE WHEN dup.mh IS NOT NULL THEN c ELSE 0 END) * 1.0
-         |   / sum(c), 4) AS dup_ratio
-         |FROM pd LEFT JOIN dup USING (mh)
-         |GROUP BY pd.doc_id""".stripMargin
-
-  /** Hyperplane signature CTEs shared by the LSH oracle: per-plane dots
-    * folded in dimension order exactly like `SimilarityOps.signBits`. */
-  private val lshSigSub: String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       |dots AS (
-       |  SELECT vec_id, p,
-       |   list_reduce(list_prepend(0.0, list_transform(generate_series(1,64),
-       |     i -> emb[i] * ($planeWeightSql))), (acc, x) -> acc + x) AS dot
-       |  FROM e, unnest(generate_series(0, 11)) AS t(p)),
-       |sig AS (
-       |  SELECT vec_id,
-       |   CAST(sum(CASE WHEN dot >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT)
-       |     AS bucket
-       |  FROM dots GROUP BY vec_id)""".stripMargin
-
-  /** [[lshSigSub]] with the plane count derived from the corpus the
-    * way `SimilarityOps.knnGraphLshAuto` derives it — the smallest
-    * p ≥ 4 with 128·2^p ≥ N (integer comparisons only, so both engines
-    * agree exactly); the occupancy law itself is part of the gate.
-    * Plane ids come from `unnest(range(...))` in a SELECT list (the
-    * r10 rule: generate_series can't take lateral parameters). */
-  private val lshSigSubAuto: String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       |cnt AS (SELECT count(*) AS n FROM e),
-       |pl AS (SELECT coalesce(min(p), 20) AS planes
-       |       FROM generate_series(4, 20) g(p), cnt
-       |       WHERE 128 * (1::BIGINT << p) >= cnt.n),
-       |pp AS (SELECT vec_id, emb,
-       |        unnest(range(0, (SELECT planes FROM pl))) AS p FROM e),
-       |dots AS (
-       |  SELECT vec_id, p,
-       |   list_reduce(list_prepend(0.0, list_transform(generate_series(1,64),
-       |     i -> emb[i] * ($planeWeightSql))), (acc, x) -> acc + x) AS dot
-       |  FROM pp),
-       |sig AS (
-       |  SELECT vec_id,
-       |   CAST(sum(CASE WHEN dot >= 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT)
-       |     AS bucket
-       |  FROM dots GROUP BY vec_id)""".stripMargin
-
-  private val tfSub =
-    s"""SELECT doc_id, term, count(*) AS tf FROM ($tokensSub)
-       |WHERE term <> '' GROUP BY doc_id, term""".stripMargin
-
-  /** F17 unicode-analyzer tokenization (letter/digit runs) — mirrors
-    * `TermOps.tokens(_, Unicode)`: both RE2 (DuckDB) and Java regex give
-    * Unicode general-category semantics to \p{L} and \p{N}. */
-  private val tokensUnicodeSub =
-    """SELECT doc_id, unnest(regexp_split_to_array(lower(text),
-      | '[^\p{L}\p{N}]+')) AS term
-      |FROM documents""".stripMargin
-
-  private val tfUnicodeSub =
-    s"""SELECT doc_id, term, count(*) AS tf FROM ($tokensUnicodeSub)
-       |WHERE term <> '' GROUP BY doc_id, term""".stripMargin
-
-  /** Verified MinHash-candidate pairs (exact jaccard ≥ 0.4 on the
-    * uncapped shingle sets) — gates dedup_minhash_cand and feeds the
-    * recall harness (dedup_minhash_eval) as a subquery. */
-  private val minhashVerifiedSql =
-    """WITH arrs AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |    x -> x <> '') AS a
-      |  FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id,
-      |   CASE WHEN len(a) < 3 THEN array_to_string(a, ' ')
-      |        ELSE a[i] || ' ' || a[i+1] || ' ' || a[i+2] END AS sh
-      |  FROM arrs, unnest(generate_series(1, greatest(len(a)-2, 1))) AS t(i)
-      |  WHERE len(a) >= 1),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS ida, b.doc_id AS idb, count(*) AS i
-      |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT ida AS id_a, idb AS id_b,
-      | round(i * 1.0 / (sa.n + sb.n - i), 4) AS jaccard
-      |FROM inter JOIN sizes sa ON ida = sa.doc_id JOIN sizes sb ON idb = sb.doc_id
-      |WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.4
-      |UNION ALL
-      |SELECT a.doc_id AS id_a, b.doc_id AS id_b, 1.0 AS jaccard
-      |FROM arrs a JOIN arrs b ON a.doc_id < b.doc_id
-      |WHERE len(a.a) = 0 AND len(b.a) = 0
-      |  AND (SELECT count(*) FROM arrs WHERE len(a) = 0) <= 1000""".stripMargin
-
-  /** Exact shingle-multiset jaccard pairs ≥ 0.5 with the df cap —
-    * shared by dedup_jaccard and dedup_components. */
-  private val jaccardPairsSql =
-    """WITH arrs AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |    x -> x <> '') AS a
-      |  FROM documents),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, a[i] || ' ' || a[i+1] || ' ' || a[i+2] AS sh
-      |  FROM arrs, unnest(generate_series(1, greatest(len(a)-2, 0))) AS t(i)
-      |  WHERE len(a) >= 3),
-      |kept AS (SELECT sh FROM sh GROUP BY sh HAVING count(*) <= 100),
-      |shk AS (SELECT doc_id, sh.sh FROM sh JOIN kept USING (sh)),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM shk GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS ida, b.doc_id AS idb, count(*) AS i
-      |  FROM shk a JOIN shk b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT ida AS id_a, idb AS id_b,
-      | round(i * 1.0 / (sa.n + sb.n - i), 4) AS jaccard
-      |FROM inter JOIN sizes sa ON ida = sa.doc_id JOIN sizes sb ON idb = sb.doc_id
-      |WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5""".stripMargin
-
-  /** Planted-wrapper containment pairs ≥ 0.9 (dedup_containment): the
-    * same shingle / df-cap chain as [[jaccardPairsSql]], over documents
-    * plus a boilerplate-wrapped copy of every 97th doc, scored with
-    * Broder containment i/min(na,nb) instead of symmetric jaccard. */
-  private val containmentPairsSql =
-    """WITH docs AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000,
-      |   'begin wrapper header ' || text || ' end wrapper footer'
-      |  FROM documents WHERE doc_id % 97 = 0),
-      |arrs AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |    x -> x <> '') AS a
-      |  FROM docs),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, a[i] || ' ' || a[i+1] || ' ' || a[i+2] AS sh
-      |  FROM arrs, unnest(generate_series(1, greatest(len(a)-2, 0))) AS t(i)
-      |  WHERE len(a) >= 3),
-      |kept AS (SELECT sh FROM sh GROUP BY sh HAVING count(*) <= 100),
-      |shk AS (SELECT doc_id, sh.sh FROM sh JOIN kept USING (sh)),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM shk GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS ida, b.doc_id AS idb, count(*) AS i
-      |  FROM shk a JOIN shk b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT ida AS id_a, idb AS id_b,
-      | round(i * 1.0 / least(sa.n, sb.n), 4) AS containment
-      |FROM inter JOIN sizes sa ON ida = sa.doc_id JOIN sizes sb ON idb = sb.doc_id
-      |WHERE i * 1.0 / least(sa.n, sb.n) >= 0.9""".stripMargin
-
-  /** 8-gram overlap vs the doc_id ≤ 2 probe set (text_contamination). */
-  private val contaminationSql =
-    """WITH arrs AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |    x -> x <> '') AS a
-      |  FROM documents),
-      |g AS (
-      |  SELECT DISTINCT doc_id, array_to_string(a[i:i+7], ' ') AS g
-      |  FROM arrs, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
-      |  WHERE len(a) >= 8),
-      |p AS (SELECT doc_id AS probe_id, g FROM g WHERE doc_id <= 2)
-      |SELECT g.doc_id, p.probe_id, CAST(count(*) AS BIGINT) AS n_shared
-      |FROM g JOIN p USING (g)
-      |GROUP BY 1, 2""".stripMargin
-
-  /** (doc_id, pred_lang) — shared by text_lang_id and curate_docs. */
-  private val langIdSql =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |   list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS toks,
-      |   length(regexp_replace(text,
-      |     '[^\p{Han}\p{Hiragana}\p{Katakana}\p{Hangul}]', '', 'g')) AS cjk,
-      |   length(regexp_replace(text, '\s', '', 'g')) AS nonspace
-      |  FROM documents),
-      |c AS (
-      |  SELECT doc_id, cjk, nonspace,
-      |   len(list_filter(toks, x -> x IN ('the','of','and','to','in','is','that','it','was','for','with','as','on','are','this'))) AS en,
-      |   len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht','ein','eine','mit','von','für','auf','den','im','zu'))) AS de,
-      |   len(list_filter(toks, x -> x IN ('le','la','les','de','des','et','est','une','un','dans','pour','que','qui','du','au'))) AS fr,
-      |   len(list_filter(toks, x -> x IN ('el','la','los','las','de','y','es','en','un','una','que','por','con','para','del'))) AS es
-      |  FROM t)
-      |SELECT doc_id, CASE
-      |  WHEN nonspace > 0 AND cjk * 2 > nonspace THEN 'zh'
-      |  WHEN greatest(en, de, fr, es) = 0 THEN 'und'
-      |  WHEN en >= greatest(de, fr, es) THEN 'en'
-      |  WHEN de >= greatest(fr, es) THEN 'de'
-      |  WHEN fr >= es THEN 'fr'
-      |  ELSE 'es' END AS pred_lang
-      |FROM c""".stripMargin
-
-  // built once, like `queries`: callers read it once per query name
-  lazy val oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,
-        | round(sum(l_extendedprice),2) AS sum_price, round(avg(l_discount),6) AS avg_disc,
-        | count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_top_revenue" ->
-      """SELECT o_orderkey, c_mktsegment,
-        | round(sum(l_extendedprice*(1.0-l_discount)),2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
-        | JOIN customer ON o_custkey=c_custkey
-        |GROUP BY o_orderkey, c_mktsegment
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q5_local_supplier" ->
-      """SELECT n_name,
-        | round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
-        |FROM lineitem
-        | JOIN orders ON l_orderkey = o_orderkey
-        | JOIN customer ON o_custkey = c_custkey
-        | JOIN supplier ON l_suppkey = s_suppkey
-        |  AND c_nationkey = s_nationkey
-        | JOIN nation ON s_nationkey = n_nationkey
-        | JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        | AND o_orderdate >= TIMESTAMP '1996-01-01'
-        | AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name""".stripMargin,
-
-    "q18_large_orders" ->
-      """WITH big AS (
-        | SELECT l_orderkey, sum(l_quantity) AS qty
-        | FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 350)
-        |SELECT c_name, o_orderkey,
-        | strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
-        | o_totalprice, round(qty, 2) AS qty
-        |FROM orders JOIN big ON o_orderkey = l_orderkey
-        | JOIN customer ON o_custkey = c_custkey""".stripMargin,
-
-    // the literal exists/not-exists form; lateness mirrors as exact
-    // epoch-second integers; (numwait DESC, s_name) + unique names
-    // make LIMIT 100 deterministic
-    "q21_blame_supplier" ->
-      """WITH j AS (
-        |  SELECT l.l_orderkey, l.l_suppkey,
-        |   epoch_us(l.l_shipdate) // 1000000 -
-        |     epoch_us(o.o_orderdate) // 1000000 > 90 * 86400 AS late
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  WHERE o.o_orderstatus = 'F'),
-        |l1 AS (SELECT l_orderkey, l_suppkey FROM j WHERE late)
-        |SELECT s_name, n_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM l1
-        | JOIN supplier ON l1.l_suppkey = s_suppkey
-        | JOIN nation ON s_nationkey = n_nationkey
-        |WHERE EXISTS (
-        |   SELECT 1 FROM lineitem l2
-        |   WHERE l2.l_orderkey = l1.l_orderkey
-        |     AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (
-        |   SELECT 1 FROM j l3
-        |   WHERE l3.l_orderkey = l1.l_orderkey
-        |     AND l3.l_suppkey <> l1.l_suppkey AND l3.late)
-        |GROUP BY s_name, n_name
-        |ORDER BY numwait DESC, s_name ASC LIMIT 100""".stripMargin,
-
-    "p1_filter_eq" ->
-      "SELECT source, count(*) AS n_docs FROM documents WHERE lang='en' GROUP BY source",
-
-    "p3_time_range" ->
-      """SELECT event_type, count(*) AS n_events, round(sum(value),2) AS sum_value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-07'
-        |GROUP BY event_type""".stripMargin,
-
-    "p3_time_range_us" ->
-      """SELECT event_type, count(*) AS n_events, round(sum(value),2) AS sum_value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-07'
-        |GROUP BY event_type""".stripMargin,
-
-    "p4_projection" ->
-      "SELECT doc_id, lang, n_chars FROM documents WHERE n_chars > 200",
-
-    "p5_len_filter" ->
-      """SELECT count(*) AS n_docs, round(avg(n_chars),4) AS avg_chars
-        |FROM documents WHERE n_chars BETWEEN 11 AND 1000000""".stripMargin,
-
-    "p7_filter_sort" ->
-      """SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
-        | round(value,2) AS value
-        |FROM events WHERE event_type='purchase' ORDER BY ts, event_id""".stripMargin,
-
-    "p8_semijoin" ->
-      """SELECT user_id, count(*) AS n_events FROM events
-        |WHERE user_id IN (1,2,3,5,8,13,21,34) GROUP BY user_id""".stripMargin,
-
-    "j1_broadcast_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders, round(sum(o_totalprice),2) AS sum_price
-        |FROM orders JOIN customer ON o_custkey=c_custkey GROUP BY c_mktsegment""".stripMargin,
-
-    "j2_double_join" ->
-      """SELECT r_name, count(*) AS n_cust, round(avg(c_acctbal),4) AS avg_bal
-        |FROM customer JOIN nation ON c_nationkey=n_nationkey
-        | JOIN region ON n_regionkey=r_regionkey GROUP BY r_name""".stripMargin,
-
-    "j4_left_coalesce" ->
-      """SELECT coalesce(c_mktsegment, 'UNRESOLVED') AS segment, count(*) AS n_events
-        |FROM events LEFT JOIN customer ON user_id*20 = c_custkey
-        |GROUP BY segment""".stripMargin,
-
-    "j5_freebase_join" ->
-      """SELECT lang || '$002F' || source AS fb_key, count(*) AS n_docs
-        |FROM documents GROUP BY fb_key""".stripMargin,
-
-    "a1_max_timestamp" ->
-      """SELECT strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS max_ts,
-        | strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS min_ts,
-        | count(*) AS n_events FROM events""".stripMargin,
-
-    "a2_group_min" ->
-      """SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS first_ts,
-        | count(*) AS n_events FROM events GROUP BY user_id""".stripMargin,
-
-    "a3_distinct_count" ->
-      """SELECT count(DISTINCT user_id) AS n_users,
-        | count(DISTINCT event_type) AS n_types FROM events""".stripMargin,
-
-    "a4_term_stats" ->
-      s"""SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
-         |FROM ($tfSub) GROUP BY term HAVING count(*) >= 5""".stripMargin,
-
-    // OLS over exactly 50 (ln rank, ln cf) points as one rank-ordered
-    // 5-state list fold (the t14 list-state rule); ln on identical
-    // doubles matches Spark's log() bit-for-bit (the dsir precedent)
-    "text_zipf" ->
-      s"""WITH cf AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cf
-         |            FROM ($tfSub) GROUP BY term),
-         |top AS (SELECT term, cf,
-         |   CAST(row_number() OVER (ORDER BY cf DESC, term ASC) AS INT)
-         |     AS rank
-         |  FROM cf ORDER BY cf DESC, term ASC LIMIT 50),
-         |pts AS (SELECT rank, ln(CAST(rank AS DOUBLE)) AS x,
-         |         ln(CAST(cf AS DOUBLE)) AS y FROM top),
-         |p2 AS (SELECT rank, x, y, x*y AS xy, x*x AS xx, y*y AS yy
-         |       FROM pts),
-         |f AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-         |       list_reduce(list_prepend(
-         |         [0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE,
-         |          0.0::DOUBLE],
-         |         list([x, y, xy, xx, yy] ORDER BY rank)),
-         |         (acc, p) -> [acc[1]+p[1], acc[2]+p[2], acc[3]+p[3],
-         |                      acc[4]+p[4], acc[5]+p[5]]) AS s
-         |      FROM p2),
-         |g AS (SELECT n, s[1] AS sx, s[2] AS sy, s[3] AS sxy,
-         |       s[4] AS sxx, s[5] AS syy FROM f),
-         |h AS (SELECT n, sx, sy, sxy, sxx, syy,
-         |       (n*sxy - sx*sy) / (n*sxx - sx*sx) AS slope FROM g)
-         |SELECT CAST(n AS BIGINT) AS n_terms, round(slope, 6) AS slope,
-         | round((sy - slope*sx) / n, 6) AS intercept,
-         | round(((n*sxy - sx*sy) * (n*sxy - sx*sy)) /
-         |   ((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) AS r2
-         |FROM h""".stripMargin,
-
-    "a5_dictionary" ->
-      s"""SELECT term, df, cf, CAST(row_number() OVER (ORDER BY df DESC, term ASC) AS INT) AS id
-         |FROM (SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
-         |      FROM ($tfSub) GROUP BY term HAVING count(*) >= 5)""".stripMargin,
-
-    "a5_dict_scalable" ->
-      s"""SELECT term, df, cf, CAST(row_number() OVER (ORDER BY df DESC, term ASC) AS INT) AS id
-         |FROM (SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
-         |      FROM ($tfSub) GROUP BY term HAVING count(*) >= 5)""".stripMargin,
-
-    "a7_cooccurrence" ->
-      """WITH c AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day, event_type, count(*) AS c
-        |  FROM events GROUP BY 1,2,3)
-        |SELECT a.event_type AS type_a, b.event_type AS type_b,
-        | CAST(sum(least(a.c, b.c)) AS BIGINT) AS w, count(*) AS n_pairs
-        |FROM c a JOIN c b ON a.user_id=b.user_id AND a.day=b.day
-        | AND a.event_type < b.event_type
-        |GROUP BY type_a, type_b""".stripMargin,
-
-    "a8_dense_series" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS c FROM events
-        |  WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-02-01'
-        |  GROUP BY 1,2),
-        |axis AS (
-        |  SELECT event_type, CAST(unnest(generate_series(DATE '2024-01-01',
-        |    DATE '2024-01-31', INTERVAL 1 DAY)) AS DATE) AS day
-        |  FROM (SELECT DISTINCT event_type FROM daily))
-        |SELECT axis.event_type, strftime(axis.day, '%Y-%m-%d') AS day,
-        | CAST(coalesce(daily.c, 0) AS BIGINT) AS cnt
-        |FROM axis LEFT JOIN daily
-        | ON axis.event_type=daily.event_type AND axis.day=daily.day""".stripMargin,
-
-    "a9_vector_sum" ->
-      """SELECT label, CAST(i - 1 AS INT) AS pos, round(sum(e), 3) AS s
-        |FROM (SELECT label, unnest(embedding) AS e,
-        |       generate_subscripts(embedding, 1) AS i FROM embeddings)
-        |GROUP BY label, pos""".stripMargin,
-
-    "a10_tf_postings" ->
-      s"SELECT doc_id, term, tf FROM ($tfSub) WHERE tf >= 3",
-
-    "a4_term_stats_unicode" ->
-      s"""SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
-         |FROM ($tfUnicodeSub) GROUP BY term HAVING count(*) >= 5""".stripMargin,
-
-    "a10_tf_unicode" ->
-      s"SELECT doc_id, term, tf FROM ($tfUnicodeSub) WHERE tf >= 3",
-
-    "a12_doc_length" ->
-      """SELECT doc_id, CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        | x -> x <> '')) AS INT) AS doc_len FROM documents""".stripMargin,
-
-    "a13_distinct_pairs" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
-
-    "a6_doc_vectors" ->
-      s"""WITH tf AS ($tfSub),
-         |dict AS (SELECT term FROM tf GROUP BY term HAVING count(*) >= 5)
-         |SELECT doc_id, CAST(count(*) AS INT) AS n_ids
-         |FROM tf JOIN dict USING (term) GROUP BY doc_id""".stripMargin,
-
-    "o1_sort_limit" ->
-      """SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str, event_type
-        |FROM events ORDER BY ts, event_id LIMIT 100""".stripMargin,
-
-    "w1_lag_pairs" ->
-      """SELECT event_id,
-        | lag(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_event_id,
-        | round(value - lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id), 2)
-        |   AS value_delta
-        |FROM events""".stripMargin,
-
-    "t1_roundup_hour" ->
-      """SELECT strftime(make_timestamp(epoch_us(ts) +
-        |  (((0 - epoch_us(ts)) % 3600000000 + 3600000000) % 3600000000)),
-        |  '%Y-%m-%d %H:%M:%S') AS bucket,
-        | count(*) AS n_events
-        |FROM events GROUP BY bucket""".stripMargin,
-
-    "t1_roundup_day_anchored" ->
-      """SELECT strftime(make_timestamp(epoch_us(ts) +
-        |  (((3600000000 - epoch_us(ts)) % 86400000000 + 86400000000) % 86400000000)),
-        |  '%Y-%m-%d %H:%M:%S') AS bucket,
-        | count(*) AS n_events
-        |FROM events GROUP BY bucket""".stripMargin,
-
-    "t2_interval_bucket" ->
-      """SELECT CAST(floor(CAST(epoch_ms(ts) AS DOUBLE) / 21600000) AS BIGINT) AS bucket,
-        | count(*) AS n_events, round(sum(value),2) AS sum_value
-        |FROM events GROUP BY bucket""".stripMargin,
-
-    "f7_day_format" ->
-      "SELECT strftime(ts, '%Y%m%d') AS day, count(*) AS n_events FROM events GROUP BY day",
-
-    "f9_elastic_time" ->
-      """SELECT event_type, strftime(max(ts), '%Y-%m-%dT%H:%M:%S') AS last_elastic
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "f10_one_day_more" ->
-      """SELECT strftime(ts, '%Y%m%d') AS day,
-        | strftime(CAST(ts AS DATE) + 1, '%Y%m%d') AS next_day, count(*) AS n_events
-        |FROM events GROUP BY day, next_day""".stripMargin,
-
-    "f15_json_field" ->
-      """SELECT event_type, CAST(sum(CAST(regexp_extract(props, '([0-9]+)', 1) AS INT)) AS BIGINT)
-        |  AS sum_k,
-        | round(avg(CAST(regexp_extract(props, '([0-9]+)', 1) AS INT)), 4) AS avg_k
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS dup_count
-        |FROM documents GROUP BY content_hash""".stripMargin,
-
-    "dedup_jaccard" -> jaccardPairsSql,
-
-    // prefix filtering is LOSSLESS, so the pruned path's oracle is the
-    // full-join SQL itself — passing means the Bayardo prefix join
-    // returned byte-identical pairs to the exhaustive index join
-    "dedup_jaccard_prefix" -> jaccardPairsSql,
-
-    "dedup_containment" -> containmentPairsSql,
-
-    // components of the jaccard pair graph by transitive reachability
-    // (recursive CTE): component = min reachable doc id — the same
-    // fixpoint the iterative min-label propagation converges to
-    "dedup_components" ->
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u)
-         |SELECT node AS doc_id, min(r) AS component
-         |FROM reach GROUP BY node""".stripMargin,
-
-    // truth pairs and verified LSH candidates replayed from their own
-    // gate SQLs (the ann_recall nesting pattern), intersected on pairs
-    "dedup_minhash_eval" ->
-      s"""WITH t AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |c AS (SELECT id_a, id_b FROM ($minhashVerifiedSql)),
-         |nt AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM t),
-         |nc AS (SELECT CAST(count(*) AS BIGINT) AS n_candidates FROM c),
-         |nh AS (SELECT CAST(count(*) AS BIGINT) AS n_hits
-         |       FROM t JOIN c USING (id_a, id_b))
-         |SELECT n_truth, n_candidates, n_hits,
-         | round(CAST(n_hits AS DOUBLE) / n_truth, 4) AS recall
-         |FROM nt, nc, nh""".stripMargin,
-
-    // the full decision table: every stage is its own gate's SQL,
-    // composed under one precedence CASE; contamination threshold is
-    // the integer form 2·hits ≥ grams (no rounding boundary)
-    "curate_e2e" ->
-      s"""WITH RECURSIVE
-         |toks AS (
-         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |    x -> x <> '') AS a
-         |  FROM documents),
-         |g AS (
-         |  SELECT DISTINCT doc_id, array_to_string(a[i:i+7], ' ') AS g
-         |  FROM toks, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
-         |  WHERE len(a) >= 8),
-         |bm AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
-         |cf AS (
-         |  SELECT g.doc_id, count(*) AS ng, count(bm.g) AS nh
-         |  FROM g LEFT JOIN bm USING (g) GROUP BY g.doc_id),
-         |ekk AS (
-         |  SELECT doc_id, true AS e_keep FROM
-         |   (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))),
-         |p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) tt
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u),
-         |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-         |sb AS (
-         |  SELECT doc_id, CAST(${fnvSql("doc_id::VARCHAR || '#split'")}
-         |    % 4294967296::HUGEINT AS BIGINT) % 100 AS b
-         |  FROM documents)
-         |SELECT d.doc_id,
-         | CASE WHEN len(t.a) < 20 THEN 'low_quality'
-         |  WHEN coalesce(cf.nh * 2 >= cf.ng, false) THEN 'contaminated'
-         |  WHEN ekk.e_keep IS NULL THEN 'dup_exact'
-         |  WHEN d.doc_id <> coalesce(comp.component, d.doc_id) THEN 'dup_near'
-         |  WHEN sb.b < 90 THEN 'train'
-         |  WHEN sb.b < 95 THEN 'val'
-         |  ELSE 'test' END AS decision
-         |FROM documents d
-         |JOIN toks t USING (doc_id)
-         |LEFT JOIN cf USING (doc_id)
-         |LEFT JOIN ekk USING (doc_id)
-         |LEFT JOIN comp ON d.doc_id = comp.node
-         |JOIN sb USING (doc_id)""".stripMargin,
-
-    // same component fixpoint, rolled up twice: component → size →
-    // (size → cluster count, docs bound up)
-    "dedup_cluster_profile" ->
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u),
-         |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-         |szs AS (SELECT component, count(*) AS sz FROM comp GROUP BY component)
-         |SELECT CAST(sz AS BIGINT) AS sz,
-         | CAST(count(*) AS BIGINT) AS n_clusters,
-         | CAST(sz * count(*) AS BIGINT) AS n_docs_in
-         |FROM szs GROUP BY sz""".stripMargin,
-
-    // same component fixpoint, joined back to every document: canonical =
-    // component min (or self), keep = is-canonical
-    "dedup_canonical" ->
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u),
-         |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node)
-         |SELECT d.doc_id,
-         | coalesce(c.component, d.doc_id) AS canonical,
-         | d.doc_id = coalesce(c.component, d.doc_id) AS keep
-         |FROM documents d LEFT JOIN comp c ON d.doc_id = c.node""".stripMargin,
-
-    // component representative = dedup_canonical's `canonical`; the
-    // split hash is sample_split's convention applied to it
-    "sample_split_leakfree" ->
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u),
-         |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-         |canon AS (
-         |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS canonical
-         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.node),
-         |b AS (
-         |  SELECT doc_id, canonical,
-         |   CAST(${fnvSql("canonical::VARCHAR || '#split'")}
-         |     % 4294967296::HUGEINT AS BIGINT) % 100 AS b
-         |  FROM canon)
-         |SELECT doc_id, canonical,
-         | CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val'
-         |  ELSE 'test' END AS split
-         |FROM b""".stripMargin,
-
-    "dedup_incremental" ->
-      """WITH planted(doc_id, text) AS (VALUES
-        |  (CAST(9000001 AS BIGINT), 'planted incremental duplicate alpha alpha beta'),
-        |  (9000002, 'planted incremental duplicate alpha alpha beta'),
-        |  (9000003, 'planted incremental duplicate gamma delta epsilon'),
-        |  (9000004, 'planted incremental duplicate gamma delta epsilon'),
-        |  (9000005, 'planted incremental unique zeta eta theta')),
-        |indexed AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0
-        |  UNION ALL SELECT doc_id, text FROM planted WHERE doc_id = 9000001),
-        |newer AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-        |  UNION ALL SELECT doc_id, text FROM planted WHERE doc_id > 9000001),
-        |idx AS (SELECT md5(text) AS content_hash, min(doc_id) AS idx_id
-        |  FROM indexed GROUP BY 1),
-        |h AS (SELECT doc_id, md5(text) AS content_hash FROM newer),
-        |nm AS (SELECT content_hash, min(doc_id) AS new_min FROM h GROUP BY 1)
-        |SELECT h.doc_id, h.content_hash,
-        | coalesce(idx.idx_id,
-        |   CASE WHEN h.doc_id <> nm.new_min THEN nm.new_min END) AS dup_of,
-        | idx.idx_id IS NULL AND h.doc_id = nm.new_min AS keep
-        |FROM h JOIN nm USING (content_hash)
-        |LEFT JOIN idx USING (content_hash)""".stripMargin,
-
-    "pack_sequences" ->
-      """WITH t AS (
-        |  SELECT source AS shard, doc_id,
-        |   CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |o AS (
-        |  SELECT shard, doc_id, n_tokens,
-        |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |    AS tok_start
-        |  FROM t)
-        |SELECT shard, doc_id, n_tokens, tok_start,
-        | tok_start // 2048 AS seq_id
-        |FROM o""".stripMargin,
-
-    // win=64 stride=48; DuckDB list slice tk[a:b] is 1-based inclusive
-    // and clamps past the end, matching Spark's slice(toks, start, len)
-    "pack_chunks" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |   list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '') AS tk
-        |  FROM documents),
-        |base AS (
-        |  SELECT doc_id, tk, len(tk) AS n FROM toks WHERE len(tk) > 0),
-        |starts AS (
-        |  SELECT doc_id, tk,
-        |   unnest(range(0, (greatest(n - 64, 0) + 47) // 48 + 1)) AS i
-        |  FROM base)
-        |SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-        | CAST(i * 48 AS INT) AS tok_start,
-        | CAST(len(tk[i*48+1 : i*48+64]) AS INT) AS n_tokens,
-        | array_to_string(tk[i*48+1 : i*48+64], ' ') AS chunk_text
-        |FROM starts""".stripMargin,
-
-    // every 8-token window, duplicated = exact content occurs >= 2 times
-    // corpus-wide (positions count, not distinct grams)
-    "dedup_spans" ->
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM documents),
-        |g AS (
-        |  SELECT doc_id, array_to_string(a[i:i+7], ' ') AS gram
-        |  FROM arrs, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
-        |  WHERE len(a) >= 8),
-        |n AS (SELECT gram, count(*) AS cnt FROM g GROUP BY gram)
-        |SELECT g.doc_id, count(*) AS n_windows,
-        | CAST(sum(CASE WHEN n.cnt >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_dup_windows,
-        | round(sum(CASE WHEN n.cnt >= 2 THEN 1 ELSE 0 END) * 1.0 / count(*), 4)
-        |   AS dup_ratio
-        |FROM g JOIN n USING (gram)
-        |GROUP BY g.doc_id""".stripMargin,
-
-    // the suffix-array replay: same 4-gram-partitioned neighbor sort
-    // (element-wise on the token list — VARCHAR[] and array<string>
-    // order identically: byte-wise element compare, shorter-prefix
-    // first), same [go, n] list-state LCP fold (list_reduce wraps
-    // elements to state arity per the t25 rule)
-    "dedup_substring" -> suffixDupSql,
-
-
-    // the bottom-1 window-MinHash replay: strided windows, min over
-    // the 13 in-window 4-gram fnv hashes WRAPPED TO SIGNED BIGINT
-    // before the min (Spark orders the signed value — the established
-    // CASE), then the dedup_spans-style frequency join on the sketch
-    "dedup_substring_approx" -> windowMinhashSql,
-
-    // both full tier chains nested as derived tables (the r9 rule:
-    // CTEs are legal inside FROM (...)), joined on doc_id, integer
-    // hot verdicts mirrored, one final rounded division
-    "dedup_substring_eval" ->
-      s"""SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         | CAST(sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |   AND a.n_dup_windows * 2 >= a.n_windows THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_both_hot,
-         | CAST(sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |   AND NOT (a.n_dup_windows * 2 >= a.n_windows) THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_exact_only,
-         | CAST(sum(CASE WHEN NOT (x.n_dup_pos * 2 >= x.n_pos)
-         |   AND a.n_dup_windows * 2 >= a.n_windows THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_approx_only,
-         | round((count(*)
-         |   - sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |       AND NOT (a.n_dup_windows * 2 >= a.n_windows)
-         |       THEN 1 ELSE 0 END)
-         |   - sum(CASE WHEN NOT (x.n_dup_pos * 2 >= x.n_pos)
-         |       AND a.n_dup_windows * 2 >= a.n_windows
-         |       THEN 1 ELSE 0 END)) * 1.0 / count(*), 4) AS agreement
-         |FROM ($suffixDupSql) x JOIN ($windowMinhashSql) a USING (doc_id)""".stripMargin,
-
-    // the same nested tier chains rolled up per source (one extra
-    // documents join for the source key)
-    "dedup_substring_src_eval" ->
-      s"""SELECT dd.source, CAST(count(*) AS BIGINT) AS n_docs,
-         | CAST(sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |   AND a.n_dup_windows * 2 >= a.n_windows THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_both_hot,
-         | CAST(sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |   AND NOT (a.n_dup_windows * 2 >= a.n_windows) THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_exact_only,
-         | CAST(sum(CASE WHEN NOT (x.n_dup_pos * 2 >= x.n_pos)
-         |   AND a.n_dup_windows * 2 >= a.n_windows THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_approx_only,
-         | round((count(*)
-         |   - sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |       AND NOT (a.n_dup_windows * 2 >= a.n_windows)
-         |       THEN 1 ELSE 0 END)
-         |   - sum(CASE WHEN NOT (x.n_dup_pos * 2 >= x.n_pos)
-         |       AND a.n_dup_windows * 2 >= a.n_windows
-         |       THEN 1 ELSE 0 END)) * 1.0 / count(*), 4) AS agreement
-         |FROM ($suffixDupSql) x JOIN ($windowMinhashSql) a USING (doc_id)
-         |JOIN (SELECT doc_id, source FROM documents) dd USING (doc_id)
-         |GROUP BY 1""".stripMargin,
-
-
-    // first-wins line election mirrors min(struct(doc_id, idx)); planted
-    // docs exercise cross-doc AND within-doc dup lines + the all-lost doc
-    "dedup_paragraph" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT CAST(col0 AS BIGINT), col1 FROM (VALUES
-        |   (9000001, 'alpha beta' || chr(10) || 'common boilerplate line' || chr(10) || 'gamma'),
-        |   (9000002, 'common boilerplate line' || chr(10) || 'delta' || chr(10) || 'common boilerplate line'),
-        |   (9000003, 'common boilerplate line')) t(col0, col1)),
-        |lines AS (
-        |  SELECT doc_id, CAST(generate_subscripts(a, 1) - 1 AS INT) AS idx,
-        |   unnest(a) AS line
-        |  FROM (SELECT doc_id, string_split(text, chr(10)) AS a FROM base)),
-        |kept AS (
-        |  SELECT doc_id, idx, line FROM (
-        |    SELECT doc_id, idx, line,
-        |     row_number() OVER (PARTITION BY line ORDER BY doc_id, idx) AS rn
-        |    FROM lines) WHERE rn = 1),
-        |cnt AS (SELECT doc_id, count(*) AS n_lines FROM lines GROUP BY 1),
-        |rec AS (SELECT doc_id, count(*) AS n_kept,
-        |        string_agg(line, chr(10) ORDER BY idx) AS text_kept
-        |        FROM kept GROUP BY 1)
-        |SELECT c.doc_id, c.n_lines, coalesce(r.n_kept, 0) AS n_kept,
-        | coalesce(r.text_kept, '') AS text_kept
-        |FROM cnt c LEFT JOIN rec r USING (doc_id)""".stripMargin,
-
-    // snake deal over the size-descending exact rank; the oracle's
-    // one-window row_number is the semantics the distributed two-phase
-    // rank must reproduce bit-for-bit
-    "pack_shards" ->
-      """WITH r AS (
-        |  SELECT doc_id, n_chars,
-        |   row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rk
-        |  FROM documents),
-        |a AS (SELECT n_chars, (rk-1) // 8 AS p, (rk-1) % 8 AS q FROM r)
-        |SELECT CAST(CASE WHEN p % 2 = 0 THEN q ELSE 7 - q END AS INT) AS shard,
-        | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        | min(n_chars) AS min_chars, max(n_chars) AS max_chars
-        |FROM a GROUP BY 1""".stripMargin,
-
-    // the oracle uses the engine's own ntile; the Spark side must match
-    // SQL-standard tile sizing from the distributed rank
-    "sample_curriculum" ->
-      """WITH r AS (
-        |  SELECT doc_id, lang, n_chars,
-        |   CAST(ntile(4) OVER (ORDER BY n_chars, doc_id) AS INT) AS phase
-        |  FROM documents)
-        |SELECT phase, lang, count(*) AS n_docs,
-        | min(n_chars) AS min_chars, max(n_chars) AS max_chars
-        |FROM r GROUP BY 1, 2""".stripMargin,
-
-    // Gini over per-user activity: integer sums, one final division;
-    // 2.0·Σic/(n·Σc) − (n+1)/n with identical operation order
-    "stats_gini" ->
-      """WITH c AS (SELECT user_id, count(*) AS c FROM events GROUP BY 1),
-        |r AS (SELECT c, row_number() OVER (ORDER BY c, user_id) AS i FROM c)
-        |SELECT count(*) AS n_users, CAST(sum(c) AS BIGINT) AS total,
-        | round(2.0 * sum(i * c) / (count(*) * sum(c)) -
-        |   (count(*) + 1) * 1.0 / count(*), 6) AS gini
-        |FROM r""".stripMargin,
-
-    // delta compares the ROUNDED percentiles (the Spark side rounds
-    // before differencing), so the oracle mirrors round(round − round)
-    "stats_qnorm" ->
-      """WITH g AS (
-        |  SELECT doc_id, source,
-        |   percent_rank() OVER (PARTITION BY source
-        |     ORDER BY n_chars, doc_id) AS pr_src,
-        |   (CAST(row_number() OVER (ORDER BY n_chars, doc_id) AS DOUBLE)
-        |     - 1) / (count(*) OVER () - 1) AS prg
-        |  FROM documents)
-        |SELECT doc_id, source, round(pr_src, 6) AS pr_src,
-        | round(prg, 6) AS pr_global,
-        | round(round(pr_src, 6) - round(prg, 6), 6) AS delta
-        |FROM g""".stripMargin,
-
-    // Poisson(1) inverse-CDF on INTEGER thresholds floor(CDF·2^32) —
-    // the branch is integer-exact on both engines; only mean_b divides
-    "stats_bootstrap" ->
-      s"""WITH e AS (
-         |  SELECT doc_id, n_chars, unnest(range(0, 32)) AS b
-         |  FROM documents),
-         |h AS (SELECT b, n_chars,
-         |       ${hash32Sql("(doc_id*32 + b + 1)")} AS h FROM e),
-         |w AS (SELECT b, n_chars,
-         |  CASE WHEN h < 1580030168 THEN 0 WHEN h < 3160060337 THEN 1
-         |       WHEN h < 3950075421 THEN 2 WHEN h < 4213413783 THEN 3
-         |       WHEN h < 4279248373 THEN 4 WHEN h < 4292415291 THEN 5
-         |       ELSE 6 END AS w FROM h)
-         |SELECT CAST(b AS INT) AS b, CAST(sum(w) AS BIGINT) AS sum_w,
-         | CAST(sum(w * n_chars) AS BIGINT) AS sum_wx,
-         | round(CAST(sum(w * n_chars) AS DOUBLE) / sum(w), 6) AS mean_b
-         |FROM w GROUP BY 1""".stripMargin,
-
-    // DSIR bucket convention (fnv64 % 64); the three Σ p·log2(p/q)
-    // reductions are bucket-ordered folds with ln(x)/ln(2.0) exactly as
-    // Spark computes log base 2
-    "stats_divergence" ->
-      s"""WITH toks AS (
-         |  SELECT (lang = 'en') AS a,
-         |   unnest(regexp_split_to_array(lower(text), '\\s+')) AS term
-         |  FROM documents),
-         |tb AS (SELECT a, CAST(${fnvSql("term")} % 64 AS INT) AS bucket
-         |       FROM toks WHERE term <> ''),
-         |cells AS (SELECT bucket,
-         |   CAST(count(*) FILTER (a) AS BIGINT) AS ca,
-         |   CAST(count(*) FILTER (NOT a) AS BIGINT) AS cb
-         |  FROM tb GROUP BY bucket),
-         |grid AS (SELECT g.bucket, coalesce(c.ca, 0) AS ca,
-         |         coalesce(c.cb, 0) AS cb
-         |  FROM (SELECT unnest(range(0, 64)) AS bucket) g
-         |  LEFT JOIN cells c USING (bucket)),
-         |tot AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-         |         CAST(sum(cb) AS BIGINT) AS n_b,
-         |         list(ca ORDER BY bucket) AS la,
-         |         list(cb ORDER BY bucket) AS lb FROM grid)
-         |SELECT n_a, n_b,
-         | round(list_reduce(list_prepend(0.0::DOUBLE,
-         |   list_transform(range(1, 65), i ->
-         |    (CAST(la[i]+1 AS DOUBLE)/CAST(n_a+64 AS DOUBLE)) *
-         |    (ln((CAST(la[i]+1 AS DOUBLE)/CAST(n_a+64 AS DOUBLE)) /
-         |        (CAST(lb[i]+1 AS DOUBLE)/CAST(n_b+64 AS DOUBLE)))
-         |     / ln(2.0::DOUBLE)))),
-         |   (acc, x) -> acc + x), 6) AS kl_ab,
-         | round(list_reduce(list_prepend(0.0::DOUBLE,
-         |   list_transform(range(1, 65), i ->
-         |    (CAST(lb[i]+1 AS DOUBLE)/CAST(n_b+64 AS DOUBLE)) *
-         |    (ln((CAST(lb[i]+1 AS DOUBLE)/CAST(n_b+64 AS DOUBLE)) /
-         |        (CAST(la[i]+1 AS DOUBLE)/CAST(n_a+64 AS DOUBLE)))
-         |     / ln(2.0::DOUBLE)))),
-         |   (acc, x) -> acc + x), 6) AS kl_ba,
-         | round(list_reduce(list_prepend(0.0::DOUBLE,
-         |   list_transform(range(1, 65), i ->
-         |    ((CAST(la[i]+1 AS DOUBLE)/CAST(n_a+64 AS DOUBLE)) *
-         |     (ln((CAST(la[i]+1 AS DOUBLE)/CAST(n_a+64 AS DOUBLE)) /
-         |         ((CAST(la[i]+1 AS DOUBLE)/CAST(n_a+64 AS DOUBLE) +
-         |           CAST(lb[i]+1 AS DOUBLE)/CAST(n_b+64 AS DOUBLE)) / 2.0))
-         |      / ln(2.0::DOUBLE)) +
-         |     (CAST(lb[i]+1 AS DOUBLE)/CAST(n_b+64 AS DOUBLE)) *
-         |     (ln((CAST(lb[i]+1 AS DOUBLE)/CAST(n_b+64 AS DOUBLE)) /
-         |         ((CAST(la[i]+1 AS DOUBLE)/CAST(n_a+64 AS DOUBLE) +
-         |           CAST(lb[i]+1 AS DOUBLE)/CAST(n_b+64 AS DOUBLE)) / 2.0))
-         |      / ln(2.0::DOUBLE))) / 2.0)),
-         |   (acc, x) -> acc + x), 6) AS js
-         |FROM tot""".stripMargin,
-
-    // composed chain: whitespace token counts → snake shards by size →
-    // per-shard contiguous packing at budget 2048
-    "pack_e2e" ->
-      """WITH tc AS (
-        |  SELECT doc_id,
-        |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '')) AS nt
-        |  FROM documents),
-        |r AS (SELECT doc_id, nt,
-        |       row_number() OVER (ORDER BY nt DESC, doc_id) AS rk FROM tc),
-        |a AS (SELECT doc_id, nt,
-        |  CASE WHEN ((rk-1) // 8) % 2 = 0 THEN (rk-1) % 8
-        |       ELSE 7 - (rk-1) % 8 END AS shard FROM r),
-        |o AS (SELECT shard, nt,
-        |  coalesce(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-        |  FROM a)
-        |SELECT CAST(shard AS INT) AS shard, count(*) AS n_docs,
-        | CAST(sum(nt) AS BIGINT) AS sum_tokens,
-        | CAST(max(cb // 2048) + 1 AS BIGINT) AS n_seqs
-        |FROM o GROUP BY 1""".stripMargin,
-
-    // binary relevance = dense-top-20 membership; ln(x)/ln(2.0) matches
-    // Spark's log2 lowering; every float literal ::DOUBLE
-    "search_ndcg" ->
-      s"""WITH tr AS (SELECT doc_id, CAST(row_number() OVER (
-         |        ORDER BY score DESC, doc_id ASC) AS INT) AS text_rank
-         |       FROM ($bm25Sql) b),
-         |vb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |       FROM embeddings),
-         |qv AS (SELECT e AS qe FROM vb WHERE vec_id = 0),
-         |sc AS (SELECT vb.vec_id AS doc_id, ${cosSql("qe", "vb.e")} AS sim
-         |       FROM vb CROSS JOIN qv WHERE vb.vec_id <> 0),
-         |vr AS (SELECT doc_id FROM (
-         |        SELECT doc_id, row_number() OVER (
-         |          ORDER BY sim DESC, doc_id ASC) AS vrk FROM sc)
-         |       WHERE vrk <= 20),
-         |j AS (SELECT tr.doc_id, tr.text_rank,
-         |       vr.doc_id IS NOT NULL AS rel
-         |      FROM tr LEFT JOIN vr ON tr.doc_id = vr.doc_id),
-         |dd AS (SELECT CAST(sum(CASE WHEN rel THEN 1 ELSE 0 END)
-         |         AS BIGINT) AS n_rel,
-         |       sum(CASE WHEN rel THEN
-         |         1.0::DOUBLE / (ln(text_rank + 1) / ln(2.0::DOUBLE))
-         |         ELSE 0.0::DOUBLE END) AS dcg0 FROM j),
-         |ii AS (SELECT sum(1.0::DOUBLE /
-         |         (ln(d + 1) / ln(2.0::DOUBLE))) AS idcg0
-         |       FROM range(1, 21) t(d))
-         |SELECT n_rel, round(dcg0, 6) AS dcg, round(idcg0, 6) AS idcg,
-         | round(dcg0 / idcg0, 6) AS ndcg
-         |FROM dd, ii""".stripMargin,
-
-    // incremental must equal from-scratch: the oracle IS the full
-    // recursive CC over every pair (the dedup_components chain)
-    "graph_cc_incremental" ->
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u)
-         |SELECT node AS doc_id, min(r) AS component
-         |FROM reach GROUP BY node""".stripMargin,
-
-    // truth = brute rank 1; candidates = the IVF gate's own top-5 chain
-    "ann_mrr" ->
-      s"""WITH t AS (SELECT query_id, nbr_id FROM ($annBruteSql) b
-         |           WHERE rank = 1),
-         |c AS (SELECT query_id, nbr_id, rank FROM ($annIvfSql) v),
-         |j AS (SELECT t.query_id, c.rank
-         |      FROM t LEFT JOIN c USING (query_id, nbr_id))
-         |SELECT CAST(count(*) AS BIGINT) AS n_queries,
-         | CAST(sum(CASE WHEN rank IS NOT NULL THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_hit,
-         | round(sum(coalesce(1.0::DOUBLE / rank, 0.0::DOUBLE))
-         |   / count(*), 6) AS mrr
-         |FROM j""".stripMargin,
-
-    // exact integer cents make the fold's starting doubles identical.
-    // State rides a 2-element DOUBLE list [level, trend]: this DuckDB's
-    // list_reduce evaluates STRUCT-state fields non-independently (a
-    // {'s': f(acc), 't': acc.s} fold returns t == s), while list-state
-    // folds are correct — probed before wiring
-    // the t14 fold widened to 4-element list state; error uses the
-    // PRE-update level+trend, literals all ::DOUBLE
-    "t25_backtest" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT event_type, count(*) AS n_days,
-        |       list(CAST(c AS DOUBLE) / 100.0::DOUBLE ORDER BY day) AS xs
-        |      FROM daily GROUP BY 1),
-        |f AS (SELECT event_type, n_days,
-        |  list_reduce(list_prepend(
-        |    [xs[1], 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE],
-        |    list_transform(xs[2:],
-        |      x -> [x, 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE])),
-        |    (acc, x) -> [
-        |      0.5::DOUBLE * x[1] + 0.5::DOUBLE * (acc[1] + acc[2]),
-        |      0.25::DOUBLE * ((0.5::DOUBLE * x[1] +
-        |        0.5::DOUBLE * (acc[1] + acc[2])) - acc[1])
-        |      + 0.75::DOUBLE * acc[2],
-        |      acc[3] + abs(x[1] - (acc[1] + acc[2])),
-        |      acc[4] + 1.0::DOUBLE]) AS st
-        |  FROM s)
-        |SELECT event_type, n_days, round(st[3] / st[4], 6) AS mae,
-        | round(st[1] + st[2], 6) AS forecast
-        |FROM f""".stripMargin,
-
-    "t14_holt" ->
-      """WITH daily AS (
-        |  SELECT user_id, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |s AS (SELECT user_id, count(*) AS n_days,
-        |       list(CAST(c AS DOUBLE) / 100.0::DOUBLE ORDER BY day) AS xs
-        |      FROM daily GROUP BY 1),
-        |f AS (SELECT user_id, n_days,
-        |  list_reduce(list_prepend([xs[1], 0.0::DOUBLE],
-        |    list_transform(xs[2:], x -> [x, 0.0::DOUBLE])),
-        |    (acc, x) -> [
-        |      0.5::DOUBLE * x[1] + 0.5::DOUBLE * (acc[1] + acc[2]),
-        |      0.25::DOUBLE * ((0.5::DOUBLE * x[1] +
-        |        0.5::DOUBLE * (acc[1] + acc[2])) - acc[1])
-        |      + 0.75::DOUBLE * acc[2]]) AS st
-        |  FROM s)
-        |SELECT user_id, n_days, round(st[1], 6) AS level,
-        | round(st[2], 6) AS trend, round(st[1] + st[2], 6) AS forecast
-        |FROM f""".stripMargin,
-
-    // the release card: exact counts, ordered-fold entropy, and the
-    // scrub regex surfaced as an incidence flag
-    "curate_card" ->
-      """WITH base AS (
-        |  SELECT count(*) AS n_docs,
-        |   count(DISTINCT source) AS n_sources,
-        |   count(DISTINCT lang) AS n_langs,
-        |   count(DISTINCT md5(text)) AS n_distinct,
-        |   CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |   CAST(sum(CASE WHEN regexp_matches(text,
-        |     'https?://[^\s]+|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}|[0-9]{7,}')
-        |     THEN 1 ELSE 0 END) AS BIGINT) AS n_pii
-        |  FROM documents),
-        |c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-        |g AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
-        |       list(n ORDER BY lang) AS arr FROM c),
-        |ent AS (SELECT round(list_reduce(list_prepend(0.0::DOUBLE,
-        |   list_transform(arr, n -> -(CAST(n AS DOUBLE) / nn)
-        |        * ln(CAST(n AS DOUBLE) / nn))),
-        |   (acc, x) -> acc + x), 6) AS lang_entropy FROM g)
-        |SELECT n_docs, n_sources, n_langs,
-        | round(1.0::DOUBLE - CAST(n_distinct AS DOUBLE) / n_docs, 6)
-        |   AS dup_rate,
-        | round(CAST(sum_chars AS DOUBLE) / n_docs, 6) AS mean_chars,
-        | round(CAST(n_pii AS DOUBLE) / n_docs, 6) AS pii_rate,
-        | lang_entropy
-        |FROM base, ent""".stripMargin,
-
-    // doubled average ranks (2·rank + ties − 1) keep every sum integral;
-    // the final expression is written operand-for-operand as the engine's
-    "stats_spearman" ->
-      """WITH ev AS (SELECT event_type, epoch_us(ts) // 1000000 AS tsec,
-        |    CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |r AS (SELECT event_type,
-        |   2 * rank() OVER (PARTITION BY event_type ORDER BY tsec)
-        |     + count(*) OVER (PARTITION BY event_type, tsec) - 1 AS r2x,
-        |   2 * rank() OVER (PARTITION BY event_type ORDER BY cents)
-        |     + count(*) OVER (PARTITION BY event_type, cents) - 1 AS r2y
-        |  FROM ev),
-        |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |   CAST(sum(r2x) AS BIGINT) AS sx, CAST(sum(r2y) AS BIGINT) AS sy,
-        |   CAST(sum(r2x * r2y) AS BIGINT) AS sxy,
-        |   CAST(sum(r2x * r2x) AS BIGINT) AS sxx,
-        |   CAST(sum(r2y * r2y) AS BIGINT) AS syy
-        |  FROM r GROUP BY 1)
-        |SELECT event_type, n,
-        | round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy) /
-        |   (sqrt(CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) *
-        |    sqrt(CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy)), 6)
-        |   AS spearman
-        |FROM a""".stripMargin,
-
-    // num and den are the n²-scaled exact-integer forms of the standard
-    // acf estimator; the dense grid makes the lag join exactly t ≤ n−k
-    "t15_acf" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-        |base AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |   CAST(sum(c) AS BIGINT) AS s, CAST(sum(c * c) AS BIGINT) AS q
-        |  FROM grid GROUP BY 1),
-        |pairs AS (
-        |  SELECT g1.event_type, k.k,
-        |   CAST(sum(g1.c * g2.c) AS BIGINT) AS sxy,
-        |   CAST(sum(g1.c) AS BIGINT) AS sh, CAST(sum(g2.c) AS BIGINT) AS st
-        |  FROM grid g1,
-        |   (SELECT unnest(generate_series(1, 7)) AS k) k,
-        |   grid g2
-        |  WHERE g1.event_type = g2.event_type AND g2.day = g1.day + k.k
-        |  GROUP BY 1, 2),
-        |f AS (SELECT p.event_type, p.k, b.n,
-        |   CAST(b.n * b.n AS DOUBLE) * p.sxy
-        |     - CAST(b.n AS DOUBLE) * b.s * (p.sh + p.st)
-        |     + CAST(b.n - p.k AS DOUBLE) * b.s * b.s AS num,
-        |   CAST(b.n * b.n AS DOUBLE) * b.q
-        |     - CAST(b.n AS DOUBLE) * b.s * b.s AS den
-        |  FROM pairs p JOIN base b ON p.event_type = b.event_type)
-        |SELECT event_type, k, n, round(num / den, 6) AS acf
-        |FROM f WHERE den > 0""".stripMargin,
-
-    // integral power-of-two weights: pow(2, k) is exact, the weighted
-    // sum is one exact BIGINT, /2^20 is the only double
-    "t16_decay" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) // 1000000 // 86400 AS day,
-        |    CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |m AS (SELECT max(day) AS now_day FROM ev),
-        |w AS (SELECT user_id, cents,
-        |    CAST(pow(2, 20 - (now_day - day)) AS BIGINT) AS w
-        |  FROM ev, m WHERE now_day - day <= 20)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_recent,
-        | round(CAST(sum(cents * w) AS DOUBLE) / 1048576.0::DOUBLE, 6)
-        |   AS decayed
-        |FROM w GROUP BY 1""".stripMargin,
-
-    // the engine's one-pass ANALYZE, replayed as one aggregate + unpivot
-    "stats_analyze" ->
-      """WITH ev AS (SELECT event_id, user_id,
-        |    CAST(round(value * 100) AS BIGINT) AS cents, event_type
-        |  FROM events),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS u1,
-        |  count(DISTINCT event_id) AS d1, min(event_id) AS mi1, max(event_id) AS ma1,
-        |  CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS u2,
-        |  count(DISTINCT user_id) AS d2, min(user_id) AS mi2, max(user_id) AS ma2,
-        |  CAST(sum(CASE WHEN cents IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS u3,
-        |  count(DISTINCT cents) AS d3, min(cents) AS mi3, max(cents) AS ma3,
-        |  CAST(sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS u4,
-        |  count(DISTINCT event_type) AS d4
-        | FROM ev)
-        |SELECT 'event_id' AS col_name, n_rows, u1 AS n_nulls, d1 AS ndv,
-        |  mi1 AS min_v, ma1 AS max_v FROM a
-        |UNION ALL SELECT 'user_id', n_rows, u2, d2, mi2, ma2 FROM a
-        |UNION ALL SELECT 'cents', n_rows, u3, d3, mi3, ma3 FROM a
-        |UNION ALL SELECT 'event_type', n_rows, u4, d4,
-        |  CAST(NULL AS BIGINT), CAST(NULL AS BIGINT) FROM a""".stripMargin,
-
-    // same whitespace-analyzer split as the engine's F17 seam
-    "text_ttr" ->
-      """WITH tk AS (SELECT doc_id,
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> x <> '') AS tok
-        |  FROM documents)
-        |SELECT doc_id, CAST(len(tok) AS BIGINT) AS n_tokens,
-        | CAST(len(list_distinct(tok)) AS BIGINT) AS n_types,
-        | round(CAST(len(list_distinct(tok)) AS DOUBLE) / len(tok), 6) AS ttr
-        |FROM tk WHERE len(tok) > 0""".stripMargin,
-
-    // per-(label, dim) sums once; the global centroid re-aggregates the
-    // per-label sums, mirroring the engine's single corpus scan
-    "embed_drift" ->
-      """WITH e AS (SELECT label, d - 1 AS pos,
-        |    CAST(embedding[d] AS DOUBLE) AS x
-        |  FROM embeddings,
-        |   (SELECT unnest(generate_series(1, 64)) AS d) dims),
-        |bl AS (SELECT label, pos, sum(x) AS sx,
-        |    CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1, 2),
-        |blm AS (SELECT label, pos, n, sx / n AS mu FROM bl),
-        |g AS (SELECT pos, sum(sx) / sum(n) AS gmu FROM bl GROUP BY 1),
-        |j AS (SELECT b.label, max(b.n) AS n_vecs,
-        |   sum(b.mu * g.gmu) AS dot, sum(b.mu * b.mu) AS nl,
-        |   sum(g.gmu * g.gmu) AS ng
-        |  FROM blm b JOIN g ON b.pos = g.pos GROUP BY 1)
-        |SELECT label, n_vecs, round(sqrt(nl), 6) AS centroid_norm,
-        | round(dot / (sqrt(nl) * sqrt(ng)), 6) AS cos_to_global
-        |FROM j""".stripMargin,
-
-    // centroid mu from per-(label, dim) float sums (engine sum-order
-    // noise absorbed by round 6); dot/norms are ORDERED left folds over
-    // the vector, bit-identical to Spark's aggregate(zip_with(...))
-    "embed_outliers" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
-        |  FROM embeddings),
-        |ex AS (SELECT label, unnest(v) AS x, generate_subscripts(v, 1) AS i
-        |  FROM e),
-        |cs AS (SELECT label, i, sum(x) AS sx, CAST(count(*) AS BIGINT) AS n
-        |  FROM ex GROUP BY 1, 2),
-        |cent AS (SELECT label, list(sx / n ORDER BY i) AS c FROM cs GROUP BY 1),
-        |j AS (SELECT e.vec_id, e.label,
-        |   list_reduce(list_transform(range(1, len(v) + 1), k -> v[k] * c[k]),
-        |     (a, b) -> a + b) AS dot,
-        |   list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b) AS nv,
-        |   list_reduce(list_transform(c, x -> x * x), (a, b) -> a + b) AS nc
-        |  FROM e JOIN cent ON cent.label = e.label),
-        |o AS (SELECT vec_id, label,
-        |   CASE WHEN nv = 0 OR nc = 0 THEN 0.0::DOUBLE
-        |    ELSE round(dot / (sqrt(nv) * sqrt(nc)), 6) END AS cos_c
-        |  FROM j)
-        |SELECT vec_id, label, cos_c, cos_c < 0.0::DOUBLE AS outlier
-        |FROM o""".stripMargin,
-
-    "embed_pq_distortion" -> pqDistortionOracleSql,
-
-    // the annIvfSql chain with EVERY vector as a query (probes keep
-    // crank <= 3 for all vec_ids, not just < 10)
-    "embed_knn_graph" -> knnGraphSql,
-
-    // rank-ordered fold over the knn chain's round-4 sims; the two
-    // divisions mirror the engine's (s / n) expressions
-    "embed_ood" ->
-      s"""WITH knn AS MATERIALIZED (SELECT * FROM ($knnGraphSql)),
-         |g AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS n_nbrs,
-         |       list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |         list(sim ORDER BY rank)), (a, x) -> a + x) AS s
-         |      FROM knn GROUP BY vec_id)
-         |SELECT vec_id, n_nbrs, round(s / n_nbrs, 6) AS avg_sim,
-         | round(1.0::DOUBLE - s / n_nbrs, 6) AS ood
-         |FROM g""".stripMargin,
-
-    "embed_knn_graph_auto" -> knnGraphAutoSql,
-
-    "ann_bq_topk" -> annBqSql,
-
-    // three row_number rank passes over (value, user_id) — exactly the
-    // exactRank histogram rank; integer cross-multiply quintile cuts
-    "w19_rfm" ->
-      """WITH p AS (SELECT user_id,
-        |    epoch_us(ts) // 1000000 // 86400 AS day,
-        |    CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events WHERE event_type = 'purchase'),
-        |per AS (SELECT user_id, max(day) AS last_day,
-        |    CAST(count(*) AS BIGINT) AS f, CAST(sum(cents) AS BIGINT) AS m
-        |  FROM p GROUP BY 1),
-        |nw AS (SELECT max(last_day) AS now_day,
-        |    CAST(count(*) AS BIGINT) AS n FROM per),
-        |b AS (SELECT user_id, now_day - last_day AS recency, f, m, n
-        |      FROM per, nw),
-        |rs AS (SELECT user_id, 6 - (CASE WHEN rk * 5 <= n THEN 1
-        |    WHEN rk * 5 <= n * 2 THEN 2 WHEN rk * 5 <= n * 3 THEN 3
-        |    WHEN rk * 5 <= n * 4 THEN 4 ELSE 5 END) AS r_score
-        |  FROM (SELECT user_id, n, row_number()
-        |     OVER (ORDER BY recency, user_id) AS rk FROM b) t),
-        |fs AS (SELECT user_id, CASE WHEN rk * 5 <= n THEN 1
-        |    WHEN rk * 5 <= n * 2 THEN 2 WHEN rk * 5 <= n * 3 THEN 3
-        |    WHEN rk * 5 <= n * 4 THEN 4 ELSE 5 END AS f_score
-        |  FROM (SELECT user_id, n, row_number()
-        |     OVER (ORDER BY f, user_id) AS rk FROM b) t),
-        |ms AS (SELECT user_id, CASE WHEN rk * 5 <= n THEN 1
-        |    WHEN rk * 5 <= n * 2 THEN 2 WHEN rk * 5 <= n * 3 THEN 3
-        |    WHEN rk * 5 <= n * 4 THEN 4 ELSE 5 END AS m_score
-        |  FROM (SELECT user_id, n, row_number()
-        |     OVER (ORDER BY m, user_id) AS rk FROM b) t)
-        |SELECT b.user_id, recency AS recency_days, f AS frequency,
-        | round(CAST(m AS DOUBLE) / 100.0, 2) AS monetary,
-        | r_score, f_score, m_score,
-        | r_score * 100 + f_score * 10 + m_score AS rfm
-        |FROM b JOIN rs USING (user_id) JOIN fs USING (user_id)
-        |JOIN ms USING (user_id)""".stripMargin,
-
-    // per-user ordered step arrays (ts, event_id unique tuple), 3-gram
-    // strings via zipped shifted slices, one global count
-    "w18_event_paths" ->
-      """WITH s AS (SELECT user_id,
-        |   list_transform(list(struct_pack(tsec := epoch_us(ts) // 1000000,
-        |       eid := event_id, et := event_type)
-        |     ORDER BY epoch_us(ts) // 1000000, event_id),
-        |     x -> x.et) AS steps
-        |  FROM events GROUP BY user_id),
-        |g AS (SELECT concat(steps[i], '>', steps[i + 1], '>',
-        |        steps[i + 2]) AS path
-        |      FROM s, unnest(generate_series(1,
-        |        greatest(len(steps) - 2, 0))) AS t(i))
-        |SELECT path, CAST(count(*) AS BIGINT) AS n
-        |FROM g GROUP BY path
-        |ORDER BY n DESC, path ASC LIMIT 10""".stripMargin,
-
-    // per-rank mutual-edge rate: one reversed-key self left join over
-    // the materialized auto graph
-    "embed_knn_symmetry" ->
-      s"""WITH knn AS MATERIALIZED (SELECT * FROM ($knnGraphAutoSql)),
-         |rv AS (SELECT nbr_id AS vec_id, vec_id AS nbr_id, 1 AS m
-         |       FROM knn)
-         |SELECT k.rank, CAST(count(*) AS BIGINT) AS n_edges,
-         | CAST(sum(coalesce(m, 0)) AS BIGINT) AS n_mutual,
-         | round(CAST(sum(coalesce(m, 0)) AS DOUBLE) / count(*), 4)
-         |   AS mutual_frac
-         |FROM knn k LEFT JOIN rv USING (vec_id, nbr_id)
-         |GROUP BY k.rank""".stripMargin,
-
-    "embed_ood_auto" ->
-      s"""WITH knn AS MATERIALIZED (SELECT * FROM ($knnGraphAutoSql)),
-         |g AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS n_nbrs,
-         |       list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |         list(sim ORDER BY rank)), (a, x) -> a + x) AS s
-         |      FROM knn GROUP BY vec_id)
-         |SELECT vec_id, n_nbrs, round(s / n_nbrs, 6) AS avg_sim,
-         | round(1.0::DOUBLE - s / n_nbrs, 6) AS ood
-         |FROM g""".stripMargin,
-
-    // each path nests the full brute chain at its truncation (the
-    // ann_recall derived-table pattern); recall is integer hits / truth
-    "embed_matryoshka" ->
-      s"""WITH truth AS (${matryoshkaTopSql(None)}),
-         |tn AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth),
-         |p8 AS (SELECT 8 AS dims, CAST(count(*) AS BIGINT) AS n_hits
-         |  FROM (${matryoshkaTopSql(Some(8))}) x
-         |  JOIN truth USING (query_id, nbr_id)),
-         |p16 AS (SELECT 16 AS dims, CAST(count(*) AS BIGINT) AS n_hits
-         |  FROM (${matryoshkaTopSql(Some(16))}) x
-         |  JOIN truth USING (query_id, nbr_id)),
-         |p32 AS (SELECT 32 AS dims, CAST(count(*) AS BIGINT) AS n_hits
-         |  FROM (${matryoshkaTopSql(Some(32))}) x
-         |  JOIN truth USING (query_id, nbr_id)),
-         |u AS (SELECT * FROM p8 UNION ALL SELECT * FROM p16
-         |      UNION ALL SELECT * FROM p32)
-         |SELECT dims, n_hits, n_truth,
-         | round(CAST(n_hits AS DOUBLE) / n_truth, 4) AS recall
-         |FROM u, tn""".stripMargin,
-
-    // identical orientation to the census; each triangle credits its
-    // three corners via UNION ALL, coeff = 2T/(d(d−1)) over deg ≥ 2
-    "graph_clustering" ->
-      """WITH edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
-        |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM
-        |  (SELECT a AS node FROM edges UNION ALL SELECT b FROM edges) n
-        |  GROUP BY node),
-        |ori AS (
-        |  SELECT CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.a ELSE e.b END AS u,
-        |         CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.b ELSE e.a END AS v
-        |  FROM edges e JOIN deg da ON e.a = da.node JOIN deg db ON e.b = db.node),
-        |tri AS (SELECT e1.u AS u, e1.v AS x, e2.v AS y
-        |  FROM ori e1 JOIN ori e2 ON e1.u = e2.u AND e1.v < e2.v
-        |  JOIN edges ON e1.v = edges.a AND e2.v = edges.b),
-        |tpn AS (SELECT node, CAST(count(*) AS BIGINT) AS n_tri FROM
-        |  (SELECT u AS node FROM tri UNION ALL SELECT x FROM tri
-        |   UNION ALL SELECT y FROM tri) c GROUP BY node)
-        |SELECT d.node, d.deg,
-        | CAST(coalesce(t.n_tri, 0) AS BIGINT) AS n_tri,
-        | round(2.0::DOUBLE * coalesce(t.n_tri, 0) / (d.deg * (d.deg - 1)), 6)
-        |   AS coeff
-        |FROM deg d LEFT JOIN tpn t ON d.node = t.node
-        |WHERE d.deg >= 2""".stripMargin,
-
-    // two unrolled truss-peel rounds + a final support pass — exactly
-    // the engine's bounded-round run; triangles via the same
-    // degree-oriented wedge join as the graph_triangles oracle
-    "graph_ktruss" -> {
-      def supFrom(inE: String, tag: String) =
-        s"""deg_$tag AS (SELECT node, count(*) AS deg FROM
-           |  (SELECT a AS node FROM $inE UNION ALL SELECT b FROM $inE) n
-           |  GROUP BY node),
-           |ori_$tag AS (
-           |  SELECT CASE WHEN (da.deg, e.a) < (db.deg, e.b)
-           |           THEN e.a ELSE e.b END AS u,
-           |         CASE WHEN (da.deg, e.a) < (db.deg, e.b)
-           |           THEN e.b ELSE e.a END AS v
-           |  FROM $inE e JOIN deg_$tag da ON e.a = da.node
-           |  JOIN deg_$tag db ON e.b = db.node),
-           |tri_$tag AS (
-           |  SELECT e1.u AS w0, e1.v AS w1, e2.v AS w2
-           |  FROM ori_$tag e1 JOIN ori_$tag e2
-           |    ON e1.u = e2.u AND e1.v < e2.v
-           |  JOIN $inE ce ON ce.a = e1.v AND ce.b = e2.v),
-           |sup_$tag AS (
-           |  SELECT a, b, CAST(count(*) AS BIGINT) AS support FROM (
-           |    SELECT least(w0, w1) AS a, greatest(w0, w1) AS b
-           |    FROM tri_$tag
-           |    UNION ALL SELECT least(w0, w2), greatest(w0, w2)
-           |    FROM tri_$tag
-           |    UNION ALL SELECT w1, w2 FROM tri_$tag) u
-           |  GROUP BY a, b)""".stripMargin
-      s"""WITH e0 AS MATERIALIZED (
-         |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-         |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
-         |${supFrom("e0", "r1")},
-         |e1 AS MATERIALIZED (SELECT e.a, e.b FROM e0 e JOIN sup_r1 s
-         |       ON e.a = s.a AND e.b = s.b AND s.support >= 2),
-         |${supFrom("e1", "r2")},
-         |e2 AS MATERIALIZED (SELECT e.a, e.b FROM e1 e JOIN sup_r2 s
-         |       ON e.a = s.a AND e.b = s.b AND s.support >= 2),
-         |${supFrom("e2", "fin")}
-         |SELECT e.a, e.b,
-         | coalesce(s.support, CAST(0 AS BIGINT)) AS support
-         |FROM e2 e LEFT JOIN sup_fin s ON e.a = s.a AND e.b = s.b"""
-        .stripMargin
-    },
-
-    // four unrolled peel rounds — exactly the engine's bounded-round run
-    "graph_kcore" ->
-      """WITH edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
-        |a1 AS (SELECT node FROM (SELECT node, count(*) AS deg FROM
-        |  (SELECT a AS node FROM edges UNION ALL SELECT b FROM edges) n
-        |  GROUP BY node) d WHERE deg >= 3),
-        |e1 AS (SELECT a, b FROM edges
-        |  WHERE a IN (SELECT node FROM a1) AND b IN (SELECT node FROM a1)),
-        |a2 AS (SELECT node FROM (SELECT node, count(*) AS deg FROM
-        |  (SELECT a AS node FROM e1 UNION ALL SELECT b FROM e1) n
-        |  GROUP BY node) d WHERE deg >= 3),
-        |e2 AS (SELECT a, b FROM e1
-        |  WHERE a IN (SELECT node FROM a2) AND b IN (SELECT node FROM a2)),
-        |a3 AS (SELECT node FROM (SELECT node, count(*) AS deg FROM
-        |  (SELECT a AS node FROM e2 UNION ALL SELECT b FROM e2) n
-        |  GROUP BY node) d WHERE deg >= 3),
-        |e3 AS (SELECT a, b FROM e2
-        |  WHERE a IN (SELECT node FROM a3) AND b IN (SELECT node FROM a3)),
-        |a4 AS (SELECT node FROM (SELECT node, count(*) AS deg FROM
-        |  (SELECT a AS node FROM e3 UNION ALL SELECT b FROM e3) n
-        |  GROUP BY node) d WHERE deg >= 3),
-        |e4 AS (SELECT a, b FROM e3
-        |  WHERE a IN (SELECT node FROM a4) AND b IN (SELECT node FROM a4))
-        |SELECT node, CAST(count(*) AS BIGINT) AS deg FROM
-        | (SELECT a AS node FROM e4 UNION ALL SELECT b FROM e4) nn
-        |GROUP BY node""".stripMargin,
-
-    // rest-side moments subtracted from the total; every product cast
-    // to double operand-for-operand as the engine writes it
-    "stats_welch" ->
-      """WITH b AS (SELECT source, CAST(count(*) AS BIGINT) AS n1,
-        |    CAST(sum(n_chars) AS BIGINT) AS s1,
-        |    sum(n_chars * n_chars) AS q1
-        |  FROM documents GROUP BY 1),
-        |tt AS (SELECT CAST(count(*) AS BIGINT) AS nt,
-        |    CAST(sum(n_chars) AS BIGINT) AS st,
-        |    sum(n_chars * n_chars) AS qt FROM documents),
-        |j AS (SELECT source, n1, s1, q1, nt - n1 AS n2, st - s1 AS s2,
-        |       qt - q1 AS q2 FROM b, tt WHERE n1 > 1 AND nt - n1 > 1),
-        |f AS (SELECT source, n1,
-        |   CAST(s1 AS DOUBLE) / n1 AS m1, CAST(s2 AS DOUBLE) / n2 AS m2,
-        |   (CAST(n1 AS DOUBLE) * q1 - CAST(s1 AS DOUBLE) * s1)
-        |     / (CAST(n1 AS DOUBLE) * (n1 - 1)) AS v1,
-        |   (CAST(n2 AS DOUBLE) * q2 - CAST(s2 AS DOUBLE) * s2)
-        |     / (CAST(n2 AS DOUBLE) * (n2 - 1)) AS v2,
-        |   n2 FROM j)
-        |SELECT source, n1 AS n, round(m1, 6) AS mean_chars,
-        | round((m1 - m2) / sqrt(v1 / n1 + v2 / n2), 6) AS welch_t
-        |FROM f""".stripMargin,
-
-    // the identical closed-form 2-regressor OLS per direction; every
-    // centered co-moment is the mirrored double product of exact
-    // integer sums, guards mirror as CASE WHEN
-    "t30_granger" ->
-      """WITH daily AS (
-        |  SELECT epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |     AS BIGINT) AS ck,
-        |   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |     AS BIGINT) AS pu
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |  GROUP BY 1),
-        |span AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
-        |grid AS (
-        |  SELECT g.day, coalesce(ck, 0) AS ck, coalesce(pu, 0) AS pu
-        |  FROM (SELECT unnest(generate_series(d0, d1)) AS day FROM span) g
-        |  LEFT JOIN daily USING (day)),
-        |lg AS (SELECT day, ck, pu,
-        |   lag(ck) OVER (ORDER BY day) AS ck1,
-        |   lag(pu) OVER (ORDER BY day) AS pu1 FROM grid),
-        |l2 AS (SELECT * FROM lg WHERE ck1 IS NOT NULL),
-        |cm AS (
-        |  SELECT 'click->purchase' AS direction,
-        |   CAST(count(*) AS BIGINT) AS n,
-        |   CAST(sum(pu1) AS BIGINT) AS su, CAST(sum(ck1) AS BIGINT) AS sv,
-        |   CAST(sum(pu) AS BIGINT) AS sy,
-        |   CAST(sum(pu1*pu1) AS BIGINT) AS suu,
-        |   CAST(sum(ck1*ck1) AS BIGINT) AS svv,
-        |   CAST(sum(pu1*ck1) AS BIGINT) AS suv,
-        |   CAST(sum(pu1*pu) AS BIGINT) AS suy,
-        |   CAST(sum(ck1*pu) AS BIGINT) AS svy,
-        |   CAST(sum(pu*pu) AS BIGINT) AS syy
-        |  FROM l2
-        |  UNION ALL
-        |  SELECT 'purchase->click',
-        |   CAST(count(*) AS BIGINT),
-        |   CAST(sum(ck1) AS BIGINT), CAST(sum(pu1) AS BIGINT),
-        |   CAST(sum(ck) AS BIGINT),
-        |   CAST(sum(ck1*ck1) AS BIGINT), CAST(sum(pu1*pu1) AS BIGINT),
-        |   CAST(sum(ck1*pu1) AS BIGINT), CAST(sum(ck1*ck) AS BIGINT),
-        |   CAST(sum(pu1*ck) AS BIGINT), CAST(sum(ck*ck) AS BIGINT)
-        |  FROM l2),
-        |ac AS (SELECT direction, n,
-        |   CAST(n AS DOUBLE) * suu - CAST(su AS DOUBLE) * su AS auu,
-        |   CAST(n AS DOUBLE) * svv - CAST(sv AS DOUBLE) * sv AS avv,
-        |   CAST(n AS DOUBLE) * suv - CAST(su AS DOUBLE) * sv AS auv,
-        |   CAST(n AS DOUBLE) * suy - CAST(su AS DOUBLE) * sy AS auy,
-        |   CAST(n AS DOUBLE) * svy - CAST(sv AS DOUBLE) * sy AS avy,
-        |   CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy AS ayy
-        |  FROM cm),
-        |dd AS (SELECT direction, n, auu, avv, auv, auy, avy, ayy,
-        |   auu * avv - auv * auv AS det FROM ac),
-        |bc AS (SELECT direction, n, auy, avy, ayy, auu, det,
-        |   CASE WHEN det <> 0.0::DOUBLE
-        |     THEN (auy * avv - avy * auv) / det END AS b,
-        |   CASE WHEN det <> 0.0::DOUBLE
-        |     THEN (avy * auu - auy * auv) / det END AS c
-        |  FROM dd),
-        |q AS (SELECT direction, n, b, c, det,
-        |   ayy - auy * auy / auu AS qr,
-        |   ayy - b * auy - c * avy AS qu
-        |  FROM bc),
-        |f AS (SELECT direction, n, b, c,
-        |   CASE WHEN det <> 0.0::DOUBLE AND qu > 0.0::DOUBLE
-        |     THEN (qr - qu) * (CAST(n AS DOUBLE) - 3.0::DOUBLE) / qu
-        |   END AS fv
-        |  FROM q)
-        |SELECT direction, n, round(b, 6) AS ar_coef,
-        | round(c, 6) AS causal_coef, round(fv, 6) AS f_stat,
-        | fv > 4.0::DOUBLE AS granger
-        |FROM f""".stripMargin,
-
-    // dense-grid x = day index, y = count; dx/dy/cv are the n-scaled
-    // exact-integer co-moments cast to double operand-for-operand
-    "t17_ols" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day - g.d0 AS x, coalesce(d.c, 0) AS y
-        |  FROM (SELECT event_type, d0,
-        |         unnest(generate_series(d0, d1)) AS day FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-        |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |   CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |   CAST(sum(x * y) AS BIGINT) AS sxy,
-        |   CAST(sum(x * x) AS BIGINT) AS sxx,
-        |   CAST(sum(y * y) AS BIGINT) AS syy
-        |  FROM grid GROUP BY 1),
-        |f AS (SELECT event_type, n, sy, sx,
-        |   CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx AS dx,
-        |   CAST(n AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy AS dy,
-        |   CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy AS cv
-        |  FROM a)
-        |SELECT event_type, n, round(cv / dx, 6) AS slope,
-        | round((CAST(sy AS DOUBLE) - cv / dx * sx) / n, 6) AS intercept,
-        | round(cv * cv / (dx * dy), 6) AS r2
-        |FROM f WHERE dx > 0 AND dy > 0""".stripMargin,
-
-    // only the 'en' partition changes: +1000 per doc — the oracle
-    // derives the post-overwrite state from the rule
-    "k22_dynamic_overwrite" ->
-      """SELECT lang, count(*) AS n,
-        | CAST(sum(n_chars + CASE WHEN lang = 'en' THEN 1000 ELSE 0 END)
-        |   AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // PQ shortlist at k=20 (the parameterized pq chain), then exact
-    // cosine over just the candidate pairs, re-ranked to top-5
-    "ann_rerank" -> annRerankSql,
-
-    // both layouts replay deterministically (rank buckets / hash32 % 8);
-    // sweep: +1 at min, −1 at max+1, depth·len weighted mean
-    "layout_depth" ->
-      s"""WITH ev AS (SELECT event_id FROM events),
-         |mm AS (SELECT max(event_id) AS mx FROM ev),
-         |cl AS (SELECT 'range' AS layout,
-         |        event_id * 8 // (mx + 1) AS f, event_id FROM ev, mm),
-         |hs AS (SELECT 'hash' AS layout,
-         |        ${hash32Sql("(event_id)")} % 8 AS f, event_id FROM ev),
-         |mf AS (SELECT layout, f, min(event_id) AS mn, max(event_id) AS mx
-         |       FROM (SELECT * FROM cl UNION ALL SELECT * FROM hs) u
-         |       GROUP BY 1, 2),
-         |pts AS (SELECT layout, t, CAST(sum(delta) AS BIGINT) AS delta FROM
-         |  (SELECT layout, mn AS t, 1 AS delta FROM mf
-         |   UNION ALL SELECT layout, mx + 1, -1 FROM mf) p GROUP BY 1, 2),
-         |seg AS (SELECT layout,
-         |   sum(delta) OVER (PARTITION BY layout ORDER BY t) AS depth,
-         |   lead(t) OVER (PARTITION BY layout ORDER BY t) - t AS len
-         |  FROM pts)
-         |SELECT layout, CAST(max(depth) AS BIGINT) AS max_depth,
-         | round(CAST(sum(depth * len) AS DOUBLE) / sum(len), 6) AS avg_depth
-         |FROM seg WHERE len IS NOT NULL AND depth > 0
-         |GROUP BY 1""".stripMargin,
-
-    // ×420 integers make the centered moving average integral (420 =
-    // lcm 4..7); the weekday fold is ordered so sums can't reorder
-    "t18_decompose" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-        |det AS (
-        |  SELECT event_type, day, (day + 4) % 7 AS weekday,
-        |   420 * c - (sum(c) OVER w * (420 // count(*) OVER w)) AS det
-        |  FROM grid
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day
-        |               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |byw AS (SELECT event_type, weekday,
-        |   CAST(count(*) AS BIGINT) AS n_days,
-        |   CAST(sum(det) AS BIGINT) AS s_num
-        |  FROM det GROUP BY 1, 2),
-        |tot AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |   CAST(sum(det) AS BIGINT) AS sd,
-        |   CAST(sum(det * det) AS BIGINT) AS sdd
-        |  FROM det GROUP BY 1),
-        |arrs AS (SELECT event_type,
-        |   list([CAST(s_num AS DOUBLE), CAST(n_days AS DOUBLE)]
-        |     ORDER BY weekday) AS arr
-        |  FROM byw GROUP BY 1),
-        |st AS (SELECT a.event_type,
-        |   list_reduce(list_prepend(0.0::DOUBLE,
-        |     list_transform(a.arr, x -> x[1] * x[1] / x[2])),
-        |     (acc, x) -> acc + x) AS ssb,
-        |   CAST(t.sdd AS DOUBLE) - CAST(t.sd AS DOUBLE) * t.sd / t.n AS sst
-        |  FROM arrs a JOIN tot t ON a.event_type = t.event_type),
-        |str AS (SELECT event_type,
-        |   round(greatest(0.0::DOUBLE,
-        |     1.0::DOUBLE - (sst - ssb) / sst), 6) AS strength FROM st
-        |  WHERE sst > 0)
-        |SELECT b.event_type, b.weekday, b.n_days,
-        | round(CAST(b.s_num AS DOUBLE) / (b.n_days * 420), 6) AS seasonal,
-        | s.strength
-        |FROM byw b JOIN str s ON b.event_type = s.event_type""".stripMargin,
-
-    // bloom position sets replayed with the shared FNV chain; qualified
-    // = both probe positions present in the file group's set
-    "k23_bloom_skip" ->
-      s"""WITH ev AS (SELECT event_id, user_id,
-         |    ${hash32Sql("(event_id)")} % 8 AS g FROM events),
-         |seeds AS (SELECT unnest(generate_series(0, 1)) AS i),
-         |bpos AS (SELECT DISTINCT g,
-         |    ${fnvSql("CAST(user_id AS VARCHAR) || '#' || i")} % 4096 AS p
-         |  FROM ev, seeds),
-         |probes AS (SELECT CAST(u AS BIGINT) AS probe_user
-         |           FROM (VALUES (1), (2), (-999)) t(u)),
-         |pp AS (SELECT probe_user,
-         |    ${fnvSql("CAST(probe_user AS VARCHAR) || '#0'")} % 4096 AS p0,
-         |    ${fnvSql("CAST(probe_user AS VARCHAR) || '#1'")} % 4096 AS p1
-         |  FROM probes),
-         |qual AS (SELECT pp.probe_user, b0.g FROM pp
-         |         JOIN bpos b0 ON b0.p = pp.p0
-         |         JOIN bpos b1 ON b1.g = b0.g AND b1.p = pp.p1),
-         |ag AS (SELECT probe_user, CAST(count(*) AS BIGINT)
-         |         AS n_files_qualified FROM qual GROUP BY 1),
-         |rws AS (SELECT q.probe_user, CAST(count(*) AS BIGINT) AS n_rows,
-         |         CAST(sum(e.event_id) AS BIGINT) AS sum_id
-         |        FROM qual q JOIN ev e
-         |          ON e.g = q.g AND e.user_id = q.probe_user GROUP BY 1)
-         |SELECT p.probe_user,
-         | CAST(coalesce(a.n_files_qualified, 0) AS BIGINT)
-         |   AS n_files_qualified,
-         | CAST(coalesce(r.n_rows, 0) AS BIGINT) AS n_rows,
-         | CAST(coalesce(r.sum_id, 0) AS BIGINT) AS sum_id
-         |FROM probes p LEFT JOIN ag a USING (probe_user)
-         |LEFT JOIN rws r USING (probe_user)""".stripMargin,
-
-    // 9-element LIST state [l, b, s1..s7] — the fold shape this DuckDB
-    // reduces correctly (t14 caveat); l' repeated textually in b'/s'
-    "t19_holt_winters" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-        |s AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-        |       list(CAST(c AS DOUBLE) ORDER BY day) AS xs
-        |      FROM grid GROUP BY 1),
-        |f AS (SELECT event_type, n_days,
-        |  list_reduce(list_prepend(
-        |    [xs[1], 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE,
-        |     0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE],
-        |    list_transform(xs[2:], x ->
-        |      [x, 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE,
-        |       0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE])),
-        |    (acc, x) -> list_concat(list_concat(
-        |      [0.5::DOUBLE * (x[1] - acc[3])
-        |         + 0.5::DOUBLE * (acc[1] + acc[2]),
-        |       0.25::DOUBLE * ((0.5::DOUBLE * (x[1] - acc[3])
-        |           + 0.5::DOUBLE * (acc[1] + acc[2])) - acc[1])
-        |         + 0.75::DOUBLE * acc[2]],
-        |      acc[4:9]),
-        |      [0.25::DOUBLE * (x[1] - (0.5::DOUBLE * (x[1] - acc[3])
-        |          + 0.5::DOUBLE * (acc[1] + acc[2])))
-        |        + 0.75::DOUBLE * acc[3]])) AS st
-        |  FROM s)
-        |SELECT event_type, n_days, round(st[1], 6) AS level,
-        | round(st[2], 6) AS trend,
-        | round(st[1] + st[2] + st[3], 6) AS forecast
-        |FROM f""".stripMargin,
-
-    // both read paths must agree — the DV contract; the oracle is the
-    // filtered aggregate twice
-    "k24_deletion_vectors" ->
-      """WITH kept AS (SELECT * FROM documents WHERE doc_id % 13 <> 0),
-        |a AS (SELECT count(*) AS n_rows,
-        |   CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |   count(DISTINCT lang) AS n_langs FROM kept)
-        |SELECT 'merge_on_read' AS read_path, n_rows, sum_chars, n_langs
-        |FROM a
-        |UNION ALL
-        |SELECT 'compacted', n_rows, sum_chars, n_langs FROM a""".stripMargin,
-
-    // first-occurrence map over the jaccard shingle convention
-    "text_novelty" ->
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, a[i] || ' ' || a[i+1] || ' ' || a[i+2] AS sh
-        |  FROM arrs, unnest(generate_series(1, greatest(len(a)-2, 0))) AS t(i)
-        |  WHERE len(a) >= 3),
-        |fo AS (SELECT sh, min(doc_id) AS first_doc FROM sh GROUP BY 1)
-        |SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-        | CAST(sum(CASE WHEN f.first_doc = s.doc_id THEN 1 ELSE 0 END)
-        |   AS BIGINT) AS n_novel,
-        | round(CAST(sum(CASE WHEN f.first_doc = s.doc_id THEN 1 ELSE 0 END)
-        |   AS DOUBLE) / count(*), 6) AS novelty
-        |FROM sh s JOIN fo f USING (sh) GROUP BY 1""".stripMargin,
-
-    // target == source after a DOUBLE ingest — idempotence is the gate;
-    // the 4 logged files are the repartition(4) source layout
-    "k26_copy_into" ->
-      """SELECT count(*) AS n_rows, CAST(sum(doc_id) AS BIGINT) AS sum_ids,
-        | CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        | CAST(4 AS BIGINT) AS n_files_logged
-        |FROM documents""".stripMargin,
-
-    // frame-energy fold → peak windows → consecutive-peak landmarks →
-    // FNV of the gap|q|q triple (signed BIGINT) → order-free XOR fold
-    "mm_audio_fp" ->
-      s"""WITH fr AS (
-         |  SELECT doc_id, text, i AS off
-         |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-         |e AS (
-         |  SELECT doc_id, off,
-         |   list_reduce(list_prepend(0::BIGINT, list_transform(
-         |     regexp_split_to_array(substr(text, off + 1, 16), ''),
-         |     c -> unicode(c)::BIGINT * unicode(c)::BIGINT)),
-         |    (a, b) -> a + b) AS energy
-         |  FROM fr),
-         |pk AS (SELECT doc_id, off, energy,
-         |        lag(energy) OVER (PARTITION BY doc_id ORDER BY off) AS pe,
-         |        lead(energy) OVER (PARTITION BY doc_id ORDER BY off) AS ne
-         |       FROM e),
-         |peaks AS (SELECT doc_id, off, energy FROM pk
-         |          WHERE pe IS NOT NULL AND ne IS NOT NULL
-         |            AND energy > pe AND energy > ne),
-         |l0 AS (SELECT doc_id, off, energy,
-         |        lead(off) OVER (PARTITION BY doc_id ORDER BY off) AS nf,
-         |        lead(energy) OVER (PARTITION BY doc_id ORDER BY off) AS nen
-         |       FROM peaks),
-         |lm AS (SELECT doc_id,
-         |        CAST((nf - off) // 32 AS VARCHAR) || '|' ||
-         |        CAST(energy // 1024 AS VARCHAR) || '|' ||
-         |        CAST(nen // 1024 AS VARCHAR) AS lk
-         |       FROM l0 WHERE nf IS NOT NULL AND (nf - off) // 32 <= 8),
-         |h AS (SELECT doc_id,
-         |       CAST(CASE WHEN fu >= 9223372036854775808::HUGEINT
-         |         THEN fu - 18446744073709551616::HUGEINT ELSE fu END
-         |         AS BIGINT) AS h
-         |      FROM (SELECT doc_id, ${fnvSql("lk")} AS fu FROM lm) q),
-         |agg AS (SELECT doc_id, count(*) AS n_landmarks, bit_xor(h) AS fp
-         |        FROM h GROUP BY 1),
-         |np AS (SELECT doc_id, count(*) AS n_peaks FROM peaks GROUP BY 1)
-         |SELECT a.doc_id, CAST(n_peaks AS BIGINT) AS n_peaks,
-         | CAST(n_landmarks AS BIGINT) AS n_landmarks, fp
-         |FROM agg a JOIN np USING (doc_id)""".stripMargin,
-
-    // the landmark chain over documents + the planted clips, then the
-    // dedup_simhash vote/fold/band tail: per-bit ±1 votes over each
-    // medium's landmark hashes (HUGEINT bit extraction), signature
-    // folded in HUGEINT and wrapped to signed, four 16-bit band keys,
-    // OR-banded self-join, exact popcount <= 6
-    "mm_audio_neardup" -> audioNearDupSql,
-
-    // the frame-energy fold + run-start segmentation windows
-    "mm_vad" ->
-      """WITH fr AS (
-        |  SELECT doc_id, text, i AS off
-        |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-        |e AS (
-        |  SELECT doc_id, off,
-        |   list_reduce(list_prepend(0::BIGINT, list_transform(
-        |     regexp_split_to_array(substr(text, off + 1, 16), ''),
-        |     c -> unicode(c)::BIGINT * unicode(c)::BIGINT)),
-        |    (a, b) -> a + b) AS energy
-        |  FROM fr),
-        |v AS (SELECT doc_id, off, energy > 150000 AS voiced FROM e),
-        |st AS (SELECT doc_id, voiced,
-        |   CASE WHEN voiced AND NOT coalesce(
-        |     lag(voiced) OVER (PARTITION BY doc_id ORDER BY off), FALSE)
-        |   THEN 1 ELSE 0 END AS starts
-        |  FROM v)
-        |SELECT doc_id, count(*) AS n_frames,
-        | CAST(sum(CASE WHEN voiced THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_voiced,
-        | CAST(sum(starts) AS BIGINT) AS n_segments,
-        | round(CAST(sum(CASE WHEN voiced THEN 1 ELSE 0 END) AS DOUBLE)
-        |   / count(*), 6) AS voiced_ratio
-        |FROM st GROUP BY 1""".stripMargin,
-
-    "t24_heatmap" ->
-      """WITH cells AS (
-        |  SELECT (epoch_us(ts) // 1000000 // 86400 + 4) % 7 AS dow,
-        |   epoch_us(ts) // 1000000 // 3600 % 24 AS hour,
-        |   CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM cells)
-        |SELECT dow, hour, n, round(CAST(n AS DOUBLE) / nt, 6) AS share
-        |FROM cells, t""".stripMargin,
-
-    // the serving-side PSI fold replayed from the golden window cells
-    // (00:00 skews low: bins 3/1/0; 00:10 skews high: 0/1/2)
-    "st_psi" ->
-      """WITH cells AS (SELECT col0 AS w_start, CAST(col1 AS BIGINT) AS b,
-        |    CAST(col2 AS BIGINT) AS c
-        |  FROM (VALUES ('2024-01-01 00:00:00', 0, 3),
-        |   ('2024-01-01 00:00:00', 1, 1), ('2024-01-01 00:00:00', 2, 0),
-        |   ('2024-01-01 00:10:00', 0, 0), ('2024-01-01 00:10:00', 1, 1),
-        |   ('2024-01-01 00:10:00', 2, 2)) t),
-        |g AS (SELECT w_start, CAST(sum(c) AS BIGINT) AS n,
-        |       list([CAST(b AS DOUBLE), CAST(c AS DOUBLE)] ORDER BY b)
-        |         AS arr
-        |      FROM cells GROUP BY 1)
-        |SELECT w_start, n,
-        | round(list_reduce(list_prepend(0.0::DOUBLE,
-        |   list_transform(arr, x ->
-        |     (1.0::DOUBLE / 3 - (x[2] + 1.0::DOUBLE) / (n + 3))
-        |     * ln((1.0::DOUBLE / 3) / ((x[2] + 1.0::DOUBLE) / (n + 3))))),
-        |   (acc, v) -> acc + v), 6) AS psi
-        |FROM g""".stripMargin,
-
-    // ASOF LEFT JOIN + the staleness CASE; a null match stays null and
-    // dropped_stale coalesces to false on both engines
-    "w9_asof_tolerance" ->
-      """WITH purchases AS (
-        |  SELECT event_id, ts, user_id FROM events
-        |  WHERE event_type = 'purchase'),
-        |views AS (
-        |  SELECT user_id, ts, max(event_id) AS view_id
-        |  FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-        |SELECT p.event_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
-        | CASE WHEN epoch_us(p.ts) // 1000000 - epoch_us(v.ts) // 1000000
-        |        > 3600 THEN NULL ELSE v.view_id END AS view_id,
-        | coalesce(epoch_us(p.ts) // 1000000 - epoch_us(v.ts) // 1000000
-        |   > 3600, FALSE) AS dropped_stale
-        |FROM purchases p ASOF LEFT JOIN views v
-        | ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin,
-
-    // char-length folds over the line split, mirrored
-    "text_line_stats" ->
-      """WITH t AS (SELECT doc_id, string_split(text, chr(10)) AS ls
-        |           FROM documents),
-        |f AS (SELECT doc_id, ls,
-        |   CAST(len(ls) AS BIGINT) AS n_lines,
-        |   CAST(len(list_filter(ls, x -> length(x) = 0)) AS BIGINT)
-        |     AS n_blank,
-        |   CAST(list_reduce(list_prepend(0::BIGINT,
-        |     list_transform(list_filter(ls, x -> length(x) > 0),
-        |       x -> length(x)::BIGINT)), (a, b) -> a + b) AS BIGINT)
-        |     AS sum_len
-        |  FROM t)
-        |SELECT doc_id, n_lines, n_blank,
-        | round(CAST(n_blank AS DOUBLE) / n_lines, 6) AS blank_ratio,
-        | CASE WHEN n_lines - n_blank > 0 THEN
-        |   round(CAST(sum_len AS DOUBLE) / (n_lines - n_blank), 6)
-        | END AS mean_line_len
-        |FROM f""".stripMargin,
-
-    // query-term positional postings, pos div 16 buckets, argmax by
-    // (hits DESC, bucket ASC)
-    "search_snippet" ->
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM documents),
-        |p AS (SELECT doc_id, unnest(a) AS term,
-        |       generate_subscripts(a, 1) - 1 AS pos FROM arrs),
-        |h AS (SELECT doc_id, pos // 16 AS bucket,
-        |       CAST(count(*) AS BIGINT) AS n_hits
-        |      FROM p WHERE term IN ('scan', 'join', 'merge')
-        |      GROUP BY 1, 2),
-        |r AS (SELECT doc_id, bucket, n_hits,
-        |       CAST(sum(n_hits) OVER (PARTITION BY doc_id) AS BIGINT)
-        |         AS total_hits,
-        |       row_number() OVER (PARTITION BY doc_id
-        |         ORDER BY n_hits DESC, bucket ASC) AS rn FROM h)
-        |SELECT doc_id, bucket AS best_bucket, n_hits AS best_hits,
-        | total_hits
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    // full-grid add-one smoothing; the PSI fold is ordered over the
-    // 101 bins with every operand mirrored (ln on identical doubles)
-    "stats_psi" ->
-      """WITH ev AS (SELECT epoch_us(ts) // 1000000 // 86400 AS day,
-        |    CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |m AS (SELECT (min(day) + max(day)) // 2 AS mid FROM ev),
-        |bn AS (SELECT CASE WHEN day <= mid THEN 0 ELSE 1 END AS h,
-        |        greatest(-50, least(50, cents // 100)) AS b,
-        |        CAST(count(*) AS BIGINT) AS c
-        |       FROM ev, m GROUP BY 1, 2),
-        |tot AS (SELECT h, CAST(sum(c) AS BIGINT) AS n FROM bn GROUP BY 1),
-        |grid AS (SELECT g.b, coalesce(b0.c, 0) AS c0,
-        |         coalesce(b1.c, 0) AS c1
-        |        FROM (SELECT unnest(generate_series(-50, 50)) AS b) g
-        |        LEFT JOIN bn b0 ON b0.h = 0 AND b0.b = g.b
-        |        LEFT JOIN bn b1 ON b1.h = 1 AND b1.b = g.b),
-        |nn0 AS (SELECT n AS n0 FROM tot WHERE h = 0),
-        |nn1 AS (SELECT n AS n1 FROM tot WHERE h = 1),
-        |ag AS (SELECT CAST(max(n0) AS BIGINT) AS n_ref,
-        |        CAST(max(n1) AS BIGINT) AS n_cur,
-        |        CAST(count(*) AS BIGINT) AS n_bins,
-        |        list([CAST(b AS DOUBLE), CAST(c0 AS DOUBLE),
-        |              CAST(c1 AS DOUBLE), CAST(n0 AS DOUBLE),
-        |              CAST(n1 AS DOUBLE)] ORDER BY b) AS arr
-        |       FROM grid, nn0, nn1)
-        |SELECT n_ref, n_cur, n_bins,
-        | round(list_reduce(list_prepend(0.0::DOUBLE,
-        |   list_transform(arr, x ->
-        |     ((x[2] + 1.0::DOUBLE) / (x[4] + 101.0::DOUBLE)
-        |      - (x[3] + 1.0::DOUBLE) / (x[5] + 101.0::DOUBLE))
-        |     * ln(((x[2] + 1.0::DOUBLE) / (x[4] + 101.0::DOUBLE))
-        |        / ((x[3] + 1.0::DOUBLE) / (x[5] + 101.0::DOUBLE))))),
-        |   (acc, v) -> acc + v), 6) AS psi
-        |FROM ag""".stripMargin,
-
-    // pack_e2e chain + the waste division mirrored
-    "pack_efficiency" ->
-      """WITH tc AS (
-        |  SELECT doc_id,
-        |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '')) AS nt
-        |  FROM documents),
-        |r AS (SELECT doc_id, nt,
-        |       row_number() OVER (ORDER BY nt DESC, doc_id) AS rk FROM tc),
-        |a AS (SELECT doc_id, nt,
-        |  CASE WHEN ((rk-1) // 8) % 2 = 0 THEN (rk-1) % 8
-        |       ELSE 7 - (rk-1) % 8 END AS shard FROM r),
-        |o AS (SELECT shard, nt,
-        |  coalesce(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-        |  FROM a)
-        |SELECT CAST(shard AS INT) AS shard, count(*) AS n_docs,
-        | CAST(sum(nt) AS BIGINT) AS sum_tokens,
-        | CAST(max(cb // 2048) + 1 AS BIGINT) AS n_seqs,
-        | round(CAST((max(cb // 2048) + 1) * 2048 - sum(nt) AS DOUBLE)
-        |   / ((max(cb // 2048) + 1) * 2048), 6) AS waste
-        |FROM o GROUP BY 1""".stripMargin,
-
-    // global doubled average ranks (rank() + tie-count windows), the
-    // engine's histogram form is identical by construction; H and the
-    // tie correction mirrored operand-for-operand
-    // lag-7 over the zero-filled grid; integer counts, one division
-    "t33_week_over_week" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-        |l AS (SELECT event_type, day, c,
-        |   lag(c, 7) OVER (PARTITION BY event_type ORDER BY day) AS c7
-        |  FROM grid)
-        |SELECT event_type, day, c, c7,
-        | round(CAST(c - c7 AS DOUBLE) / c7, 6) AS wow
-        |FROM l WHERE c7 IS NOT NULL AND c7 > 0""".stripMargin,
-
-    // R/n1/n2 exact integers off two lag windows over the compressed
-    // sign sequence; z uses IEEE-exact division/sqrt only
-    "stats_runs_test" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-        |s1 AS (SELECT event_type, day, c,
-        |   lag(c, 1) OVER (PARTITION BY event_type ORDER BY day) AS prev
-        |  FROM grid),
-        |sg AS (SELECT event_type, day,
-        |   CASE WHEN c > prev THEN 1 ELSE -1 END AS sgn
-        |  FROM s1 WHERE prev IS NOT NULL AND c <> prev),
-        |rr AS (SELECT event_type, sgn,
-        |   lag(sgn, 1) OVER (PARTITION BY event_type ORDER BY day) AS psgn
-        |  FROM sg),
-        |ag AS (SELECT event_type,
-        |   CAST(sum(CASE WHEN sgn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |   CAST(sum(CASE WHEN sgn = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |   CAST(sum(CASE WHEN psgn IS NULL OR psgn <> sgn
-        |     THEN 1 ELSE 0 END) AS BIGINT) AS r
-        |  FROM rr GROUP BY 1),
-        |f AS (SELECT event_type, n1, n2, r,
-        |   CAST(n1 + n2 AS DOUBLE) AS nn,
-        |   2.0::DOUBLE * n1 * n2 / CAST(n1 + n2 AS DOUBLE) + 1.0 AS mu,
-        |   2.0::DOUBLE * n1 * n2 *
-        |     (2.0::DOUBLE * n1 * n2 - CAST(n1 + n2 AS DOUBLE)) /
-        |     (CAST(n1 + n2 AS DOUBLE) * CAST(n1 + n2 AS DOUBLE) *
-        |      (CAST(n1 + n2 AS DOUBLE) - 1.0)) AS v
-        |  FROM ag WHERE n1 > 0 AND n2 > 0)
-        |SELECT event_type, n1, n2, r, round(mu, 6) AS mu_runs,
-        | round((CAST(r AS DOUBLE) - mu) / sqrt(v), 6) AS z
-        |FROM f WHERE v > 0""".stripMargin,
-
-    // lower-median rank rule over (slope, di, dj) / (b0, day) — the
-    // pick is engine-exact; slopes are IEEE divisions of exact integers
-    "t31_theil_sen" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS MATERIALIZED (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-        |sl AS (SELECT a.event_type, a.day AS di, b.day AS dj,
-        |   CAST(b.c - a.c AS DOUBLE) / CAST(b.day - a.day AS DOUBLE) AS sl
-        |  FROM grid a JOIN grid b
-        |  ON a.event_type = b.event_type AND a.day < b.day),
-        |sr AS (SELECT event_type, sl,
-        |   row_number() OVER (PARTITION BY event_type
-        |     ORDER BY sl, di, dj) AS rn,
-        |   count(*) OVER (PARTITION BY event_type) AS np
-        |  FROM sl),
-        |sm AS (SELECT event_type, sl AS slope, np FROM sr
-        |       WHERE rn = CAST(floor((np - 1) * 0.5) AS BIGINT) + 1),
-        |ic AS (SELECT g.event_type, g.day,
-        |   CAST(g.c AS DOUBLE) - sm.slope * g.day AS b0, sm.slope, sm.np,
-        |   row_number() OVER (PARTITION BY g.event_type
-        |     ORDER BY CAST(g.c AS DOUBLE) - sm.slope * g.day, g.day) AS rn,
-        |   count(*) OVER (PARTITION BY g.event_type) AS n
-        |  FROM grid g JOIN sm ON g.event_type = sm.event_type)
-        |SELECT event_type, n AS n_days, np AS n_pairs,
-        | round(slope, 6) AS slope, round(b0, 6) AS intercept
-        |FROM ic WHERE rn = CAST(floor((n - 1) * 0.5) AS BIGINT) + 1"""
-        .stripMargin,
-
-    // 128 integer bucket counts (map-side mergeable), estimate = bucket
-    // upper edge at the cumulative cut, exact = value-histogram rank
-    // rule — the error column is the gate
-    "sketch_quantile_hist" ->
-      """WITH ev AS (SELECT CAST(round(value * 100) AS BIGINT) AS vc
-        |            FROM events),
-        |bd AS (SELECT min(vc) AS lo, max(vc) AS hi,
-        |        CAST(count(*) AS BIGINT) AS n FROM ev),
-        |bk AS (SELECT CAST((vc - lo) * 128 // (hi - lo + 1) AS INT) AS b,
-        |        count(*) AS cnt FROM ev, bd GROUP BY 1),
-        |cm AS (SELECT b, sum(cnt) OVER (ORDER BY b
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |       FROM bk),
-        |hv AS (SELECT vc, sum(c) OVER (ORDER BY vc
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumv
-        |       FROM (SELECT vc, count(*) AS c FROM ev GROUP BY 1) h),
-        |qs AS (SELECT unnest([0.5::DOUBLE, 0.9::DOUBLE,
-        |        0.99::DOUBLE]) AS q),
-        |est AS (SELECT q,
-        |   (SELECT min(b) FROM cm, bd
-        |    WHERE cum >= CAST(ceil(q * n) AS BIGINT)) AS bq
-        |  FROM qs),
-        |ex AS (SELECT q,
-        |   (SELECT CAST(min(vc) AS DOUBLE) / 100.0 FROM hv, bd
-        |    WHERE cumv >= CAST(ceil(q * n) AS BIGINT)) AS exact
-        |  FROM qs),
-        |f AS (SELECT est.q,
-        |   round((lo + (bq + 1) * CAST(hi - lo + 1 AS DOUBLE) / 128.0)
-        |     / 100.0, 6) AS est,
-        |   round(exact, 6) AS exact
-        |  FROM est JOIN ex USING (q), bd)
-        |SELECT q, est, exact, round(abs(est - exact), 6) AS abs_err
-        |FROM f""".stripMargin,
-
-    // exact integer cells, mirrored divisions, IEEE-exact sqrt
-    "stats_prop_ztest" ->
-      """WITH conv AS (SELECT user_id,
-        |   CAST(max(CASE WHEN event_type = 'purchase'
-        |     AND round(value * 100) >= 9500 THEN 1 ELSE 0 END)
-        |     AS BIGINT) AS converted,
-        |   user_id % 2 = 0 AS arma
-        |  FROM events GROUP BY user_id),
-        |a AS (SELECT
-        |   CAST(sum(CASE WHEN arma THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |   CAST(sum(CASE WHEN arma THEN converted ELSE 0 END) AS BIGINT)
-        |     AS x1,
-        |   CAST(sum(CASE WHEN NOT arma THEN 1 ELSE 0 END) AS BIGINT)
-        |     AS n2,
-        |   CAST(sum(CASE WHEN NOT arma THEN converted ELSE 0 END)
-        |     AS BIGINT) AS x2
-        |  FROM conv),
-        |f AS (SELECT n1, x1, n2, x2,
-        |   CAST(x1 AS DOUBLE) / n1 AS p1, CAST(x2 AS DOUBLE) / n2 AS p2,
-        |   CAST(x1 + x2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE) AS pp
-        |  FROM a)
-        |SELECT n1, x1, n2, x2, round(p1, 6) AS p1, round(p2, 6) AS p2,
-        | round((p1 - p2) / sqrt(pp * (1.0::DOUBLE - pp) *
-        |   (1.0::DOUBLE / n1 + 1.0::DOUBLE / n2)), 6) AS z
-        |FROM f WHERE pp > 0 AND pp < 1""".stripMargin,
-
-    // integer S and tie-corrected variance off the dense-grid pair
-    // join; the one division and sqrt are IEEE-exact
-    "stats_mann_kendall" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS MATERIALIZED (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-        |sp AS (SELECT a.event_type,
-        |   CAST(sum(CASE WHEN b.c > a.c THEN 1
-        |                 WHEN b.c < a.c THEN -1 ELSE 0 END) AS BIGINT) AS s
-        |  FROM grid a JOIN grid b
-        |  ON a.event_type = b.event_type AND a.day < b.day GROUP BY 1),
-        |base AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n
-        |         FROM grid GROUP BY 1),
-        |ties AS (SELECT event_type,
-        |   CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
-        |  FROM (SELECT event_type, c, count(*) AS t FROM grid
-        |        GROUP BY 1, 2) q GROUP BY 1),
-        |f AS (SELECT sp.event_type, n, s,
-        |   CAST(n * (n - 1) * (2 * n + 5) - tie_term AS DOUBLE) / 18.0
-        |     AS var_s
-        |  FROM sp JOIN base USING (event_type) JOIN ties USING (event_type))
-        |SELECT event_type, n, s, round(var_s, 6) AS var_s,
-        | round(CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1) / sqrt(var_s)
-        |            WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1) / sqrt(var_s)
-        |            ELSE 0.0 END, 6) AS z
-        |FROM f WHERE var_s > 0""".stripMargin,
-
-    // doubled average ranks within day blocks; Σ R2² folds in
-    // event_type order; tie correction all-integer until two divisions
-    "stats_friedman" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2),
-        |types AS (SELECT DISTINCT event_type FROM daily),
-        |days AS (SELECT DISTINCT day FROM daily),
-        |grid AS MATERIALIZED (
-        |  SELECT t.event_type, dd.day, coalesce(d.x, 0) AS x
-        |  FROM types t CROSS JOIN days dd
-        |  LEFT JOIN daily d
-        |  ON t.event_type = d.event_type AND dd.day = d.day),
-        |r AS (SELECT event_type, day,
-        |   2 * rank() OVER (PARTITION BY day ORDER BY x)
-        |     + count(*) OVER (PARTITION BY day, x) - 1 AS r2 FROM grid),
-        |bt AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_b,
-        |       CAST(sum(r2) AS BIGINT) AS rr2 FROM r GROUP BY 1),
-        |tie AS (SELECT CAST(coalesce(sum(t * t * t - t), 0) AS BIGINT)
-        |          AS tie3
-        |        FROM (SELECT day, x, count(*) AS t FROM grid
-        |              GROUP BY 1, 2) q),
-        |agg AS (SELECT CAST(count(*) AS BIGINT) AS k,
-        |        CAST(max(n_b) AS BIGINT) AS n,
-        |        list_reduce(list_prepend(0.0::DOUBLE,
-        |          list(CAST(rr2 AS DOUBLE) * CAST(rr2 AS DOUBLE)
-        |               ORDER BY event_type)),
-        |          (acc, x) -> acc + x) AS sr2 FROM bt),
-        |f AS (SELECT k, n,
-        |   3.0::DOUBLE * sr2 / (CAST(n AS DOUBLE) * k * (k + 1))
-        |     - 3.0::DOUBLE * CAST(n AS DOUBLE) * (k + 1) AS chi2,
-        |   1.0::DOUBLE - CAST(tie3 AS DOUBLE) /
-        |     (CAST(n AS DOUBLE) * (CAST(k AS DOUBLE) * k * k - k)) AS cc
-        |  FROM agg, tie)
-        |SELECT CAST(k AS INT) AS k, n, round(chi2, 6) AS chi2,
-        | round(chi2 / cc, 6) AS chi2_tie_corrected
-        |FROM f WHERE cc > 0""".stripMargin,
-
-    "stats_kruskal" ->
-      """WITH ev AS (SELECT event_type,
-        |    CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |r AS (SELECT event_type, cents,
-        |   2 * rank() OVER (ORDER BY cents)
-        |     + count(*) OVER (PARTITION BY cents) - 1 AS r2 FROM ev),
-        |bt AS (SELECT event_type, CAST(count(*) AS BIGINT) AS ng,
-        |       CAST(sum(r2) AS BIGINT) AS rg2 FROM r GROUP BY 1),
-        |agg AS (SELECT CAST(count(*) AS BIGINT) AS k,
-        |        CAST(sum(ng) AS BIGINT) AS n,
-        |        list_reduce(list_prepend(0.0::DOUBLE,
-        |          list(CAST(rg2 AS DOUBLE) * CAST(rg2 AS DOUBLE) /
-        |               CAST(ng AS DOUBLE) ORDER BY event_type)),
-        |          (acc, x) -> acc + x) AS s FROM bt),
-        |tie AS (SELECT CAST(sum(t * t * t - t) AS BIGINT) AS tt FROM
-        |        (SELECT count(*) AS t FROM ev GROUP BY cents) q),
-        |f AS (SELECT k, n,
-        |   3.0::DOUBLE * s / (CAST(n AS DOUBLE) * (n + 1))
-        |     - 3.0::DOUBLE * (n + 1) AS h0,
-        |   1.0::DOUBLE - CAST(tt AS DOUBLE)
-        |     / (CAST(n AS DOUBLE) * n * n - n) AS c
-        |  FROM agg, tie)
-        |SELECT k, n, round(h0, 6) AS h, round(h0 / c, 6) AS h_tie_corrected
-        |FROM f WHERE c > 0""".stripMargin,
-
-    // open/close replayed as (ts, id)-ordered row_number picks
-    "t23_ohlc" ->
-      """WITH e AS (SELECT event_type,
-        |    epoch_us(ts) // 1000000 AS tsec,
-        |    epoch_us(ts) // 1000000 // 86400 AS day, event_id,
-        |    CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |r AS (SELECT *,
-        |   row_number() OVER (PARTITION BY event_type, day
-        |     ORDER BY tsec, event_id) AS rn_a,
-        |   row_number() OVER (PARTITION BY event_type, day
-        |     ORDER BY tsec DESC, event_id DESC) AS rn_z
-        |  FROM e)
-        |SELECT event_type, day, count(*) AS n,
-        | CAST(max(CASE WHEN rn_a = 1 THEN cents END) AS BIGINT) AS open_c,
-        | max(cents) AS high_c, min(cents) AS low_c,
-        | CAST(max(CASE WHEN rn_z = 1 THEN cents END) AS BIGINT) AS close_c
-        |FROM r GROUP BY 1, 2""".stripMargin,
-
-    // golden trace: window 00:00 sees 1.0, 5.0, 0.5, 2.0; window 00:10
-    // sees 3.0 then 1.5
-    "st_ohlc" ->
-      """SELECT col0 AS w_start, CAST(col1 AS BIGINT) AS n,
-        | CAST(col2 AS DOUBLE) AS open, CAST(col3 AS DOUBLE) AS high,
-        | CAST(col4 AS DOUBLE) AS low, CAST(col5 AS DOUBLE) AS close
-        |FROM (VALUES ('2024-01-01 00:00:00', 4, 1.0, 5.0, 0.5, 2.0),
-        | ('2024-01-01 00:10:00', 2, 3.0, 3.0, 1.5, 1.5)) t""".stripMargin,
-
-    // bloom flags replayed with the shared FNV chain over the md5 key;
-    // truly_seen beside them audits the false-positive rate
-    "dedup_bloom_seen" ->
-      s"""WITH seen AS (SELECT DISTINCT md5(text) AS h FROM documents
-         |             WHERE doc_id % 3 <> 0),
-         |batch AS (SELECT doc_id, md5(text) AS h FROM documents
-         |          WHERE doc_id % 3 = 0),
-         |seeds AS (SELECT unnest(generate_series(0, 1)) AS i),
-         |pos AS (SELECT DISTINCT ${fnvSql("h || '#' || i")} % 4096 AS p
-         |        FROM seen, seeds),
-         |bp AS (SELECT doc_id, h,
-         |        ${fnvSql("h || '#0'")} % 4096 AS p0,
-         |        ${fnvSql("h || '#1'")} % 4096 AS p1 FROM batch)
-         |SELECT doc_id,
-         | (p0 IN (SELECT p FROM pos)) AND (p1 IN (SELECT p FROM pos))
-         |   AS maybe_seen,
-         | h IN (SELECT h FROM seen) AS truly_seen
-         |FROM bp""".stripMargin,
-
-    // session_window's strict merge comparator: a gap of exactly the
-    // window duration STARTS a new session (>= in new_s)
-    "w8_session_native" ->
-      """WITH e AS (SELECT user_id, ts, epoch_ms(ts) AS tms, value
-        |           FROM events),
-        |f AS (
-        |  SELECT user_id, ts, tms, value,
-        |   CASE WHEN lag(tms) OVER w IS NULL
-        |          OR tms - lag(tms) OVER w >= 900000
-        |        THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tms)),
-        |g AS (
-        |  SELECT user_id, ts, value,
-        |   sum(new_s) OVER (PARTITION BY user_id ORDER BY tms
-        |     ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM f)
-        |SELECT user_id,
-        | strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS start_str,
-        | count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sess""".stripMargin,
-
-    // one cohort min pass + one (cohort, age) distinct count
-    "stats_retention" ->
-      """WITH ev AS (SELECT user_id,
-        |    epoch_us(ts) // 1000000 // 604800 AS week FROM events),
-        |c AS (SELECT user_id, min(week) AS c_week FROM ev GROUP BY 1),
-        |sz AS (SELECT c_week, CAST(count(*) AS BIGINT) AS n_cohort
-        |       FROM c GROUP BY 1),
-        |act AS (SELECT c.c_week, e.week - c.c_week AS age_weeks,
-        |         count(DISTINCT e.user_id) AS n_active
-        |        FROM ev e JOIN c ON e.user_id = c.user_id GROUP BY 1, 2)
-        |SELECT a.c_week, a.age_weeks, a.n_active, s.n_cohort,
-        | round(CAST(a.n_active AS DOUBLE) / s.n_cohort, 6) AS retention
-        |FROM act a JOIN sz s ON a.c_week = s.c_week""".stripMargin,
-
-    // the (n1+1)(n2+1) product multiplies in BIGINT then casts — the
-    // Spark side's exact law (not a DOUBLE-typed multiply)
-    "stats_capture_recapture" ->
-      """WITH ev AS (SELECT epoch_us(ts) // 1000000 AS sec,
-        |    user_id FROM events),
-        |md AS (SELECT min(sec) AS t0 FROM ev),
-        |s AS (SELECT user_id,
-        |   max(CASE WHEN sec - t0 < 14400 THEN 1 ELSE 0 END) AS in1,
-        |   max(CASE WHEN sec - t0 >= 86400 AND sec - t0 < 100800
-        |        THEN 1 ELSE 0 END) AS in2
-        |  FROM ev, md GROUP BY 1),
-        |a AS (SELECT CAST(sum(in1) AS BIGINT) AS n1,
-        |   CAST(sum(in2) AS BIGINT) AS n2,
-        |   CAST(sum(CASE WHEN in1 = 1 AND in2 = 1 THEN 1 ELSE 0 END)
-        |     AS BIGINT) AS m
-        |  FROM s)
-        |SELECT n1, n2, m,
-        | round(CAST(CAST(n1 + 1 AS HUGEINT) * (n2 + 1) AS DOUBLE) /
-        |   CAST(m + 1 AS DOUBLE) - 1.0, 4) AS chapman
-        |FROM a""".stripMargin,
-
-    // exact integer co-moments per parity arm; the two z's and the
-    // 1.645 gate mirror textually
-    "stats_tost" ->
-      """WITH a AS (SELECT
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN n_chars ELSE 0 END) AS BIGINT) AS s1,
-        |  sum(CASE WHEN doc_id % 2 = 0 THEN n_chars * n_chars ELSE 0 END) AS q1,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 1 THEN n_chars ELSE 0 END) AS BIGINT) AS s2,
-        |  sum(CASE WHEN doc_id % 2 = 1 THEN n_chars * n_chars ELSE 0 END) AS q2
-        | FROM documents),
-        |f AS (SELECT n1, n2,
-        |  CAST(s1 AS DOUBLE) / n1 AS m1, CAST(s2 AS DOUBLE) / n2 AS m2,
-        |  (CAST(n1 AS DOUBLE) * q1 - CAST(s1 AS DOUBLE) * s1)
-        |    / (CAST(n1 AS DOUBLE) * (n1 - 1)) AS v1,
-        |  (CAST(n2 AS DOUBLE) * q2 - CAST(s2 AS DOUBLE) * s2)
-        |    / (CAST(n2 AS DOUBLE) * (n2 - 1)) AS v2,
-        |  0.05 * CAST(s1 + s2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE) AS dm
-        | FROM a),
-        |g AS (SELECT n1, n2, m1 - m2 AS delta, dm,
-        |  sqrt(v1 / n1 + v2 / n2) AS se FROM f),
-        |h AS (SELECT n1, n2, delta, dm,
-        |  (delta + dm) / se AS t_lower, (dm - delta) / se AS t_upper
-        | FROM g)
-        |SELECT n1, n2, round(delta, 6) AS delta, round(dm, 6) AS margin,
-        | round(t_lower, 6) AS t_lower, round(t_upper, 6) AS t_upper,
-        | (t_lower > 1.645 AND t_upper > 1.645) AS equivalent
-        |FROM h""".stripMargin,
-
-    // τ² = σ² is baked into the mirrored formula text; day sums round
-    // to 4 before the cumulative chain on BOTH engines
-    // the stats_welch co-moment machinery with the (1.96 + 0.8416)·se
-    // MDE formula mirrored operand-for-operand
-    "stats_power" ->
-      """WITH m AS (SELECT
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n1,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN n_chars ELSE 0 END)
-        |    AS BIGINT) AS s1,
-        |  sum(CASE WHEN doc_id % 2 = 0 THEN n_chars * n_chars
-        |    ELSE 0 END) AS q1,
-        |  CAST(sum(CASE WHEN doc_id % 2 <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n2,
-        |  CAST(sum(CASE WHEN doc_id % 2 <> 0 THEN n_chars ELSE 0 END)
-        |    AS BIGINT) AS s2,
-        |  sum(CASE WHEN doc_id % 2 <> 0 THEN n_chars * n_chars
-        |    ELSE 0 END) AS q2
-        | FROM documents),
-        |v AS (SELECT n1, n2, s1, s2,
-        |  (CAST(n1 AS DOUBLE) * q1 - CAST(s1 AS DOUBLE) * s1)
-        |    / (CAST(n1 AS DOUBLE) * (n1 - 1)) AS v1,
-        |  (CAST(n2 AS DOUBLE) * q2 - CAST(s2 AS DOUBLE) * s2)
-        |    / (CAST(n2 AS DOUBLE) * (n2 - 1)) AS v2
-        | FROM m),
-        |f AS (SELECT n1, n2, s1, s2,
-        |  sqrt(v1 / n1 + v2 / n2) AS se FROM v)
-        |SELECT n1, n2, round(se, 6) AS se,
-        | round((1.96::DOUBLE + 0.8416::DOUBLE) * se, 6) AS mde_abs,
-        | round((1.96::DOUBLE + 0.8416::DOUBLE) * se /
-        |   (CAST(s1 + s2 AS DOUBLE) / CAST(n1 + n2 AS DOUBLE)), 6)
-        |   AS mde_rel
-        |FROM f""".stripMargin,
-
-    "stats_sequential" ->
-      """WITH ev AS (SELECT CAST(ts AS DATE) AS day,
-        |   user_id % 2 = 0 AS arma,
-        |   CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |sg AS (SELECT round((CAST(nn AS DOUBLE) * qv -
-        |    CAST(sv AS DOUBLE) * sv) /
-        |   (CAST(nn AS DOUBLE) * (nn - 1)) / 10000.0, 6) AS s2
-        |  FROM (SELECT CAST(count(*) AS BIGINT) AS nn,
-        |        CAST(sum(v) AS BIGINT) AS sv,
-        |        sum(v * v) AS qv FROM ev)),
-        |dly AS (SELECT day,
-        |   CAST(sum(CASE WHEN arma THEN 1 ELSE 0 END) AS BIGINT) AS na_d,
-        |   CAST(sum(CASE WHEN arma THEN v ELSE 0 END) AS BIGINT) AS sa_d,
-        |   CAST(sum(CASE WHEN NOT arma THEN 1 ELSE 0 END) AS BIGINT)
-        |     AS nb_d,
-        |   CAST(sum(CASE WHEN NOT arma THEN v ELSE 0 END) AS BIGINT)
-        |     AS sb_d
-        |  FROM ev GROUP BY day),
-        |cum AS (SELECT day,
-        |   CAST(sum(na_d) OVER wd AS BIGINT) AS na,
-        |   sum(sa_d) OVER wd AS sa,
-        |   CAST(sum(nb_d) OVER wd AS BIGINT) AS nb,
-        |   sum(sb_d) OVER wd AS sb, s2
-        |  FROM dly, sg
-        |  WINDOW wd AS (ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |st AS (SELECT day, na, nb, s2,
-        |   CAST(na * nb AS DOUBLE) / CAST(na + nb AS DOUBLE) AS neff,
-        |   (CAST(sa AS DOUBLE) / na - CAST(sb AS DOUBLE) / nb) / 100.0
-        |     AS delta FROM cum),
-        |lm AS (SELECT day, na, nb, delta,
-        |   round(0.5 * ln(s2 / (s2 + neff * s2)) +
-        |    neff * neff * s2 * delta * delta /
-        |      (2.0 * s2 * (s2 + neff * s2)), 4) AS lnlam FROM st),
-        |fin AS (SELECT day, na, nb, delta, lnlam,
-        |   max(lnlam) OVER (ORDER BY day
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lnmax
-        |  FROM lm)
-        |SELECT strftime(day, '%Y-%m-%d') AS day, na, nb,
-        | round(delta, 6) AS delta, lnlam AS log_lambda,
-        | round(least(1.0::DOUBLE, exp(-lnmax)), 4) AS p
-        |FROM fin""".stripMargin,
-
-    // judge A nests the gopherSql chain verbatim; judge B is the TTR
-    // integer cross-multiply; κ is a BIGINT ratio, exact until the
-    // final division
-    "stats_cohen_kappa" ->
-      s"""WITH g AS (SELECT doc_id, keep AS ja FROM ($gopherSql)),
-         |tb AS (SELECT doc_id,
-         |   list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |     x -> x <> '') AS tk FROM documents),
-         |j AS (SELECT g.doc_id, ja,
-         |   2 * len(list_distinct(tk)) >= len(tk) AS jb
-         |  FROM g JOIN tb ON g.doc_id = tb.doc_id),
-         |c AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |   CAST(sum(CASE WHEN ja AND jb THEN 1 ELSE 0 END) AS BIGINT)
-         |     AS n11,
-         |   CAST(sum(CASE WHEN ja AND NOT jb THEN 1 ELSE 0 END) AS BIGINT)
-         |     AS n10,
-         |   CAST(sum(CASE WHEN NOT ja AND jb THEN 1 ELSE 0 END) AS BIGINT)
-         |     AS n01,
-         |   CAST(sum(CASE WHEN NOT ja AND NOT jb THEN 1 ELSE 0 END)
-         |     AS BIGINT) AS n00
-         |  FROM j)
-         |SELECT n, n11, n10, n01, n00,
-         | round(CAST(CAST(n AS HUGEINT) * (n11 + n00) -
-         |     (CAST(n11 + n10 AS HUGEINT) * (n11 + n01) +
-         |      CAST(n01 + n00 AS HUGEINT) * (n10 + n00))
-         |   AS DOUBLE) /
-         |  CAST(CAST(n AS HUGEINT) * n -
-         |     (CAST(n11 + n10 AS HUGEINT) * (n11 + n01) +
-         |      CAST(n01 + n00 AS HUGEINT) * (n10 + n00))
-         |   AS DOUBLE), 6) AS kappa
-         |FROM c""".stripMargin,
-
-    // exact lower-median per group ((value, event_id) tiebreak — the
-    // stats_mad rule), |x − med| deviations, then the one-way F folded
-    // from per-group (n, Σz, Σz²) exactly as the engine folds it
-    // cent-long mirror: integer co-moments throughout, the one
-    // order-dependent double (Σ s_g²/n_g) folds in event_type order
-    "stats_levene" ->
-      """WITH ev AS (SELECT event_type,
-        |   CAST(round(value * 100) AS BIGINT) AS vc, event_id
-        |  FROM events),
-        |rk AS (SELECT event_type, vc,
-        |   row_number() OVER (PARTITION BY event_type
-        |     ORDER BY vc, event_id) AS r,
-        |   count(*) OVER (PARTITION BY event_type) AS cnt
-        |  FROM ev),
-        |md AS (SELECT event_type, max(CASE
-        |    WHEN r = CAST(floor((cnt - 1) * 0.5) AS BIGINT) + 1
-        |    THEN vc END) AS medc
-        |  FROM rk GROUP BY event_type),
-        |z AS (SELECT ev.event_type, abs(vc - medc) AS zc
-        |  FROM ev JOIN md ON ev.event_type = md.event_type),
-        |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_g,
-        |   CAST(sum(zc) AS BIGINT) AS s_gc, sum(zc * zc) AS ss_gc
-        |  FROM z GROUP BY event_type),
-        |a AS (SELECT CAST(sum(n_g) AS BIGINT) AS n,
-        |   CAST(count(*) AS BIGINT) AS k,
-        |   CAST(sum(s_gc) AS BIGINT) AS s,
-        |   CAST(sum(ss_gc) AS DOUBLE) AS ssq,
-        |   list_reduce(list_prepend(0.0::DOUBLE,
-        |     list(CAST(s_gc AS DOUBLE) * CAST(s_gc AS DOUBLE) /
-        |          CAST(n_g AS DOUBLE) ORDER BY event_type)),
-        |     (acc, x) -> acc + x) AS sgsq
-        |  FROM g)
-        |SELECT CAST(k AS INT) AS k, n,
-        | round(((sgsq - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) /
-        |     CAST(n AS DOUBLE)) / (CAST(k AS DOUBLE) - 1.0)) /
-        |   ((ssq - sgsq) / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE))),
-        |   6) AS f_bf
-        |FROM a""".stripMargin,
-
-    // mode via (-n, type) argmin — ties to the smallest type
-    "a19_mode" ->
-      """WITH c AS (SELECT user_id, event_type,
-        |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-        |r AS (SELECT user_id, event_type, n,
-        |       row_number() OVER (PARTITION BY user_id
-        |         ORDER BY n DESC, event_type ASC) AS rk FROM c)
-        |SELECT user_id, event_type AS mode_type, n AS n_mode
-        |FROM r WHERE rk = 1""".stripMargin,
-
-    // native INTERSECT/EXCEPT/UNION on both engines
-    "o8_set_ops" ->
-      """WITH c AS (SELECT DISTINCT user_id FROM events
-        |           WHERE event_type = 'click'),
-        |b AS (SELECT DISTINCT user_id FROM events
-        |      WHERE event_type = 'purchase'),
-        |i AS (SELECT user_id FROM c INTERSECT SELECT user_id FROM b),
-        |e AS (SELECT user_id FROM c EXCEPT SELECT user_id FROM b),
-        |u AS (SELECT user_id FROM c UNION SELECT user_id FROM b)
-        |SELECT 'intersect' AS op, count(*) AS n_users,
-        | CAST(coalesce(sum(user_id), 0) AS BIGINT) AS sum_ids FROM i
-        |UNION ALL SELECT 'except', count(*),
-        | CAST(coalesce(sum(user_id), 0) AS BIGINT) FROM e
-        |UNION ALL SELECT 'union', count(*),
-        | CAST(coalesce(sum(user_id), 0) AS BIGINT) FROM u""".stripMargin,
-
-    // exact rank-rule order statistics off the per-user sorted gaps
-    "t22_interarrival" ->
-      """WITH g AS (
-        |  SELECT user_id, epoch_us(ts) // 1000000 AS tsec FROM events),
-        |gp AS (SELECT user_id,
-        |        tsec - lag(tsec) OVER (PARTITION BY user_id ORDER BY tsec)
-        |          AS gap
-        |       FROM g),
-        |f AS (SELECT user_id, gap FROM gp WHERE gap IS NOT NULL),
-        |a AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_gaps,
-        |       min(gap) AS min_gap, max(gap) AS max_gap,
-        |       list(gap ORDER BY gap) AS a
-        |      FROM f GROUP BY 1)
-        |SELECT user_id, n_gaps, min_gap,
-        | a[CAST((n_gaps + 1) // 2 AS INT)] AS median_gap,
-        | a[CAST((9 * n_gaps + 9) // 10 AS INT)] AS p90_gap,
-        | max_gap
-        |FROM a""".stripMargin,
-
-    // k=v pairs replayed by splitting on '&' then '='
-    "f19_url_params" ->
-      """SELECT fid, split_part(p, '=', 1) AS param,
-        | split_part(p, '=', 2) AS value
-        |FROM (
-        |  SELECT CAST(col0 AS BIGINT) AS fid,
-        |   unnest(regexp_split_to_array(split_part(col1, '?', 2), '&')) AS p
-        |  FROM (VALUES (1, 'https://ex.com/a?x=1&y=2'),
-        |   (2, 'https://ex.com/b?x=3'), (3, 'https://ex.com/c')) t
-        |  WHERE contains(col1, '?')) u""".stripMargin,
-
-    // the frame-energy fold chain + lag delta + (jump DESC, frame ASC)
-    // argmax — exact integers end to end
-    "mm_scene_cut" ->
-      """WITH fr AS (
-        |  SELECT doc_id, text, i AS off
-        |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-        |e AS (
-        |  SELECT doc_id, off,
-        |   list_reduce(list_prepend(0::BIGINT, list_transform(
-        |     regexp_split_to_array(substr(text, off + 1, 16), ''),
-        |     c -> unicode(c)::BIGINT * unicode(c)::BIGINT)),
-        |    (a, b) -> a + b) AS energy
-        |  FROM fr),
-        |dd AS (SELECT doc_id, CAST(off // 32 AS INT) AS frame_idx, energy,
-        |        energy - lag(energy) OVER (PARTITION BY doc_id ORDER BY off)
-        |          AS de
-        |       FROM e),
-        |f AS (SELECT doc_id, frame_idx, abs(de) AS jump FROM dd
-        |      WHERE de IS NOT NULL),
-        |r AS (SELECT doc_id, frame_idx, jump,
-        |       CAST(count(*) OVER (PARTITION BY doc_id) AS BIGINT)
-        |         AS n_deltas,
-        |       row_number() OVER (PARTITION BY doc_id
-        |         ORDER BY jump DESC, frame_idx ASC) AS rn FROM f)
-        |SELECT doc_id, n_deltas, frame_idx AS cut_frame, jump
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    // parity cut on the co-order graph; integer cut/volume sums
-    "graph_conductance" ->
-      """WITH edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
-        |t AS (SELECT (a // 4) % 2 AS sa, (b // 4) % 2 AS sb FROM edges),
-        |g AS (SELECT CAST(count(*) AS BIGINT) AS n_edges,
-        |   CAST(sum(CASE WHEN sa <> sb THEN 1 ELSE 0 END) AS BIGINT)
-        |     AS n_cut,
-        |   CAST(sum((CASE WHEN sa = 0 THEN 1 ELSE 0 END)
-        |     + (CASE WHEN sb = 0 THEN 1 ELSE 0 END)) AS BIGINT) AS vol0,
-        |   CAST(sum((CASE WHEN sa = 1 THEN 1 ELSE 0 END)
-        |     + (CASE WHEN sb = 1 THEN 1 ELSE 0 END)) AS BIGINT) AS vol1
-        |  FROM t)
-        |SELECT n_edges, n_cut, vol0, vol1,
-        | round(CAST(n_cut AS DOUBLE) / least(vol0, vol1), 6) AS conductance
-        |FROM g""".stripMargin,
-
-    // the band filter over the whole table — pruning must drop nothing
-    "k25_manifest_append" ->
-      """WITH m AS (SELECT max(event_id) AS mx FROM events),
-        |b AS (SELECT mx // 4 AS lo, mx // 2 AS hi FROM m)
-        |SELECT count(*) AS n_rows, CAST(sum(event_id) AS BIGINT) AS sum_id,
-        | min(event_id) AS min_id, max(event_id) AS max_id,
-        | round(sum(value), 2) AS sum_value
-        |FROM events, b WHERE event_id BETWEEN lo AND hi""".stripMargin,
-
-    // one global day grid carries both series; co-moments exact, r_k
-    // mirrored operand-for-operand with the full-series σ normalizer
-    "t21_ccf" ->
-      """WITH daily AS (
-        |  SELECT epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |     AS BIGINT) AS x,
-        |   CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |     AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
-        |spans AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
-        |grid AS (
-        |  SELECT g.day, coalesce(d.x, 0) AS x, coalesce(d.y, 0) AS y
-        |  FROM (SELECT unnest(generate_series(d0, d1)) AS day FROM spans) g
-        |  LEFT JOIN daily d ON g.day = d.day),
-        |base AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |   CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |   CAST(sum(x * x) AS BIGINT) AS qx,
-        |   CAST(sum(y * y) AS BIGINT) AS qy
-        |  FROM grid),
-        |lags AS (
-        |  SELECT k.k, CAST(count(*) AS BIGINT) AS cnt,
-        |   CAST(sum(g1.x * g2.y) AS BIGINT) AS sxy,
-        |   CAST(sum(g1.x) AS BIGINT) AS sxw,
-        |   CAST(sum(g2.y) AS BIGINT) AS syw
-        |  FROM grid g1,
-        |   (SELECT unnest(generate_series(-7, 7)) AS k) k,
-        |   grid g2
-        |  WHERE g2.day = g1.day + k.k
-        |  GROUP BY 1)
-        |SELECT l.k, l.cnt,
-        | round((CAST(b.n * b.n AS DOUBLE) * l.sxy
-        |    - CAST(b.n AS DOUBLE) * (b.sx * l.syw + b.sy * l.sxw)
-        |    + CAST(l.cnt AS DOUBLE) * (b.sx * b.sy))
-        |  / (CAST(b.n AS DOUBLE) *
-        |     sqrt((CAST(b.n AS DOUBLE) * b.qx - CAST(b.sx AS DOUBLE) * b.sx)
-        |       * (CAST(b.n AS DOUBLE) * b.qy
-        |          - CAST(b.sy AS DOUBLE) * b.sy))), 6) AS ccf
-        |FROM lags l, base b""".stripMargin,
-
-    // tf·idf over the shared tf chain; ln on identical doubles
-    "text_keywords" ->
-      s"""WITH tf AS ($tfSub),
-         |dft AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-         |        FROM tf GROUP BY 1),
-         |nd AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS nd FROM tf),
-         |sc AS (SELECT tf.doc_id, tf.term,
-         |        tf.tf * ln(CAST(nd.nd AS DOUBLE) / dft.df) AS score
-         |       FROM tf JOIN dft USING (term), nd),
-         |r AS (SELECT doc_id, term, score,
-         |       CAST(row_number() OVER (PARTITION BY doc_id
-         |         ORDER BY score DESC, term ASC) AS INT) AS rk FROM sc)
-         |SELECT doc_id, rk, term, round(score, 6) AS score
-         |FROM r WHERE rk <= 3""".stripMargin,
-
-    // query terms derived exactly as the engine derives them (tf·idf,
-    // ties → term asc), then the bm25 chain with the dynamic term set;
-    // ranking on the UNROUNDED sum mirrors bm25Search's internal order
-    "search_mlt" ->
-      s"""WITH tf AS ($tfSub),
-         |dft AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-         |        FROM tf GROUP BY 1),
-         |ndq AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS nd FROM tf),
-         |qt AS (SELECT term FROM (
-         |  SELECT tf.term, tf.tf * ln(CAST(nd.nd AS DOUBLE) / dft.df) AS s0
-         |  FROM tf JOIN dft USING (term), ndq nd WHERE tf.doc_id = 0) q
-         |  ORDER BY s0 DESC, term ASC LIMIT 3),
-         |tfq AS (SELECT doc_id, term, tf FROM tf
-         |        WHERE term IN (SELECT term FROM qt)),
-         |dfs AS (SELECT term, count(*) AS term_df FROM tfq GROUP BY term),
-         |dl AS (SELECT doc_id,
-         |   len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |     x -> x <> '')) AS doc_len
-         |  FROM documents),
-         |g AS (SELECT count(*) AS n_docs, avg(doc_len) AS avgdl FROM dl),
-         |contrib AS (
-         |  SELECT tfq.doc_id,
-         |   ln(1.0 + (g.n_docs - dfs.term_df + 0.5) / (dfs.term_df + 0.5))
-         |     * tfq.tf * 2.2
-         |     / (tfq.tf + 1.2 * (0.25 + 0.75 * dl.doc_len / g.avgdl)) AS c
-         |  FROM tfq JOIN dfs USING (term) JOIN dl ON tfq.doc_id = dl.doc_id
-         |  CROSS JOIN g),
-         |sc AS (SELECT doc_id, sum(c) AS score0 FROM contrib
-         |       WHERE doc_id <> 0 GROUP BY doc_id),
-         |r AS (SELECT doc_id, score0,
-         |       CAST(row_number() OVER (ORDER BY score0 DESC, doc_id ASC)
-         |         AS INT) AS rank FROM sc)
-         |SELECT rank, doc_id, round(score0, 4) AS score
-         |FROM r WHERE rank <= 20""".stripMargin,
-
-    // argmax picks mirror max_by/min_by tie orders exactly
-    "sample_contrastive" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
-         |            label FROM embeddings),
-         |a AS (SELECT vec_id AS anchor_id, emb AS a_emb, label AS a_label
-         |      FROM e WHERE vec_id < 20),
-         |ps AS (SELECT a.anchor_id, e.vec_id,
-         |        ${cosSql("a.a_emb", "e.emb")} AS sim
-         |       FROM e CROSS JOIN a
-         |       WHERE e.label = a.a_label AND e.vec_id <> a.anchor_id),
-         |pr AS (SELECT anchor_id, vec_id AS pos_id, sim,
-         |        row_number() OVER (PARTITION BY anchor_id
-         |          ORDER BY sim DESC, vec_id ASC) AS rn FROM ps),
-         |ng AS (SELECT a.anchor_id, e.vec_id,
-         |        ${hash32Sql("(a.anchor_id * 1000003 + e.vec_id)")} AS h
-         |       FROM e CROSS JOIN a WHERE e.label <> a.a_label),
-         |nr AS (SELECT anchor_id, vec_id AS neg_id,
-         |        row_number() OVER (PARTITION BY anchor_id
-         |          ORDER BY h, vec_id) AS rn FROM ng)
-         |SELECT p.anchor_id, p.pos_id, round(p.sim, 4) AS pos_sim, n.neg_id
-         |FROM pr p JOIN nr n ON p.anchor_id = n.anchor_id
-         |WHERE p.rn = 1 AND n.rn = 1""".stripMargin,
-
-    // Levinson-Durbin over the t15 acf chain: the fold state is a
-    // growing DOUBLE list (the t14 list-state rule), the pivot P is
-    // inlined textually at each use exactly as the engine writes it,
-    // and every inner sum folds a prepended-0 list in ascending-j order
-    "t20_pacf" -> {
-      val m = "CAST(acc[1] AS INT)"
-      val num = s"(racf[CAST(x[1] AS INT)] - list_reduce(" +
-        s"list_prepend(0.0::DOUBLE, list_transform(" +
-        s"generate_series(1, 7)[1:$m], j2 -> acc[1 + j2] * " +
-        s"racf[CAST(x[1] AS INT) - j2])), (s2, y2) -> s2 + y2))"
-      val den = s"(1.0::DOUBLE - list_reduce(" +
-        s"list_prepend(0.0::DOUBLE, list_transform(" +
-        s"generate_series(1, 7)[1:$m], j3 -> acc[1 + j3] * racf[j3])), " +
-        s"(s3, y3) -> s3 + y3))"
-      val p = s"($num / $den)"
-      s"""WITH daily AS (
-         |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-         |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-         |          FROM daily GROUP BY 1),
-         |grid AS (
-         |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-         |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-         |        FROM spans) g
-         |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-         |base AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         |   CAST(sum(c) AS BIGINT) AS s, CAST(sum(c * c) AS BIGINT) AS q
-         |  FROM grid GROUP BY 1),
-         |pairs AS (
-         |  SELECT g1.event_type, k.k,
-         |   CAST(sum(g1.c * g2.c) AS BIGINT) AS sxy,
-         |   CAST(sum(g1.c) AS BIGINT) AS sh, CAST(sum(g2.c) AS BIGINT) AS st
-         |  FROM grid g1,
-         |   (SELECT unnest(generate_series(1, 7)) AS k) k,
-         |   grid g2
-         |  WHERE g1.event_type = g2.event_type AND g2.day = g1.day + k.k
-         |  GROUP BY 1, 2),
-         |acf AS (SELECT p.event_type, p.k,
-         |   (CAST(b.n * b.n AS DOUBLE) * p.sxy
-         |     - CAST(b.n AS DOUBLE) * b.s * (p.sh + p.st)
-         |     + CAST(b.n - p.k AS DOUBLE) * b.s * b.s)
-         |   / (CAST(b.n * b.n AS DOUBLE) * b.q
-         |     - CAST(b.n AS DOUBLE) * b.s * b.s) AS r
-         |  FROM pairs p JOIN base b ON p.event_type = b.event_type),
-         |ar AS (SELECT event_type, list(r ORDER BY k) AS racf
-         |       FROM acf GROUP BY 1),
-         |fin AS (SELECT event_type,
-         |  list_reduce(
-         |    list_prepend([0.0::DOUBLE],
-         |      list_transform(generate_series(1, 7), k -> [CAST(k AS DOUBLE)])),
-         |    (acc, x) -> list_concat(list_concat(list_concat(list_concat(
-         |      [x[1]],
-         |      list_transform(generate_series(1, 7)[1:$m],
-         |        j -> acc[1 + j] - $p * acc[1 + $m + 1 - j])),
-         |      [$p]),
-         |      acc[(2 + $m):(1 + 2 * $m)]),
-         |      [$p])) AS st
-         |  FROM ar)
-         |SELECT f.event_type, ks.k, round(f.st[8 + ks.k], 6) AS pacf
-         |FROM fin f, (SELECT unnest(generate_series(1, 7)) AS k) ks""".stripMargin
-    },
-
-    // nearest of (last preceding, first following) per purchase; floor-
-    // second distances, prev wins ties — (delta, vts) ordering encodes
-    // exactly that rule because prev's vts is the smaller at a tie
-    "w7_asof_nearest" ->
-      """WITH p AS (SELECT event_id, ts, user_id FROM events
-        |           WHERE event_type = 'purchase'),
-        |v AS (SELECT user_id, ts, max(event_id) AS view_id
-        |      FROM events WHERE event_type = 'view' GROUP BY 1, 2),
-        |c AS (SELECT p.event_id, p.ts, v.ts AS vts, v.view_id,
-        |       abs(epoch_us(v.ts) - epoch_us(p.ts)) AS delta_us,
-        |       abs(epoch_us(v.ts) // 1000000 - epoch_us(p.ts) // 1000000)
-        |         AS delta
-        |      FROM p LEFT JOIN v ON p.user_id = v.user_id),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY event_id
-        |        ORDER BY delta_us, vts) AS rn FROM c)
-        |SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
-        | strftime(vts, '%Y-%m-%d %H:%M:%S.%f') AS matched_ts_str,
-        | delta, view_id
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    // the pack_e2e chain with per-sequence boundary offsets as an
-    // ordered string_agg (doc_id order = cumulative order)
-    "pack_doc_mask" ->
-      """WITH tc AS (
-        |  SELECT doc_id,
-        |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '')) AS nt
-        |  FROM documents),
-        |r AS (SELECT doc_id, nt,
-        |       row_number() OVER (ORDER BY nt DESC, doc_id) AS rk FROM tc),
-        |a AS (SELECT doc_id, nt,
-        |  CASE WHEN ((rk-1) // 8) % 2 = 0 THEN (rk-1) % 8
-        |       ELSE 7 - (rk-1) % 8 END AS shard FROM r),
-        |o AS (SELECT shard, doc_id, nt,
-        |  coalesce(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-        |  FROM a)
-        |SELECT CAST(shard AS INT) AS shard, CAST(cb // 2048 AS BIGINT) AS seq,
-        | count(*) AS n_docs, CAST(sum(nt) AS BIGINT) AS sum_tokens,
-        | string_agg(CAST(cb % 2048 AS VARCHAR), ',' ORDER BY doc_id)
-        |   AS boundaries
-        |FROM o GROUP BY 1, 2""".stripMargin,
-
-    // golden trace: u1 folds 1,2 (batch 1) then 3 (batch 2) at α = ½:
-    // 1 → 1.5 → 2.25; u2: 10 → 15; serving keeps the latest row per key
-    "st_smooth" ->
-      """SELECT CAST(col0 AS BIGINT) AS user_id,
-        | CAST(col1 AS BIGINT) AS n_events, CAST(col2 AS DOUBLE) AS level
-        |FROM (VALUES (1, 3, 2.25), (2, 2, 15.0)) t""".stripMargin,
-
-    // bloom positions bit-replicated (the j7 chain) for members and
-    // probes; flagged = every position present; theory from the same
-    // exact dyadic exponent
-    "sketch_bloom_fpr" ->
-      s"""WITH seeds AS (SELECT unnest(generate_series(0, 1)) AS i),
-         |mem AS (SELECT unnest(generate_series(0, 199)) AS mk),
-         |mpos AS (SELECT DISTINCT
-         |   ${fnvSql("CAST(mk AS VARCHAR) || '#' || i")} % 4096 AS pos
-         |  FROM mem, seeds),
-         |pr AS (SELECT unnest(generate_series(100000, 100999)) AS pk),
-         |ph AS (SELECT pk,
-         |   ${fnvSql("CAST(pk AS VARCHAR) || '#' || i")} % 4096 AS pos
-         |  FROM pr, seeds),
-         |chk AS (SELECT pk, bool_and(pos IN (SELECT pos FROM mpos)) AS hit
-         |        FROM ph GROUP BY pk)
-         |SELECT count(*) AS n_probes,
-         | CAST(sum(CAST(hit AS INT)) AS BIGINT) AS n_flagged,
-         | round(CAST(sum(CAST(hit AS INT)) AS DOUBLE) / count(*), 6) AS fpr,
-         | round(pow(1.0::DOUBLE - exp(-0.09765625::DOUBLE), 2), 6)
-         |   AS fpr_theory
-         |FROM chk""".stripMargin,
-
-    // streaming CDC apply: the current table after latest-version-wins
-    // folding — stale v2 for key 1 ignored, key 2 a kept tombstone
-    "st_cdc_apply" ->
-      """SELECT CAST(col0 AS BIGINT) AS key, CAST(col1 AS DOUBLE) AS value,
-        | CAST(col2 AS BIGINT) AS version, CAST(col3 AS BOOLEAN) AS deleted
-        |FROM (VALUES
-        | (1, 11.0, 3, false), (2, 0.0, 2, true),
-        | (3, 30.0, 1, false)) t""".stripMargin,
-
-    // streaming funnel: one row per (user, stage) at its entry time;
-    // u3's pre-view click and u2's pre-view click never advance, u1's
-    // second purchase never re-fires
-    "st_funnel" ->
-      """SELECT CAST(col0 AS BIGINT) AS user_id, col1 AS stage,
-        | CAST(col2 AS BIGINT) AS ts_ms
-        |FROM (VALUES
-        | (1, 'view', 0), (1, 'click', 10000), (1, 'purchase', 50000),
-        | (2, 'view', 20000),
-        | (3, 'view', 30000), (3, 'click', 40000)) t""".stripMargin,
-
-    // the minhash exact-verify chain restricted to cross-parity pairs;
-    // the LSH banding is recall-complete on this data (the
-    // dedup_minhash_eval harness pins recall = 1 at threshold 0.4)
-    "dedup_cross_corpus" ->
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |   CASE WHEN len(a) < 3 THEN array_to_string(a, ' ')
-        |        ELSE a[i] || ' ' || a[i+1] || ' ' || a[i+2] END AS sh
-        |  FROM arrs, unnest(generate_series(1, greatest(len(a)-2, 1))) AS t(i)
-        |  WHERE len(a) >= 1),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS tid, b.doc_id AS eid, count(*) AS i
-        |  FROM sh a JOIN sh b ON a.sh = b.sh
-        |  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-        |  GROUP BY 1, 2)
-        |SELECT eid AS eval_id, tid AS train_id,
-        | round(i * 1.0 / (sa.n + sb.n - i), 4) AS jaccard
-        |FROM inter JOIN sizes sa ON tid = sa.doc_id
-        | JOIN sizes sb ON eid = sb.doc_id
-        |WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.4
-        |UNION ALL
-        |SELECT b.doc_id AS eval_id, a.doc_id AS train_id, 1.0 AS jaccard
-        |FROM arrs a JOIN arrs b
-        |  ON a.doc_id % 2 = 0 AND b.doc_id % 2 = 1
-        |WHERE len(a.a) = 0 AND len(b.a) = 0
-        |  AND (SELECT count(*) FROM arrs WHERE len(a) = 0) <= 1000""".stripMargin,
-
-    // exact counts; the cell fold is ordered and uses ln(x)/ln(2.0)
-    // (stats_divergence convention, matching Spark's log(2.0, x))
-    "stats_mutual_info" ->
-      """WITH ev AS (SELECT event_type,
-        |    (epoch_us(ts) // 1000000 // 86400 + 4) % 7 AS weekday
-        |  FROM events),
-        |cells AS (SELECT event_type, weekday,
-        |    CAST(count(*) AS BIGINT) AS nxy FROM ev GROUP BY 1, 2),
-        |mx AS (SELECT event_type, CAST(sum(nxy) AS BIGINT) AS nx
-        |       FROM cells GROUP BY 1),
-        |my AS (SELECT weekday, CAST(sum(nxy) AS BIGINT) AS ny
-        |       FROM cells GROUP BY 1),
-        |nn AS (SELECT CAST(sum(nxy) AS BIGINT) AS nn FROM cells),
-        |j AS (SELECT c.event_type, c.weekday, c.nxy, m1.nx, m2.ny, nn.nn
-        |      FROM cells c JOIN mx m1 ON c.event_type = m1.event_type
-        |      JOIN my m2 ON c.weekday = m2.weekday, nn),
-        |g AS (SELECT CAST(count(*) AS BIGINT) AS n_cells,
-        |   list([CAST(nxy AS DOUBLE), CAST(nx AS DOUBLE),
-        |         CAST(ny AS DOUBLE), CAST(nn AS DOUBLE)]
-        |     ORDER BY event_type, weekday) AS arr
-        |  FROM j)
-        |SELECT n_cells,
-        | round(list_reduce(list_prepend(0.0::DOUBLE,
-        |   list_transform(arr, x ->
-        |     x[1] / x[4] * (ln(x[1] * x[4] / (x[2] * x[3])) / ln(2.0)))),
-        |   (acc, x) -> acc + x), 6) AS mi_bits
-        |FROM g""".stripMargin,
-
-    // one pass per dim; population sigma from the same two sums
-    // the bm25 chain ranking the top-10 relevance model on the ROUNDED
-    // score (round 4, doc_id tiebreak — the bm25Sql tie discipline, so
-    // both engines resolve boundary ties identically), then
-    // seed-excluded tf aggregation over those docs
-    "search_prf" ->
-      s"""WITH tf AS (
-         |  SELECT doc_id, term, tf FROM ($tfSub)
-         |  WHERE term IN ('scan', 'join', 'merge')),
-         |dfs AS (SELECT term, count(*) AS term_df FROM tf GROUP BY term),
-         |dl AS (
-         |  SELECT doc_id, len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |    x -> x <> '')) AS doc_len
-         |  FROM documents),
-         |g AS (SELECT count(*) AS n_docs, avg(doc_len) AS avgdl FROM dl),
-         |contrib AS (
-         |  SELECT tf.doc_id,
-         |   ln(1.0 + (g.n_docs - dfs.term_df + 0.5) / (dfs.term_df + 0.5))
-         |     * tf.tf * 2.2
-         |     / (tf.tf + 1.2 * (0.25 + 0.75 * dl.doc_len / g.avgdl)) AS c
-         |  FROM tf JOIN dfs USING (term) JOIN dl ON tf.doc_id = dl.doc_id
-         |  CROSS JOIN g),
-         |sc AS (SELECT doc_id, round(sum(c), 4) AS score
-         |       FROM contrib GROUP BY doc_id),
-         |top AS (SELECT doc_id FROM
-         |  (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id)
-         |    AS rn FROM sc) t WHERE rn <= 10),
-         |ex AS (SELECT term, CAST(sum(tf) AS BIGINT) AS tf_sum,
-         |        count(*) AS n_docs
-         |       FROM ($tfSub) f JOIN top USING (doc_id)
-         |       WHERE term NOT IN ('scan', 'join', 'merge')
-         |       GROUP BY term)
-         |SELECT CAST(rn AS INT) AS rank, term, tf_sum, n_docs FROM
-         | (SELECT *, row_number() OVER (ORDER BY tf_sum DESC, term ASC)
-         |   AS rn FROM ex) r
-         |WHERE rn <= 5""".stripMargin,
-
-    // brute top-20 + pairwise sims, then five unrolled greedy argmax
-    // steps (the graph_kcore unrolled-round pattern on a 20-row set)
-    "search_mmr" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-         |           FROM embeddings),
-         |q AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0),
-         |sc AS (SELECT e.vec_id AS id, ${cosSql("e.emb", "q.q_emb")} AS rel,
-         |        e.emb
-         |       FROM e, q WHERE e.vec_id <> 0),
-         |cand AS (SELECT id, rel, emb FROM
-         |  (SELECT *, row_number() OVER (ORDER BY rel DESC, id ASC) AS rn
-         |   FROM sc) t
-         |  WHERE rn <= 20),
-         |pw AS (SELECT a.id AS id, b.id AS oid,
-         |        ${cosSql("a.emb", "b.emb")} AS psim
-         |       FROM cand a JOIN cand b ON a.id <> b.id),
-         |s1 AS (SELECT id FROM cand ORDER BY rel DESC, id LIMIT 1),
-         |r2 AS (SELECT c.id,
-         |        0.5::DOUBLE * c.rel - 0.5::DOUBLE *
-         |          (SELECT max(psim) FROM pw WHERE pw.id = c.id
-         |            AND pw.oid IN (SELECT id FROM s1)) AS score
-         |       FROM cand c WHERE c.id NOT IN (SELECT id FROM s1)),
-         |s2 AS (SELECT id FROM r2 ORDER BY score DESC, id LIMIT 1),
-         |sel2 AS (SELECT id FROM s1 UNION ALL SELECT id FROM s2),
-         |r3 AS (SELECT c.id,
-         |        0.5::DOUBLE * c.rel - 0.5::DOUBLE *
-         |          (SELECT max(psim) FROM pw WHERE pw.id = c.id
-         |            AND pw.oid IN (SELECT id FROM sel2)) AS score
-         |       FROM cand c WHERE c.id NOT IN (SELECT id FROM sel2)),
-         |s3 AS (SELECT id FROM r3 ORDER BY score DESC, id LIMIT 1),
-         |sel3 AS (SELECT id FROM sel2 UNION ALL SELECT id FROM s3),
-         |r4 AS (SELECT c.id,
-         |        0.5::DOUBLE * c.rel - 0.5::DOUBLE *
-         |          (SELECT max(psim) FROM pw WHERE pw.id = c.id
-         |            AND pw.oid IN (SELECT id FROM sel3)) AS score
-         |       FROM cand c WHERE c.id NOT IN (SELECT id FROM sel3)),
-         |s4 AS (SELECT id FROM r4 ORDER BY score DESC, id LIMIT 1),
-         |sel4 AS (SELECT id FROM sel3 UNION ALL SELECT id FROM s4),
-         |r5 AS (SELECT c.id,
-         |        0.5::DOUBLE * c.rel - 0.5::DOUBLE *
-         |          (SELECT max(psim) FROM pw WHERE pw.id = c.id
-         |            AND pw.oid IN (SELECT id FROM sel4)) AS score
-         |       FROM cand c WHERE c.id NOT IN (SELECT id FROM sel4)),
-         |s5 AS (SELECT id FROM r5 ORDER BY score DESC, id LIMIT 1)
-         |SELECT st.step, st.id, round(c.rel, 6) AS rel
-         |FROM (SELECT 1 AS step, id FROM s1
-         |  UNION ALL SELECT 2, id FROM s2
-         |  UNION ALL SELECT 3, id FROM s3
-         |  UNION ALL SELECT 4, id FROM s4
-         |  UNION ALL SELECT 5, id FROM s5) st
-         |JOIN cand c USING (id)""".stripMargin,
-
-    // trace and Frobenius mass straight off the scatter cells
-    "embed_effective_rank" ->
-      s"""$scatterSql
-        |SELECT round(tr / n, 6) AS var_total,
-        | round(fro2 / (n * n), 6) AS fro_norm,
-        | round(tr * tr / fro2, 4) AS pr
-        |FROM (SELECT sum(CASE WHEN i = j THEN aij ELSE 0.0::DOUBLE END)
-        |        AS tr,
-        |       sum(aij * aij) AS fro2, (SELECT n FROM nn) AS n
-        |      FROM am) t""".stripMargin,
-
-    // the scatter matrix from one self-join, mean correction, then 3
-    // unrolled multiply-normalize rounds as ordered list folds (v₀ = 1⃗)
-    "embed_pca_power" ->
-      s"""$scatterSql,
-        |ar AS (SELECT i, list(aij ORDER BY j) AS rw FROM am GROUP BY i),
-        |v0 AS (SELECT list_transform(generate_series(1, 64),
-        |        x -> 1.0::DOUBLE) AS v),
-        |w1 AS (SELECT i, list_reduce(list_prepend(0.0::DOUBLE,
-        |         list_transform(generate_series(1, 64), k -> rw[k] * v[k])),
-        |         (acc, x) -> acc + x) AS w FROM ar, v0),
-        |l1 AS (SELECT list(w ORDER BY i) AS wl FROM w1),
-        |n1 AS (SELECT wl, sqrt(list_reduce(list_prepend(0.0::DOUBLE,
-        |         list_transform(wl, x -> x * x)), (acc, x) -> acc + x)) AS nm
-        |       FROM l1),
-        |v1 AS (SELECT list_transform(wl, x -> x / nm) AS v FROM n1),
-        |w2 AS (SELECT i, list_reduce(list_prepend(0.0::DOUBLE,
-        |         list_transform(generate_series(1, 64), k -> rw[k] * v[k])),
-        |         (acc, x) -> acc + x) AS w FROM ar, v1),
-        |l2 AS (SELECT list(w ORDER BY i) AS wl FROM w2),
-        |n2 AS (SELECT wl, sqrt(list_reduce(list_prepend(0.0::DOUBLE,
-        |         list_transform(wl, x -> x * x)), (acc, x) -> acc + x)) AS nm
-        |       FROM l2),
-        |v2 AS (SELECT list_transform(wl, x -> x / nm) AS v FROM n2),
-        |w3 AS (SELECT i, list_reduce(list_prepend(0.0::DOUBLE,
-        |         list_transform(generate_series(1, 64), k -> rw[k] * v[k])),
-        |         (acc, x) -> acc + x) AS w FROM ar, v2),
-        |l3 AS (SELECT list(w ORDER BY i) AS wl FROM w3),
-        |n3 AS (SELECT wl, sqrt(list_reduce(list_prepend(0.0::DOUBLE,
-        |         list_transform(wl, x -> x * x)), (acc, x) -> acc + x)) AS nm
-        |       FROM l3),
-        |v3 AS (SELECT list_transform(wl, x -> x / nm) AS v, nm FROM n3)
-        |SELECT round(nm, 4) AS lam,
-        | round(v[1], 6) AS c1, round(v[2], 6) AS c2, round(v[3], 6) AS c3,
-        | round(v[4], 6) AS c4, round(v[5], 6) AS c5, round(v[6], 6) AS c6,
-        | round(v[7], 6) AS c7, round(v[8], 6) AS c8
-        |FROM v3""".stripMargin,
-
-    "embed_whiten" ->
-      """WITH e AS (SELECT d - 1 AS pos, CAST(embedding[d] AS DOUBLE) AS x
-        |  FROM embeddings,
-        |   (SELECT unnest(generate_series(1, 64)) AS d) dims),
-        |a AS (SELECT pos, CAST(count(*) AS BIGINT) AS n, sum(x) AS s,
-        |       sum(x * x) AS q FROM e GROUP BY 1)
-        |SELECT pos, n, round(s / n, 6) AS mu,
-        | round(sqrt((q - s * s / n) / n), 6) AS sigma
-        |FROM a""".stripMargin,
-
-    // the same three grouping sets with the explicit grouping id
-    "a18_grouping_sets" ->
-      """SELECT coalesce(l_returnflag, '_all') AS flag,
-        | coalesce(l_linestatus, '_all') AS status,
-        | CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT)
-        |   AS gid,
-        | count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-        |                        (l_returnflag), ())""".stripMargin,
-
-    // the lang-id chain joined back to the labels
-    "text_langid_eval" ->
-      s"""WITH pred AS ($langIdSql)
-         |SELECT d.lang, p.pred_lang, count(*) AS n
-         |FROM documents d JOIN pred p ON d.doc_id = p.doc_id
-         |GROUP BY 1, 2""".stripMargin,
-
-    // per-source replay of the release-card kernels
-    "curate_source_card" ->
-      """SELECT source, count(*) AS n_docs,
-        | count(DISTINCT lang) AS n_langs,
-        | round(1.0::DOUBLE - CAST(count(DISTINCT md5(text)) AS DOUBLE)
-        |   / count(*), 6) AS dup_rate,
-        | round(CAST(sum(n_chars) AS DOUBLE) / count(*), 6) AS mean_chars,
-        | round(CAST(sum(CASE WHEN regexp_matches(text,
-        |     'https?://[^\s]+|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}|[0-9]{7,}')
-        |   THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS pii_rate
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // the text_overlap_frac 8-gram chain rolled up per source; docs
-    // with no 8-gram (absent from j) coalesce to clean
-    "curate_source_contamination" ->
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
-        |    '\s+'), x -> x <> '') AS a
-        |  FROM documents),
-        |g AS (
-        |  SELECT DISTINCT doc_id, array_to_string(a[i:i+7], ' ') AS g
-        |  FROM arrs, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
-        |  WHERE len(a) >= 8),
-        |b AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
-        |j AS (
-        |  SELECT g.doc_id, count(*) AS n_grams, count(b.g) AS n_hits
-        |  FROM g LEFT JOIN b USING (g)
-        |  GROUP BY g.doc_id),
-        |lab AS (
-        |  SELECT d.doc_id, d.source,
-        |   coalesce(j.n_hits * 2 >= j.n_grams, false) AS contam
-        |  FROM documents d LEFT JOIN j USING (doc_id))
-        |SELECT source, count(*) AS n_docs,
-        | CAST(sum(CASE WHEN contam THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_contam,
-        | round(sum(CASE WHEN contam THEN 1 ELSE 0 END) * 1.0 / count(*), 4)
-        |   AS contam_rate
-        |FROM lab GROUP BY source""".stripMargin,
-
-    // symmetrized (deg_u, deg_v) pairs; by symmetry Σx = Σy and
-    // Σx² = Σy² — the oracle mirrors the engine's use of sxx with sy
-    "graph_assortativity" ->
-      """WITH edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
-        |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM
-        |  (SELECT a AS node FROM edges UNION ALL SELECT b FROM edges) n
-        |  GROUP BY node),
-        |pairs AS (SELECT da.deg AS x, db.deg AS y
-        |  FROM edges e JOIN deg da ON e.a = da.node
-        |       JOIN deg db ON e.b = db.node),
-        |sym AS (SELECT x, y FROM pairs
-        |        UNION ALL SELECT y, x FROM pairs),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS m2,
-        |   CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |   CAST(sum(x * y) AS BIGINT) AS sxy,
-        |   CAST(sum(x * x) AS BIGINT) AS sxx
-        |  FROM sym)
-        |SELECT m2 // 2 AS n_edges,
-        | round((CAST(m2 AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * sy) /
-        |   (sqrt(CAST(m2 AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * sx) *
-        |    sqrt(CAST(m2 AS DOUBLE) * sxx - CAST(sy AS DOUBLE) * sy)), 6)
-        |   AS assortativity
-        |FROM a""".stripMargin,
-
-    // golden trace: window 00:00 has u1×3 > u2×2 > u3×1; window 00:10
-    // has u2×2 > u3×1 — top-2 each, ranked (count desc, user asc)
-    "st_topk" ->
-      """SELECT col0 AS w_start, CAST(col1 AS BIGINT) AS user_id,
-        | CAST(col2 AS BIGINT) AS n_events, CAST(col3 AS BIGINT) AS rk
-        |FROM (VALUES ('2024-01-01 00:00:00', 1, 3, 1),
-        | ('2024-01-01 00:00:00', 2, 2, 2),
-        | ('2024-01-01 00:10:00', 2, 2, 1),
-        | ('2024-01-01 00:10:00', 3, 1, 2)) t""".stripMargin,
-
-    // the merged-schema read back-fills lang = NULL for the old batch;
-    // the oracle derives the same partition from the split rule
-    "k21_schema_evolve" ->
-      """SELECT CASE WHEN doc_id % 2 = 1 THEN lang
-        |  ELSE '_missing' END AS lang,
-        | count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "shuffle_epoch" ->
-      s"""WITH h AS (
-         |  SELECT doc_id, epoch,
-         |   ${hash32Sql(s"(${hash32Sql("(doc_id + 1)")} + epoch)")} AS h
-         |  FROM documents,
-         |   (SELECT CAST(e AS BIGINT) AS epoch FROM (VALUES (1), (2)) t(e)))
-         |SELECT doc_id, epoch, h % 8 AS shard,
-         | row_number() OVER (PARTITION BY epoch, h % 8 ORDER BY h, doc_id)
-         |   AS pos
-         |FROM h""".stripMargin,
-
-    // keep rule sqrt(n_s/n_max) made integer-exact:
-    // h^2 * n_max < n_s * 1024^2 with h = hash32(doc_id+7) % 1024
-    "sample_temperature" ->
-      s"""WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-         |m AS (SELECT max(n_docs) AS n_max FROM c),
-         |h AS (SELECT source, ${hash32Sql("(doc_id + 7)")} % 1024 AS h
-         |  FROM documents),
-         |k AS (SELECT h.source, count(*) AS n_kept
-         |  FROM h JOIN c USING (source), m
-         |  WHERE h.h * h.h * m.n_max < c.n_docs * 1048576
-         |  GROUP BY 1)
-         |SELECT c.source, c.n_docs, coalesce(k.n_kept, CAST(0 AS BIGINT)) AS n_kept
-         |FROM c LEFT JOIN k USING (source)""".stripMargin,
-
-    // 3 unrolled power-iteration rounds of the same simplified PageRank
-    // recurrence (no dangling redistribution, see GraphOps scaladoc);
-    // (1.0-0.85) is spelled as the subtraction so the teleport constant
-    // is the bit-identical double on both engines
-    // degree-ordered orientation replayed with row-value comparisons;
-    // each triangle closes exactly one wedge at its smallest vertex
-    "graph_triangles" ->
-      """WITH edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
-        |deg AS (SELECT node, count(*) AS deg FROM
-        |  (SELECT a AS node FROM edges UNION ALL SELECT b FROM edges) n
-        |  GROUP BY node),
-        |ori AS (
-        |  SELECT CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.a ELSE e.b END AS u,
-        |         CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.b ELSE e.a END AS v
-        |  FROM edges e JOIN deg da ON e.a = da.node JOIN deg db ON e.b = db.node),
-        |w AS (SELECT e1.v AS x, e2.v AS y FROM ori e1 JOIN ori e2
-        |      ON e1.u = e2.u AND e1.v < e2.v),
-        |t AS (SELECT count(*) AS n FROM w
-        |      JOIN edges ON w.x = edges.a AND w.y = edges.b)
-        |SELECT (SELECT count(*) FROM edges) AS n_edges,
-        |       (SELECT count(*) FROM w) AS n_wedges,
-        |       t.n AS n_triangles
-        |FROM t""".stripMargin,
-
-    // hash-deterministic walk replay: per-step fnv argmin over the
-    // undirected neighbor set, ordering on the SIGNED hash
-    "graph_random_walk" ->
-      s"""WITH dir AS (SELECT DISTINCT l_suppkey AS u, l_partkey AS v
-         |            FROM lineitem),
-         |edges AS (SELECT DISTINCT u, v FROM
-         |  (SELECT u, v FROM dir UNION ALL SELECT v, u FROM dir) t),
-         |seeds AS (SELECT u AS walk_id, u AS node FROM
-         |  (SELECT DISTINCT u FROM edges ORDER BY u LIMIT 5) s),
-         |h1 AS (SELECT q.walk_id, q.v,
-         |        CAST(CASE WHEN fu >= 9223372036854775808::HUGEINT
-         |          THEN fu - 18446744073709551616::HUGEINT ELSE fu END
-         |          AS BIGINT) AS h
-         |       FROM (SELECT s.walk_id, e.v,
-         |          ${fnvSql("s.node::VARCHAR || '#1#' || e.v::VARCHAR")} AS fu
-         |         FROM seeds s JOIN edges e ON s.node = e.u) q(walk_id, v, fu)),
-         |s1 AS (SELECT walk_id, v AS node FROM
-         |  (SELECT walk_id, v, row_number() OVER (PARTITION BY walk_id
-         |    ORDER BY h, v) AS rn FROM h1) t WHERE rn = 1),
-         |h2 AS (SELECT q.walk_id, q.v,
-         |        CAST(CASE WHEN fu >= 9223372036854775808::HUGEINT
-         |          THEN fu - 18446744073709551616::HUGEINT ELSE fu END
-         |          AS BIGINT) AS h
-         |       FROM (SELECT s.walk_id, e.v,
-         |          ${fnvSql("s.node::VARCHAR || '#2#' || e.v::VARCHAR")} AS fu
-         |         FROM s1 s JOIN edges e ON s.node = e.u) q(walk_id, v, fu)),
-         |s2 AS (SELECT walk_id, v AS node FROM
-         |  (SELECT walk_id, v, row_number() OVER (PARTITION BY walk_id
-         |    ORDER BY h, v) AS rn FROM h2) t WHERE rn = 1),
-         |h3 AS (SELECT q.walk_id, q.v,
-         |        CAST(CASE WHEN fu >= 9223372036854775808::HUGEINT
-         |          THEN fu - 18446744073709551616::HUGEINT ELSE fu END
-         |          AS BIGINT) AS h
-         |       FROM (SELECT s.walk_id, e.v,
-         |          ${fnvSql("s.node::VARCHAR || '#3#' || e.v::VARCHAR")} AS fu
-         |         FROM s2 s JOIN edges e ON s.node = e.u) q(walk_id, v, fu)),
-         |s3 AS (SELECT walk_id, v AS node FROM
-         |  (SELECT walk_id, v, row_number() OVER (PARTITION BY walk_id
-         |    ORDER BY h, v) AS rn FROM h3) t WHERE rn = 1)
-         |SELECT walk_id, 0 AS step, node FROM seeds
-         |UNION ALL SELECT walk_id, 1, node FROM s1
-         |UNION ALL SELECT walk_id, 2, node FROM s2
-         |UNION ALL SELECT walk_id, 3, node FROM s3""".stripMargin,
-
-    // the pagerank chain with the teleport vector concentrated on the
-    // seed pair (1/|S| each); contributions otherwise identical
-    "graph_ppr" ->
-      """WITH edges AS (SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
-        |nodes AS (SELECT DISTINCT node FROM
-        |  (SELECT src AS node FROM edges UNION ALL SELECT dst AS node FROM edges) u),
-        |deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM edges GROUP BY src),
-        |r0 AS (SELECT node, CASE WHEN node IN (1, 2) THEN 0.5 ELSE 0.0 END AS rank
-        |       FROM nodes),
-        |c1 AS (SELECT e.dst AS node, sum(r.rank/d.outdeg) AS contrib FROM edges e
-        |       JOIN r0 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY e.dst),
-        |r1 AS (SELECT nodes.node, (1.0-0.85)*(CASE WHEN nodes.node IN (1, 2) THEN 0.5 ELSE 0.0 END)
-        |        + 0.85*coalesce(c.contrib, 0.0) AS rank
-        |       FROM nodes LEFT JOIN c1 c ON nodes.node = c.node),
-        |c2 AS (SELECT e.dst AS node, sum(r.rank/d.outdeg) AS contrib FROM edges e
-        |       JOIN r1 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY e.dst),
-        |r2 AS (SELECT nodes.node, (1.0-0.85)*(CASE WHEN nodes.node IN (1, 2) THEN 0.5 ELSE 0.0 END)
-        |        + 0.85*coalesce(c.contrib, 0.0) AS rank
-        |       FROM nodes LEFT JOIN c2 c ON nodes.node = c.node),
-        |c3 AS (SELECT e.dst AS node, sum(r.rank/d.outdeg) AS contrib FROM edges e
-        |       JOIN r2 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY e.dst),
-        |r3 AS (SELECT nodes.node, (1.0-0.85)*(CASE WHEN nodes.node IN (1, 2) THEN 0.5 ELSE 0.0 END)
-        |        + 0.85*coalesce(c.contrib, 0.0) AS rank
-        |       FROM nodes LEFT JOIN c3 c ON nodes.node = c.node)
-        |SELECT node, round(rank, 8) AS rank FROM r3""".stripMargin,
-
-    "graph_pagerank" ->
-      """WITH edges AS (SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
-        |nodes AS (SELECT DISTINCT node FROM
-        |  (SELECT src AS node FROM edges UNION ALL SELECT dst AS node FROM edges) u),
-        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-        |deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM edges GROUP BY src),
-        |r0 AS (SELECT node, 1.0/(SELECT n FROM nn) AS rank FROM nodes),
-        |c1 AS (SELECT e.dst AS node, sum(r.rank/d.outdeg) AS contrib FROM edges e
-        |       JOIN r0 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY e.dst),
-        |r1 AS (SELECT nodes.node, (1.0-0.85)/(SELECT n FROM nn) + 0.85*coalesce(c.contrib, 0.0) AS rank
-        |       FROM nodes LEFT JOIN c1 c ON nodes.node = c.node),
-        |c2 AS (SELECT e.dst AS node, sum(r.rank/d.outdeg) AS contrib FROM edges e
-        |       JOIN r1 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY e.dst),
-        |r2 AS (SELECT nodes.node, (1.0-0.85)/(SELECT n FROM nn) + 0.85*coalesce(c.contrib, 0.0) AS rank
-        |       FROM nodes LEFT JOIN c2 c ON nodes.node = c.node),
-        |c3 AS (SELECT e.dst AS node, sum(r.rank/d.outdeg) AS contrib FROM edges e
-        |       JOIN r2 r ON e.src = r.node JOIN deg d ON e.src = d.src GROUP BY e.dst),
-        |r3 AS (SELECT nodes.node, (1.0-0.85)/(SELECT n FROM nn) + 0.85*coalesce(c.contrib, 0.0) AS rank
-        |       FROM nodes LEFT JOIN c3 c ON nodes.node = c.node)
-        |SELECT node, round(rank, 8) AS rank FROM r3""".stripMargin,
-
-    "stats_skew" ->
-      """WITH sizes AS (SELECT l_partkey, count(*) AS sz FROM lineitem GROUP BY l_partkey)
-        |SELECT CAST(CASE WHEN sz >= 64 THEN 64 WHEN sz >= 32 THEN 32
-        |  WHEN sz >= 16 THEN 16 WHEN sz >= 8 THEN 8 WHEN sz >= 4 THEN 4
-        |  WHEN sz >= 2 THEN 2 ELSE 1 END AS BIGINT) AS bucket_lo,
-        | count(*) AS n_keys, min(sz) AS min_sz, max(sz) AS max_sz,
-        | CAST(sum(sz) AS BIGINT) AS n_rows
-        |FROM sizes GROUP BY 1""".stripMargin,
-
-    "stats_heavy_keys" ->
-      """SELECT user_id, sz FROM
-        | (SELECT user_id, count(*) AS sz FROM events GROUP BY user_id) s
-        |ORDER BY sz DESC, user_id ASC LIMIT 10""".stripMargin,
-
-    "search_phrase" ->
-      s"""WITH arrs AS (SELECT doc_id,
-         |  list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS a
-         |  FROM documents),
-         |p AS (SELECT doc_id, unnest(a) AS term, generate_subscripts(a, 1) AS pos
-         |      FROM arrs),
-         |t0 AS (SELECT doc_id, pos AS start FROM p WHERE term = 'batch'),
-         |t1 AS (SELECT doc_id, pos - 1 AS start FROM p WHERE term = 'table')
-         |SELECT t0.doc_id AS doc_id, count(*) AS n_hits
-         |FROM t0 JOIN t1 ON t0.doc_id = t1.doc_id AND t0.start = t1.start
-         |GROUP BY t0.doc_id""".stripMargin,
-
-    // deterministic Lloyd: sharded init (vec_id % k), 2 assign rounds
-    // with one centroid recompute between; argmax ordering on the raw
-    // sim with lower-cluster tie-break mirrors ClusterOps.assign
-    "cluster_kmeans" ->
-      s"""WITH $kmeansCtes
-         |SELECT vec_id, CAST(cluster AS INT) AS cluster FROM asn1""".stripMargin,
-
-    // a/b sims via the mirrored cosSql fold (VALUES matter here, not
-    // just the argmax order); per-point s rounds to 6 before the
-    // vec_id-ordered mean fold — the embed_ood convention
-    "cluster_silhouette" ->
-      s"""WITH $kmeansCtes,
-         |ab AS (SELECT a.vec_id AS vec_id, a.cluster AS own,
-         |   max(CASE WHEN c.cluster = a.cluster
-         |       THEN ${cosSql("e.emb", "c.centroid")} END) AS a_sim,
-         |   max(CASE WHEN c.cluster <> a.cluster
-         |       THEN ${cosSql("e.emb", "c.centroid")} END) AS b_sim
-         |  FROM e JOIN asn1 a ON e.vec_id = a.vec_id CROSS JOIN cent1 c
-         |  GROUP BY a.vec_id, a.cluster),
-         |ab2 AS (SELECT vec_id, own, 1.0::DOUBLE - a_sim AS a,
-         |         1.0::DOUBLE - b_sim AS b FROM ab),
-         |sil AS (SELECT vec_id, own,
-         |   round(CASE WHEN greatest(a, b) = 0.0::DOUBLE THEN 0.0::DOUBLE
-         |         ELSE (b - a) / greatest(a, b) END, 6) AS sil FROM ab2),
-         |g AS (SELECT own AS cluster, CAST(count(*) AS BIGINT) AS n,
-         |       list_reduce(list_prepend(0.0::DOUBLE,
-         |         list(sil ORDER BY vec_id)), (acc, x) -> acc + x) AS ssum
-         |      FROM sil GROUP BY own)
-         |SELECT CAST(cluster AS INT) AS cluster, n,
-         | round(ssum / n, 6) AS mean_silhouette FROM g""".stripMargin,
-
-    // add-0.5-smoothed bigram LM, scored on the (doc, bigram, n)
-    // compressed relation exactly as TextAnalysisOps.bigramSurprisal
-    "text_perplexity" -> surprisalSql,
-
-    // both component chains nest verbatim; tercile cuts are integer
-    // cross-multiplies on the rounded-surprisal rank
-    "curate_ccnet" ->
-      s"""WITH lang AS ($langIdSql),
-         |ppl AS (SELECT doc_id, mean_bg_surprisal FROM ($surprisalSql)),
-         |j AS (SELECT l.doc_id, l.pred_lang, p.mean_bg_surprisal
-         |      FROM lang l JOIN ppl p ON l.doc_id = p.doc_id),
-         |rk AS (SELECT doc_id, pred_lang, mean_bg_surprisal,
-         |   row_number() OVER (PARTITION BY pred_lang
-         |     ORDER BY mean_bg_surprisal, doc_id) AS r,
-         |   count(*) OVER (PARTITION BY pred_lang) AS n
-         |  FROM j)
-         |SELECT doc_id, pred_lang, mean_bg_surprisal AS surprisal,
-         | CASE WHEN r * 3 <= n THEN 'head'
-         |      WHEN r * 3 <= n * 2 THEN 'middle'
-         |      ELSE 'tail' END AS bucket
-         |FROM rk""".stripMargin,
-
-    // the URL fixture is built with identical string concatenation on
-    // both engines; the normalization chain replays UrlFunctions'
-    // patterns verbatim (DuckDB needs the explicit 'g' flag — Spark's
-    // regexp_replace is global by default)
-    "curate_url_dedup" ->
-      """WITH urls AS (SELECT doc_id,
-        |  'HTTPS://WWW.' || source || '.Example.COM:443/docs/' ||
-        |  CAST(doc_id % 50 AS VARCHAR) || '/?utm_source=feed&id=' ||
-        |  CAST(doc_id % 7 AS VARCHAR) || '&utm_campaign=' || source ||
-        |  '#sec' || CAST(doc_id % 3 AS VARCHAR) AS url FROM documents),
-        |parts AS (SELECT doc_id, url,
-        |  regexp_replace(url, '#.*$', '', 'g') AS nofrag FROM urls),
-        |comp AS (SELECT doc_id, url,
-        |  lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)(.*)$', 1)) AS scheme,
-        |  regexp_replace(regexp_replace(
-        |    lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)(.*)$', 2)),
-        |    '^www\.', '', 'g'), ':(80|443)$', '', 'g') AS host,
-        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    regexp_replace(
-        |      regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)(.*)$', 3),
-        |      '(utm_[a-z]+|gclid|fbclid)=[^&#]*&?', '', 'g'),
-        |    '[?&]+$', '', 'g'), '\?&', '?', 'g'), '/+\?', '?', 'g'),
-        |    '^(/.*?)/+$', '\1', 'g') AS rest
-        |  FROM parts),
-        |norm AS (SELECT doc_id, CASE WHEN scheme = '' THEN url
-        |  ELSE scheme || '://' || host || rest END AS norm_url FROM comp)
-        |SELECT norm_url, count(*) AS n_docs, min(doc_id) AS keep_id
-        |FROM norm GROUP BY norm_url""".stripMargin,
-
-    // exact computation of what the LSH+verify pipeline approximates: all
-    // pairs with shingle-SET jaccard ≥ 0.4, mirroring every shingle rule
-    // of Hashing.shingles — docs with 1..k-1 tokens contribute one
-    // whole-doc shingle, and token-less docs (empty shingle sets share
-    // every MinHash bucket and verify at jaccard 1.0) pair with each
-    // other. A hash match proves the banded-MinHash candidates had no
-    // false negatives on this corpus and the verify stage computed the
-    // exact same jaccard values.
-    "dedup_minhash_cand" -> minhashVerifiedSql,
-
-    // full replication of the SimHash kernel: FNV-1a per token in HUGEINT
-    // (the xor only ever touches the low 7 bits — ASCII tokens — so it
-    // runs in BIGINT), per-bit majority votes, 16-bit chunk buckets,
-    // hamming over the xor of the signed signatures. Token-less docs get
-    // signature 0 (the empty-vote fixpoint), mirroring Hashing.simHash.
-    "dedup_simhash" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '')) AS tok
-        |  FROM documents),
-        |th AS (
-        |  SELECT doc_id,
-        |   list_reduce(list_prepend(14695981039346656037::HUGEINT,
-        |     list_transform(regexp_split_to_array(tok, ''), c -> unicode(c)::HUGEINT)),
-        |     (h, c) -> ((h - h % 128 +
-        |       xor(CAST(h % 128 AS BIGINT), CAST(c AS BIGINT))::HUGEINT)
-        |       * 1099511628211) % 18446744073709551616::HUGEINT) AS h
-        |  FROM toks),
-        |bits AS (
-        |  SELECT doc_id, b,
-        |   sum(CASE WHEN (h // (1::HUGEINT << b)) % 2 = 1 THEN 1 ELSE -1 END) AS acc
-        |  FROM th, unnest(generate_series(0, 63)) AS t(b)
-        |  GROUP BY doc_id, b),
-        |sigs AS (
-        |  SELECT doc_id,
-        |   sum(CASE WHEN acc > 0 THEN (1::HUGEINT << b) ELSE 0::HUGEINT END) AS su
-        |  FROM bits GROUP BY doc_id
-        |  UNION ALL
-        |  SELECT doc_id, 0::HUGEINT AS su FROM documents
-        |  WHERE len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '')) = 0),
-        |sigc AS (
-        |  SELECT doc_id,
-        |   CAST(CASE WHEN su >= 9223372036854775808::HUGEINT
-        |     THEN su - 18446744073709551616::HUGEINT ELSE su END AS BIGINT) AS sig,
-        |   CAST(su % 65536 AS BIGINT) AS c0,
-        |   CAST((su // 65536) % 65536 AS BIGINT) AS c1,
-        |   CAST((su // 4294967296) % 65536 AS BIGINT) AS c2,
-        |   CAST((su // 281474976710656) % 65536 AS BIGINT) AS c3
-        |  FROM sigs)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        | CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
-        |FROM sigc a JOIN sigc b ON a.doc_id < b.doc_id
-        | AND (a.c0 = b.c0 OR a.c1 = b.c1 OR a.c2 = b.c2 OR a.c3 = b.c3)
-        |WHERE bit_count(xor(a.sig, b.sig)) <= 8""".stripMargin,
-
-    // frame chunks replicated in HUGEINT: one row per 32nd-byte offset,
-    // seeded base-31 rolling hash of the 16-byte chunk, signed at the end
-    "mm_frame_sample" ->
-      """WITH fr AS (
-        |  SELECT doc_id, text, i AS off
-        |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-        |h AS (
-        |  SELECT doc_id, off,
-        |   list_reduce(list_prepend(1125899906842597::HUGEINT,
-        |     list_transform(regexp_split_to_array(substr(text, off + 1, 16), ''),
-        |       c -> unicode(c)::HUGEINT)),
-        |     (hh, c) -> (hh * 31 + c) % 18446744073709551616::HUGEINT) AS hv
-        |  FROM fr)
-        |SELECT doc_id, CAST(off // 32 AS INT) AS frame_idx,
-        | CAST(CASE WHEN hv >= 9223372036854775808::HUGEINT
-        |   THEN hv - 18446744073709551616::HUGEINT ELSE hv END AS BIGINT)
-        |   AS frame_sig
-        |FROM h""".stripMargin,
-
-    // the 2D patch fold replayed: each (pr, pc) block's bytes gather as
-    // concatenated row slices (row-major order = the kernel's fold
-    // order); w=64 divides into 8-wide columns exactly, so only the
-    // final image ROW is ragged, which substr truncation reproduces;
-    // zero-byte corner patches are filtered on both sides
-    "mm_patches" -> patchSigSql,
-
-    // integer-boundary block grid + integer means; // == div on the
-    // non-negative codepoint sums
-    "mm_resize" -> blockMeansSql,
-
-    // per-doc tone rollup of the same block-mean chain — zone counts
-    // and contrast are exact integers over the ≤64 thumbnail cells
-    "mm_tone_profile" ->
-      s"""WITH bm AS (SELECT * FROM ($blockMeansSql))
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_blocks,
-         | CAST(min(mean_gray) AS BIGINT) AS g_min,
-         | CAST(max(mean_gray) AS BIGINT) AS g_max,
-         | CAST(max(mean_gray) - min(mean_gray) AS BIGINT) AS contrast,
-         | CAST(coalesce(sum(CASE WHEN mean_gray < 64 THEN 1 END), 0)
-         |   AS BIGINT) AS n_dark,
-         | CAST(coalesce(sum(CASE WHEN mean_gray >= 64 AND mean_gray < 192
-         |   THEN 1 END), 0) AS BIGINT) AS n_mid,
-         | CAST(coalesce(sum(CASE WHEN mean_gray >= 192 THEN 1 END), 0)
-         |   AS BIGINT) AS n_bright
-         |FROM bm GROUP BY doc_id""".stripMargin,
-
-    // the aHash bit fold in HUGEINT (disjoint bits: sum == or), wrapped
-    // to the signed BIGINT Spark emits — the patchSigSql convention;
-    // block means compare via the integer cross-multiply, never floats
-    "mm_phash" -> phashSqlFor("documents"),
-
-    // the same aHash chain over base ∪ planted variants, bucketed by
-    // four 16-bit bands and verified by exact popcount; xor of the
-    // signed hashes runs bit-identically in both engines
-    "mm_phash_neardup" ->
-      s"""WITH pd AS MATERIALIZED (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 2000000 AS doc_id, text || ' zq' AS text
-         |  FROM documents WHERE doc_id % 53 = 0),
-         |ph AS MATERIALIZED (SELECT * FROM (${phashSqlFor("pd")})),
-         |bands AS (
-         |  SELECT doc_id, phash, b.b AS band,
-         |   (phash >> (b.b * 16)) & 65535 AS bv
-         |  FROM ph, unnest(generate_series(0, 3)) AS b(b)),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b,
-         |   x.phash AS pa, y.phash AS pb
-         |  FROM bands x JOIN bands y
-         |    ON x.band = y.band AND x.bv = y.bv AND x.doc_id < y.doc_id)
-         |SELECT id_a, id_b, CAST(bit_count(xor(pa, pb)) AS INT) AS hamming
-         |FROM cand WHERE bit_count(xor(pa, pb)) <= 12""".stripMargin,
-
-    // candidates only via shared (position, signature) postings with
-    // the df ≤ 20 hub cut; the accept test is integer (5·shared ≥
-    // 4·max) — the rounded fraction is display-only
-    "mm_neardup" -> imageNearDupSqlFor(patchSigSql),
-
-    // both perceptual near-dup chains replayed over documents ∪ the
-    // planted fixtures (the shared imageNearDupSqlFor / audioNearDupSql
-    // vals — edit those, not copies), restricted to planted-planted
-    // pairs, left-joined against the labeled truth VALUES → per-medium
-    // confusion counts with precision/recall
-    "mm_neardup_eval" -> {
-      val imgUnion =
-        s"(SELECT doc_id, text FROM documents UNION ALL " +
-        s"SELECT * FROM (VALUES (9100001, '$imgBase'), " +
-        s"(9100002, '$imgEdit'), (9100003, '$imgHalf'), " +
-        s"(9100004, '$imgOther')) v(doc_id, text)) iu"
-      s"""WITH ip AS (
-         |  SELECT doc_a, doc_b
-         |  FROM (${imageNearDupSqlFor(patchSigSqlFor(imgUnion))}) q1
-         |  WHERE doc_a >= 9100001 AND doc_b >= 9100001),
-         |apr AS (
-         |  SELECT id_a, id_b FROM ($audioNearDupSql) q2
-         |  WHERE id_a BETWEEN 9000001 AND 9000003
-         |    AND id_b BETWEEN 9000001 AND 9000003),
-         |truth AS (SELECT * FROM (VALUES
-         |  ('audio', 9000001, 9000002, 1), ('audio', 9000001, 9000003, 0),
-         |  ('audio', 9000002, 9000003, 0),
-         |  ('image', 9100001, 9100002, 1), ('image', 9100001, 9100003, 0),
-         |  ('image', 9100001, 9100004, 0), ('image', 9100002, 9100003, 0),
-         |  ('image', 9100002, 9100004, 0), ('image', 9100003, 9100004, 0))
-         |  t(medium, id_a, id_b, is_pos)),
-         |pred AS (
-         |  SELECT 'image' AS medium, doc_a AS id_a, doc_b AS id_b FROM ip
-         |  UNION ALL SELECT 'audio', id_a, id_b FROM apr),
-         |jj AS (
-         |  SELECT t.medium, t.is_pos,
-         |   CASE WHEN p.id_a IS NULL THEN 0 ELSE 1 END AS pred
-         |  FROM truth t LEFT JOIN pred p ON t.medium = p.medium
-         |    AND t.id_a = p.id_a AND t.id_b = p.id_b)
-         |SELECT medium,
-         | CAST(sum(is_pos) AS BIGINT) AS n_pos,
-         | CAST(sum(1 - is_pos) AS BIGINT) AS n_neg,
-         | CAST(sum(is_pos * pred) AS BIGINT) AS tp,
-         | CAST(sum((1 - is_pos) * pred) AS BIGINT) AS fp,
-         | CAST(sum(is_pos * (1 - pred)) AS BIGINT) AS fn,
-         | CAST(sum((1 - is_pos) * (1 - pred)) AS BIGINT) AS tn,
-         | round(CASE WHEN sum(is_pos * pred) + sum((1 - is_pos) * pred) = 0
-         |   THEN 0.0::DOUBLE ELSE CAST(sum(is_pos * pred) AS DOUBLE) /
-         |     (sum(is_pos * pred) + sum((1 - is_pos) * pred)) END, 6)
-         |   AS precision,
-         | round(CAST(sum(is_pos * pred) AS DOUBLE) / sum(is_pos), 6)
-         |   AS recall
-         |FROM jj GROUP BY medium""".stripMargin
-    },
-
-    // stubDecode replicated in HUGEINT: base-31 rolling hash mod 2^64 over
-    // the first 1024 bytes (ASCII text → bytes = codepoints), unsigned
-    // field extraction
-    "mm_png_meta" ->
-      """SELECT CAST(col0 AS BIGINT) AS doc_id, CAST(col1 AS INT) AS width,
-        | CAST(col2 AS INT) AS height, col3 AS format
-        |FROM (VALUES (1, 5, 3, 'png'), (2, 17, 9, 'png'),
-        | (3, 64, 64, 'png')) t""".stripMargin,
-
-    "mm_media_meta" ->
-      """WITH h AS (
-        |  SELECT doc_id, strlen(text) AS nb,
-        |   list_reduce(list_prepend(0::HUGEINT,
-        |     list_transform(regexp_split_to_array(substr(text, 1, 1024), ''),
-        |       c -> unicode(c)::HUGEINT)),
-        |     (hh, c) -> (hh * 31 + c) % 18446744073709551616::HUGEINT) AS hv
-        |  FROM documents)
-        |SELECT doc_id,
-        | CAST(64 + hv % 1024 AS INT) AS width,
-        | CAST(64 + (hv // 65536) % 1024 AS INT) AS height,
-        | CASE (hv // 4294967296) % 3
-        |   WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'webp' END AS format,
-        | CAST(nb AS BIGINT) AS n_bytes
-        |FROM h""".stripMargin,
-
-    // exact brute-force mirror over corpus ∪ planted vectors: the planted
-    // identical pairs are guaranteed same-bucket in the LSH path, so the
-    // hash match now proves presence (2 pairs) as well as absence of false
-    // positives across all organic pairs. (Valid while no LSH bucket
-    // exceeds maxBucket=2000 — trivially true at 505 vectors; the cap's
-    // recall trade is documented on embeddingNearDups.)
-    "dedup_embedding" ->
-      s"""WITH base AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-         |  UNION ALL
-         |  SELECT 9000000 + j AS vec_id,
-         |   list_transform(generate_series(0, 63), i -> CAST(
-         |     CASE WHEN j <= 2 THEN i + 1
-         |          WHEN j <= 4 THEN (i * 37) % 64 + 1
-         |          ELSE (i * 11) % 64 + 1 END AS DOUBLE)) AS emb
-         |  FROM unnest(generate_series(1, 5)) AS t(j))
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         | round(${cosSql("a.emb", "b.emb")}, 4) AS sim
-         |FROM base a JOIN base b ON a.vec_id < b.vec_id
-         |WHERE ${cosSql("a.emb", "b.emb")} >= 0.99""".stripMargin,
-
-    // SemDeDup replay: the same planted-union base as dedup_embedding,
-    // the same deterministic Lloyd chain as cluster_kmeans (sharded
-    // init, 2 assign rounds, argmax ties to the lower cluster — the
-    // ranking is ulp-robust, proven by cluster_kmeans), then the keep
-    // rule: drop iff a smaller-id same-cluster vector has exact-fold
-    // cosine ≥ 0.99 (cosSql mirrors SimilarityOps.cosine bit-for-bit)
-    "dedup_semantic" -> semDedupSql("8"),
-
-    // identical Lloyd replay, but k is the ⌈√N⌉ the engine derives from
-    // its own count — the oracle recomputes it from base, so the gate
-    // also proves the two engines agree on N and therefore on k
-    "dedup_semantic_auto" -> semDedupSql(
-      "(SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM base)"),
-
-    "dedup_semantic_approx" -> semDedupApproxSql,
-
-    // the canonicalization chain mirrored stepwise: fragment → query →
-    // scheme → host fold (+ de-www) ⊕ trailing-slash-stripped path
-    "dedup_url" ->
-      """WITH u(fid, url) AS (VALUES
-        | (1, 'https://WWW.Example.com/Path/Article?utm=x#frag'),
-        | (2, 'https://example.com/Path/Article'),
-        | (3, 'http://example.com/Path/Article/'),
-        | (4, 'https://example.com/path/article'),
-        | (5, 'https://sub.example.com/Path/Article'),
-        | (6, 'HTTP://WWW.EXAMPLE.COM/Path/Article#x'),
-        | (7, 'https://example.com/other?q=1'),
-        | (8, 'https://example.com/other/')),
-        |s1 AS (SELECT fid, split_part(split_part(url, '#', 1), '?', 1) AS nq
-        |       FROM u),
-        |s2 AS (SELECT fid,
-        |   regexp_replace(nq, '^[A-Za-z][A-Za-z0-9+.-]*://', '') AS rest
-        |  FROM s1),
-        |c AS (SELECT fid,
-        |   regexp_replace(lower(regexp_extract(rest, '^[^/]*')), '^www\.', '')
-        |   || regexp_replace(regexp_replace(rest, '^[^/]*', ''), '/+$', '')
-        |     AS canon
-        |  FROM s2),
-        |k AS (SELECT canon, min(fid) AS keep_id FROM c GROUP BY 1)
-        |SELECT CAST(c.fid AS BIGINT) AS fid, canon, c.fid = keep_id AS keep,
-        | CAST(CASE WHEN c.fid <> keep_id THEN keep_id END AS BIGINT) AS dup_of
-        |FROM c JOIN k USING (canon)""".stripMargin,
-
-    // positional tokens (the search_snippet pattern), FNV start rule on
-    // the low-32 fold, covered set via generate_series + DISTINCT
-    "pack_span_corruption" ->
-      s"""WITH arrs AS (
-         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |    x -> x <> '') AS a
-         |  FROM documents),
-         |p AS (SELECT doc_id, generate_subscripts(a, 1) - 1 AS pos
-         |      FROM arrs),
-         |n AS (SELECT doc_id, count(*) AS n_tokens FROM p GROUP BY 1),
-         |st AS (SELECT doc_id, pos AS s FROM p
-         |       WHERE CAST(${fnvSql("doc_id::VARCHAR || '#' || pos::VARCHAR")}
-         |         % 4294967296::HUGEINT AS BIGINT) % 20 = 0),
-         |ns AS (SELECT doc_id, count(*) AS n_starts FROM st GROUP BY 1),
-         |cov AS (SELECT DISTINCT st.doc_id, mp FROM st JOIN n USING (doc_id),
-         |        unnest(generate_series(st.s,
-         |          least(st.s + 2, n.n_tokens - 1))) t(mp)),
-         |nm AS (SELECT doc_id, count(*) AS n_masked FROM cov GROUP BY 1)
-         |SELECT n.doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-         | CAST(coalesce(n_starts, 0) AS BIGINT) AS n_starts,
-         | CAST(coalesce(n_masked, 0) AS BIGINT) AS n_masked,
-         | round(CAST(coalesce(n_masked, 0) AS DOUBLE) / n_tokens, 4)
-         |   AS mask_frac
-         |FROM n LEFT JOIN ns USING (doc_id) LEFT JOIN nm USING (doc_id)""".stripMargin,
-
-    // the PSM reorder replay: hash-decided fim flag, hash-derived
-    // split points uniform over [0, n], and the layout fingerprint as
-    // fnv over the ACTUAL reordered stream (empty slices a[1:0] /
-    // a[n+1:n] clamp to [] in both engines); fp wrapped to signed
-    "pack_fim" ->
-      s"""WITH arrs AS (
-         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
-         |    '\\s+'), x -> x <> '') AS a
-         |  FROM documents),
-         |sized AS (SELECT doc_id, a, CAST(len(a) AS BIGINT) AS n
-         |          FROM arrs WHERE len(a) >= 2),
-         |c AS (
-         |  SELECT doc_id, a, n,
-         |   CAST(${fnvSql("doc_id::VARCHAR || '#fim'")}
-         |     % 4294967296::HUGEINT AS BIGINT) % 2 = 0 AS fim,
-         |   CAST(${fnvSql("doc_id::VARCHAR || '#cut1'")}
-         |     % 4294967296::HUGEINT AS BIGINT) % (n + 1) AS c1,
-         |   CAST(${fnvSql("doc_id::VARCHAR || '#cut2'")}
-         |     % 4294967296::HUGEINT AS BIGINT) % (n + 1) AS c2
-         |  FROM sized),
-         |lh AS (SELECT doc_id, a, n, fim,
-         |        least(c1, c2) AS lo, greatest(c1, c2) AS hi FROM c),
-         |fp AS (
-         |  SELECT doc_id, n, fim, lo, hi,
-         |   ${fnvSql("array_to_string(CASE WHEN fim THEN " +
-             "['<pre>'] || a[1:CAST(lo AS INT)] || ['<suf>'] || " +
-             "a[CAST(hi AS INT)+1:CAST(n AS INT)] || ['<mid>'] || " +
-             "a[CAST(lo AS INT)+1:CAST(hi AS INT)] ELSE a END, ' ')")} AS h
-         |  FROM lh)
-         |SELECT doc_id, n AS n_tokens, fim,
-         | CASE WHEN fim THEN lo ELSE n END AS pre_len,
-         | CASE WHEN fim THEN hi - lo ELSE 0 END AS mid_len,
-         | CASE WHEN fim THEN n - hi ELSE 0 END AS suf_len,
-         | CASE WHEN fim THEN n + 3 ELSE n END AS out_len,
-         | CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
-         |   THEN h - 18446744073709551616::HUGEINT ELSE h END AS BIGINT)
-         |   AS layout_fp
-         |FROM fp""".stripMargin,
-
-    // word/sentence/vowel-group counts + the Flesch formula on
-    // identical literal doubles
-    "text_readability" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT CAST(col0 AS BIGINT), col1 FROM (VALUES
-        |   (9300001, 'The cat sat. The dog ran fast! Is it good?'),
-        |   (9300002, 'Comprehensive establishments demonstrate extraordinary capabilities.')) t),
-        |m AS (SELECT doc_id,
-        |   len(regexp_extract_all(text, '[^\s]+')) AS n_words,
-        |   greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sents,
-        |   len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syll
-        |  FROM base)
-        |SELECT doc_id, CAST(n_words AS INT) AS n_words,
-        | CAST(n_sents AS INT) AS n_sents, CAST(n_syll AS INT) AS n_syll,
-        | round(206.835::DOUBLE
-        |  - 1.015::DOUBLE * (CAST(n_words AS DOUBLE) / n_sents)
-        |  - 84.6::DOUBLE * (CAST(n_syll AS DOUBLE) / n_words), 4) AS flesch
-        |FROM m WHERE n_words > 0""".stripMargin,
-
-    // repeated-multiply folds for s^r and (1-s^r)^b — no libm pow
-    "dedup_lsh_curve" ->
-      """WITH g AS (SELECT i / 10.0::DOUBLE AS s
-        |           FROM unnest(generate_series(1, 9)) t(i)),
-        |br AS (SELECT * FROM (VALUES (1, 8), (2, 4), (4, 2), (8, 1))
-        |       t(b, r)),
-        |x AS (SELECT s, b, r,
-        |   list_reduce(list_prepend(1.0::DOUBLE,
-        |     list_transform(generate_series(1, r), k -> s)),
-        |     (acc, v) -> acc * v) AS sr
-        |  FROM g, br),
-        |y AS (SELECT s, b, r, sr,
-        |   list_reduce(list_prepend(1.0::DOUBLE,
-        |     list_transform(generate_series(1, b), k -> 1.0::DOUBLE - sr)),
-        |     (acc, v) -> acc * v) AS q
-        |  FROM x)
-        |SELECT s, CAST(b AS INT) AS b, CAST(r AS INT) AS r,
-        | round(1.0::DOUBLE - q, 6) AS p
-        |FROM y""".stripMargin,
-
-    // lower → digit runs → <num> → whitespace collapse, counts on the
-    // original text
-    "text_num_normalize" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT CAST(col0 AS BIGINT), col1 FROM (VALUES
-        |   (9100001, 'Call 911 or wait 30 minutes for THE 2nd response'),
-        |   (9100002, 'IPv4 10.0.0.1  port  8080'),
-        |   (9100003, 'no digits here at all')) t)
-        |SELECT doc_id,
-        | CAST(len(regexp_extract_all(text, '[0-9]+')) AS INT) AS n_nums,
-        | trim(regexp_replace(
-        |   regexp_replace(lower(text), '[0-9]+', '<num>', 'g'),
-        |   '\s+', ' ', 'g')) AS norm
-        |FROM base
-        |WHERE len(regexp_extract_all(text, '[0-9]+')) > 0""".stripMargin,
-
-    // PII scrub replay: email pass first, phone counts on the
-    // email-scrubbed text (same fixed order as piiScrub), only flagged
-    // docs returned
-    "text_pii_scrub" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT CAST(col0 AS BIGINT), col1 FROM (VALUES
-        |   (9000001, 'contact alice.smith+test@Example.COM or bob@sub.domain.org today'),
-        |   (9000002, 'call 555-123-4567 or 555.987.6543 before noon'),
-        |   (9000003, 'mixed: carol@x.io then 800-555-0199 but not fragment@nodot'),
-        |   (9000004, 'edge not-an-email @ spaced.com and 12-345-6789 short')) t),
-        |e AS (SELECT doc_id,
-        |   len(regexp_extract_all(text,
-        |     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-        |   regexp_replace(text,
-        |     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g')
-        |     AS t1
-        |  FROM base),
-        |p AS (SELECT doc_id, n_emails,
-        |   len(regexp_extract_all(t1, '\b\d{3}[-.]\d{3}[-.]\d{4}\b'))
-        |     AS n_phones,
-        |   regexp_replace(t1, '\b\d{3}[-.]\d{3}[-.]\d{4}\b', '<PHONE>', 'g')
-        |     AS scrubbed
-        |  FROM e)
-        |SELECT doc_id, CAST(n_emails AS INT) AS n_emails,
-        | CAST(n_phones AS INT) AS n_phones, scrubbed
-        |FROM p WHERE n_emails + n_phones > 0""".stripMargin,
-
-    // per-user R/F/M metrics, tercile ranks, 27-cell grid
-    "w14_rfm" ->
-      """WITH mx AS (SELECT max(epoch_us(ts) // 1000000) AS mx FROM events),
-        |per AS (
-        |  SELECT user_id, max(epoch_us(ts) // 1000000) AS last_s,
-        |   count(*) AS freq,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-        |  FROM events GROUP BY 1),
-        |w AS (SELECT user_id, (mx - last_s) // 86400 AS rec_days, freq,
-        |       cents
-        |      FROM per, mx),
-        |r AS (SELECT *,
-        |       row_number() OVER (ORDER BY rec_days, user_id) AS rank_r,
-        |       row_number() OVER (ORDER BY freq, user_id) AS rank_f,
-        |       row_number() OVER (ORDER BY cents, user_id) AS rank_m,
-        |       (SELECT count(*) FROM w) AS n
-        |      FROM w)
-        |SELECT ((rank_r - 1) * 3) // n + 1 AS r_bucket,
-        | ((rank_f - 1) * 3) // n + 1 AS f_bucket,
-        | ((rank_m - 1) * 3) // n + 1 AS m_bucket,
-        | count(*) AS n_users, CAST(sum(cents) AS BIGINT) AS sum_cents
-        |FROM r GROUP BY 1, 2, 3""".stripMargin,
-
-    // per-user first-view/first-purchase latencies, rank-rule quantile
-    // picks with the median branch taking precedence on tiny-n overlap
-    "w13_time_to_convert" ->
-      """WITH v AS (SELECT user_id, min(ts) AS v_ts FROM events
-        |           WHERE event_type = 'view' GROUP BY 1),
-        |p AS (SELECT e.user_id, min(e.ts) AS p_ts FROM events e
-        |      JOIN v USING (user_id)
-        |      WHERE e.event_type = 'purchase' AND e.ts >= v.v_ts
-        |      GROUP BY 1),
-        |lat AS (SELECT p.user_id,
-        |         epoch_us(p_ts) // 1000000 - epoch_us(v_ts) // 1000000
-        |           AS lat_s
-        |        FROM p JOIN v USING (user_id)),
-        |r AS (SELECT lat_s, row_number() OVER (ORDER BY lat_s, user_id)
-        |        AS rn, (SELECT count(*) FROM lat) AS n
-        |      FROM lat)
-        |SELECT n, CASE WHEN rn = (n + 1) // 2 THEN 'median'
-        |  ELSE 'p90' END AS stat, lat_s
-        |FROM r WHERE rn = (n + 1) // 2 OR rn = (9 * n + 9) // 10""".stripMargin,
-
-    // bias-direction probe: per-dim label means, ordered-fold dot
-    "embed_bias_proj" ->
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-        |           FROM embeddings),
-        |d AS (SELECT label, generate_subscripts(emb, 1) AS i,
-        |       unnest(emb) AS x FROM e WHERE label IN (0, 1)),
-        |m AS (SELECT i,
-        |       sum(CASE WHEN label = 0 THEN x ELSE 0.0 END) /
-        |         sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS m0,
-        |       sum(CASE WHEN label = 1 THEN x ELSE 0.0 END) /
-        |         sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS m1
-        |      FROM d GROUP BY i),
-        |w AS (SELECT list(m0 - m1 ORDER BY i) AS w FROM m)
-        |SELECT vec_id, label,
-        | round(list_reduce(list_prepend(0.0::DOUBLE,
-        |   list_transform(generate_series(1, 64), k -> emb[k] * w[k])),
-        |   (acc, x) -> acc + x), 6) AS proj
-        |FROM e, w""".stripMargin,
-
-    // pairwise integer-difference slopes, exact rank-pick median
-    // depth-2 binary segmentation: prefix-sum SSE argmins mirrored
-    // operand-for-operand; argmin ties (child_sse, split) ascending
-    "t29_changepoint" ->
-      """WITH daily AS (
-        |  SELECT epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS y FROM events GROUP BY 1),
-        |span AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
-        |grid AS (
-        |  SELECT g.day, coalesce(d.y, 0) AS y
-        |  FROM (SELECT unnest(generate_series(d0, d1)) AS day
-        |        FROM span) g
-        |  LEFT JOIN daily d USING (day)),
-        |p AS MATERIALIZED (
-        |  SELECT CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS i,
-        |   sum(y) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-        |     AND CURRENT ROW) AS cy,
-        |   sum(y * y) OVER (ORDER BY day ROWS BETWEEN UNBOUNDED
-        |     PRECEDING AND CURRENT ROW) AS cy2
-        |  FROM grid),
-        |tot AS (SELECT i AS n, cy AS tcy, cy2 AS tcy2 FROM p
-        |        ORDER BY i DESC LIMIT 1),
-        |c1 AS (SELECT s.i AS split_i,
-        |        (CAST(pv.cy2 AS DOUBLE) -
-        |          CAST(pv.cy AS DOUBLE) * pv.cy / (s.i - 1)) +
-        |        (CAST(tcy2 - pv.cy2 AS DOUBLE) -
-        |          CAST(tcy - pv.cy AS DOUBLE) * (tcy - pv.cy)
-        |            / (n - s.i + 1)) AS child_sse,
-        |        (CAST(tcy2 AS DOUBLE) -
-        |          CAST(tcy AS DOUBLE) * tcy / n) AS seg_sse
-        |       FROM p s JOIN p pv ON pv.i = s.i - 1 CROSS JOIN tot
-        |       WHERE s.i > 1 AND s.i <= n),
-        |b1 AS (SELECT split_i, seg_sse - child_sse AS gain FROM c1
-        |       ORDER BY child_sse ASC, split_i ASC LIMIT 1),
-        |bl AS (SELECT p.i AS hi, p.cy AS hcy, p.cy2 AS hcy2
-        |       FROM p CROSS JOIN b1 WHERE p.i = b1.split_i - 1),
-        |c2 AS (SELECT s.i AS split_i,
-        |        (CAST(pv.cy2 AS DOUBLE) -
-        |          CAST(pv.cy AS DOUBLE) * pv.cy / (s.i - 1)) +
-        |        (CAST(hcy2 - pv.cy2 AS DOUBLE) -
-        |          CAST(hcy - pv.cy AS DOUBLE) * (hcy - pv.cy)
-        |            / (hi - s.i + 1)) AS child_sse,
-        |        (CAST(hcy2 AS DOUBLE) -
-        |          CAST(hcy AS DOUBLE) * hcy / hi) AS seg_sse
-        |       FROM p s JOIN p pv ON pv.i = s.i - 1 CROSS JOIN bl
-        |       WHERE s.i > 1 AND s.i <= hi),
-        |b2 AS (SELECT split_i, seg_sse - child_sse AS gain FROM c2
-        |       ORDER BY child_sse ASC, split_i ASC LIMIT 1),
-        |bl2 AS (SELECT hi AS lo0, hcy AS lcy, hcy2 AS lcy2 FROM bl),
-        |c3 AS (SELECT s.i AS split_i,
-        |        (CAST(pv.cy2 - lcy2 AS DOUBLE) -
-        |          CAST(pv.cy - lcy AS DOUBLE) * (pv.cy - lcy)
-        |            / (s.i - 1 - lo0)) +
-        |        (CAST(tcy2 - pv.cy2 AS DOUBLE) -
-        |          CAST(tcy - pv.cy AS DOUBLE) * (tcy - pv.cy)
-        |            / (n - s.i + 1)) AS child_sse,
-        |        (CAST(tcy2 - lcy2 AS DOUBLE) -
-        |          CAST(tcy - lcy AS DOUBLE) * (tcy - lcy)
-        |            / (n - lo0)) AS seg_sse
-        |       FROM p s JOIN p pv ON pv.i = s.i - 1
-        |       CROSS JOIN tot CROSS JOIN bl2
-        |       WHERE s.i > lo0 + 1 AND s.i <= n),
-        |b3 AS (SELECT split_i, seg_sse - child_sse AS gain FROM c3
-        |       ORDER BY child_sse ASC, split_i ASC LIMIT 1)
-        |SELECT 1 AS level, split_i, round(gain, 6) AS gain FROM b1
-        |UNION ALL SELECT 2, split_i, round(gain, 6) FROM b2
-        |UNION ALL SELECT 3, split_i, round(gain, 6) FROM b3"""
-        .stripMargin,
-
-    "t28_theil_sen" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT a.event_type,
-        |   CAST(b.c - a.c AS DOUBLE) / (b.day - a.day) AS slope,
-        |   a.day AS d1, b.day AS d2
-        |  FROM daily a JOIN daily b
-        |  ON a.event_type = b.event_type AND a.day < b.day),
-        |n AS (SELECT event_type, count(*) AS n_pairs FROM pairs GROUP BY 1),
-        |r AS (SELECT event_type, slope, d1, d2,
-        |       row_number() OVER (PARTITION BY event_type
-        |         ORDER BY slope, d1, d2) AS rn
-        |      FROM pairs)
-        |SELECT r.event_type, n_pairs, round(slope, 6) AS slope
-        |FROM r JOIN n USING (event_type)
-        |WHERE rn = (n_pairs + 1) // 2""".stripMargin,
-
-    // exact per-group rank picks for median and MAD, final division
-    // the only float step
-    "t27_anomaly_mad" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
-        |n AS (SELECT event_type, count(*) AS n FROM daily GROUP BY 1),
-        |medr AS (SELECT event_type, c,
-        |        row_number() OVER (PARTITION BY event_type
-        |          ORDER BY c, day) AS rn
-        |       FROM daily),
-        |med AS (SELECT m.event_type, c AS med FROM medr m JOIN n USING (event_type)
-        |        WHERE rn = (n + 1) // 2),
-        |madr AS (SELECT d.event_type, abs(d.c - med) AS ad, d.day,
-        |        row_number() OVER (PARTITION BY d.event_type
-        |          ORDER BY abs(d.c - med), d.day) AS rn
-        |       FROM daily d JOIN med USING (event_type)),
-        |mad AS (SELECT m.event_type, greatest(ad, 1) AS mad
-        |        FROM madr m JOIN n USING (event_type)
-        |        WHERE rn = (n + 1) // 2)
-        |SELECT d.event_type, day, c,
-        | round(CAST(c - med AS DOUBLE) / (1.4826 * mad), 4) AS z,
-        | abs(CAST(c - med AS DOUBLE) / (1.4826 * mad)) > 3.0 AS is_anomaly
-        |FROM daily d JOIN med USING (event_type) JOIN mad USING (event_type)""".stripMargin,
-
-    // weekly counts + lag ratio; first weeks keep null growth
-    "t26_wow_growth" ->
-      """WITH wk AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 604800 AS week,
-        |   count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |l AS (SELECT event_type, week, n,
-        |       lag(n) OVER (PARTITION BY event_type ORDER BY week)
-        |         AS prev_n
-        |      FROM wk)
-        |SELECT event_type, week, n, n - prev_n AS delta,
-        | round(CAST(n AS DOUBLE) / prev_n, 6) AS wow
-        |FROM l""".stripMargin,
-
-    // lead window in (ts, event_id) order, per-source share
-    "w12_transitions" ->
-      """WITH p AS (
-        |  SELECT event_type AS from_type,
-        |   lead(event_type) OVER (PARTITION BY user_id
-        |     ORDER BY ts, event_id) AS to_type
-        |  FROM events),
-        |c AS (SELECT from_type, to_type, count(*) AS n FROM p
-        |      WHERE to_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        | round(CAST(n AS DOUBLE) /
-        |   sum(n) OVER (PARTITION BY from_type), 6) AS p
-        |FROM c""".stripMargin,
-
-    // stage entry = min ts at-or-after the previous stage's entry
-    "w10_funnel" ->
-      """WITH v AS (SELECT user_id, min(ts) AS v_ts FROM events
-        |           WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, min(e.ts) AS c_ts FROM events e
-        |      JOIN v USING (user_id)
-        |      WHERE e.event_type = 'click' AND e.ts >= v.v_ts GROUP BY 1),
-        |p AS (SELECT e.user_id FROM events e JOIN c USING (user_id)
-        |      WHERE e.event_type = 'purchase' AND e.ts >= c.c_ts GROUP BY 1)
-        |SELECT (SELECT count(*) FROM v) AS n_view,
-        |       (SELECT count(*) FROM c) AS n_view_click,
-        |       (SELECT count(*) FROM p) AS n_full""".stripMargin,
-
-    // full replication of the hyperplane-LSH path: signatures, the 5
-    // probe buckets (original + single-bit flips of bits 0-3), bucket
-    // join, exact cosine, per-query rank
-    "ann_lsh_topk" -> annLshSql,
-
-    // the corpus-vs-corpus variant: identical LSH replication, every
-    // vector a query (no vec_id filter), k=3
-    "ann_lsh_join" ->
-      s"""WITH $lshSigSub,
-         |qsig AS (
-         |  SELECT e.vec_id AS query_id, e.emb AS q_emb,
-         |   CASE WHEN b = -1 THEN s.bucket
-         |        ELSE xor(s.bucket, 1::BIGINT << b) END AS bucket
-         |  FROM e JOIN sig s USING (vec_id),
-         |       unnest(generate_series(-1, 3)) AS t(b)),
-         |cand AS (
-         |  SELECT q.query_id, q.q_emb, ce.vec_id AS nbr_id, ce.emb AS nbr_emb
-         |  FROM qsig q JOIN sig c ON q.bucket = c.bucket
-         |       JOIN e ce ON ce.vec_id = c.vec_id
-         |  WHERE c.vec_id <> q.query_id),
-         |scored AS (
-         |  SELECT query_id, nbr_id, ${cosSql("q_emb", "nbr_emb")} AS sim FROM cand),
-         |r AS (
-         |  SELECT query_id, nbr_id, sim,
-         |   CAST(row_number() OVER (PARTITION BY query_id
-         |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)
-         |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank FROM r
-         |WHERE rank <= 3""".stripMargin,
-
-    // the occupancy-law LSH graph replay: auto planes (integer search,
-    // part of the gate), signature + 4 single-bit-flip probes, within-
-    // bucket cosine, per-query rank — the ann_lsh_join chain on the
-    // lshSigSubAuto prologue
-    "embed_knn_graph_lsh" ->
-      s"""WITH $lshSigSubAuto,
-         |qsig AS (
-         |  SELECT e.vec_id AS query_id, e.emb AS q_emb,
-         |   CASE WHEN b = -1 THEN s.bucket
-         |        ELSE xor(s.bucket, 1::BIGINT << b) END AS bucket
-         |  FROM e JOIN sig s USING (vec_id),
-         |       unnest(generate_series(-1, 3)) AS t(b)),
-         |cand AS (
-         |  SELECT q.query_id, q.q_emb, ce.vec_id AS nbr_id, ce.emb AS nbr_emb
-         |  FROM qsig q JOIN sig c ON q.bucket = c.bucket
-         |       JOIN e ce ON ce.vec_id = c.vec_id
-         |  WHERE c.vec_id <> q.query_id),
-         |scored AS (
-         |  SELECT query_id, nbr_id, ${cosSql("q_emb", "nbr_emb")} AS sim FROM cand),
-         |r AS (
-         |  SELECT query_id, nbr_id, sim,
-         |   CAST(row_number() OVER (PARTITION BY query_id
-         |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)
-         |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank FROM r
-         |WHERE rank <= 5""".stripMargin,
-
-    // recall audit: the LSH graph chain (above) joined against the
-    // brute corpus-vs-corpus truth, both ranked on the unrounded sim
-    // with the nbr_id tie-break
-    "embed_knn_recall_lsh" ->
-      s"""WITH $lshSigSubAuto,
-         |qsig AS (
-         |  SELECT e.vec_id AS query_id, e.emb AS q_emb,
-         |   CASE WHEN b = -1 THEN s.bucket
-         |        ELSE xor(s.bucket, 1::BIGINT << b) END AS bucket
-         |  FROM e JOIN sig s USING (vec_id),
-         |       unnest(generate_series(-1, 3)) AS t(b)),
-         |cand AS (
-         |  SELECT q.query_id, q.q_emb, ce.vec_id AS nbr_id, ce.emb AS nbr_emb
-         |  FROM qsig q JOIN sig c ON q.bucket = c.bucket
-         |       JOIN e ce ON ce.vec_id = c.vec_id
-         |  WHERE c.vec_id <> q.query_id),
-         |lscored AS (
-         |  SELECT query_id, nbr_id, ${cosSql("q_emb", "nbr_emb")} AS sim FROM cand),
-         |lsh AS (
-         |  SELECT query_id, nbr_id FROM (
-         |    SELECT query_id, nbr_id,
-         |     row_number() OVER (PARTITION BY query_id
-         |       ORDER BY sim DESC, nbr_id ASC) AS rank FROM lscored)
-         |  WHERE rank <= 5),
-         |tscored AS (
-         |  SELECT a.vec_id AS query_id, b.vec_id AS nbr_id,
-         |   ${cosSql("a.emb", "b.emb")} AS sim
-         |  FROM e a JOIN e b ON a.vec_id <> b.vec_id),
-         |truth AS (
-         |  SELECT query_id, nbr_id FROM (
-         |    SELECT query_id, nbr_id,
-         |     row_number() OVER (PARTITION BY query_id
-         |       ORDER BY sim DESC, nbr_id ASC) AS r FROM tscored)
-         |  WHERE r <= 5)
-         |SELECT CAST(count(*) AS BIGINT) AS n_truth,
-         | CAST(count(l.nbr_id) AS BIGINT) AS n_hit,
-         | round(count(l.nbr_id) * 1.0 / count(*), 4) AS recall
-         |FROM truth t LEFT JOIN lsh l USING (query_id, nbr_id)""".stripMargin,
-
-    // full replication of the IVF path: deterministic hashed centroid
-    // pick, nearest-cell assignment (keep 1 corpus / 3 probe), cell-local
-    // scoring, per-query rank
-    "ann_ivf_topk" -> annIvfSql,
-
-    // full PQ replay: per-subspace Lloyd (2 rounds, init vec_id%16,
-    // argmin ties to lower code), ADC tables, ordered-fold distance sums
-    "ann_pq_topk" -> pqAdcOracleSql(ivfPruned = false),
-
-    // the same PQ chain with the scored set restricted to IVF coarse
-    // cells (nProbe=3 of 16) — the IVFPQ composition
-    "ann_ivfpq_topk" -> pqAdcOracleSql(ivfPruned = true),
-
-    // residual variant: codes quantize vector − assigned-centroid,
-    // queries score per probed cell's frame (FAISS IndexIVFPQ recipe)
-    "ann_ivfpq_residual" -> pqResidualOracleSql,
-
-    // the JL projection replayed: the same hash32-derived plane weights
-    // (1-based i ⇒ p*64 + i = planeWeight's p*dims + d + 1), the same
-    // sequential left fold over the array — identical IEEE doubles
-    "embed_project" ->
-      s"""WITH e AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-         |g AS (
-         |  SELECT vec_id, emb, t.p FROM e,
-         |   unnest(generate_series(0, 7)) AS t(p)),
-         |v AS (
-         |  SELECT vec_id, p AS dim,
-         |   list_reduce(list_prepend(0.0, list_transform(
-         |     generate_series(1, 64),
-         |     i -> emb[i] * ($planeWeightSql))),
-         |    (acc, x) -> acc + x) AS value
-         |  FROM g)
-         |SELECT vec_id, CAST(dim AS INT) AS dim, round(value, 4) AS value
-         |FROM v""".stripMargin,
-
-    "embed_quality" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |s AS (
-        |  SELECT vec_id, len(emb) AS n_dims,
-        |   list_reduce(list_prepend(0.0, list_transform(emb, x -> x * x)),
-        |    (acc, x) -> acc + x) AS sq
-        |  FROM e)
-        |SELECT vec_id, CAST(n_dims AS INT) AS n_dims,
-        | round(sqrt(sq), 4) AS l2_norm, sq = 0.0::DOUBLE AS is_zero
-        |FROM s""".stripMargin,
-
-    "ann_brute_topk" -> annBruteSql,
-
-    "ann_sq_topk" -> annSqSql,
-
-    // pre-filter replay: the label equi-join prunes before any cosine
-    "ann_filtered_topk" ->
-      s"""WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
-         |           FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, label, emb AS qe FROM e
-         |      WHERE vec_id < 10),
-         |sc AS (SELECT q.query_id, q.label, e.vec_id AS nbr_id,
-         |        ${cosSql("q.qe", "e.emb")} AS sim
-         |       FROM e JOIN q ON e.label = q.label
-         |       WHERE e.vec_id <> q.query_id),
-         |r AS (SELECT query_id, label, nbr_id, sim,
-         |       CAST(row_number() OVER (PARTITION BY query_id
-         |         ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM sc)
-         |SELECT query_id, CAST(label AS INT) AS label, nbr_id,
-         | round(sim, 4) AS sim, rank
-         |FROM r WHERE rank <= 5""".stripMargin,
-
-    // recall@5 harness: each pruned path's (query, nbr) set intersected
-    // with the exact brute-force top-5 — the number a 100 TB ANN
-    // deployment must watch (what the IVF/LSH/PQ pruning actually costs
-    // in answer quality). Each path's CTE is the SAME oracle SQL that
-    // gates the path's own query, so a recall mismatch can only come
-    // from the intersection arithmetic.
-    "ann_recall" -> annRecallSql,
-
-    // three nProbe instances of the parameterized IVF chain, each
-    // semi-joined against the same brute truth (the ann_recall shape)
-    "ann_nprobe_curve" ->
-      s"""WITH truth AS MATERIALIZED (
-         |  SELECT query_id, nbr_id FROM ($annBruteSql)),
-         |i1 AS (SELECT query_id, nbr_id FROM (${annIvfSqlFor(1)})),
-         |i2 AS (SELECT query_id, nbr_id FROM (${annIvfSqlFor(2)})),
-         |i4 AS (SELECT query_id, nbr_id FROM (${annIvfSqlFor(4)}))
-         |SELECT 1 AS nprobe, CAST(count(*) AS BIGINT) AS n_hits,
-         |  round(count(*) / 50.0, 4) AS recall_at_5
-         | FROM i1 JOIN truth USING (query_id, nbr_id)
-         |UNION ALL
-         |SELECT 2, CAST(count(*) AS BIGINT),
-         |  round(count(*) / 50.0, 4)
-         | FROM i2 JOIN truth USING (query_id, nbr_id)
-         |UNION ALL
-         |SELECT 4, CAST(count(*) AS BIGINT),
-         |  round(count(*) / 50.0, 4)
-         | FROM i4 JOIN truth USING (query_id, nbr_id)""".stripMargin,
-
-    "text_quality" ->
-      """SELECT doc_id,
-        | CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '')) AS INT)
-        |   AS n_tokens,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS INT)
-        |   AS n_bpe_tokens,
-        | round(CAST(length(regexp_replace(text, '\s', '', 'g')) AS DOUBLE) /
-        |   greatest(CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '')) AS DOUBLE), 1.0), 4) AS mean_tok_len,
-        | round(CAST(length(regexp_replace(text, '[^[:punct:]]', '', 'g')) AS DOUBLE) /
-        |   greatest(CAST(length(text) AS DOUBLE), 1.0), 4) AS punct_ratio,
-        | round(CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) /
-        |   greatest(CAST(length(text) AS DOUBLE), 1.0), 4) AS digit_ratio
-        |FROM documents""".stripMargin,
-
-    "mm_bytes" ->
-      "SELECT doc_id, CAST(strlen(text) AS INT) AS n_bytes FROM documents",
-
-    // rolling 31-hash with 2^64 wrap-around, HUGEINT-mod in DuckDB (the
-    // kernel iterates UTF-16 units; identical to codepoints on BMP text)
-    // the identical 11-step regexp chain via DuckDB lateral column
-    // aliases; every pattern is RE2-safe and carries the 'g' flag
-    "f20_html_text" ->
-      """WITH h AS (SELECT doc_id,
-        | '<html><head><script type="text/javascript">var x = 1 < 2;' ||
-        | '</script><style>.c{color:red}</style><title>' || source ||
-        | '</title></head><body><h1>' || lang ||
-        | '</h1><!-- boilerplate --><p>' || substr(text, 1, 100) ||
-        | ' &amp; entities &lt;kept&gt; &quot;right&quot;&nbsp;&#39;ok&#39;' ||
-        | '</p></body></html>' AS html
-        | FROM documents),
-        |c AS (SELECT doc_id,
-        | regexp_replace(html, '(?is)<script[^>]*>.*?</script>', ' ', 'g')
-        |   AS t1,
-        | regexp_replace(t1, '(?is)<style[^>]*>.*?</style>', ' ', 'g') AS t2,
-        | regexp_replace(t2, '(?s)<!--.*?-->', ' ', 'g') AS t3,
-        | regexp_replace(t3, '<[^>]*>', ' ', 'g') AS t4,
-        | regexp_replace(t4, '&nbsp;', ' ', 'g') AS t5,
-        | regexp_replace(t5, '&lt;', '<', 'g') AS t6,
-        | regexp_replace(t6, '&gt;', '>', 'g') AS t7,
-        | regexp_replace(t7, '&quot;', '"', 'g') AS t8,
-        | regexp_replace(t8, '&#39;', '''', 'g') AS t9,
-        | regexp_replace(t9, '&amp;', '&', 'g') AS t10,
-        | trim(regexp_replace(t10, '\s+', ' ', 'g')) AS clean
-        | FROM h)
-        |SELECT doc_id, clean, CAST(length(clean) AS INT) AS n_chars_clean
-        |FROM c""".stripMargin,
-
-    // green bit = low bit of the fnv64 HUGEINT (two's-complement low
-    // bit == unsigned low bit, the dedup_simhash convention); z on
-    // identical doubles, flag compared on the UNROUNDED z both sides
-    "text_llm_watermark" ->
-      s"""WITH tk AS (SELECT doc_id,
-         |   list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |     x -> x <> '') AS toks
-         |  FROM documents),
-         |d2 AS (SELECT doc_id, toks FROM tk WHERE len(toks) >= 2),
-         |bg AS (SELECT doc_id,
-         |   unnest(list_transform(generate_series(1, len(toks) - 1),
-         |     i -> toks[i] || ' ' || toks[i + 1])) AS bg
-         |  FROM d2),
-         |g AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |   CAST(sum(CAST(${fnvSql("bg")} % 2 AS BIGINT)) AS BIGINT)
-         |     AS green
-         |  FROM bg GROUP BY doc_id),
-         |z AS (SELECT doc_id, n_bigrams, green,
-         |   (2.0::DOUBLE * green - n_bigrams) /
-         |     sqrt(CAST(n_bigrams AS DOUBLE)) AS zraw
-         |  FROM g)
-         |SELECT doc_id, n_bigrams, green, round(zraw, 6) AS z,
-         | zraw > 4.0::DOUBLE AS flagged
-         |FROM z""".stripMargin,
-
-    "text_fingerprint" ->
-      """SELECT doc_id,
-        | CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
-        |   THEN h - 18446744073709551616::HUGEINT ELSE h END AS BIGINT)
-        |   AS fingerprint
-        |FROM (
-        |  SELECT doc_id,
-        |    list_reduce(list_prepend(0::HUGEINT,
-        |      list_transform(regexp_split_to_array(text, ''), c -> unicode(c)::HUGEINT)),
-        |      (h, c) -> (h * 31 + c) % 18446744073709551616::HUGEINT) AS h
-        |  FROM documents)""".stripMargin,
-
-    "text_lang_id" -> langIdSql,
-
-    "text_contamination" -> contaminationSql,
-
-    "stats_profile" ->
-      """SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | round(avg(n_chars), 4) AS mean_val,
-        | round(quantile_cont(n_chars, 0.5), 4) AS p50,
-        | round(quantile_cont(n_chars, 0.9), 4) AS p90,
-        | round(quantile_cont(n_chars, 0.99), 4) AS p99
-        |FROM documents GROUP BY lang""".stripMargin,
-
-    "text_boilerplate" ->
-      """SELECT CAST(col0 AS BIGINT) AS doc_id, col1 AS clean_text
-        |FROM (VALUES
-        | (1, 'unique first line' || chr(10) || 'real content one'),
-        | (2, 'real content two'),
-        | (3, 'real content three')) t""".stripMargin,
-
-    "text_stopword_ratio" ->
-      """SELECT doc_id, round(
-        | CAST(len(list_filter(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |   x -> x <> ''), x -> x IN ('the','of','and','to','in','is','that','it',
-        |   'was','for','with','as','on','are','a'))) AS DOUBLE) /
-        | greatest(CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |   x -> x <> '')) AS DOUBLE), 1.0), 4) AS sw_ratio
-        |FROM documents""".stripMargin,
-
-    // ---- golden fixtures: oracle = literal expected rows ----
-    "f1_extract_links" ->
-      """SELECT * FROM (VALUES ('the engine', 'Spark'), ('Scala', 'Scala'))
-        | t(anchor, target)""".stripMargin,
-
-    "f3_extract_refs" ->
-      """SELECT CAST(col0 AS BIGINT) AS fid, CAST(col1 AS INT) AS n_refs
-        |FROM (VALUES (1, 0), (2, 1), (3, 2)) t(col0, col1)""".stripMargin,
-
-    "f4_extract_templates" ->
-      "SELECT * FROM (VALUES ('Infobox x'), ('Good one')) t(template)",
-
-    "f11_plain_text" ->
-      "SELECT 'Bold text with word and & end' AS plain",
-
-    "f13_normalize_title" ->
-      """SELECT CAST(col0 AS BIGINT) AS fid, col1 AS norm FROM (VALUES
-        | (1, 'Foo_bar'), (2, 'A'), (3, 'Quoted_title'),
-        | (4, 'Héllo_wörld'), (5, 'Wiki_page')) t(col0, col1)""".stripMargin,
-
-    "f5_extract_domain" ->
-      """SELECT CAST(col0 AS BIGINT) AS fid, col1 AS domain FROM (VALUES
-        | (1, 'bbc' || chr(9) || 'co.uk'), (2, 'example' || chr(9) || 'com'),
-        | (3, NULL)) t(col0, col1)""".stripMargin,
-
-    "f18_decode_ez" ->
-      """SELECT CAST(1 AS BIGINT) AS fid, CAST(col0 AS INT) AS day, CAST(col1 AS INT) AS views
-        |FROM (VALUES (0, 8), (1, 0), (2, 3), (3, 0), (4, 0)) t(col0, col1)""".stripMargin,
-
-    "s8_sampler_fixture" ->
-      """SELECT CAST(col0 AS BIGINT) AS event_id
-        |FROM (VALUES (2), (3), (5), (6)) t(col0)""".stripMargin,
-
-    // the exact carry semantics, replayed sequentially per user by a
-    // recursive CTE: n_kept = 1 (final buffer flush) + #emit transitions
-    "s8_sampler_events" ->
-      """WITH RECURSIVE r AS (
-        |  SELECT user_id, value,
-        |   row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, 1 AS rn, abs(value) AS buf_len, 0 AS emits
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.user_id, s.rn + 1,
-        |   CASE
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) < 0.01 THEN abs(r.value)
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) > 0.1 THEN abs(r.value)
-        |     ELSE s.buf_len END,
-        |   s.emits + CASE
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) > 0.1 THEN 1
-        |     ELSE 0 END
-        |  FROM s JOIN r ON r.user_id = s.user_id AND r.rn = s.rn + 1)
-        |SELECT user_id, CAST(max_by(emits, rn) + 1 AS BIGINT) AS n_kept
-        |FROM s GROUP BY user_id""".stripMargin,
-
-    "st_windowed_counts" ->
-      """SELECT col0 AS w_start, CAST(col1 AS BIGINT) AS user_id,
-        | CAST(col2 AS BIGINT) AS n_events
-        |FROM (VALUES ('2024-01-01 00:00:00', 1, 2),
-        | ('2024-01-01 00:10:00', 2, 1), ('2024-01-01 00:10:00', 1, 1)) t""".stripMargin,
-
-    // golden trace: tiers t1 (users 1,4) and t2 (user 2) from the
-    // user_id%3 dim; window 00:10 accumulates across two micro-batches
-    "st_static_join" ->
-      """SELECT col0 AS w_start, col1 AS tier, CAST(col2 AS BIGINT) AS n_events,
-        | CAST(col3 AS DOUBLE) AS sum_value
-        |FROM (VALUES ('2024-01-01 00:00:00', 't1', 2, 4.0),
-        | ('2024-01-01 00:10:00', 't2', 1, 3.0),
-        | ('2024-01-01 00:10:00', 't1', 1, 4.0)) t""".stripMargin,
-
-    "s3_xml_scan" ->
-      """SELECT CAST(col0 AS BIGINT) AS page_id, CAST(col1 AS BIGINT) AS rev_id,
-        | col2 AS ts_str, col3 AS user, CAST(col4 AS BIGINT) AS user_id,
-        | CAST(col5 AS BOOLEAN) AS minor
-        |FROM (VALUES
-        | (10, 101, '2020-01-01 00:00:00', 'alice', 7, FALSE),
-        | (10, 102, '2020-06-01 12:00:00', '192.168.0.1', -1, FALSE),
-        | (10, 103, '2021-01-01 00:00:00', 'bob', 9, TRUE)) t""".stripMargin,
-
-    "s11_header_scan" ->
-      """SELECT CAST(col0 AS BIGINT) AS page_id, CAST(col1 AS BIGINT) AS n_revs,
-        | CAST(col2 AS BIGINT) AS max_rev
-        |FROM (VALUES (10, 3, 103), (20, 1, 201), (30, 1, 301)) t""".stripMargin,
-
-    "s2_raw_xml" ->
-      """SELECT CAST(col0 AS BIGINT) AS page_id, CAST(col1 AS BIGINT) AS rev_id,
-        | col2 AS xml_md5, CAST(col3 AS INT) AS n_chars
-        |FROM (VALUES
-        | (10, 101, '07bf1d3d0db5553328ce48403d335f69', 407),
-        | (10, 102, '7b487d170bb9ecf91ba0c00c9c7aacb8', 389),
-        | (10, 103, '7697581f578f8f0e79dbd2a1d636919c', 422),
-        | (20, 201, '12ef51f87fafcb86b2937aa86c8d071f', 388),
-        | (30, 301, '440ba765ca2b32b88c60f8c0321b0c29', 375)) t""".stripMargin,
-
-    "s5_revision_pairs" ->
-      """SELECT CAST(col0 AS BIGINT) AS rev_id, CAST(col1 AS BIGINT) AS prev_rev_id
-        |FROM (VALUES (101, NULL), (102, 101), (103, 102), (201, NULL),
-        | (301, NULL)) t""".stripMargin,
-
-    "s15_json_scan" ->
-      """SELECT CAST(col0 AS BIGINT) AS page_id, CAST(col1 AS BIGINT) AS rev_id,
-        | CAST(col2 AS BIGINT) AS parent_id, CAST(col3 AS BIGINT) AS ts_ms,
-        | col4 AS user
-        |FROM (VALUES (1, 5, 4, 1577836800000, 'u'),
-        | (1, 6, 5, 1577836900000, 'u')) t""".stripMargin,
-
-    "f16_rev_diff" ->
-      """SELECT CAST(1 AS BIGINT) AS fid, col0 AS op, CAST(col1 AS INT) AS orig_pos,
-        | CAST(col2 AS INT) AS rev_pos, CAST(col3 AS INT) AS n_orig,
-        | CAST(col4 AS INT) AS n_rev
-        |FROM (VALUES ('CHANGE', 0, 0, 1, 2), ('CHANGE', 2, 3, 1, 1)) t""".stripMargin,
-
-    "w2_change_sampling" ->
-      """SELECT user_id, count(*) AS n_kept FROM (
-        |  SELECT user_id, value,
-        |   lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value
-        |  FROM events)
-        |WHERE prev_value IS NULL
-        |  OR abs(value - prev_value) / greatest(abs(prev_value), 1.0) > 0.1
-        |GROUP BY user_id""".stripMargin,
-
-    "a13_id_title_map" ->
-      """SELECT CAST(col0 AS BIGINT) AS page_id, col1 AS page_title
-        |FROM (VALUES (10, 'Alpha & Beta'), (20, 'Old name'),
-        | (30, 'Category:Things')) t""".stripMargin,
-
-    "p2_redirect_filter" ->
-      """SELECT CAST(col0 AS BIGINT) AS rev_id
-        |FROM (VALUES (101), (102), (103), (301)) t""".stripMargin,
-
-    "f14_iso_parse" ->
-      """SELECT CAST(col0 AS BIGINT) AS fid, col1 AS parsed FROM (VALUES
-        | (1, '2021-03-04 05:06:07'), (2, '1999-12-31 23:59:59')) t""".stripMargin,
-
-    "k4_count_only" ->
-      "SELECT count(*) AS n_rows FROM lineitem",
-
-    "o2_dict_sort" ->
-      s"""SELECT term, CAST(row_number() OVER (ORDER BY term ASC) AS INT) AS term_rank
-         |FROM (SELECT term FROM ($tfSub) GROUP BY term
-         |      HAVING count(*) >= 5)""".stripMargin,
-
-    "s6_revision_diffs" ->
-      """SELECT CAST(col0 AS BIGINT) AS rev_id, CAST(col1 AS INT) AS n_deltas
-        |FROM (VALUES (101, 1), (102, 2), (103, 1), (201, 1), (301, 1)) t""".stripMargin,
-
-    "s7_bucket_pairs" ->
-      """WITH b AS (
-        |  SELECT user_id,
-        |   strftime(make_timestamp(epoch_us(ts) +
-        |     (((0 - epoch_us(ts)) % 3600000000 + 3600000000) % 3600000000)),
-        |     '%Y-%m-%d %H:%M:%S') AS bucket,
-        |   arg_max(event_id, ts) AS last_event_id
-        |  FROM events GROUP BY user_id, bucket)
-        |SELECT user_id, bucket, last_event_id,
-        | lag(bucket) OVER (PARTITION BY user_id ORDER BY bucket) AS prev_bucket,
-        | lag(last_event_id) OVER (PARTITION BY user_id ORDER BY bucket) AS prev_event_id
-        |FROM b""".stripMargin,
-
-    "s12_link_profile" ->
-      """SELECT CAST(col0 AS BIGINT) AS rev_id, col1 AS anchor, col2 AS target
-        |FROM (VALUES (101, 'anchor', 'Link'),
-        | (201, 'Elsewhere', 'Elsewhere')) t""".stripMargin,
-
-    "s13_bow_scan" ->
-      """SELECT CAST(col0 AS BIGINT) AS page_id, CAST(col1 AS BIGINT) AS rev_id,
-        | col2 AS word, CAST(col3 AS BIGINT) AS cnt
-        |FROM (VALUES
-        | (10, 101, 'start', 1), (10, 101, 'text', 1), (10, 101, 'with', 1),
-        | (10, 101, '[[link|anchor]]', 1), (10, 101, 'and', 1), (10, 101, '<tag>', 1),
-        | (10, 102, 'second', 1), (10, 102, 'version', 1),
-        | (10, 103, 'third', 1),
-        | (20, 201, '#redirect', 1), (20, 201, '[[elsewhere]]', 1),
-        | (30, 301, 'category', 1), (30, 301, 'page', 1), (30, 301, 'text', 1)
-        |) t""".stripMargin,
-
-    "s14_concat_scan" ->
-      """SELECT CAST(col0 AS BIGINT) AS page_id, col1 AS first_text,
-        | CAST(col2 AS INT) AS n_patch_words
-        |FROM (VALUES
-        | (10, 'Start text with [[Link|anchor]] and <tag>', 3),
-        | (20, '#REDIRECT [[Elsewhere]]', 0),
-        | (30, 'category page text', 0)) t""".stripMargin,
-
-    "s20_clean_text" ->
-      """SELECT CAST(col0 AS BIGINT) AS rev_id, col1 AS plain
-        |FROM (VALUES
-        | (101, 'Start text with anchor and'),
-        | (102, 'Second version text'),
-        | (103, 'Third version text'),
-        | (201, '#REDIRECT Elsewhere'),
-        | (301, 'category page text')) t""".stripMargin,
-
-    "s18_sql_surface" ->
-      """SELECT o_orderpriority, count(*) AS n_orders,
-        | round(sum(o_totalprice), 2) AS sum_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment <> 'BUILDING'
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "j3_ts_dict" ->
-      """WITH dict AS (
-        |  SELECT event_type,
-        |   CAST(row_number() OVER (ORDER BY count(*) DESC, event_type ASC) AS INT)
-        |     AS type_id
-        |  FROM events GROUP BY event_type)
-        |SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, type_id,
-        | count(*) AS cnt
-        |FROM events JOIN dict USING (event_type)
-        |GROUP BY day, type_id""".stripMargin,
-
-    "f2_extract_links_ctx" ->
-      """SELECT CAST(1 AS BIGINT) AS fid, 'a' AS anchor, 'T' AS target,
-        | CAST(10 AS INT) AS offset, '0123456789' AS pre, 'post' AS post""".stripMargin,
-
-    "f6_cut_last" ->
-      """SELECT CAST(col0 AS BIGINT) AS fid, col1 AS cut
-        |FROM (VALUES (1, 'abcd'), (2, '')) t(col0, col1)""".stripMargin,
-
-    "f8_hour_to_day" ->
-      """SELECT substr(strftime(ts, '%Y%m%d%H'), 1, 8) AS day, count(*) AS n_events
-        |FROM events GROUP BY day""".stripMargin,
-
-    "j1_anchor_graph" ->
-      """SELECT CAST(col0 AS BIGINT) AS src_id, CAST(col1 AS BIGINT) AS dst_id,
-        | CAST(col2 AS BIGINT) AS n_links
-        |FROM (VALUES (1, 2, 2), (2, 1, 1), (2, 3, 1)) t""".stripMargin,
-
-    "o5_salted_agg" ->
-      """SELECT event_type, round(sum(value), 2) AS sum_value, count(*) AS n_rows
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "o9_key_cap_audit" ->
-      """WITH k AS (SELECT user_id, count(*) AS kn FROM events GROUP BY 1)
-        |SELECT count(*) AS n_keys,
-        | CAST(sum(CASE WHEN kn > 85 THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_keys_capped,
-        | CAST(sum(CASE WHEN kn > 85 THEN kn ELSE 0 END) AS BIGINT)
-        |   AS n_rows_dropped
-        |FROM k""".stripMargin,
-
-    // the s8 recursive carry chain over the CAPPED event relation: the
-    // cap replays as a null-safe ANTI JOIN against the over-cap keys —
-    // mirroring capHotKeys' <=> anti-join, so an under-cap NULL-key
-    // cohort survives on BOTH sides (the previous inner JOIN USING
-    // dropped null keys unconditionally)
-    "s8_sampler_capped" ->
-      """WITH RECURSIVE ev AS (
-        |  SELECT e.* FROM events e
-        |  ANTI JOIN (SELECT user_id FROM events GROUP BY user_id
-        |             HAVING count(*) > 85) hot
-        |    ON e.user_id IS NOT DISTINCT FROM hot.user_id),
-        |r AS (
-        |  SELECT user_id, value,
-        |   row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM ev),
-        |s AS (
-        |  SELECT user_id, 1 AS rn, abs(value) AS buf_len, 0 AS emits
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.user_id, s.rn + 1,
-        |   CASE
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) < 0.01 THEN abs(r.value)
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) > 0.1 THEN abs(r.value)
-        |     ELSE s.buf_len END,
-        |   s.emits + CASE
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) > 0.1 THEN 1
-        |     ELSE 0 END
-        |  FROM s JOIN r ON r.user_id = s.user_id AND r.rn = s.rn + 1)
-        |SELECT user_id, CAST(max_by(emits, rn) + 1 AS BIGINT) AS n_kept
-        |FROM s GROUP BY user_id""".stripMargin,
-
-    // w12's lead-window chain over the same capped relation (the same
-    // null-safe anti-join replay as s8_sampler_capped)
-    "w12_transitions_capped" ->
-      """WITH ev AS (
-        |  SELECT e.* FROM events e
-        |  ANTI JOIN (SELECT user_id FROM events GROUP BY user_id
-        |             HAVING count(*) > 85) hot
-        |    ON e.user_id IS NOT DISTINCT FROM hot.user_id),
-        |p AS (
-        |  SELECT event_type AS from_type,
-        |   lead(event_type) OVER (PARTITION BY user_id
-        |     ORDER BY ts, event_id) AS to_type
-        |  FROM ev),
-        |c AS (SELECT from_type, to_type, count(*) AS n FROM p
-        |      WHERE to_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        | round(CAST(n AS DOUBLE) /
-        |   sum(n) OVER (PARTITION BY from_type), 6) AS p
-        |FROM c""".stripMargin,
-
-    "fnv64_native" ->
-      """SELECT CAST(col0 AS BIGINT) AS fid, CAST(col1 AS BIGINT) AS h FROM (VALUES
-        | (1, -1792535898324117685), (2, -3750763034362895579),
-        | (3, 8618312879776256743), (4, 3648338088737783365)) t(col0, col1)""".stripMargin,
-
-    "a11_tf_ts_index" ->
-      """SELECT col0 AS word, CAST(col1 AS BIGINT) AS page_id, col2 AS ts_str,
-        | CAST(col3 AS BIGINT) AS tf
-        |FROM (VALUES
-        | ('start', 10, '2020-01-01 00:00:00', 1),
-        | ('text', 10, '2020-01-01 00:00:00', 1),
-        | ('with', 10, '2020-01-01 00:00:00', 1),
-        | ('[[link|anchor]]', 10, '2020-01-01 00:00:00', 1),
-        | ('and', 10, '2020-01-01 00:00:00', 1),
-        | ('<tag>', 10, '2020-01-01 00:00:00', 1),
-        | ('second', 10, '2020-06-01 12:00:00', 1),
-        | ('version', 10, '2020-06-01 12:00:00', 1),
-        | ('text', 10, '2020-06-01 12:00:00', 1),
-        | ('third', 10, '2021-01-01 00:00:00', 1),
-        | ('version', 10, '2021-01-01 00:00:00', 1),
-        | ('text', 10, '2021-01-01 00:00:00', 1),
-        | ('#redirect', 20, '2019-05-05 05:05:05', 1),
-        | ('[[elsewhere]]', 20, '2019-05-05 05:05:05', 1),
-        | ('category', 30, '2018-01-01 00:00:00', 1),
-        | ('page', 30, '2018-01-01 00:00:00', 1),
-        | ('text', 30, '2018-01-01 00:00:00', 1)) t""".stripMargin,
-
-    "pv_pipeline" ->
-      """SELECT col0 AS title, CAST(col1 AS BIGINT) AS total,
-        | CAST(col2 AS INT) AS day, CAST(col3 AS INT) AS views
-        |FROM (VALUES
-        | ('Foo_bar', 17, 0, 15), ('Foo_bar', 17, 1, 0), ('Foo_bar', 17, 2, 3),
-        | ('Foo_bar', 17, 3, 0), ('Foo_bar', 17, 4, 0),
-        | ('Baz', 2, 0, 0), ('Baz', 2, 1, 2), ('Baz', 2, 2, 0),
-        | ('Baz', 2, 3, 0), ('Baz', 2, 4, 0)) t""".stripMargin,
-
-    // DuckDB's native ASOF JOIN is the independent implementation of the
-    // same "latest right row at or before left.ts per key" semantics
-    "w4_asof_join" ->
-      """WITH purchases AS (
-        |  SELECT event_id, ts, user_id FROM events WHERE event_type = 'purchase'),
-        |views AS (
-        |  SELECT user_id, ts, max(event_id) AS last_view_id
-        |  FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-        |SELECT p.event_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
-        | v.last_view_id
-        |FROM purchases p ASOF LEFT JOIN views v
-        | ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin,
-
-    // the exact containment join the bucketed form must reproduce
-    "w5_range_join" ->
-      """WITH iv AS (
-        |  SELECT user_id, ts AS start_ts, ts + INTERVAL 2 DAY AS end_ts,
-        |   event_id AS signup_id
-        |  FROM events WHERE event_type = 'signup')
-        |SELECT signup_id, count(*) AS n_in_window,
-        | round(sum(e.value), 2) AS sum_value
-        |FROM events e JOIN iv
-        | ON e.user_id = iv.user_id AND e.ts >= iv.start_ts AND e.ts < iv.end_ts
-        |GROUP BY signup_id""".stripMargin,
-
-    // the oracle is the naive non-equi overlap join — the bucketed
-    // exactly-once emission must be invisible in the output
-    "w15_overlap_join" ->
-      """WITH sg AS (
-        |  SELECT user_id, ts AS s_start, ts + INTERVAL 2 DAY AS s_end,
-        |   event_id AS signup_id
-        |  FROM events WHERE event_type = 'signup'),
-        |pu AS (
-        |  SELECT user_id, ts AS p_start, ts + INTERVAL 1 DAY AS p_end,
-        |   event_id AS purchase_id
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT signup_id, count(*) AS n_overlap,
-        | CAST(min(purchase_id) AS BIGINT) AS first_purchase
-        |FROM sg JOIN pu ON sg.user_id = pu.user_id
-        | AND greatest(s_start, p_start) < least(s_end, p_end)
-        |GROUP BY signup_id""".stripMargin,
-
-    "search_bm25" -> bm25Sql,
-
-
-    // identical planted payload; counts via regexp_extract_all, masks
-    // via regexp_replace with the 'g' flag (Spark replaces all by
-    // default)
-    "text_pii_mask" ->
-      """WITH raw AS (SELECT doc_id,
-        |   concat('reach ', source, '.team@example.com or 10.0.',
-        |     CAST(doc_id % 256 AS VARCHAR), '.',
-        |     CAST((doc_id * 7) % 256 AS VARCHAR), ' tel 555-',
-        |     lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'), ' :: ',
-        |     text[1:120]) AS raw
-        |  FROM documents)
-        |SELECT doc_id,
-        | CAST(len(regexp_extract_all(raw,
-        |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
-        |   AS n_email,
-        | CAST(len(regexp_extract_all(raw,
-        |   '([0-9]{1,3}\.){3}[0-9]{1,3}')) AS BIGINT) AS n_ip,
-        | CAST(len(regexp_extract_all(raw, '555-[0-9]{4}')) AS BIGINT)
-        |   AS n_phone,
-        | regexp_replace(regexp_replace(regexp_replace(raw,
-        |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>',
-        |   'g'), '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g'),
-        |   '555-[0-9]{4}', '<PHONE>', 'g') AS masked
-        |FROM raw""".stripMargin,
-
-    // Σ√n folds in source order; sqrt is IEEE-exact on both engines
-    "curate_mix_temperature" ->
-      """WITH b AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-        |           FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS nt,
-        |   list_reduce(list_prepend(0.0::DOUBLE,
-        |     list(sqrt(CAST(n_docs AS DOUBLE)) ORDER BY source)),
-        |     (acc, x) -> acc + x) AS z FROM b)
-        |SELECT source, n_docs,
-        | round(CAST(n_docs AS DOUBLE) / nt, 6) AS p,
-        | round(sqrt(CAST(n_docs AS DOUBLE)) / z, 6) AS w_temp
-        |FROM b, t""".stripMargin,
-
-    // the unpruned exact chain on the maxscore query terms — pruning
-    // must be invisible in the output
-    "search_maxscore" -> bm25SqlFor(Seq("dup", "scan", "join")),
-
-    // Dirichlet query-likelihood: the ln argument is one ratio of
-    // exact BIGINTs ((tf·C + µ·cf) / ((dl + µ)·C)), the 3-term sum is
-    // textually ordered, the ranking is on the rounded score (the bm25
-    // convention); unseen terms floor at cf = 1
-    "search_lm_dirichlet" ->
-      s"""WITH tf AS (
-         |  SELECT doc_id, term, tf FROM ($tfSub)
-         |  WHERE term IN ('scan', 'join', 'merge')),
-         |dl AS (
-         |  SELECT doc_id, CAST(len(list_filter(
-         |    regexp_split_to_array(lower(text), '\\s+'), x -> x <> ''))
-         |    AS BIGINT) AS doc_len
-         |  FROM documents),
-         |g AS (SELECT CAST(sum(doc_len) AS BIGINT) AS ctot FROM dl),
-         |cfs AS (SELECT
-         |  greatest(CAST(coalesce(sum(CASE WHEN term = 'scan' THEN tf END),
-         |    0) AS BIGINT), 1) AS cf0,
-         |  greatest(CAST(coalesce(sum(CASE WHEN term = 'join' THEN tf END),
-         |    0) AS BIGINT), 1) AS cf1,
-         |  greatest(CAST(coalesce(sum(CASE WHEN term = 'merge' THEN tf END),
-         |    0) AS BIGINT), 1) AS cf2
-         |  FROM tf),
-         |piv AS (SELECT doc_id,
-         |  CAST(coalesce(sum(CASE WHEN term = 'scan' THEN tf END), 0)
-         |    AS BIGINT) AS tf0,
-         |  CAST(coalesce(sum(CASE WHEN term = 'join' THEN tf END), 0)
-         |    AS BIGINT) AS tf1,
-         |  CAST(coalesce(sum(CASE WHEN term = 'merge' THEN tf END), 0)
-         |    AS BIGINT) AS tf2
-         |  FROM tf GROUP BY doc_id),
-         |s AS (SELECT dl.doc_id,
-         |   ln(CAST(coalesce(tf0, 0) * ctot + 2000 * cf0 AS DOUBLE) /
-         |      CAST((doc_len + 2000) * ctot AS DOUBLE))
-         | + ln(CAST(coalesce(tf1, 0) * ctot + 2000 * cf1 AS DOUBLE) /
-         |      CAST((doc_len + 2000) * ctot AS DOUBLE))
-         | + ln(CAST(coalesce(tf2, 0) * ctot + 2000 * cf2 AS DOUBLE) /
-         |      CAST((doc_len + 2000) * ctot AS DOUBLE)) AS raw
-         |  FROM dl LEFT JOIN piv USING (doc_id) CROSS JOIN g CROSS JOIN cfs)
-         |SELECT doc_id, round(raw, 4) AS score FROM s
-         |ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin,
-
-    // the KMV estimate is a deterministic function of the key set under
-    // the shared hash32, so the sketch itself (not just its input) is
-    // replicated: k smallest distinct hashes → (k-1)·2^32 / h_k
-    "sketch_kmv" ->
-      s"""WITH hu AS (
-         |  SELECT DISTINCT ${hash32Sql("(user_id)")} AS h FROM events
-         |  WHERE user_id IS NOT NULL),
-         |ku AS (SELECT h FROM hu ORDER BY h LIMIT 64),
-         |he AS (
-         |  SELECT DISTINCT ${hash32Sql("(event_id)")} AS h FROM events
-         |  WHERE event_id IS NOT NULL),
-         |ke AS (SELECT h FROM he ORDER BY h LIMIT 256)
-         |SELECT count(*) AS k_used, max(h) AS kth_hash,
-         | CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE)
-         |      ELSE round((count(*) - 1) * 4294967296.0 / max(h), 2) END AS estimate,
-         | 'user_id' AS key
-         |FROM ku
-         |UNION ALL
-         |SELECT count(*) AS k_used, max(h) AS kth_hash,
-         | CASE WHEN count(*) < 256 THEN CAST(count(*) AS DOUBLE)
-         |      ELSE round((count(*) - 1) * 4294967296.0 / max(h), 2) END AS estimate,
-         | 'event_id' AS key
-         |FROM ke""".stripMargin,
-
-    // the CMS inner-product estimator replayed with the same
-    // seed-suffixed FNV bucket family; exact side is a plain key join
-    "sketch_join_size" ->
-      s"""WITH a AS (
-         |  SELECT user_id FROM events WHERE event_id % 2 = 0),
-         |b AS (SELECT user_id FROM events WHERE event_id % 2 <> 0),
-         |ex AS (
-         |  SELECT CAST(sum(ca * cb) AS BIGINT) AS exact_size
-         |  FROM (SELECT user_id, count(*) AS ca FROM a GROUP BY user_id) x
-         |  JOIN (SELECT user_id, count(*) AS cb FROM b GROUP BY user_id) y
-         |   USING (user_id)),
-         |seeds AS (SELECT unnest(generate_series(0, 2)) AS j),
-         |sa AS (
-         |  SELECT j, bucket, count(*) AS ca FROM (
-         |   SELECT j, ${fnvSql("CAST(user_id AS VARCHAR) || '#' || j")}
-         |     % 256 AS bucket
-         |   FROM a, seeds) GROUP BY j, bucket),
-         |sb AS (
-         |  SELECT j, bucket, count(*) AS cb FROM (
-         |   SELECT j, ${fnvSql("CAST(user_id AS VARCHAR) || '#' || j")}
-         |     % 256 AS bucket
-         |   FROM b, seeds) GROUP BY j, bucket),
-         |ipj AS (
-         |  SELECT sa.j, sum(sa.ca * sb.cb) AS ip
-         |  FROM sa JOIN sb ON sa.j = sb.j AND sa.bucket = sb.bucket
-         |  GROUP BY sa.j),
-         |es AS (SELECT CAST(min(ip) AS BIGINT) AS cms_est FROM ipj)
-         |SELECT exact_size, cms_est,
-         | round(CAST(cms_est AS DOUBLE) / exact_size, 4) AS inflation
-         |FROM ex, es""".stripMargin,
-
-    // equi-depth bounds off the compressed histogram: bound_i = the
-    // value at rank ((n-1)*i)//8 + 1 (the group-quantile rank rule)
-    "layout_range_bounds" ->
-      """WITH h AS (
-        |  SELECT n_chars AS v, count(*) AS cnt FROM documents GROUP BY n_chars),
-        |c AS (
-        |  SELECT v, sum(cnt) OVER (ORDER BY v) AS cum,
-        |   sum(cnt) OVER () AS total FROM h)
-        |SELECT CAST(max(total) AS BIGINT) AS n_rows,
-        | min(CASE WHEN cum >= (total - 1) * 1 // 8 + 1 THEN v END) AS b1,
-        | min(CASE WHEN cum >= (total - 1) * 2 // 8 + 1 THEN v END) AS b2,
-        | min(CASE WHEN cum >= (total - 1) * 3 // 8 + 1 THEN v END) AS b3,
-        | min(CASE WHEN cum >= (total - 1) * 4 // 8 + 1 THEN v END) AS b4,
-        | min(CASE WHEN cum >= (total - 1) * 5 // 8 + 1 THEN v END) AS b5,
-        | min(CASE WHEN cum >= (total - 1) * 6 // 8 + 1 THEN v END) AS b6,
-        | min(CASE WHEN cum >= (total - 1) * 7 // 8 + 1 THEN v END) AS b7
-        |FROM c""".stripMargin,
-
-    // the KMV pair estimators replayed: per-lang distinct 32-bit term
-    // hashes (fnv64 folded, low 32 bits — power-of-two modulus, so the
-    // unsigned HUGEINT low bits equal Spark's pmod), rank ≤ k per lang,
-    // union re-rank per pair; hash collisions collapse identically on
-    // both sides (same hash), so DISTINCT keeps the relations equal
-    "sketch_kmv_pairs" ->
-      s"""WITH ts AS (
-         |  SELECT lang, unnest(list_filter(
-         |    regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')) AS term
-         |  FROM documents),
-         |vocab AS (SELECT DISTINCT lang AS g, term FROM ts),
-         |hh AS (
-         |  SELECT DISTINCT g,
-         |   CAST(${fnvSql("term")} % 4294967296 AS BIGINT) AS h
-         |  FROM vocab),
-         |sk AS (
-         |  SELECT g, h FROM (
-         |    SELECT g, h, row_number() OVER (PARTITION BY g ORDER BY h) AS rn
-         |    FROM hh) WHERE rn <= 128),
-         |gs AS (SELECT DISTINCT g FROM sk),
-         |pairs AS (
-         |  SELECT a.g AS ga, b.g AS gb FROM gs a, gs b WHERE a.g < b.g),
-         |tag AS (
-         |  SELECT ga, gb, h, max(fa) AS fa, max(fb) AS fb FROM (
-         |    SELECT p.ga, p.gb, s.h, 1 AS fa, 0 AS fb
-         |    FROM pairs p JOIN sk s ON s.g = p.ga
-         |    UNION ALL
-         |    SELECT p.ga, p.gb, s.h, 0 AS fa, 1 AS fb
-         |    FROM pairs p JOIN sk s ON s.g = p.gb)
-         |  GROUP BY ga, gb, h),
-         |uni AS (
-         |  SELECT * FROM (
-         |    SELECT ga, gb, h, fa, fb,
-         |     row_number() OVER (PARTITION BY ga, gb ORDER BY h) AS rn
-         |    FROM tag) WHERE rn <= 128),
-         |agg AS (
-         |  SELECT ga, gb, count(*) AS k_union, max(h) AS kth,
-         |   sum(fa * fb) AS n_both
-         |  FROM uni GROUP BY ga, gb)
-         |SELECT ga AS lang_a, gb AS lang_b, CAST(k_union AS BIGINT) AS k_union,
-         | round(CAST(n_both AS DOUBLE) / k_union, 4) AS rho,
-         | round(CASE WHEN k_union < 128 THEN CAST(k_union AS DOUBLE)
-         |   ELSE (k_union - 1) * 4294967296.0 / kth END, 2) AS union_est,
-         | round((CAST(n_both AS DOUBLE) / k_union) *
-         |  (CASE WHEN k_union < 128 THEN CAST(k_union AS DOUBLE)
-         |    ELSE (k_union - 1) * 4294967296.0 / kth END), 2) AS inter_est
-         |FROM agg""".stripMargin,
-
-    "a17_cube" ->
-      """SELECT COALESCE(lang, 'ALL') AS lang,
-        | COALESCE(source, 'ALL') AS source,
-        | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents GROUP BY CUBE (lang, source)""".stripMargin,
-
-    // recomputed from raw documents — matching the index-served answer
-    // proves the persisted postings table faithful
-    "k19_inverted_index" ->
-      s"""SELECT term, CAST(count(*) AS BIGINT) AS df,
-         | CAST(sum(tf) AS BIGINT) AS cf
-         |FROM (SELECT doc_id, term, count(*) AS tf FROM ($tokensSub)
-         |      GROUP BY doc_id, term)
-         |WHERE term IN ('scan', 'join', 'merge')
-         |GROUP BY term""".stripMargin,
-
-    "stats_benford" ->
-      """WITH d AS (
-        |  SELECT CAST(substr(CAST(n_chars AS VARCHAR), 1, 1) AS INT) AS digit
-        |  FROM documents),
-        |c AS (SELECT digit, count(*) AS n FROM d GROUP BY digit)
-        |SELECT digit, n,
-        | round(CAST(n AS DOUBLE) / sum(n) OVER (), 4) AS frac
-        |FROM c""".stripMargin,
-
-    // the hashing trick replayed: bucket = low 8 hash bits (power-of-two
-    // modulus — unsigned HUGEINT % agrees with Spark's signed &), sign =
-    // bit 8; weights are exact integer sums
-    "a16_feature_hash" -> featureHashSql("WHERE doc_id % 13 = 0"),
-
-    // the hashed-linear scorer replayed: hash32 stand-in weights, the
-    // same bucket-ordered fold for the logit, keep decided on the
-    // UNROUNDED z (bit-identical by fold order); only sigmoid's exp
-    // touches libm and it lands behind round(4)
-    "curate_classifier" ->
-      s"""$classifierZSql
-         |SELECT doc_id, round(z, 4) AS z,
-         | round(1.0::DOUBLE / (1.0::DOUBLE + exp(-z)), 4) AS score,
-         | z >= 0.0::DOUBLE AS keep
-         |FROM z""".stripMargin,
-
-    // normalized-text grouping: the text_num_normalize kernel feeding a
-    // min-id keep
-    "dedup_normalized" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT CAST(col0 AS BIGINT), col1 FROM (VALUES
-        |   (9200001, 'Breaking News 2024: markets up 500 points'),
-        |   (9200002, 'breaking news 2025:  markets up  700 points'),
-        |   (9200003, 'BREAKING NEWS 9999: Markets UP 1 points'),
-        |   (9200004, 'an entirely different planted document')) t),
-        |n AS (SELECT doc_id, md5(trim(regexp_replace(
-        |   regexp_replace(lower(text), '[0-9]+', '<num>', 'g'),
-        |   '\s+', ' ', 'g'))) AS norm_hash FROM base),
-        |k AS (SELECT norm_hash, min(doc_id) AS keep_id FROM n GROUP BY 1)
-        |SELECT doc_id, norm_hash, doc_id = keep_id AS keep
-        |FROM n JOIN k USING (norm_hash)""".stripMargin,
-
-    // the canonical split hash re-bucketed, χ² terms vs the 90/5/5
-    // expectation, literals identical IEEE doubles on both engines
-    "stats_ab_srm" ->
-      s"""WITH b AS (
-         |  SELECT CASE WHEN bb < 90 THEN 'train'
-         |    WHEN bb < 95 THEN 'val' ELSE 'test' END AS split
-         |  FROM (SELECT CAST(${fnvSql("doc_id::VARCHAR || '#split'")}
-         |    % 4294967296::HUGEINT AS BIGINT) % 100 AS bb
-         |   FROM documents) t),
-         |obs AS (SELECT split, count(*) AS n_obs FROM b GROUP BY 1),
-         |tot AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM b),
-         |x AS (SELECT split, n_obs,
-         |       n * (CASE WHEN split = 'train' THEN 0.90::DOUBLE
-         |            ELSE 0.05::DOUBLE END) AS n_exp
-         |      FROM obs, tot),
-         |y AS (SELECT split, n_obs, n_exp,
-         |       (n_obs - n_exp) * (n_obs - n_exp) / n_exp AS chi_term
-         |      FROM x)
-         |SELECT split, n_obs, round(n_exp, 2) AS n_exp,
-         | round(chi_term, 6) AS chi_term,
-         | round(sum(chi_term) OVER (), 6) AS chi2
-         |FROM y""".stripMargin,
-
-    // per-user x/y sums, one moments aggregate, mirrored arithmetic
-    // cent-long mirror: HUGEINT cross products ↔ Spark DECIMAL(38,0);
-    // θ/reduction scale-free, var_* divide cent² by 10⁴ once
-    "stats_cuped" ->
-      """WITH per AS (
-        |  SELECT user_id,
-        |   CAST(sum(CASE WHEN event_id % 2 = 0
-        |     THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END)
-        |     AS BIGINT) AS x,
-        |   CAST(sum(CASE WHEN event_id % 2 = 1
-        |     THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END)
-        |     AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
-        |mo AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-        |        CAST(sum(x) AS DOUBLE) AS sx,
-        |        CAST(sum(y) AS DOUBLE) AS sy,
-        |        CAST(sum(CAST(x AS HUGEINT) * y) AS DOUBLE) AS sxy,
-        |        CAST(sum(CAST(x AS HUGEINT) * x) AS DOUBLE) AS sxx,
-        |        CAST(sum(CAST(y AS HUGEINT) * y) AS DOUBLE) AS syy
-        |       FROM per),
-        |c AS (SELECT n,
-        |       sxy / n - sx / n * (sy / n) AS covxy,
-        |       sxx / n - sx / n * (sx / n) AS varx,
-        |       syy / n - sy / n * (sy / n) AS vary
-        |      FROM mo)
-        |SELECT CAST(n AS BIGINT) AS n_users,
-        | round(covxy / varx, 6) AS theta,
-        | round(vary / 10000.0, 4) AS var_y,
-        | round((vary - covxy * covxy / varx) / 10000.0, 4) AS var_adj,
-        | round(covxy * covxy / (varx * vary), 6) AS reduction
-        |FROM c""".stripMargin,
-
-    // reliability replay: identical z fold → rounded sigmoid → decile
-    // bins on the same IEEE doubles; ECE as the n-weighted gap sum
-    "stats_calibration" ->
-      calibrationSqlFor(
-        "SELECT doc_id, CAST(lang = 'en' AS INT) AS y FROM documents"),
-
-    // the classifier-vs-Gopher-gate reliability audit: labels come from
-    // the nested gopherSql chain (its CTE names scope inside the
-    // derived table — the ann_recall nesting precedent)
-    "curate_calibration" ->
-      calibrationSqlFor(
-        s"SELECT doc_id, CAST(keep AS INT) AS y FROM ($gopherSql)"),
-
-    // last-touch attribution: unique touch per (user, ts) by max
-    // event_id, latest touch at-or-before the purchase, 1-day staleness
-    // in floor-seconds, channel rollup
-    "w11_attribution" ->
-      """WITH p AS (SELECT event_id, ts, user_id, value FROM events
-        |           WHERE event_type = 'purchase'),
-        |tch AS (SELECT user_id, ts, event_type AS channel, event_id,
-        |        row_number() OVER (PARTITION BY user_id, ts
-        |          ORDER BY event_id DESC) AS rn
-        |       FROM events WHERE event_type IN ('click', 'view')),
-        |t1 AS (SELECT user_id, ts, channel, event_id FROM tch WHERE rn = 1),
-        |m AS (SELECT p.event_id, p.ts, p.value, t.channel, t.ts AS tts,
-        |       row_number() OVER (PARTITION BY p.event_id
-        |         ORDER BY t.ts DESC) AS rn
-        |      FROM p LEFT JOIN t1 t
-        |      ON p.user_id = t.user_id AND t.ts <= p.ts),
-        |a AS (SELECT CASE WHEN tts IS NULL OR
-        |         epoch_us(ts) // 1000000 - epoch_us(tts) // 1000000 > 86400
-        |        THEN 'unattributed' ELSE channel END AS attr_channel, value
-        |      FROM m WHERE rn = 1)
-        |SELECT attr_channel, count(*) AS n_purchases,
-        | round(sum(value), 2) AS revenue
-        |FROM a GROUP BY 1""".stripMargin,
-
-    // per-doc distinct 8-grams left-joined against the benchmark gram
-    // set (string equality here; Spark probes 64-bit gram hashes — equal
-    // relations barring an fnv64 collision, the contamination precedent)
-    "text_overlap_frac" ->
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM documents),
-        |g AS (
-        |  SELECT DISTINCT doc_id, array_to_string(a[i:i+7], ' ') AS g
-        |  FROM arrs, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
-        |  WHERE len(a) >= 8),
-        |b AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
-        |j AS (
-        |  SELECT g.doc_id, count(*) AS n_grams, count(b.g) AS n_hits
-        |  FROM g LEFT JOIN b USING (g)
-        |  GROUP BY g.doc_id)
-        |SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams,
-        | CAST(n_hits AS BIGINT) AS n_hits,
-        | round(n_hits * 1.0 / n_grams, 4) AS frac
-        |FROM j""".stripMargin,
-
-    // session boundaries replicated with the same lag/cumsum windows;
-    // ties are safe (gap 0 keeps tied rows in one session, aggregates
-    // order-invariant), epoch_ms truncates like Spark's unix_millis
-    "w6_sessionize" ->
-      """WITH e AS (SELECT user_id, epoch_ms(ts) AS tms, value FROM events),
-        |f AS (
-        |  SELECT user_id, tms, value,
-        |   CASE WHEN lag(tms) OVER w IS NULL
-        |          OR tms - lag(tms) OVER w > 21600000
-        |        THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tms)),
-        |g AS (
-        |  SELECT user_id, tms, value,
-        |   sum(new_s) OVER (PARTITION BY user_id ORDER BY tms
-        |     ROWS UNBOUNDED PRECEDING) AS sess
-        |  FROM f)
-        |SELECT user_id, CAST(sess AS BIGINT) AS session_idx,
-        | min(tms) AS start_ms, max(tms) AS end_ms,
-        | count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sess""".stripMargin,
-
-    // the salted join is EXACTLY the plain equi-join — that equality is
-    // the correctness claim
-    "o6_salted_join" ->
-      """SELECT p.p_brand, count(*) AS n_rows,
-        | round(sum(l.l_quantity), 2) AS sum_qty
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |GROUP BY p.p_brand""".stripMargin,
-
-    // RANGE frame on epoch seconds; ties are symmetric on both engines
-    // (every tied row sees the identical frame); rolling sum, not avg —
-    // a 2-decimal-exact total can't sit on the rounding boundary
-    "t4_rolling" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_us(ts) // 1000000 AS tsec, value
-        |  FROM events)
-        |SELECT event_id, user_id, tsec,
-        | count(*) OVER w AS n_win,
-        | round(sum(value) OVER w, 2) AS sum_win
-        |FROM e
-        |WINDOW w AS (PARTITION BY user_id ORDER BY tsec
-        |  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    // the truncated-EWMA dot product replayed term by term: the + chain
-    // is written in the same left-associated order, the 2^-j weights are
-    // exact binary fractions, and every operand is the same IEEE double
-    // on both engines — so the division and the rounding agree exactly
-    "t8_ewma" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_us(ts) // 1000000 AS tsec, value
-        |  FROM events),
-        |l AS (
-        |  SELECT event_id, user_id, tsec, value AS x0,
-        |   lag(value, 1) OVER w AS x1, lag(value, 2) OVER w AS x2,
-        |   lag(value, 3) OVER w AS x3, lag(value, 4) OVER w AS x4,
-        |   lag(value, 5) OVER w AS x5, lag(value, 6) OVER w AS x6,
-        |   lag(value, 7) OVER w AS x7
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id))
-        |SELECT event_id, user_id, tsec,
-        | round((CASE WHEN x0 IS NOT NULL THEN x0 * 1.0::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x1 IS NOT NULL THEN x1 * 0.5::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x2 IS NOT NULL THEN x2 * 0.25::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x3 IS NOT NULL THEN x3 * 0.125::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x4 IS NOT NULL THEN x4 * 0.0625::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x5 IS NOT NULL THEN x5 * 0.03125::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x6 IS NOT NULL THEN x6 * 0.015625::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x7 IS NOT NULL THEN x7 * 0.0078125::DOUBLE ELSE 0.0::DOUBLE END)
-        | / (CASE WHEN x0 IS NOT NULL THEN 1.0::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x1 IS NOT NULL THEN 0.5::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x2 IS NOT NULL THEN 0.25::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x3 IS NOT NULL THEN 0.125::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x4 IS NOT NULL THEN 0.0625::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x5 IS NOT NULL THEN 0.03125::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x6 IS NOT NULL THEN 0.015625::DOUBLE ELSE 0.0::DOUBLE END
-        |  + CASE WHEN x7 IS NOT NULL THEN 0.0078125::DOUBLE ELSE 0.0::DOUBLE END), 4)
-        | AS ewma
-        |FROM l""".stripMargin,
-
-    "t5_locf" ->
-      """WITH ev AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day, value
-        |  FROM events),
-        |daily AS (
-        |  SELECT event_type, day, count(*) AS n_obs,
-        |   round(sum(value), 2) AS day_sum
-        |  FROM ev GROUP BY 1, 2),
-        |span AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-        |grid AS (
-        |  SELECT t.event_type, d.day
-        |  FROM (SELECT DISTINCT event_type FROM ev) t,
-        |       (SELECT unnest(generate_series(d0, d1)) AS day FROM span) d),
-        |f AS (
-        |  SELECT g.event_type, g.day, daily.n_obs, daily.day_sum,
-        |   count(daily.day_sum) OVER (PARTITION BY g.event_type
-        |     ORDER BY g.day) AS grp
-        |  FROM grid g LEFT JOIN daily
-        |    ON g.event_type = daily.event_type AND g.day = daily.day)
-        |SELECT event_type, day, COALESCE(n_obs, 0) AS n_events,
-        | COALESCE(max(day_sum) OVER (PARTITION BY event_type, grp), 0.0)
-        |   AS locf_sum
-        |FROM f""".stripMargin,
-
-    "t7_interp" ->
-      """WITH ev AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day, value
-        |  FROM events),
-        |daily AS (
-        |  SELECT event_type, day, round(sum(value), 2) AS day_sum
-        |  FROM ev GROUP BY 1, 2),
-        |span AS (SELECT min(day) AS d0, max(day) AS d1 FROM ev),
-        |grid AS (
-        |  SELECT t.event_type, d.day
-        |  FROM (SELECT DISTINCT event_type FROM ev) t,
-        |       (SELECT unnest(generate_series(d0, d1)) AS day FROM span) d),
-        |g AS (
-        |  SELECT g.event_type, g.day, daily.day_sum,
-        |   count(daily.day_sum) OVER (PARTITION BY g.event_type
-        |     ORDER BY g.day) AS gf,
-        |   count(daily.day_sum) OVER (PARTITION BY g.event_type
-        |     ORDER BY g.day DESC) AS gb
-        |  FROM grid g LEFT JOIN daily
-        |    ON g.event_type = daily.event_type AND g.day = daily.day),
-        |h AS (
-        |  SELECT event_type, day, day_sum,
-        |   max(day_sum) OVER (PARTITION BY event_type, gf) AS pv,
-        |   min(day) OVER (PARTITION BY event_type, gf) AS pd,
-        |   max(day_sum) OVER (PARTITION BY event_type, gb) AS nv,
-        |   max(day) OVER (PARTITION BY event_type, gb) AS nd
-        |  FROM g)
-        |SELECT event_type, day,
-        | round(COALESCE(day_sum,
-        |   pv + (nv - pv) * (day - pd) / (nd - pd), pv, nv), 4) AS interp_sum
-        |FROM h""".stripMargin,
-
-    "a14_rollup" ->
-      """WITH ev AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day, value
-        |  FROM events)
-        |SELECT COALESCE(event_type, 'ALL') AS event_type,
-        | COALESCE(day, -1) AS day,
-        | count(*) AS n_events, round(sum(value), 2) AS sum_value
-        |FROM ev GROUP BY ROLLUP (event_type, day)""".stripMargin,
-
-    // explicit lower-quantile_disc rule (row floor((n-1)*p)+1 of the
-    // ascending (n_chars, doc_id) sort) — engine-replicable, unlike any
-    // approx-percentile sketch
-    "stats_group_quantiles" ->
-      """WITH r AS (
-        |  SELECT lang, n_chars,
-        |   row_number() OVER (PARTITION BY lang
-        |     ORDER BY n_chars, doc_id) AS r,
-        |   count(*) OVER (PARTITION BY lang) AS n
-        |  FROM documents)
-        |SELECT lang, max(n) AS n_docs,
-        | max(CASE WHEN r = CAST(floor((n-1)*0.5) AS BIGINT) + 1
-        |   THEN n_chars END) AS p50_chars,
-        | max(CASE WHEN r = CAST(floor((n-1)*0.9) AS BIGINT) + 1
-        |   THEN n_chars END) AS p90_chars
-        |FROM r GROUP BY lang""".stripMargin,
-
-    // winsorized clamp replayed with the same lower-quantile_disc rank
-    // rule; every output is an exact integer
-    "stats_winsorize" ->
-      """WITH r AS (
-        |  SELECT lang, n_chars, doc_id,
-        |   row_number() OVER (PARTITION BY lang
-        |     ORDER BY n_chars, doc_id) AS r,
-        |   count(*) OVER (PARTITION BY lang) AS n
-        |  FROM documents),
-        |b AS (
-        |  SELECT lang, n_chars,
-        |   max(CASE WHEN r = CAST(floor((n-1)*0.05) AS BIGINT) + 1
-        |     THEN n_chars END) OVER (PARTITION BY lang) AS lo,
-        |   max(CASE WHEN r = CAST(floor((n-1)*0.95) AS BIGINT) + 1
-        |     THEN n_chars END) OVER (PARTITION BY lang) AS hi
-        |  FROM r)
-        |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(greatest(least(n_chars, hi), lo)) AS BIGINT) AS sum_winsorized,
-        | CAST(count(*) FILTER (WHERE n_chars < lo) AS BIGINT) AS n_clamped_low,
-        | CAST(count(*) FILTER (WHERE n_chars > hi) AS BIGINT) AS n_clamped_high
-        |FROM b GROUP BY lang""".stripMargin,
-
-    "search_boolean" ->
-      s"""SELECT doc_id, count(*) AS total_tf
-         |FROM ($tokensSub)
-         |WHERE term IN ('scan', 'join', 'merge')
-         |GROUP BY doc_id
-         |HAVING count(DISTINCT term) = 3""".stripMargin,
-
-    // the deletion neighborhoods replayed with list_transform/range;
-    // candidates via the variant equi-join, then the same levenshtein
-    // verify (both engines implement plain Levenshtein distance)
-    "search_fuzzy" ->
-      s"""WITH df AS (
-         |  SELECT term, count(*) AS df FROM ($tfSub)
-         |  WHERE length(term) >= 4 GROUP BY term),
-         |top AS (SELECT term FROM df ORDER BY df DESC, term ASC LIMIT 20),
-         |q AS (SELECT DISTINCT substr(term, 1, 1) || substr(term, 3) AS typo
-         |      FROM top),
-         |qv AS (
-         |  SELECT typo, unnest(list_transform(range(0, length(typo) + 1),
-         |    i -> CASE WHEN i = 0 THEN typo
-         |         ELSE substr(typo, 1, i - 1) || substr(typo, i + 1) END))
-         |    AS variant
-         |  FROM q),
-         |dv AS (
-         |  SELECT term, df, unnest(list_transform(range(0, length(term) + 1),
-         |    i -> CASE WHEN i = 0 THEN term
-         |         ELSE substr(term, 1, i - 1) || substr(term, i + 1) END))
-         |    AS variant
-         |  FROM df),
-         |cand AS (SELECT DISTINCT typo, term, df FROM dv JOIN qv USING (variant))
-         |SELECT typo, term, df FROM cand
-         |WHERE levenshtein(typo, term) <= 1""".stripMargin,
-
-    // both legs are this suite's own gated chains (bm25Sql verbatim;
-    // the brute-cosine leg restricted to query 0, k=20), fused by the
-    // exact-integer-rank RRF formula
-    "search_rrf" ->
-      s"""WITH tr AS (SELECT doc_id, CAST(row_number() OVER (
-         |        ORDER BY score DESC, doc_id ASC) AS INT) AS text_rank
-         |       FROM ($bm25Sql) b),
-         |vb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |       FROM embeddings),
-         |qv AS (SELECT e AS qe FROM vb WHERE vec_id = 0),
-         |sc AS (SELECT vb.vec_id AS doc_id, ${cosSql("qe", "vb.e")} AS sim
-         |       FROM vb CROSS JOIN qv WHERE vb.vec_id <> 0),
-         |vr AS (SELECT doc_id, text_rank_v AS vec_rank FROM (
-         |        SELECT doc_id, CAST(row_number() OVER (
-         |          ORDER BY sim DESC, doc_id ASC) AS INT) AS text_rank_v
-         |        FROM sc) WHERE text_rank_v <= 20),
-         |f AS (SELECT coalesce(tr.doc_id, vr.doc_id) AS doc_id,
-         |       text_rank, vec_rank
-         |      FROM tr FULL OUTER JOIN vr ON tr.doc_id = vr.doc_id)
-         |SELECT doc_id, text_rank, vec_rank,
-         | round(coalesce(1.0::DOUBLE / (60 + text_rank), 0.0::DOUBLE) +
-         |   coalesce(1.0::DOUBLE / (60 + vec_rank), 0.0::DOUBLE), 6) AS rrf
-         |FROM f
-         |ORDER BY rrf DESC, doc_id ASC LIMIT 10""".stripMargin,
-
-    // min-max score fusion over the same two legs as the RRF oracle:
-    // the vec leg cuts top-20 on the UNROUNDED sim (mirroring
-    // bruteForceTopK) then rounds to 4 before normalization
-    "search_hybrid" ->
-      s"""WITH tl AS (SELECT doc_id, score FROM ($bm25Sql) b),
-         |tb AS (SELECT min(score) AS tmin, max(score) AS tmax FROM tl),
-         |tn AS (SELECT doc_id, CASE WHEN tmax = tmin THEN 1.0::DOUBLE
-         |        ELSE (score - tmin) / (tmax - tmin) END AS nt
-         |       FROM tl CROSS JOIN tb),
-         |vbx AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |        FROM embeddings),
-         |qv AS (SELECT e AS qe FROM vbx WHERE vec_id = 0),
-         |sc AS (SELECT vbx.vec_id AS doc_id, ${cosSql("qe", "vbx.e")} AS sim
-         |       FROM vbx CROSS JOIN qv WHERE vbx.vec_id <> 0),
-         |vl AS (SELECT doc_id, round(sim, 4) AS vsim FROM (
-         |        SELECT doc_id, sim, row_number() OVER (
-         |          ORDER BY sim DESC, doc_id ASC) AS r FROM sc)
-         |       WHERE r <= 20),
-         |vb2 AS (SELECT min(vsim) AS vmin, max(vsim) AS vmax FROM vl),
-         |vn AS (SELECT doc_id, CASE WHEN vmax = vmin THEN 1.0::DOUBLE
-         |        ELSE (vsim - vmin) / (vmax - vmin) END AS nv
-         |       FROM vl CROSS JOIN vb2),
-         |f AS (SELECT coalesce(tn.doc_id, vn.doc_id) AS doc_id, nt, nv
-         |      FROM tn FULL OUTER JOIN vn ON tn.doc_id = vn.doc_id),
-         |h AS (SELECT doc_id, coalesce(nt, 0.0::DOUBLE) AS cnt_,
-         |       coalesce(nv, 0.0::DOUBLE) AS cnv_,
-         |       0.5::DOUBLE * coalesce(nt, 0.0::DOUBLE) +
-         |        0.5::DOUBLE * coalesce(nv, 0.0::DOUBLE) AS hybrid FROM f)
-         |SELECT doc_id, round(cnt_, 6) AS norm_text,
-         | round(cnv_, 6) AS norm_vec, round(hybrid, 6) AS hybrid
-         |FROM h ORDER BY hybrid DESC, doc_id ASC LIMIT 10""".stripMargin,
-
-    // truncated RBO_.9 at depth 20 between the same two legs the RRF
-    // oracle replays; each common doc enters at g = max(rank_a, rank_b)
-    "search_rbo" ->
-      s"""WITH tr AS (SELECT doc_id, CAST(row_number() OVER (
-         |        ORDER BY score DESC, doc_id ASC) AS INT) AS text_rank
-         |       FROM ($bm25Sql) b),
-         |vb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |       FROM embeddings),
-         |qv AS (SELECT e AS qe FROM vb WHERE vec_id = 0),
-         |sc AS (SELECT vb.vec_id AS doc_id, ${cosSql("qe", "vb.e")} AS sim
-         |       FROM vb CROSS JOIN qv WHERE vb.vec_id <> 0),
-         |vr AS (SELECT doc_id, vrk AS vec_rank FROM (
-         |        SELECT doc_id, CAST(row_number() OVER (
-         |          ORDER BY sim DESC, doc_id ASC) AS INT) AS vrk FROM sc)
-         |       WHERE vrk <= 20),
-         |pairs AS (SELECT greatest(text_rank, vec_rank) AS g
-         |          FROM tr JOIN vr USING (doc_id)),
-         |ad AS (SELECT d, count(*) AS a_d
-         |       FROM pairs JOIN (FROM range(1, 21) t(d)) ON g <= d
-         |       GROUP BY d)
-         |SELECT round(coalesce(sum(0.1 * pow(0.9, d-1) * a_d / d),
-         |   0.0), 6) AS rbo,
-         | coalesce(CAST(max(CASE WHEN d = 10 THEN a_d END) AS BIGINT), 0)
-         |   AS overlap_at_10,
-         | coalesce(CAST(max(CASE WHEN d = 20 THEN a_d END) AS BIGINT), 0)
-         |   AS overlap_at_20
-         |FROM ad""".stripMargin,
-
-    // first-touch funnel: frontier CTEs mirror FunnelOps.funnel's
-    // earliest-completion chaining at micro-second resolution
-    "funnel_steps" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
-        |f1 AS (SELECT user_id, min(tus) AS t FROM ev
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |f2 AS (SELECT e.user_id, min(e.tus) AS t FROM ev e
-        |  JOIN f1 ON e.user_id = f1.user_id AND e.tus > f1.t
-        |  WHERE e.event_type = 'click' GROUP BY 1),
-        |f3 AS (SELECT e.user_id, min(e.tus) AS t FROM ev e
-        |  JOIN f2 ON e.user_id = f2.user_id AND e.tus > f2.t
-        |  WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT 1 AS step, 'view' AS event_type,
-        |  (SELECT count(*) FROM f1) AS n_users
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM f2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM f3)""".stripMargin,
-
-    // the funnel_steps chain with the 48 h anchor box carried through
-    // (anchor = the user's earliest step-1 time, the stated law)
-    "w16_funnel_window" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
-        |f1 AS (SELECT user_id, min(tus) AS anchor, min(tus) AS t
-        |  FROM ev WHERE event_type = 'view' GROUP BY 1),
-        |f2 AS (SELECT e.user_id, min(f1.anchor) AS anchor,
-        |        min(e.tus) AS t FROM ev e
-        |  JOIN f1 ON e.user_id = f1.user_id AND e.tus > f1.t
-        |   AND e.tus <= f1.anchor + 172800000000
-        |  WHERE e.event_type = 'click' GROUP BY 1),
-        |f3 AS (SELECT e.user_id, min(f2.anchor) AS anchor,
-        |        min(e.tus) AS t FROM ev e
-        |  JOIN f2 ON e.user_id = f2.user_id AND e.tus > f2.t
-        |   AND e.tus <= f2.anchor + 172800000000
-        |  WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT 1 AS step, 'view' AS event_type,
-        |  (SELECT count(*) FROM f1) AS n_users
-        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM f2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM f3)"""
-        .stripMargin,
-
-    // four exact cent-long cells, mirrored mean divisions, one DiD line
-    "stats_did" ->
-      """WITH ev AS (SELECT epoch_us(ts) // 1000000 // 86400 AS day,
-        |   user_id % 2 = 0 AS treat,
-        |   CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |m AS (SELECT (min(day) + max(day) + 1) // 2 AS mid FROM ev),
-        |c AS (SELECT
-        |  CAST(sum(CASE WHEN treat AND day >= mid THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_tp,
-        |  CAST(sum(CASE WHEN treat AND day >= mid THEN v ELSE 0 END)
-        |    AS BIGINT) AS s_tp,
-        |  CAST(sum(CASE WHEN treat AND day < mid THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_t0,
-        |  CAST(sum(CASE WHEN treat AND day < mid THEN v ELSE 0 END)
-        |    AS BIGINT) AS s_t0,
-        |  CAST(sum(CASE WHEN NOT treat AND day >= mid THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_cp,
-        |  CAST(sum(CASE WHEN NOT treat AND day >= mid THEN v ELSE 0 END)
-        |    AS BIGINT) AS s_cp,
-        |  CAST(sum(CASE WHEN NOT treat AND day < mid THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_c0,
-        |  CAST(sum(CASE WHEN NOT treat AND day < mid THEN v ELSE 0 END)
-        |    AS BIGINT) AS s_c0
-        | FROM ev CROSS JOIN m),
-        |f AS (SELECT n_tp, n_t0, n_cp, n_c0,
-        |  CAST(s_tp AS DOUBLE) / n_tp / 100.0 AS m_tp,
-        |  CAST(s_t0 AS DOUBLE) / n_t0 / 100.0 AS m_t0,
-        |  CAST(s_cp AS DOUBLE) / n_cp / 100.0 AS m_cp,
-        |  CAST(s_c0 AS DOUBLE) / n_c0 / 100.0 AS m_c0
-        | FROM c)
-        |SELECT n_tp, n_t0, n_cp, n_c0,
-        | round(m_tp, 6) AS mean_treat_post,
-        | round(m_t0, 6) AS mean_treat_pre,
-        | round(m_cp, 6) AS mean_ctrl_post,
-        | round(m_c0, 6) AS mean_ctrl_pre,
-        | round((m_tp - m_t0) - (m_cp - m_c0), 6) AS did
-        |FROM f""".stripMargin,
-
-    // exactRank replays as one row_number over (n_ev, user_id); cells
-    // are BIGINT co-moments, every mean one mirrored division, and the
-    // ATE folds diff·n_s in stratum order over the non-null strata
-    "stats_ipw" ->
-      """WITH ue AS (SELECT user_id, count(*) AS n_ev,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |     AS cents
-        |  FROM events GROUP BY user_id),
-        |rk AS (SELECT user_id, cents,
-        |   row_number() OVER (ORDER BY n_ev, user_id) AS rank,
-        |   count(*) OVER () AS n_users FROM ue),
-        |st AS (SELECT user_id, cents,
-        |   CASE WHEN rank * 5 <= n_users THEN 1
-        |        WHEN rank * 5 <= n_users * 2 THEN 2
-        |        WHEN rank * 5 <= n_users * 3 THEN 3
-        |        WHEN rank * 5 <= n_users * 4 THEN 4
-        |        ELSE 5 END AS stratum,
-        |   user_id % 2 = 0 AS treat FROM rk),
-        |c AS (SELECT stratum, CAST(count(*) AS BIGINT) AS n_s,
-        |   CAST(sum(CASE WHEN treat THEN 1 ELSE 0 END) AS BIGINT) AS n_t,
-        |   CAST(sum(CASE WHEN treat THEN cents ELSE 0 END) AS BIGINT)
-        |     AS c_t,
-        |   CAST(sum(CASE WHEN NOT treat THEN cents ELSE 0 END) AS BIGINT)
-        |     AS c_c
-        |  FROM st GROUP BY stratum),
-        |c2 AS (SELECT stratum, n_s, n_t, n_s - n_t AS n_c, c_t, c_c
-        |       FROM c),
-        |m AS (SELECT stratum, n_s, n_t,
-        |   CASE WHEN n_t > 0 THEN CAST(c_t AS DOUBLE) / n_t / 100.0 END
-        |     AS m_t,
-        |   CASE WHEN n_c > 0 THEN CAST(c_c AS DOUBLE) / n_c / 100.0 END
-        |     AS m_c
-        |  FROM c2),
-        |m2 AS (SELECT stratum, n_s, n_t, m_t, m_c, m_t - m_c AS diff
-        |       FROM m),
-        |a AS (SELECT list_reduce(list_prepend(0.0::DOUBLE,
-        |         list(diff * n_s ORDER BY stratum)
-        |           FILTER (WHERE diff IS NOT NULL)),
-        |         (acc, x) -> acc + x)
-        |       / sum(n_s) FILTER (WHERE diff IS NOT NULL) AS ate_raw
-        |      FROM m2)
-        |SELECT stratum, n_s, n_t,
-        | round(CAST(n_t AS DOUBLE) / n_s, 6) AS p_treat,
-        | round(m_t, 6) AS mean_treat, round(m_c, 6) AS mean_ctrl,
-        | round(diff, 6) AS diff, round(ate_raw, 6) AS ate
-        |FROM m2 CROSS JOIN a""".stripMargin,
-
-    "a15_pivot" ->
-      """SELECT (epoch_us(ts) // 1000000 // 86400) % 7 AS dow,
-        | count(*) FILTER (WHERE event_type = 'click') AS click,
-        | count(*) FILTER (WHERE event_type = 'error') AS error,
-        | count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-        | count(*) FILTER (WHERE event_type = 'signup') AS signup,
-        | count(*) FILTER (WHERE event_type = 'view') AS "view"
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // exact integer co-moments -> identical BIGINTs on both engines;
-    // corr is then one fixed double expression (see the query comment)
-    "stats_corr" ->
-      """WITH t AS (
-        |  SELECT lang, n_chars AS x,
-        |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     s -> s <> '')) AS y
-        |  FROM documents),
-        |a AS (
-        |  SELECT lang, count(*) AS n,
-        |   CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |   sum(x*y) AS sxy, sum(x*x) AS sxx, sum(y*y) AS syy
-        |  FROM t GROUP BY lang)
-        |SELECT lang, n AS n_docs,
-        | round(CAST(n*sxy - CAST(sx AS HUGEINT)*sy AS DOUBLE) /
-        |   sqrt(CAST(n*sxx - CAST(sx AS HUGEINT)*sx AS DOUBLE) *
-        |        CAST(n*syy - CAST(sy AS HUGEINT)*sy AS DOUBLE)), 4)
-        |   AS corr_chars_tokens
-        |FROM a""".stripMargin,
-
-    // exact long co-moments -> one fixed-order double expression
-    // (sqrt(m2)*m2, not pow) — see stats_corr
-    "stats_moments" ->
-      """WITH a AS (
-        |  SELECT lang, count(*) AS n,
-        |   CAST(sum(n_chars) AS BIGINT) AS sx,
-        |   sum(n_chars*n_chars) AS sxx,
-        |   sum(n_chars*n_chars*n_chars) AS sxxx
-        |  FROM documents GROUP BY lang),
-        |m AS (
-        |  SELECT lang, n, CAST(sx AS DOUBLE) / n AS mean,
-        |   CAST(sxx AS DOUBLE) / n - (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n) AS m2,
-        |   CAST(sxxx AS DOUBLE) / n
-        |     - 3.0 * (CAST(sx AS DOUBLE) / n) * (CAST(sxx AS DOUBLE) / n)
-        |     + 2.0 * (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n) AS m3
-        |  FROM a)
-        |SELECT lang, n AS n_docs, round(mean, 4) AS mean_chars,
-        | round(m3 / (sqrt(m2) * m2), 4) AS skew_chars
-        |FROM m""".stripMargin,
-
-    // unsigned HUGEINT FNV folded to Spark's signed-long order before
-    // the bottom-k
-    "sample_bottomk" ->
-      s"""WITH f AS (
-         |  SELECT doc_id, ${fnvSql("doc_id::VARCHAR || '#bk'")} AS fu
-         |  FROM documents),
-         |h AS (
-         |  SELECT doc_id,
-         |   CAST(CASE WHEN fu >= 9223372036854775808::HUGEINT
-         |     THEN fu - 18446744073709551616::HUGEINT ELSE fu END
-         |     AS BIGINT) AS h
-         |  FROM f)
-         |SELECT doc_id, h FROM h ORDER BY h, doc_id LIMIT 100""".stripMargin,
-
-    "t6_sliding_distinct" ->
-      """WITH ev AS (
-        |  SELECT DISTINCT epoch_us(ts) // 1000000 // 86400 AS day, user_id
-        |  FROM events),
-        |ex AS (
-        |  SELECT DISTINCT day + i AS day, user_id
-        |  FROM ev, unnest(generate_series(0, 6)) AS t(i)),
-        |mx AS (SELECT max(day) AS m FROM ev)
-        |SELECT day, count(*) AS n_users_7d
-        |FROM ex, mx WHERE day <= m GROUP BY day""".stripMargin,
-
-    "stats_histogram" ->
-      """WITH b AS (
-        |  SELECT CAST(floor(value / 8.0) AS BIGINT) AS bin, count(*) AS cnt
-        |  FROM events GROUP BY 1),
-        |n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM b)
-        |SELECT bin, bin * 8.0::DOUBLE AS lo, cnt,
-        | round(CAST(sum(cnt) OVER (ORDER BY bin) AS BIGINT) * 1.0 / n.n, 4)
-        |   AS cum_frac
-        |FROM b, n""".stripMargin,
-
-    "stats_histogram_grouped" ->
-      """WITH b AS (
-        |  SELECT event_type, CAST(floor(value / 8.0) AS BIGINT) AS bin,
-        |   count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |n AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
-        |      FROM b GROUP BY 1)
-        |SELECT b.event_type, bin, bin * 8.0::DOUBLE AS lo, cnt,
-        | round(CAST(sum(cnt) OVER (PARTITION BY b.event_type ORDER BY bin)
-        |   AS BIGINT) * 1.0 / n.n, 4) AS cum_frac
-        |FROM b JOIN n USING (event_type)""".stripMargin,
-
-    // HLL replayed bit-for-bit: 32-bit FNV fold, bucket = low 6 bits,
-    // rho from length(bin(rest)) (integer-exact leftmost-bit position),
-    // register sum scaled to exact BIGINT, double math only in the final
-    // division chain / ln — every float op spelled identically on both
-    // engines (::DOUBLE everywhere: DuckDB parses bare float literals as
-    // DECIMAL, whose arithmetic diverges from Spark's doubles)
-    "sketch_hll" ->
-      s"""WITH b AS (
-         |  SELECT CAST(fu % 64 AS BIGINT) AS bucket,
-         |   CAST(fu // 64 AS BIGINT) AS rest
-         |  FROM (SELECT ${fnvSql("CAST(user_id AS VARCHAR) || '#hll'")}
-         |          % 4294967296::HUGEINT AS fu
-         |        FROM events WHERE user_id IS NOT NULL)),
-         |r AS (
-         |  SELECT bucket,
-         |   max(CASE WHEN rest = 0 THEN 27
-         |       ELSE 27 - CAST(length(bin(rest)) AS INT) END) AS rho
-         |  FROM b GROUP BY bucket),
-         |s AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS m_used,
-         |   CAST(sum(1::BIGINT << (30 - rho)) AS BIGINT) AS s_present
-         |  FROM r),
-         |t AS (
-         |  SELECT 64 - m_used AS v_zero,
-         |   s_present + (64 - m_used) * 1073741824 AS s_scaled
-         |  FROM s)
-         |SELECT v_zero, s_scaled,
-         | round(0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 64.0::DOUBLE)
-         |   * 4096.0::DOUBLE * 1073741824.0::DOUBLE / s_scaled, 2) AS est_raw,
-         | CASE WHEN 0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 64.0::DOUBLE)
-         |       * 4096.0::DOUBLE * 1073741824.0::DOUBLE / s_scaled <= 160.0::DOUBLE
-         |      AND v_zero > 0
-         |   THEN round(64.0::DOUBLE * ln(64.0::DOUBLE / v_zero), 2)
-         |   ELSE round(0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 64.0::DOUBLE)
-         |     * 4096.0::DOUBLE * 1073741824.0::DOUBLE / s_scaled, 2)
-         | END AS est
-         |FROM t""".stripMargin,
-
-    // the oracle computes the registers GLOBALLY; Spark computes them per
-    // shard and max-merges — a hash match proves the merge law
-    "sketch_hll_merge" ->
-      s"""WITH b AS (
-         |  SELECT CAST(fu % 64 AS BIGINT) AS bucket,
-         |   CAST(fu // 64 AS BIGINT) AS rest
-         |  FROM (SELECT ${fnvSql("CAST(user_id AS VARCHAR) || '#hll'")}
-         |          % 4294967296::HUGEINT AS fu
-         |        FROM events WHERE user_id IS NOT NULL))
-         |SELECT bucket,
-         | max(CASE WHEN rest = 0 THEN 27
-         |     ELSE 27 - CAST(length(bin(rest)) AS INT) END) AS rho
-         |FROM b GROUP BY bucket""".stripMargin,
-
-    "stats_quantile_est" ->
-      """WITH b AS (
-        |  SELECT event_type, CAST(floor(value / 8.0) AS BIGINT) AS bin,
-        |   count(*) AS cnt
-        |  FROM events GROUP BY 1, 2),
-        |c AS (
-        |  SELECT event_type, bin, CAST(cnt AS BIGINT) AS cnt,
-        |   CAST(sum(cnt) OVER (PARTITION BY event_type ORDER BY bin)
-        |     AS BIGINT) AS cum
-        |  FROM b),
-        |n AS (SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n
-        |      FROM b GROUP BY 1),
-        |p(p) AS (VALUES (0.5::DOUBLE), (0.9::DOUBLE), (0.99::DOUBLE))
-        |SELECT c.event_type, p.p,
-        | round(CAST(c.bin AS DOUBLE) * 8.0::DOUBLE + 8.0::DOUBLE *
-        |   (p.p * CAST(n.n AS DOUBLE) - CAST(c.cum - c.cnt AS DOUBLE)) /
-        |   CAST(c.cnt AS DOUBLE), 4) AS q_est
-        |FROM c JOIN n USING (event_type), p
-        |WHERE CAST(c.cum AS DOUBLE) >= p.p * CAST(n.n AS DOUBLE)
-        |  AND CAST(c.cum - c.cnt AS DOUBLE) < p.p * CAST(n.n AS DOUBLE)""".stripMargin,
-
-    // unsigned HUGEINT FNV folded to Spark's signed-long order before the
-    // per-domain rank (the sample_bottomk convention)
-    "sample_mixture" ->
-      s"""WITH t(domain, tgt) AS (VALUES ('de', 40), ('en', 50), ('es', 100), ('zh', 20)),
-         |f AS (SELECT doc_id, lang AS domain,
-         |   ${fnvSql("doc_id::VARCHAR || '#mix'")} AS fu
-         |  FROM documents),
-         |h AS (SELECT doc_id, domain,
-         |   CAST(CASE WHEN fu >= 9223372036854775808::HUGEINT
-         |     THEN fu - 18446744073709551616::HUGEINT ELSE fu END AS BIGINT) AS h
-         |  FROM f),
-         |r AS (SELECT domain, doc_id,
-         |   row_number() OVER (PARTITION BY domain ORDER BY h, doc_id) AS rn
-         |  FROM h JOIN t USING (domain))
-         |SELECT domain, doc_id, CAST(rn AS BIGINT) AS rn
-         |FROM r JOIN t USING (domain) WHERE rn <= tgt""".stripMargin,
-
-    "k14_bucketed_join" ->
-      """SELECT o_orderkey, o_custkey, count(*) AS n_items,
-        | round(sum(l_quantity), 2) AS sum_qty,
-        | round(sum(l_extendedprice), 2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    // the full-scan filter IS the pruning-safety oracle: if the manifest
-    // scan skipped a file containing in-range rows, these aggregates
-    // cannot match
-    "k15_manifest_skip" ->
-      """WITH m AS (SELECT max(event_id) AS mx FROM events)
-        |SELECT count(*) AS n_rows, CAST(sum(event_id) AS BIGINT) AS sum_id,
-        | min(event_id) AS min_id, max(event_id) AS max_id,
-        | round(sum(value), 2) AS sum_value
-        |FROM events, m
-        |WHERE event_id >= mx // 4 AND event_id <= mx // 2""".stripMargin,
-
-    // same routing rules replayed; every row lands exactly once
-    "k29_quarantine" ->
-      """WITH base AS (
-        |  SELECT doc_id, text, lang FROM documents
-        |  UNION ALL
-        |  SELECT * FROM (VALUES
-        |   (9000001, '', 'en'),
-        |   (9000002, 'ok text here', 'xx'),
-        |   (NULL, 'no id row', 'en'),
-        |   (9000004, 'fine document text', 'de')) t(doc_id, text, lang)),
-        |r AS (SELECT *, CASE WHEN doc_id IS NULL THEN 'null_id'
-        |        WHEN text IS NULL OR strlen(text) = 0 THEN 'empty_text'
-        |        WHEN lang NOT IN ('en', 'de', 'es', 'fr', 'zh')
-        |          THEN 'bad_lang' END AS reason
-        |      FROM base)
-        |SELECT 'target' AS dest, 'ok' AS reason, count(*) AS n,
-        | CAST(sum(coalesce(doc_id, 0)) AS BIGINT) AS sum_ids
-        |FROM r WHERE reason IS NULL
-        |UNION ALL
-        |SELECT 'quarantine', reason, count(*),
-        | CAST(sum(coalesce(doc_id, 0)) AS BIGINT)
-        |FROM r WHERE reason IS NOT NULL GROUP BY 2""".stripMargin,
-
-    // the COW rewrite only changes which files hold the survivors
-    "k31_delete_where" ->
-      """SELECT count(*) AS n_rows, CAST(sum(doc_id) AS BIGINT) AS sum_ids,
-        | CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents
-        |WHERE NOT (doc_id % 100 = 7 AND doc_id < 200)""".stripMargin,
-
-    // the bucketed layout only changes which files serve the lookup
-    "k30_bucket_prune" ->
-      """SELECT count(*) AS n_rows, round(sum(l_quantity), 2) AS sum_qty
-        |FROM lineitem WHERE l_orderkey = 7""".stripMargin,
-
-    // four unrolled farthest-point steps; per-vector max over the
-    // center set is order-free, argmin ties to the smaller id
-    "sample_kcenter" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-         |           FROM embeddings),
-         |c1 AS (SELECT vec_id, emb FROM e WHERE vec_id = 0),
-         |d1 AS (SELECT x.vec_id, max(${cosSql("x.emb", "c.emb")}) AS ms
-         |       FROM e x, c1 c GROUP BY 1),
-         |s1 AS (SELECT vec_id, ms FROM d1 ORDER BY ms, vec_id LIMIT 1),
-         |c2 AS (SELECT vec_id, emb FROM c1 UNION ALL
-         |       SELECT e.vec_id, e.emb FROM e JOIN s1 USING (vec_id)),
-         |d2 AS (SELECT x.vec_id, max(${cosSql("x.emb", "c.emb")}) AS ms
-         |       FROM e x, c2 c GROUP BY 1),
-         |s2 AS (SELECT vec_id, ms FROM d2 ORDER BY ms, vec_id LIMIT 1),
-         |c3 AS (SELECT vec_id, emb FROM c2 UNION ALL
-         |       SELECT e.vec_id, e.emb FROM e JOIN s2 USING (vec_id)),
-         |d3 AS (SELECT x.vec_id, max(${cosSql("x.emb", "c.emb")}) AS ms
-         |       FROM e x, c3 c GROUP BY 1),
-         |s3 AS (SELECT vec_id, ms FROM d3 ORDER BY ms, vec_id LIMIT 1),
-         |c4 AS (SELECT vec_id, emb FROM c3 UNION ALL
-         |       SELECT e.vec_id, e.emb FROM e JOIN s3 USING (vec_id)),
-         |d4 AS (SELECT x.vec_id, max(${cosSql("x.emb", "c.emb")}) AS ms
-         |       FROM e x, c4 c GROUP BY 1),
-         |s4 AS (SELECT vec_id, ms FROM d4 ORDER BY ms, vec_id LIMIT 1)
-         |SELECT CAST(0 AS INT) AS step, vec_id,
-         | CAST(NULL AS DOUBLE) AS cover_sim FROM c1
-         |UNION ALL SELECT 1, vec_id, round(ms, 6) FROM s1
-         |UNION ALL SELECT 2, vec_id, round(ms, 6) FROM s2
-         |UNION ALL SELECT 3, vec_id, round(ms, 6) FROM s3
-         |UNION ALL SELECT 4, vec_id, round(ms, 6) FROM s4""".stripMargin,
-
-    // sqrt-share flattening (T = 2 ⇒ exact IEEE sqrt), mirrored
-    // normalization and integer floor targets
-    "sample_temp_targets" ->
-      """WITH src AS (SELECT source, count(*) AS n FROM documents
-        |             GROUP BY 1),
-        |tot AS (SELECT CAST(sum(n) AS DOUBLE) AS total,
-        |         sum(sqrt(CAST(n AS DOUBLE))) AS ssum FROM src)
-        |SELECT source, n, round(n / total, 6) AS p,
-        | round(sqrt(CAST(n AS DOUBLE)) / ssum, 6) AS p_temp,
-        | CAST(floor(sqrt(CAST(n AS DOUBLE)) / ssum * total) AS BIGINT)
-        |   AS n_target
-        |FROM src, tot""".stripMargin,
-
-    // the clone pins the pre-append snapshot; the source sees the three
-    // appended rows
-    "k28_shallow_clone" ->
-      """SELECT count(*) + 3 AS n_src,
-        | CAST(sum(doc_id) + 9000001 + 9000002 + 9000003 AS BIGINT)
-        |   AS sum_src,
-        | count(*) AS n_clone, CAST(sum(doc_id) AS BIGINT) AS sum_clone
-        |FROM documents""".stripMargin,
-
-    // full-scan replay of the 2-D band — the Z-order layout and the
-    // multi-column manifest only change WHICH FILES are read
-    "k27_zorder_skip" ->
-      """WITH m AS (SELECT max(user_id) AS mu, max(event_id) AS me
-        |           FROM events)
-        |SELECT count(*) AS n_rows, CAST(sum(event_id) AS BIGINT) AS sum_eid,
-        | min(user_id) AS min_uid, max(user_id) AS max_uid,
-        | round(sum(value), 2) AS sum_value
-        |FROM events, m
-        |WHERE user_id >= mu // 4 AND user_id <= mu // 2
-        |  AND event_id <= me // 2""".stripMargin,
-
-    // golden trace (buckets = fnv64(user#j) & 255: user 1 -> 135/212,
-    // user 2 -> 54/233; no collisions)
-    // the one-batch-behind watermark law: batch 1 runs at epoch 0,
-    // batch N at (batch N−1's max − 5 min); lag_s for batch 1 is the
-    // full epoch offset of the first max event time
-    "st_watermark_lag" ->
-      """SELECT CAST(col0 AS INT) AS batch_seq, col1 AS max_event,
-        | col2 AS watermark, CAST(col3 AS BIGINT) AS lag_s
-        |FROM (VALUES
-        | (1, '2024-01-01 00:05:00', '1970-01-01 00:00:00', 1704067500),
-        | (2, '2024-01-01 00:12:00', '2024-01-01 00:00:00', 720),
-        | (3, '2024-01-01 00:20:00', '2024-01-01 00:07:00', 780)) t""".stripMargin,
-
-    "st_cms" ->
-      """SELECT col0 AS w_start, CAST(col1 AS INT) AS j,
-        | CAST(col2 AS BIGINT) AS bucket, CAST(col3 AS BIGINT) AS cnt
-        |FROM (VALUES ('2024-01-01 00:00:00', 0, 135, 2),
-        | ('2024-01-01 00:00:00', 1, 212, 2),
-        | ('2024-01-01 00:10:00', 0, 54, 1),
-        | ('2024-01-01 00:10:00', 1, 233, 1),
-        | ('2024-01-01 00:10:00', 0, 135, 1),
-        | ('2024-01-01 00:10:00', 1, 212, 1)) t""".stripMargin,
-
-    // admission replayed FROM THE INPUT TRACE (not golden outputs):
-    // first 2 per (user, window) in (ts, value) order — the event-time
-    // rule the operator promises, independent of arrival
-    "st_throttle" ->
-      """WITH ev(user_id, ts, value) AS (VALUES
-        |  (1, TIMESTAMP '2024-01-01 00:05:00', 3.0::DOUBLE),
-        |  (1, TIMESTAMP '2024-01-01 00:07:00', 4.0::DOUBLE),
-        |  (2, TIMESTAMP '2024-01-01 00:12:00', 5.0::DOUBLE),
-        |  (1, TIMESTAMP '2024-01-01 00:06:00', 3.5::DOUBLE),
-        |  (1, TIMESTAMP '2024-01-01 00:14:00', 6.0::DOUBLE)),
-        |w AS (SELECT user_id, ts, value,
-        |       epoch_ms(ts) // 600000 * 600000 AS wms FROM ev),
-        |r AS (SELECT user_id, wms, ts, value,
-        |       CAST(row_number() OVER (PARTITION BY user_id, wms
-        |         ORDER BY ts, value) AS INT) AS seq FROM w)
-        |SELECT CAST(user_id AS BIGINT) AS user_id,
-        | strftime(make_timestamp(wms * 1000), '%Y-%m-%d %H:%M:%S')
-        |   AS w_start,
-        | seq, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts, value
-        |FROM r WHERE seq <= 2""".stripMargin,
-
-    // the per-window registers recomputed from the trace via the SAME
-    // fnv/rho chain as the batch sketch_hll oracle — derived, not
-    // golden-copied; the sentinel's own window never closes
-    "st_hll" ->
-      s"""WITH tr(w_start, uid) AS (VALUES
-         |  ('2024-01-01 00:00:00', '1'), ('2024-01-01 00:00:00', '1'),
-         |  ('2024-01-01 00:00:00', '2'), ('2024-01-01 00:00:00', '3'),
-         |  ('2024-01-01 00:10:00', '2'), ('2024-01-01 00:10:00', '3')),
-         |b AS (
-         |  SELECT w_start, CAST(fu % 64 AS BIGINT) AS bucket,
-         |   CAST(fu // 64 AS BIGINT) AS rest
-         |  FROM (SELECT w_start, ${fnvSql("uid || '#hll'")}
-         |          % 4294967296::HUGEINT AS fu
-         |        FROM tr))
-         |SELECT w_start, bucket,
-         | CAST(max(CASE WHEN rest = 0 THEN 27
-         |   ELSE 27 - CAST(length(bin(rest)) AS INT) END) AS INT) AS rho
-         |FROM b GROUP BY w_start, bucket""".stripMargin,
-
-    // frame energies replayed: Σ codepoint² per sampled 16-byte chunk
-    // (ASCII text ⇒ bytes = codepoints), greatest-fold for the peak
-    "mm_frame_energy" ->
-      """WITH fr AS (
-        |  SELECT doc_id, text, i AS off
-        |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-        |e AS (
-        |  SELECT doc_id, off,
-        |   list_reduce(list_prepend(0::BIGINT, list_transform(
-        |     regexp_split_to_array(substr(text, off + 1, 16), ''),
-        |     c -> unicode(c)::BIGINT * unicode(c)::BIGINT)),
-        |    (a, b) -> a + b) AS energy,
-        |   list_reduce(list_prepend(0::BIGINT, list_transform(
-        |     regexp_split_to_array(substr(text, off + 1, 16), ''),
-        |     c -> unicode(c)::BIGINT)),
-        |    (a, b) -> greatest(a, b)) AS peak
-        |  FROM fr)
-        |SELECT doc_id, CAST(off // 32 AS INT) AS frame_idx,
-        | energy, CAST(peak AS INT) AS peak
-        |FROM e""".stripMargin,
-
-    // the stereo sibling: the same frame windows deinterleave into odd
-    // (L) / even (R) 1-based positions via generate_series indexing;
-    // single-sample frames fold to 0 on the right channel (an empty
-    // transform leaves only the prepended zero)
-    "mm_frame_energy_stereo" ->
-      """WITH fr AS (
-        |  SELECT doc_id, text, i AS off
-        |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-        |cs AS (
-        |  SELECT doc_id, off,
-        |   list_transform(regexp_split_to_array(substr(text, off + 1, 16), ''),
-        |     c -> unicode(c)::BIGINT) AS v
-        |  FROM fr),
-        |e AS (
-        |  SELECT doc_id, off,
-        |   list_reduce(list_prepend(0::BIGINT,
-        |     list_transform(generate_series(1, (len(v) + 1) // 2),
-        |       j -> v[2 * j - 1] * v[2 * j - 1])), (a, b) -> a + b)
-        |     AS energy_l,
-        |   list_reduce(list_prepend(0::BIGINT,
-        |     list_transform(generate_series(1, len(v) // 2),
-        |       j -> v[2 * j] * v[2 * j])), (a, b) -> a + b) AS energy_r,
-        |   list_reduce(list_prepend(0::BIGINT,
-        |     list_transform(generate_series(1, (len(v) + 1) // 2),
-        |       j -> v[2 * j - 1])), (a, b) -> greatest(a, b)) AS peak_l,
-        |   list_reduce(list_prepend(0::BIGINT,
-        |     list_transform(generate_series(1, len(v) // 2),
-        |       j -> v[2 * j])), (a, b) -> greatest(a, b)) AS peak_r,
-        |   list_reduce(list_prepend(0::BIGINT,
-        |     list_transform(generate_series(1, len(v) // 2),
-        |       j -> v[2 * j - 1] * v[2 * j])), (a, b) -> a + b) AS xsum
-        |  FROM cs)
-        |SELECT doc_id, CAST(off // 32 AS INT) AS frame_idx,
-        | energy_l, energy_r, CAST(peak_l AS INT) AS peak_l,
-        | CAST(peak_r AS INT) AS peak_r, xsum
-        |FROM e""".stripMargin,
-
-    // sweep line replayed with the same (t, delta) point ordering; all
-    // ambiguous tie segments are zero-length, so both engines agree
-    "t9_interval_union" ->
-      """WITH pts AS (
-        |  SELECT user_id, epoch_us(ts) // 1000000 AS t, 1 AS delta FROM events
-        |  UNION ALL
-        |  SELECT user_id, epoch_us(ts) // 1000000 + 900, -1 FROM events),
-        |c AS (
-        |  SELECT user_id, t, delta,
-        |   sum(delta) OVER (PARTITION BY user_id ORDER BY t, delta) AS active,
-        |   lead(t, 1) OVER (PARTITION BY user_id ORDER BY t, delta) AS nxt
-        |  FROM pts)
-        |SELECT user_id,
-        | CAST(sum(CASE WHEN active > 0 AND nxt IS NOT NULL
-        |   THEN nxt - t ELSE 0 END) AS BIGINT) AS union_sec,
-        | CAST(count(*) FILTER (WHERE delta = 1) AS BIGINT) AS n_intervals
-        |FROM c GROUP BY user_id""".stripMargin,
-
-    // mean/variance replayed from the same exact integer frame sums,
-    // z as the identical fixed-order double expression
-    "t10_anomaly" ->
-      """WITH c AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |w AS (
-        |  SELECT event_type, day, n,
-        |   count(*) OVER fr AS cnt, sum(n) OVER fr AS s1,
-        |   sum(n*n) OVER fr AS s2
-        |  FROM c
-        |  WINDOW fr AS (PARTITION BY event_type ORDER BY day
-        |    ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)),
-        |z AS (
-        |  SELECT event_type, day, n,
-        |   CASE WHEN cnt >= 3 AND s2*cnt - s1*s1 > 0 THEN
-        |    round((CAST(n*cnt - s1 AS DOUBLE) / cnt) /
-        |          sqrt(CAST(s2*cnt - s1*s1 AS DOUBLE) / (cnt*(cnt-1))), 4)
-        |   END AS z
-        |  FROM w)
-        |SELECT event_type, day, n, z,
-        | coalesce(abs(z) >= 3.0, false) AS anomaly
-        |FROM z""".stripMargin,
-
-    // exact-count seasonal index: one division of integer products
-    "t11_seasonal" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |dw AS (
-        |  SELECT event_type, CAST(day % 7 AS INT) AS dow,
-        |   count(*) AS n_days, sum(n) AS sum_n
-        |  FROM daily GROUP BY 1, 2),
-        |tot AS (
-        |  SELECT event_type, count(*) AS days_all, sum(n) AS sum_all
-        |  FROM daily GROUP BY 1)
-        |SELECT dw.event_type, dow, CAST(n_days AS BIGINT) AS n_days,
-        | round(CAST(sum_n AS DOUBLE) / n_days, 4) AS mean_n,
-        | round(CAST(sum_n * days_all AS DOUBLE) /
-        |   CAST(n_days * sum_all AS DOUBLE), 6) AS seasonal_idx
-        |FROM dw JOIN tot ON dw.event_type = tot.event_type""".stripMargin,
-
-    // |N·C_t − t·T| replayed as exact integers; argmax via the same
-    // (sdev desc, day asc) rank
-    "t12_cusum" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |c AS (
-        |  SELECT event_type, day, n,
-        |   CAST(row_number() OVER w AS BIGINT) AS tindex,
-        |   sum(n) OVER w AS ct
-        |  FROM daily
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY day)),
-        |tot AS (
-        |  SELECT event_type, count(*) AS nn, sum(n) AS tt
-        |  FROM daily GROUP BY 1),
-        |dev AS (
-        |  SELECT c.event_type, day, n, nn,
-        |   abs(ct*nn - tindex*tt) AS sdev
-        |  FROM c JOIN tot ON c.event_type = tot.event_type),
-        |r AS (
-        |  SELECT *, row_number() OVER (PARTITION BY event_type
-        |    ORDER BY sdev DESC, day ASC) AS rn FROM dev)
-        |SELECT event_type, day AS cp_tick, CAST(n AS BIGINT) AS n_at_cp,
-        | CAST(sdev AS BIGINT) AS scaled_dev,
-        | round(CAST(sdev AS DOUBLE) / nn, 4) AS max_dev
-        |FROM r WHERE rn = 1""".stripMargin,
-
-    // Δt from the same lead window; Σ v·Δt replayed as the identical
-    // (tsec, event_id)-ordered fold
-    "t13_twa" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) // 1000000 AS tsec, value
-        |  FROM events),
-        |l AS (
-        |  SELECT user_id, event_id, tsec, value,
-        |   lead(tsec, 1) OVER (PARTITION BY user_id
-        |     ORDER BY tsec, event_id) - tsec AS dt
-        |  FROM e),
-        |f AS (SELECT user_id, event_id, tsec, dt,
-        |       value * CAST(dt AS DOUBLE) AS vdt
-        |      FROM l WHERE dt IS NOT NULL)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_holds,
-        | CAST(sum(dt) AS BIGINT) AS span_sec,
-        | round(list_reduce(list_prepend(0.0::DOUBLE,
-        |   list(vdt ORDER BY tsec, event_id)), (a, x) -> a + x)
-        |   / sum(dt), 6) AS twa
-        |FROM f GROUP BY user_id""".stripMargin,
-
-    // both propagation rounds replayed with the same majority-rank
-    // windows (count desc, label asc — deterministic ties)
-    "graph_label_prop" -> labelPropSql,
-
-    // community partition nests the labelPropSql chain verbatim; the
-    // Q_c numerator stays BIGINT until one final division
-    "graph_modularity" ->
-      s"""WITH lp AS (SELECT * FROM ($labelPropSql)),
-         |e2 AS (
-         |  SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
-         |slab AS (SELECT node_id AS src, label AS lab_s FROM lp
-         |         WHERE node_type = 'supplier'),
-         |plab AS (SELECT node_id AS dst, label AS lab_p FROM lp
-         |         WHERE node_type = 'part'),
-         |ein AS (
-         |  SELECT lab_s AS label, CAST(count(*) AS BIGINT) AS e_in
-         |  FROM e2 JOIN slab USING (src) JOIN plab USING (dst)
-         |  WHERE lab_s = lab_p GROUP BY 1),
-         |dtot AS (
-         |  SELECT label, CAST(sum(deg) AS BIGINT) AS d_tot FROM (
-         |   SELECT lab_s AS label, deg FROM
-         |    (SELECT src, count(*) AS deg FROM e2 GROUP BY src)
-         |    JOIN slab USING (src)
-         |   UNION ALL
-         |   SELECT lab_p AS label, deg FROM
-         |    (SELECT dst, count(*) AS deg FROM e2 GROUP BY dst)
-         |    JOIN plab USING (dst)) GROUP BY label),
-         |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e2)
-         |SELECT label, coalesce(e_in, 0) AS e_in, d_tot,
-         | round(CAST(4 * CAST(m AS HUGEINT) * coalesce(e_in, 0) -
-         |     CAST(d_tot AS HUGEINT) * d_tot AS DOUBLE) /
-         |   CAST(4 * CAST(m AS HUGEINT) * m AS DOUBLE), 6) AS q_contrib
-         |FROM dtot LEFT JOIN ein USING (label) CROSS JOIN mm""".stripMargin,
-
-    // supplier pairs only via a shared sub-hub part (df ≤ 64), exact
-    // integer counts, one final division
-    "graph_node_sim" ->
-      """WITH e AS (
-        |  SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
-        |keep AS (SELECT dst FROM (
-        |  SELECT dst, count(*) AS ddf FROM e GROUP BY dst) WHERE ddf <= 64),
-        |se AS (SELECT src, dst FROM e JOIN keep USING (dst)),
-        |deg AS (SELECT src, count(*) AS deg FROM se GROUP BY src),
-        |com AS (SELECT a.src AS src_a, b.src AS src_b, count(*) AS n_common
-        |        FROM se a JOIN se b ON a.dst = b.dst AND a.src < b.src
-        |        GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT src_a, src_b, CAST(n_common AS BIGINT) AS n_common,
-        | CAST(da.deg AS BIGINT) AS deg_a, CAST(db.deg AS BIGINT) AS deg_b,
-        | round(CAST(n_common AS DOUBLE) /
-        |   (da.deg + db.deg - n_common), 6) AS jaccard
-        |FROM com JOIN deg da ON com.src_a = da.src
-        |JOIN deg db ON com.src_b = db.src""".stripMargin,
-
-    // resource-allocation link prediction: same shared-dst + hub-cut
-    // candidate chain as graph_node_sim; the RA sum replays as the
-    // identical exact fixed-point integer sum Σ ⌊10¹²/ddf⌋ (order-free
-    // — no float fold anywhere), the top-50 ranks on the exact
-    // numerator, and ra floors at 6 decimals via one integral divide +
-    // one IEEE division on both engines
-    "graph_link_predict" ->
-      s"""WITH e AS (
-         |  SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
-         |ddf AS (SELECT dst, count(*) AS ddf FROM e GROUP BY dst),
-         |se AS (SELECT src, e.dst, ddf.ddf FROM e JOIN ddf USING (dst)
-         |       WHERE ddf.ddf <= 64),
-         |com AS (
-         |  SELECT a.src AS src_a, b.src AS src_b, count(*) AS n_common,
-         |   CAST(sum(${GraphOps.raScale} // a.ddf) AS BIGINT) AS ra_num
-         |  FROM se a JOIN se b ON a.dst = b.dst AND a.src < b.src
-         |  GROUP BY 1, 2 HAVING count(*) >= 2)
-         |SELECT src_a, src_b, CAST(n_common AS BIGINT) AS n_common,
-         | CAST(ra_num // ${GraphOps.raScale / 1000000L} AS DOUBLE)
-         |   / 1000000.0::DOUBLE AS ra
-         |FROM com ORDER BY ra_num DESC, src_a ASC, src_b ASC
-         |LIMIT 50""".stripMargin,
-
-    // the two integer HITS rounds replayed join-for-join
-    "graph_hits" ->
-      """WITH e AS (
-        |  SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
-        |a1 AS (SELECT dst, count(*) AS auth1 FROM e GROUP BY dst),
-        |h1 AS (SELECT src, sum(auth1) AS hub1
-        |       FROM e JOIN a1 USING (dst) GROUP BY src),
-        |a2 AS (SELECT dst, sum(hub1) AS auth2
-        |       FROM e JOIN h1 USING (src) GROUP BY dst)
-        |SELECT dst AS node_id, CAST(auth1 AS BIGINT) AS auth1,
-        | CAST(auth2 AS BIGINT) AS auth2
-        |FROM a2 JOIN a1 USING (dst)
-        |ORDER BY auth2 DESC, dst ASC LIMIT 20""".stripMargin,
-
-    // degree histogram with integer-exact log2 bucketing (bin-string
-    // length, the sketch_hll rho convention — no float log anywhere)
-    "graph_degree_profile" ->
-      """WITH e AS (
-        |  SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
-        |o AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-        |i AS (SELECT dst, count(*) AS deg FROM e GROUP BY dst)
-        |SELECT 'out' AS side, CAST(length(bin(deg)) - 1 AS INT) AS log2_deg,
-        | CAST(count(*) AS BIGINT) AS n_nodes
-        |FROM o GROUP BY log2_deg
-        |UNION ALL
-        |SELECT 'in' AS side, CAST(length(bin(deg)) - 1 AS INT) AS log2_deg,
-        | CAST(count(*) AS BIGINT) AS n_nodes
-        |FROM i GROUP BY log2_deg""".stripMargin,
-
-    // same lookahead-free GPT-2-ish pattern (TermOps.BpePattern) — Java
-    // regex and RE2 both run it with leftmost-first alternation
-    "text_token_count" ->
-      """SELECT doc_id,
-        | CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |   x -> x <> '')) AS INT) AS n_ws,
-        | CAST(len(list_filter(regexp_extract_all(lower(text),
-        |   '''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'),
-        |   x -> x <> '')) AS INT) AS n_bpe,
-        | CASE WHEN len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |   x -> x <> '')) = 0 THEN 0.0
-        |  ELSE round(CAST(len(list_filter(regexp_extract_all(lower(text),
-        |   '''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'),
-        |   x -> x <> '')) AS DOUBLE) /
-        |   CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |   x -> x <> '')) AS DOUBLE), 4) END AS bpe_per_ws
-        |FROM documents""".stripMargin,
-
-    // every rule is an integer cross-multiplied compare — no float
-    // boundary anywhere, so the bits decide identically in both engines
-    "text_gopher_rules" -> gopherSql,
-
-    // three unrolled greedy merge rounds over the word-frequency
-    // table; the merge application is the wrapped-element list_reduce
-    // fold (greedy left-to-right, the engine's aggregate() mirrored)
-    "bpe_train" ->
-      s"""WITH $bpeChainSql
-         |SELECT 1 AS round, l AS merge_left, r AS merge_right, pair_count
-         |FROM b_1
-         |UNION ALL SELECT 2, l, r, pair_count FROM b_2
-         |UNION ALL SELECT 3, l, r, pair_count FROM b_3""".stripMargin,
-
-    // the SAME learned-merge chain, extended by the final apply (s3)
-    // and aggregated: frequency-weighted piece/char totals, two final
-    // divisions — the train→apply audit
-    "bpe_apply" ->
-      s"""WITH $bpeChainSql,
-         |${bpeMergeFromSql("s2", "b_3", "s3")}
-         |SELECT CAST(sum(cnt) AS BIGINT) AS n_words,
-         | CAST(count(*) AS BIGINT) AS n_types,
-         | CAST(sum(list_sum(list_transform(syms, x -> length(x))) * cnt)
-         |   AS BIGINT) AS n_chars,
-         | CAST(sum(len(syms) * cnt) AS BIGINT) AS n_pieces,
-         | round(CAST(sum(len(syms) * cnt) AS DOUBLE) /
-         |   CAST(sum(cnt) AS DOUBLE), 4) AS pieces_per_word,
-         | round(CAST(sum(list_sum(list_transform(syms, x -> length(x)))
-         |     * cnt) AS DOUBLE) /
-         |   CAST(sum(len(syms) * cnt) AS DOUBLE), 4) AS chars_per_piece
-         |FROM s3""".stripMargin,
-
-    "text_fertility" ->
-      """WITH b AS (
-        | SELECT lang,
-        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '')) AS BIGINT) AS ws,
-        |  CAST(len(list_filter(regexp_extract_all(lower(text),
-        |   '''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+'),
-        |   x -> x <> '')) AS BIGINT) AS bpe,
-        |  CAST(coalesce(list_sum(list_transform(
-        |    list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |      x -> x <> ''), x -> length(x))), 0) AS BIGINT) AS tc
-        | FROM documents)
-        |SELECT lang, CAST(sum(ws) AS BIGINT) AS n_ws,
-        | CAST(sum(bpe) AS BIGINT) AS n_bpe,
-        | round(CAST(sum(bpe) AS DOUBLE) /
-        |   CAST(greatest(sum(ws), 1) AS DOUBLE), 4) AS fertility,
-        | round(CAST(sum(tc) AS DOUBLE) /
-        |   CAST(greatest(sum(ws), 1) AS DOUBLE), 4) AS avg_tok_len
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // dim=256; add-one smoothing; ln on identical doubles both sides.
-    // Bucket convention shared with featureHashSql (h % 256 == the
-    // Spark side's fnv64 & 255 — h is the non-negative folded FNV)
-    "sample_dsir" ->
-      s"""WITH tf AS ($tfSub),
-         |hb AS (SELECT doc_id, CAST(${fnvSql("term")} % 256 AS INT)
-         |         AS bucket, tf FROM tf),
-         |tb AS (SELECT doc_id, bucket, CAST(sum(tf) AS BIGINT) AS c
-         |       FROM hb GROUP BY doc_id, bucket),
-         |rawb AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS rc
-         |         FROM tb GROUP BY bucket),
-         |tgtb AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS tc
-         |         FROM tb WHERE doc_id % 7 = 0 GROUP BY bucket),
-         |cnts AS (SELECT r.bucket, r.rc, coalesce(t.tc, 0) AS tc
-         |         FROM rawb r LEFT JOIN tgtb t USING (bucket)),
-         |tot AS (SELECT CAST(sum(rc) AS BIGINT) AS rtot,
-         |         CAST(sum(tc) AS BIGINT) AS ttot FROM cnts),
-         |lr AS (SELECT bucket,
-         |        ln(CAST(tc + 1 AS DOUBLE) / CAST(ttot + 256 AS DOUBLE)) -
-         |        ln(CAST(rc + 1 AS DOUBLE) / CAST(rtot + 256 AS DOUBLE))
-         |         AS lr
-         |       FROM cnts CROSS JOIN tot)
-         |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-         | round(sum(CAST(c AS DOUBLE) * lr) / CAST(sum(c) AS DOUBLE), 4)
-         |  AS dsir_w
-         |FROM tb JOIN lr USING (bucket) GROUP BY doc_id""".stripMargin,
-
-    "text_oov_rate" ->
-      s"""WITH dict AS (
-         |  SELECT term FROM ($tfSub) GROUP BY term HAVING count(*) >= 5),
-         |toks AS (
-         |  SELECT doc_id, term FROM ($tokensSub) WHERE term <> ''),
-         |j AS (
-         |  SELECT t.doc_id,
-         |   CASE WHEN d.term IS NULL THEN 1 ELSE 0 END AS oov
-         |  FROM toks t LEFT JOIN dict d USING (term))
-         |SELECT doc_id, count(*) AS n_tokens,
-         | CAST(sum(oov) AS BIGINT) AS n_oov,
-         | round(CAST(sum(oov) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
-         |  AS oov_rate
-         |FROM j GROUP BY doc_id""".stripMargin,
-
-    "text_distinctive" ->
-      """WITH toks AS (
-        |  SELECT lang, doc_id, unnest(list_filter(
-        |    regexp_split_to_array(lower(text), '\s+'), x -> x <> '')) AS term
-        |  FROM documents),
-        |tt AS (
-        |  SELECT lang, term, count(*) AS tf_lang FROM toks GROUP BY lang, term),
-        |dfc AS (
-        |  SELECT term, count(*) AS df_corpus
-        |  FROM (SELECT DISTINCT doc_id, term FROM toks) GROUP BY term),
-        |r AS (
-        |  SELECT lang, tt.term, tf_lang, df_corpus,
-        |   row_number() OVER (PARTITION BY lang
-        |     ORDER BY CAST(tf_lang AS DOUBLE) / df_corpus DESC, tt.term)
-        |     AS rank
-        |  FROM tt JOIN dfc ON tt.term = dfc.term)
-        |SELECT lang, term, CAST(tf_lang AS BIGINT) AS tf_lang,
-        | CAST(df_corpus AS BIGINT) AS df_corpus, CAST(rank AS INT) AS rank
-        |FROM r WHERE rank <= 3""".stripMargin,
-
-    // hash-bucket membership replayed in HUGEINT FNV; 90/5/5 buckets
-    "sample_split" ->
-      s"""WITH b AS (
-         |  SELECT lang, CAST(${fnvSql("doc_id::VARCHAR || '#split'")}
-         |    % 4294967296::HUGEINT AS BIGINT) % 100 AS b
-         |  FROM documents)
-         |SELECT CASE WHEN b < 90 THEN 'train'
-         |  WHEN b < 95 THEN 'val' ELSE 'test' END AS split,
-         | lang, CAST(count(*) AS BIGINT) AS n_docs
-         |FROM b GROUP BY split, lang""".stripMargin,
-
-    // the priority is one IEEE multiply + divide from the hashed
-    // uniform — exact-rounded ops, so both engines agree on selection
-    // and the (k+1)-th-priority threshold without any rounding tricks
-    // the uniform u = (fnv mod 2^32 + 1)/(2^32 + 1) and both ln calls
-    // run on identical doubles; rank/selection order on the UNROUNDED
-    // key with doc_id tiebreak
-    "sample_gumbel_topk" ->
-      s"""WITH f AS (
-         |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS w,
-         |   CAST((${fnvSql("doc_id::VARCHAR || '#g'")}
-         |       % 4294967296::HUGEINT) + 1 AS DOUBLE) / 4294967297.0::DOUBLE
-         |     AS u
-         |  FROM documents WHERE doc_id IS NOT NULL AND n_chars > 0),
-         |g AS (SELECT doc_id, w, ln(w) - ln(-ln(u)) AS gk FROM f),
-         |r AS (SELECT doc_id, w, gk,
-         |   CAST(row_number() OVER (ORDER BY gk DESC, doc_id) AS INT)
-         |     AS rank FROM g)
-         |SELECT rank, doc_id, w, round(gk, 4) AS gumbel_key
-         |FROM r WHERE rank <= 100""".stripMargin,
-
-    "sample_priority" ->
-      s"""WITH f AS (
-         |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS w,
-         |   CAST(n_chars AS DOUBLE) * 4294967296.0::DOUBLE /
-         |     CAST((${fnvSql("doc_id::VARCHAR || '#p'")}
-         |       % 4294967296::HUGEINT) + 1 AS DOUBLE) AS pr
-         |  FROM documents WHERE doc_id IS NOT NULL AND n_chars > 0),
-         |c AS (SELECT * FROM f ORDER BY pr DESC, doc_id LIMIT 101),
-         |m AS (SELECT CAST(count(*) AS BIGINT) AS nc, min(pr) AS mn FROM c),
-         |r AS (SELECT doc_id, w, pr,
-         |   row_number() OVER (ORDER BY pr DESC, doc_id) AS rn FROM c)
-         |SELECT doc_id, w, round(pr, 4) AS priority,
-         | round(greatest(w,
-         |   CASE WHEN m.nc <= 100 THEN 0.0::DOUBLE ELSE m.mn END), 4) AS w_est
-         |FROM r, m WHERE rn <= 100""".stripMargin,
-
-    "stats_expectations" ->
-      """WITH v(check_name, n_violations) AS (
-        | SELECT 'doc_id_not_null',
-        |   CAST(count(*) FILTER (WHERE doc_id IS NULL) AS BIGINT) FROM documents
-        | UNION ALL SELECT 'lang_in_domain',
-        |   CAST(count(*) FILTER (WHERE lang IS NULL
-        |     OR lang NOT IN ('en','de','es','fr','zh')) AS BIGINT) FROM documents
-        | UNION ALL SELECT 'n_chars_positive',
-        |   CAST(count(*) FILTER (WHERE n_chars <= 0) AS BIGINT) FROM documents
-        | UNION ALL SELECT 'text_nonempty',
-        |   CAST(count(*) FILTER (WHERE length(text) = 0) AS BIGINT) FROM documents
-        | UNION ALL SELECT 'n_chars_matches_text',
-        |   CAST(count(*) FILTER (WHERE length(text) <> n_chars) AS BIGINT) FROM documents
-        | UNION ALL SELECT 'doc_id_unique',
-        |   CAST(count(doc_id) - count(DISTINCT doc_id) AS BIGINT) FROM documents)
-        |SELECT check_name, n_violations, n_violations = 0 AS pass FROM v""".stripMargin,
-
-    // golden trace: window 00:00 = {v=1.0 (u1), v=-2.0 (u2)} -> one
-    // negative value, no unknown user; window 00:10 = {v=3.0 (u5),
-    // v=-1.0 (u1)} -> one of each; the sentinel's window never closes
-    "st_expectations" ->
-      """SELECT col0 AS w_start, CAST(col1 AS BIGINT) AS n_value_negative,
-        | CAST(col2 AS BIGINT) AS n_user_unknown
-        |FROM (VALUES ('2024-01-01 00:00:00', 1, 0),
-        | ('2024-01-01 00:10:00', 1, 1)) t""".stripMargin,
-
-    // latest-version-wins per (as_of, key), tombstones filtered after —
-    // the snapshotAsOf read replayed with a rank window
-    "k17_snapshot" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang, n_chars, 1 AS version, false AS deleted
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, 'xx', n_chars + 1000000, 2, false
-        |  FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id, lang, n_chars, 3, true
-        |  FROM documents WHERE doc_id % 97 = 0),
-        |snap AS (
-        |  SELECT a.as_of, h.doc_id, h.lang, h.n_chars, h.deleted,
-        |   row_number() OVER (PARTITION BY a.as_of, h.doc_id
-        |     ORDER BY h.version DESC) AS rn
-        |  FROM h, (VALUES (2), (3)) a(as_of)
-        |  WHERE h.version <= a.as_of)
-        |SELECT CAST(as_of AS BIGINT) AS as_of, doc_id, lang, n_chars
-        |FROM snap WHERE rn = 1 AND NOT deleted""".stripMargin,
-
-    // compacted base = latest-wins at the horizon (tombstoned keys
-    // vanish) stamped version 2, plus the untouched > 2 tail
-    "k20_vacuum" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang, n_chars, 1 AS version, false AS deleted
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, 'xx', n_chars + 1000000, 2, false
-        |  FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id, lang, n_chars, 3, true
-        |  FROM documents WHERE doc_id % 97 = 0),
-        |cb AS (
-        |  SELECT doc_id, lang, n_chars, deleted FROM (
-        |    SELECT h.*, row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY version DESC) AS rn
-        |    FROM h WHERE version <= 2)
-        |  WHERE rn = 1 AND NOT deleted)
-        |SELECT CAST(2 AS BIGINT) AS version, doc_id, lang, n_chars, deleted
-        |FROM cb
-        |UNION ALL
-        |SELECT CAST(version AS BIGINT), doc_id, lang, n_chars, deleted
-        |FROM h WHERE version > 2""".stripMargin,
-
-    // the new snapshot replayed rowwise (transform + delete filter +
-    // insert), then a null-safe full-outer diff; unchanged rows drop
-    "k18_cdc" ->
-      """WITH base AS (SELECT doc_id, lang, n_chars FROM documents),
-        |newsnap AS (
-        |  SELECT * FROM (
-        |    SELECT doc_id,
-        |     CASE WHEN doc_id % 10 = 0 THEN 'xx' ELSE lang END AS lang,
-        |     CASE WHEN doc_id % 10 = 0 THEN n_chars + 1000000
-        |          ELSE n_chars END AS n_chars
-        |    FROM base
-        |    UNION ALL
-        |    SELECT (SELECT max(doc_id) + 1 FROM base), 'new',
-        |     CAST(1 AS BIGINT))
-        |  WHERE doc_id % 101 <> 0)
-        |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-        | CASE WHEN o.doc_id IS NULL THEN 'insert'
-        |      WHEN n.doc_id IS NULL THEN 'delete'
-        |      WHEN NOT (o.lang IS NOT DISTINCT FROM n.lang
-        |            AND o.n_chars IS NOT DISTINCT FROM n.n_chars)
-        |        THEN 'update' END AS change,
-        | coalesce(n.lang, o.lang) AS lang,
-        | coalesce(n.n_chars, o.n_chars) AS n_chars
-        |FROM base o FULL OUTER JOIN newsnap n ON o.doc_id = n.doc_id
-        |WHERE (CASE WHEN o.doc_id IS NULL THEN 'insert'
-        |      WHEN n.doc_id IS NULL THEN 'delete'
-        |      WHEN NOT (o.lang IS NOT DISTINCT FROM n.lang
-        |            AND o.n_chars IS NOT DISTINCT FROM n.n_chars)
-        |        THEN 'update' END) IS NOT NULL""".stripMargin,
-
-    // level-bounded recursive expansion with UNION dedup; min(dist)
-    // per node = first-reached level, matching the frontier BFS
-    "graph_bfs" ->
-      """WITH RECURSIVE eu AS (
-        |  SELECT DISTINCT l_suppkey AS src, l_partkey + 1000000 AS dst
-        |  FROM lineitem),
-        |e AS (SELECT src, dst FROM eu UNION SELECT dst, src FROM eu),
-        |walk(node, dist) AS (
-        |  SELECT s_suppkey, 0 FROM supplier WHERE s_nationkey < 5
-        |  UNION
-        |  SELECT e.dst, w.dist + 1 FROM walk w JOIN e ON e.src = w.node
-        |  WHERE w.dist < 2)
-        |SELECT node, CAST(min(dist) AS BIGINT) AS dist
-        |FROM walk GROUP BY node""".stripMargin,
-
-    // the same edge derivation; the reverse test is a literal EXISTS
-    "graph_reciprocity" ->
-      """WITH seq AS (
-        |  SELECT l_partkey AS src,
-        |   lead(l_partkey) OVER (PARTITION BY l_orderkey
-        |     ORDER BY l_linenumber, l_partkey) AS dst
-        |  FROM lineitem),
-        |e AS MATERIALIZED (
-        |  SELECT DISTINCT src, dst FROM seq
-        |  WHERE dst IS NOT NULL AND dst <> src),
-        |r AS (SELECT CAST(count(*) AS BIGINT) AS n_reciprocal FROM e
-        |      WHERE EXISTS (SELECT 1 FROM e e2
-        |                    WHERE e2.src = e.dst AND e2.dst = e.src)),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM e)
-        |SELECT n_edges, n_reciprocal,
-        | round(CAST(n_reciprocal AS DOUBLE) / n_edges, 6) AS reciprocity
-        |FROM n CROSS JOIN r""".stripMargin,
-
-    // the identical 3 min-label rounds per direction, unrolled (the
-    // graph_kcore bounded-round contract); every round MATERIALIZED so
-    // DuckDB never re-expands the chain per reference
-    "graph_scc" ->
-      """WITH seq AS (
-        |  SELECT l_partkey AS src,
-        |   lead(l_partkey) OVER (PARTITION BY l_orderkey
-        |     ORDER BY l_linenumber, l_partkey) AS dst
-        |  FROM lineitem),
-        |e AS MATERIALIZED (
-        |  SELECT DISTINCT src, dst FROM seq
-        |  WHERE dst IS NOT NULL AND dst <> src),
-        |n AS MATERIALIZED (SELECT DISTINCT node FROM (
-        |  SELECT src AS node FROM e UNION ALL SELECT dst FROM e) u),
-        |f1 AS MATERIALIZED (SELECT node, min(label) AS label FROM (
-        |  SELECT node, node AS label FROM n
-        |  UNION ALL SELECT dst AS node, src AS label FROM e) u
-        |  GROUP BY node),
-        |f2 AS MATERIALIZED (SELECT node, min(label) AS label FROM (
-        |  SELECT node, label FROM f1
-        |  UNION ALL SELECT e.dst AS node, f1.label FROM e
-        |   JOIN f1 ON e.src = f1.node) u GROUP BY node),
-        |f3 AS MATERIALIZED (SELECT node, min(label) AS label FROM (
-        |  SELECT node, label FROM f2
-        |  UNION ALL SELECT e.dst AS node, f2.label FROM e
-        |   JOIN f2 ON e.src = f2.node) u GROUP BY node),
-        |b1 AS MATERIALIZED (SELECT node, min(label) AS label FROM (
-        |  SELECT node, node AS label FROM n
-        |  UNION ALL SELECT src AS node, dst AS label FROM e) u
-        |  GROUP BY node),
-        |b2 AS MATERIALIZED (SELECT node, min(label) AS label FROM (
-        |  SELECT node, label FROM b1
-        |  UNION ALL SELECT e.src AS node, b1.label FROM e
-        |   JOIN b1 ON e.dst = b1.node) u GROUP BY node),
-        |b3 AS MATERIALIZED (SELECT node, min(label) AS label FROM (
-        |  SELECT node, label FROM b2
-        |  UNION ALL SELECT e.src AS node, b2.label FROM e
-        |   JOIN b2 ON e.dst = b2.node) u GROUP BY node)
-        |SELECT f3.node AS node, f3.label AS f, b3.label AS b,
-        | CASE WHEN f3.label = b3.label THEN f3.label ELSE f3.node END
-        |   AS scc_id,
-        | f3.label = b3.label AS resolved
-        |FROM f3 JOIN b3 ON f3.node = b3.node""".stripMargin,
-
-    // per-(group, value) cells are distinct, so the cumulative window
-    // has no tie ambiguity; ks = max over ratios of exact longs
-    "stats_drift" -> ksDriftSql,
-
-    // the per-type KS tests → asymptotic p ≈ min(1, 2e^{−2λ²}) with
-    // λ = D·√(n_a·n_b/(n_a+n_b)), then Benjamini-Hochberg at α = 0.05:
-    // reject ranks ≤ max{k : p_(k) ≤ k·α/m}
-    "stats_fdr" ->
-      s"""WITH ks AS ($ksDriftSql),
-         |m AS (SELECT CAST(count(*) AS DOUBLE) AS m FROM ks),
-         |pp AS (SELECT event_type, ks,
-         |        least(1.0::DOUBLE, 2.0::DOUBLE * exp(-2.0::DOUBLE *
-         |          (sqrt(CAST(n_a AS DOUBLE) * n_b / (n_a + n_b)) * ks) *
-         |          (sqrt(CAST(n_a AS DOUBLE) * n_b / (n_a + n_b)) * ks)))
-         |          AS p
-         |       FROM ks),
-         |r AS (SELECT event_type, ks, p,
-         |       CAST(row_number() OVER (ORDER BY p, event_type) AS INT)
-         |         AS rank
-         |      FROM pp),
-         |km AS (SELECT coalesce(max(rank), 0) AS kmax
-         |       FROM r, m WHERE p <= rank * 0.05::DOUBLE / m)
-         |SELECT event_type, ks, round(p, 6) AS p, rank,
-         | rank <= kmax AS reject
-         |FROM r, km""".stripMargin,
-
-    // tie-group average ranks carried as 2×rank (integer-exact): r2 =
-    // 2·cum − n + 1; AUC = (ΣR2⁺ − np(np+1)) / (2·np·nn), one final
-    // double division on both engines
-    "stats_auc" ->
-      """WITH cells AS (
-        |  SELECT n_chars AS v, count(*) AS n,
-        |   sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS npos
-        |  FROM documents GROUP BY 1),
-        |r AS (
-        |  SELECT n, npos,
-        |   2*sum(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-        |     AND CURRENT ROW) - n + 1 AS r2
-        |  FROM cells)
-        |SELECT CAST(sum(npos) AS BIGINT) AS n_pos,
-        | CAST(sum(n - npos) AS BIGINT) AS n_neg,
-        | round(CAST(sum(npos*r2) - sum(npos)*(sum(npos)+1) AS DOUBLE) /
-        |       (2.0 * sum(npos) * sum(n - npos)), 6) AS auc
-        |FROM r""".stripMargin,
-
-    // fraction-cleared cell terms ((n·N − ra·cb)²/(N·ra·cb)), squared
-    // AFTER the exact-integer difference casts to double; summed by the
-    // same (a, b)-ordered fold Spark's sorted-array aggregate runs
-    "stats_chisq" ->
-      """WITH obs AS (SELECT lang AS a, source AS b, count(*) AS n
-        |             FROM documents GROUP BY 1, 2),
-        |ra AS (SELECT a, sum(n) AS ra FROM obs GROUP BY a),
-        |cb AS (SELECT b, sum(n) AS cb FROM obs GROUP BY b),
-        |tot AS (SELECT sum(n) AS nn FROM obs),
-        |grid AS (SELECT a, b, ra, cb, nn, coalesce(n, 0) AS n
-        |         FROM ra CROSS JOIN cb CROSS JOIN tot
-        |         LEFT JOIN obs USING (a, b)),
-        |terms AS (SELECT a, b,
-        |  CAST(n*nn - ra*cb AS DOUBLE) * CAST(n*nn - ra*cb AS DOUBLE)
-        |    / CAST(nn*ra*cb AS DOUBLE) AS t
-        |  FROM grid)
-        |SELECT CAST(count(*) AS INT) AS n_cells,
-        | CAST((count(DISTINCT a) - 1) * (count(DISTINCT b) - 1) AS INT)
-        |   AS dof,
-        | round(list_reduce(list_prepend(0.0::DOUBLE, list(t ORDER BY a, b)),
-        |   (acc, x) -> acc + x), 4) AS chi2
-        |FROM terms""".stripMargin,
-
-    // both medians via the exact lower-quantile_disc rule — the whole
-    // statistic is integer arithmetic
-    "stats_mad" ->
-      """WITH d AS (SELECT lang, n_chars, doc_id FROM documents),
-        |r1 AS (
-        |  SELECT lang, n_chars,
-        |   row_number() OVER (PARTITION BY lang
-        |     ORDER BY n_chars, doc_id) AS r,
-        |   count(*) OVER (PARTITION BY lang) AS n
-        |  FROM d),
-        |m AS (
-        |  SELECT lang, max(n) AS n_docs,
-        |   max(CASE WHEN r = floor((n-1) * 0.5) + 1 THEN n_chars END) AS med
-        |  FROM r1 GROUP BY lang),
-        |r2 AS (
-        |  SELECT d.lang, d.doc_id, abs(n_chars - med) AS dev, med, n_docs
-        |  FROM d JOIN m ON d.lang = m.lang),
-        |r3 AS (
-        |  SELECT lang, dev, med, n_docs,
-        |   row_number() OVER (PARTITION BY lang ORDER BY dev, doc_id) AS r,
-        |   count(*) OVER (PARTITION BY lang) AS n
-        |  FROM r2)
-        |SELECT lang, CAST(max(n_docs) AS BIGINT) AS n_docs,
-        | CAST(max(med) AS BIGINT) AS median,
-        | CAST(max(CASE WHEN r = floor((n-1) * 0.5) + 1 THEN dev END)
-        |   AS BIGINT) AS mad
-        |FROM r3 GROUP BY lang""".stripMargin,
-
-    // −Σ p·ln p replayed over the same lang-ordered cells; (−p)*ln(p)
-    // vs Spark's acc − p·ln(p): negation is IEEE-exact, identical sums
-    // Σp² folds over the source-ordered cells, mirrored element terms;
-    // 1/HHI divides the UNROUNDED fold (the engine's select order)
-    "stats_hhi" ->
-      """WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS nd,
-        |            CAST(sum(n_chars) AS BIGINT) AS nc
-        |           FROM documents GROUP BY source),
-        |g AS (SELECT CAST(count(*) AS BIGINT) AS n_sources,
-        |       CAST(sum(nd) AS BIGINT) AS td,
-        |       CAST(sum(nc) AS BIGINT) AS tc,
-        |       list(nd ORDER BY source) AS arr_d,
-        |       list(nc ORDER BY source) AS arr_c
-        |      FROM c),
-        |h AS (SELECT n_sources,
-        |   list_reduce(list_prepend(0.0::DOUBLE, list_transform(arr_d,
-        |     x -> (CAST(x AS DOUBLE) / td) * (CAST(x AS DOUBLE) / td))),
-        |     (a, b) -> a + b) AS hd,
-        |   list_reduce(list_prepend(0.0::DOUBLE, list_transform(arr_c,
-        |     x -> (CAST(x AS DOUBLE) / tc) * (CAST(x AS DOUBLE) / tc))),
-        |     (a, b) -> a + b) AS hc
-        |  FROM g)
-        |SELECT n_sources, round(hd, 6) AS hhi_docs,
-        | round(hc, 6) AS hhi_chars,
-        | round(1.0::DOUBLE / hd, 4) AS eff_sources_docs,
-        | round(1.0::DOUBLE / hc, 4) AS eff_sources_chars
-        |FROM h""".stripMargin,
-
-    // two-level entropy folds: per-prev over cur-ordered cells, then
-    // the vocabulary tier over prev-ordered rows; parallel unnests zip
-    "text_bigram_entropy" ->
-      """WITH tk AS (SELECT
-        |   list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '') AS toks
-        |  FROM documents),
-        |d2 AS (SELECT toks FROM tk WHERE len(toks) >= 2),
-        |bg AS (SELECT
-        |   unnest(list_transform(generate_series(1, len(toks) - 1),
-        |     i -> toks[i])) AS prev,
-        |   unnest(list_transform(generate_series(1, len(toks) - 1),
-        |     i -> toks[i + 1])) AS cur
-        |  FROM d2),
-        |cells AS (SELECT prev, cur, CAST(count(*) AS BIGINT) AS c
-        |          FROM bg GROUP BY 1, 2),
-        |pc AS (SELECT prev, CAST(sum(c) AS BIGINT) AS cp
-        |       FROM cells GROUP BY prev),
-        |pp AS (SELECT cells.prev AS prev, cp,
-        |   list_reduce(list_prepend(0.0::DOUBLE,
-        |     list(-(CAST(c AS DOUBLE) / cp) *
-        |          (ln(CAST(c AS DOUBLE) / cp) / ln(2.0::DOUBLE))
-        |       ORDER BY cur)),
-        |     (a, b) -> a + b) AS hp
-        |  FROM cells JOIN pc ON cells.prev = pc.prev
-        |  GROUP BY cells.prev, cp),
-        |t2 AS (SELECT CAST(sum(cp) AS BIGINT) AS n_bigrams,
-        |        CAST(count(*) AS BIGINT) AS vocab_prev FROM pp),
-        |f AS (SELECT n_bigrams, vocab_prev,
-        |   list_reduce(list_prepend(0.0::DOUBLE,
-        |     list((CAST(cp AS DOUBLE) / n_bigrams) * hp ORDER BY prev)),
-        |     (a, b) -> a + b) AS h
-        |  FROM pp CROSS JOIN t2 GROUP BY n_bigrams, vocab_prev)
-        |SELECT n_bigrams, vocab_prev, round(h, 6) AS cond_entropy_bits,
-        | round(pow(2.0::DOUBLE, h), 4) AS bg_perplexity
-        |FROM f""".stripMargin,
-
-    "stats_entropy" ->
-      """WITH c AS (SELECT source, lang, count(*) AS n
-        |           FROM documents GROUP BY 1, 2),
-        |g AS (SELECT source, CAST(sum(n) AS BIGINT) AS n_docs,
-        |       CAST(count(*) AS INT) AS n_langs,
-        |       list(n ORDER BY lang) AS arr
-        |      FROM c GROUP BY source)
-        |SELECT source, n_docs, n_langs,
-        | round(list_reduce(list_prepend(0.0::DOUBLE, list_transform(arr,
-        |   n -> -(CAST(n AS DOUBLE) / n_docs)
-        |        * ln(CAST(n AS DOUBLE) / n_docs))),
-        |   (acc, x) -> acc + x), 6) AS entropy
-        |FROM g""".stripMargin,
-
-    // from-scratch recompute: the Spark side merges base state with the
-    // delta batch's partial state without rescanning base — the hash
-    // match proves incremental == full
-    "k16_incr_agg" ->
-      """SELECT user_id, count(*) AS n, round(sum(value), 2) AS sum_v,
-        | min(value) AS min_v, max(value) AS max_v
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // bin assignment replayed: per-file row counts, (size desc, file
-    // asc) order, exclusive-running-sum div target; n_files = 1 is the
-    // pinned one-file-per-bin rewrite invariant
-    "k13_compaction" ->
-      """WITH g AS (
-        |  SELECT event_id % 64 AS g, count(*) AS sz FROM events GROUP BY 1),
-        |b AS (
-        |  SELECT g, CAST((CAST(sum(sz) OVER (ORDER BY sz DESC, g ASC)
-        |    AS BIGINT) - sz) // 1500 AS BIGINT) AS bin
-        |  FROM g),
-        |r AS (SELECT e.event_id, b.bin FROM events e
-        |      JOIN b ON e.event_id % 64 = b.g)
-        |SELECT bin, CAST(1 AS BIGINT) AS n_files, count(*) AS n_rows,
-        | CAST(sum(event_id) AS BIGINT) AS sum_id,
-        | min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM r GROUP BY bin""".stripMargin,
-
-    "k10_seqfile_roundtrip" ->
-      "SELECT doc_id, text FROM documents",
-
-    "k12_partitioned_scan" ->
-      """SELECT event_id, round(value, 2) AS value
-        |FROM events WHERE event_type = 'click'""".stripMargin,
-
-    // generation split is invisible to the logical result — the oracle
-    // replays the slice straight off the base table
-    "k32_partition_evolution" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-        | CAST(count(*) AS BIGINT) AS n, round(sum(value), 2) AS sum_v
-        |FROM events WHERE hour(ts) < 6
-        | AND ts < (SELECT date_trunc('day', min(ts)) + INTERVAL 3 DAY
-        |           FROM events)
-        |GROUP BY 1, 2""".stripMargin,
-
-    // Hadoop-VInt length rule replayed arithmetically: one byte for
-    // 0..127, else 1 marker + 1/2/3/4 big-endian magnitude bytes
-    "k11_vbyte_roundtrip" ->
-      s"""WITH tf AS ($tfSub),
-         |d AS (SELECT term, row_number() OVER (ORDER BY df DESC, term ASC) AS id
-         |      FROM (SELECT term, count(*) AS df FROM tf
-         |            GROUP BY term HAVING count(*) >= 5) z),
-         |ids AS (SELECT DISTINCT tf.doc_id, d.id FROM tf JOIN d USING (term)),
-         |per AS (SELECT doc_id, count(*) AS n,
-         |  CAST(sum(CASE WHEN id <= 127 THEN 1 WHEN id < 256 THEN 2
-         |    WHEN id < 65536 THEN 3 WHEN id < 16777216 THEN 4 ELSE 5 END)
-         |    AS BIGINT) AS idb
-         |  FROM ids GROUP BY doc_id)
-         |SELECT ids.doc_id,
-         | per.idb + CASE WHEN per.n <= 127 THEN 1 WHEN per.n < 256 THEN 2
-         |   WHEN per.n < 65536 THEN 3 ELSE 4 END AS n_bytes,
-         | ids.id
-         |FROM ids JOIN per USING (doc_id)""".stripMargin,
-
-    "k9_upsert" ->
-      """WITH base AS (SELECT doc_id, lang, n_chars FROM documents),
-        |upd AS (
-        |  SELECT doc_id, 'xx' AS lang, n_chars + 1000000 AS n_chars
-        |  FROM base WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT (SELECT max(doc_id) + 1 FROM base), 'new', 1)
-        |SELECT COALESCE(u.doc_id, b.doc_id) AS doc_id,
-        | COALESCE(u.lang, b.lang) AS lang,
-        | COALESCE(u.n_chars, b.n_chars) AS n_chars
-        |FROM base b FULL OUTER JOIN upd u ON b.doc_id = u.doc_id""".stripMargin,
-
-    // full tie-break (price desc, orderkey, linenumber) makes row_number
-    // deterministic on both engines
-    "o7_topk_group" ->
-      """SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
-        | CAST(rn AS INT) AS rn
-        |FROM (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
-        |   row_number() OVER (PARTITION BY l_suppkey
-        |     ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
-        |  FROM lineitem) t
-        |WHERE rn <= 3""".stripMargin,
-
-    // per-group KMV with the same hash32 replication as sketch_kmv
-    "sketch_kmv_grouped" ->
-      s"""WITH hu AS (
-         |  SELECT DISTINCT event_type, ${hash32Sql("(user_id)")} AS h
-         |  FROM events WHERE user_id IS NOT NULL),
-         |r AS (
-         |  SELECT event_type, h,
-         |   row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-         |  FROM hu)
-         |SELECT event_type, count(*) AS k_used, max(h) AS kth_hash,
-         | CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE)
-         |      ELSE round((count(*) - 1) * 4294967296.0 / max(h), 2)
-         | END AS estimate
-         |FROM r WHERE rn <= 64 GROUP BY event_type""".stripMargin,
-
-    // full CMS replication: depth 3 / width 256 counter matrix from the
-    // seed-suffixed FNV family, estimate = min over the 3 cells
-    "sketch_countmin" ->
-      s"""WITH seeds AS (SELECT unnest(generate_series(0, 2)) AS j),
-         |h AS (
-         |  SELECT user_id, j,
-         |   ${fnvSql("CAST(user_id AS VARCHAR) || '#' || j")} % 256 AS bucket
-         |  FROM events, seeds),
-         |sketch AS (SELECT j, bucket, count(*) AS cnt FROM h GROUP BY j, bucket),
-         |cpos AS (SELECT DISTINCT user_id, j, bucket FROM h),
-         |est AS (
-         |  SELECT c.user_id, min(s.cnt) AS n_est
-         |  FROM cpos c JOIN sketch s ON c.j = s.j AND c.bucket = s.bucket
-         |  GROUP BY c.user_id),
-         |exact AS (SELECT user_id, count(*) AS n_exact FROM events GROUP BY user_id)
-         |SELECT e.user_id, x.n_exact, CAST(e.n_est AS BIGINT) AS n_est
-         |FROM est e JOIN exact x ON e.user_id = x.user_id""".stripMargin,
-
-    // bit-exact bloom replication: a big-side key passes iff ALL its 3
-    // positions are set by some keep-key — false positives reproduce
-    // from-scratch full join — the delta algebra must be invisible
-    "k33_ivm_join" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,
-        | round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    // the naive quadratic levenshtein join — symmetric-delete blocking
-    // must be invisible in the output
-    "j8_fuzzy_join" ->
-      """WITH clean AS (
-        |  SELECT c_custkey AS clean_key, c_name AS clean_name
-        |  FROM customer WHERE c_custkey % 2 = 0),
-        |dirty AS (
-        |  SELECT c_custkey AS dirty_key,
-        |   substr(c_name, 1, length(c_name) - 2) ||
-        |     substr(c_name, length(c_name), 1) AS dirty_name
-        |  FROM customer WHERE c_custkey % 2 = 1)
-        |SELECT dirty_key, clean_key,
-        | CAST(levenshtein(dirty_name, clean_name) AS INT) AS dist
-        |FROM dirty JOIN clean
-        | ON levenshtein(dirty_name, clean_name) <= 1""".stripMargin,
-
-    "j7_bloom_prune" ->
-      s"""WITH seeds AS (SELECT unnest(generate_series(0, 2)) AS i),
-         |spos AS (
-         |  SELECT DISTINCT
-         |   ${fnvSql("CAST(s_suppkey AS VARCHAR) || '#' || i")} % 4096 AS pos
-         |  FROM supplier, seeds WHERE s_nationkey < 5),
-         |bk AS (SELECT DISTINCT l_suppkey FROM lineitem),
-         |bh AS (
-         |  SELECT l_suppkey,
-         |   ${fnvSql("CAST(l_suppkey AS VARCHAR) || '#' || i")} % 4096 AS pos
-         |  FROM bk, seeds),
-         |chk AS (SELECT l_suppkey, pos IN (SELECT pos FROM spos) AS hit FROM bh),
-         |pass AS (SELECT l_suppkey FROM chk GROUP BY l_suppkey HAVING bool_and(hit))
-         |SELECT l.l_returnflag, count(*) AS n_rows,
-         | round(sum(l.l_quantity), 2) AS sum_qty,
-         | count(DISTINCT l.l_suppkey) AS n_supp
-         |FROM lineitem l JOIN pass p ON l.l_suppkey = p.l_suppkey
-         |GROUP BY l.l_returnflag""".stripMargin,
-
-    // Morton replication: the 4-step spread-bits chain per dimension,
-    // day via epoch_us floor-div (tz-free, matches Spark's CAST AS LONG)
-    "layout_zorder" ->
-      """WITH b0 AS (
-        |  SELECT user_id, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   user_id & 65535 AS x,
-        |   (epoch_us(ts) // 1000000 // 86400) & 65535 AS y
-        |  FROM events),
-        |b1 AS (SELECT *, ((x | (x << 8)) & 16711935) AS x1,
-        |  ((y | (y << 8)) & 16711935) AS y1 FROM b0),
-        |b2 AS (SELECT *, ((x1 | (x1 << 4)) & 252645135) AS x2,
-        |  ((y1 | (y1 << 4)) & 252645135) AS y2 FROM b1),
-        |b3 AS (SELECT *, ((x2 | (x2 << 2)) & 858993459) AS x3,
-        |  ((y2 | (y2 << 2)) & 858993459) AS y3 FROM b2),
-        |b4 AS (SELECT *, ((x3 | (x3 << 1)) & 1431655765) AS x4,
-        |  ((y3 | (y3 << 1)) & 1431655765) AS y4 FROM b3),
-        |zz AS (SELECT user_id, day, (x4 | (y4 << 1)) AS z FROM b4)
-        |SELECT z // 256 AS zbucket, count(*) AS n_rows,
-        | min(user_id) AS min_user, max(user_id) AS max_user,
-        | min(day) AS min_day, max(day) AS max_day,
-        | min(z) AS min_z, max(z) AS max_z
-        |FROM zz GROUP BY 1""".stripMargin,
-
-    // hand-traced: Foo_bar#x + foo_bar normalize-merge (17 = 10+7, daily
-    // 15@d0 + 3@d2); Old_name (4@d1) redirect-resolves into Baz (2@d1) →
-    // 6@d1; de.z filtered; 'Other' has no pageviews → inner join drops it
-    "j6_wikistats" ->
-      """SELECT CAST(col0 AS BIGINT) AS page_id, col1 AS title,
-        | CAST(col2 AS BIGINT) AS total, CAST(col3 AS INT) AS day,
-        | CAST(col4 AS INT) AS views
-        |FROM (VALUES
-        | (100, 'Foo_bar', 17, 0, 15), (100, 'Foo_bar', 17, 1, 0),
-        | (100, 'Foo_bar', 17, 2, 3), (100, 'Foo_bar', 17, 3, 0),
-        | (100, 'Foo_bar', 17, 4, 0),
-        | (200, 'Baz', 6, 0, 0), (200, 'Baz', 6, 1, 6), (200, 'Baz', 6, 2, 0),
-        | (200, 'Baz', 6, 3, 0), (200, 'Baz', 6, 4, 0)) t""".stripMargin,
-
-    "k1_tsv_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation",
-
-    "k5_json_roundtrip" ->
-      "SELECT r_regionkey, r_name FROM region",
-
-    "k7_dict_roundtrip" ->
-      s"""SELECT term, CAST(row_number() OVER (ORDER BY df DESC, term ASC) AS INT) AS id,
-         | df, cf
-         |FROM (SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
-         |      FROM ($tfSub) GROUP BY term HAVING count(*) >= 5)""".stripMargin,
-
-    "s10_time_window_scan" ->
-      """SELECT CAST(col0 AS BIGINT) AS rev_id
-        |FROM (VALUES (101), (102)) t""".stripMargin,
-
-    "k2_parquet_roundtrip" ->
-      "SELECT r_regionkey, r_name FROM region",
-
-    "k8_orc_roundtrip" ->
-      "SELECT c_custkey, c_mktsegment FROM customer",
-
-    "k6_compressed_sink" ->
-      "SELECT n_nationkey, n_name FROM nation",
-
-    "s17_file_names" ->
-      "SELECT CAST(3 AS BIGINT) AS n_files",
-
-    "s21_warc_scan" ->
-      """SELECT col0 AS record_id, col1 AS warc_type, col2 AS trec_id,
-        | col3 AS body_md5, CAST(col4 AS BIGINT) AS content_length
-        |FROM (VALUES
-        | ('<urn:uuid:0000-info>', 'warcinfo', CAST(NULL AS VARCHAR),
-        |  '6d1d3f3c70f22eaa2c92cb36cc02217a', 61),
-        | ('<urn:uuid:0001-resp>', 'response', 'clueweb09-en0000-00-00001',
-        |  '21dff58ccf724359bca345fc7af03d4a', 91),
-        | ('<urn:uuid:0002-resp>', 'response', 'clueweb09-en0000-00-00002',
-        |  'b2b70db8b4f7280f294306d2475ef75f', 140),
-        | ('<urn:uuid:0003-meta>', 'metadata', 'clueweb09-en0000-00-00002',
-        |  'bc07a97108a08612a6cc4531bc5c5056', 18)) t""".stripMargin,
-
-    "s19_split_index" ->
-      """SELECT CAST(60 AS BIGINT) AS n_offsets, CAST(60 AS BIGINT) AS n_distinct,
-        | TRUE AS non_negative""".stripMargin,
-
-    "st_sessions" ->
-      """SELECT CAST(col0 AS BIGINT) AS user_id, CAST(col1 AS BIGINT) AS start_ms,
-        | CAST(col2 AS BIGINT) AS end_ms, CAST(col3 AS INT) AS n_events,
-        | CAST(col4 AS DOUBLE) AS sum_value
-        |FROM (VALUES
-        | (1, 1700000000000, 1700000030000, 2, 3.0),
-        | (2, 1700000010000, 1700000010000, 1, 4.0)) t""".stripMargin,
-
-    // event-time variant: watermark-closed, so the batch-2 singletons
-    // also emit (the sentinel pushes the watermark past their gap)
-    "st_sessions_event" ->
-      """SELECT CAST(col0 AS BIGINT) AS user_id, CAST(col1 AS BIGINT) AS start_ms,
-        | CAST(col2 AS BIGINT) AS end_ms, CAST(col3 AS INT) AS n_events,
-        | CAST(col4 AS DOUBLE) AS sum_value
-        |FROM (VALUES
-        | (1, 1700000000000, 1700000030000, 2, 3.0),
-        | (1, 1700003600000, 1700003600000, 1, 5.0),
-        | (2, 1700000010000, 1700000010000, 1, 4.0),
-        | (2, 1700003600000, 1700003600000, 1, 6.0)) t""".stripMargin,
-
-    // streaming near-dup dedup: the all-bands variant (doc 3) and the
-    // shared-band edit (doc 4) drop against the live doc 1; doc 6
-    // re-emits after watermark eviction; doc 7's late replay never lands
-    "st_neardup" ->
-      """SELECT CAST(col0 AS BIGINT) AS doc_id, CAST(col1 AS BIGINT) AS ts_ms
-        |FROM (VALUES
-        | (1, 0),
-        | (2, 10000),
-        | (5, 40000),
-        | (6, 3600000)) t""".stripMargin,
-
-    // streaming substring dedup: the novel-window stream — doc 1's two
-    // windows and doc 2's one admit; doc 3 (full dup) contributes
-    // nothing; doc 4 emits only its novel tail window; doc 6 re-admits
-    // both windows after eviction; doc 7's late replay never lands
-    "st_substring" ->
-      """SELECT CAST(col0 AS BIGINT) AS doc_id, CAST(col1 AS BIGINT) AS win_idx,
-        | CAST(col2 AS BIGINT) AS ts_ms
-        |FROM (VALUES
-        | (1, 0, 0),
-        | (1, 1, 0),
-        | (2, 0, 10000),
-        | (4, 1, 30000),
-        | (6, 0, 3600000),
-        | (6, 1, 3600000)) t""".stripMargin,
-
-    // composed streaming curation: the admitted stream — gate-rejected
-    // (3, 7), exact-dup (2) and near-dup (4) rows never land; the
-    // original re-admits (6) after watermark eviction
-    "st_curate" ->
-      """SELECT CAST(col0 AS BIGINT) AS doc_id, CAST(col1 AS BIGINT) AS ts_ms,
-        | CAST(strlen(col2) AS INT) AS n_chars
-        |FROM (VALUES
-        | (1, 0, 'the quick brown fox jumps over the lazy dog'),
-        | (5, 40000, 'completely unrelated payload about parquet row groups'),
-        | (6, 3600000, 'the quick brown fox jumps over the lazy dog')) t""".stripMargin,
-
-    // streaming dedup: first row per key while in-horizon; key 2
-    // re-emits after watermark eviction; key 3's late replay never lands
-    "st_dedup" ->
-      """SELECT CAST(col0 AS BIGINT) AS user_id, CAST(col1 AS BIGINT) AS ts_ms,
-        | CAST(col2 AS DOUBLE) AS v
-        |FROM (VALUES
-        | (1, 0, 1.0),
-        | (2, 10000, 2.0),
-        | (3, 40000, 3.0),
-        | (2, 3600000, 7.0)) t""".stripMargin,
-
-    // stream-stream interval join: clicks within 30 min of the same
-    // user's impression; the 39:50-delay click matches nothing
-    "st_stream_join" ->
-      """SELECT CAST(col0 AS BIGINT) AS user_id, CAST(col1 AS BIGINT) AS imp_ms,
-        | CAST(col2 AS BIGINT) AS click_ms, CAST(col3 AS DOUBLE) AS imp_value,
-        | CAST(col4 AS DOUBLE) AS click_value
-        |FROM (VALUES
-        | (1, 0, 300000, 100.0, 1.0),
-        | (1, 0, 600000, 100.0, 2.0)) t""".stripMargin,
-
-    "text_scrub" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT CAST(col0 AS BIGINT), col1 FROM (VALUES
-        |   (9000001, 'contact bob@example.com or https://ex.com/a?b=1 ref 55512345678 end'),
-        |   (9000002, 'no pii here at all')) t(col0, col1))
-        |SELECT doc_id,
-        | regexp_replace(regexp_replace(regexp_replace(text,
-        |   'https?://[^\s]+', '<URL>', 'g'),
-        |   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |   '[0-9]{7,}', '<NUM>', 'g') AS scrubbed
-        |FROM base""".stripMargin,
-
-    "text_repetition" ->
-      """WITH base AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT CAST(col0 AS BIGINT), col1 FROM (VALUES
-        |   (9000001, 'spam spam spam spam spam spam'),
-        |   (9000002, 'all words here are fully distinct tokens')) t(col0, col1)),
-        |arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM base),
-        |sh AS (
-        |  SELECT doc_id,
-        |   list_transform(generate_series(1, len(a) - 2),
-        |     i -> a[i] || ' ' || a[i+1] || ' ' || a[i+2]) AS s,
-        |   len(a) AS n
-        |  FROM arrs)
-        |SELECT doc_id,
-        | CASE WHEN n < 3 THEN 0.0
-        |      ELSE round(1.0 - len(list_distinct(s)) * 1.0 / len(s), 4)
-        | END AS rep_ratio
-        |FROM sh""".stripMargin,
-
-    "text_surprisal" ->
-      s"""WITH tf AS ($tfSub),
-         |cf AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cf FROM tf GROUP BY term),
-         |g AS (SELECT CAST(sum(tf) AS BIGINT) AS total FROM tf)
-         |SELECT doc_id,
-         | round(sum(tf.tf * -log2(CAST(cf.cf AS DOUBLE) / g.total)) /
-         |   CAST(sum(tf.tf) AS DOUBLE), 4) AS mean_surprisal
-         |FROM tf JOIN cf USING (term) CROSS JOIN g
-         |GROUP BY doc_id""".stripMargin,
-
-    "sample_stratified" ->
-      s"""SELECT lang, count(*) AS n_sampled FROM documents
-         |WHERE ${hash32Sql("(doc_id + 1)")} % 100 <
-         |  CASE WHEN lang = 'en' THEN 30 ELSE 10 END
-         |GROUP BY lang""".stripMargin,
-
-    // N_h·S_h weights from the same exact co-moments, lang-ordered fold
-    // for the normalizer, floored allocations
-    "sample_neyman" ->
-      """WITH a AS (
-        |  SELECT lang, count(*) AS nh, sum(n_chars) AS sx,
-        |   sum(n_chars*n_chars) AS sxx
-        |  FROM documents GROUP BY lang),
-        |wh AS (
-        |  SELECT lang, nh, sd, nh * sd AS wt FROM (
-        |    SELECT lang, nh,
-        |     sqrt(CAST(sxx*nh - sx*sx AS DOUBLE) /
-        |          CAST(nh*(nh-1) AS DOUBLE)) AS sd
-        |    FROM a) t),
-        |tot AS (
-        |  SELECT list_reduce(list_prepend(0.0::DOUBLE,
-        |    list(wt ORDER BY lang)), (acc, x) -> acc + x) AS tw
-        |  FROM wh)
-        |SELECT lang, CAST(nh AS BIGINT) AS n_rows, round(sd, 4) AS stddev,
-        | CAST(floor(1000.0::DOUBLE * wt / tw) AS BIGINT) AS alloc
-        |FROM wh CROSS JOIN tot""".stripMargin,
-
-    // longest-first greedy fill replayed with the same cumulative
-    // window (unique (n_tokens desc, doc_id) order → RANGE == ROWS)
-    // the identical one-pass capped-threshold rule, all integer;
-    // remainder to the first residue uncapped sources in rank order
-    "curate_mix_waterfill" ->
-      """WITH a AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS avail
-        |           FROM documents GROUP BY source),
-        |t AS (SELECT CAST(sum(avail) AS BIGINT) AS total,
-        |       CAST(count(*) AS BIGINT) AS ns FROM a),
-        |r AS (SELECT source, avail, (total * 9) // 10 AS budget, ns,
-        |   row_number() OVER (ORDER BY avail, source) AS rk,
-        |   coalesce(sum(avail) OVER (ORDER BY avail, source
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |     AS cumprev
-        |  FROM a CROSS JOIN t),
-        |fl AS (SELECT source, avail, budget, ns, rk,
-        |   avail * (ns - rk + 1) <= budget - cumprev AS capped FROM r),
-        |cp AS (SELECT
-        |   CAST(sum(CASE WHEN capped THEN avail ELSE 0 END) AS BIGINT)
-        |     AS cap_sum,
-        |   CAST(sum(CASE WHEN capped THEN 1 ELSE 0 END) AS BIGINT)
-        |     AS n_capped
-        |  FROM fl)
-        |SELECT source, avail, budget, capped,
-        | CASE WHEN capped OR ns - n_capped = 0 THEN avail
-        |  ELSE (budget - cap_sum) // (ns - n_capped) +
-        |   CASE WHEN rk - n_capped <= (budget - cap_sum) % (ns - n_capped)
-        |        THEN 1 ELSE 0 END
-        | END AS alloc
-        |FROM fl CROSS JOIN cp""".stripMargin,
-
-    "curate_budget" ->
-      """WITH d AS (
-        |  SELECT lang, doc_id,
-        |   CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT lang, doc_id, n_tokens,
-        |   sum(n_tokens) OVER (PARTITION BY lang
-        |     ORDER BY n_tokens DESC, doc_id) AS cum
-        |  FROM d)
-        |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(max(cum) AS BIGINT) AS n_tokens_kept
-        |FROM c WHERE cum <= 2000 GROUP BY lang""".stripMargin,
-
-    // the composed release manifest: dedup keep-list ⋈ quality/lang
-    // gate, split by the replayed 90/5/5 hash rule
-    "curate_release" ->
-      s"""WITH keep AS (
-         |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-         |qual AS (
-         |  SELECT doc_id, lang,
-         |   CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |    x -> x <> '')) AS INT) AS n_tokens
-         |  FROM documents),
-         |lang AS ($langIdSql),
-         |kept AS (
-         |  SELECT q.doc_id, q.lang, q.n_tokens
-         |  FROM keep k JOIN qual q USING (doc_id) JOIN lang USING (doc_id)
-         |  WHERE n_tokens >= 20 AND pred_lang = 'en'),
-         |sp AS (
-         |  SELECT *, CAST(${fnvSql("doc_id::VARCHAR || '#split'")}
-         |    % 4294967296::HUGEINT AS BIGINT) % 100 AS b
-         |  FROM kept)
-         |SELECT CASE WHEN b < 90 THEN 'train'
-         |  WHEN b < 95 THEN 'val' ELSE 'test' END AS split,
-         | count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-         | CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-         | min(doc_id) AS min_id, max(doc_id) AS max_id
-         |FROM sp GROUP BY 1""".stripMargin,
-
-    "curate_docs" ->
-      s"""WITH keep AS (
-         |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-         |qual AS (
-         |  SELECT doc_id, CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |    x -> x <> '')) AS INT) AS n_tokens
-         |  FROM documents),
-         |lang AS ($langIdSql)
-         |SELECT k.doc_id, n_tokens, pred_lang
-         |FROM keep k JOIN qual USING (doc_id) JOIN lang USING (doc_id)
-         |WHERE n_tokens >= 20 AND pred_lang = 'en'""".stripMargin
-  )
 }

@@ -1,0 +1,1382 @@
+package graft
+package queries
+
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import graft.operators._
+import QueryKit._
+
+/** Corpus curation, sampling and sequence packing (curate*, sample*,
+  * pack*): one [[Query]] record per query. */
+private[graft] object Curation {
+
+  val all: Seq[Query] = Seq(
+    Query("sample_split_leakfree", (s, d) => {
+      // leakage-free train/val/test split: a near-dup CLUSTER lands in
+      // exactly one split — membership hashes the cluster's canonical
+      // representative, not the doc, so a test doc can never have a
+      // near-duplicate in train (the classic eval-contamination bug a
+      // doc-keyed split like sample_split permits). Same 90/5/5 hash
+      // convention as sample_split; singletons hash their own id.
+      val docs = t(s, d, "documents")
+      val canon = DedupOps.canonicalKeepList(docs, "doc_id",
+        dedupLabels05(s, d))
+      val b = pmod(expr("fnv64(concat(cast(canonical as string), '#split'))")
+        .bitwiseAND(lit(4294967295L)), lit(100L))
+      canon.select(col("doc_id"), col("canonical"),
+        when(b < 90, "train").when(b < 95, "val").otherwise("test")
+          .as("split"))
+    },
+      // component representative = dedup_canonical's `canonical`; the
+      // split hash is sample_split's convention applied to it
+      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
+         |edges AS (
+         |  SELECT id_a AS u, id_b AS v FROM p
+         |  UNION SELECT id_b, id_a FROM p),
+         |reach AS (
+         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
+         |  UNION
+         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u),
+         |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
+         |canon AS (
+         |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS canonical
+         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.node),
+         |b AS (
+         |  SELECT doc_id, canonical,
+         |   CAST(${fnvSql("canonical::VARCHAR || '#split'")}
+         |     % 4294967296::HUGEINT AS BIGINT) % 100 AS b
+         |  FROM canon)
+         |SELECT doc_id, canonical,
+         | CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val'
+         |  ELSE 'test' END AS split
+         |FROM b""".stripMargin,
+      sharesStage = true),
+
+    Query("curate_e2e", (s, d) => {
+      // the full curation decision table — every document gets exactly
+      // one verdict by fixed precedence: quality floor → benchmark
+      // contamination (integer threshold: 2·hits ≥ grams ⟺ frac ≥ 0.5,
+      // no rounding boundary) → exact-dup loser → near-dup non-
+      // canonical → train/val/test hash split. The one relation a
+      // downstream trainer consumes; each stage is the already-gated
+      // operator, composed
+      // the document relation feeds four gate subtrees (quality base,
+      // contamination, exact dedup, near-dup CC) — materialize ONE
+      // tokenize pass alongside the scan and let every stage read it
+      // (the FromToks seams; r12: tokenizing per stage cost ~1s at
+      // sf0.1). LAZY checkpoint: the builder is sequential — the first
+      // CC-round job materializes the blocks, nothing races
+      val docs = t(s, d, "documents")
+        .select(col("doc_id"), col("text"),
+          TermOps.tokens(col("text")).as("toks"))
+        .localCheckpoint(false)
+      val base = docs.select(col("doc_id"),
+        (size(col("toks")) < 20).as("low_q"),
+        pmod(expr("fnv64(concat(cast(doc_id as string), '#split'))")
+          .bitwiseAND(lit(4294967295L)), lit(100L)).as("b"))
+      val contam = TextAnalysisOps.overlapFractionFromToks(docs, "doc_id",
+          "toks", docs.filter(col("doc_id") % 97 === 0), "toks", n = 8)
+        .select(col("doc_id"),
+          (col("n_hits") * 2 >= col("n_grams")).as("contam"))
+      val exactKeep = DedupOps.exactGroups(docs, "doc_id", "text")
+        .select(col("keep_id").as("doc_id"), lit(true).as("e_keep"))
+      // near-dup verdicts read the process-shared jaccard-0.5 CC frame
+      // (dedupLabels05), exactly as dedup_canonical / sample_split_
+      // leakfree do: the prefix filter is LOSSLESS, so the pair set is
+      // identical by construction to curateNearDupPairs(docs) — sharing
+      // moves cost only, never results (r15 judge item 2; the rebuilt
+      // fixpoint was the suite's #1 row at 6.6 s clean-probe). The
+      // curateNearDupPairs seam stays (Round12Spec pins its plan; it
+      // remains the documented stage of the composition).
+      val nearKeep = DedupOps.canonicalKeepList(docs, "doc_id",
+          dedupLabels05(s, d))
+        .select(col("doc_id"), col("keep").as("n_keep"))
+      base
+        .join(contam, Seq("doc_id"), "left_outer")
+        .join(exactKeep, Seq("doc_id"), "left_outer")
+        .join(nearKeep, Seq("doc_id"))
+        .select(col("doc_id"),
+          when(col("low_q"), "low_quality")
+            .when(coalesce(col("contam"), lit(false)), "contaminated")
+            .when(col("e_keep").isNull, "dup_exact")
+            .when(!col("n_keep"), "dup_near")
+            .when(col("b") < 90, "train")
+            .when(col("b") < 95, "val")
+            .otherwise("test").as("decision"))
+    },
+      // the full decision table: every stage is its own gate's SQL,
+      // composed under one precedence CASE; contamination threshold is
+      // the integer form 2·hits ≥ grams (no rounding boundary)
+      s"""WITH RECURSIVE
+         |toks AS (
+         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
+         |    x -> x <> '') AS a
+         |  FROM documents),
+         |g AS (
+         |  SELECT DISTINCT doc_id, array_to_string(a[i:i+7], ' ') AS g
+         |  FROM toks, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
+         |  WHERE len(a) >= 8),
+         |bm AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
+         |cf AS (
+         |  SELECT g.doc_id, count(*) AS ng, count(bm.g) AS nh
+         |  FROM g LEFT JOIN bm USING (g) GROUP BY g.doc_id),
+         |ekk AS (
+         |  SELECT doc_id, true AS e_keep FROM
+         |   (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text))),
+         |p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
+         |edges AS (
+         |  SELECT id_a AS u, id_b AS v FROM p
+         |  UNION SELECT id_b, id_a FROM p),
+         |reach AS (
+         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) tt
+         |  UNION
+         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u),
+         |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
+         |sb AS (
+         |  SELECT doc_id, CAST(${fnvSql("doc_id::VARCHAR || '#split'")}
+         |    % 4294967296::HUGEINT AS BIGINT) % 100 AS b
+         |  FROM documents)
+         |SELECT d.doc_id,
+         | CASE WHEN len(t.a) < 20 THEN 'low_quality'
+         |  WHEN coalesce(cf.nh * 2 >= cf.ng, false) THEN 'contaminated'
+         |  WHEN ekk.e_keep IS NULL THEN 'dup_exact'
+         |  WHEN d.doc_id <> coalesce(comp.component, d.doc_id) THEN 'dup_near'
+         |  WHEN sb.b < 90 THEN 'train'
+         |  WHEN sb.b < 95 THEN 'val'
+         |  ELSE 'test' END AS decision
+         |FROM documents d
+         |JOIN toks t USING (doc_id)
+         |LEFT JOIN cf USING (doc_id)
+         |LEFT JOIN ekk USING (doc_id)
+         |LEFT JOIN comp ON d.doc_id = comp.node
+         |JOIN sb USING (doc_id)""".stripMargin,
+      sharesStage = true),
+
+    Query("pack_sequences", (s, d) =>
+      // per-shard token-budget sequence packing (training-data prep);
+      // shard = source so packing parallelizes by shard, never a global
+      // single-partition window
+      PackOps.packSequences(t(s, d, "documents"), "doc_id", "text",
+        "source", budget = 2048),
+      """WITH t AS (
+        |  SELECT source AS shard, doc_id,
+        |   CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |     x -> x <> '')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |o AS (
+        |  SELECT shard, doc_id, n_tokens,
+        |   CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
+        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+        |    AS tok_start
+        |  FROM t)
+        |SELECT shard, doc_id, n_tokens, tok_start,
+        | tok_start // 2048 AS seq_id
+        |FROM o""".stripMargin),
+
+    Query("pack_chunks", (s, d) =>
+      // sliding-window chunking (RAG / long-context windows): 64-token
+      // windows advancing by 48 (16-token overlap), tail covered by the
+      // start grid; pure map + generator — zero exchanges (PlanSpec pin)
+      PackOps.chunkWindows(t(s, d, "documents"), "doc_id", "text",
+        winTokens = 64, strideTokens = 48),
+      // win=64 stride=48; DuckDB list slice tk[a:b] is 1-based inclusive
+      // and clamps past the end, matching Spark's slice(toks, start, len)
+      """WITH toks AS (
+        |  SELECT doc_id,
+        |   list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |     x -> x <> '') AS tk
+        |  FROM documents),
+        |base AS (
+        |  SELECT doc_id, tk, len(tk) AS n FROM toks WHERE len(tk) > 0),
+        |starts AS (
+        |  SELECT doc_id, tk,
+        |   unnest(range(0, (greatest(n - 64, 0) + 47) // 48 + 1)) AS i
+        |  FROM base)
+        |SELECT doc_id, CAST(i AS INT) AS chunk_idx,
+        | CAST(i * 48 AS INT) AS tok_start,
+        | CAST(len(tk[i*48+1 : i*48+64]) AS INT) AS n_tokens,
+        | array_to_string(tk[i*48+1 : i*48+64], ' ') AS chunk_text
+        |FROM starts""".stripMargin),
+
+    Query("pack_shards", (s, d) =>
+      // balanced training-shard manifests: snake (boustrophedon) deal
+      // over the size-descending EXACT rank — the LPT approximation a
+      // distributed engine can run; the rank comes from the compressed-
+      // histogram two-phase (PackOps.exactRank), so no global-sort
+      // window ever owns the corpus. Per-shard totals are the artifact
+      PackOps.snakeShards(t(s, d, "documents"), "doc_id", "n_chars",
+          nShards = 8)
+        .groupBy(col("shard"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("size")).as("sum_chars"),
+          min(col("size")).as("min_chars"),
+          max(col("size")).as("max_chars")),
+      // snake deal over the size-descending exact rank; the oracle's
+      // one-window row_number is the semantics the distributed two-phase
+      // rank must reproduce bit-for-bit
+      """WITH r AS (
+        |  SELECT doc_id, n_chars,
+        |   row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rk
+        |  FROM documents),
+        |a AS (SELECT n_chars, (rk-1) // 8 AS p, (rk-1) % 8 AS q FROM r)
+        |SELECT CAST(CASE WHEN p % 2 = 0 THEN q ELSE 7 - q END AS INT) AS shard,
+        | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        | min(n_chars) AS min_chars, max(n_chars) AS max_chars
+        |FROM a GROUP BY 1""".stripMargin),
+
+    Query("sample_curriculum", (s, d) => {
+      // curriculum schedule: ntile(4) phases over (n_chars, doc_id)
+      // difficulty order with SQL-standard tile sizing, computed from
+      // the distributed exact rank instead of a single-task ntile
+      // window; the per-phase language mix is the designer's audit
+      val docs = t(s, d, "documents")
+      PackOps.curriculumPhases(docs, "doc_id", "n_chars", phases = 4)
+        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
+        .groupBy(col("phase"), col("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          min(col("difficulty")).as("min_chars"),
+          max(col("difficulty")).as("max_chars"))
+    },
+      // the oracle uses the engine's own ntile; the Spark side must match
+      // SQL-standard tile sizing from the distributed rank
+      """WITH r AS (
+        |  SELECT doc_id, lang, n_chars,
+        |   CAST(ntile(4) OVER (ORDER BY n_chars, doc_id) AS INT) AS phase
+        |  FROM documents)
+        |SELECT phase, lang, count(*) AS n_docs,
+        | min(n_chars) AS min_chars, max(n_chars) AS max_chars
+        |FROM r GROUP BY 1, 2""".stripMargin),
+
+    Query("pack_e2e", (s, d) => {
+      // end-to-end corpus → training-shards composition: token counts →
+      // snake-balanced shards (by token size) → per-shard contiguous
+      // 2048-token sequence packing — each stage is its own gated
+      // operator; this pins the composed artifact a shard writer emits
+      val tc = t(s, d, "documents")
+        .select(col("doc_id"),
+          TextAnalysisOps.wsTokenCount(col("text")).cast("long").as("nt"))
+      val sh = PackOps.snakeShards(tc, "doc_id", "nt", nShards = 8)
+      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      sh.withColumn("cb", coalesce(sum(col("size")).over(w), lit(0L)))
+        .withColumn("seq", expr("cb div 2048"))
+        .groupBy(col("shard"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("size")).as("sum_tokens"),
+          (max(col("seq")) + 1).as("n_seqs"))
+    },
+      // composed chain: whitespace token counts → snake shards by size →
+      // per-shard contiguous packing at budget 2048
+      """WITH tc AS (
+        |  SELECT doc_id,
+        |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |     x -> x <> '')) AS nt
+        |  FROM documents),
+        |r AS (SELECT doc_id, nt,
+        |       row_number() OVER (ORDER BY nt DESC, doc_id) AS rk FROM tc),
+        |a AS (SELECT doc_id, nt,
+        |  CASE WHEN ((rk-1) // 8) % 2 = 0 THEN (rk-1) % 8
+        |       ELSE 7 - (rk-1) % 8 END AS shard FROM r),
+        |o AS (SELECT shard, nt,
+        |  coalesce(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
+        |  FROM a)
+        |SELECT CAST(shard AS INT) AS shard, count(*) AS n_docs,
+        | CAST(sum(nt) AS BIGINT) AS sum_tokens,
+        | CAST(max(cb // 2048) + 1 AS BIGINT) AS n_seqs
+        |FROM o GROUP BY 1""".stripMargin),
+
+    Query("curate_card", (s, d) => {
+      // the one-row corpus health card a dataset release ships with:
+      // size, source/language diversity (entropy over the lang mix),
+      // exact-duplicate rate, mean length, and PII incidence — every
+      // number derived by this engine's own gated kernels
+      val docs = t(s, d, "documents")
+      val base = docs.agg(
+        count(lit(1)).as("n_docs"),
+        countDistinct(col("source")).as("n_sources"),
+        countDistinct(col("lang")).as("n_langs"),
+        countDistinct(md5(col("text"))).as("n_distinct"),
+        sum(col("n_chars")).as("sum_chars"),
+        sum(when(col("text").rlike(
+            "https?://[^\\s]+|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}|[0-9]{7,}"),
+          1L).otherwise(0L)).as("n_pii"))
+      val ent = t(s, d, "documents").groupBy(col("lang"))
+        .agg(count(lit(1)).as("n"))
+        .agg(sum(col("n")).as("nn"),
+          array_sort(collect_list(struct(col("lang"), col("n")))).as("arr"))
+        .select(round(aggregate(col("arr"), lit(0.0d), (acc, x) =>
+          acc - (x.getField("n").cast("double") / col("nn").cast("double")) *
+            log(x.getField("n").cast("double") / col("nn").cast("double"))),
+          6).as("lang_entropy"))
+      base.crossJoin(ent).select(col("n_docs"), col("n_sources"),
+        col("n_langs"),
+        round(lit(1.0) - col("n_distinct").cast("double") / col("n_docs"), 6)
+          .as("dup_rate"),
+        round(col("sum_chars").cast("double") / col("n_docs"), 6)
+          .as("mean_chars"),
+        round(col("n_pii").cast("double") / col("n_docs"), 6).as("pii_rate"),
+        col("lang_entropy"))
+    },
+      // the release card: exact counts, ordered-fold entropy, and the
+      // scrub regex surfaced as an incidence flag
+      """WITH base AS (
+        |  SELECT count(*) AS n_docs,
+        |   count(DISTINCT source) AS n_sources,
+        |   count(DISTINCT lang) AS n_langs,
+        |   count(DISTINCT md5(text)) AS n_distinct,
+        |   CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        |   CAST(sum(CASE WHEN regexp_matches(text,
+        |     'https?://[^\s]+|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}|[0-9]{7,}')
+        |     THEN 1 ELSE 0 END) AS BIGINT) AS n_pii
+        |  FROM documents),
+        |c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
+        |g AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
+        |       list(n ORDER BY lang) AS arr FROM c),
+        |ent AS (SELECT round(list_reduce(list_prepend(0.0::DOUBLE,
+        |   list_transform(arr, n -> -(CAST(n AS DOUBLE) / nn)
+        |        * ln(CAST(n AS DOUBLE) / nn))),
+        |   (acc, x) -> acc + x), 6) AS lang_entropy FROM g)
+        |SELECT n_docs, n_sources, n_langs,
+        | round(1.0::DOUBLE - CAST(n_distinct AS DOUBLE) / n_docs, 6)
+        |   AS dup_rate,
+        | round(CAST(sum_chars AS DOUBLE) / n_docs, 6) AS mean_chars,
+        | round(CAST(n_pii AS DOUBLE) / n_docs, 6) AS pii_rate,
+        | lang_entropy
+        |FROM base, ent""".stripMargin),
+
+    Query("pack_efficiency", (s, d) => {
+      // packing-waste audit of the pack_e2e shard artifact: per shard,
+      // the padding fraction a 2048-token sequence writer pays —
+      // (n_seqs·2048 − Σtokens)/(n_seqs·2048) — the utilization number
+      // a training-throughput dashboard tracks. Same snake-shard +
+      // cumulative-fill chain; one extra mirrored division.
+      val tc = t(s, d, "documents")
+        .select(col("doc_id"),
+          TextAnalysisOps.wsTokenCount(col("text")).cast("long").as("nt"))
+      val sh = PackOps.snakeShards(tc, "doc_id", "nt", nShards = 8)
+      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      sh.withColumn("cb", coalesce(sum(col("size")).over(w), lit(0L)))
+        .withColumn("seq", expr("cb div 2048"))
+        .groupBy(col("shard"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("size")).as("sum_tokens"),
+          (max(col("seq")) + 1).as("n_seqs"))
+        .select(col("shard"), col("n_docs"), col("sum_tokens"), col("n_seqs"),
+          round((col("n_seqs") * 2048 - col("sum_tokens")).cast("double") /
+            (col("n_seqs") * 2048), 6).as("waste"))
+    },
+      // pack_e2e chain + the waste division mirrored
+      """WITH tc AS (
+        |  SELECT doc_id,
+        |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |     x -> x <> '')) AS nt
+        |  FROM documents),
+        |r AS (SELECT doc_id, nt,
+        |       row_number() OVER (ORDER BY nt DESC, doc_id) AS rk FROM tc),
+        |a AS (SELECT doc_id, nt,
+        |  CASE WHEN ((rk-1) // 8) % 2 = 0 THEN (rk-1) % 8
+        |       ELSE 7 - (rk-1) % 8 END AS shard FROM r),
+        |o AS (SELECT shard, nt,
+        |  coalesce(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
+        |  FROM a)
+        |SELECT CAST(shard AS INT) AS shard, count(*) AS n_docs,
+        | CAST(sum(nt) AS BIGINT) AS sum_tokens,
+        | CAST(max(cb // 2048) + 1 AS BIGINT) AS n_seqs,
+        | round(CAST((max(cb // 2048) + 1) * 2048 - sum(nt) AS DOUBLE)
+        |   / ((max(cb // 2048) + 1) * 2048), 6) AS waste
+        |FROM o GROUP BY 1""".stripMargin),
+
+    Query("sample_contrastive", (s, d) => {
+      // contrastive pair mining for embedding training: per anchor, the
+      // hardest POSITIVE (nearest same-label vector by exact cosine) and
+      // a deterministic hash-drawn NEGATIVE (different label) — the
+      // (anchor, pos, neg) triplets a contrastive loss consumes. Both
+      // picks are one corpus pass against the broadcast 20-anchor set
+      // with map-side max_by/min_by argmax aggregation; at larger
+      // anchor counts the positive leg becomes IVF-per-label (the gated
+      // ann path), same contract.
+      val emb = t(s, d, "embeddings")
+        .select(col("vec_id"), col("embedding").cast("array<double>")
+          .as("embedding"), col("label"))
+        .localCheckpoint() // anchors + the two scans
+      val anchors = emb.filter(col("vec_id") < 20)
+        .select(col("vec_id").as("anchor_id"),
+          col("embedding").as("a_emb"), col("label").as("a_label"))
+      val pos = emb.crossJoin(broadcast(anchors))
+        .filter(col("label") === col("a_label") &&
+          col("vec_id") =!= col("anchor_id"))
+        .withColumn("sim", SimilarityOps.cosine(col("a_emb"), col("embedding")))
+        .groupBy("anchor_id")
+        .agg(max_by(struct(col("vec_id").as("pos_id"), col("sim")),
+          struct(col("sim"), lit(0L) - col("vec_id"))).as("p"))
+        .select(col("anchor_id"), col("p.pos_id").as("pos_id"),
+          round(col("p.sim"), 4).as("pos_sim"))
+      val neg = emb.crossJoin(broadcast(anchors.select("anchor_id", "a_label")))
+        .filter(col("label") =!= col("a_label"))
+        .withColumn("h",
+          SimilarityOps.hash32Col(col("anchor_id") * 1000003L + col("vec_id")))
+        .groupBy("anchor_id")
+        .agg(min_by(col("vec_id"), struct(col("h"), col("vec_id")))
+          .as("neg_id"))
+      pos.join(neg, Seq("anchor_id"))
+    },
+      // argmax picks mirror max_by/min_by tie orders exactly
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
+         |            label FROM embeddings),
+         |a AS (SELECT vec_id AS anchor_id, emb AS a_emb, label AS a_label
+         |      FROM e WHERE vec_id < 20),
+         |ps AS (SELECT a.anchor_id, e.vec_id,
+         |        ${cosSql("a.a_emb", "e.emb")} AS sim
+         |       FROM e CROSS JOIN a
+         |       WHERE e.label = a.a_label AND e.vec_id <> a.anchor_id),
+         |pr AS (SELECT anchor_id, vec_id AS pos_id, sim,
+         |        row_number() OVER (PARTITION BY anchor_id
+         |          ORDER BY sim DESC, vec_id ASC) AS rn FROM ps),
+         |ng AS (SELECT a.anchor_id, e.vec_id,
+         |        ${hash32Sql("(a.anchor_id * 1000003 + e.vec_id)")} AS h
+         |       FROM e CROSS JOIN a WHERE e.label <> a.a_label),
+         |nr AS (SELECT anchor_id, vec_id AS neg_id,
+         |        row_number() OVER (PARTITION BY anchor_id
+         |          ORDER BY h, vec_id) AS rn FROM ng)
+         |SELECT p.anchor_id, p.pos_id, round(p.sim, 4) AS pos_sim, n.neg_id
+         |FROM pr p JOIN nr n ON p.anchor_id = n.anchor_id
+         |WHERE p.rn = 1 AND n.rn = 1""".stripMargin),
+
+    Query("pack_doc_mask", (s, d) => {
+      // packed sequences WITH document-boundary masks — the artifact an
+      // attention-masking trainer actually needs: per (shard, seq), the
+      // in-sequence start offset of every packed document, in pack
+      // order. Same snake-shard + contiguous-fill chain as pack_e2e;
+      // the boundary list is an ordered array fold (sorted by doc_id,
+      // the cumulative order), emitted as a comma-joined string so the
+      // gate compares it byte-for-byte.
+      val tc = t(s, d, "documents")
+        .select(col("doc_id"),
+          TextAnalysisOps.wsTokenCount(col("text")).cast("long").as("nt"))
+      val sh = PackOps.snakeShards(tc, "doc_id", "nt", nShards = 8)
+      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      sh.withColumn("cb", coalesce(sum(col("size")).over(w), lit(0L)))
+        .withColumn("seq", expr("cb div 2048"))
+        .withColumn("off", col("cb") % 2048)
+        .groupBy(col("shard"), col("seq"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("size")).as("sum_tokens"),
+          array_join(transform(
+            array_sort(collect_list(struct(col("doc_id"), col("off")))),
+            p => p.getField("off").cast("string")), ",").as("boundaries"))
+    },
+      // the pack_e2e chain with per-sequence boundary offsets as an
+      // ordered string_agg (doc_id order = cumulative order)
+      """WITH tc AS (
+        |  SELECT doc_id,
+        |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |     x -> x <> '')) AS nt
+        |  FROM documents),
+        |r AS (SELECT doc_id, nt,
+        |       row_number() OVER (ORDER BY nt DESC, doc_id) AS rk FROM tc),
+        |a AS (SELECT doc_id, nt,
+        |  CASE WHEN ((rk-1) // 8) % 2 = 0 THEN (rk-1) % 8
+        |       ELSE 7 - (rk-1) % 8 END AS shard FROM r),
+        |o AS (SELECT shard, doc_id, nt,
+        |  coalesce(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
+        |  FROM a)
+        |SELECT CAST(shard AS INT) AS shard, CAST(cb // 2048 AS BIGINT) AS seq,
+        | count(*) AS n_docs, CAST(sum(nt) AS BIGINT) AS sum_tokens,
+        | string_agg(CAST(cb % 2048 AS VARCHAR), ',' ORDER BY doc_id)
+        |   AS boundaries
+        |FROM o GROUP BY 1, 2""".stripMargin),
+
+    Query("curate_source_contamination", (s, d) => {
+      // per-source contamination audit — text_overlap_frac's graded
+      // 8-gram benchmark overlap (every 97th doc plays the benchmark,
+      // the curate_e2e convention) rolled up to the acquisition
+      // channel: the table a curation run reads to decide which feed
+      // to drop or re-crawl when leakage concentrates in one source.
+      // Contamination is the integer cross-multiply 2·hits ≥ grams
+      // (no rounded-0.5 boundary); docs too short to produce an 8-gram
+      // count as clean (no grams → nothing to leak).
+      val docs = t(s, d, "documents")
+      val contam = TextAnalysisOps.overlapFraction(docs, "doc_id", "text",
+          docs.filter(col("doc_id") % 97 === 0), "text", n = 8)
+        .select(col("doc_id"),
+          (col("n_hits") * 2 >= col("n_grams")).as("contam"))
+      docs.select(col("doc_id"), col("source"))
+        .join(contam, Seq("doc_id"), "left_outer")
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(coalesce(col("contam"), lit(false)), 1L)
+            .otherwise(0L)).as("n_contam"))
+        .withColumn("contam_rate",
+          round(col("n_contam").cast("double") / col("n_docs"), 4))
+    },
+      // the text_overlap_frac 8-gram chain rolled up per source; docs
+      // with no 8-gram (absent from j) coalesce to clean
+      """WITH arrs AS (
+        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
+        |    '\s+'), x -> x <> '') AS a
+        |  FROM documents),
+        |g AS (
+        |  SELECT DISTINCT doc_id, array_to_string(a[i:i+7], ' ') AS g
+        |  FROM arrs, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
+        |  WHERE len(a) >= 8),
+        |b AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
+        |j AS (
+        |  SELECT g.doc_id, count(*) AS n_grams, count(b.g) AS n_hits
+        |  FROM g LEFT JOIN b USING (g)
+        |  GROUP BY g.doc_id),
+        |lab AS (
+        |  SELECT d.doc_id, d.source,
+        |   coalesce(j.n_hits * 2 >= j.n_grams, false) AS contam
+        |  FROM documents d LEFT JOIN j USING (doc_id))
+        |SELECT source, count(*) AS n_docs,
+        | CAST(sum(CASE WHEN contam THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS n_contam,
+        | round(sum(CASE WHEN contam THEN 1 ELSE 0 END) * 1.0 / count(*), 4)
+        |   AS contam_rate
+        |FROM lab GROUP BY source""".stripMargin),
+
+    Query("curate_source_card", (s, d) =>
+      // per-source health card — the groupBy sibling of the corpus-wide
+      // curate_card: each ingestion source gets its own size, exact-dup
+      // rate, mean length, PII incidence and language spread, so a bad
+      // feed is visible BEFORE it dilutes the release-card averages
+      t(s, d, "documents").groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          countDistinct(col("lang")).as("n_langs"),
+          countDistinct(md5(col("text"))).as("n_distinct"),
+          sum(col("n_chars")).as("sum_chars"),
+          sum(when(col("text").rlike(
+              "https?://[^\\s]+|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}|[0-9]{7,}"),
+            1L).otherwise(0L)).as("n_pii"))
+        .select(col("source"), col("n_docs"), col("n_langs"),
+          round(lit(1.0) - col("n_distinct").cast("double") / col("n_docs"), 6)
+            .as("dup_rate"),
+          round(col("sum_chars").cast("double") / col("n_docs"), 6)
+            .as("mean_chars"),
+          round(col("n_pii").cast("double") / col("n_docs"), 6)
+            .as("pii_rate")),
+      // per-source replay of the release-card kernels
+      """SELECT source, count(*) AS n_docs,
+        | count(DISTINCT lang) AS n_langs,
+        | round(1.0::DOUBLE - CAST(count(DISTINCT md5(text)) AS DOUBLE)
+        |   / count(*), 6) AS dup_rate,
+        | round(CAST(sum(n_chars) AS DOUBLE) / count(*), 6) AS mean_chars,
+        | round(CAST(sum(CASE WHEN regexp_matches(text,
+        |     'https?://[^\s]+|[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}|[0-9]{7,}')
+        |   THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS pii_rate
+        |FROM documents GROUP BY 1""".stripMargin),
+
+    Query("sample_temperature", (s, d) =>
+      // T=2 source rebalancing, integer-exact keep rule
+      PackOps.temperatureResample(t(s, d, "documents"), "doc_id", "source"),
+      // keep rule sqrt(n_s/n_max) made integer-exact:
+      // h^2 * n_max < n_s * 1024^2 with h = hash32(doc_id+7) % 1024
+      s"""WITH c AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
+         |m AS (SELECT max(n_docs) AS n_max FROM c),
+         |h AS (SELECT source, ${hash32Sql("(doc_id + 7)")} % 1024 AS h
+         |  FROM documents),
+         |k AS (SELECT h.source, count(*) AS n_kept
+         |  FROM h JOIN c USING (source), m
+         |  WHERE h.h * h.h * m.n_max < c.n_docs * 1048576
+         |  GROUP BY 1)
+         |SELECT c.source, c.n_docs, coalesce(k.n_kept, CAST(0 AS BIGINT)) AS n_kept
+         |FROM c LEFT JOIN k USING (source)""".stripMargin),
+
+    Query("curate_ccnet", (s, d) => {
+      // CCNet-style per-language perplexity bucketing (Wenzek et al.
+      // 2020): language-ID each doc, score it with the smoothed bigram
+      // surprisal, and split EACH language into head/middle/tail
+      // terciles by surprisal rank — the classic "keep the head and
+      // middle, drop the tail" web-corpus curation gate. Ranks use the
+      // ROUNDED surprisal with doc_id tiebreak (deterministic across
+      // engines); bucket cuts are integer cross-multiplies. Docs with
+      // < 2 tokens have no bigram score and drop (inner join), exactly
+      // as CCNet drops unscoreable docs. Both component chains are
+      // this suite's own gated operators.
+      val docs = t(s, d, "documents")
+      val lang = TextAnalysisOps.withLangId(docs, "text")
+        .select(col("doc_id"), col("pred_lang"))
+      val ppl = TextAnalysisOps.bigramSurprisal(docs, "doc_id", "text")
+        .select(col("doc_id"), col("mean_bg_surprisal"))
+      val wr = Window.partitionBy(col("pred_lang"))
+        .orderBy(col("mean_bg_surprisal"), col("doc_id"))
+      lang.join(ppl, "doc_id")
+        .withColumn("r", row_number().over(wr))
+        .withColumn("n", count(lit(1)).over(
+          Window.partitionBy(col("pred_lang"))))
+        .select(col("doc_id"), col("pred_lang"),
+          col("mean_bg_surprisal").as("surprisal"),
+          when(col("r") * 3 <= col("n"), "head")
+            .when(col("r") * 3 <= col("n") * 2, "middle")
+            .otherwise("tail").as("bucket"))
+    },
+      // both component chains nest verbatim; tercile cuts are integer
+      // cross-multiplies on the rounded-surprisal rank
+      s"""WITH lang AS ($langIdSql),
+         |ppl AS (SELECT doc_id, mean_bg_surprisal FROM ($surprisalSql)),
+         |j AS (SELECT l.doc_id, l.pred_lang, p.mean_bg_surprisal
+         |      FROM lang l JOIN ppl p ON l.doc_id = p.doc_id),
+         |rk AS (SELECT doc_id, pred_lang, mean_bg_surprisal,
+         |   row_number() OVER (PARTITION BY pred_lang
+         |     ORDER BY mean_bg_surprisal, doc_id) AS r,
+         |   count(*) OVER (PARTITION BY pred_lang) AS n
+         |  FROM j)
+         |SELECT doc_id, pred_lang, mean_bg_surprisal AS surprisal,
+         | CASE WHEN r * 3 <= n THEN 'head'
+         |      WHEN r * 3 <= n * 2 THEN 'middle'
+         |      ELSE 'tail' END AS bucket
+         |FROM rk""".stripMargin),
+
+    Query("curate_url_dedup", (s, d) =>
+      // canonical-URL dedup over a deterministic URL fixture derived
+      // from the documents table (mixed-case host, default port,
+      // tracking params, fragment — each normalization rule exercised)
+      t(s, d, "documents")
+        .select(col("doc_id"),
+          concat(lit("HTTPS://WWW."), col("source"), lit(".Example.COM:443/docs/"),
+            pmod(col("doc_id"), lit(50L)), lit("/?utm_source=feed&id="),
+            pmod(col("doc_id"), lit(7L)), lit("&utm_campaign="), col("source"),
+            lit("#sec"), pmod(col("doc_id"), lit(3L))).as("url"))
+        .select(col("doc_id"),
+          graft.functions.UrlFunctions.normalizeUrl(col("url")).as("norm_url"))
+        .groupBy("norm_url")
+        .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_id")),
+      // the URL fixture is built with identical string concatenation on
+      // both engines; the normalization chain replays UrlFunctions'
+      // patterns verbatim (DuckDB needs the explicit 'g' flag — Spark's
+      // regexp_replace is global by default)
+      """WITH urls AS (SELECT doc_id,
+        |  'HTTPS://WWW.' || source || '.Example.COM:443/docs/' ||
+        |  CAST(doc_id % 50 AS VARCHAR) || '/?utm_source=feed&id=' ||
+        |  CAST(doc_id % 7 AS VARCHAR) || '&utm_campaign=' || source ||
+        |  '#sec' || CAST(doc_id % 3 AS VARCHAR) AS url FROM documents),
+        |parts AS (SELECT doc_id, url,
+        |  regexp_replace(url, '#.*$', '', 'g') AS nofrag FROM urls),
+        |comp AS (SELECT doc_id, url,
+        |  lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)(.*)$', 1)) AS scheme,
+        |  regexp_replace(regexp_replace(
+        |    lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)(.*)$', 2)),
+        |    '^www\.', '', 'g'), ':(80|443)$', '', 'g') AS host,
+        |  regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+        |    regexp_replace(
+        |      regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)(.*)$', 3),
+        |      '(utm_[a-z]+|gclid|fbclid)=[^&#]*&?', '', 'g'),
+        |    '[?&]+$', '', 'g'), '\?&', '?', 'g'), '/+\?', '?', 'g'),
+        |    '^(/.*?)/+$', '\1', 'g') AS rest
+        |  FROM parts),
+        |norm AS (SELECT doc_id, CASE WHEN scheme = '' THEN url
+        |  ELSE scheme || '://' || host || rest END AS norm_url FROM comp)
+        |SELECT norm_url, count(*) AS n_docs, min(doc_id) AS keep_id
+        |FROM norm GROUP BY norm_url""".stripMargin),
+
+    Query("pack_span_corruption", (s, d) => {
+      // T5-style span-corruption layout (the denoising-pretraining
+      // transform): deterministic span STARTS (low-32-folded FNV of
+      // (doc, pos) ≡ 0 mod 20 ≈ 5% of positions), each start masking a
+      // 3-token span clipped at the doc end; overlaps merge through the
+      // DISTINCT covered set. Per doc: token/start/masked counts + mask
+      // fraction — the layout audit a corruption writer ships (the
+      // actual sentinel-token rewrite is a map over this assignment).
+      val toks = t(s, d, "documents")
+        .select(col("doc_id"),
+          posexplode(TermOps.tokens(col("text"))).as(Seq("pos", "tok")))
+      val n = toks.groupBy("doc_id").agg(count(lit(1)).as("n_tokens"))
+      val starts = toks.filter(pmod(
+          expr("fnv64(concat(cast(doc_id as string), '#', cast(pos as string)))")
+            .bitwiseAND(lit(4294967295L)), lit(20L)) === 0L)
+        .select(col("doc_id"), col("pos").as("st"))
+      val nStarts = starts.groupBy("doc_id")
+        .agg(count(lit(1)).as("n_starts"))
+      val covered = starts.join(n, Seq("doc_id"))
+        .select(col("doc_id"), explode(sequence(col("st"),
+          least(col("st") + 2, col("n_tokens") - 1))).as("mp"))
+        .distinct()
+        .groupBy("doc_id").agg(count(lit(1)).as("n_masked"))
+      n.join(nStarts, Seq("doc_id"), "left_outer")
+        .join(covered, Seq("doc_id"), "left_outer")
+        .select(col("doc_id"), col("n_tokens"),
+          coalesce(col("n_starts"), lit(0L)).as("n_starts"),
+          coalesce(col("n_masked"), lit(0L)).as("n_masked"),
+          round(coalesce(col("n_masked"), lit(0L)).cast("double") /
+            col("n_tokens"), 4).as("mask_frac"))
+    },
+      // positional tokens (the search_snippet pattern), FNV start rule on
+      // the low-32 fold, covered set via generate_series + DISTINCT
+      s"""WITH arrs AS (
+         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
+         |    x -> x <> '') AS a
+         |  FROM documents),
+         |p AS (SELECT doc_id, generate_subscripts(a, 1) - 1 AS pos
+         |      FROM arrs),
+         |n AS (SELECT doc_id, count(*) AS n_tokens FROM p GROUP BY 1),
+         |st AS (SELECT doc_id, pos AS s FROM p
+         |       WHERE CAST(${fnvSql("doc_id::VARCHAR || '#' || pos::VARCHAR")}
+         |         % 4294967296::HUGEINT AS BIGINT) % 20 = 0),
+         |ns AS (SELECT doc_id, count(*) AS n_starts FROM st GROUP BY 1),
+         |cov AS (SELECT DISTINCT st.doc_id, mp FROM st JOIN n USING (doc_id),
+         |        unnest(generate_series(st.s,
+         |          least(st.s + 2, n.n_tokens - 1))) t(mp)),
+         |nm AS (SELECT doc_id, count(*) AS n_masked FROM cov GROUP BY 1)
+         |SELECT n.doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+         | CAST(coalesce(n_starts, 0) AS BIGINT) AS n_starts,
+         | CAST(coalesce(n_masked, 0) AS BIGINT) AS n_masked,
+         | round(CAST(coalesce(n_masked, 0) AS DOUBLE) / n_tokens, 4)
+         |   AS mask_frac
+         |FROM n LEFT JOIN ns USING (doc_id) LEFT JOIN nm USING (doc_id)""".stripMargin),
+
+    Query("pack_fim", (s, d) => {
+      // fill-in-the-middle packing layout (Bavarian et al. 2022, the
+      // span-corruption sibling for autoregressive infilling): half
+      // the docs (hash-decided) reorder as PSM — <pre> prefix <suf>
+      // suffix <mid> middle — with both split points hash-derived
+      // uniform over [0, n]; the other half pass through untouched.
+      // Beyond the piece-length arithmetic, the gate pins the fnv64
+      // fingerprint of the ACTUAL emitted token stream, so the reorder
+      // itself is verified, not just its bookkeeping. Pure per-doc
+      // map — zero exchanges, the pack_span_corruption scale shape.
+      def h32(tag: String): org.apache.spark.sql.Column =
+        expr(s"fnv64(concat(cast(doc_id as string), '#$tag'))")
+          .bitwiseAND(lit(4294967295L))
+      val cut = t(s, d, "documents")
+        .select(col("doc_id"), TermOps.tokens(col("text")).as("tk"))
+        .filter(size(col("tk")) >= 2)
+        .withColumn("n", size(col("tk")).cast("long"))
+        .withColumn("fim", pmod(h32("fim"), lit(2L)) === 0L)
+        .withColumn("c1", pmod(h32("cut1"), col("n") + lit(1L)))
+        .withColumn("c2", pmod(h32("cut2"), col("n") + lit(1L)))
+        .withColumn("lo", least(col("c1"), col("c2")))
+        .withColumn("hi", greatest(col("c1"), col("c2")))
+      cut.select(col("doc_id"), col("n").as("n_tokens"), col("fim"),
+        when(col("fim"), col("lo")).otherwise(col("n")).as("pre_len"),
+        when(col("fim"), col("hi") - col("lo")).otherwise(lit(0L))
+          .as("mid_len"),
+        when(col("fim"), col("n") - col("hi")).otherwise(lit(0L))
+          .as("suf_len"),
+        when(col("fim"), col("n") + lit(3L)).otherwise(col("n"))
+          .as("out_len"),
+        graft.GraftFunctions.fnv64(when(col("fim"),
+            array_join(concat(
+              array(lit("<pre>")),
+              expr("slice(tk, 1, cast(lo as int))"),
+              array(lit("<suf>")),
+              expr("slice(tk, cast(hi as int) + 1, cast(n - hi as int))"),
+              array(lit("<mid>")),
+              expr("slice(tk, cast(lo as int) + 1, cast(hi - lo as int))")),
+              " "))
+          .otherwise(array_join(col("tk"), " "))).as("layout_fp"))
+    },
+      // the PSM reorder replay: hash-decided fim flag, hash-derived
+      // split points uniform over [0, n], and the layout fingerprint as
+      // fnv over the ACTUAL reordered stream (empty slices a[1:0] /
+      // a[n+1:n] clamp to [] in both engines); fp wrapped to signed
+      s"""WITH arrs AS (
+         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
+         |    '\\s+'), x -> x <> '') AS a
+         |  FROM documents),
+         |sized AS (SELECT doc_id, a, CAST(len(a) AS BIGINT) AS n
+         |          FROM arrs WHERE len(a) >= 2),
+         |c AS (
+         |  SELECT doc_id, a, n,
+         |   CAST(${fnvSql("doc_id::VARCHAR || '#fim'")}
+         |     % 4294967296::HUGEINT AS BIGINT) % 2 = 0 AS fim,
+         |   CAST(${fnvSql("doc_id::VARCHAR || '#cut1'")}
+         |     % 4294967296::HUGEINT AS BIGINT) % (n + 1) AS c1,
+         |   CAST(${fnvSql("doc_id::VARCHAR || '#cut2'")}
+         |     % 4294967296::HUGEINT AS BIGINT) % (n + 1) AS c2
+         |  FROM sized),
+         |lh AS (SELECT doc_id, a, n, fim,
+         |        least(c1, c2) AS lo, greatest(c1, c2) AS hi FROM c),
+         |fp AS (
+         |  SELECT doc_id, n, fim, lo, hi,
+         |   ${fnvSql("array_to_string(CASE WHEN fim THEN " +
+             "['<pre>'] || a[1:CAST(lo AS INT)] || ['<suf>'] || " +
+             "a[CAST(hi AS INT)+1:CAST(n AS INT)] || ['<mid>'] || " +
+             "a[CAST(lo AS INT)+1:CAST(hi AS INT)] ELSE a END, ' ')")} AS h
+         |  FROM lh)
+         |SELECT doc_id, n AS n_tokens, fim,
+         | CASE WHEN fim THEN lo ELSE n END AS pre_len,
+         | CASE WHEN fim THEN hi - lo ELSE 0 END AS mid_len,
+         | CASE WHEN fim THEN n - hi ELSE 0 END AS suf_len,
+         | CASE WHEN fim THEN n + 3 ELSE n END AS out_len,
+         | CAST(CASE WHEN h >= 9223372036854775808::HUGEINT
+         |   THEN h - 18446744073709551616::HUGEINT ELSE h END AS BIGINT)
+         |   AS layout_fp
+         |FROM fp""".stripMargin),
+
+    Query("curate_calibration", (s, d) => {
+      // the quality classifier CALIBRATED AGAINST THE GOPHER GATE — the
+      // go/no-go audit before a pipeline swaps rule-filtering for
+      // model-filtering: if the model's score deciles don't track the
+      // rule gate's pass rate, thresholding the score reproduces
+      // neither the rules nor anything better. Same decile-bin ECE
+      // machinery as stats_calibration; labels are gopherRules.keep
+      // (both chains are gated elsewhere — this row composes them).
+      calibrationEce(s, d,
+        TextAnalysisOps.gopherRules(t(s, d, "documents"), "doc_id", "text")
+          .select(col("doc_id"), col("keep").cast("int").as("y")))
+    },
+      // the classifier-vs-Gopher-gate reliability audit: labels come from
+      // the nested gopherSql chain (its CTE names scope inside the
+      // derived table — the ann_recall nesting precedent)
+      calibrationSqlFor(
+        s"SELECT doc_id, CAST(keep AS INT) AS y FROM ($gopherSql)")),
+
+    Query("sample_stratified", (s, d) =>
+      // deterministic stratified sampling: per-language rates via a
+      // hash-threshold on doc_id — reproducible across runs/engines,
+      // map-only, no RNG state
+      t(s, d, "documents")
+        .filter(SimilarityOps.hash32Col(col("doc_id") + lit(1L)) % 100 <
+          when(col("lang") === "en", lit(30)).otherwise(lit(10)))
+        .groupBy(col("lang")).agg(count(lit(1)).as("n_sampled")),
+      s"""SELECT lang, count(*) AS n_sampled FROM documents
+         |WHERE ${hash32Sql("(doc_id + 1)")} % 100 <
+         |  CASE WHEN lang = 'en' THEN 30 ELSE 10 END
+         |GROUP BY lang""".stripMargin),
+
+    Query("sample_neyman", (s, d) => {
+      // Neyman allocation (n_h ∝ N_h·S_h): the DESIGN table a 1000-doc
+      // stratified draw starts from — high-variance strata get more
+      // budget than proportional allocation would give. S_h from exact
+      // integer co-moments (stats_moments convention — Σx² and the
+      // nh·sxx − sx² products in DECIMAL(38,0), HUGEINT on the DuckDB
+      // side, so neither engine overflows at 10^11+ docs); the
+      // Σ N_h·S_h normalizer is an ordered fold over the lang-sorted
+      // strata; allocations floor, so the output is engine-exact
+      val dec = "decimal(38,0)"
+      val agg = t(s, d, "documents")
+        .select(col("lang"), col("n_chars").as("x"))
+        .groupBy("lang")
+        .agg(count(lit(1)).as("nh"), sum("x").as("sx"),
+          sum((col("x") * col("x")).cast(dec)).as("sxx"))
+      val wh = agg.select(col("lang"), col("nh"),
+          sqrt((col("sxx") * col("nh") -
+              col("sx").cast(dec) * col("sx"))
+            .cast("double") /
+            (col("nh") * (col("nh") - lit(1L))).cast("double")).as("sd"))
+        .withColumn("w", col("nh").cast("double") * col("sd"))
+      // tot derives from wh, so alias both sides — a bare crossJoin
+      // leaves `w` ambiguous between the branch and its own subtree
+      val tot = wh
+        .agg(array_sort(collect_list(struct(col("lang"), col("w"))))
+          .as("arr"))
+        .select(aggregate(col("arr"), lit(0.0d),
+          (a, x) => a + x.getField("w")).as("W"))
+      wh.alias("wh").crossJoin(broadcast(tot).alias("tt"))
+        .select(col("wh.lang").as("lang"), col("wh.nh").as("n_rows"),
+          round(col("wh.sd"), 4).as("stddev"),
+          floor(lit(1000.0) * col("wh.w") / col("tt.W")).cast("long")
+            .as("alloc"))
+    },
+      // N_h·S_h weights from the same exact co-moments, lang-ordered fold
+      // for the normalizer, floored allocations
+      """WITH a AS (
+        |  SELECT lang, count(*) AS nh, sum(n_chars) AS sx,
+        |   sum(n_chars*n_chars) AS sxx
+        |  FROM documents GROUP BY lang),
+        |wh AS (
+        |  SELECT lang, nh, sd, nh * sd AS wt FROM (
+        |    SELECT lang, nh,
+        |     sqrt(CAST(sxx*nh - sx*sx AS DOUBLE) /
+        |          CAST(nh*(nh-1) AS DOUBLE)) AS sd
+        |    FROM a) t),
+        |tot AS (
+        |  SELECT list_reduce(list_prepend(0.0::DOUBLE,
+        |    list(wt ORDER BY lang)), (acc, x) -> acc + x) AS tw
+        |  FROM wh)
+        |SELECT lang, CAST(nh AS BIGINT) AS n_rows, round(sd, 4) AS stddev,
+        | CAST(floor(1000.0::DOUBLE * wt / tw) AS BIGINT) AS alloc
+        |FROM wh CROSS JOIN tot""".stripMargin),
+
+    Query("sample_dsir", (s, d) =>
+      // DSIR importance weights: raw corpus vs the deterministic
+      // doc_id % 7 target slice (stand-in for the curated/in-domain
+      // corpus a production run would point at); selection = top-weight
+      TextAnalysisOps.dsirWeights(t(s, d, "documents"), "doc_id", "text",
+        isTarget = col("doc_id") % 7 === 0),
+      // dim=256; add-one smoothing; ln on identical doubles both sides.
+      // Bucket convention shared with featureHashSql (h % 256 == the
+      // Spark side's fnv64 & 255 — h is the non-negative folded FNV)
+      s"""WITH tf AS ($tfSub),
+         |hb AS (SELECT doc_id, CAST(${fnvSql("term")} % 256 AS INT)
+         |         AS bucket, tf FROM tf),
+         |tb AS (SELECT doc_id, bucket, CAST(sum(tf) AS BIGINT) AS c
+         |       FROM hb GROUP BY doc_id, bucket),
+         |rawb AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS rc
+         |         FROM tb GROUP BY bucket),
+         |tgtb AS (SELECT bucket, CAST(sum(c) AS BIGINT) AS tc
+         |         FROM tb WHERE doc_id % 7 = 0 GROUP BY bucket),
+         |cnts AS (SELECT r.bucket, r.rc, coalesce(t.tc, 0) AS tc
+         |         FROM rawb r LEFT JOIN tgtb t USING (bucket)),
+         |tot AS (SELECT CAST(sum(rc) AS BIGINT) AS rtot,
+         |         CAST(sum(tc) AS BIGINT) AS ttot FROM cnts),
+         |lr AS (SELECT bucket,
+         |        ln(CAST(tc + 1 AS DOUBLE) / CAST(ttot + 256 AS DOUBLE)) -
+         |        ln(CAST(rc + 1 AS DOUBLE) / CAST(rtot + 256 AS DOUBLE))
+         |         AS lr
+         |       FROM cnts CROSS JOIN tot)
+         |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
+         | round(sum(CAST(c AS DOUBLE) * lr) / CAST(sum(c) AS DOUBLE), 4)
+         |  AS dsir_w
+         |FROM tb JOIN lr USING (bucket) GROUP BY doc_id""".stripMargin),
+
+    Query("sample_split", (s, d) => {
+      // deterministic train/val/test assignment (the canonical ML
+      // split): hash-bucket each doc id 90/5/5, emitted as the
+      // per-(split, lang) balance table a pipeline audits — membership
+      // is a pure function of the id, so reruns, late-arriving shards
+      // and incremental refreshes all agree
+      // fold to the low 32 bits FIRST (power-of-two, so signed &
+      // unsigned agree), then take the non-power-of-two bucket modulus
+      // of that non-negative value — % 100 straight off the signed
+      // 64-bit hash would disagree with an unsigned replay
+      t(s, d, "documents")
+        .withColumn("b", pmod(
+          expr("fnv64(concat(cast(doc_id as string), '#split'))")
+            .bitwiseAND(lit(4294967295L)), lit(100L)))
+        .withColumn("split", when(col("b") < 90, "train")
+          .when(col("b") < 95, "val").otherwise("test"))
+        .groupBy(col("split"), col("lang"))
+        .agg(count(lit(1)).as("n_docs"))
+    },
+      // hash-bucket membership replayed in HUGEINT FNV; 90/5/5 buckets
+      s"""WITH b AS (
+         |  SELECT lang, CAST(${fnvSql("doc_id::VARCHAR || '#split'")}
+         |    % 4294967296::HUGEINT AS BIGINT) % 100 AS b
+         |  FROM documents)
+         |SELECT CASE WHEN b < 90 THEN 'train'
+         |  WHEN b < 95 THEN 'val' ELSE 'test' END AS split,
+         | lang, CAST(count(*) AS BIGINT) AS n_docs
+         |FROM b GROUP BY split, lang""".stripMargin),
+
+    Query("sample_bottomk", (s, d) =>
+      // deterministic uniform sample: bottom-100 docs by keyed hash —
+      // the reproducible form of reservoir sampling (same rows whatever
+      // the partitioning/order/cluster), TakeOrderedAndProject plan
+      SketchOps.bottomKSample(
+        t(s, d, "documents").select(col("doc_id")), "doc_id", 100, "bk"),
+      // unsigned HUGEINT FNV folded to Spark's signed-long order before
+      // the bottom-k
+      s"""WITH f AS (
+         |  SELECT doc_id, ${fnvSql("doc_id::VARCHAR || '#bk'")} AS fu
+         |  FROM documents),
+         |h AS (
+         |  SELECT doc_id,
+         |   CAST(CASE WHEN fu >= 9223372036854775808::HUGEINT
+         |     THEN fu - 18446744073709551616::HUGEINT ELSE fu END
+         |     AS BIGINT) AS h
+         |  FROM f)
+         |SELECT doc_id, h FROM h ORDER BY h, doc_id LIMIT 100""".stripMargin),
+
+    Query("sample_temp_targets", (s, d) => {
+      // temperature-flattened source mixing TARGETS (the planning
+      // artifact beside sample_temperature's per-doc keep rule —
+      // that one selects documents, this one emits the per-source
+      // budget table a mixer schedules against): multilingual/domain
+      // rebalancing recipe: p_i^{1/T} renormalized, T = 2 so the power
+      // is an EXACT IEEE sqrt): per source the natural share, the
+      // flattened share, and the integer target count ⌊p_T·N⌋ a
+      // resampler would draw — rare sources up-weighted, the head
+      // flattened, all arithmetic mirrored
+      val src = t(s, d, "documents").groupBy("source")
+        .agg(count(lit(1)).as("n"))
+      val tot = src.agg(sum(col("n")).cast("double").as("total"),
+        sum(sqrt(col("n").cast("double"))).as("ssum"))
+      src.crossJoin(broadcast(tot))
+        .select(col("source"), col("n"),
+          round(col("n") / col("total"), 6).as("p"),
+          round(sqrt(col("n").cast("double")) / col("ssum"), 6).as("p_temp"),
+          floor(sqrt(col("n").cast("double")) / col("ssum") * col("total"))
+            .cast("long").as("n_target"))
+    },
+      // sqrt-share flattening (T = 2 ⇒ exact IEEE sqrt), mirrored
+      // normalization and integer floor targets
+      """WITH src AS (SELECT source, count(*) AS n FROM documents
+        |             GROUP BY 1),
+        |tot AS (SELECT CAST(sum(n) AS DOUBLE) AS total,
+        |         sum(sqrt(CAST(n AS DOUBLE))) AS ssum FROM src)
+        |SELECT source, n, round(n / total, 6) AS p,
+        | round(sqrt(CAST(n AS DOUBLE)) / ssum, 6) AS p_temp,
+        | CAST(floor(sqrt(CAST(n AS DOUBLE)) / ssum * total) AS BIGINT)
+        |   AS n_target
+        |FROM src, tot""".stripMargin),
+
+    Query("sample_kcenter", (s, d) => {
+      // greedy k-center (farthest-point) coreset selection — the
+      // diversity data-pruning primitive (pick the next example
+      // FARTHEST from everything already kept): 4 unrolled steps from
+      // seed vector 0, each one corpus × ≤5-center broadcast cosine
+      // pass + a per-vector max (exact — max is order-free) + one
+      // global argmin (ties to the smaller id). cover_sim is the
+      // selected point's similarity to its nearest prior center — the
+      // coverage-radius curve a pruning run monitors.
+      val emb = embeddings(s, d)
+        .select("vec_id", "embedding")
+      var centers = emb.filter(col("vec_id") === 0L)
+      var out = centers.select(lit(0).as("step"), col("vec_id"),
+        lit(null).cast("double").as("cover_sim"))
+      for (step <- 1 to 4) {
+        val far = emb.crossJoin(broadcast(
+            centers.select(col("embedding").as("cemb"))))
+          .withColumn("sim",
+            SimilarityOps.cosine(col("embedding"), col("cemb")))
+          .groupBy("vec_id")
+          .agg(max(col("sim")).as("maxsim"),
+            first(col("embedding")).as("embedding"))
+          .orderBy(col("maxsim").asc, col("vec_id").asc).limit(1)
+          .localCheckpoint()
+        centers = centers.unionByName(far.select("vec_id", "embedding"))
+        out = out.unionByName(far.select(lit(step).as("step"),
+          col("vec_id"), round(col("maxsim"), 6).as("cover_sim")))
+      }
+      out
+    },
+      // four unrolled farthest-point steps; per-vector max over the
+      // center set is order-free, argmin ties to the smaller id
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+         |           FROM embeddings),
+         |c1 AS (SELECT vec_id, emb FROM e WHERE vec_id = 0),
+         |d1 AS (SELECT x.vec_id, max(${cosSql("x.emb", "c.emb")}) AS ms
+         |       FROM e x, c1 c GROUP BY 1),
+         |s1 AS (SELECT vec_id, ms FROM d1 ORDER BY ms, vec_id LIMIT 1),
+         |c2 AS (SELECT vec_id, emb FROM c1 UNION ALL
+         |       SELECT e.vec_id, e.emb FROM e JOIN s1 USING (vec_id)),
+         |d2 AS (SELECT x.vec_id, max(${cosSql("x.emb", "c.emb")}) AS ms
+         |       FROM e x, c2 c GROUP BY 1),
+         |s2 AS (SELECT vec_id, ms FROM d2 ORDER BY ms, vec_id LIMIT 1),
+         |c3 AS (SELECT vec_id, emb FROM c2 UNION ALL
+         |       SELECT e.vec_id, e.emb FROM e JOIN s2 USING (vec_id)),
+         |d3 AS (SELECT x.vec_id, max(${cosSql("x.emb", "c.emb")}) AS ms
+         |       FROM e x, c3 c GROUP BY 1),
+         |s3 AS (SELECT vec_id, ms FROM d3 ORDER BY ms, vec_id LIMIT 1),
+         |c4 AS (SELECT vec_id, emb FROM c3 UNION ALL
+         |       SELECT e.vec_id, e.emb FROM e JOIN s3 USING (vec_id)),
+         |d4 AS (SELECT x.vec_id, max(${cosSql("x.emb", "c.emb")}) AS ms
+         |       FROM e x, c4 c GROUP BY 1),
+         |s4 AS (SELECT vec_id, ms FROM d4 ORDER BY ms, vec_id LIMIT 1)
+         |SELECT CAST(0 AS INT) AS step, vec_id,
+         | CAST(NULL AS DOUBLE) AS cover_sim FROM c1
+         |UNION ALL SELECT 1, vec_id, round(ms, 6) FROM s1
+         |UNION ALL SELECT 2, vec_id, round(ms, 6) FROM s2
+         |UNION ALL SELECT 3, vec_id, round(ms, 6) FROM s3
+         |UNION ALL SELECT 4, vec_id, round(ms, 6) FROM s4""".stripMargin),
+
+    Query("curate_mix_temperature", (s, d) => {
+      // temperature-scaled source mixing weights (the multilingual /
+      // multi-source sampling staple: w_i ∝ p_i^T, upweighting tail
+      // sources): T = 0.5 — the sqrt point of the usual 0.3–0.7 band —
+      // chosen deliberately because sqrt is IEEE-exact-rounded on both
+      // engines (pow(p, 0.7) would be a libm surface, the
+      // stats_sequential class). One corpus aggregate to O(sources)
+      // rows; the normalizing Σ√n folds in source order; √N cancels so
+      // w = √n_i / Σ√n_j exactly.
+      val bySrc = t(s, d, "documents").groupBy("source")
+        .agg(count(lit(1)).as("n_docs"))
+      val tot = bySrc
+        .agg(sum("n_docs").as("nt"),
+          array_sort(collect_list(struct(col("source"), col("n_docs"))))
+            .as("arr"))
+        .withColumn("z", expr(
+          "aggregate(arr, 0.0D, (acc, x) -> " +
+            "acc + sqrt(CAST(x.n_docs AS DOUBLE)))"))
+        .select("nt", "z")
+      bySrc.crossJoin(broadcast(tot))
+        .select(col("source"), col("n_docs"),
+          round(col("n_docs").cast("double") / col("nt"), 6).as("p"),
+          round(sqrt(col("n_docs").cast("double")) / col("z"), 6)
+            .as("w_temp"))
+    },
+      // Σ√n folds in source order; sqrt is IEEE-exact on both engines
+      """WITH b AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+        |           FROM documents GROUP BY 1),
+        |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS nt,
+        |   list_reduce(list_prepend(0.0::DOUBLE,
+        |     list(sqrt(CAST(n_docs AS DOUBLE)) ORDER BY source)),
+        |     (acc, x) -> acc + x) AS z FROM b)
+        |SELECT source, n_docs,
+        | round(CAST(n_docs AS DOUBLE) / nt, 6) AS p,
+        | round(sqrt(CAST(n_docs AS DOUBLE)) / z, 6) AS w_temp
+        |FROM b, t""".stripMargin),
+
+    Query("sample_mixture", (s, d) =>
+      // exact-count training-mix sampling: per-lang targets, lowest-hash
+      // rank per domain; fr excluded by the spec, es target above the
+      // group size at sf<=0.01 -> the take-all clamp path
+      PackOps.mixtureSample(t(s, d, "documents"), "doc_id", "lang",
+        Map("en" -> 50L, "de" -> 40L, "es" -> 100L, "zh" -> 20L)),
+      // unsigned HUGEINT FNV folded to Spark's signed-long order before the
+      // per-domain rank (the sample_bottomk convention)
+      s"""WITH t(domain, tgt) AS (VALUES ('de', 40), ('en', 50), ('es', 100), ('zh', 20)),
+         |f AS (SELECT doc_id, lang AS domain,
+         |   ${fnvSql("doc_id::VARCHAR || '#mix'")} AS fu
+         |  FROM documents),
+         |h AS (SELECT doc_id, domain,
+         |   CAST(CASE WHEN fu >= 9223372036854775808::HUGEINT
+         |     THEN fu - 18446744073709551616::HUGEINT ELSE fu END AS BIGINT) AS h
+         |  FROM f),
+         |r AS (SELECT domain, doc_id,
+         |   row_number() OVER (PARTITION BY domain ORDER BY h, doc_id) AS rn
+         |  FROM h JOIN t USING (domain))
+         |SELECT domain, doc_id, CAST(rn AS BIGINT) AS rn
+         |FROM r JOIN t USING (domain) WHERE rn <= tgt""".stripMargin),
+
+    Query("sample_gumbel_topk", (s, d) =>
+      // Gumbel-top-k: exact weight-proportional sample without
+      // replacement in one pass — the distributed replacement for
+      // sequential weighted draws when mixing corpus sources
+      SketchOps.gumbelTopK(t(s, d, "documents"), "doc_id", "n_chars",
+          k = 100)
+        .select(col("rank"), col("doc_id"), col("w"),
+          round(col("gumbel_key"), 4).as("gumbel_key")),
+      // the priority is one IEEE multiply + divide from the hashed
+      // uniform — exact-rounded ops, so both engines agree on selection
+      // and the (k+1)-th-priority threshold without any rounding tricks
+      // the uniform u = (fnv mod 2^32 + 1)/(2^32 + 1) and both ln calls
+      // run on identical doubles; rank/selection order on the UNROUNDED
+      // key with doc_id tiebreak
+      s"""WITH f AS (
+         |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS w,
+         |   CAST((${fnvSql("doc_id::VARCHAR || '#g'")}
+         |       % 4294967296::HUGEINT) + 1 AS DOUBLE) / 4294967297.0::DOUBLE
+         |     AS u
+         |  FROM documents WHERE doc_id IS NOT NULL AND n_chars > 0),
+         |g AS (SELECT doc_id, w, ln(w) - ln(-ln(u)) AS gk FROM f),
+         |r AS (SELECT doc_id, w, gk,
+         |   CAST(row_number() OVER (ORDER BY gk DESC, doc_id) AS INT)
+         |     AS rank FROM g)
+         |SELECT rank, doc_id, w, round(gk, 4) AS gumbel_key
+         |FROM r WHERE rank <= 100""".stripMargin),
+
+    Query("sample_priority", (s, d) =>
+      // DLT priority sampling: weight = n_chars, top-100 priorities with
+      // the (k+1)-th-priority estimator weights; the priority is one
+      // IEEE multiply + divide per row (no libm), so both engines select
+      // the identical sample and agree on w_est bit-for-bit pre-round
+      SketchOps.prioritySample(t(s, d, "documents"), "doc_id", "n_chars",
+          k = 100)
+        .select(col("doc_id"), col("w"),
+          round(col("priority"), 4).as("priority"),
+          round(col("w_est"), 4).as("w_est")),
+      s"""WITH f AS (
+         |  SELECT doc_id, CAST(n_chars AS DOUBLE) AS w,
+         |   CAST(n_chars AS DOUBLE) * 4294967296.0::DOUBLE /
+         |     CAST((${fnvSql("doc_id::VARCHAR || '#p'")}
+         |       % 4294967296::HUGEINT) + 1 AS DOUBLE) AS pr
+         |  FROM documents WHERE doc_id IS NOT NULL AND n_chars > 0),
+         |c AS (SELECT * FROM f ORDER BY pr DESC, doc_id LIMIT 101),
+         |m AS (SELECT CAST(count(*) AS BIGINT) AS nc, min(pr) AS mn FROM c),
+         |r AS (SELECT doc_id, w, pr,
+         |   row_number() OVER (ORDER BY pr DESC, doc_id) AS rn FROM c)
+         |SELECT doc_id, w, round(pr, 4) AS priority,
+         | round(greatest(w,
+         |   CASE WHEN m.nc <= 100 THEN 0.0::DOUBLE ELSE m.mn END), 4) AS w_est
+         |FROM r, m WHERE rn <= 100""".stripMargin),
+
+    Query("curate_classifier", (s, d) => {
+      // model-based quality gating plumbing (the fastText/DCLM-filter
+      // shape): hashed bag-of-words features × a broadcast weight
+      // vector → logit → sigmoid → keep. Weights here are
+      // deterministic hash stand-ins (training happens offline; at
+      // serve time a linear scorer IS just this broadcast dot product
+      // — a pure map over the corpus after one explode+agg). The logit
+      // is an ordered fold over the bucket-sorted feature array, so
+      // the keep decision (z ≥ 0, evaluated on the unrounded logit) is
+      // engine-exact; only the displayed sigmoid touches libm
+      val z = classifierZ(s, d)
+      z.select(col("doc_id"), round(col("z"), 4).as("z"),
+        round(lit(1.0) / (lit(1.0) + exp(-col("z"))), 4).as("score"),
+        (col("z") >= 0.0).as("keep"))
+    },
+      // the hashed-linear scorer replayed: hash32 stand-in weights, the
+      // same bucket-ordered fold for the logit, keep decided on the
+      // UNROUNDED z (bit-identical by fold order); only sigmoid's exp
+      // touches libm and it lands behind round(4)
+      s"""$classifierZSql
+         |SELECT doc_id, round(z, 4) AS z,
+         | round(1.0::DOUBLE / (1.0::DOUBLE + exp(-z)), 4) AS score,
+         | z >= 0.0::DOUBLE AS keep
+         |FROM z""".stripMargin),
+
+    Query("curate_mix_waterfill", (s, d) => {
+      // mixture-planning waterfill: split a training budget (9/10 of
+      // the corpus, in chars — high enough that small sources cap on
+      // the organic fixture) across sources EQUALLY — except a source
+      // smaller than its equal share contributes everything it has and
+      // its shortfall redistributes to the rest (the classic
+      // waterfilling allocation a data-mixture planner runs before
+      // sampling; sample_mixture/temperature then EXECUTE a plan like
+      // this one). One ascending pass decides the caps: source at rank
+      // k (of S, by (avail, source)) is capped iff
+      // avail·(S−k+1) ≤ T − Σ_{i<k} avail_i — equivalent to the
+      // iterative fixpoint by the downward-closure of caps (verified
+      // by simulation against 5000 random instances); the equal share
+      // then splits the remaining budget with the integer remainder
+      // going to the first residue sources in rank order. All integer
+      // → engine-exact. O(sources) rows after one corpus aggregation.
+      val avail = t(s, d, "documents").groupBy("source")
+        .agg(sum(col("n_chars")).as("avail"))
+      val tot = avail.agg(sum("avail").as("total"),
+        count(lit(1)).as("ns"))
+      val wRank = Window.orderBy(col("avail"), col("source"))
+      val flagged = avail.crossJoin(broadcast(tot))
+        .withColumn("budget", expr("(total * 9) div 10"))
+        .withColumn("rk", row_number().over(wRank).cast("long"))
+        .withColumn("cumprev", coalesce(sum(col("avail")).over(
+          wRank.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .withColumn("capped", col("avail") * (col("ns") - col("rk") + 1L)
+          <= col("budget") - col("cumprev"))
+      val caps = flagged.agg(
+        sum(when(col("capped"), col("avail")).otherwise(0L)).as("cap_sum"),
+        sum(when(col("capped"), 1L).otherwise(0L)).as("n_capped"))
+      flagged.crossJoin(broadcast(caps))
+        .withColumn("m", col("ns") - col("n_capped"))
+        .withColumn("brem", col("budget") - col("cap_sum"))
+        .withColumn("alloc", when(col("capped") || col("m") === 0L,
+            col("avail"))
+          .otherwise(expr("brem div m") +
+            when(col("rk") - col("n_capped") <= col("brem") % col("m"), 1L)
+              .otherwise(0L)))
+        .select(col("source"), col("avail"), col("budget"),
+          col("capped"), col("alloc"))
+    },
+      // longest-first greedy fill replayed with the same cumulative
+      // window (unique (n_tokens desc, doc_id) order → RANGE == ROWS)
+      // the identical one-pass capped-threshold rule, all integer;
+      // remainder to the first residue uncapped sources in rank order
+      """WITH a AS (SELECT source, CAST(sum(n_chars) AS BIGINT) AS avail
+        |           FROM documents GROUP BY source),
+        |t AS (SELECT CAST(sum(avail) AS BIGINT) AS total,
+        |       CAST(count(*) AS BIGINT) AS ns FROM a),
+        |r AS (SELECT source, avail, (total * 9) // 10 AS budget, ns,
+        |   row_number() OVER (ORDER BY avail, source) AS rk,
+        |   coalesce(sum(avail) OVER (ORDER BY avail, source
+        |     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |     AS cumprev
+        |  FROM a CROSS JOIN t),
+        |fl AS (SELECT source, avail, budget, ns, rk,
+        |   avail * (ns - rk + 1) <= budget - cumprev AS capped FROM r),
+        |cp AS (SELECT
+        |   CAST(sum(CASE WHEN capped THEN avail ELSE 0 END) AS BIGINT)
+        |     AS cap_sum,
+        |   CAST(sum(CASE WHEN capped THEN 1 ELSE 0 END) AS BIGINT)
+        |     AS n_capped
+        |  FROM fl)
+        |SELECT source, avail, budget, capped,
+        | CASE WHEN capped OR ns - n_capped = 0 THEN avail
+        |  ELSE (budget - cap_sum) // (ns - n_capped) +
+        |   CASE WHEN rk - n_capped <= (budget - cap_sum) % (ns - n_capped)
+        |        THEN 1 ELSE 0 END
+        | END AS alloc
+        |FROM fl CROSS JOIN cp""".stripMargin),
+
+    Query("curate_budget", (s, d) => {
+      // budget-constrained selection: per lang, rank docs longest-first
+      // (deterministic doc_id tie-break) and keep while the cumulative
+      // token count stays within a 2000-token stratum budget — the
+      // greedy fill a token-budgeted mixture draw runs. One exchange on
+      // lang; integers throughout
+      val docs = t(s, d, "documents")
+        .select(col("lang"), col("doc_id"),
+          size(TermOps.tokens(col("text"))).cast("long").as("n_tokens"))
+      val w = Window.partitionBy(col("lang"))
+        .orderBy(col("n_tokens").desc, col("doc_id").asc)
+      docs.withColumn("cum_tokens", sum(col("n_tokens")).over(w))
+        .filter(col("cum_tokens") <= 2000L)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          max(col("cum_tokens")).as("n_tokens_kept"))
+    },
+      """WITH d AS (
+        |  SELECT lang, doc_id,
+        |   CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |     x -> x <> '')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |c AS (
+        |  SELECT lang, doc_id, n_tokens,
+        |   sum(n_tokens) OVER (PARTITION BY lang
+        |     ORDER BY n_tokens DESC, doc_id) AS cum
+        |  FROM d)
+        |SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+        | CAST(max(cum) AS BIGINT) AS n_tokens_kept
+        |FROM c WHERE cum <= 2000 GROUP BY lang""".stripMargin),
+
+    Query("curate_release", (s, d) => {
+      // the END-TO-END corpus release: exact-dedup survivors → quality/
+      // language gate (one map-only pass) → deterministic 90/5/5 split
+      // (the sample_split hash rule) → the per-split release manifest a
+      // training run consumes (doc counts, token budget, language
+      // spread, id range). Composes the gated chains; one dedup
+      // aggregation + one semi-join + one split aggregation.
+      val docs = t(s, d, "documents")
+      val keep = DedupOps.exactGroups(docs, "doc_id", "text")
+        .select(col("keep_id").as("doc_id"))
+      TextAnalysisOps.withLangId(docs, "text")
+        .withColumn("n_tokens", size(TermOps.tokens(col("text"))))
+        .filter(col("n_tokens") >= 20 && col("pred_lang") === "en")
+        .join(keep, Seq("doc_id"), "left_semi")
+        .withColumn("b", pmod(
+          expr("fnv64(concat(cast(doc_id as string), '#split'))")
+            .bitwiseAND(lit(4294967295L)), lit(100L)))
+        .withColumn("split", when(col("b") < 90, "train")
+          .when(col("b") < 95, "val").otherwise("test"))
+        .groupBy("split")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("sum_tokens"),
+          countDistinct(col("lang")).as("n_langs"),
+          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
+    },
+      // the composed release manifest: dedup keep-list ⋈ quality/lang
+      // gate, split by the replayed 90/5/5 hash rule
+      s"""WITH keep AS (
+         |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+         |qual AS (
+         |  SELECT doc_id, lang,
+         |   CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+         |    x -> x <> '')) AS INT) AS n_tokens
+         |  FROM documents),
+         |lang AS ($langIdSql),
+         |kept AS (
+         |  SELECT q.doc_id, q.lang, q.n_tokens
+         |  FROM keep k JOIN qual q USING (doc_id) JOIN lang USING (doc_id)
+         |  WHERE n_tokens >= 20 AND pred_lang = 'en'),
+         |sp AS (
+         |  SELECT *, CAST(${fnvSql("doc_id::VARCHAR || '#split'")}
+         |    % 4294967296::HUGEINT AS BIGINT) % 100 AS b
+         |  FROM kept)
+         |SELECT CASE WHEN b < 90 THEN 'train'
+         |  WHEN b < 95 THEN 'val' ELSE 'test' END AS split,
+         | count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
+         | CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+         | min(doc_id) AS min_id, max(doc_id) AS max_id
+         |FROM sp GROUP BY 1""".stripMargin),
+
+    Query("curate_docs", (s, d) => {
+      // composed training-data curation pipeline: quality floor (≥ 20
+      // tokens) + language filter (en) computed in ONE map-only pass over
+      // the docs (no metric joins), then a semi-join against the
+      // exact-dedup survivors — the only shuffle besides the dedup
+      // aggregation itself. The shape a 100 TB pretraining-corpus pass
+      // runs; CuratePlanSpec pins it.
+      val docs = t(s, d, "documents")
+      val keep = DedupOps.exactGroups(docs, "doc_id", "text")
+        .select(col("keep_id").as("doc_id"))
+      TextAnalysisOps.withLangId(docs, "text")
+        .withColumn("n_tokens", size(TermOps.tokens(col("text"))))
+        .filter(col("n_tokens") >= 20 && col("pred_lang") === "en")
+        .join(keep, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("n_tokens"), col("pred_lang"))
+    },
+      s"""WITH keep AS (
+         |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+         |qual AS (
+         |  SELECT doc_id, CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+         |    x -> x <> '')) AS INT) AS n_tokens
+         |  FROM documents),
+         |lang AS ($langIdSql)
+         |SELECT k.doc_id, n_tokens, pred_lang
+         |FROM keep k JOIN qual USING (doc_id) JOIN lang USING (doc_id)
+         |WHERE n_tokens >= 20 AND pred_lang = 'en'""".stripMargin)
+  )
+}

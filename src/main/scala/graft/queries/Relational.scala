@@ -1,0 +1,1512 @@
+package graft
+package queries
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import graft.operators._
+import QueryKit._
+
+/** Relational queries over the TPC-H-style tables and the event log:
+  * filters, joins, aggregates, sorts and windows (q*, p*, j*, a*, o*, w*):
+  * one [[Query]] record per query. */
+private[graft] object Relational {
+
+  private val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+
+  /** F17 unicode-analyzer tokenization (letter/digit runs) — mirrors
+    * `TermOps.tokens(_, Unicode)`: both RE2 (DuckDB) and Java regex give
+    * Unicode general-category semantics to \p{L} and \p{N}. */
+  private val tokensUnicodeSub =
+    """SELECT doc_id, unnest(regexp_split_to_array(lower(text),
+      | '[^\p{L}\p{N}]+')) AS term
+      |FROM documents""".stripMargin
+
+  private val tfUnicodeSub =
+    s"""SELECT doc_id, term, count(*) AS tf FROM ($tokensUnicodeSub)
+       |WHERE term <> '' GROUP BY doc_id, term""".stripMargin
+
+  val all: Seq[Query] = Seq(
+    Query("q1_pricing_summary", (s, d) =>
+      t(s, d, "lineitem")
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"),
+          round(sum(col("l_extendedprice")), 2).as("sum_price"),
+          round(avg(col("l_discount")), 6).as("avg_disc"),
+          count(lit(1)).as("n_rows")),
+      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,
+        | round(sum(l_extendedprice),2) AS sum_price, round(avg(l_discount),6) AS avg_disc,
+        | count(*) AS n_rows
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
+
+    Query("q3_top_revenue", (s, d) =>
+      t(s, d, "lineitem")
+        .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(broadcast(t(s, d, "customer")), col("o_custkey") === col("c_custkey"))
+        .groupBy(col("o_orderkey"), col("c_mktsegment"))
+        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
+          .as("revenue"))
+        .orderBy(col("revenue").desc, col("o_orderkey"))
+        .limit(10),
+      """SELECT o_orderkey, c_mktsegment,
+        | round(sum(l_extendedprice*(1.0-l_discount)),2) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey=o_orderkey
+        | JOIN customer ON o_custkey=c_custkey
+        |GROUP BY o_orderkey, c_mktsegment
+        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin),
+
+    Query("q5_local_supplier", (s, d) => {
+      // TPC-H Q5 shape — the six-table join-order/broadcast anchor:
+      // revenue by nation where the customer and the supplier share a
+      // nation, region- and year-filtered. Declared flat and left to
+      // Catalyst/AQE: region⋈nation is pinned broadcast (25 rows);
+      // supplier/customer broadcast at test scale and degrade to
+      // shuffled hash joins on the keys at 100 TB — the filters land
+      // before every join, so each stage's build side is minimal.
+      val asiaNations = t(s, d, "nation")
+        .join(t(s, d, "region").filter(col("r_name") === "ASIA"),
+          col("n_regionkey") === col("r_regionkey"))
+        .select(col("n_nationkey"), col("n_name"))
+      t(s, d, "lineitem")
+        .join(t(s, d, "orders")
+            .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
+              col("o_orderdate") < lit("1997-01-01").cast("timestamp")),
+          col("l_orderkey") === col("o_orderkey"))
+        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
+        .join(t(s, d, "supplier"),
+          col("l_suppkey") === col("s_suppkey") &&
+            col("c_nationkey") === col("s_nationkey"))
+        .join(broadcast(asiaNations),
+          col("s_nationkey") === col("n_nationkey"))
+        .groupBy(col("n_name"))
+        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
+          .as("revenue"))
+    },
+      """SELECT n_name,
+        | round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
+        |FROM lineitem
+        | JOIN orders ON l_orderkey = o_orderkey
+        | JOIN customer ON o_custkey = c_custkey
+        | JOIN supplier ON l_suppkey = s_suppkey
+        |  AND c_nationkey = s_nationkey
+        | JOIN nation ON s_nationkey = n_nationkey
+        | JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        | AND o_orderdate >= TIMESTAMP '1996-01-01'
+        | AND o_orderdate < TIMESTAMP '1997-01-01'
+        |GROUP BY n_name""".stripMargin),
+
+    Query("q18_large_orders", (s, d) => {
+      // TPC-H Q18 shape — the having-semi-join anchor: orders whose
+      // total quantity crosses a threshold, re-joined to their header
+      // and customer. The qualifying set is the per-key aggregate
+      // filtered BEFORE any wide join (map-side partial sum, one
+      // exchange on l_orderkey), so the expensive join fan-in only ever
+      // sees qualifying keys; quantities are integer-valued doubles, so
+      // the > 350 cut has no float boundary.
+      val big = t(s, d, "lineitem")
+        .groupBy(col("l_orderkey"))
+        .agg(sum(col("l_quantity")).as("qty"))
+        .filter(col("qty") > 350.0)
+      t(s, d, "orders")
+        .join(big, col("o_orderkey") === col("l_orderkey"))
+        .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
+        .select(col("c_name"), col("o_orderkey"),
+          date_format(col("o_orderdate"), "yyyy-MM-dd HH:mm:ss")
+            .as("o_orderdate"),
+          col("o_totalprice"), round(col("qty"), 2).as("qty"))
+    },
+      """WITH big AS (
+        | SELECT l_orderkey, sum(l_quantity) AS qty
+        | FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 350)
+        |SELECT c_name, o_orderkey,
+        | strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS o_orderdate,
+        | o_totalprice, round(qty, 2) AS qty
+        |FROM orders JOIN big ON o_orderkey = l_orderkey
+        | JOIN customer ON o_custkey = c_custkey""".stripMargin),
+
+    Query("q21_blame_supplier", (s, d) => {
+      // TPC-H Q21 shape — the exists/not-exists blame anchor: suppliers
+      // whose shipment was late (> 90 days after the order date,
+      // integer-exact epoch-second arithmetic — this corpus carries no
+      // commit/receipt dates) in a MULTI-supplier finished order where
+      // NO OTHER supplier was late. EXISTS compiles to a left-semi and
+      // NOT EXISTS to a left-anti, both shuffled on l_orderkey so the
+      // big relations co-locate once; supplier/nation broadcast. The
+      // (numwait DESC, s_name) order with unique names makes the
+      // LIMIT 100 cut deterministic.
+      // r18 optimization (guide §2.4/§3): the semi+anti formulation read
+      // lineitem three times and shuffled three pair relations (l1,
+      // others-distinct, lateOthers-distinct) plus two join exchanges.
+      // EXISTS/NOT EXISTS over the same order are a per-order aggregate:
+      // group once to (orderkey, suppkey, late_lines), then per order
+      // count suppliers and late suppliers — a blamed supplier is a late
+      // one in a multi-supplier order whose late-supplier count is
+      // exactly 1 (itself). numwait sums the pair's late LINE count,
+      // which is what the row-per-late-line semi/anti chain counted.
+      // One lineitem scan, one pair exchange, one order-keyed window.
+      val li = t(s, d, "lineitem")
+        .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
+      val ord = t(s, d, "orders").filter(col("o_orderstatus") === "F")
+        .select(col("o_orderkey"), col("o_orderdate"))
+      val joined = li.join(ord, col("l_orderkey") === col("o_orderkey"))
+        .withColumn("late", col("l_shipdate").cast("long") -
+          col("o_orderdate").cast("long") > lit(90L * 86400L))
+      val grp = joined.groupBy(col("l_orderkey"), col("l_suppkey"))
+        .agg(sum(when(col("late"), 1L).otherwise(0L)).as("late_lines"))
+      val w = Window.partitionBy(col("l_orderkey"))
+      val blamed = grp
+        .withColumn("n_supp", count(lit(1)).over(w))
+        .withColumn("n_late_supp",
+          sum(when(col("late_lines") > 0L, 1L).otherwise(0L)).over(w))
+        .filter(col("late_lines") > 0L && col("n_supp") >= 2L &&
+          col("n_late_supp") === 1L)
+      blamed
+        .join(broadcast(t(s, d, "supplier")
+          .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))),
+          col("l_suppkey") === col("s_suppkey"))
+        .join(broadcast(t(s, d, "nation")
+          .select(col("n_nationkey"), col("n_name"))),
+          col("s_nationkey") === col("n_nationkey"))
+        .groupBy(col("s_name"), col("n_name"))
+        .agg(sum(col("late_lines")).as("numwait"))
+        .orderBy(col("numwait").desc, col("s_name").asc)
+        .limit(100)
+    },
+      // the literal exists/not-exists form; lateness mirrors as exact
+      // epoch-second integers; (numwait DESC, s_name) + unique names
+      // make LIMIT 100 deterministic
+      """WITH j AS (
+        |  SELECT l.l_orderkey, l.l_suppkey,
+        |   epoch_us(l.l_shipdate) // 1000000 -
+        |     epoch_us(o.o_orderdate) // 1000000 > 90 * 86400 AS late
+        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |  WHERE o.o_orderstatus = 'F'),
+        |l1 AS (SELECT l_orderkey, l_suppkey FROM j WHERE late)
+        |SELECT s_name, n_name, CAST(count(*) AS BIGINT) AS numwait
+        |FROM l1
+        | JOIN supplier ON l1.l_suppkey = s_suppkey
+        | JOIN nation ON s_nationkey = n_nationkey
+        |WHERE EXISTS (
+        |   SELECT 1 FROM lineitem l2
+        |   WHERE l2.l_orderkey = l1.l_orderkey
+        |     AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (
+        |   SELECT 1 FROM j l3
+        |   WHERE l3.l_orderkey = l1.l_orderkey
+        |     AND l3.l_suppkey <> l1.l_suppkey AND l3.late)
+        |GROUP BY s_name, n_name
+        |ORDER BY numwait DESC, s_name ASC LIMIT 100""".stripMargin),
+
+    Query("p1_filter_eq", (s, d) =>
+      t(s, d, "documents").filter(col("lang") === "en")
+        .groupBy(col("source")).agg(count(lit(1)).as("n_docs")),
+      "SELECT source, count(*) AS n_docs FROM documents WHERE lang='en' GROUP BY source"),
+
+    Query("p3_time_range", (s, d) =>
+      t(s, d, "events")
+        .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
+          col("ts") < lit("2024-01-07").cast("timestamp"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value")),
+      """SELECT event_type, count(*) AS n_events, round(sum(value),2) AS sum_value
+        |FROM events
+        |WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-07'
+        |GROUP BY event_type""".stripMargin),
+
+    // same predicate over the µs-rewritten events table: the production
+    // layout where ts predicates prune parquet row groups (PlanSpec pins
+    // the PushedFilters claim; this row pins value-identity with p3)
+    Query("p3_time_range_us", (s, d) =>
+      Tables.eventsMicros(s, d)
+        .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
+          col("ts") < lit("2024-01-07").cast("timestamp"))
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value")),
+      """SELECT event_type, count(*) AS n_events, round(sum(value),2) AS sum_value
+        |FROM events
+        |WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-07'
+        |GROUP BY event_type""".stripMargin),
+
+    Query("p4_projection", (s, d) =>
+      t(s, d, "documents").filter(col("n_chars") > 200)
+        .select(col("doc_id"), col("lang"), col("n_chars")),
+      "SELECT doc_id, lang, n_chars FROM documents WHERE n_chars > 200"),
+
+    Query("p5_len_filter", (s, d) =>
+      t(s, d, "documents")
+        .filter(col("n_chars") >= 11 && col("n_chars") <= 1000000)
+        .agg(count(lit(1)).as("n_docs"), round(avg(col("n_chars")), 4).as("avg_chars")),
+      """SELECT count(*) AS n_docs, round(avg(n_chars),4) AS avg_chars
+        |FROM documents WHERE n_chars BETWEEN 11 AND 1000000""".stripMargin),
+
+    Query("p7_filter_sort", (s, d) =>
+      t(s, d, "events").filter(col("event_type") === "purchase")
+        .orderBy(col("ts"), col("event_id"))
+        .select(col("event_id"), date_format(col("ts"), tsFmt).as("ts_str"),
+          round(col("value"), 2).as("value")),
+      """SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
+        | round(value,2) AS value
+        |FROM events WHERE event_type='purchase' ORDER BY ts, event_id""".stripMargin),
+
+    Query("p8_semijoin", (s, d) => {
+      import s.implicits._
+      val seeds = Seq(1L, 2L, 3L, 5L, 8L, 13L, 21L, 34L).toDF("user_id")
+      t(s, d, "events").join(broadcast(seeds), Seq("user_id"), "left_semi")
+        .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
+    },
+      """SELECT user_id, count(*) AS n_events FROM events
+        |WHERE user_id IN (1,2,3,5,8,13,21,34) GROUP BY user_id""".stripMargin),
+
+    Query("j1_broadcast_join", (s, d) =>
+      t(s, d, "orders")
+        .join(broadcast(t(s, d, "customer")), col("o_custkey") === col("c_custkey"))
+        .groupBy(col("c_mktsegment"))
+        .agg(count(lit(1)).as("n_orders"),
+          round(sum(col("o_totalprice")), 2).as("sum_price")),
+      """SELECT c_mktsegment, count(*) AS n_orders, round(sum(o_totalprice),2) AS sum_price
+        |FROM orders JOIN customer ON o_custkey=c_custkey GROUP BY c_mktsegment""".stripMargin),
+
+    Query("j2_double_join", (s, d) =>
+      t(s, d, "customer")
+        .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
+        .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
+        .groupBy(col("r_name"))
+        .agg(count(lit(1)).as("n_cust"), round(avg(col("c_acctbal")), 4).as("avg_bal")),
+      """SELECT r_name, count(*) AS n_cust, round(avg(c_acctbal),4) AS avg_bal
+        |FROM customer JOIN nation ON c_nationkey=n_nationkey
+        | JOIN region ON n_regionkey=r_regionkey GROUP BY r_name""".stripMargin),
+
+    Query("j4_left_coalesce", (s, d) =>
+      t(s, d, "events")
+        .join(broadcast(t(s, d, "customer")),
+          col("user_id") * 20 === col("c_custkey"), "left")
+        .select(coalesce(col("c_mktsegment"), lit("UNRESOLVED")).as("segment"))
+        .groupBy(col("segment")).agg(count(lit(1)).as("n_events")),
+      """SELECT coalesce(c_mktsegment, 'UNRESOLVED') AS segment, count(*) AS n_events
+        |FROM events LEFT JOIN customer ON user_id*20 = c_custkey
+        |GROUP BY segment""".stripMargin),
+
+    Query("j5_freebase_join", (s, d) =>
+      t(s, d, "documents")
+        .withColumn("fb_key",
+          GraftFunctions.freebaseEncode(concat(col("lang"), lit("/"), col("source"))))
+        .groupBy(col("fb_key")).agg(count(lit(1)).as("n_docs")),
+      """SELECT lang || '$002F' || source AS fb_key, count(*) AS n_docs
+        |FROM documents GROUP BY fb_key""".stripMargin),
+
+    Query("a1_max_timestamp", (s, d) =>
+      t(s, d, "events").agg(
+        date_format(max(col("ts")), tsFmt).as("max_ts"),
+        date_format(min(col("ts")), tsFmt).as("min_ts"),
+        count(lit(1)).as("n_events")),
+      """SELECT strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS max_ts,
+        | strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS min_ts,
+        | count(*) AS n_events FROM events""".stripMargin),
+
+    Query("a2_group_min", (s, d) =>
+      t(s, d, "events").groupBy(col("user_id"))
+        .agg(date_format(min(col("ts")), tsFmt).as("first_ts"),
+          count(lit(1)).as("n_events")),
+      """SELECT user_id, strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS first_ts,
+        | count(*) AS n_events FROM events GROUP BY user_id""".stripMargin),
+
+    Query("a3_distinct_count", (s, d) =>
+      t(s, d, "events").agg(
+        countDistinct(col("user_id")).as("n_users"),
+        countDistinct(col("event_type")).as("n_types")),
+      """SELECT count(DISTINCT user_id) AS n_users,
+        | count(DISTINCT event_type) AS n_types FROM events""".stripMargin),
+
+    Query("a4_term_stats", (s, d) =>
+      TermOps.termStats(t(s, d, "documents"), "doc_id", "text", minDf = 5L),
+      s"""SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
+         |FROM ($tfSub) GROUP BY term HAVING count(*) >= 5""".stripMargin),
+
+    // F17 analyzer seam: the same stats under the unicode-punctuation
+    // tokenizer (each analyzer vs its own oracle)
+    Query("a4_term_stats_unicode", (s, d) =>
+      TermOps.termStats(t(s, d, "documents"), "doc_id", "text", minDf = 5L,
+        analyzer = TermOps.Unicode),
+      s"""SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
+         |FROM ($tfUnicodeSub) GROUP BY term HAVING count(*) >= 5""".stripMargin),
+
+    Query("a10_tf_unicode", (s, d) =>
+      TermOps.tfPostings(t(s, d, "documents"), "doc_id", "text",
+          analyzer = TermOps.Unicode)
+        .filter(col("tf") >= 3),
+      s"SELECT doc_id, term, tf FROM ($tfUnicodeSub) WHERE tf >= 3"),
+
+    Query("a5_dictionary", (s, d) =>
+      TermOps.dictionary(t(s, d, "documents"), "doc_id", "text", minDf = 5L),
+      s"""SELECT term, df, cf, CAST(row_number() OVER (ORDER BY df DESC, term ASC) AS INT) AS id
+         |FROM (SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
+         |      FROM ($tfSub) GROUP BY term HAVING count(*) >= 5)""".stripMargin),
+
+    Query("a5_dict_scalable", (s, d) =>
+      // same ids as a5_dictionary, produced by the range-partitioned rank
+      // (no single-task global window) — both run against the same oracle
+      TermOps.dictionaryScalable(t(s, d, "documents"), "doc_id", "text",
+        minDf = 5L, buckets = 8),
+      s"""SELECT term, df, cf, CAST(row_number() OVER (ORDER BY df DESC, term ASC) AS INT) AS id
+         |FROM (SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
+         |      FROM ($tfSub) GROUP BY term HAVING count(*) >= 5)""".stripMargin),
+
+    Query("a7_cooccurrence", (s, d) => {
+      val c = t(s, d, "events")
+        .groupBy(col("user_id"), to_date(col("ts")).as("day"), col("event_type"))
+        .agg(count(lit(1)).as("c"))
+      val a = c.select(col("user_id"), col("day"), col("event_type").as("type_a"), col("c").as("ca"))
+      val b = c.select(col("user_id"), col("day"), col("event_type").as("type_b"), col("c").as("cb"))
+      a.join(b, Seq("user_id", "day")).filter(col("type_a") < col("type_b"))
+        .groupBy(col("type_a"), col("type_b"))
+        .agg(sum(least(col("ca"), col("cb"))).as("w"), count(lit(1)).as("n_pairs"))
+    },
+      """WITH c AS (
+        |  SELECT user_id, CAST(ts AS DATE) AS day, event_type, count(*) AS c
+        |  FROM events GROUP BY 1,2,3)
+        |SELECT a.event_type AS type_a, b.event_type AS type_b,
+        | CAST(sum(least(a.c, b.c)) AS BIGINT) AS w, count(*) AS n_pairs
+        |FROM c a JOIN c b ON a.user_id=b.user_id AND a.day=b.day
+        | AND a.event_type < b.event_type
+        |GROUP BY type_a, type_b""".stripMargin),
+
+    Query("a8_dense_series", (s, d) =>
+      RevisionOps.denseDailyCounts(t(s, d, "events"), "event_type", "ts",
+        "2024-01-01", "2024-01-31"),
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS c FROM events
+        |  WHERE ts >= TIMESTAMP '2024-01-01' AND ts < TIMESTAMP '2024-02-01'
+        |  GROUP BY 1,2),
+        |axis AS (
+        |  SELECT event_type, CAST(unnest(generate_series(DATE '2024-01-01',
+        |    DATE '2024-01-31', INTERVAL 1 DAY)) AS DATE) AS day
+        |  FROM (SELECT DISTINCT event_type FROM daily))
+        |SELECT axis.event_type, strftime(axis.day, '%Y-%m-%d') AS day,
+        | CAST(coalesce(daily.c, 0) AS BIGINT) AS cnt
+        |FROM axis LEFT JOIN daily
+        | ON axis.event_type=daily.event_type AND axis.day=daily.day""".stripMargin),
+
+    Query("a9_vector_sum", (s, d) =>
+      // unordered double sum, JUSTIFIED (r14 sweep): embedding cells
+      // carry full random mantissas, so the sum's distance to a 0.0005
+      // rounding boundary is uniform ~1e-4 while reorder error is
+      // ~√n·eps·Σ|e| ≈ 1e-13 — nine orders of margin, and the fixture
+      // surface is measured stable across 13 rounds of partition-order
+      // shuffles. Integer-scaling is impossible here without changing
+      // the operator's semantics (the data is not fixed-decimal).
+      t(s, d, "embeddings")
+        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "e")))
+        .groupBy(col("label"), col("pos"))
+        .agg(round(sum(col("e")), 3).as("s")),
+      """SELECT label, CAST(i - 1 AS INT) AS pos, round(sum(e), 3) AS s
+        |FROM (SELECT label, unnest(embedding) AS e,
+        |       generate_subscripts(embedding, 1) AS i FROM embeddings)
+        |GROUP BY label, pos""".stripMargin),
+
+    Query("a10_tf_postings", (s, d) =>
+      TermOps.tfPostings(t(s, d, "documents"), "doc_id", "text")
+        .filter(col("tf") >= 3),
+      s"SELECT doc_id, term, tf FROM ($tfSub) WHERE tf >= 3"),
+
+    Query("a12_doc_length", (s, d) =>
+      TermOps.docLengths(t(s, d, "documents"), "doc_id", "text"),
+      """SELECT doc_id, CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        | x -> x <> '')) AS INT) AS doc_len FROM documents""".stripMargin),
+
+    Query("a13_distinct_pairs", (s, d) =>
+      t(s, d, "events").select(col("user_id"), col("event_type")).distinct(),
+      "SELECT DISTINCT user_id, event_type FROM events"),
+
+    Query("a6_doc_vectors", (s, d) => {
+      val docs = t(s, d, "documents")
+      val dict = TermOps.dictionary(docs, "doc_id", "text", minDf = 5L)
+      TermOps.docVectors(docs, "doc_id", "text", dict)
+        .select(col("doc_id"), size(col("term_ids")).as("n_ids"))
+    },
+      s"""WITH tf AS ($tfSub),
+         |dict AS (SELECT term FROM tf GROUP BY term HAVING count(*) >= 5)
+         |SELECT doc_id, CAST(count(*) AS INT) AS n_ids
+         |FROM tf JOIN dict USING (term) GROUP BY doc_id""".stripMargin),
+
+    Query("o1_sort_limit", (s, d) =>
+      t(s, d, "events").orderBy(col("ts"), col("event_id")).limit(100)
+        .select(col("event_id"), date_format(col("ts"), tsFmt).as("ts_str"),
+          col("event_type")),
+      """SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str, event_type
+        |FROM events ORDER BY ts, event_id LIMIT 100""".stripMargin),
+
+    Query("w1_lag_pairs", (s, d) =>
+      RevisionOps.pairs(t(s, d, "events"), "user_id", "ts",
+          Seq("event_id", "value"), "event_id")
+        .select(col("event_id"), col("prev_event_id"),
+          round(col("value") - col("prev_value"), 2).as("value_delta")),
+      """SELECT event_id,
+        | lag(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_event_id,
+        | round(value - lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id), 2)
+        |   AS value_delta
+        |FROM events""".stripMargin),
+
+    Query("w9_asof_tolerance", (s, d) => {
+      // as-of join with MAX STALENESS (pandas merge_asof's tolerance):
+      // a match older than the bound is dropped to nulls instead of
+      // silently joining stale state — the contract a feature-store
+      // lookup actually wants. Same one-pass nearest carry; the
+      // tolerance is a post-filter on the carried delta.
+      val ev = t(s, d, "events")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("ts"), col("user_id"))
+      val views = ev.filter(col("event_type") === "view")
+        .groupBy(col("user_id"), col("ts"))
+        .agg(max(col("event_id")).as("view_id"))
+        .withColumn("vts", col("ts"))
+      AsofOps.asofJoin(purchases, views, "user_id", "ts",
+          Seq("view_id", "vts"))
+        .withColumn("stale",
+          expr("CAST(ts AS LONG) - CAST(vts AS LONG)") > 3600L)
+        .select(col("event_id"), date_format(col("ts"), tsFmt).as("ts_str"),
+          when(col("stale"), lit(null).cast("long"))
+            .otherwise(col("view_id")).as("view_id"),
+          coalesce(col("stale"), lit(false)).as("dropped_stale"))
+    },
+      // ASOF LEFT JOIN + the staleness CASE; a null match stays null and
+      // dropped_stale coalesces to false on both engines
+      """WITH purchases AS (
+        |  SELECT event_id, ts, user_id FROM events
+        |  WHERE event_type = 'purchase'),
+        |views AS (
+        |  SELECT user_id, ts, max(event_id) AS view_id
+        |  FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
+        |SELECT p.event_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
+        | CASE WHEN epoch_us(p.ts) // 1000000 - epoch_us(v.ts) // 1000000
+        |        > 3600 THEN NULL ELSE v.view_id END AS view_id,
+        | coalesce(epoch_us(p.ts) // 1000000 - epoch_us(v.ts) // 1000000
+        |   > 3600, FALSE) AS dropped_stale
+        |FROM purchases p ASOF LEFT JOIN views v
+        | ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin),
+
+    Query("w8_session_native", (s, d) =>
+      // Spark's BUILT-IN session_window aggregation (the native sibling
+      // of the hand-built w6 gap sessionizer): one session-window
+      // groupBy, merge rule = next event strictly inside [start,
+      // last + gap) — the oracle replays that exact comparator (a gap
+      // of EXACTLY 15 min starts a new session). Same single-exchange
+      // shape as any keyed aggregation.
+      t(s, d, "events")
+        .groupBy(col("user_id"),
+          session_window(col("ts"), "15 minutes").as("sw"))
+        .agg(count(lit(1)).as("n_events"),
+          round(sum(col("value")), 2).as("sum_value"))
+        .select(col("user_id"),
+          date_format(col("sw.start"), tsFmt).as("start_str"),
+          col("n_events"), col("sum_value")),
+      // session_window's strict merge comparator: a gap of exactly the
+      // window duration STARTS a new session (>= in new_s)
+      """WITH e AS (SELECT user_id, ts, epoch_ms(ts) AS tms, value
+        |           FROM events),
+        |f AS (
+        |  SELECT user_id, ts, tms, value,
+        |   CASE WHEN lag(tms) OVER w IS NULL
+        |          OR tms - lag(tms) OVER w >= 900000
+        |        THEN 1 ELSE 0 END AS new_s
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tms)),
+        |g AS (
+        |  SELECT user_id, ts, value,
+        |   sum(new_s) OVER (PARTITION BY user_id ORDER BY tms
+        |     ROWS UNBOUNDED PRECEDING) AS sess
+        |  FROM f)
+        |SELECT user_id,
+        | strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS start_str,
+        | count(*) AS n_events, round(sum(value), 2) AS sum_value
+        |FROM g GROUP BY user_id, sess""".stripMargin),
+
+    Query("a19_mode", (s, d) =>
+      // statistical mode per group (§2.5 completeness): each user's
+      // modal event_type, ties to the lexicographically smallest —
+      // max_by over the (user, type) counts, map-side combinable
+      t(s, d, "events")
+        .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
+        .groupBy("user_id")
+        .agg(min_by(struct(col("event_type").as("mode_type"), col("n")),
+          struct((lit(0L) - col("n")).as("negn"), col("event_type"))).as("m"))
+        .select(col("user_id"), col("m.mode_type").as("mode_type"),
+          col("m.n").as("n_mode")),
+      // mode via (-n, type) argmin — ties to the smallest type
+      """WITH c AS (SELECT user_id, event_type,
+        |    CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
+        |r AS (SELECT user_id, event_type, n,
+        |       row_number() OVER (PARTITION BY user_id
+        |         ORDER BY n DESC, event_type ASC) AS rk FROM c)
+        |SELECT user_id, event_type AS mode_type, n AS n_mode
+        |FROM r WHERE rk = 1""".stripMargin),
+
+    Query("o8_set_ops", (s, d) => {
+      // set operators (SURVEY §2.6's "available for free" row, now
+      // gated): INTERSECT / EXCEPT / UNION over the clicker and buyer
+      // user sets — audience overlap arithmetic. Each op is one
+      // distinct + one hash set-op exchange; the three one-row
+      // aggregates union into the audit relation.
+      val ev = t(s, d, "events")
+      val clickers = ev.filter(col("event_type") === "click")
+        .select(col("user_id")).distinct()
+      val buyers = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id")).distinct()
+      def agg(df: DataFrame, op: String) =
+        df.agg(lit(op).as("op"), count(lit(1)).as("n_users"),
+          coalesce(sum(col("user_id")), lit(0L)).as("sum_ids"))
+      agg(clickers.intersect(buyers), "intersect")
+        .unionByName(agg(clickers.except(buyers), "except"))
+        .unionByName(agg(clickers.union(buyers).distinct(), "union"))
+    },
+      // native INTERSECT/EXCEPT/UNION on both engines
+      """WITH c AS (SELECT DISTINCT user_id FROM events
+        |           WHERE event_type = 'click'),
+        |b AS (SELECT DISTINCT user_id FROM events
+        |      WHERE event_type = 'purchase'),
+        |i AS (SELECT user_id FROM c INTERSECT SELECT user_id FROM b),
+        |e AS (SELECT user_id FROM c EXCEPT SELECT user_id FROM b),
+        |u AS (SELECT user_id FROM c UNION SELECT user_id FROM b)
+        |SELECT 'intersect' AS op, count(*) AS n_users,
+        | CAST(coalesce(sum(user_id), 0) AS BIGINT) AS sum_ids FROM i
+        |UNION ALL SELECT 'except', count(*),
+        | CAST(coalesce(sum(user_id), 0) AS BIGINT) FROM e
+        |UNION ALL SELECT 'union', count(*),
+        | CAST(coalesce(sum(user_id), 0) AS BIGINT) FROM u""".stripMargin),
+
+    Query("w7_asof_nearest", (s, d) => {
+      // nearest-in-time as-of join (either direction): each purchase
+      // picks the CLOSEST view, not merely the latest preceding one —
+      // the alignment rule for sensor/metric joins where the next
+      // reading can be closer than the previous. One sorted pass per
+      // key carries both neighbors (AsofOps.asofNearest); selection
+      // compares EXACT microsecond distance (oracle: ORDER BY delta_us)
+      // so same-second neighbors never pseudo-tie; the reported delta
+      // stays in whole floor-seconds; exact-equidistant prefers prev.
+      val ev = t(s, d, "events")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("ts"), col("user_id"))
+      val views = ev.filter(col("event_type") === "view")
+        .groupBy(col("user_id"), col("ts"))
+        .agg(max(col("event_id")).as("view_id"))
+      AsofOps.asofNearest(purchases, views, "user_id", "ts", Seq("view_id"))
+        .select(col("event_id"), date_format(col("ts"), tsFmt).as("ts_str"),
+          date_format(col("matched_ts"), tsFmt).as("matched_ts_str"),
+          col("delta"), col("view_id"))
+    },
+      // nearest of (last preceding, first following) per purchase; floor-
+      // second distances, prev wins ties — (delta, vts) ordering encodes
+      // exactly that rule because prev's vts is the smaller at a tie
+      """WITH p AS (SELECT event_id, ts, user_id FROM events
+        |           WHERE event_type = 'purchase'),
+        |v AS (SELECT user_id, ts, max(event_id) AS view_id
+        |      FROM events WHERE event_type = 'view' GROUP BY 1, 2),
+        |c AS (SELECT p.event_id, p.ts, v.ts AS vts, v.view_id,
+        |       abs(epoch_us(v.ts) - epoch_us(p.ts)) AS delta_us,
+        |       abs(epoch_us(v.ts) // 1000000 - epoch_us(p.ts) // 1000000)
+        |         AS delta
+        |      FROM p LEFT JOIN v ON p.user_id = v.user_id),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY event_id
+        |        ORDER BY delta_us, vts) AS rn FROM c)
+        |SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
+        | strftime(vts, '%Y-%m-%d %H:%M:%S.%f') AS matched_ts_str,
+        | delta, view_id
+        |FROM r WHERE rn = 1""".stripMargin),
+
+    Query("a18_grouping_sets", (s, d) => {
+      // explicit GROUPING SETS — the third of the aggregation-lattice
+      // trio (a14 ROLLUP, a17 CUBE): a hand-picked subset of the
+      // lattice in ONE Expand + ONE shuffle, with the grouping id
+      // computed explicitly (grouping(a)·2 + grouping(b)) so both
+      // engines agree bit-for-bit on which row is which subtotal.
+      t(s, d, "lineitem").createOrReplaceTempView("lineitem_gs")
+      s.sql("""
+        SELECT coalesce(l_returnflag, '_all') AS flag,
+               coalesce(l_linestatus, '_all') AS status,
+               CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus)
+                    AS BIGINT) AS gid,
+               count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
+        FROM lineitem_gs
+        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+                                (l_returnflag), ())""")
+    },
+      // the same three grouping sets with the explicit grouping id
+      """SELECT coalesce(l_returnflag, '_all') AS flag,
+        | coalesce(l_linestatus, '_all') AS status,
+        | CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS BIGINT)
+        |   AS gid,
+        | count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
+        |                        (l_returnflag), ())""".stripMargin),
+
+    Query("w14_rfm", (s, d) => {
+      // RFM segmentation (recency / frequency / monetary terciles —
+      // the classic customer-value grid): per-user last-seen age,
+      // event count, and exact cents total; each metric tercile-ranked
+      // ((rank−1)·3 ÷ n, ties to the smaller user id) and the 27-cell
+      // segment grid aggregated. The rank windows run over USERS
+      // (≪ events, the w13 note); monetary sums are per-event rounded
+      // cents, so everything is integer-exact.
+      val ev = t(s, d, "events")
+      val mx = ev.agg(max(expr("CAST(ts AS LONG)")).as("mx"))
+      val per = ev.groupBy("user_id").agg(
+          max(expr("CAST(ts AS LONG)")).as("last_s"),
+          count(lit(1)).as("freq"),
+          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
+        .crossJoin(broadcast(mx))
+        .withColumn("rec_days", expr("(mx - last_s) div 86400"))
+      val n = per.agg(count(lit(1)).as("n"))
+      def tercile(c: String) = expr(
+        s"((rank_$c - 1) * 3) div n + 1")
+      val ranked = per
+        .withColumn("rank_r", row_number().over(
+          Window.orderBy(col("rec_days"), col("user_id"))))
+        .withColumn("rank_f", row_number().over(
+          Window.orderBy(col("freq"), col("user_id"))))
+        .withColumn("rank_m", row_number().over(
+          Window.orderBy(col("cents"), col("user_id"))))
+        .crossJoin(broadcast(n))
+      ranked
+        .select(tercile("r").as("r_bucket"), tercile("f").as("f_bucket"),
+          tercile("m").as("m_bucket"), col("cents"))
+        .groupBy("r_bucket", "f_bucket", "m_bucket")
+        .agg(count(lit(1)).as("n_users"), sum(col("cents")).as("sum_cents"))
+    },
+      // per-user R/F/M metrics, tercile ranks, 27-cell grid
+      """WITH mx AS (SELECT max(epoch_us(ts) // 1000000) AS mx FROM events),
+        |per AS (
+        |  SELECT user_id, max(epoch_us(ts) // 1000000) AS last_s,
+        |   count(*) AS freq,
+        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+        |  FROM events GROUP BY 1),
+        |w AS (SELECT user_id, (mx - last_s) // 86400 AS rec_days, freq,
+        |       cents
+        |      FROM per, mx),
+        |r AS (SELECT *,
+        |       row_number() OVER (ORDER BY rec_days, user_id) AS rank_r,
+        |       row_number() OVER (ORDER BY freq, user_id) AS rank_f,
+        |       row_number() OVER (ORDER BY cents, user_id) AS rank_m,
+        |       (SELECT count(*) FROM w) AS n
+        |      FROM w)
+        |SELECT ((rank_r - 1) * 3) // n + 1 AS r_bucket,
+        | ((rank_f - 1) * 3) // n + 1 AS f_bucket,
+        | ((rank_m - 1) * 3) // n + 1 AS m_bucket,
+        | count(*) AS n_users, CAST(sum(cents) AS BIGINT) AS sum_cents
+        |FROM r GROUP BY 1, 2, 3""".stripMargin),
+
+    Query("w13_time_to_convert", (s, d) => {
+      // funnel latency distribution: per converting user, floor-seconds
+      // from first view to the first purchase at-or-after it, then the
+      // exact rank-rule quantiles (the t22 (n+1)÷2 / (9n+9)÷10
+      // convention, ties to the smaller user id) — the "how long does
+      // conversion take" readout beside w10's "how many convert". The
+      // global rank window runs over CONVERTING USERS (≪ events);
+      // at a scale where even that is too large, PackOps.exactRank's
+      // histogram form replaces the row_number (latencies in whole
+      // seconds are exactly its distinct ≪ rows regime)
+      val ev = t(s, d, "events")
+        .select(col("user_id"), col("event_type"), col("ts"))
+      val v = ev.filter(col("event_type") === "view")
+        .groupBy("user_id").agg(min("ts").as("v_ts"))
+      val lat = ev.filter(col("event_type") === "purchase")
+        .join(v, Seq("user_id")).filter(col("ts") >= col("v_ts"))
+        .groupBy("user_id").agg(min("ts").as("p_ts"))
+        .join(v, Seq("user_id"))
+        .select(col("user_id"),
+          (expr("CAST(p_ts AS LONG)") - expr("CAST(v_ts AS LONG)"))
+            .as("lat_s"))
+      val ranked = lat.withColumn("rn", row_number().over(
+        Window.orderBy(col("lat_s"), col("user_id"))))
+      val n = lat.agg(count(lit(1)).as("n"))
+      ranked.crossJoin(broadcast(n))
+        .filter(col("rn") === expr("(n + 1) div 2") ||
+          col("rn") === expr("(9 * n + 9) div 10"))
+        .select(col("n"),
+          when(col("rn") === expr("(n + 1) div 2"), lit("median"))
+            .otherwise(lit("p90")).as("stat"),
+          col("lat_s"))
+    },
+      // per-user first-view/first-purchase latencies, rank-rule quantile
+      // picks with the median branch taking precedence on tiny-n overlap
+      """WITH v AS (SELECT user_id, min(ts) AS v_ts FROM events
+        |           WHERE event_type = 'view' GROUP BY 1),
+        |p AS (SELECT e.user_id, min(e.ts) AS p_ts FROM events e
+        |      JOIN v USING (user_id)
+        |      WHERE e.event_type = 'purchase' AND e.ts >= v.v_ts
+        |      GROUP BY 1),
+        |lat AS (SELECT p.user_id,
+        |         epoch_us(p_ts) // 1000000 - epoch_us(v_ts) // 1000000
+        |           AS lat_s
+        |        FROM p JOIN v USING (user_id)),
+        |r AS (SELECT lat_s, row_number() OVER (ORDER BY lat_s, user_id)
+        |        AS rn, (SELECT count(*) FROM lat) AS n
+        |      FROM lat)
+        |SELECT n, CASE WHEN rn = (n + 1) // 2 THEN 'median'
+        |  ELSE 'p90' END AS stat, lat_s
+        |FROM r WHERE rn = (n + 1) // 2 OR rn = (9 * n + 9) // 10""".stripMargin),
+
+    Query("w12_transitions", (s, d) => {
+      // event-type transition matrix (the user-journey Sankey feed /
+      // first-order Markov model of behavior): consecutive event pairs
+      // per user in (ts, event_id) order, counted per (from, to) with
+      // the per-source transition probability — one lag window + one
+      // aggregation, the w-family's behavioral-model row
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      t(s, d, "events")
+        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
+        .withColumn("nxt", lead(col("event_type"), 1).over(w))
+        .filter(col("nxt").isNotNull)
+        .groupBy(col("event_type").as("from_type"), col("nxt").as("to_type"))
+        .agg(count(lit(1)).as("n"))
+        .withColumn("p", round(col("n").cast("double") /
+          sum(col("n")).over(Window.partitionBy("from_type")), 6))
+    },
+      // lead window in (ts, event_id) order, per-source share
+      """WITH p AS (
+        |  SELECT event_type AS from_type,
+        |   lead(event_type) OVER (PARTITION BY user_id
+        |     ORDER BY ts, event_id) AS to_type
+        |  FROM events),
+        |c AS (SELECT from_type, to_type, count(*) AS n FROM p
+        |      WHERE to_type IS NOT NULL GROUP BY 1, 2)
+        |SELECT from_type, to_type, n,
+        | round(CAST(n AS DOUBLE) /
+        |   sum(n) OVER (PARTITION BY from_type), 6) AS p
+        |FROM c""".stripMargin),
+
+    Query("w10_funnel", (s, d) => {
+      // ordered conversion funnel view → click → purchase: a user
+      // advances a stage only with an event AT OR AFTER their entry
+      // into the previous stage (min-ts semantics, exact µs). Two
+      // user-keyed joins + per-user min aggregates — the event-analytics
+      // staple the window family lacked; the three stage counts meet in
+      // broadcast one-row crossJoins.
+      val ev = t(s, d, "events")
+        .select(col("user_id"), col("event_type"), col("ts"))
+      val v = ev.filter(col("event_type") === "view")
+        .groupBy("user_id").agg(min("ts").as("v_ts"))
+      val c = ev.filter(col("event_type") === "click")
+        .join(v, Seq("user_id")).filter(col("ts") >= col("v_ts"))
+        .groupBy("user_id").agg(min("ts").as("c_ts"))
+      val p = ev.filter(col("event_type") === "purchase")
+        .join(c, Seq("user_id")).filter(col("ts") >= col("c_ts"))
+        .select("user_id").distinct()
+      v.agg(count(lit(1)).as("n_view"))
+        .crossJoin(broadcast(c.agg(count(lit(1)).as("n_view_click"))))
+        .crossJoin(broadcast(p.agg(count(lit(1)).as("n_full"))))
+    },
+      // stage entry = min ts at-or-after the previous stage's entry
+      """WITH v AS (SELECT user_id, min(ts) AS v_ts FROM events
+        |           WHERE event_type = 'view' GROUP BY 1),
+        |c AS (SELECT e.user_id, min(e.ts) AS c_ts FROM events e
+        |      JOIN v USING (user_id)
+        |      WHERE e.event_type = 'click' AND e.ts >= v.v_ts GROUP BY 1),
+        |p AS (SELECT e.user_id FROM events e JOIN c USING (user_id)
+        |      WHERE e.event_type = 'purchase' AND e.ts >= c.c_ts GROUP BY 1)
+        |SELECT (SELECT count(*) FROM v) AS n_view,
+        |       (SELECT count(*) FROM c) AS n_view_click,
+        |       (SELECT count(*) FROM p) AS n_full""".stripMargin),
+
+    Query("w11_attribution", (s, d) => {
+      // last-touch attribution: each purchase credits the LATEST
+      // preceding click/view on its user within a 1-day lookback, else
+      // 'unattributed' — the revenue-accounting consumer of the as-of
+      // family (one asofJoin pass; staleness is a post-filter, the w9
+      // discipline; touch ties at one (user, ts) resolve to the max
+      // event_id, the w7 convention). Revenue rolls up by channel.
+      val ev = t(s, d, "events")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
+      val touches = ev.filter(col("event_type").isin("click", "view"))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("user_id", "ts").orderBy(col("event_id").desc)))
+        .filter(col("rn") === 1)
+        .select(col("user_id"), col("ts"),
+          col("event_type").as("channel"), col("event_id").as("touch_id"))
+        .withColumn("tts", col("ts"))
+      AsofOps.asofJoin(purchases, touches, "user_id", "ts",
+          Seq("channel", "touch_id", "tts"))
+        .withColumn("attr_channel",
+          when(col("tts").isNull ||
+            expr("CAST(ts AS LONG) - CAST(tts AS LONG)") > 86400L,
+            lit("unattributed")).otherwise(col("channel")))
+        .groupBy("attr_channel")
+        .agg(count(lit(1)).as("n_purchases"),
+          round(sum(col("value")), 2).as("revenue"))
+    },
+      // last-touch attribution: unique touch per (user, ts) by max
+      // event_id, latest touch at-or-before the purchase, 1-day staleness
+      // in floor-seconds, channel rollup
+      """WITH p AS (SELECT event_id, ts, user_id, value FROM events
+        |           WHERE event_type = 'purchase'),
+        |tch AS (SELECT user_id, ts, event_type AS channel, event_id,
+        |        row_number() OVER (PARTITION BY user_id, ts
+        |          ORDER BY event_id DESC) AS rn
+        |       FROM events WHERE event_type IN ('click', 'view')),
+        |t1 AS (SELECT user_id, ts, channel, event_id FROM tch WHERE rn = 1),
+        |m AS (SELECT p.event_id, p.ts, p.value, t.channel, t.ts AS tts,
+        |       row_number() OVER (PARTITION BY p.event_id
+        |         ORDER BY t.ts DESC) AS rn
+        |      FROM p LEFT JOIN t1 t
+        |      ON p.user_id = t.user_id AND t.ts <= p.ts),
+        |a AS (SELECT CASE WHEN tts IS NULL OR
+        |         epoch_us(ts) // 1000000 - epoch_us(tts) // 1000000 > 86400
+        |        THEN 'unattributed' ELSE channel END AS attr_channel, value
+        |      FROM m WHERE rn = 1)
+        |SELECT attr_channel, count(*) AS n_purchases,
+        | round(sum(value), 2) AS revenue
+        |FROM a GROUP BY 1""".stripMargin),
+
+    Query("w2_change_sampling", (s, d) => {
+      // approximate window-based variant of S8 (SURVEY §2.8): keep rows
+      // whose value moved >10% vs the previous row of the same user
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      t(s, d, "events")
+        .withColumn("prev_value", lag(col("value"), 1).over(w))
+        .filter(col("prev_value").isNull ||
+          abs(col("value") - col("prev_value")) / greatest(abs(col("prev_value")), lit(1.0)) > 0.1)
+        .groupBy(col("user_id")).agg(count(lit(1)).as("n_kept"))
+    },
+      """SELECT user_id, count(*) AS n_kept FROM (
+        |  SELECT user_id, value,
+        |   lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value
+        |  FROM events)
+        |WHERE prev_value IS NULL
+        |  OR abs(value - prev_value) / greatest(abs(prev_value), 1.0) > 0.1
+        |GROUP BY user_id""".stripMargin),
+
+    Query("a13_id_title_map", (s, _) =>
+      graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath)
+        .select(col("page_id"), col("page_title")).distinct(),
+      """SELECT CAST(col0 AS BIGINT) AS page_id, col1 AS page_title
+        |FROM (VALUES (10, 'Alpha & Beta'), (20, 'Old name'),
+        | (30, 'Category:Things')) t""".stripMargin),
+
+    Query("p2_redirect_filter", (s, _) =>
+      graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath,
+          Map("skipRedirects" -> "true"))
+        .select(col("rev_id")),
+      """SELECT CAST(col0 AS BIGINT) AS rev_id
+        |FROM (VALUES (101), (102), (103), (301)) t""".stripMargin),
+
+    Query("o2_dict_sort", (s, d) =>
+      TermOps.termStats(t(s, d, "documents"), "doc_id", "text", minDf = 5L)
+        .withColumn("term_rank",
+          row_number().over(Window.orderBy(col("term").asc)))
+        .select(col("term"), col("term_rank")),
+      s"""SELECT term, CAST(row_number() OVER (ORDER BY term ASC) AS INT) AS term_rank
+         |FROM (SELECT term FROM ($tfSub) GROUP BY term
+         |      HAVING count(*) >= 5)""".stripMargin),
+
+    Query("j3_ts_dict", (s, d) => {
+      val dict = t(s, d, "events").groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .withColumn("type_id",
+          row_number().over(Window.orderBy(col("n").desc, col("event_type").asc)))
+        .select("event_type", "type_id")
+      t(s, d, "events")
+        .groupBy(to_date(col("ts")).as("day"), col("event_type"))
+        .agg(count(lit(1)).as("cnt"))
+        .join(broadcast(dict), Seq("event_type"))
+        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+          col("type_id"), col("cnt"))
+    },
+      """WITH dict AS (
+        |  SELECT event_type,
+        |   CAST(row_number() OVER (ORDER BY count(*) DESC, event_type ASC) AS INT)
+        |     AS type_id
+        |  FROM events GROUP BY event_type)
+        |SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day, type_id,
+        | count(*) AS cnt
+        |FROM events JOIN dict USING (event_type)
+        |GROUP BY day, type_id""".stripMargin),
+
+    Query("j1_anchor_graph", (s, _) => {
+      // J1/J2: anchors ⋈ broadcast id-title map → resolved edge list
+      // (unresolved targets drop out, the reference's inner-join semantics)
+      val revs = graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.graphXmlPath)
+      val idmap = revs.select(col("page_title").as("title"),
+        col("page_id").as("dst_id")).distinct()
+      revs.select(col("page_id").as("src_id"),
+          explode(GraftFunctions.extractLinks(col("text"))).as("l"))
+        .join(broadcast(idmap), col("l.target") === col("title"))
+        .groupBy(col("src_id"), col("dst_id"))
+        .agg(count(lit(1)).as("n_links"))
+    },
+      """SELECT CAST(col0 AS BIGINT) AS src_id, CAST(col1 AS BIGINT) AS dst_id,
+        | CAST(col2 AS BIGINT) AS n_links
+        |FROM (VALUES (1, 2, 2), (2, 1, 1), (2, 3, 1)) t""".stripMargin),
+
+    Query("o5_salted_agg", (s, d) =>
+      SkewOps.saltedSum(t(s, d, "events"), "event_type", "value")
+        .select(col("event_type"), round(col("sum_value"), 2).as("sum_value"),
+          col("n_rows")),
+      """SELECT event_type, round(sum(value), 2) AS sum_value, count(*) AS n_rows
+        |FROM events GROUP BY event_type""".stripMargin),
+
+    Query("o9_key_cap_audit", (s, d) =>
+      // the flag half of the key-sanity cap (r11 item 6): what
+      // capHotKeys(85) drops from events — one never-skewed count
+      // aggregation, O(1) output. 85 sits inside the organic per-user
+      // distribution at every SF (max 86-99), so the capped branch is
+      // EXERCISED by the gate, not just compiled
+      SkewOps.hotKeyAudit(t(s, d, "events"), "user_id", maxRows = 85L),
+      """WITH k AS (SELECT user_id, count(*) AS kn FROM events GROUP BY 1)
+        |SELECT count(*) AS n_keys,
+        | CAST(sum(CASE WHEN kn > 85 THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS n_keys_capped,
+        | CAST(sum(CASE WHEN kn > 85 THEN kn ELSE 0 END) AS BIGINT)
+        |   AS n_rows_dropped
+        |FROM k""".stripMargin),
+
+    Query("w12_transitions_capped", (s, d) => {
+      // w12's transition matrix behind the same cap: the per-user lag
+      // window is the other sequential-per-key op the r11 probe flagged
+      // (2.6×) — capped, the hot user's events never enter the window
+      val ev = SkewOps.capHotKeys(t(s, d, "events"), "user_id",
+        maxRows = 85L)
+      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+      ev.select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
+        .withColumn("nxt", lead(col("event_type"), 1).over(w))
+        .filter(col("nxt").isNotNull)
+        .groupBy(col("event_type").as("from_type"), col("nxt").as("to_type"))
+        .agg(count(lit(1)).as("n"))
+        .withColumn("p", round(col("n").cast("double") /
+          sum(col("n")).over(Window.partitionBy("from_type")), 6))
+    },
+      // w12's lead-window chain over the same capped relation (the same
+      // null-safe anti-join replay as s8_sampler_capped)
+      """WITH ev AS (
+        |  SELECT e.* FROM events e
+        |  ANTI JOIN (SELECT user_id FROM events GROUP BY user_id
+        |             HAVING count(*) > 85) hot
+        |    ON e.user_id IS NOT DISTINCT FROM hot.user_id),
+        |p AS (
+        |  SELECT event_type AS from_type,
+        |   lead(event_type) OVER (PARTITION BY user_id
+        |     ORDER BY ts, event_id) AS to_type
+        |  FROM ev),
+        |c AS (SELECT from_type, to_type, count(*) AS n FROM p
+        |      WHERE to_type IS NOT NULL GROUP BY 1, 2)
+        |SELECT from_type, to_type, n,
+        | round(CAST(n AS DOUBLE) /
+        |   sum(n) OVER (PARTITION BY from_type), 6) AS p
+        |FROM c""".stripMargin),
+
+    Query("a11_tf_ts_index", (s, _) =>
+      graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath)
+        .select(col("page_id"),
+          date_format(col("timestamp"), "yyyy-MM-dd HH:mm:ss").as("ts_str"),
+          explode(TermOps.tokens(col("text"))).as("word"))
+        .groupBy(col("word"), col("page_id"), col("ts_str"))
+        .agg(count(lit(1)).as("tf")),
+      """SELECT col0 AS word, CAST(col1 AS BIGINT) AS page_id, col2 AS ts_str,
+        | CAST(col3 AS BIGINT) AS tf
+        |FROM (VALUES
+        | ('start', 10, '2020-01-01 00:00:00', 1),
+        | ('text', 10, '2020-01-01 00:00:00', 1),
+        | ('with', 10, '2020-01-01 00:00:00', 1),
+        | ('[[link|anchor]]', 10, '2020-01-01 00:00:00', 1),
+        | ('and', 10, '2020-01-01 00:00:00', 1),
+        | ('<tag>', 10, '2020-01-01 00:00:00', 1),
+        | ('second', 10, '2020-06-01 12:00:00', 1),
+        | ('version', 10, '2020-06-01 12:00:00', 1),
+        | ('text', 10, '2020-06-01 12:00:00', 1),
+        | ('third', 10, '2021-01-01 00:00:00', 1),
+        | ('version', 10, '2021-01-01 00:00:00', 1),
+        | ('text', 10, '2021-01-01 00:00:00', 1),
+        | ('#redirect', 20, '2019-05-05 05:05:05', 1),
+        | ('[[elsewhere]]', 20, '2019-05-05 05:05:05', 1),
+        | ('category', 30, '2018-01-01 00:00:00', 1),
+        | ('page', 30, '2018-01-01 00:00:00', 1),
+        | ('text', 30, '2018-01-01 00:00:00', 1)) t""".stripMargin),
+
+    Query("w4_asof_join", (s, d) => {
+      // as-of join: each purchase picks up the user's latest view at or
+      // before it (right side pre-aggregated to unique (user, ts) for
+      // determinism)
+      val ev = t(s, d, "events")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("ts"), col("user_id"))
+      val views = ev.filter(col("event_type") === "view")
+        .groupBy(col("user_id"), col("ts"))
+        .agg(max(col("event_id")).as("last_view_id"))
+      AsofOps.asofJoin(purchases, views, "user_id", "ts", Seq("last_view_id"))
+        .select(col("event_id"), date_format(col("ts"), tsFmt).as("ts_str"),
+          col("last_view_id"))
+    },
+      // DuckDB's native ASOF JOIN is the independent implementation of the
+      // same "latest right row at or before left.ts per key" semantics
+      """WITH purchases AS (
+        |  SELECT event_id, ts, user_id FROM events WHERE event_type = 'purchase'),
+        |views AS (
+        |  SELECT user_id, ts, max(event_id) AS last_view_id
+        |  FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
+        |SELECT p.event_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str,
+        | v.last_view_id
+        |FROM purchases p ASOF LEFT JOIN views v
+        | ON p.user_id = v.user_id AND p.ts >= v.ts""".stripMargin),
+
+    Query("w5_range_join", (s, d) => {
+      // bucketed range join: events falling in each signup's 2-day window
+      val ev = t(s, d, "events")
+      val intervals = ev.filter(col("event_type") === "signup")
+        .select(col("user_id"), col("ts").as("start_ts"),
+          (col("ts") + expr("INTERVAL 2 DAYS")).as("end_ts"),
+          col("event_id").as("signup_id"))
+      AsofOps.rangeJoin(ev, intervals, "user_id", "ts",
+          "start_ts", "end_ts", bucketMs = 86400000L)
+        .groupBy(col("signup_id"))
+        .agg(count(lit(1)).as("n_in_window"),
+          round(sum(col("value")), 2).as("sum_value"))
+    },
+      // the exact containment join the bucketed form must reproduce
+      """WITH iv AS (
+        |  SELECT user_id, ts AS start_ts, ts + INTERVAL 2 DAY AS end_ts,
+        |   event_id AS signup_id
+        |  FROM events WHERE event_type = 'signup')
+        |SELECT signup_id, count(*) AS n_in_window,
+        | round(sum(e.value), 2) AS sum_value
+        |FROM events e JOIN iv
+        | ON e.user_id = iv.user_id AND e.ts >= iv.start_ts AND e.ts < iv.end_ts
+        |GROUP BY signup_id""".stripMargin),
+
+    Query("w15_overlap_join", (s, d) => {
+      // interval×interval overlap join (bucketed, exactly-once): which
+      // purchase attribution windows [ts, +1d) intersect which signup
+      // onboarding windows [ts, +2d) for the same user — the
+      // interval-interval sibling of w5's point-in-interval, still an
+      // equality join on (user, bucket), never non-equi
+      val ev = t(s, d, "events")
+      val signups = ev.filter(col("event_type") === "signup")
+        .select(col("user_id"), col("ts").as("s_start"),
+          (col("ts") + expr("INTERVAL 2 DAYS")).as("s_end"),
+          col("event_id").as("signup_id"))
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts").as("p_start"),
+          (col("ts") + expr("INTERVAL 1 DAYS")).as("p_end"),
+          col("event_id").as("purchase_id"))
+      AsofOps.intervalOverlapJoin(signups, purchases, "user_id",
+          "s_start", "s_end", "p_start", "p_end", bucketMs = 86400000L)
+        .groupBy(col("signup_id"))
+        .agg(count(lit(1)).as("n_overlap"),
+          min(col("purchase_id")).as("first_purchase"))
+    },
+      // the oracle is the naive non-equi overlap join — the bucketed
+      // exactly-once emission must be invisible in the output
+      """WITH sg AS (
+        |  SELECT user_id, ts AS s_start, ts + INTERVAL 2 DAY AS s_end,
+        |   event_id AS signup_id
+        |  FROM events WHERE event_type = 'signup'),
+        |pu AS (
+        |  SELECT user_id, ts AS p_start, ts + INTERVAL 1 DAY AS p_end,
+        |   event_id AS purchase_id
+        |  FROM events WHERE event_type = 'purchase')
+        |SELECT signup_id, count(*) AS n_overlap,
+        | CAST(min(purchase_id) AS BIGINT) AS first_purchase
+        |FROM sg JOIN pu ON sg.user_id = pu.user_id
+        | AND greatest(s_start, p_start) < least(s_end, p_end)
+        |GROUP BY signup_id""".stripMargin),
+
+    Query("a17_cube", (s, d) =>
+      // the full grouping lattice over (lang, source) — CUBE plans ONE
+      // Expand over 4 grouping sets feeding one partial+final hash
+      // aggregate (the a14 ROLLUP story completed): every marginal a
+      // mixture dashboard reads, for one shuffle. Null keys out as
+      // sentinels to keep the compare null-free
+      t(s, d, "documents")
+        .cube(col("lang"), col("source"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .select(coalesce(col("lang"), lit("ALL")).as("lang"),
+          coalesce(col("source"), lit("ALL")).as("source"),
+          col("n_docs"), col("sum_chars")),
+      """SELECT COALESCE(lang, 'ALL') AS lang,
+        | COALESCE(source, 'ALL') AS source,
+        | count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
+        |FROM documents GROUP BY CUBE (lang, source)""".stripMargin),
+
+    Query("a16_feature_hash", (s, d) =>
+      // hashing-trick vectorization (dim 256): fixed-dimension sparse
+      // features with NO dictionary pass — the deterministic 1-in-13
+      // doc slice bounds the matrix rows across scale factors
+      TermOps.featureHash(
+        t(s, d, "documents").filter(col("doc_id") % 13 === 0),
+        "doc_id", "text", dim = 256),
+      // the hashing trick replayed: bucket = low 8 hash bits (power-of-two
+      // modulus — unsigned HUGEINT % agrees with Spark's signed &), sign =
+      // bit 8; weights are exact integer sums
+      featureHashSql("WHERE doc_id % 13 = 0")),
+
+    Query("w6_sessionize", (s, d) =>
+      // gap-based batch sessionization (6h gap over the events table):
+      // one key-shuffle window + a reused-partitioning aggregation; the
+      // streaming sibling (st_sessions_event) emits the same shape
+      SessionOps.sessionize(t(s, d, "events"), "user_id", "ts", "value",
+          gapMs = 21600000L)
+        .withColumn("sum_value", round(col("sum_value"), 2)),
+      // session boundaries replicated with the same lag/cumsum windows;
+      // ties are safe (gap 0 keeps tied rows in one session, aggregates
+      // order-invariant), epoch_ms truncates like Spark's unix_millis
+      """WITH e AS (SELECT user_id, epoch_ms(ts) AS tms, value FROM events),
+        |f AS (
+        |  SELECT user_id, tms, value,
+        |   CASE WHEN lag(tms) OVER w IS NULL
+        |          OR tms - lag(tms) OVER w > 21600000
+        |        THEN 1 ELSE 0 END AS new_s
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tms)),
+        |g AS (
+        |  SELECT user_id, tms, value,
+        |   sum(new_s) OVER (PARTITION BY user_id ORDER BY tms
+        |     ROWS UNBOUNDED PRECEDING) AS sess
+        |  FROM f)
+        |SELECT user_id, CAST(sess AS BIGINT) AS session_idx,
+        | min(tms) AS start_ms, max(tms) AS end_ms,
+        | count(*) AS n_events, round(sum(value), 2) AS sum_value
+        |FROM g GROUP BY user_id, sess""".stripMargin),
+
+    Query("w19_rfm", (s, d) => {
+      // RFM segmentation (the classic customer-value scorecard):
+      // recency = days since last purchase, frequency = purchase
+      // count, monetary = cent volume; each dimension scores 1-5 by
+      // exact user quintile (the stats_ipw rank rule — integer
+      // cross-multiply cuts off PackOps.exactRank's histogram rank, no
+      // global user sort), rfm = 100r + 10f + m. Purchasers only; one
+      // user-keyed aggregation, three O(distinct)-tier rank passes
+      // joined back on user_id.
+      val per = t(s, d, "events")
+        .filter(col("event_type") === "purchase")
+        .select(col("user_id"),
+          expr("CAST(ts AS LONG) div 86400").as("day"),
+          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+        .groupBy("user_id")
+        .agg(max(col("day")).as("last_day"), count(lit(1)).as("f"),
+          sum(col("cents")).as("m"))
+        .localCheckpoint() // the now-scalar + three rank passes
+      val now = per.agg(max(col("last_day")).as("now_day"))
+      val base = per.crossJoin(broadcast(now))
+        .withColumn("recency", col("now_day") - col("last_day"))
+        .select(col("user_id"), col("recency"), col("f"), col("m"))
+        .localCheckpoint() // three exactRank consumers
+      val n = base.count()
+      def quintile(valueCol: String, score: String,
+                   invert: Boolean): DataFrame =
+        PackOps.exactRank(base.select(col("user_id"),
+            col(valueCol)), valueCol, "user_id")
+          .withColumn("q",
+            when(col("rank") * 5 <= n, 1)
+              .when(col("rank") * 5 <= n * 2, 2)
+              .when(col("rank") * 5 <= n * 3, 3)
+              .when(col("rank") * 5 <= n * 4, 4).otherwise(5))
+          .select(col("user_id"),
+            (if (invert) lit(6) - col("q") else col("q")).as(score))
+      base
+        .join(quintile("recency", "r_score", invert = true), "user_id")
+        .join(quintile("f", "f_score", invert = false), "user_id")
+        .join(quintile("m", "m_score", invert = false), "user_id")
+        .select(col("user_id"), col("recency").as("recency_days"),
+          col("f").as("frequency"),
+          round(col("m").cast("double") / 100.0, 2).as("monetary"),
+          col("r_score"), col("f_score"), col("m_score"),
+          (col("r_score") * 100 + col("f_score") * 10 + col("m_score"))
+            .as("rfm"))
+    },
+      // three row_number rank passes over (value, user_id) — exactly the
+      // exactRank histogram rank; integer cross-multiply quintile cuts
+      """WITH p AS (SELECT user_id,
+        |    epoch_us(ts) // 1000000 // 86400 AS day,
+        |    CAST(round(value * 100) AS BIGINT) AS cents
+        |  FROM events WHERE event_type = 'purchase'),
+        |per AS (SELECT user_id, max(day) AS last_day,
+        |    CAST(count(*) AS BIGINT) AS f, CAST(sum(cents) AS BIGINT) AS m
+        |  FROM p GROUP BY 1),
+        |nw AS (SELECT max(last_day) AS now_day,
+        |    CAST(count(*) AS BIGINT) AS n FROM per),
+        |b AS (SELECT user_id, now_day - last_day AS recency, f, m, n
+        |      FROM per, nw),
+        |rs AS (SELECT user_id, 6 - (CASE WHEN rk * 5 <= n THEN 1
+        |    WHEN rk * 5 <= n * 2 THEN 2 WHEN rk * 5 <= n * 3 THEN 3
+        |    WHEN rk * 5 <= n * 4 THEN 4 ELSE 5 END) AS r_score
+        |  FROM (SELECT user_id, n, row_number()
+        |     OVER (ORDER BY recency, user_id) AS rk FROM b) t),
+        |fs AS (SELECT user_id, CASE WHEN rk * 5 <= n THEN 1
+        |    WHEN rk * 5 <= n * 2 THEN 2 WHEN rk * 5 <= n * 3 THEN 3
+        |    WHEN rk * 5 <= n * 4 THEN 4 ELSE 5 END AS f_score
+        |  FROM (SELECT user_id, n, row_number()
+        |     OVER (ORDER BY f, user_id) AS rk FROM b) t),
+        |ms AS (SELECT user_id, CASE WHEN rk * 5 <= n THEN 1
+        |    WHEN rk * 5 <= n * 2 THEN 2 WHEN rk * 5 <= n * 3 THEN 3
+        |    WHEN rk * 5 <= n * 4 THEN 4 ELSE 5 END AS m_score
+        |  FROM (SELECT user_id, n, row_number()
+        |     OVER (ORDER BY m, user_id) AS rk FROM b) t)
+        |SELECT b.user_id, recency AS recency_days, f AS frequency,
+        | round(CAST(m AS DOUBLE) / 100.0, 2) AS monetary,
+        | r_score, f_score, m_score,
+        | r_score * 100 + f_score * 10 + m_score AS rfm
+        |FROM b JOIN rs USING (user_id) JOIN fs USING (user_id)
+        |JOIN ms USING (user_id)""".stripMargin),
+
+    Query("w18_event_paths", (s, d) => {
+      // path analysis (the product-analytics staple beside funnels —
+      // which 3-step behavior sequences actually happen?): each user's
+      // (ts, event_id)-ordered event stream yields its step 3-grams
+      // IN-ARRAY (one user-keyed aggregation builds the ordered
+      // sequence, the zip_with-of-shifted-slices kernel grams it — no
+      // positions explode, no self-joins), then one global count ranks
+      // the top 10 paths. Per-user arrays are bounded by events/user;
+      // a pathological hot user would go through the o9 key-cap audit.
+      val seqs = t(s, d, "events")
+        .select(col("user_id"), expr("CAST(ts AS LONG)").as("tsec"),
+          col("event_id"), col("event_type"))
+        .groupBy("user_id")
+        .agg(array_sort(collect_list(struct(col("tsec"), col("event_id"),
+          col("event_type")))).as("a"))
+        .select(col("user_id"),
+          expr("transform(a, x -> x.event_type)").as("steps"))
+      seqs
+        .select(explode(expr(
+          """zip_with(slice(steps, 1, greatest(size(steps) - 2, 0)),
+            |  zip_with(slice(steps, 2, greatest(size(steps) - 2, 0)),
+            |           slice(steps, 3, greatest(size(steps) - 2, 0)),
+            |    (b, c) -> concat(b, '>', c)),
+            |  (a, bc) -> concat(a, '>', bc))""".stripMargin))
+          .as("path"))
+        .groupBy("path").agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("path").asc)
+        .limit(10)
+    },
+      // per-user ordered step arrays (ts, event_id unique tuple), 3-gram
+      // strings via zipped shifted slices, one global count
+      """WITH s AS (SELECT user_id,
+        |   list_transform(list(struct_pack(tsec := epoch_us(ts) // 1000000,
+        |       eid := event_id, et := event_type)
+        |     ORDER BY epoch_us(ts) // 1000000, event_id),
+        |     x -> x.et) AS steps
+        |  FROM events GROUP BY user_id),
+        |g AS (SELECT concat(steps[i], '>', steps[i + 1], '>',
+        |        steps[i + 2]) AS path
+        |      FROM s, unnest(generate_series(1,
+        |        greatest(len(steps) - 2, 0))) AS t(i))
+        |SELECT path, CAST(count(*) AS BIGINT) AS n
+        |FROM g GROUP BY path
+        |ORDER BY n DESC, path ASC LIMIT 10""".stripMargin),
+
+    Query("o6_salted_join", (s, d) =>
+      // salted shuffle join: every part key's lineitem rows split across
+      // 8 salts; result is exactly the plain equi-join (the oracle IS
+      // the plain join), PlanSpec pins that no broadcast happens
+      SkewOps.saltedJoin(
+          t(s, d, "lineitem").select(col("l_partkey"), col("l_quantity")),
+          t(s, d, "part").select(col("p_partkey").as("l_partkey"),
+            col("p_brand")),
+          "l_partkey", salts = 8)
+        .groupBy(col("p_brand"))
+        .agg(count(lit(1)).as("n_rows"),
+          round(sum(col("l_quantity")), 2).as("sum_qty")),
+      // the salted join is EXACTLY the plain equi-join — that equality is
+      // the correctness claim
+      """SELECT p.p_brand, count(*) AS n_rows,
+        | round(sum(l.l_quantity), 2) AS sum_qty
+        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+        |GROUP BY p.p_brand""".stripMargin),
+
+    Query("a14_rollup", (s, d) =>
+      // multi-level aggregation in one pass: ROLLUP plans a single
+      // Expand over 3 grouping sets — (type, day), (type), () — feeding
+      // one partial+final hash aggregate, so subtotals and the grand
+      // total cost one shuffle instead of three queries; null grouping
+      // keys go out as sentinels to keep the compare null-free
+      t(s, d, "events")
+        .select(col("event_type"),
+          expr("CAST(ts AS LONG) div 86400").as("day"), col("value"))
+        .rollup(col("event_type"), col("day"))
+        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
+        .select(coalesce(col("event_type"), lit("ALL")).as("event_type"),
+          coalesce(col("day"), lit(-1L)).as("day"),
+          col("n_events"), col("sum_value")),
+      """WITH ev AS (
+        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day, value
+        |  FROM events)
+        |SELECT COALESCE(event_type, 'ALL') AS event_type,
+        | COALESCE(day, -1) AS day,
+        | count(*) AS n_events, round(sum(value), 2) AS sum_value
+        |FROM ev GROUP BY ROLLUP (event_type, day)""".stripMargin),
+
+    Query("w16_funnel_window", (s, d) =>
+      // TIME-BOXED funnel: the whole view → click → purchase chain
+      // must complete within 48 h of the user's earliest view (the
+      // ClickHouse-windowFunnel shape with a stated first-touch
+      // anchor) — conversion-rate analytics where an eventual
+      // conversion months later must NOT count. Median view→click gap
+      // in this corpus is ~32 h, so the 48 h box genuinely splits
+      // converters. See FunnelOps.windowedFunnel.
+      FunnelOps.windowedFunnel(t(s, d, "events"), "user_id",
+        "event_type", "ts", Seq("view", "click", "purchase"),
+        windowUs = 172800000000L),
+      // the funnel_steps chain with the 48 h anchor box carried through
+      // (anchor = the user's earliest step-1 time, the stated law)
+      """WITH ev AS (
+        |  SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
+        |f1 AS (SELECT user_id, min(tus) AS anchor, min(tus) AS t
+        |  FROM ev WHERE event_type = 'view' GROUP BY 1),
+        |f2 AS (SELECT e.user_id, min(f1.anchor) AS anchor,
+        |        min(e.tus) AS t FROM ev e
+        |  JOIN f1 ON e.user_id = f1.user_id AND e.tus > f1.t
+        |   AND e.tus <= f1.anchor + 172800000000
+        |  WHERE e.event_type = 'click' GROUP BY 1),
+        |f3 AS (SELECT e.user_id, min(f2.anchor) AS anchor,
+        |        min(e.tus) AS t FROM ev e
+        |  JOIN f2 ON e.user_id = f2.user_id AND e.tus > f2.t
+        |   AND e.tus <= f2.anchor + 172800000000
+        |  WHERE e.event_type = 'purchase' GROUP BY 1)
+        |SELECT 1 AS step, 'view' AS event_type,
+        |  (SELECT count(*) FROM f1) AS n_users
+        |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM f2)
+        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM f3)"""
+        .stripMargin),
+
+    Query("a15_pivot", (s, d) => {
+      // wide-format pivot via conditional aggregates over an EXPLICIT
+      // value list: long-to-wide for ONE aggregation exchange (pinned).
+      // Dataset.pivot would plan a two-phase aggregate — a pre-agg on
+      // (dow, event_type) plus a PivotFirst pass, i.e. a second keyed
+      // shuffle — which a fixed value list makes unnecessary; count of
+      // a when() is never null, so no fill pass either
+      val vals = Seq("click", "error", "purchase", "signup", "view")
+      t(s, d, "events")
+        .select(expr("(CAST(ts AS LONG) div 86400) % 7").as("dow"),
+          col("event_type"))
+        .groupBy("dow")
+        .agg(count(when(col("event_type") === vals.head, 1)).as(vals.head),
+          vals.tail.map(v =>
+            count(when(col("event_type") === v, 1)).as(v)): _*)
+    },
+      """SELECT (epoch_us(ts) // 1000000 // 86400) % 7 AS dow,
+        | count(*) FILTER (WHERE event_type = 'click') AS click,
+        | count(*) FILTER (WHERE event_type = 'error') AS error,
+        | count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
+        | count(*) FILTER (WHERE event_type = 'signup') AS signup,
+        | count(*) FILTER (WHERE event_type = 'view') AS "view"
+        |FROM events GROUP BY 1""".stripMargin),
+
+    Query("o7_topk_group", (s, d) => {
+      // group-wise top-k: top-3 highest-price lineitems per supplier.
+      // Spark plans a WindowGroupLimit (per-task top-k heaps BEFORE the
+      // key exchange — pinned in PlanSpec), so no group's full row set
+      // ever shuffles: the group-wise sibling of TakeOrderedAndProject
+      val w = Window.partitionBy(col("l_suppkey"))
+        .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc,
+          col("l_linenumber").asc)
+      t(s, d, "lineitem")
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 3)
+        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
+          col("l_extendedprice"), col("rn"))
+    },
+      // full tie-break (price desc, orderkey, linenumber) makes row_number
+      // deterministic on both engines
+      """SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
+        | CAST(rn AS INT) AS rn
+        |FROM (
+        |  SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
+        |   row_number() OVER (PARTITION BY l_suppkey
+        |     ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS rn
+        |  FROM lineitem) t
+        |WHERE rn <= 3""".stripMargin),
+
+    Query("j8_fuzzy_join", (s, d) => {
+      // fuzzy record-linkage join: odd customers get a deterministic
+      // one-char deletion (the char before the last drops — a dirty
+      // import feed), then link back against the clean even-customer
+      // names at edit distance ≤ 1 via symmetric-delete blocking +
+      // exact levenshtein verify — the oracle is the naive quadratic
+      // levenshtein join, so blocking losslessness is the gate
+      val cust = t(s, d, "customer").select(col("c_custkey"), col("c_name"))
+      val clean = cust.filter(col("c_custkey") % 2 === 0)
+        .select(col("c_custkey").as("clean_key"),
+          col("c_name").as("clean_name"))
+      val dirty = cust.filter(col("c_custkey") % 2 === 1)
+        .select(col("c_custkey").as("dirty_key"),
+          concat(col("c_name").substr(lit(1), length(col("c_name")) - 2),
+            col("c_name").substr(length(col("c_name")), lit(1)))
+            .as("dirty_name"))
+      DedupOps.fuzzyJoin(dirty, clean, "dirty_key", "dirty_name",
+        "clean_key", "clean_name")
+    },
+      // the naive quadratic levenshtein join — symmetric-delete blocking
+      // must be invisible in the output
+      """WITH clean AS (
+        |  SELECT c_custkey AS clean_key, c_name AS clean_name
+        |  FROM customer WHERE c_custkey % 2 = 0),
+        |dirty AS (
+        |  SELECT c_custkey AS dirty_key,
+        |   substr(c_name, 1, length(c_name) - 2) ||
+        |     substr(c_name, length(c_name), 1) AS dirty_name
+        |  FROM customer WHERE c_custkey % 2 = 1)
+        |SELECT dirty_key, clean_key,
+        | CAST(levenshtein(dirty_name, clean_name) AS INT) AS dist
+        |FROM dirty JOIN clean
+        | ON levenshtein(dirty_name, clean_name) <= 1""".stripMargin),
+
+    Query("j7_bloom_prune", (s, d) => {
+      // bloom-pruned scan: keep-set = suppliers of nations 0-4, bitmap
+      // 4096 bits / 3 hashes (deliberately undersized so false positives
+      // occur and the oracle must reproduce them bit-for-bit), big side
+      // filtered map-side with no shuffle/join (PlanSpec pins the shape)
+      val keep = t(s, d, "supplier").filter(col("s_nationkey") < 5)
+      PruneOps.bloomPrune(t(s, d, "lineitem"), "l_suppkey",
+          keep, "s_suppkey", mBits = 4096, k = 3)
+        .groupBy(col("l_returnflag"))
+        .agg(count(lit(1)).as("n_rows"),
+          round(sum(col("l_quantity")), 2).as("sum_qty"),
+          countDistinct(col("l_suppkey")).as("n_supp"))
+    },
+      s"""WITH seeds AS (SELECT unnest(generate_series(0, 2)) AS i),
+         |spos AS (
+         |  SELECT DISTINCT
+         |   ${fnvSql("CAST(s_suppkey AS VARCHAR) || '#' || i")} % 4096 AS pos
+         |  FROM supplier, seeds WHERE s_nationkey < 5),
+         |bk AS (SELECT DISTINCT l_suppkey FROM lineitem),
+         |bh AS (
+         |  SELECT l_suppkey,
+         |   ${fnvSql("CAST(l_suppkey AS VARCHAR) || '#' || i")} % 4096 AS pos
+         |  FROM bk, seeds),
+         |chk AS (SELECT l_suppkey, pos IN (SELECT pos FROM spos) AS hit FROM bh),
+         |pass AS (SELECT l_suppkey FROM chk GROUP BY l_suppkey HAVING bool_and(hit))
+         |SELECT l.l_returnflag, count(*) AS n_rows,
+         | round(sum(l.l_quantity), 2) AS sum_qty,
+         | count(DISTINCT l.l_suppkey) AS n_supp
+         |FROM lineitem l JOIN pass p ON l.l_suppkey = p.l_suppkey
+         |GROUP BY l.l_returnflag""".stripMargin),
+
+    Query("j6_wikistats", (s, _) => {
+      // J6 end-to-end: pageview agg → redirect re-merge → re-aggregate →
+      // title→id join (reference: etc/match_wikistats.sh:34-41,
+      // python/local_redirect.py:12-36)
+      import s.implicits._
+      val lines = Seq(
+        "en.z Foo_bar#x 10 AB5C3,CA1B2",
+        "en.z foo_bar 7 AA7",
+        "en.z Old_name 4 BA4",
+        "de.z Ignored 5 AA5",
+        "en.z Baz 2 BA2").toDF("value")
+      val redirects = Seq(("Old_name", "Baz")).toDF("src_title", "dst_title")
+      val idmap = Seq(("Foo_bar", 100L), ("Baz", 200L), ("Other", 300L))
+        .toDF("rtitle", "page_id")
+      graft.jobs.MatchWikistats.chain(lines, redirects, idmap, days = 5)
+        .select(col("page_id"), col("title"), col("total"),
+          posexplode(col("daily")).as(Seq("day", "views")))
+    },
+      // hand-traced: Foo_bar#x + foo_bar normalize-merge (17 = 10+7, daily
+      // 15@d0 + 3@d2); Old_name (4@d1) redirect-resolves into Baz (2@d1) →
+      // 6@d1; de.z filtered; 'Other' has no pageviews → inner join drops it
+      """SELECT CAST(col0 AS BIGINT) AS page_id, col1 AS title,
+        | CAST(col2 AS BIGINT) AS total, CAST(col3 AS INT) AS day,
+        | CAST(col4 AS INT) AS views
+        |FROM (VALUES
+        | (100, 'Foo_bar', 17, 0, 15), (100, 'Foo_bar', 17, 1, 0),
+        | (100, 'Foo_bar', 17, 2, 3), (100, 'Foo_bar', 17, 3, 0),
+        | (100, 'Foo_bar', 17, 4, 0),
+        | (200, 'Baz', 6, 0, 0), (200, 'Baz', 6, 1, 6), (200, 'Baz', 6, 2, 0),
+        | (200, 'Baz', 6, 3, 0), (200, 'Baz', 6, 4, 0)) t""".stripMargin)
+  )
+}

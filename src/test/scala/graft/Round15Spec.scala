@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.DoubleType
+import scala.jdk.CollectionConverters._
 
 /** Round-15 pins.
   *
@@ -331,23 +332,29 @@ class Round15Spec extends AnyFunSuite {
 
   test("sharedStageReaders matches the shared-frame call sites in the " +
     "registry source (the bench flag can't silently drift)") {
-    // attribute each process-shared helper call to the registered query
-    // whose builder contains it — the nearest preceding `"name" ->`
-    val src = scala.io.Source.fromFile(
-      "src/main/scala/graft/SparkEntry.scala", "UTF-8")
-    val lines = try src.getLines().toVector finally src.close()
-    val reg = """^    "([a-z0-9_]+)" ->""".r
+    // attribute each process-shared helper call to the query record
+    // whose builder contains it — the nearest preceding `Query("name",`
+    // in the same file (helper definitions precede every record)
+    val files = java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala") +:
+      java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/queries"))
+        .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+    val reg = """^    Query\("([a-z0-9_]+)",""".r
     val helpers = Seq("bm25Leg(s, d)", "pqModel(s, d)",
       "dedupLabels05(s, d)", "jaccardPairs05(s, d)",
       "embF64(s, d)", "bruteTop5(s, d)", "substringVerdicts(s, d)",
       "residualModel(s, d)")
-    var current: Option[String] = None
     val derived = scala.collection.mutable.SortedSet.empty[String]
-    for (l <- lines) {
-      reg.findFirstMatchIn(l).foreach(m => current = Some(m.group(1)))
-      if (helpers.exists(l.contains) && current.isDefined)
-        derived += current.get
+    for (f <- files) {
+      val src = scala.io.Source.fromFile(f.toFile, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      var current: Option[String] = None
+      for (l <- lines) {
+        reg.findFirstMatchIn(l).foreach(m => current = Some(m.group(1)))
+        if (helpers.exists(l.contains) && current.isDefined)
+          derived += current.get
+      }
     }
+    assert(derived.nonEmpty, "no shared-stage call site found")
     assert(derived.toSeq == SparkEntry.sharedStageReaders.sorted,
       s"sharedStageReaders is stale: source says $derived, " +
         s"manifest says ${SparkEntry.sharedStageReaders.sorted}")

@@ -3,6 +3,7 @@ package graft
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamTrace
@@ -50,19 +51,25 @@ class StreamTraceSpec extends AnyFunSuite {
 
   test("SparkEntry builds no stream itself, and each st_* trace names " +
     "its sink after its registered query") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")), "UTF-8")
-    for (w <- Seq("MemoryStream", "writeStream", "processAllAvailable",
-        "queryName", "streamSession"))
-      assert(!src.contains(w), s"SparkEntry.scala names $w")
+    // the registry is SparkEntry plus the query-family files it derives from
+    val files = java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala") +:
+      java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/queries"))
+        .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.sorted
+    val srcs = files.map(f => f.getFileName.toString ->
+      new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+    for ((f, src) <- srcs; w <- Seq("MemoryStream", "writeStream",
+        "processAllAvailable", "queryName", "streamSession"))
+      assert(!src.contains(w), s"$f names $w")
     // the sink name of each registered st_* body is the first one after
-    // its `"st_…" -> ((` registration
-    val bodies = """(?m)^    "(st_\w+)" -> \(\(""".r.findAllMatchIn(src).toSeq
+    // its `Query("st_…"` record
     val sinks = """StreamTrace\.run\[\w+\]\(s, "(\w+)"|"memory", "(\w+)"""".r
-    val named = bodies.map { b =>
-      val m = sinks.findFirstMatchIn(src.substring(b.end)).get
-      b.group(1) -> Option(m.group(1)).getOrElse(m.group(2))
+    val named = srcs.flatMap { case (_, src) =>
+      """(?m)^    Query\("(st_\w+)", """.r.findAllMatchIn(src).map { b =>
+        val m = sinks.findFirstMatchIn(src.substring(b.end)).get
+        b.group(1) -> Option(m.group(1)).getOrElse(m.group(2))
+      }
     }
+    assert(named.size == 20)
     assert(named.map(_._1).sorted ==
       SparkEntry.queries.keys.filter(_.startsWith("st_")).toSeq.sorted)
     named.foreach { case (q, sink) => assert(sink == q, s"$q writes sink $sink") }
