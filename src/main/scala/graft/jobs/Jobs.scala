@@ -107,19 +107,23 @@ object MatchWikistats {
   * anchor extraction over revision XML with the ETL change-ratio
   * semantics. */
 object ExtractTemporalAnchorText {
-  def run(spark: SparkSession, in: String, out: String): Unit = {
+  /** The anchor rows: over one dump file, read, sampler and link
+    * extraction run in one stage with no exchange, as the reference's
+    * map-only job does. */
+  def frame(spark: SparkSession, in: String): DataFrame = {
     val revs = WikiXml.read(spark, in,
         Map("onlyArticles" -> "true", "skipRedirects" -> "true"))
       .withColumn("len", length(col("text")).cast("double"))
     val sampled = RevisionOps.changeRatioSample(revs, "page_id", "timestamp",
       "len", minLen = 10.0)
-    val df = sampled
+    sampled
       .select(col("timestamp"), col("page_id"), col("rev_id"), col("parent_id"),
         explode(GraftFunctions.extractLinks(col("text"))).as("l"))
       .select(col("timestamp"), col("page_id"), col("rev_id"), col("parent_id"),
         col("l.anchor"), col("l.target"))
-    GraftSinks.writeTsv(df, out)
   }
+  def run(spark: SparkSession, in: String, out: String): Unit =
+    GraftSinks.writeTsv(frame(spark, in), out)
   def main(args: Array[String]): Unit =
     run(Jobs.session(), args(0), args(1))
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Revision-stream operators: consecutive pairs, diffs, the change-ratio
   * sampler, event-time bucketing, and dense gap-filled series.
@@ -12,9 +13,12 @@ import org.apache.spark.sql.functions._
   * `events` table, same semantics as revisions keyed by page.
   *
   * Scale stance (100 TB): every op here is a window over
-  * `partitionBy(key).orderBy(ts)` or a sorted-group traversal — Spark
-  * shuffles once on the key and streams each group in timestamp order; no
-  * whole-group materialization except the (bounded) sampler carry state.
+  * `partitionBy(key).orderBy(ts)` or a sorted-group traversal — both
+  * require a clustering on the key and stream each group in timestamp
+  * order; no whole-group materialization except the (bounded) sampler
+  * carry state. An input already clustered on the key (a one-file
+  * wikirev scan on `page_id`) gets a local sort in its own stage; any
+  * other input is shuffled once on the key.
   */
 object RevisionOps {
 
@@ -47,20 +51,21 @@ object RevisionOps {
     * the final buffer is always emitted (the reference's flag-4 last-revision
     * case, :225-241).
     *
-    * Implemented over sorted groups: one shuffle on `key`, rows streamed in
-    * `ts` order, O(1) state per group — safe for the largest keys at scale.
+    * Implemented over sorted groups (`flatMapSortedGroups`): rows of one
+    * key streamed in `ts` order, O(1) state per group — safe for the
+    * largest keys at scale. The groups require a clustering on `key`
+    * rather than forcing one: over a one-file wikirev scan, clustered on
+    * `page_id`, they take a local sort in the scan's stage, and any other
+    * input gets one exchange on `key` and a sort.
     * Returns the kept rows with the original schema.
     */
   def changeRatioSample(df: DataFrame, key: String, ts: String,
                         lenCol: String, lower: Double = 0.01,
                         upper: Double = 0.1, minLen: Double = 0.0,
                         tieBreak: String = null): DataFrame = {
-    val spark = df.sparkSession
     val schema = df.schema
-    val keyIdx = schema.fieldIndex(key)
-    val tsIdx = schema.fieldIndex(ts)
     val lenIdx = schema.fieldIndex(lenCol)
-    implicit val rowEnc = Encoders.row(schema)
+    val rowEnc = Encoders.row(schema)
     // rows below the minimum size never take part in the carry — the
     // reference's GOOD_ENOUGH_REVISION skip (RevisionETLReader.java:43,
     // :273-294; its tiny-last-revision case degenerates to the normal
@@ -68,40 +73,37 @@ object RevisionOps {
     val eligible = if (minLen > 0) df.filter(col(lenCol) >= minLen) else df
     // a tie-break column keeps the traversal (and thus the kept set)
     // deterministic when a key has equal timestamps
-    val sortCols =
-      if (tieBreak == null) Seq(col(key), col(ts))
-      else Seq(col(key), col(ts), col(tieBreak))
-    val sorted = eligible.repartition(col(key)).sortWithinPartitions(sortCols: _*)
-    sorted.mapPartitions { it =>
-      new Iterator[Row] {
-        private var buf: Row = null
-        private var pending: Row = null // next row to emit
-        private def ratio(prev: Row, cur: Row): Double = {
-          val pl = math.max(math.abs(prev.getAs[Number](lenIdx).doubleValue()), 1.0)
-          val cl = math.abs(cur.getAs[Number](lenIdx).doubleValue())
-          math.abs(cl - pl) / pl
-        }
-        private def advance(): Unit = {
-          while (pending == null && it.hasNext) {
-            val cur = it.next()
-            if (buf == null) buf = cur
-            else if (buf.get(keyIdx) != cur.get(keyIdx)) {
-              pending = buf; buf = cur // key change: flush last buffer
-            } else {
-              val r = ratio(buf, cur)
-              if (r < lower) buf = cur
-              else if (r > upper) { pending = buf; buf = cur }
-              // else: gray zone — drop cur, keep the buffer
+    val sortCols = if (tieBreak == null) Seq(col(ts)) else Seq(col(ts), col(tieBreak))
+    eligible.groupBy(col(key))
+      .as[Row, Row](Encoders.row(StructType(Seq(schema(key)))), rowEnc)
+      .flatMapSortedGroups(sortCols: _*) { (_, it) =>
+        new Iterator[Row] {
+          private var buf: Row = null
+          private var pending: Row = null // next row to emit
+          private def ratio(prev: Row, cur: Row): Double = {
+            val pl = math.max(math.abs(prev.getAs[Number](lenIdx).doubleValue()), 1.0)
+            val cl = math.abs(cur.getAs[Number](lenIdx).doubleValue())
+            math.abs(cl - pl) / pl
+          }
+          private def advance(): Unit = {
+            while (pending == null && it.hasNext) {
+              val cur = it.next()
+              if (buf == null) buf = cur
+              else {
+                val r = ratio(buf, cur)
+                if (r < lower) buf = cur
+                else if (r > upper) { pending = buf; buf = cur }
+                // else: gray zone — drop cur, keep the buffer
+              }
+            }
+            if (pending == null && buf != null) { // end of group
+              pending = buf; buf = null
             }
           }
-          if (pending == null && buf != null) { // end of partition
-            pending = buf; buf = null
-          }
+          override def hasNext: Boolean = { advance(); pending != null }
+          override def next(): Row = { advance(); val r = pending; pending = null; r }
         }
-        override def hasNext: Boolean = { advance(); pending != null }
-        override def next(): Row = { advance(); val r = pending; pending = null; r }
-      }
-    }
+      }(rowEnc)
   }
 
   /** T1 — event-time ceil-rounding ("roundup") to a fixed-length unit with

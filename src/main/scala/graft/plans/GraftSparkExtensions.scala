@@ -5,16 +5,24 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{BitwiseCount, BitwiseXor, Expression, ExpressionInfo}
 import org.apache.spark.sql.SparkSessionExtensions
+import graft.sources.ClusterScans
 
 /** SparkSessionExtensions hook registering the engine's native
   * expressions into the SQL function registry, so `spark.sql("SELECT
-  * fnv64(x) …")` plans the codegen expression (no UDF tier).
+  * fnv64(x) …")` plans the codegen expression (no UDF tier), with the
+  * [[NanosFilterRule]] optimizer rule and the [[ClusterScans]]
+  * post-planner rule: a split-file scan that claims clustering on a key
+  * (a one-file wikirev scan, on `page_id`) is wrapped so that operators
+  * needing that key's distribution get a local sort, not an exchange.
+  * The rule runs only under adaptive execution; with it off, plans keep
+  * their exchange.
   *
   * [[graft.GraftSession.build]] wires it through `spark.sql.extensions`,
   * which also carries it into every `newSession()` clone.
   * `GraftSparkExtensions.install(spark)` is the fallback for a live
   * session started without it; it does NOT reach that session's
-  * `newSession()` clones.
+  * `newSession()` clones, and it does not add [[ClusterScans]] (a live
+  * session has no slot for it), so such a session's scans shuffle.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -22,6 +30,7 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
     ext.injectOptimizerRule(_ => NanosFilterRule)
+    ext.injectQueryPostPlannerStrategyRule(_ => ClusterScans)
   }
 }
 

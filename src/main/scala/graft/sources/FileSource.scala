@@ -36,6 +36,10 @@ abstract class SplitFormat[P] extends Serializable {
     * pushdown only skips work and never changes results. */
   def pushable: PartialFunction[Filter, P => P]
   def reader(in: SplitStream, fields: Array[String], push: P): PartitionReader[InternalRow]
+  /** The column whose every value sits in one record block, when the
+    * format has one: a scan of one file then holds each value in one
+    * partition ([[FileScan.clusteredBy]]). */
+  def clusterKey: Option[String]
   /** Per plain file, range starts that replace the fixed-size ranges of a
     * file longer than `plainSplit` (wikirev's split index); none here. */
   def plainStarts(spark: SparkSession, props: Map[String, String],
@@ -92,13 +96,14 @@ class FileScan[P](format: SplitFormat[P], props: Map[String, String],
     * split freely, bz2 by compression block (BYBLOCK ranges over the
     * compressed bytes, floored at the largest block), and every other
     * codec (gz, deflate, …) decompresses sequentially, so its file is one
-    * partition. [[SplitStream]] opens a range by the same codec lookup. */
-  override def planInputPartitions(): Array[InputPartition] = {
+    * partition. [[SplitStream]] opens a range by the same codec lookup.
+    * Planned once per scan. */
+  private lazy val ranges: Array[FileRange] = {
     val path = props.getOrElse("path",
       throw new IllegalArgumentException(s"${format.name}: 'path' option is required"))
     val spark = SparkSession.active
     val conf = hadoopConf
-    val files = FileSplits.list(FileSystem.get(new java.net.URI(path), conf), path)
+    val files = FileSplits.list(new Path(path).getFileSystem(conf), path)
     val totalBytes = files.map(_.getLen).sum
     val plainSplit = FileSplits.maxSplitBytes(spark, props, totalBytes,
       FileSplits.plainFloor(spark))
@@ -117,8 +122,24 @@ class FileScan[P](format: SplitFormat[P], props: Map[String, String],
         case _ => Seq((0L, Long.MaxValue))
       }
       ranges.map { case (s, e) => FileRange(p, s, e) }
-    }.toArray[InputPartition]
+    }
   }
+
+  override def planInputPartitions(): Array[InputPartition] = ranges.toArray[InputPartition]
+
+  /** The format's cluster key and the one file read, when the key is
+    * projected and every range is of that file. Each record block is then
+    * owned by one range ([[SplitStream.owns]]), so each key value is in
+    * one partition, given that the file holds each value in one block
+    * (a dump holds each page, and so each page id, once). A scan of
+    * several files never claims it: the same page may sit in two. */
+  def clusteredBy: Option[(String, String)] =
+    format.clusterKey.filter(required.fieldNames.contains).flatMap { key =>
+      ranges.map(_.path).distinct match {
+        case Array(file) => Some((key, file))
+        case _ => None
+      }
+    }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new FileReaderFactory(format, required.fieldNames,

@@ -49,10 +49,15 @@ object FileSplits {
   def plainFloor(spark: SparkSession): Long =
     spark.sessionState.conf.filesOpenCostInBytes
 
-  /** `[start, end)` ranges of at most `maxSplit` bytes over a file of
-    * `len` bytes; a file that fits in one range reads whole
-    * (`end = Long.MaxValue`). */
+  /** `[start, end)` ranges over a file of `len` bytes: ⌈len / maxSplit⌉
+    * ranges whose lengths differ by at most one byte, so no task is left
+    * with a short tail while another reads a full range; a file that fits
+    * in one range reads whole (`end = Long.MaxValue`). */
   def ranges(len: Long, maxSplit: Long): Seq[(Long, Long)] =
     if (len <= maxSplit) Seq((0L, Long.MaxValue))
-    else (0L until len by maxSplit).map(s => (s, math.min(s + maxSplit, len)))
+    else {
+      val n = (len + maxSplit - 1) / maxSplit
+      val starts = (0L to n).map(i => i * (len / n) + math.min(i, len % n))
+      starts.zip(starts.tail)
+    }
 }

@@ -66,6 +66,7 @@ object Warc {
   * the pushed `warc_type`. */
 object WarcFormat extends SplitFormat[Option[String]] {
   val name = "warc"
+  val clusterKey: Option[String] = None
   def schema(props: Map[String, String]): StructType = WarcSchema.full
   def options(props: Map[String, String]): Option[String] = None
   val pushable: PartialFunction[Filter, Option[String] => Option[String]] = {

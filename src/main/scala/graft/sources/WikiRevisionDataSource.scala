@@ -24,7 +24,15 @@ import org.apache.spark.sql.types._
   *    (WikiRevisionPageInputFormat.java:139-148);
   *  - column pruning skips text capture entirely for header-only reads
   *    (the reference needed a separate input format for that,
-  *    io/etl/RevisionIdsFormat.java:76-160).
+  *    io/etl/RevisionIdsFormat.java:76-160);
+  *  - a scan that reads one file and projects `page_id` tells the planner
+  *    its partitions are clustered on `page_id` ([[FileScan.clusteredBy]],
+  *    [[ClusterScans]]): a partition owns whole `<page>` blocks and a
+  *    dump holds each page once, so the sampler, the lag window and
+  *    per-page aggregates run in the scan's own stage, with a local sort
+  *    and no exchange, as the reference's map-only extractors do
+  *    (FastExtractTemporalAnchorText). A glob over several files makes
+  *    no claim and shuffles.
   *
   * Options: `onlyArticles`, `skipRedirects` (booleans), `beginTime`,
   * `endTime` (ISO-8601, half-open range), `maxSplitBytes` (overrides the
@@ -73,6 +81,7 @@ case class WikiRevisionPushdown(onlyArticles: Boolean, skipRedirects: Boolean,
 
 object WikiRevisionFormat extends SplitFormat[WikiRevisionPushdown] {
   val name = "wikirev"
+  val clusterKey: Option[String] = Some("page_id")
   def schema(props: Map[String, String]): StructType = WikiRevisionSchema.forOptions(props)
 
   private def isoMicros(s: String): Long = java.time.Instant.parse(s).toEpochMilli * 1000L

@@ -52,8 +52,8 @@ object WikiXml {
 
   def fileNames(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     FileSplits.list(fs, path).map(_.getPath.toString).toSeq.toDF("file_name")
   }
 }

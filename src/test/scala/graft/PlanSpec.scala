@@ -131,6 +131,20 @@ class PlanSpec extends AnyFunSuite {
     assert(!scan.contains("text"), scan)
   }
 
+  test("the anchor-text job over one dump plans no exchange; over a " +
+    "two-file glob it shuffles once, on page_id") {
+    import graft.sources.WikiFixtures
+    def jobPlan(path: String) = jobs.ExtractTemporalAnchorText.frame(spark, path)
+      .queryExecution.executedPlan.toString
+    val one = jobPlan(WikiFixtures.standardXmlPath)
+    assert(!one.contains("Exchange"), one)
+    WikiFixtures.graphXmlPath // the second file of the glob
+    val glob = jobPlan(java.nio.file.Paths.get(WikiFixtures.standardXmlPath)
+      .resolveSibling("{testwiki,graphwiki}.xml").toString)
+    assert("Exchange".r.findAllIn(glob).length == 1, glob)
+    assert(glob.contains("Exchange hashpartitioning(page_id"), glob)
+  }
+
   test("bucketed fact-fact join runs with no shuffle exchange") {
     val lineitem = Tables.table(spark, sf, "lineitem")
       .select("l_orderkey", "l_extendedprice")

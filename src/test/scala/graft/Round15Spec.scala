@@ -342,7 +342,24 @@ class Round15Spec extends AnyFunSuite {
     val helpers = Seq("bm25Leg(s, d)", "pqModel(s, d)",
       "dedupLabels05(s, d)", "jaccardPairs05(s, d)",
       "embF64(s, d)", "bruteTop5(s, d)", "substringVerdicts(s, d)",
-      "residualModel(s, d)")
+      "residualModel(s, d)", "vecLeg(s, d)", "sharedFrame(s, d,")
+    // every QueryKit member whose body reads a shared stage is one of the
+    // audited helpers, so a new helper cannot slip past the attribution
+    val kitSrc = scala.io.Source.fromFile(
+      "src/main/scala/graft/queries/QueryKit.scala", "UTF-8")
+    val kit = try kitSrc.getLines().toVector finally kitSrc.close()
+    val member = """^  (?:private |lazy |override )*(?:def|val) (\w+)""".r
+    var owner: Option[String] = None
+    val kitReaders = scala.collection.mutable.SortedSet.empty[String]
+    for (l <- kit) {
+      member.findFirstMatchIn(l).foreach(m => owner = Some(m.group(1)))
+      if ((l.contains("sharedFrame(") || l.contains("sharedStage(")) && owner.isDefined)
+        kitReaders += owner.get
+    }
+    val unaudited = kitReaders.toSet -- Set("sharedFrame", "sharedStage") --
+      helpers.map(_.takeWhile(_ != '('))
+    assert(kitReaders.contains("vecLeg") && unaudited.isEmpty,
+      s"QueryKit shared-stage helpers missing from the audit: $unaudited")
     val derived = scala.collection.mutable.SortedSet.empty[String]
     for (f <- files) {
       val src = scala.io.Source.fromFile(f.toFile, "UTF-8")

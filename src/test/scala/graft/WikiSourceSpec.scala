@@ -196,6 +196,13 @@ class WikiSourceSpec extends AnyFunSuite {
     val parts = numPartitions(noisyBz2)
     assert(parts == ((len + split - 1) / split).toInt)
     assert(parts > 1)
+    // balanced: no range holds a short tail while another is full
+    val lengths = WikiXml.read(spark, noisyBz2).queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions.map { case r: graft.sources.FileRange => r.end - r.start }
+    }.flatten
+    assert(lengths.size == parts && lengths.sum == len, lengths)
+    assert(lengths.max - lengths.min <= parts, lengths)
     assert(typedRows(noisyBz2, Map.empty) == typedRows(noisyBz2, Whole))
     assert(rawRows(noisyBz2, Map.empty) == rawRows(noisyBz2, Whole))
   }
