@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import graft.functions.{DiffFunctions, Hashing, TextFunctions}
 import graft.model.{Delta, Link, LinkCtx}
 
-/** Registers the engine's scalar/table functions into the SQL registry
-  * and exposes them as `Column` helpers.
+/** The engine's scalar/table functions as `Column` helpers; their SQL
+  * names reach a session through its extensions
+  * ([[graft.plans.GraftSparkExtensions]]).
   *
   * Design note (scale): everything that CAN be a built-in
   * `org.apache.spark.sql.functions` call IS one (codegen + pushdown
@@ -18,12 +19,6 @@ import graft.model.{Delta, Link, LinkCtx}
   * tier anywhere. Reference behavior specs: SURVEY.md §2.7.
   */
 object GraftFunctions {
-
-  /** Idempotent registration of the engine's SQL surface — every named
-    * function resolves to a native codegen expression (graft.plans); no
-    * UDF tier remains. */
-  def register(spark: SparkSession): Unit =
-    graft.plans.GraftSparkExtensions.install(spark)
 
   // ---- Column-level helpers (the library API surface) ----
 

@@ -17,10 +17,9 @@ import java.nio.file.{Files, Path, Paths}
   * whose hook never fired.
   *
   * NOT swept: the persistent cross-process caches that are pure
-  * functions of the test data — `graft-sf*` (ScaleData replicas),
-  * `graft-fixtures` (wiki XML fixtures), `graft-events-us-*`
-  * (content-fingerprinted µs events layout). Those are bounded (one
-  * per data fingerprint) and deliberately outlive the JVM.
+  * functions of the test data — `graft-sf*` (ScaleData replicas) and
+  * `graft-fixtures` (wiki XML fixtures). Those are bounded (one per
+  * data fingerprint) and deliberately outlive the JVM.
   */
 object Scratch {
   private val tmp: Path =
@@ -62,9 +61,9 @@ object Scratch {
     *    JVM's start (pre-r16 binaries created them unrooted; nothing
     *    creates them any more, so this converges to zero debris while
     *    never racing a live process's fresh dirs).
-    * Persistent caches (graft-sf*, graft-fixtures, graft-events-us-*)
-    * are never touched. Errors are swallowed — a sweep must never fail
-    * the run it is trying to keep honest. */
+    * Persistent caches (graft-sf*, graft-fixtures) are never touched.
+    * Errors are swallowed — a sweep must never fail the run it is
+    * trying to keep honest. */
   def sweepStale(): Unit = try {
     val jvmStart = ProcessHandle.current().info().startInstant()
       .map(_.toEpochMilli).orElse(System.currentTimeMillis())

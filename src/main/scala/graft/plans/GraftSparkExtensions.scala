@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{BitwiseCount, BitwiseXor, Expression, ExpressionInfo}
 import org.apache.spark.sql.SparkSessionExtensions
 import graft.sources.ClusterScans
@@ -18,11 +16,8 @@ import graft.sources.ClusterScans
   * their exchange.
   *
   * [[graft.GraftSession.build]] wires it through `spark.sql.extensions`,
-  * which also carries it into every `newSession()` clone.
-  * `GraftSparkExtensions.install(spark)` is the fallback for a live
-  * session started without it; it does NOT reach that session's
-  * `newSession()` clones, and it does not add [[ClusterScans]] (a live
-  * session has no slot for it), so such a session's scans shuffle.
+  * which also carries it into every `newSession()` clone; it is the one
+  * way a session gets these functions and rules.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -62,24 +57,4 @@ object GraftSparkExtensions {
       // hamming distance composes from built-ins: popcount(a xor b)
       register("hamming64", classOf[BitwiseCount], 2,
         args => BitwiseCount(BitwiseXor(args(0), args(1))))
-
-  /** Runtime registration on an existing session (idempotent). After
-    * this, `selectExpr("fnv64(col)")` / `expr("fnv64(col)")` plan the
-    * native expression, and the [[NanosFilterRule]] pushdown-derivation
-    * rule runs in the optimizer (experimental-methods slot, the live-
-    * session equivalent of injectOptimizerRule). */
-  def install(spark: SparkSession): Unit = {
-    functions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    // check-then-append on a shared session must be atomic: racing
-    // callers of an unguarded read-modify-write can append the
-    // (idempotent, but then wastefully re-run) rule once each
-    GraftSparkExtensions.synchronized {
-      val cur = spark.experimental.extraOptimizations
-      if (!cur.contains(NanosFilterRule))
-        spark.experimental.extraOptimizations = cur :+ NanosFilterRule
-    }
-  }
 }

@@ -14,8 +14,7 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * Problem: once predicate pushdown substitutes the alias, the scan
   * filter is `timestamp_micros(raw div 1000) >= TIMESTAMP'…'` — not an
   * attribute comparison, so the parquet source can't translate it and
-  * every row group is read. The workaround to date was the
-  * [[graft.Tables.eventsMicros]] rewrite (one extra pass over the data).
+  * every row group is read.
   *
   * This rule DERIVES a redundant, pushable range predicate on the raw
   * int64 column from any comparison between that projected timestamp

@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
@@ -9,6 +10,75 @@ import QueryKit._
 /** Corpus curation, sampling and sequence packing (curate*, sample*,
   * pack*): one [[Query]] record per query. */
 private[graft] object Curation {
+
+  /** Documents packed into training shards: whitespace token counts
+    * (`size`), 8 snake-balanced shards by size, then each doc's start
+    * `cb` in its shard's contiguous token stream and its 2048-token
+    * sequence `seq`. */
+  private def packedDocs(s: SparkSession, d: String): DataFrame = {
+    val tc = t(s, d, "documents")
+      .select(col("doc_id"),
+        TextAnalysisOps.wsTokenCount(col("text")).cast("long").as("nt"))
+    val sh = PackOps.snakeShards(tc, "doc_id", "nt", nShards = 8)
+    val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    sh.withColumn("cb", coalesce(sum(col("size")).over(w), lit(0L)))
+      .withColumn("seq", expr("cb div 2048"))
+  }
+
+  /** Per shard of [[packedDocs]]: n_docs, sum_tokens and n_seqs. */
+  private def packShards(s: SparkSession, d: String): DataFrame =
+    packedDocs(s, d).groupBy(col("shard"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("size")).as("sum_tokens"),
+        (max(col("seq")) + 1).as("n_seqs"))
+
+  /** The oracle twin of [[packedDocs]]'s shard step, as a WITH prefix
+    * ending in CTE `a` (doc_id, nt, shard). */
+  private val snakeShardsSql =
+    """WITH tc AS (
+      |  SELECT doc_id,
+      |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+      |     x -> x <> '')) AS nt
+      |  FROM documents),
+      |r AS (SELECT doc_id, nt,
+      |       row_number() OVER (ORDER BY nt DESC, doc_id) AS rk FROM tc),
+      |a AS (SELECT doc_id, nt,
+      |  CASE WHEN ((rk-1) // 8) % 2 = 0 THEN (rk-1) % 8
+      |       ELSE 7 - (rk-1) % 8 END AS shard FROM r)""".stripMargin
+
+  /** [[snakeShardsSql]] then CTE `o` (shard, nt, cb): each doc's start
+    * in its shard's contiguous token stream. */
+  private val snakePackSql =
+    s"""$snakeShardsSql,
+       |o AS (SELECT shard, nt,
+       |  coalesce(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
+       |  FROM a)""".stripMargin
+
+  /** `df` with its 90/5/5 train/val/test `split` off bucket `b`: the
+    * low 32 bits of fnv64(doc_id + "#split") mod 100. The fold to the
+    * low 32 bits comes FIRST (a power of two, so signed and unsigned
+    * agree): % 100 straight off the signed 64-bit hash would disagree
+    * with an unsigned replay. */
+  private def withSplit(df: DataFrame): DataFrame =
+    df.withColumn("b", pmod(
+        expr("fnv64(concat(cast(doc_id as string), '#split'))")
+          .bitwiseAND(lit(4294967295L)), lit(100L)))
+      .withColumn("split", when(col("b") < 90, "train")
+        .when(col("b") < 95, "val").otherwise("test"))
+
+  /** The curated corpus: documents of ≥ 20 tokens identified as `en`
+    * (one map-only pass) that survive exact dedup (a semi-join against
+    * the keep-list). */
+  private def curatedDocs(s: SparkSession, d: String): DataFrame = {
+    val docs = t(s, d, "documents")
+    val keep = DedupOps.exactGroups(docs, "doc_id", "text")
+      .select(col("keep_id").as("doc_id"))
+    TextAnalysisOps.withLangId(docs, "text")
+      .withColumn("n_tokens", size(TermOps.tokens(col("text"))))
+      .filter(col("n_tokens") >= 20 && col("pred_lang") === "en")
+      .join(keep, Seq("doc_id"), "left_semi")
+  }
 
   val all: Seq[Query] = Seq(
     Query("sample_split_leakfree", (s, d) => {
@@ -29,14 +99,7 @@ private[graft] object Curation {
     },
       // component representative = dedup_canonical's `canonical`; the
       // split hash is sample_split's convention applied to it
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u),
+      s"""$nearDupReachSql,
          |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
          |canon AS (
          |  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS canonical
@@ -252,34 +315,11 @@ private[graft] object Curation {
       // snake-balanced shards (by token size) → per-shard contiguous
       // 2048-token sequence packing — each stage is its own gated
       // operator; this pins the composed artifact a shard writer emits
-      val tc = t(s, d, "documents")
-        .select(col("doc_id"),
-          TextAnalysisOps.wsTokenCount(col("text")).cast("long").as("nt"))
-      val sh = PackOps.snakeShards(tc, "doc_id", "nt", nShards = 8)
-      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      sh.withColumn("cb", coalesce(sum(col("size")).over(w), lit(0L)))
-        .withColumn("seq", expr("cb div 2048"))
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("size")).as("sum_tokens"),
-          (max(col("seq")) + 1).as("n_seqs"))
+      packShards(s, d)
     },
       // composed chain: whitespace token counts → snake shards by size →
       // per-shard contiguous packing at budget 2048
-      """WITH tc AS (
-        |  SELECT doc_id,
-        |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '')) AS nt
-        |  FROM documents),
-        |r AS (SELECT doc_id, nt,
-        |       row_number() OVER (ORDER BY nt DESC, doc_id) AS rk FROM tc),
-        |a AS (SELECT doc_id, nt,
-        |  CASE WHEN ((rk-1) // 8) % 2 = 0 THEN (rk-1) % 8
-        |       ELSE 7 - (rk-1) % 8 END AS shard FROM r),
-        |o AS (SELECT shard, nt,
-        |  coalesce(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-        |  FROM a)
+      s"""$snakePackSql
         |SELECT CAST(shard AS INT) AS shard, count(*) AS n_docs,
         | CAST(sum(nt) AS BIGINT) AS sum_tokens,
         | CAST(max(cb // 2048) + 1 AS BIGINT) AS n_seqs
@@ -350,36 +390,13 @@ private[graft] object Curation {
       // (n_seqs·2048 − Σtokens)/(n_seqs·2048) — the utilization number
       // a training-throughput dashboard tracks. Same snake-shard +
       // cumulative-fill chain; one extra mirrored division.
-      val tc = t(s, d, "documents")
-        .select(col("doc_id"),
-          TextAnalysisOps.wsTokenCount(col("text")).cast("long").as("nt"))
-      val sh = PackOps.snakeShards(tc, "doc_id", "nt", nShards = 8)
-      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      sh.withColumn("cb", coalesce(sum(col("size")).over(w), lit(0L)))
-        .withColumn("seq", expr("cb div 2048"))
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("size")).as("sum_tokens"),
-          (max(col("seq")) + 1).as("n_seqs"))
+      packShards(s, d)
         .select(col("shard"), col("n_docs"), col("sum_tokens"), col("n_seqs"),
           round((col("n_seqs") * 2048 - col("sum_tokens")).cast("double") /
             (col("n_seqs") * 2048), 6).as("waste"))
     },
       // pack_e2e chain + the waste division mirrored
-      """WITH tc AS (
-        |  SELECT doc_id,
-        |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '')) AS nt
-        |  FROM documents),
-        |r AS (SELECT doc_id, nt,
-        |       row_number() OVER (ORDER BY nt DESC, doc_id) AS rk FROM tc),
-        |a AS (SELECT doc_id, nt,
-        |  CASE WHEN ((rk-1) // 8) % 2 = 0 THEN (rk-1) % 8
-        |       ELSE 7 - (rk-1) % 8 END AS shard FROM r),
-        |o AS (SELECT shard, nt,
-        |  coalesce(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
-        |  FROM a)
+      s"""$snakePackSql
         |SELECT CAST(shard AS INT) AS shard, count(*) AS n_docs,
         | CAST(sum(nt) AS BIGINT) AS sum_tokens,
         | CAST(max(cb // 2048) + 1 AS BIGINT) AS n_seqs,
@@ -451,14 +468,7 @@ private[graft] object Curation {
       // the boundary list is an ordered array fold (sorted by doc_id,
       // the cumulative order), emitted as a comma-joined string so the
       // gate compares it byte-for-byte.
-      val tc = t(s, d, "documents")
-        .select(col("doc_id"),
-          TextAnalysisOps.wsTokenCount(col("text")).cast("long").as("nt"))
-      val sh = PackOps.snakeShards(tc, "doc_id", "nt", nShards = 8)
-      val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      sh.withColumn("cb", coalesce(sum(col("size")).over(w), lit(0L)))
-        .withColumn("seq", expr("cb div 2048"))
+      packedDocs(s, d)
         .withColumn("off", col("cb") % 2048)
         .groupBy(col("shard"), col("seq"))
         .agg(count(lit(1)).as("n_docs"), sum(col("size")).as("sum_tokens"),
@@ -468,16 +478,7 @@ private[graft] object Curation {
     },
       // the pack_e2e chain with per-sequence boundary offsets as an
       // ordered string_agg (doc_id order = cumulative order)
-      """WITH tc AS (
-        |  SELECT doc_id,
-        |   len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |     x -> x <> '')) AS nt
-        |  FROM documents),
-        |r AS (SELECT doc_id, nt,
-        |       row_number() OVER (ORDER BY nt DESC, doc_id) AS rk FROM tc),
-        |a AS (SELECT doc_id, nt,
-        |  CASE WHEN ((rk-1) // 8) % 2 = 0 THEN (rk-1) % 8
-        |       ELSE 7 - (rk-1) % 8 END AS shard FROM r),
+      s"""$snakeShardsSql,
         |o AS (SELECT shard, doc_id, nt,
         |  coalesce(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb
@@ -513,19 +514,12 @@ private[graft] object Curation {
     },
       // the text_overlap_frac 8-gram chain rolled up per source; docs
       // with no 8-gram (absent from j) coalesce to clean
-      """WITH arrs AS (
+      s"""WITH arrs AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
-        |    '\s+'), x -> x <> '') AS a
+        |    '\\s+'), x -> x <> '') AS a
         |  FROM documents),
-        |g AS (
-        |  SELECT DISTINCT doc_id, array_to_string(a[i:i+7], ' ') AS g
-        |  FROM arrs, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
-        |  WHERE len(a) >= 8),
-        |b AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
-        |j AS (
-        |  SELECT g.doc_id, count(*) AS n_grams, count(b.g) AS n_hits
-        |  FROM g LEFT JOIN b USING (g)
-        |  GROUP BY g.doc_id),
+        |$grams8Sql,
+        |$benchGramHitsSql,
         |lab AS (
         |  SELECT d.doc_id, d.source,
         |   coalesce(j.n_hits * 2 >= j.n_grams, false) AS contam
@@ -704,10 +698,7 @@ private[graft] object Curation {
     },
       // positional tokens (the search_snippet pattern), FNV start rule on
       // the low-32 fold, covered set via generate_series + DISTINCT
-      s"""WITH arrs AS (
-         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |    x -> x <> '') AS a
-         |  FROM documents),
+      s"""$arrsSql,
          |p AS (SELECT doc_id, generate_subscripts(a, 1) - 1 AS pos
          |      FROM arrs),
          |n AS (SELECT doc_id, count(*) AS n_tokens FROM p GROUP BY 1),
@@ -928,16 +919,7 @@ private[graft] object Curation {
       // per-(split, lang) balance table a pipeline audits — membership
       // is a pure function of the id, so reruns, late-arriving shards
       // and incremental refreshes all agree
-      // fold to the low 32 bits FIRST (power-of-two, so signed &
-      // unsigned agree), then take the non-power-of-two bucket modulus
-      // of that non-negative value — % 100 straight off the signed
-      // 64-bit hash would disagree with an unsigned replay
-      t(s, d, "documents")
-        .withColumn("b", pmod(
-          expr("fnv64(concat(cast(doc_id as string), '#split'))")
-            .bitwiseAND(lit(4294967295L)), lit(100L)))
-        .withColumn("split", when(col("b") < 90, "train")
-          .when(col("b") < 95, "val").otherwise("test"))
+      withSplit(t(s, d, "documents"))
         .groupBy(col("split"), col("lang"))
         .agg(count(lit(1)).as("n_docs"))
     },
@@ -1309,18 +1291,7 @@ private[graft] object Curation {
       // training run consumes (doc counts, token budget, language
       // spread, id range). Composes the gated chains; one dedup
       // aggregation + one semi-join + one split aggregation.
-      val docs = t(s, d, "documents")
-      val keep = DedupOps.exactGroups(docs, "doc_id", "text")
-        .select(col("keep_id").as("doc_id"))
-      TextAnalysisOps.withLangId(docs, "text")
-        .withColumn("n_tokens", size(TermOps.tokens(col("text"))))
-        .filter(col("n_tokens") >= 20 && col("pred_lang") === "en")
-        .join(keep, Seq("doc_id"), "left_semi")
-        .withColumn("b", pmod(
-          expr("fnv64(concat(cast(doc_id as string), '#split'))")
-            .bitwiseAND(lit(4294967295L)), lit(100L)))
-        .withColumn("split", when(col("b") < 90, "train")
-          .when(col("b") < 95, "val").otherwise("test"))
+      withSplit(curatedDocs(s, d))
         .groupBy("split")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_tokens")).as("sum_tokens"),
@@ -1359,13 +1330,7 @@ private[graft] object Curation {
       // exact-dedup survivors — the only shuffle besides the dedup
       // aggregation itself. The shape a 100 TB pretraining-corpus pass
       // runs; CuratePlanSpec pins it.
-      val docs = t(s, d, "documents")
-      val keep = DedupOps.exactGroups(docs, "doc_id", "text")
-        .select(col("keep_id").as("doc_id"))
-      TextAnalysisOps.withLangId(docs, "text")
-        .withColumn("n_tokens", size(TermOps.tokens(col("text"))))
-        .filter(col("n_tokens") >= 20 && col("pred_lang") === "en")
-        .join(keep, Seq("doc_id"), "left_semi")
+      curatedDocs(s, d)
         .select(col("doc_id"), col("n_tokens"), col("pred_lang"))
     },
       s"""WITH keep AS (

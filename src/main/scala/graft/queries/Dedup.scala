@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
@@ -11,6 +11,36 @@ import QueryKit._
   * [[Query]] record per query. */
 private[graft] object Dedup {
 
+  /** The embeddings corpus (vec_id, embedding) plus five planted
+    * vectors far above the corpus id range: 9000001/9000002 and
+    * 9000003/9000004 are identical pairs, 9000005 stands alone. The
+    * organic corpus has no pair with cosine ≥ 0.99, so without them a
+    * near-dup gate would only prove the absence of false positives. */
+  private def plantedCorpus(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    def v(f: Int => Float) = (0 until 64).map(f).toArray
+    val planted = Seq(
+      (9000001L, v(i => (i + 1).toFloat)),
+      (9000002L, v(i => (i + 1).toFloat)),
+      (9000003L, v(i => ((i * 37) % 64 + 1).toFloat)),
+      (9000004L, v(i => ((i * 37) % 64 + 1).toFloat)),
+      (9000005L, v(i => ((i * 11) % 64 + 1).toFloat))
+    ).toDF("vec_id", "embedding")
+    t(s, d, "embeddings").select("vec_id", "embedding").unionByName(planted)
+  }
+
+  /** The oracle twin of [[plantedCorpus]]: (vec_id, emb) with `emb`
+    * as DOUBLE[]. */
+  private val plantedCorpusSql =
+    """  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
+      |  UNION ALL
+      |  SELECT 9000000 + j AS vec_id,
+      |   list_transform(generate_series(0, 63), i -> CAST(
+      |     CASE WHEN j <= 2 THEN i + 1
+      |          WHEN j <= 4 THEN (i * 37) % 64 + 1
+      |          ELSE (i * 11) % 64 + 1 END AS DOUBLE)) AS emb
+      |  FROM unnest(generate_series(1, 5)) AS t(j)""".stripMargin
+
   /** The deterministic SemDeDup training prologue (planted-union base,
     * 2-round Lloyd at `kSql` clusters, final assignment `asn` +
     * centroids `cent1`) — shared by [[semDedupSql]] and the two-level
@@ -19,14 +49,7 @@ private[graft] object Dedup {
     * (the graph_ktruss re-expansion lesson). */
   private def semDedupCtes(kSql: String): String =
     s"""base AS MATERIALIZED (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-       |  UNION ALL
-       |  SELECT 9000000 + j AS vec_id,
-       |   list_transform(generate_series(0, 63), i -> CAST(
-       |     CASE WHEN j <= 2 THEN i + 1
-       |          WHEN j <= 4 THEN (i * 37) % 64 + 1
-       |          ELSE (i * 11) % 64 + 1 END AS DOUBLE)) AS emb
-       |  FROM unnest(generate_series(1, 5)) AS t(j)),
+       |$plantedCorpusSql),
        |d0 AS (SELECT vec_id % $kSql AS cluster, unnest(emb) AS v,
        |        generate_subscripts(emb, 1) AS dim FROM base),
        |cent0 AS MATERIALIZED (SELECT cluster, list(cv ORDER BY dim) AS centroid FROM
@@ -243,21 +266,60 @@ private[graft] object Dedup {
          |FROM pd LEFT JOIN dup USING (mh)
          |GROUP BY pd.doc_id""".stripMargin
 
-  /** Verified MinHash-candidate pairs (exact jaccard ≥ 0.4 on the
-    * uncapped shingle sets) — gates dedup_minhash_cand and feeds the
-    * recall harness (dedup_minhash_eval) as a subquery. */
-  private val minhashVerifiedSql =
-    """WITH arrs AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |    x -> x <> '') AS a
-      |  FROM documents),
-      |sh AS (
+  /** CTEs over `arrs`: `sh` (doc_id, sh), each doc's distinct 3-word
+    * shingles with no df cap (a doc under 3 tokens is one shingle, its
+    * whole text), and `sizes` (doc_id, n) — the MinHash verify sets. */
+  private val uncappedShinglesSql =
+    """sh AS (
       |  SELECT DISTINCT doc_id,
       |   CASE WHEN len(a) < 3 THEN array_to_string(a, ' ')
       |        ELSE a[i] || ' ' || a[i+1] || ' ' || a[i+2] END AS sh
       |  FROM arrs, unnest(generate_series(1, greatest(len(a)-2, 1))) AS t(i)
       |  WHERE len(a) >= 1),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)""".stripMargin
+
+  /** The exact-vs-approx substring-tier confusion table over a
+    * grouping of [[substringVerdicts]]: docs hot in both tiers, exact
+    * only and approx only, and the share of docs the tiers agree on. */
+  private def tierConfusion(g: RelationalGroupedDataset): DataFrame =
+    g.agg(count(lit(1)).as("n_docs"),
+      sum(when(col("ehot") && col("ahot"), 1L).otherwise(0L))
+        .as("n_both_hot"),
+      sum(when(col("ehot") && !col("ahot"), 1L).otherwise(0L))
+        .as("n_exact_only"),
+      sum(when(!col("ehot") && col("ahot"), 1L).otherwise(0L))
+        .as("n_approx_only"))
+    .withColumn("agreement", round(
+      (col("n_docs") - col("n_exact_only") - col("n_approx_only"))
+        .cast("double") / col("n_docs"), 4))
+
+  /** The oracle twin of [[tierConfusion]]: its columns after n_docs and
+    * the FROM clause joining both nested tier chains on doc_id. */
+  private lazy val tierConfusionSql: String =
+    s""" CAST(sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
+       |   AND a.n_dup_windows * 2 >= a.n_windows THEN 1 ELSE 0 END)
+       |   AS BIGINT) AS n_both_hot,
+       | CAST(sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
+       |   AND NOT (a.n_dup_windows * 2 >= a.n_windows) THEN 1 ELSE 0 END)
+       |   AS BIGINT) AS n_exact_only,
+       | CAST(sum(CASE WHEN NOT (x.n_dup_pos * 2 >= x.n_pos)
+       |   AND a.n_dup_windows * 2 >= a.n_windows THEN 1 ELSE 0 END)
+       |   AS BIGINT) AS n_approx_only,
+       | round((count(*)
+       |   - sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
+       |       AND NOT (a.n_dup_windows * 2 >= a.n_windows)
+       |       THEN 1 ELSE 0 END)
+       |   - sum(CASE WHEN NOT (x.n_dup_pos * 2 >= x.n_pos)
+       |       AND a.n_dup_windows * 2 >= a.n_windows
+       |       THEN 1 ELSE 0 END)) * 1.0 / count(*), 4) AS agreement
+       |FROM ($suffixDupSql) x JOIN ($windowMinhashSql) a USING (doc_id)""".stripMargin
+
+  /** Verified MinHash-candidate pairs (exact jaccard ≥ 0.4 on the
+    * uncapped shingle sets) — gates dedup_minhash_cand and feeds the
+    * recall harness (dedup_minhash_eval) as a subquery. */
+  private val minhashVerifiedSql =
+    s"""$arrsSql,
+      |$uncappedShinglesSql,
       |inter AS (
       |  SELECT a.doc_id AS ida, b.doc_id AS idb, count(*) AS i
       |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
@@ -277,27 +339,18 @@ private[graft] object Dedup {
     * plus a boilerplate-wrapped copy of every 97th doc, scored with
     * Broder containment i/min(na,nb) instead of symmetric jaccard. */
   private val containmentPairsSql =
-    """WITH docs AS (
+    s"""WITH docs AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL
       |  SELECT doc_id + 1000000,
       |   'begin wrapper header ' || text || ' end wrapper footer'
       |  FROM documents WHERE doc_id % 97 = 0),
       |arrs AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
       |    x -> x <> '') AS a
       |  FROM docs),
-      |sh AS (
-      |  SELECT DISTINCT doc_id, a[i] || ' ' || a[i+1] || ' ' || a[i+2] AS sh
-      |  FROM arrs, unnest(generate_series(1, greatest(len(a)-2, 0))) AS t(i)
-      |  WHERE len(a) >= 3),
-      |kept AS (SELECT sh FROM sh GROUP BY sh HAVING count(*) <= 100),
-      |shk AS (SELECT doc_id, sh.sh FROM sh JOIN kept USING (sh)),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM shk GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS ida, b.doc_id AS idb, count(*) AS i
-      |  FROM shk a JOIN shk b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
+      |$shinglesSql,
+      |$shingleOverlapSql
       |SELECT ida AS id_a, idb AS id_b,
       | round(i * 1.0 / least(sa.n, sb.n), 4) AS containment
       |FROM inter JOIN sizes sa ON ida = sa.doc_id JOIN sizes sb ON idb = sb.doc_id
@@ -402,16 +455,7 @@ private[graft] object Dedup {
       // components of the jaccard pair graph by transitive reachability
       // (recursive CTE): component = min reachable doc id — the same
       // fixpoint the iterative min-label propagation converges to
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u)
-         |SELECT node AS doc_id, min(r) AS component
-         |FROM reach GROUP BY node""".stripMargin,
+      nearDupComponentsSql,
       sharesStage = true),
 
     Query("dedup_canonical", (s, d) => {
@@ -423,14 +467,7 @@ private[graft] object Dedup {
     },
       // same component fixpoint, joined back to every document: canonical =
       // component min (or self), keep = is-canonical
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u),
+      s"""$nearDupReachSql,
          |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node)
          |SELECT d.doc_id,
          | coalesce(c.component, d.doc_id) AS canonical,
@@ -486,14 +523,7 @@ private[graft] object Dedup {
           (col("sz") * col("n_clusters")).as("n_docs_in")),
       // same component fixpoint, rolled up twice: component → size →
       // (size → cluster count, docs bound up)
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u),
+      s"""$nearDupReachSql,
          |comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
          |szs AS (SELECT component, count(*) AS sz FROM comp GROUP BY component)
          |SELECT CAST(sz AS BIGINT) AS sz,
@@ -553,10 +583,7 @@ private[graft] object Dedup {
         w = 8, minCount = 2L),
       // every 8-token window, duplicated = exact content occurs >= 2 times
       // corpus-wide (positions count, not distinct grams)
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM documents),
+      s"""$arrsSql,
         |g AS (
         |  SELECT doc_id, array_to_string(a[i:i+7], ' ') AS gram
         |  FROM arrs, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
@@ -614,39 +641,13 @@ private[graft] object Dedup {
       // join: both tiers must cover the doc (approx needs ≥ 16 tokens).
       // The verdict frame is process-shared with the per-source rollup
       // (substringVerdicts); the tier generators keep their own gates.
-      substringVerdicts(s, d)
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("ehot") && col("ahot"), 1L).otherwise(0L))
-            .as("n_both_hot"),
-          sum(when(col("ehot") && !col("ahot"), 1L).otherwise(0L))
-            .as("n_exact_only"),
-          sum(when(!col("ehot") && col("ahot"), 1L).otherwise(0L))
-            .as("n_approx_only"))
-        .withColumn("agreement", round(
-          (col("n_docs") - col("n_exact_only") - col("n_approx_only"))
-            .cast("double") / col("n_docs"), 4))
+      tierConfusion(substringVerdicts(s, d).groupBy())
     },
       // both full tier chains nested as derived tables (the r9 rule:
       // CTEs are legal inside FROM (...)), joined on doc_id, integer
       // hot verdicts mirrored, one final rounded division
       s"""SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         | CAST(sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |   AND a.n_dup_windows * 2 >= a.n_windows THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_both_hot,
-         | CAST(sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |   AND NOT (a.n_dup_windows * 2 >= a.n_windows) THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_exact_only,
-         | CAST(sum(CASE WHEN NOT (x.n_dup_pos * 2 >= x.n_pos)
-         |   AND a.n_dup_windows * 2 >= a.n_windows THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_approx_only,
-         | round((count(*)
-         |   - sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |       AND NOT (a.n_dup_windows * 2 >= a.n_windows)
-         |       THEN 1 ELSE 0 END)
-         |   - sum(CASE WHEN NOT (x.n_dup_pos * 2 >= x.n_pos)
-         |       AND a.n_dup_windows * 2 >= a.n_windows
-         |       THEN 1 ELSE 0 END)) * 1.0 / count(*), 4) AS agreement
-         |FROM ($suffixDupSql) x JOIN ($windowMinhashSql) a USING (doc_id)""".stripMargin,
+         |$tierConfusionSql""".stripMargin,
       sharesStage = true),
 
     Query("dedup_substring_src_eval", (s, d) =>
@@ -657,40 +658,14 @@ private[graft] object Dedup {
       // whose exact-only mass is material; trust the 8-byte sketch on
       // the rest). Reads the same process-shared verdict frame as the
       // corpus-wide confusion row, plus one (doc_id, source) join.
-      substringVerdicts(s, d)
+      tierConfusion(substringVerdicts(s, d)
         .join(t(s, d, "documents").select(col("doc_id"), col("source")),
           Seq("doc_id"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("ehot") && col("ahot"), 1L).otherwise(0L))
-            .as("n_both_hot"),
-          sum(when(col("ehot") && !col("ahot"), 1L).otherwise(0L))
-            .as("n_exact_only"),
-          sum(when(!col("ehot") && col("ahot"), 1L).otherwise(0L))
-            .as("n_approx_only"))
-        .withColumn("agreement", round(
-          (col("n_docs") - col("n_exact_only") - col("n_approx_only"))
-            .cast("double") / col("n_docs"), 4)),
+        .groupBy(col("source"))),
       // the same nested tier chains rolled up per source (one extra
       // documents join for the source key)
       s"""SELECT dd.source, CAST(count(*) AS BIGINT) AS n_docs,
-         | CAST(sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |   AND a.n_dup_windows * 2 >= a.n_windows THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_both_hot,
-         | CAST(sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |   AND NOT (a.n_dup_windows * 2 >= a.n_windows) THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_exact_only,
-         | CAST(sum(CASE WHEN NOT (x.n_dup_pos * 2 >= x.n_pos)
-         |   AND a.n_dup_windows * 2 >= a.n_windows THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_approx_only,
-         | round((count(*)
-         |   - sum(CASE WHEN x.n_dup_pos * 2 >= x.n_pos
-         |       AND NOT (a.n_dup_windows * 2 >= a.n_windows)
-         |       THEN 1 ELSE 0 END)
-         |   - sum(CASE WHEN NOT (x.n_dup_pos * 2 >= x.n_pos)
-         |       AND a.n_dup_windows * 2 >= a.n_windows
-         |       THEN 1 ELSE 0 END)) * 1.0 / count(*), 4) AS agreement
-         |FROM ($suffixDupSql) x JOIN ($windowMinhashSql) a USING (doc_id)
+         |$tierConfusionSql
          |JOIN (SELECT doc_id, source FROM documents) dd USING (doc_id)
          |GROUP BY 1""".stripMargin,
       sharesStage = true),
@@ -792,17 +767,8 @@ private[graft] object Dedup {
       // the minhash exact-verify chain restricted to cross-parity pairs;
       // the LSH banding is recall-complete on this data (the
       // dedup_minhash_eval harness pins recall = 1 at threshold 0.4)
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id,
-        |   CASE WHEN len(a) < 3 THEN array_to_string(a, ' ')
-        |        ELSE a[i] || ' ' || a[i+1] || ' ' || a[i+2] END AS sh
-        |  FROM arrs, unnest(generate_series(1, greatest(len(a)-2, 1))) AS t(i)
-        |  WHERE len(a) >= 1),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+      s"""$arrsSql,
+        |$uncappedShinglesSql,
         |inter AS (
         |  SELECT a.doc_id AS tid, b.doc_id AS eid, count(*) AS i
         |  FROM sh a JOIN sh b ON a.sh = b.sh
@@ -870,23 +836,8 @@ private[graft] object Dedup {
          |SELECT CAST(cluster AS INT) AS cluster, n,
          | round(ssum / n, 6) AS mean_silhouette FROM g""".stripMargin),
 
-    Query("dedup_embedding", (s, d) => {
-      import s.implicits._
-      // planted identical-vector pairs (ids far above the corpus range):
-      // the organic corpus has no pair ≥ 0.99, so without them the oracle
-      // hash-match would only ever prove the *absence* of false positives
-      def v(f: Int => Float) = (0 until 64).map(f).toArray
-      val planted = Seq(
-        (9000001L, v(i => (i + 1).toFloat)),
-        (9000002L, v(i => (i + 1).toFloat)),
-        (9000003L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000004L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000005L, v(i => ((i * 11) % 64 + 1).toFloat))
-      ).toDF("vec_id", "embedding")
-      SimilarityOps.embeddingNearDups(
-        t(s, d, "embeddings").select("vec_id", "embedding").unionByName(planted),
-        threshold = 0.99)
-    },
+    Query("dedup_embedding", (s, d) =>
+      SimilarityOps.embeddingNearDups(plantedCorpus(s, d), threshold = 0.99),
       // exact brute-force mirror over corpus ∪ planted vectors: the planted
       // identical pairs are guaranteed same-bucket in the LSH path, so the
       // hash match now proves presence (2 pairs) as well as absence of false
@@ -894,35 +845,18 @@ private[graft] object Dedup {
       // exceeds maxBucket=2000 — trivially true at 505 vectors; the cap's
       // recall trade is documented on embeddingNearDups.)
       s"""WITH base AS (
-         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
-         |  UNION ALL
-         |  SELECT 9000000 + j AS vec_id,
-         |   list_transform(generate_series(0, 63), i -> CAST(
-         |     CASE WHEN j <= 2 THEN i + 1
-         |          WHEN j <= 4 THEN (i * 37) % 64 + 1
-         |          ELSE (i * 11) % 64 + 1 END AS DOUBLE)) AS emb
-         |  FROM unnest(generate_series(1, 5)) AS t(j))
+         |$plantedCorpusSql)
          |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          | round(${cosSql("a.emb", "b.emb")}, 4) AS sim
          |FROM base a JOIN base b ON a.vec_id < b.vec_id
          |WHERE ${cosSql("a.emb", "b.emb")} >= 0.99""".stripMargin),
 
     Query("dedup_semantic", (s, d) => {
-      import s.implicits._
       // SemDeDup composition: k-means clusters + within-cluster cosine
       // pruning (DedupOps.semanticDedup). Same planted near-identical
       // vectors as dedup_embedding — the organic corpus has no pair
       // ≥ 0.99, so without them the gate would only prove absence.
-      def v(f: Int => Float) = (0 until 64).map(f).toArray
-      val planted = Seq(
-        (9000001L, v(i => (i + 1).toFloat)),
-        (9000002L, v(i => (i + 1).toFloat)),
-        (9000003L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000004L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000005L, v(i => ((i * 11) % 64 + 1).toFloat))
-      ).toDF("vec_id", "embedding")
-      val emb = t(s, d, "embeddings").select("vec_id", "embedding")
-        .unionByName(planted)
+      val emb = plantedCorpus(s, d)
         .withColumn("embedding", col("embedding").cast("array<double>"))
       DedupOps.semanticDedup(emb, k = 8, iters = 2, threshold = 0.99)
     },
@@ -974,23 +908,13 @@ private[graft] object Dedup {
         |FROM y""".stripMargin),
 
     Query("dedup_semantic_auto", (s, d) => {
-      import s.implicits._
       // the k ∝ √N SemDeDup default (DedupOps.semanticDedupAuto): same
       // planted pairs and threshold as dedup_semantic, but k = ⌈√N⌉
       // from a cheap count — the shape whose within-cluster pair work
       // stays Θ(N) as the corpus grows (the fixed-k query measured 28×
       // at ×10 data; this one is the scale default). The oracle replays
       // the SAME ⌈√N⌉ inside SQL, so k-agreement is part of the gate.
-      def v(f: Int => Float) = (0 until 64).map(f).toArray
-      val planted = Seq(
-        (9000001L, v(i => (i + 1).toFloat)),
-        (9000002L, v(i => (i + 1).toFloat)),
-        (9000003L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000004L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000005L, v(i => ((i * 11) % 64 + 1).toFloat))
-      ).toDF("vec_id", "embedding")
-      val emb = t(s, d, "embeddings").select("vec_id", "embedding")
-        .unionByName(planted)
+      val emb = plantedCorpus(s, d)
         .withColumn("embedding", col("embedding").cast("array<double>"))
       DedupOps.semanticDedupAuto(emb, iters = 2, threshold = 0.99)
     },
@@ -1001,7 +925,6 @@ private[graft] object Dedup {
       "(SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM base)")),
 
     Query("dedup_semantic_approx", (s, d) => {
-      import s.implicits._
       // SemDeDup's true-100 TB rung: the flat k = ⌈√N⌉ assignment is
       // O(N·k) = O(N^1.5) cosine work — the real scale bottleneck once
       // pair work is already Θ(N). ClusterOps.twoLevelAssign routes
@@ -1010,16 +933,7 @@ private[graft] object Dedup {
       // assignment agreement + dropped-set recall vs the exact flat
       // argmax, so the approximation's cost is always measured, never
       // assumed. Same planted dups + threshold as dedup_semantic_auto.
-      def v(f: Int => Float) = (0 until 64).map(f).toArray
-      val planted = Seq(
-        (9000001L, v(i => (i + 1).toFloat)),
-        (9000002L, v(i => (i + 1).toFloat)),
-        (9000003L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000004L, v(i => ((i * 37) % 64 + 1).toFloat)),
-        (9000005L, v(i => ((i * 11) % 64 + 1).toFloat))
-      ).toDF("vec_id", "embedding")
-      val emb = t(s, d, "embeddings").select("vec_id", "embedding")
-        .unionByName(planted)
+      val emb = plantedCorpus(s, d)
         .withColumn("embedding", col("embedding").cast("array<double>"))
         .localCheckpoint(eager = false)
       val n = emb.count()

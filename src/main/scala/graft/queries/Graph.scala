@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
@@ -10,6 +10,50 @@ import QueryKit._
 
 /** Graph analytics (graph*): one [[Query]] record per query. */
 private[graft] object Graph {
+
+  /** The part co-order graph: one row per pair of parts in one order
+    * (a < b, duplicates kept), over every 4th part — the deterministic
+    * node subsample that bounds a graph that densifies superlinearly
+    * with SF. The caller names the two endpoint columns. */
+  private def coOrderPairs(s: SparkSession, d: String, a: String,
+                           b: String): DataFrame = {
+    val li = t(s, d, "lineitem")
+      .filter(col("l_partkey") % 4 === 0)
+      .select(col("l_orderkey"), col("l_partkey"))
+    li.as("x").join(li.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey") &&
+          col("x.l_partkey") < col("y.l_partkey"))
+      .select(col("x.l_partkey").as(a), col("y.l_partkey").as(b))
+  }
+
+  /** The oracle twin of [[coOrderPairs]], distinct: a relation (a, b). */
+  private val coOrderEdgesSql =
+    """SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
+      |  FROM lineitem a JOIN lineitem b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+      |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0""".stripMargin
+
+  /** [[coOrderEdgesSql]] as CTE `edges`, then CTE `deg` (node, deg):
+    * each node's degree. */
+  private val coOrderDegreesSql =
+    s"""WITH edges AS (
+       |  $coOrderEdgesSql),
+       |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM
+       |  (SELECT a AS node FROM edges UNION ALL SELECT b FROM edges) n
+       |  GROUP BY node)""".stripMargin
+
+  /** The directed part-succession graph as a WITH prefix ending in CTE
+    * `e` (src, dst), distinct: each part to the next part of its order
+    * by (l_linenumber, l_partkey), self-loops dropped. */
+  private val successionEdgesSql =
+    """WITH seq AS (
+      |  SELECT l_partkey AS src,
+      |   lead(l_partkey) OVER (PARTITION BY l_orderkey
+      |     ORDER BY l_linenumber, l_partkey) AS dst
+      |  FROM lineitem),
+      |e AS MATERIALIZED (
+      |  SELECT DISTINCT src, dst FROM seq
+      |  WHERE dst IS NOT NULL AND dst <> src)""".stripMargin
 
   /** Two-round label-propagation oracle chain — gates `graph_label_prop`
     * and feeds `graph_modularity` as a nested relation, so both replay
@@ -62,16 +106,7 @@ private[graft] object Graph {
     },
       // incremental must equal from-scratch: the oracle IS the full
       // recursive CC over every pair (the dedup_components chain)
-      s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
-         |edges AS (
-         |  SELECT id_a AS u, id_b AS v FROM p
-         |  UNION SELECT id_b, id_a FROM p),
-         |reach AS (
-         |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
-         |  UNION
-         |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u)
-         |SELECT node AS doc_id, min(r) AS component
-         |FROM reach GROUP BY node""".stripMargin,
+      nearDupComponentsSql,
       sharesStage = true),
 
     Query("graph_clustering", (s, d) => {
@@ -82,25 +117,12 @@ private[graft] object Graph {
       // by the degree-ordered orientation and credit all three corners
       // via a 3-row explode; coeff = 2T/(d(d−1)) is one double division
       // over exact integers.
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+      val edges = coOrderPairs(s, d, "src", "dst")
       GraphOps.clusteringCoefficient(edges)
     },
       // identical orientation to the census; each triangle credits its
       // three corners via UNION ALL, coeff = 2T/(d(d−1)) over deg ≥ 2
-      """WITH edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
-        |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM
-        |  (SELECT a AS node FROM edges UNION ALL SELECT b FROM edges) n
-        |  GROUP BY node),
+      s"""$coOrderDegreesSql,
         |ori AS (
         |  SELECT CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.a ELSE e.b END AS u,
         |         CASE WHEN (da.deg, e.a) < (db.deg, e.b) THEN e.b ELSE e.a END AS v
@@ -126,21 +148,12 @@ private[graft] object Graph {
       // the result is deterministic whether or not the peel converged;
       // each round is one degree count + two semi-joins, edge list
       // checkpointed so plan depth stays O(1).
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+      val edges = coOrderPairs(s, d, "src", "dst")
       GraphOps.kcore(edges, k = 3, rounds = 4)
     },
       // four unrolled peel rounds — exactly the engine's bounded-round run
-      """WITH edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
+      s"""WITH edges AS (
+        |  $coOrderEdgesSql),
         |a1 AS (SELECT node FROM (SELECT node, count(*) AS deg FROM
         |  (SELECT a AS node FROM edges UNION ALL SELECT b FROM edges) n
         |  GROUP BY node) d WHERE deg >= 3),
@@ -173,13 +186,7 @@ private[graft] object Graph {
       // round semantics: engine and oracle both run exactly 2 passes;
       // triangles enumerate once each via the degree-oriented wedge
       // join (the graph_triangles orientation).
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+      val edges = coOrderPairs(s, d, "src", "dst")
       GraphOps.ktruss(edges, k = 4, rounds = 2)
     },
       // two unrolled truss-peel rounds + a final support pass — exactly
@@ -211,10 +218,7 @@ private[graft] object Graph {
            |    UNION ALL SELECT w1, w2 FROM tri_$tag) u
            |  GROUP BY a, b)""".stripMargin
       s"""WITH e0 AS MATERIALIZED (
-         |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-         |  FROM lineitem a JOIN lineitem b
-         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-         |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
+         |  $coOrderEdgesSql),
          |${supFrom("e0", "r1")},
          |e1 AS MATERIALIZED (SELECT e.a, e.b FROM e0 e JOIN sup_r1 s
          |       ON e.a = s.a AND e.b = s.b AND s.support >= 2),
@@ -233,13 +237,7 @@ private[graft] object Graph {
       // φ(S) = cut(S, S̄)/min(vol S, vol S̄), the partition-quality
       // audit (low φ = the cut respects community structure). Exact
       // integer cut and volume sums, one mirrored division.
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val und = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
+      val und = coOrderPairs(s, d, "a", "b")
         .distinct()
         .withColumn("sa", pmod(expr("a div 4"), lit(2)))
         .withColumn("sb", pmod(expr("b div 4"), lit(2)))
@@ -254,11 +252,8 @@ private[graft] object Graph {
             least(col("vol0"), col("vol1")), 6).as("conductance"))
     },
       // parity cut on the co-order graph; integer cut/volume sums
-      """WITH edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
+      s"""WITH edges AS (
+        |  $coOrderEdgesSql),
         |t AS (SELECT (a // 4) % 2 AS sa, (b // 4) % 2 AS sb FROM edges),
         |g AS (SELECT CAST(count(*) AS BIGINT) AS n_edges,
         |   CAST(sum(CASE WHEN sa <> sb THEN 1 ELSE 0 END) AS BIGINT)
@@ -279,13 +274,7 @@ private[graft] object Graph {
       // leaves (disassortative, r<0)? Two broadcast-able degree joins +
       // exact integer co-moments; the final r is one mirrored double
       // expression (the stats_spearman convention).
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val und = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
+      val und = coOrderPairs(s, d, "a", "b")
         .distinct().localCheckpoint() // feeds degrees AND the pair list
       val deg = und.select(col("a").as("node"))
         .unionByName(und.select(col("b").as("node")))
@@ -310,14 +299,7 @@ private[graft] object Graph {
     },
       // symmetrized (deg_u, deg_v) pairs; by symmetry Σx = Σy and
       // Σx² = Σy² — the oracle mirrors the engine's use of sxx with sy
-      """WITH edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
-        |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS deg FROM
-        |  (SELECT a AS node FROM edges UNION ALL SELECT b FROM edges) n
-        |  GROUP BY node),
+      s"""$coOrderDegreesSql,
         |pairs AS (SELECT da.deg AS x, db.deg AS y
         |  FROM edges e JOIN deg da ON e.a = da.node
         |       JOIN deg db ON e.b = db.node),
@@ -625,13 +607,7 @@ private[graft] object Graph {
       // The deterministic node subsample (every 4th part) bounds the
       // census cost — co-order graphs densify superlinearly with SF and
       // the full-graph census is the same plan at 16× the edges
-      val li = t(s, d, "lineitem")
-        .filter(col("l_partkey") % 4 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val edges = li.as("x").join(li.as("y"),
-          col("x.l_orderkey") === col("y.l_orderkey") &&
-            col("x.l_partkey") < col("y.l_partkey"))
-        .select(col("x.l_partkey").as("src"), col("y.l_partkey").as("dst"))
+      val edges = coOrderPairs(s, d, "src", "dst")
         .distinct()
       GraphOps.triangleStats(edges)
     },
@@ -641,11 +617,8 @@ private[graft] object Graph {
       // is the bit-identical double on both engines
       // degree-ordered orientation replayed with row-value comparisons;
       // each triangle closes exactly one wedge at its smallest vertex
-      """WITH edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 4 = 0 AND b.l_partkey % 4 = 0),
+      s"""WITH edges AS (
+        |  $coOrderEdgesSql),
         |deg AS (SELECT node, count(*) AS deg FROM
         |  (SELECT a AS node FROM edges UNION ALL SELECT b FROM edges) n
         |  GROUP BY node),
@@ -808,14 +781,7 @@ private[graft] object Graph {
             .as("reciprocity"))
     },
       // the same edge derivation; the reverse test is a literal EXISTS
-      """WITH seq AS (
-        |  SELECT l_partkey AS src,
-        |   lead(l_partkey) OVER (PARTITION BY l_orderkey
-        |     ORDER BY l_linenumber, l_partkey) AS dst
-        |  FROM lineitem),
-        |e AS MATERIALIZED (
-        |  SELECT DISTINCT src, dst FROM seq
-        |  WHERE dst IS NOT NULL AND dst <> src),
+      s"""$successionEdgesSql,
         |r AS (SELECT CAST(count(*) AS BIGINT) AS n_reciprocal FROM e
         |      WHERE EXISTS (SELECT 1 FROM e e2
         |                    WHERE e2.src = e.dst AND e2.dst = e.src)),
@@ -849,14 +815,7 @@ private[graft] object Graph {
       // the identical 3 min-label rounds per direction, unrolled (the
       // graph_kcore bounded-round contract); every round MATERIALIZED so
       // DuckDB never re-expands the chain per reference
-      """WITH seq AS (
-        |  SELECT l_partkey AS src,
-        |   lead(l_partkey) OVER (PARTITION BY l_orderkey
-        |     ORDER BY l_linenumber, l_partkey) AS dst
-        |  FROM lineitem),
-        |e AS MATERIALIZED (
-        |  SELECT DISTINCT src, dst FROM seq
-        |  WHERE dst IS NOT NULL AND dst <> src),
+      s"""$successionEdgesSql,
         |n AS MATERIALIZED (SELECT DISTINCT node FROM (
         |  SELECT src AS node FROM e UNION ALL SELECT dst FROM e) u),
         |f1 AS MATERIALIZED (SELECT node, min(label) AS label FROM (

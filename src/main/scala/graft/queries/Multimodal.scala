@@ -10,6 +10,46 @@ import QueryKit._
   * [[Query]] record per query. */
 private[graft] object Multimodal {
 
+  /** CTE `fr` (doc_id, text, off): one row per 32-char frame offset of
+    * each `src` text. */
+  private def framesSql(src: String): String =
+    s"""fr AS (
+       |  SELECT doc_id, text, i AS off
+       |  FROM $src, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i))""".stripMargin
+
+  /** [[framesSql]] then CTE `e` (doc_id, off, energy): each frame's
+    * energy, Σ code point² over its first 16 chars as an ordered fold. */
+  private def frameEnergySql(src: String): String =
+    s"""${framesSql(src)},
+       |e AS (
+       |  SELECT doc_id, off,
+       |   list_reduce(list_prepend(0::BIGINT, list_transform(
+       |     regexp_split_to_array(substr(text, off + 1, 16), ''),
+       |     c -> unicode(c)::BIGINT * unicode(c)::BIGINT)),
+       |    (a, b) -> a + b) AS energy
+       |  FROM fr)""".stripMargin
+
+  /** The landmark CTEs over `e`: energy peaks (`pk`, `peaks`), each
+    * peak's successor (`l0`) and `lm` (doc_id, lk), the gap|q|q key of
+    * every consecutive peak pair at most 8 frames apart. */
+  private val landmarksSql =
+    """pk AS (SELECT doc_id, off, energy,
+      |        lag(energy) OVER (PARTITION BY doc_id ORDER BY off) AS pe,
+      |        lead(energy) OVER (PARTITION BY doc_id ORDER BY off) AS ne
+      |       FROM e),
+      |peaks AS (SELECT doc_id, off, energy FROM pk
+      |          WHERE pe IS NOT NULL AND ne IS NOT NULL
+      |            AND energy > pe AND energy > ne),
+      |l0 AS (SELECT doc_id, off, energy,
+      |        lead(off) OVER (PARTITION BY doc_id ORDER BY off) AS nf,
+      |        lead(energy) OVER (PARTITION BY doc_id ORDER BY off) AS nen
+      |       FROM peaks),
+      |lm AS (SELECT doc_id,
+      |        CAST((nf - off) // 32 AS VARCHAR) || '|' ||
+      |        CAST(energy // 1024 AS VARCHAR) || '|' ||
+      |        CAST(nen // 1024 AS VARCHAR) AS lk
+      |       FROM l0 WHERE nf IS NOT NULL AND (nf - off) // 32 <= 8)""".stripMargin
+
   /** Planted "audio" clips for mm_audio_neardup: `blocks` frames of 32
     * bytes each — 16 loud chars (one uniform code per frame, walking
     * `'A' + (i·step) mod 26`, so the energy curve has dense local
@@ -132,32 +172,8 @@ private[graft] object Multimodal {
        |    (9000001, '$audioClipBase'),
        |    (9000002, '$audioClipShift'),
        |    (9000003, '$audioClipOther')) v(doc_id, text)),
-       |fr AS (
-       |  SELECT doc_id, text, i AS off
-       |  FROM base, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-       |e AS (
-       |  SELECT doc_id, off,
-       |   list_reduce(list_prepend(0::BIGINT, list_transform(
-       |     regexp_split_to_array(substr(text, off + 1, 16), ''),
-       |     c -> unicode(c)::BIGINT * unicode(c)::BIGINT)),
-       |    (a, b) -> a + b) AS energy
-       |  FROM fr),
-       |pk AS (SELECT doc_id, off, energy,
-       |        lag(energy) OVER (PARTITION BY doc_id ORDER BY off) AS pe,
-       |        lead(energy) OVER (PARTITION BY doc_id ORDER BY off) AS ne
-       |       FROM e),
-       |peaks AS (SELECT doc_id, off, energy FROM pk
-       |          WHERE pe IS NOT NULL AND ne IS NOT NULL
-       |            AND energy > pe AND energy > ne),
-       |l0 AS (SELECT doc_id, off, energy,
-       |        lead(off) OVER (PARTITION BY doc_id ORDER BY off) AS nf,
-       |        lead(energy) OVER (PARTITION BY doc_id ORDER BY off) AS nen
-       |       FROM peaks),
-       |lm AS (SELECT doc_id,
-       |        CAST((nf - off) // 32 AS VARCHAR) || '|' ||
-       |        CAST(energy // 1024 AS VARCHAR) || '|' ||
-       |        CAST(nen // 1024 AS VARCHAR) AS lk
-       |       FROM l0 WHERE nf IS NOT NULL AND (nf - off) // 32 <= 8),
+       |${frameEnergySql("base")},
+       |$landmarksSql,
        |h AS (SELECT doc_id, ${fnvSql("lk")} AS fu FROM lm),
        |bits AS (
        |  SELECT doc_id, b,
@@ -265,32 +281,8 @@ private[graft] object Multimodal {
         "doc_id", "payload", frameSize = 16, stride = 2),
       // frame-energy fold → peak windows → consecutive-peak landmarks →
       // FNV of the gap|q|q triple (signed BIGINT) → order-free XOR fold
-      s"""WITH fr AS (
-         |  SELECT doc_id, text, i AS off
-         |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-         |e AS (
-         |  SELECT doc_id, off,
-         |   list_reduce(list_prepend(0::BIGINT, list_transform(
-         |     regexp_split_to_array(substr(text, off + 1, 16), ''),
-         |     c -> unicode(c)::BIGINT * unicode(c)::BIGINT)),
-         |    (a, b) -> a + b) AS energy
-         |  FROM fr),
-         |pk AS (SELECT doc_id, off, energy,
-         |        lag(energy) OVER (PARTITION BY doc_id ORDER BY off) AS pe,
-         |        lead(energy) OVER (PARTITION BY doc_id ORDER BY off) AS ne
-         |       FROM e),
-         |peaks AS (SELECT doc_id, off, energy FROM pk
-         |          WHERE pe IS NOT NULL AND ne IS NOT NULL
-         |            AND energy > pe AND energy > ne),
-         |l0 AS (SELECT doc_id, off, energy,
-         |        lead(off) OVER (PARTITION BY doc_id ORDER BY off) AS nf,
-         |        lead(energy) OVER (PARTITION BY doc_id ORDER BY off) AS nen
-         |       FROM peaks),
-         |lm AS (SELECT doc_id,
-         |        CAST((nf - off) // 32 AS VARCHAR) || '|' ||
-         |        CAST(energy // 1024 AS VARCHAR) || '|' ||
-         |        CAST(nen // 1024 AS VARCHAR) AS lk
-         |       FROM l0 WHERE nf IS NOT NULL AND (nf - off) // 32 <= 8),
+      s"""WITH ${frameEnergySql("documents")},
+         |$landmarksSql,
          |h AS (SELECT doc_id,
          |       CAST(CASE WHEN fu >= 9223372036854775808::HUGEINT
          |         THEN fu - 18446744073709551616::HUGEINT ELSE fu END
@@ -326,16 +318,7 @@ private[graft] object Multimodal {
           round(col("n_voiced").cast("double") / col("n_frames"), 6))
     },
       // the frame-energy fold + run-start segmentation windows
-      """WITH fr AS (
-        |  SELECT doc_id, text, i AS off
-        |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-        |e AS (
-        |  SELECT doc_id, off,
-        |   list_reduce(list_prepend(0::BIGINT, list_transform(
-        |     regexp_split_to_array(substr(text, off + 1, 16), ''),
-        |     c -> unicode(c)::BIGINT * unicode(c)::BIGINT)),
-        |    (a, b) -> a + b) AS energy
-        |  FROM fr),
+      s"""WITH ${frameEnergySql("documents")},
         |v AS (SELECT doc_id, off, energy > 150000 AS voiced FROM e),
         |st AS (SELECT doc_id, voiced,
         |   CASE WHEN voiced AND NOT coalesce(
@@ -372,16 +355,7 @@ private[graft] object Multimodal {
     },
       // the frame-energy fold chain + lag delta + (jump DESC, frame ASC)
       // argmax — exact integers end to end
-      """WITH fr AS (
-        |  SELECT doc_id, text, i AS off
-        |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
-        |e AS (
-        |  SELECT doc_id, off,
-        |   list_reduce(list_prepend(0::BIGINT, list_transform(
-        |     regexp_split_to_array(substr(text, off + 1, 16), ''),
-        |     c -> unicode(c)::BIGINT * unicode(c)::BIGINT)),
-        |    (a, b) -> a + b) AS energy
-        |  FROM fr),
+      s"""WITH ${frameEnergySql("documents")},
         |dd AS (SELECT doc_id, CAST(off // 32 AS INT) AS frame_idx, energy,
         |        energy - lag(energy) OVER (PARTITION BY doc_id ORDER BY off)
         |          AS de
@@ -411,9 +385,7 @@ private[graft] object Multimodal {
         .select(col("doc_id"), col("frame_idx"), col("frame_sig")),
       // frame chunks replicated in HUGEINT: one row per 32nd-byte offset,
       // seeded base-31 rolling hash of the 16-byte chunk, signed at the end
-      """WITH fr AS (
-        |  SELECT doc_id, text, i AS off
-        |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
+      s"""WITH ${framesSql("documents")},
         |h AS (
         |  SELECT doc_id, off,
         |   list_reduce(list_prepend(1125899906842597::HUGEINT,
@@ -438,9 +410,7 @@ private[graft] object Multimodal {
         .select(col("doc_id"), col("frame_idx"), col("energy"), col("peak")),
       // frame energies replayed: Σ codepoint² per sampled 16-byte chunk
       // (ASCII text ⇒ bytes = codepoints), greatest-fold for the peak
-      """WITH fr AS (
-        |  SELECT doc_id, text, i AS off
-        |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
+      s"""WITH ${framesSql("documents")},
         |e AS (
         |  SELECT doc_id, off,
         |   list_reduce(list_prepend(0::BIGINT, list_transform(
@@ -472,9 +442,7 @@ private[graft] object Multimodal {
       // (L) / even (R) 1-based positions via generate_series indexing;
       // single-sample frames fold to 0 on the right channel (an empty
       // transform leaves only the prepended zero)
-      """WITH fr AS (
-        |  SELECT doc_id, text, i AS off
-        |  FROM documents, unnest(generate_series(0, strlen(text) - 1, 32)) AS t(i)),
+      s"""WITH ${framesSql("documents")},
         |cs AS (
         |  SELECT doc_id, off,
         |   list_transform(regexp_split_to_array(substr(text, off + 1, 16), ''),

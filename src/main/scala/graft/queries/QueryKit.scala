@@ -110,6 +110,20 @@ private[graft] object QueryKit {
         emb.filter(col("vec_id") === 0L), k = 20)
     }
 
+  /** The dense daily event-count grid (event_type, day, c): every day
+    * from a type's first to its last event, a missing day counted 0 (as
+    * a counting process must). The oracle twin is [[dailyGridSql]]. */
+  def dailyGrid(s: SparkSession, d: String): DataFrame = {
+    val daily = t(s, d, "events")
+      .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
+      .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
+    daily.groupBy("event_type")
+      .agg(min("day").as("d0"), max("day").as("d1"))
+      .select(col("event_type"), explode(sequence(col("d0"), col("d1"))).as("day"))
+      .join(daily, Seq("event_type", "day"), "left_outer")
+      .withColumn("c", coalesce(col("c"), lit(0L)))
+  }
+
   /** The embeddings table with `embedding` cast to double[]: a plain
     * read, neither shared nor checkpointed (that is [[embF64]]). */
   def embeddings(s: SparkSession, d: String): DataFrame =
@@ -420,32 +434,128 @@ private[graft] object QueryKit {
        |   / sum(n) OVER (), 6) AS ece
        |FROM g2""".stripMargin
 
+  /** CTE `ev`: the events of users with at most 85 events — the oracle
+    * twin of `SkewOps.capHotKeys(events, "user_id", 85)`, a null-safe
+    * anti-join against the over-cap keys, so an under-cap NULL-key
+    * cohort survives as it does in the engine's <=> anti-join. */
+  val cappedEventsSql =
+    """ev AS (
+      |  SELECT e.* FROM events e
+      |  ANTI JOIN (SELECT user_id FROM events GROUP BY user_id
+      |             HAVING count(*) > 85) hot
+      |    ON e.user_id IS NOT DISTINCT FROM hot.user_id)""".stripMargin
+
+  /** Per-(event_type, day) event counts and each type's day span, as a
+    * WITH prefix ending in CTE `spans` (event_type, d0, d1). */
+  val daySpansSql =
+    """WITH daily AS (
+      |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
+      |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
+      |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
+      |          FROM daily GROUP BY 1)""".stripMargin
+
+  /** The body of CTE `grid` over [[daySpansSql]]: every day of each
+    * span, its count coalesced to 0. */
+  private val gridBodySql =
+    """  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
+      |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
+      |        FROM spans) g
+      |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day""".stripMargin
+
+  /** [[daySpansSql]] extended by CTE `grid` (event_type, day, c) — the
+    * oracle twin of [[dailyGrid]]. */
+  val dailyGridSql =
+    s"""$daySpansSql,
+       |grid AS (
+       |$gridBodySql)""".stripMargin
+
+  /** [[dailyGridSql]] with `grid` MATERIALIZED, for the pairwise
+    * (O(days²) per type) self-joins of the grid. */
+  val dailyGridMaterializedSql =
+    s"""$daySpansSql,
+       |grid AS MATERIALIZED (
+       |$gridBodySql)""".stripMargin
+
+  /** The near-dup graph (the [[jaccardPairsSql]] pairs, both directions)
+    * and its transitive reachability, as a WITH RECURSIVE prefix ending
+    * in CTE `reach` (node, r): a node's component is its min `r`. */
+  lazy val nearDupReachSql: String =
+    s"""WITH RECURSIVE p AS (SELECT id_a, id_b FROM ($jaccardPairsSql)),
+       |edges AS (
+       |  SELECT id_a AS u, id_b AS v FROM p
+       |  UNION SELECT id_b, id_a FROM p),
+       |reach AS (
+       |  SELECT u AS node, u AS r FROM (SELECT DISTINCT u FROM edges) t
+       |  UNION
+       |  SELECT reach.node, e.v FROM reach JOIN edges e ON reach.r = e.u)""".stripMargin
+
+  /** (doc_id, component) over [[nearDupReachSql]] — the oracle of both
+    * dedup_components and graph_cc_incremental. */
+  lazy val nearDupComponentsSql: String =
+    s"""$nearDupReachSql
+       |SELECT node AS doc_id, min(r) AS component
+       |FROM reach GROUP BY node""".stripMargin
+
   val tfSub =
     s"""SELECT doc_id, term, count(*) AS tf FROM ($tokensSub)
        |WHERE term <> '' GROUP BY doc_id, term""".stripMargin
 
-  /** Exact shingle-multiset jaccard pairs ≥ 0.5 with the df cap —
-    * shared by dedup_jaccard and dedup_components. */
-  val jaccardPairsSql =
+  /** The lower-cased whitespace tokens of each document, empties
+    * dropped, as a WITH prefix ending in CTE `arrs` (doc_id, a). */
+  val arrsSql =
     """WITH arrs AS (
       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
       |    x -> x <> '') AS a
-      |  FROM documents),
-      |sh AS (
+      |  FROM documents)""".stripMargin
+
+  /** CTE `g` (doc_id, g): the distinct 8-word grams of each `arrs` doc
+    * of at least 8 tokens. */
+  val grams8Sql =
+    """g AS (
+      |  SELECT DISTINCT doc_id, array_to_string(a[i:i+7], ' ') AS g
+      |  FROM arrs, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
+      |  WHERE len(a) >= 8)""".stripMargin
+
+  /** CTEs over [[grams8Sql]]: `b`, the grams of every 97th doc (the
+    * benchmark set), and `j` (doc_id, n_grams, n_hits), each doc's
+    * distinct grams and how many the benchmark set holds. */
+  val benchGramHitsSql =
+    """b AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
+      |j AS (
+      |  SELECT g.doc_id, count(*) AS n_grams, count(b.g) AS n_hits
+      |  FROM g LEFT JOIN b USING (g)
+      |  GROUP BY g.doc_id)""".stripMargin
+
+  /** CTE `sh` (doc_id, sh): the distinct 3-word shingles of each `arrs`
+    * doc of at least 3 tokens. */
+  val shinglesSql =
+    """sh AS (
       |  SELECT DISTINCT doc_id, a[i] || ' ' || a[i+1] || ' ' || a[i+2] AS sh
       |  FROM arrs, unnest(generate_series(1, greatest(len(a)-2, 0))) AS t(i)
-      |  WHERE len(a) >= 3),
-      |kept AS (SELECT sh FROM sh GROUP BY sh HAVING count(*) <= 100),
+      |  WHERE len(a) >= 3)""".stripMargin
+
+  /** CTEs over `sh`: the shingles held by at most 100 docs (`kept`,
+    * `shk`), each doc's kept-shingle count `sizes` (doc_id, n) and the
+    * shared count of each doc pair `inter` (ida < idb, i). */
+  val shingleOverlapSql =
+    """kept AS (SELECT sh FROM sh GROUP BY sh HAVING count(*) <= 100),
       |shk AS (SELECT doc_id, sh.sh FROM sh JOIN kept USING (sh)),
       |sizes AS (SELECT doc_id, count(*) AS n FROM shk GROUP BY doc_id),
       |inter AS (
       |  SELECT a.doc_id AS ida, b.doc_id AS idb, count(*) AS i
       |  FROM shk a JOIN shk b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT ida AS id_a, idb AS id_b,
-      | round(i * 1.0 / (sa.n + sb.n - i), 4) AS jaccard
-      |FROM inter JOIN sizes sa ON ida = sa.doc_id JOIN sizes sb ON idb = sb.doc_id
-      |WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5""".stripMargin
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Exact shingle-multiset jaccard pairs ≥ 0.5 with the df cap —
+    * shared by dedup_jaccard and dedup_components. */
+  lazy val jaccardPairsSql =
+    s"""$arrsSql,
+       |$shinglesSql,
+       |$shingleOverlapSql
+       |SELECT ida AS id_a, idb AS id_b,
+       | round(i * 1.0 / (sa.n + sb.n - i), 4) AS jaccard
+       |FROM inter JOIN sizes sa ON ida = sa.doc_id JOIN sizes sb ON idb = sb.doc_id
+       |WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.5""".stripMargin
 
   /** (doc_id, pred_lang) — shared by text_lang_id and curate_docs. */
   val langIdSql =

@@ -26,6 +26,51 @@ private[graft] object Relational {
     s"""SELECT doc_id, term, count(*) AS tf FROM ($tokensUnicodeSub)
        |WHERE term <> '' GROUP BY doc_id, term""".stripMargin
 
+  /** Per-type event counts and value sums over a two-day `ts` window:
+    * the row a `ts` range predicate must prune parquet row groups for
+    * (PlanSpec pins the PushedFilters). */
+  private val timeRange: Query.Build = (s, d) =>
+    t(s, d, "events")
+      .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
+        col("ts") < lit("2024-01-07").cast("timestamp"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
+
+  private val timeRangeSql =
+    """SELECT event_type, count(*) AS n_events, round(sum(value),2) AS sum_value
+      |FROM events
+      |WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-07'
+      |GROUP BY event_type""".stripMargin
+
+  /** The event-type transition matrix of an events-shaped relation:
+    * consecutive event pairs per user in (ts, event_id) order, counted
+    * per (from_type, to_type) with the per-source share `p`. */
+  private def transitions(ev: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+    ev.select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
+      .withColumn("nxt", lead(col("event_type"), 1).over(w))
+      .filter(col("nxt").isNotNull)
+      .groupBy(col("event_type").as("from_type"), col("nxt").as("to_type"))
+      .agg(count(lit(1)).as("n"))
+      .withColumn("p", round(col("n").cast("double") /
+        sum(col("n")).over(Window.partitionBy("from_type")), 6))
+  }
+
+  /** The oracle twin of [[transitions]] over relation `src`: CTEs `p`
+    * and `c`, then (from_type, to_type, n, p). */
+  private def transitionsSql(src: String): String =
+    s"""p AS (
+       |  SELECT event_type AS from_type,
+       |   lead(event_type) OVER (PARTITION BY user_id
+       |     ORDER BY ts, event_id) AS to_type
+       |  FROM $src),
+       |c AS (SELECT from_type, to_type, count(*) AS n FROM p
+       |      WHERE to_type IS NOT NULL GROUP BY 1, 2)
+       |SELECT from_type, to_type, n,
+       | round(CAST(n AS DOUBLE) /
+       |   sum(n) OVER (PARTITION BY from_type), 6) AS p
+       |FROM c""".stripMargin
+
   val all: Seq[Query] = Seq(
     Query("q1_pricing_summary", (s, d) =>
       t(s, d, "lineitem")
@@ -203,30 +248,11 @@ private[graft] object Relational {
         .groupBy(col("source")).agg(count(lit(1)).as("n_docs")),
       "SELECT source, count(*) AS n_docs FROM documents WHERE lang='en' GROUP BY source"),
 
-    Query("p3_time_range", (s, d) =>
-      t(s, d, "events")
-        .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
-          col("ts") < lit("2024-01-07").cast("timestamp"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value")),
-      """SELECT event_type, count(*) AS n_events, round(sum(value),2) AS sum_value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-07'
-        |GROUP BY event_type""".stripMargin),
+    Query("p3_time_range", timeRange, timeRangeSql),
 
-    // same predicate over the µs-rewritten events table: the production
-    // layout where ts predicates prune parquet row groups (PlanSpec pins
-    // the PushedFilters claim; this row pins value-identity with p3)
-    Query("p3_time_range_us", (s, d) =>
-      Tables.eventsMicros(s, d)
-        .filter(col("ts") >= lit("2024-01-05").cast("timestamp") &&
-          col("ts") < lit("2024-01-07").cast("timestamp"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value")),
-      """SELECT event_type, count(*) AS n_events, round(sum(value),2) AS sum_value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-05' AND ts < TIMESTAMP '2024-01-07'
-        |GROUP BY event_type""".stripMargin),
+    // the same row under the name of the retired µs-rewrite variant,
+    // kept because perfbench times it as a light row
+    Query("p3_time_range_us", timeRange, timeRangeSql),
 
     Query("p4_projection", (s, d) =>
       t(s, d, "documents").filter(col("n_chars") > 200)
@@ -751,28 +777,10 @@ private[graft] object Relational {
       // per user in (ts, event_id) order, counted per (from, to) with
       // the per-source transition probability — one lag window + one
       // aggregation, the w-family's behavioral-model row
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      t(s, d, "events")
-        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-        .withColumn("nxt", lead(col("event_type"), 1).over(w))
-        .filter(col("nxt").isNotNull)
-        .groupBy(col("event_type").as("from_type"), col("nxt").as("to_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("p", round(col("n").cast("double") /
-          sum(col("n")).over(Window.partitionBy("from_type")), 6))
+      transitions(t(s, d, "events"))
     },
       // lead window in (ts, event_id) order, per-source share
-      """WITH p AS (
-        |  SELECT event_type AS from_type,
-        |   lead(event_type) OVER (PARTITION BY user_id
-        |     ORDER BY ts, event_id) AS to_type
-        |  FROM events),
-        |c AS (SELECT from_type, to_type, count(*) AS n FROM p
-        |      WHERE to_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        | round(CAST(n AS DOUBLE) /
-        |   sum(n) OVER (PARTITION BY from_type), 6) AS p
-        |FROM c""".stripMargin),
+      "WITH " + transitionsSql("events")),
 
     Query("w10_funnel", (s, d) => {
       // ordered conversion funnel view → click → purchase: a user
@@ -963,35 +971,13 @@ private[graft] object Relational {
       // w12's transition matrix behind the same cap: the per-user lag
       // window is the other sequential-per-key op the r11 probe flagged
       // (2.6×) — capped, the hot user's events never enter the window
-      val ev = SkewOps.capHotKeys(t(s, d, "events"), "user_id",
-        maxRows = 85L)
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      ev.select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-        .withColumn("nxt", lead(col("event_type"), 1).over(w))
-        .filter(col("nxt").isNotNull)
-        .groupBy(col("event_type").as("from_type"), col("nxt").as("to_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("p", round(col("n").cast("double") /
-          sum(col("n")).over(Window.partitionBy("from_type")), 6))
+      transitions(SkewOps.capHotKeys(t(s, d, "events"), "user_id",
+        maxRows = 85L))
     },
       // w12's lead-window chain over the same capped relation (the same
       // null-safe anti-join replay as s8_sampler_capped)
-      """WITH ev AS (
-        |  SELECT e.* FROM events e
-        |  ANTI JOIN (SELECT user_id FROM events GROUP BY user_id
-        |             HAVING count(*) > 85) hot
-        |    ON e.user_id IS NOT DISTINCT FROM hot.user_id),
-        |p AS (
-        |  SELECT event_type AS from_type,
-        |   lead(event_type) OVER (PARTITION BY user_id
-        |     ORDER BY ts, event_id) AS to_type
-        |  FROM ev),
-        |c AS (SELECT from_type, to_type, count(*) AS n FROM p
-        |      WHERE to_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        | round(CAST(n AS DOUBLE) /
-        |   sum(n) OVER (PARTITION BY from_type), 6) AS p
-        |FROM c""".stripMargin),
+      s"""WITH $cappedEventsSql,
+        |${transitionsSql("ev")}""".stripMargin),
 
     Query("a11_tf_ts_index", (s, _) =>
       graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath)

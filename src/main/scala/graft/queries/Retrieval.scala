@@ -18,12 +18,11 @@ private[graft] object Retrieval {
     s"list_reduce(list_prepend(0.0, list_transform(generate_series(1, $d), " +
       s"i -> ($a[i] - $b[i]) * ($a[i] - $b[i]))), (acc, x) -> acc + x)"
 
-  /** The PQ oracle chain (shared by ann_pq_topk and ann_ivfpq_topk):
-    * per-subspace Lloyd training, encoding, ADC tables and the
-    * ordered-fold distance sums, mirroring SimilarityOps.pqAdcRank.
-    * `ivfPruned` restricts the scored set to the IVF coarse cells the
-    * query probes (SimilarityOps.ivfpqTopK). */
-  private def pqAdcOracleSql(ivfPruned: Boolean, k: Int = 5): String = {
+  /** Two Lloyd rounds of the per-subspace PQ codebooks over a relation
+    * `sub` (vec_id, s, sub), as CTEs a0 → c1 → d1 → a1 → c2 → d2 → a2:
+    * `c2` (s, code, cent) holds the trained centroids and `a2` (vec_id,
+    * s, code) each subvector's code. Shared by the three PQ replays. */
+  private lazy val pqLloydSql: String = {
     def centFrom(assigned: String) =
       s"""SELECT s, code, list(cv ORDER BY dim) AS cent FROM (
          |   SELECT u.s AS s, u.code AS code, u.dim AS dim, avg(u.v) AS cv FROM (
@@ -38,6 +37,35 @@ private[graft] object Retrieval {
          |    ORDER BY ${l2sqSql("sub.sub", s"$cent.cent", 8)} ASC,
          |             $cent.code ASC) AS rn
          | FROM sub JOIN $cent ON sub.s = $cent.s""".stripMargin
+    s"""a0 AS (SELECT vec_id, s, vec_id % 16 AS code FROM sub),
+       |c1 AS (${centFrom("a0")}),
+       |d1 AS (${assignFrom("c1")}),
+       |a1 AS (SELECT vec_id, s, code FROM d1 WHERE rn = 1),
+       |c2 AS (${centFrom("a1")}),
+       |d2 AS (${assignFrom("c2")}),
+       |a2 AS (SELECT vec_id, s, code FROM d2 WHERE rn = 1)""".stripMargin
+  }
+
+  /** The ADC tail of a PQ replay: per-(query, vec) distance as the
+    * subspace-ordered fold of the `sc` (query_id, vec_id, s, d) lookups,
+    * then the top-`k` by (adc, vec_id). */
+  private def adcTopKSql(k: Int): String =
+    s"""ad AS (SELECT query_id, vec_id,
+       |        list_reduce(list_prepend(0.0, list(d ORDER BY s)),
+       |          (acc, x) -> acc + x) AS adc
+       |       FROM sc GROUP BY query_id, vec_id),
+       |r AS (SELECT query_id, vec_id AS nbr_id, adc,
+       |       CAST(row_number() OVER (PARTITION BY query_id
+       |         ORDER BY adc ASC, vec_id ASC) AS INT) AS rank FROM ad)
+       |SELECT query_id, nbr_id, round(adc, 4) AS adc, rank
+       |FROM r WHERE rank <= $k""".stripMargin
+
+  /** The PQ oracle chain (shared by ann_pq_topk and ann_ivfpq_topk):
+    * per-subspace Lloyd training, encoding, ADC tables and the
+    * ordered-fold distance sums, mirroring SimilarityOps.pqAdcRank.
+    * `ivfPruned` restricts the scored set to the IVF coarse cells the
+    * query probes (SimilarityOps.ivfpqTopK). */
+  private def pqAdcOracleSql(ivfPruned: Boolean, k: Int = 5): String = {
     val ivfCtes =
       s"""cents AS (
          |  SELECT vec_id AS cent_id, emb AS cent_emb FROM e
@@ -68,26 +96,12 @@ private[graft] object Retrieval {
        |${if (ivfPruned) ivfCtes else ""}
        |sub AS (SELECT vec_id, s, emb[(s*8+1):(s*8+8)] AS sub
        |        FROM e, unnest(generate_series(0, 7)) AS t(s)),
-       |a0 AS (SELECT vec_id, s, vec_id % 16 AS code FROM sub),
-       |c1 AS (${centFrom("a0")}),
-       |d1 AS (${assignFrom("c1")}),
-       |a1 AS (SELECT vec_id, s, code FROM d1 WHERE rn = 1),
-       |c2 AS (${centFrom("a1")}),
-       |d2 AS (${assignFrom("c2")}),
-       |a2 AS (SELECT vec_id, s, code FROM d2 WHERE rn = 1),
+       |$pqLloydSql,
        |qt AS (SELECT sub.vec_id AS query_id, sub.s, c2.code,
        |        ${l2sqSql("sub.sub", "c2.cent", 8)} AS d
        |       FROM sub JOIN c2 ON sub.s = c2.s WHERE sub.vec_id < 10),
        |$sc,
-       |ad AS (SELECT query_id, vec_id,
-       |        list_reduce(list_prepend(0.0, list(d ORDER BY s)),
-       |          (acc, x) -> acc + x) AS adc
-       |       FROM sc GROUP BY query_id, vec_id),
-       |r AS (SELECT query_id, vec_id AS nbr_id, adc,
-       |       CAST(row_number() OVER (PARTITION BY query_id
-       |         ORDER BY adc ASC, vec_id ASC) AS INT) AS rank FROM ad)
-       |SELECT query_id, nbr_id, round(adc, 4) AS adc, rank
-       |FROM r WHERE rank <= $k""".stripMargin
+       |${adcTopKSql(k)}""".stripMargin
   }
 
   /** Residual-IVFPQ replay (SimilarityOps.ivfpqResidualTopK): the same
@@ -95,21 +109,7 @@ private[graft] object Retrieval {
     * relation slices RESIDUALS (vector − assigned centroid), queries
     * form one residual per probed cell, and the ADC lookup keys on
     * (query, cell, subspace, code). */
-  private lazy val pqResidualOracleSql: String = {
-    def centFrom(assigned: String) =
-      s"""SELECT s, code, list(cv ORDER BY dim) AS cent FROM (
-         |   SELECT u.s AS s, u.code AS code, u.dim AS dim, avg(u.v) AS cv FROM (
-         |     SELECT sub.s, a.code, unnest(sub.sub) AS v,
-         |            generate_subscripts(sub.sub, 1) AS dim
-         |     FROM sub JOIN $assigned a USING (vec_id, s)) u
-         |   GROUP BY s, code, dim) g
-         | GROUP BY s, code""".stripMargin
-    def assignFrom(cent: String) =
-      s"""SELECT sub.vec_id, sub.s, $cent.code,
-         |  row_number() OVER (PARTITION BY sub.vec_id, sub.s
-         |    ORDER BY ${l2sqSql("sub.sub", s"$cent.cent", 8)} ASC,
-         |             $cent.code ASC) AS rn
-         | FROM sub JOIN $cent ON sub.s = $cent.s""".stripMargin
+  private lazy val pqResidualOracleSql: String =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
        |           FROM embeddings),
        |kd0 AS (SELECT vec_id % 16 AS cluster, unnest(emb) AS v,
@@ -141,13 +141,7 @@ private[graft] object Retrieval {
        |          FROM cellsfull),
        |sub AS (SELECT vec_id, s, emb[(s*8+1):(s*8+8)] AS sub
        |        FROM resid, unnest(generate_series(0, 7)) AS t(s)),
-       |a0 AS (SELECT vec_id, s, vec_id % 16 AS code FROM sub),
-       |c1 AS (${centFrom("a0")}),
-       |d1 AS (${assignFrom("c1")}),
-       |a1 AS (SELECT vec_id, s, code FROM d1 WHERE rn = 1),
-       |c2 AS (${centFrom("a1")}),
-       |d2 AS (${assignFrom("c2")}),
-       |a2 AS (SELECT vec_id, s, code FROM d2 WHERE rn = 1),
+       |$pqLloydSql,
        |probes AS (SELECT vec_id AS query_id, cent_id,
        |            list_transform(generate_series(1, 64),
        |              i -> emb[i] - cent_emb[i]) AS q_res
@@ -166,53 +160,31 @@ private[graft] object Retrieval {
        |       JOIN qt ON qt.query_id = cand.query_id
        |         AND qt.cent_id = cand.cent_id
        |         AND qt.s = a2.s AND qt.code = a2.code),
-       |ad AS (SELECT query_id, vec_id,
-       |        list_reduce(list_prepend(0.0, list(d ORDER BY s)),
-       |          (acc, x) -> acc + x) AS adc
-       |       FROM sc GROUP BY query_id, vec_id),
-       |r AS (SELECT query_id, vec_id AS nbr_id, adc,
-       |       CAST(row_number() OVER (PARTITION BY query_id
-       |         ORDER BY adc ASC, vec_id ASC) AS INT) AS rank FROM ad)
-       |SELECT query_id, nbr_id, round(adc, 4) AS adc, rank
-       |FROM r WHERE rank <= 5""".stripMargin
-  }
+       |${adcTopKSql(5)}""".stripMargin
 
   /** PQ reconstruction-MSE replay: the [[pqAdcOracleSql]] Lloyd chain
     * (sub → a0 → c1 → a1 → c2 → a2), then avg l2sq between each
     * subvector and its assigned final centroid. */
-  private lazy val pqDistortionOracleSql: String = {
-    def centFrom(assigned: String) =
-      s"""SELECT s, code, list(cv ORDER BY dim) AS cent FROM (
-         |   SELECT u.s AS s, u.code AS code, u.dim AS dim, avg(u.v) AS cv FROM (
-         |     SELECT sub.s, a.code, unnest(sub.sub) AS v,
-         |            generate_subscripts(sub.sub, 1) AS dim
-         |     FROM sub JOIN $assigned a USING (vec_id, s)) u
-         |   GROUP BY s, code, dim) g
-         | GROUP BY s, code""".stripMargin
-    def assignFrom(cent: String) =
-      s"""SELECT sub.vec_id, sub.s, $cent.code,
-         |  row_number() OVER (PARTITION BY sub.vec_id, sub.s
-         |    ORDER BY ${l2sqSql("sub.sub", s"$cent.cent", 8)} ASC,
-         |             $cent.code ASC) AS rn
-         | FROM sub JOIN $cent ON sub.s = $cent.s""".stripMargin
+  private lazy val pqDistortionOracleSql: String =
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
        |           FROM embeddings),
        |sub AS (SELECT vec_id, s, emb[(s*8+1):(s*8+8)] AS sub
        |        FROM e, unnest(generate_series(0, 7)) AS t(s)),
-       |a0 AS (SELECT vec_id, s, vec_id % 16 AS code FROM sub),
-       |c1 AS (${centFrom("a0")}),
-       |d1 AS (${assignFrom("c1")}),
-       |a1 AS (SELECT vec_id, s, code FROM d1 WHERE rn = 1),
-       |c2 AS (${centFrom("a1")}),
-       |d2 AS (${assignFrom("c2")}),
-       |a2 AS (SELECT vec_id, s, code FROM d2 WHERE rn = 1),
+       |$pqLloydSql,
        |dist AS (SELECT a2.s AS s, ${l2sqSql("sub.sub", "c2.cent", 8)} AS dd
        |         FROM sub JOIN a2 USING (vec_id, s)
        |         JOIN c2 ON c2.s = a2.s AND c2.code = a2.code)
        |SELECT s, CAST(count(*) AS BIGINT) AS n_vecs,
        | round(avg(dd), 6) AS mse
        |FROM dist GROUP BY s""".stripMargin
-  }
+
+  /** CTE `r`: the `scored` (query_id, nbr_id, sim) rows ranked per
+    * query by (sim DESC, nbr_id). */
+  private val rankScoredSql =
+    """r AS (
+      |  SELECT query_id, nbr_id, sim,
+      |   CAST(row_number() OVER (PARTITION BY query_id
+      |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)""".stripMargin
 
   /** Corpus-wide k-NN-graph replay (SimilarityOps.knnGraph): the
     * annIvfSql chain with every vector as a query, parameterized by the
@@ -242,12 +214,36 @@ private[graft] object Retrieval {
        |   ${cosSql("p.q_emb", "n.nbr_emb")} AS sim
        |  FROM cells n JOIN probes p USING (cent_id)
        |  WHERE n.nbr_id <> p.query_id),
-       |r AS (
-       |  SELECT query_id, nbr_id, sim,
-       |   CAST(row_number() OVER (PARTITION BY query_id
-       |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)
+       |$rankScoredSql
        |SELECT query_id AS vec_id, nbr_id, round(sim, 4) AS sim, rank
        |FROM r WHERE rank <= 5""".stripMargin
+
+  /** 1 − mean cosine of each vector to its neighbours in a k-NN
+    * `graph` (vec_id, nbr_id, sim, rank) — the kNN-distance outlier
+    * score — the mean folded in rank order over the round-4 sims. */
+  private def oodScores(graph: DataFrame): DataFrame =
+    graph
+      .select(col("vec_id"), col("rank"), round(col("sim"), 4).as("sim"))
+      .groupBy("vec_id")
+      .agg(count(lit(1)).as("n_nbrs"),
+        array_sort(collect_list(struct(col("rank"), col("sim"))))
+          .as("arr"))
+      .withColumn("s", aggregate(col("arr"), lit(0.0d),
+        (a, x) => a + x.getField("sim")))
+      .select(col("vec_id"), col("n_nbrs"),
+        round(col("s") / col("n_nbrs"), 6).as("avg_sim"),
+        round(lit(1.0) - col("s") / col("n_nbrs"), 6).as("ood"))
+
+  /** The oracle twin of [[oodScores]] over a k-NN graph replay. */
+  private def oodSql(graphSql: String): String =
+    s"""WITH knn AS MATERIALIZED (SELECT * FROM ($graphSql)),
+       |g AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS n_nbrs,
+       |       list_reduce(list_prepend(CAST(0 AS DOUBLE),
+       |         list(sim ORDER BY rank)), (a, x) -> a + x) AS s
+       |      FROM knn GROUP BY vec_id)
+       |SELECT vec_id, n_nbrs, round(s / n_nbrs, 6) AS avg_sim,
+       | round(1.0::DOUBLE - s / n_nbrs, 6) AS ood
+       |FROM g""".stripMargin
 
   private lazy val knnGraphSql: String = knnGraphSqlFor(
     s"""cents AS (
@@ -272,12 +268,10 @@ private[graft] object Retrieval {
     * identical SQL. */
   private lazy val bm25Sql: String = bm25SqlFor(Seq("scan", "join", "merge"))
 
-  /** [[bm25Sql]] parameterized by the query-term set — `search_maxscore`
-    * gates the MaxScore-pruned engine path against the SAME exact
-    * full-scoring chain on its skewed-df query (the pruning is lossless,
-    * so the oracle is the unpruned law verbatim — the
-    * dedup_jaccard_prefix convention). */
-  private def bm25SqlFor(terms: Seq[String]): String =
+  /** The BM25 term contributions of the query `terms`, as a WITH prefix
+    * ending in CTE `contrib` (doc_id, c): one row per (doc, query term)
+    * with k1 = 1.2, b = 0.75 and whitespace-token doc lengths. */
+  private def bm25ContribSql(terms: Seq[String]): String =
     s"""WITH tf AS (
        |  SELECT doc_id, term, tf FROM ($tfSub)
        |  WHERE term IN (${terms.map(t => s"'$t'").mkString(", ")})),
@@ -293,7 +287,29 @@ private[graft] object Retrieval {
        |     * tf.tf * 2.2
        |     / (tf.tf + 1.2 * (0.25 + 0.75 * dl.doc_len / g.avgdl)) AS c
        |  FROM tf JOIN dfs USING (term) JOIN dl ON tf.doc_id = dl.doc_id
-       |  CROSS JOIN g)
+       |  CROSS JOIN g)""".stripMargin
+
+  /** The two retrieval legs the fusion and agreement oracles compare,
+    * as a WITH prefix: CTE `tr` (doc_id, text_rank), the [[bm25Sql]]
+    * ranking, and CTE `sc` (doc_id, sim), each doc's cosine to vector
+    * 0 (over `vb`, `qv`). */
+  private lazy val retrievalLegsSql: String =
+    s"""WITH tr AS (SELECT doc_id, CAST(row_number() OVER (
+       |        ORDER BY score DESC, doc_id ASC) AS INT) AS text_rank
+       |       FROM ($bm25Sql) b),
+       |vb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
+       |       FROM embeddings),
+       |qv AS (SELECT e AS qe FROM vb WHERE vec_id = 0),
+       |sc AS (SELECT vb.vec_id AS doc_id, ${cosSql("qe", "vb.e")} AS sim
+       |       FROM vb CROSS JOIN qv WHERE vb.vec_id <> 0)""".stripMargin
+
+  /** [[bm25Sql]] parameterized by the query-term set — `search_maxscore`
+    * gates the MaxScore-pruned engine path against the SAME exact
+    * full-scoring chain on its skewed-df query (the pruning is lossless,
+    * so the oracle is the unpruned law verbatim — the
+    * dedup_jaccard_prefix convention). */
+  private def bm25SqlFor(terms: Seq[String]): String =
+    s"""${bm25ContribSql(terms)}
        |SELECT doc_id, round(sum(c), 4) AS score
        |FROM contrib GROUP BY doc_id
        |ORDER BY score DESC, doc_id ASC LIMIT 20""".stripMargin
@@ -355,10 +371,7 @@ private[graft] object Retrieval {
        |   ${cosSql("p.q_emb", "n.nbr_emb")} AS sim
        |  FROM cells n JOIN probes p USING (cent_id)
        |  WHERE n.nbr_id <> p.query_id),
-       |r AS (
-       |  SELECT query_id, nbr_id, sim,
-       |   CAST(row_number() OVER (PARTITION BY query_id
-       |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)
+       |$rankScoredSql
        |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank FROM r
        |WHERE rank <= 5""".stripMargin
 
@@ -380,10 +393,7 @@ private[graft] object Retrieval {
        |  WHERE c.vec_id <> q.query_id),
        |scored AS (
        |  SELECT query_id, nbr_id, ${cosSql("q_emb", "nbr_emb")} AS sim FROM cand),
-       |r AS (
-       |  SELECT query_id, nbr_id, sim,
-       |   CAST(row_number() OVER (PARTITION BY query_id
-       |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)
+       |$rankScoredSql
        |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank FROM r
        |WHERE rank <= 5""".stripMargin
 
@@ -531,6 +541,23 @@ private[graft] object Retrieval {
        |     AS bucket
        |  FROM dots GROUP BY vec_id)""".stripMargin
 
+  /** CTEs `qsig`, every vector's signature bucket and its 4 single-bit
+    * flips, and `cand` (query_id, q_emb, nbr_id, nbr_emb), the vectors
+    * that share a probed bucket — over an [[lshSigSub]]-shaped `e`/`sig`
+    * prologue, every vector a query. */
+  private val lshProbeSql =
+    """qsig AS (
+      |  SELECT e.vec_id AS query_id, e.emb AS q_emb,
+      |   CASE WHEN b = -1 THEN s.bucket
+      |        ELSE xor(s.bucket, 1::BIGINT << b) END AS bucket
+      |  FROM e JOIN sig s USING (vec_id),
+      |       unnest(generate_series(-1, 3)) AS t(b)),
+      |cand AS (
+      |  SELECT q.query_id, q.q_emb, ce.vec_id AS nbr_id, ce.emb AS nbr_emb
+      |  FROM qsig q JOIN sig c ON q.bucket = c.bucket
+      |       JOIN e ce ON ce.vec_id = c.vec_id
+      |  WHERE c.vec_id <> q.query_id)""".stripMargin
+
   /** [[lshSigSub]] with the plane count derived from the corpus the
     * way `SimilarityOps.knnGraphLshAuto` derives it — the smallest
     * p ≥ 4 with 128·2^p ≥ N (integer comparisons only, so both engines
@@ -583,14 +610,7 @@ private[graft] object Retrieval {
     },
       // truncated RBO_.9 at depth 20 between the same two legs the RRF
       // oracle replays; each common doc enters at g = max(rank_a, rank_b)
-      s"""WITH tr AS (SELECT doc_id, CAST(row_number() OVER (
-         |        ORDER BY score DESC, doc_id ASC) AS INT) AS text_rank
-         |       FROM ($bm25Sql) b),
-         |vb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |       FROM embeddings),
-         |qv AS (SELECT e AS qe FROM vb WHERE vec_id = 0),
-         |sc AS (SELECT vb.vec_id AS doc_id, ${cosSql("qe", "vb.e")} AS sim
-         |       FROM vb CROSS JOIN qv WHERE vb.vec_id <> 0),
+      s"""$retrievalLegsSql,
          |vr AS (SELECT doc_id, vrk AS vec_rank FROM (
          |        SELECT doc_id, CAST(row_number() OVER (
          |          ORDER BY sim DESC, doc_id ASC) AS INT) AS vrk FROM sc)
@@ -636,22 +656,7 @@ private[graft] object Retrieval {
       // score (round 4, doc_id tiebreak — the bm25Sql tie discipline, so
       // both engines resolve boundary ties identically), then
       // seed-excluded tf aggregation over those docs
-      s"""WITH tf AS (
-         |  SELECT doc_id, term, tf FROM ($tfSub)
-         |  WHERE term IN ('scan', 'join', 'merge')),
-         |dfs AS (SELECT term, count(*) AS term_df FROM tf GROUP BY term),
-         |dl AS (
-         |  SELECT doc_id, len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |    x -> x <> '')) AS doc_len
-         |  FROM documents),
-         |g AS (SELECT count(*) AS n_docs, avg(doc_len) AS avgdl FROM dl),
-         |contrib AS (
-         |  SELECT tf.doc_id,
-         |   ln(1.0 + (g.n_docs - dfs.term_df + 0.5) / (dfs.term_df + 0.5))
-         |     * tf.tf * 2.2
-         |     / (tf.tf + 1.2 * (0.25 + 0.75 * dl.doc_len / g.avgdl)) AS c
-         |  FROM tf JOIN dfs USING (term) JOIN dl ON tf.doc_id = dl.doc_id
-         |  CROSS JOIN g),
+      s"""${bm25ContribSql(Seq("scan", "join", "merge"))},
          |sc AS (SELECT doc_id, round(sum(c), 4) AS score
          |       FROM contrib GROUP BY doc_id),
          |top AS (SELECT doc_id FROM
@@ -823,14 +828,7 @@ private[graft] object Retrieval {
     },
       // binary relevance = dense-top-20 membership; ln(x)/ln(2.0) matches
       // Spark's log2 lowering; every float literal ::DOUBLE
-      s"""WITH tr AS (SELECT doc_id, CAST(row_number() OVER (
-         |        ORDER BY score DESC, doc_id ASC) AS INT) AS text_rank
-         |       FROM ($bm25Sql) b),
-         |vb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |       FROM embeddings),
-         |qv AS (SELECT e AS qe FROM vb WHERE vec_id = 0),
-         |sc AS (SELECT vb.vec_id AS doc_id, ${cosSql("qe", "vb.e")} AS sim
-         |       FROM vb CROSS JOIN qv WHERE vb.vec_id <> 0),
+      s"""$retrievalLegsSql,
          |vr AS (SELECT doc_id FROM (
          |        SELECT doc_id, row_number() OVER (
          |          ORDER BY sim DESC, doc_id ASC) AS vrk FROM sc)
@@ -987,29 +985,11 @@ private[graft] object Retrieval {
       // Means fold in RANK order over the round-4 sims both engines
       // already agree on (the embed_knn_graph surface), so the whole
       // statistic replays exactly.
-      val knn = SimilarityOps.knnGraph(embeddings(s, d),
-        k = 5)
-        .select(col("vec_id"), col("rank"), round(col("sim"), 4).as("sim"))
-      knn.groupBy("vec_id")
-        .agg(count(lit(1)).as("n_nbrs"),
-          array_sort(collect_list(struct(col("rank"), col("sim"))))
-            .as("arr"))
-        .withColumn("s", aggregate(col("arr"), lit(0.0d),
-          (a, x) => a + x.getField("sim")))
-        .select(col("vec_id"), col("n_nbrs"),
-          round(col("s") / col("n_nbrs"), 6).as("avg_sim"),
-          round(lit(1.0) - col("s") / col("n_nbrs"), 6).as("ood"))
+      oodScores(SimilarityOps.knnGraph(embeddings(s, d), k = 5))
     },
       // rank-ordered fold over the knn chain's round-4 sims; the two
       // divisions mirror the engine's (s / n) expressions
-      s"""WITH knn AS MATERIALIZED (SELECT * FROM ($knnGraphSql)),
-         |g AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS n_nbrs,
-         |       list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |         list(sim ORDER BY rank)), (a, x) -> a + x) AS s
-         |      FROM knn GROUP BY vec_id)
-         |SELECT vec_id, n_nbrs, round(s / n_nbrs, 6) AS avg_sim,
-         | round(1.0::DOUBLE - s / n_nbrs, 6) AS ood
-         |FROM g""".stripMargin),
+      oodSql(knnGraphSql)),
 
     Query("embed_knn_graph_lsh", (s, d) =>
       // the LINEAR-cost kNN-graph escape leg (r16 ×100 probes: the IVF
@@ -1029,23 +1009,10 @@ private[graft] object Retrieval {
       // bucket cosine, per-query rank — the ann_lsh_join chain on the
       // lshSigSubAuto prologue
       s"""WITH $lshSigSubAuto,
-         |qsig AS (
-         |  SELECT e.vec_id AS query_id, e.emb AS q_emb,
-         |   CASE WHEN b = -1 THEN s.bucket
-         |        ELSE xor(s.bucket, 1::BIGINT << b) END AS bucket
-         |  FROM e JOIN sig s USING (vec_id),
-         |       unnest(generate_series(-1, 3)) AS t(b)),
-         |cand AS (
-         |  SELECT q.query_id, q.q_emb, ce.vec_id AS nbr_id, ce.emb AS nbr_emb
-         |  FROM qsig q JOIN sig c ON q.bucket = c.bucket
-         |       JOIN e ce ON ce.vec_id = c.vec_id
-         |  WHERE c.vec_id <> q.query_id),
+         |$lshProbeSql,
          |scored AS (
          |  SELECT query_id, nbr_id, ${cosSql("q_emb", "nbr_emb")} AS sim FROM cand),
-         |r AS (
-         |  SELECT query_id, nbr_id, sim,
-         |   CAST(row_number() OVER (PARTITION BY query_id
-         |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)
+         |$rankScoredSql
          |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank FROM r
          |WHERE rank <= 5""".stripMargin),
 
@@ -1075,17 +1042,7 @@ private[graft] object Retrieval {
       // brute corpus-vs-corpus truth, both ranked on the unrounded sim
       // with the nbr_id tie-break
       s"""WITH $lshSigSubAuto,
-         |qsig AS (
-         |  SELECT e.vec_id AS query_id, e.emb AS q_emb,
-         |   CASE WHEN b = -1 THEN s.bucket
-         |        ELSE xor(s.bucket, 1::BIGINT << b) END AS bucket
-         |  FROM e JOIN sig s USING (vec_id),
-         |       unnest(generate_series(-1, 3)) AS t(b)),
-         |cand AS (
-         |  SELECT q.query_id, q.q_emb, ce.vec_id AS nbr_id, ce.emb AS nbr_emb
-         |  FROM qsig q JOIN sig c ON q.bucket = c.bucket
-         |       JOIN e ce ON ce.vec_id = c.vec_id
-         |  WHERE c.vec_id <> q.query_id),
+         |$lshProbeSql,
          |lscored AS (
          |  SELECT query_id, nbr_id, ${cosSql("q_emb", "nbr_emb")} AS sim FROM cand),
          |lsh AS (
@@ -1127,27 +1084,9 @@ private[graft] object Retrieval {
       // embed_ood on the ⌈√N⌉-cell graph — the OOD gate as it would
       // actually run at corpus scale (same rank-ordered fold over
       // round-4 sims both engines agree on)
-      val knn = SimilarityOps.knnGraphAuto(embeddings(s, d),
-        k = 5)
-        .select(col("vec_id"), col("rank"), round(col("sim"), 4).as("sim"))
-      knn.groupBy("vec_id")
-        .agg(count(lit(1)).as("n_nbrs"),
-          array_sort(collect_list(struct(col("rank"), col("sim"))))
-            .as("arr"))
-        .withColumn("s", aggregate(col("arr"), lit(0.0d),
-          (a, x) => a + x.getField("sim")))
-        .select(col("vec_id"), col("n_nbrs"),
-          round(col("s") / col("n_nbrs"), 6).as("avg_sim"),
-          round(lit(1.0) - col("s") / col("n_nbrs"), 6).as("ood"))
+      oodScores(SimilarityOps.knnGraphAuto(embeddings(s, d), k = 5))
     },
-      s"""WITH knn AS MATERIALIZED (SELECT * FROM ($knnGraphAutoSql)),
-         |g AS (SELECT vec_id, CAST(count(*) AS BIGINT) AS n_nbrs,
-         |       list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |         list(sim ORDER BY rank)), (a, x) -> a + x) AS s
-         |      FROM knn GROUP BY vec_id)
-         |SELECT vec_id, n_nbrs, round(s / n_nbrs, 6) AS avg_sim,
-         | round(1.0::DOUBLE - s / n_nbrs, 6) AS ood
-         |FROM g""".stripMargin),
+      oodSql(knnGraphAutoSql)),
 
     Query("embed_knn_symmetry", (s, d) => {
       // k-NN graph health: per-rank mutual-neighbor rate (is A's
@@ -1289,10 +1228,7 @@ private[graft] object Retrieval {
     },
       // query-term positional postings, pos div 16 buckets, argmax by
       // (hits DESC, bucket ASC)
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM documents),
+      s"""$arrsSql,
         |p AS (SELECT doc_id, unnest(a) AS term,
         |       generate_subscripts(a, 1) - 1 AS pos FROM arrs),
         |h AS (SELECT doc_id, pos // 16 AS bucket,
@@ -1886,23 +1822,10 @@ private[graft] object Retrieval {
       // the corpus-vs-corpus variant: identical LSH replication, every
       // vector a query (no vec_id filter), k=3
       s"""WITH $lshSigSub,
-         |qsig AS (
-         |  SELECT e.vec_id AS query_id, e.emb AS q_emb,
-         |   CASE WHEN b = -1 THEN s.bucket
-         |        ELSE xor(s.bucket, 1::BIGINT << b) END AS bucket
-         |  FROM e JOIN sig s USING (vec_id),
-         |       unnest(generate_series(-1, 3)) AS t(b)),
-         |cand AS (
-         |  SELECT q.query_id, q.q_emb, ce.vec_id AS nbr_id, ce.emb AS nbr_emb
-         |  FROM qsig q JOIN sig c ON q.bucket = c.bucket
-         |       JOIN e ce ON ce.vec_id = c.vec_id
-         |  WHERE c.vec_id <> q.query_id),
+         |$lshProbeSql,
          |scored AS (
          |  SELECT query_id, nbr_id, ${cosSql("q_emb", "nbr_emb")} AS sim FROM cand),
-         |r AS (
-         |  SELECT query_id, nbr_id, sim,
-         |   CAST(row_number() OVER (PARTITION BY query_id
-         |     ORDER BY sim DESC, nbr_id ASC) AS INT) AS rank FROM scored)
+         |$rankScoredSql
          |SELECT query_id, nbr_id, round(sim, 4) AS sim, rank FROM r
          |WHERE rank <= 3""".stripMargin),
 
@@ -2047,14 +1970,7 @@ private[graft] object Retrieval {
       // both legs are this suite's own gated chains (bm25Sql verbatim;
       // the brute-cosine leg restricted to query 0, k=20), fused by the
       // exact-integer-rank RRF formula
-      s"""WITH tr AS (SELECT doc_id, CAST(row_number() OVER (
-         |        ORDER BY score DESC, doc_id ASC) AS INT) AS text_rank
-         |       FROM ($bm25Sql) b),
-         |vb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-         |       FROM embeddings),
-         |qv AS (SELECT e AS qe FROM vb WHERE vec_id = 0),
-         |sc AS (SELECT vb.vec_id AS doc_id, ${cosSql("qe", "vb.e")} AS sim
-         |       FROM vb CROSS JOIN qv WHERE vb.vec_id <> 0),
+      s"""$retrievalLegsSql,
          |vr AS (SELECT doc_id, text_rank_v AS vec_rank FROM (
          |        SELECT doc_id, CAST(row_number() OVER (
          |          ORDER BY sim DESC, doc_id ASC) AS INT) AS text_rank_v

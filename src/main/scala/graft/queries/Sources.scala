@@ -11,6 +11,34 @@ import QueryKit._
   * [[Query]] record per query. */
 private[graft] object Sources {
 
+  /** The S8 carry sampler replayed sequentially per user over an
+    * events-shaped relation `src`: CTEs `r` (row order per user) and
+    * the recursive `s` (buffer length, emits), then (user_id, n_kept),
+    * n_kept = 1 (the final buffer flush) + #emit transitions. */
+  private def carryReplaySql(src: String): String =
+    s"""r AS (
+       |  SELECT user_id, value,
+       |   row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
+       |  FROM $src),
+       |s AS (
+       |  SELECT user_id, 1 AS rn, abs(value) AS buf_len, 0 AS emits
+       |  FROM r WHERE rn = 1
+       |  UNION ALL
+       |  SELECT s.user_id, s.rn + 1,
+       |   CASE
+       |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
+       |       / greatest(abs(s.buf_len), 1.0) < 0.01 THEN abs(r.value)
+       |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
+       |       / greatest(abs(s.buf_len), 1.0) > 0.1 THEN abs(r.value)
+       |     ELSE s.buf_len END,
+       |   s.emits + CASE
+       |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
+       |       / greatest(abs(s.buf_len), 1.0) > 0.1 THEN 1
+       |     ELSE 0 END
+       |  FROM s JOIN r ON r.user_id = s.user_id AND r.rn = s.rn + 1)
+       |SELECT user_id, CAST(max_by(emits, rn) + 1 AS BIGINT) AS n_kept
+       |FROM s GROUP BY user_id""".stripMargin
+
   val all: Seq[Query] = Seq(
     Query("f7_day_format", (s, d) =>
       t(s, d, "events")
@@ -179,28 +207,7 @@ private[graft] object Sources {
         .groupBy(col("user_id")).agg(count(lit(1)).as("n_kept")),
       // the exact carry semantics, replayed sequentially per user by a
       // recursive CTE: n_kept = 1 (final buffer flush) + #emit transitions
-      """WITH RECURSIVE r AS (
-        |  SELECT user_id, value,
-        |   row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, 1 AS rn, abs(value) AS buf_len, 0 AS emits
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.user_id, s.rn + 1,
-        |   CASE
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) < 0.01 THEN abs(r.value)
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) > 0.1 THEN abs(r.value)
-        |     ELSE s.buf_len END,
-        |   s.emits + CASE
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) > 0.1 THEN 1
-        |     ELSE 0 END
-        |  FROM s JOIN r ON r.user_id = s.user_id AND r.rn = s.rn + 1)
-        |SELECT user_id, CAST(max_by(emits, rn) + 1 AS BIGINT) AS n_kept
-        |FROM s GROUP BY user_id""".stripMargin),
+      "WITH RECURSIVE " + carryReplaySql("events")),
 
     Query("s3_xml_scan", (s, _) =>
       graft.sources.WikiXml.read(s, graft.sources.WikiFixtures.standardXmlPath,
@@ -430,33 +437,8 @@ private[graft] object Sources {
       // mirroring capHotKeys' <=> anti-join, so an under-cap NULL-key
       // cohort survives on BOTH sides (the previous inner JOIN USING
       // dropped null keys unconditionally)
-      """WITH RECURSIVE ev AS (
-        |  SELECT e.* FROM events e
-        |  ANTI JOIN (SELECT user_id FROM events GROUP BY user_id
-        |             HAVING count(*) > 85) hot
-        |    ON e.user_id IS NOT DISTINCT FROM hot.user_id),
-        |r AS (
-        |  SELECT user_id, value,
-        |   row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM ev),
-        |s AS (
-        |  SELECT user_id, 1 AS rn, abs(value) AS buf_len, 0 AS emits
-        |  FROM r WHERE rn = 1
-        |  UNION ALL
-        |  SELECT s.user_id, s.rn + 1,
-        |   CASE
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) < 0.01 THEN abs(r.value)
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) > 0.1 THEN abs(r.value)
-        |     ELSE s.buf_len END,
-        |   s.emits + CASE
-        |     WHEN abs(abs(r.value) - greatest(abs(s.buf_len), 1.0))
-        |       / greatest(abs(s.buf_len), 1.0) > 0.1 THEN 1
-        |     ELSE 0 END
-        |  FROM s JOIN r ON r.user_id = s.user_id AND r.rn = s.rn + 1)
-        |SELECT user_id, CAST(max_by(emits, rn) + 1 AS BIGINT) AS n_kept
-        |FROM s GROUP BY user_id""".stripMargin),
+      s"""WITH RECURSIVE $cappedEventsSql,
+        |${carryReplaySql("ev")}""".stripMargin),
 
     Query("fnv64_native", (s, _) => {
       import s.implicits._

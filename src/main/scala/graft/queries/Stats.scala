@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
@@ -9,6 +10,59 @@ import QueryKit._
 /** Statistics and sketches (stats*, sketch*): one [[Query]] record per
   * query. */
 private[graft] object Stats {
+
+  /** One-row exact co-moments of `n_chars` per doc_id-parity arm — arm
+    * 1 even, arm 2 odd: count n, Σx as s and Σx² as q (DECIMAL(38,0),
+    * so no square can overflow). */
+  private def parityMoments(s: SparkSession, d: String): DataFrame = {
+    val docs = t(s, d, "documents")
+      .select((col("doc_id") % 2 === 0).as("arma"), col("n_chars"))
+    docs.agg(
+        sum(when(col("arma"), 1L).otherwise(0L)).as("n1"),
+        sum(when(col("arma"), col("n_chars")).otherwise(0L)).as("s1"),
+        sum(when(col("arma"), (col("n_chars") * col("n_chars"))
+            .cast("decimal(38,0)"))
+          .otherwise(lit(0L).cast("decimal(38,0)"))).as("q1"),
+        sum(when(!col("arma"), 1L).otherwise(0L)).as("n2"),
+        sum(when(!col("arma"), col("n_chars")).otherwise(0L)).as("s2"),
+        sum(when(!col("arma"), (col("n_chars") * col("n_chars"))
+            .cast("decimal(38,0)"))
+          .otherwise(lit(0L).cast("decimal(38,0)"))).as("q2"))
+  }
+
+  /** `arms` with the unbiased sample variances v1, v2 of both arms off
+    * their exact (n, Σx as s, Σx² as q) co-moments. */
+  private def withArmVariances(arms: DataFrame): DataFrame =
+    arms
+      .withColumn("v1", (col("n1").cast("double") * col("q1") -
+          col("s1").cast("double") * col("s1")) /
+        (col("n1").cast("double") * (col("n1") - 1)))
+      .withColumn("v2", (col("n2").cast("double") * col("q2") -
+          col("s2").cast("double") * col("s2")) /
+        (col("n2").cast("double") * (col("n2") - 1)))
+
+  /** The documents ranked within their language: `r`, the row number
+    * in (n_chars, doc_id) order, and `n`, the language's doc count —
+    * the exact rank-rule quantile convention. */
+  private def langRanked(s: SparkSession, d: String): DataFrame = {
+    val wRank = Window.partitionBy(col("lang"))
+      .orderBy(col("n_chars"), col("doc_id"))
+    t(s, d, "documents")
+      .select(col("lang"), col("n_chars"), col("doc_id"))
+      .withColumn("r", row_number().over(wRank))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("lang"))))
+  }
+
+  /** CTE `b` (bucket, rest): each non-null user's 32-bit FNV hash split
+    * into its 64-register bucket and the remaining bits, as a WITH
+    * prefix — the HLL register input. */
+  private val hllBucketsSql =
+    s"""WITH b AS (
+       |  SELECT CAST(fu % 64 AS BIGINT) AS bucket,
+       |   CAST(fu // 64 AS BIGINT) AS rest
+       |  FROM (SELECT ${fnvSql("CAST(user_id AS VARCHAR) || '#hll'")}
+       |          % 4294967296::HUGEINT AS fu
+       |        FROM events WHERE user_id IS NOT NULL))""".stripMargin
 
   /** Rank-exact two-sample KS per event type (even vs odd event_ids)
     * — shared by stats_drift (the monitor) and stats_fdr (the
@@ -343,12 +397,7 @@ private[graft] object Stats {
         .filter(col("n1") > 1 && col("n2") > 1)
         .withColumn("m1", col("s1").cast("double") / col("n1"))
         .withColumn("m2", col("s2").cast("double") / col("n2"))
-        .withColumn("v1", (col("n1").cast("double") * col("q1") -
-            col("s1").cast("double") * col("s1")) /
-          (col("n1").cast("double") * (col("n1") - 1)))
-        .withColumn("v2", (col("n2").cast("double") * col("q2") -
-            col("s2").cast("double") * col("s2")) /
-          (col("n2").cast("double") * (col("n2") - 1)))
+        .transform(withArmVariances)
         .select(col("source"), col("n1").as("n"),
           round(col("m1"), 6).as("mean_chars"),
           round((col("m1") - col("m2")) /
@@ -463,16 +512,7 @@ private[graft] object Stats {
       // standard convention); R, n1, n2 are exact integers off two lag
       // windows; μ/σ are rationals of those integers and z uses only
       // IEEE-exact division and sqrt.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"),
-          explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
+      val grid = dailyGrid(s, d)
       val w = Window.partitionBy("event_type").orderBy("day")
       val signs = grid
         .withColumn("prev", lag(col("c"), 1).over(w))
@@ -500,16 +540,7 @@ private[graft] object Stats {
     },
       // R/n1/n2 exact integers off two lag windows over the compressed
       // sign sequence; z uses IEEE-exact division/sqrt only
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
+      s"""$dailyGridSql,
         |s1 AS (SELECT event_type, day, c,
         |   lag(c, 1) OVER (PARTITION BY event_type ORDER BY day) AS prev
         |  FROM grid),
@@ -603,16 +634,7 @@ private[graft] object Stats {
       // O(days²)-per-type pair join (days ≈ 31 — the grid tier, never
       // the corpus); z's one division and sqrt are IEEE-exact both
       // engines, so the statistic replays bit-identically.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"),
-          explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
+      val grid = dailyGrid(s, d)
         .localCheckpoint() // three consumers: pairs ×2 sides + ties
       val a = grid.select(col("event_type"), col("day").as("di"),
         col("c").as("ci"))
@@ -646,16 +668,7 @@ private[graft] object Stats {
     },
       // integer S and tie-corrected variance off the dense-grid pair
       // join; the one division and sqrt are IEEE-exact
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS MATERIALIZED (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
+      s"""$dailyGridMaterializedSql,
         |sp AS (SELECT a.event_type,
         |   CAST(sum(CASE WHEN b.c > a.c THEN 1
         |                 WHEN b.c < a.c THEN -1 ELSE 0 END) AS BIGINT) AS s
@@ -927,27 +940,10 @@ private[graft] object Stats {
       // clear 1.645 (normal approx on these n's, stated). Everything
       // derives from one pass of exact integer (n, Σx, Σx²) co-moments
       // per arm — the stats_welch machinery with a two-sided gate.
-      val docs = t(s, d, "documents")
-        .select((col("doc_id") % 2 === 0).as("arma"), col("n_chars"))
-      docs.agg(
-          sum(when(col("arma"), 1L).otherwise(0L)).as("n1"),
-          sum(when(col("arma"), col("n_chars")).otherwise(0L)).as("s1"),
-          sum(when(col("arma"), (col("n_chars") * col("n_chars"))
-              .cast("decimal(38,0)"))
-            .otherwise(lit(0L).cast("decimal(38,0)"))).as("q1"),
-          sum(when(!col("arma"), 1L).otherwise(0L)).as("n2"),
-          sum(when(!col("arma"), col("n_chars")).otherwise(0L)).as("s2"),
-          sum(when(!col("arma"), (col("n_chars") * col("n_chars"))
-              .cast("decimal(38,0)"))
-            .otherwise(lit(0L).cast("decimal(38,0)"))).as("q2"))
+      parityMoments(s, d)
         .withColumn("m1", col("s1").cast("double") / col("n1"))
         .withColumn("m2", col("s2").cast("double") / col("n2"))
-        .withColumn("v1", (col("n1").cast("double") * col("q1") -
-            col("s1").cast("double") * col("s1")) /
-          (col("n1").cast("double") * (col("n1") - 1)))
-        .withColumn("v2", (col("n2").cast("double") * col("q2") -
-            col("s2").cast("double") * col("s2")) /
-          (col("n2").cast("double") * (col("n2") - 1)))
+        .transform(withArmVariances)
         .withColumn("se", sqrt(col("v1") / col("n1") + col("v2") / col("n2")))
         .withColumn("dm", lit(0.05) * (col("s1") + col("s2")).cast("double") /
           (col("n1") + col("n2")).cast("double"))
@@ -998,25 +994,8 @@ private[graft] object Stats {
       // machinery), MDE = (z_{0.975} + z_{0.8})·se with the z's as
       // exact shared literals (normal approximation, stated); relative
       // MDE divides by the pooled mean. One corpus scan, one-row output.
-      val docs = t(s, d, "documents")
-        .select((col("doc_id") % 2 === 0).as("arma"), col("n_chars"))
-      docs.agg(
-          sum(when(col("arma"), 1L).otherwise(0L)).as("n1"),
-          sum(when(col("arma"), col("n_chars")).otherwise(0L)).as("s1"),
-          sum(when(col("arma"), (col("n_chars") * col("n_chars"))
-              .cast("decimal(38,0)"))
-            .otherwise(lit(0L).cast("decimal(38,0)"))).as("q1"),
-          sum(when(!col("arma"), 1L).otherwise(0L)).as("n2"),
-          sum(when(!col("arma"), col("n_chars")).otherwise(0L)).as("s2"),
-          sum(when(!col("arma"), (col("n_chars") * col("n_chars"))
-              .cast("decimal(38,0)"))
-            .otherwise(lit(0L).cast("decimal(38,0)"))).as("q2"))
-        .withColumn("v1", (col("n1").cast("double") * col("q1") -
-            col("s1").cast("double") * col("s1")) /
-          (col("n1").cast("double") * (col("n1") - 1)))
-        .withColumn("v2", (col("n2").cast("double") * col("q2") -
-            col("s2").cast("double") * col("s2")) /
-          (col("n2").cast("double") * (col("n2") - 1)))
+      parityMoments(s, d)
+        .transform(withArmVariances)
         .withColumn("se", sqrt(col("v1") / col("n1") + col("v2") / col("n2")))
         .withColumn("mde", (lit(1.96) + lit(0.8416)) * col("se"))
         .select(col("n1"), col("n2"),
@@ -1928,13 +1907,7 @@ private[graft] object Stats {
       // approx sketch never hash-matches. (For a pathological single
       // giant group the same shape holds — the sort is within-group
       // range-partitioned, not single-task.)
-      val wRank = Window.partitionBy(col("lang"))
-        .orderBy(col("n_chars"), col("doc_id"))
-      val wAll = Window.partitionBy(col("lang"))
-      t(s, d, "documents")
-        .select(col("lang"), col("n_chars"), col("doc_id"))
-        .withColumn("r", row_number().over(wRank))
-        .withColumn("n", count(lit(1)).over(wAll))
+      langRanked(s, d)
         .groupBy(col("lang"))
         .agg(max(col("n")).as("n_docs"),
           max(when(col("r") === floor((col("n") - 1) * 0.5) + 1,
@@ -1965,13 +1938,8 @@ private[graft] object Stats {
       // drag. Rank, group size, both bounds and the final aggregation
       // all share the lang partitioning: ONE exchange end-to-end, and
       // every output is an exact integer (no float boundary risk)
-      val wRank = Window.partitionBy(col("lang"))
-        .orderBy(col("n_chars"), col("doc_id"))
       val wAll = Window.partitionBy(col("lang"))
-      t(s, d, "documents")
-        .select(col("lang"), col("n_chars"), col("doc_id"))
-        .withColumn("r", row_number().over(wRank))
-        .withColumn("n", count(lit(1)).over(wAll))
+      langRanked(s, d)
         .withColumn("lo", max(when(col("r") ===
           floor((col("n") - 1) * 0.05) + 1, col("n_chars"))).over(wAll))
         .withColumn("hi", max(when(col("r") ===
@@ -2470,12 +2438,7 @@ private[graft] object Stats {
       // division chain / ln — every float op spelled identically on both
       // engines (::DOUBLE everywhere: DuckDB parses bare float literals as
       // DECIMAL, whose arithmetic diverges from Spark's doubles)
-      s"""WITH b AS (
-         |  SELECT CAST(fu % 64 AS BIGINT) AS bucket,
-         |   CAST(fu // 64 AS BIGINT) AS rest
-         |  FROM (SELECT ${fnvSql("CAST(user_id AS VARCHAR) || '#hll'")}
-         |          % 4294967296::HUGEINT AS fu
-         |        FROM events WHERE user_id IS NOT NULL)),
+      s"""$hllBucketsSql,
          |r AS (
          |  SELECT bucket,
          |   max(CASE WHEN rest = 0 THEN 27
@@ -2515,12 +2478,7 @@ private[graft] object Stats {
     },
       // the oracle computes the registers GLOBALLY; Spark computes them per
       // shard and max-merges — a hash match proves the merge law
-      s"""WITH b AS (
-         |  SELECT CAST(fu % 64 AS BIGINT) AS bucket,
-         |   CAST(fu // 64 AS BIGINT) AS rest
-         |  FROM (SELECT ${fnvSql("CAST(user_id AS VARCHAR) || '#hll'")}
-         |          % 4294967296::HUGEINT AS fu
-         |        FROM events WHERE user_id IS NOT NULL))
+      s"""$hllBucketsSql
          |SELECT bucket,
          | max(CASE WHEN rest = 0 THEN 27
          |     ELSE 27 - CAST(length(bin(rest)) AS INT) END) AS rho

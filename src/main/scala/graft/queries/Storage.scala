@@ -11,6 +11,49 @@ import QueryKit._
   * layout*, shuffle*): one [[Query]] record per query. */
 private[graft] object Storage {
 
+  /** Every 10th doc of `base` (doc_id, lang, n_chars) re-scored: lang
+    * 'xx' and n_chars bumped by 10⁶ — the update of the upsert rows and
+    * version 2 of [[versionHistory]]. */
+  private def rescored(base: DataFrame): DataFrame =
+    base.filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"), lit("xx").as("lang"),
+        (col("n_chars") + 1000000L).as("n_chars"))
+
+  /** `base`'s next release: [[rescored]] docs override their rows and
+    * one doc is appended after the max id (MergeOps.upsert). */
+  private def upserted(base: DataFrame): DataFrame = {
+    val inserted = base.agg(max(col("doc_id")).as("doc_id"))
+      .select((col("doc_id") + 1L).as("doc_id"),
+        lit("new").as("lang"), lit(1L).as("n_chars"))
+    MergeOps.upsert(base, rescored(base).unionByName(inserted), "doc_id")
+  }
+
+  /** The append-only version history of `base` (doc_id, lang, n_chars,
+    * version, deleted): v1 the corpus, v2 the [[rescored]] docs, v3
+    * every 97th doc tombstoned. */
+  private def versionHistory(base: DataFrame): DataFrame = {
+    val v1 = base.withColumn("version", lit(1L))
+      .withColumn("deleted", lit(false))
+    val v2 = rescored(base)
+      .withColumn("version", lit(2L)).withColumn("deleted", lit(false))
+    val v3 = base.filter(col("doc_id") % 97 === 0)
+      .withColumn("version", lit(3L)).withColumn("deleted", lit(true))
+    v1.unionByName(v2).unionByName(v3)
+  }
+
+  /** The oracle twin of [[versionHistory]] over the documents, as CTE
+    * `h`. */
+  private val versionHistorySql =
+    """h AS (
+      |  SELECT doc_id, lang, n_chars, 1 AS version, false AS deleted
+      |  FROM documents
+      |  UNION ALL
+      |  SELECT doc_id, 'xx', n_chars + 1000000, 2, false
+      |  FROM documents WHERE doc_id % 10 = 0
+      |  UNION ALL
+      |  SELECT doc_id, lang, n_chars, 3, true
+      |  FROM documents WHERE doc_id % 97 = 0)""".stripMargin
+
   val all: Seq[Query] = Seq(
     Query("k22_dynamic_overwrite", (s, d) => {
       // dynamic partition overwrite — the Hive/Delta replaceWhere ingest
@@ -774,16 +817,8 @@ private[graft] object Storage {
       // re-scored (lang→'xx', n_chars bumped), one new doc appended;
       // updates override, unmatched base rows pass through, and the
       // merged corpus round-trips through the parquet sink
-      val base = t(s, d, "documents")
-        .select(col("doc_id"), col("lang"), col("n_chars"))
-      val rescored = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("xx").as("lang"),
-          (col("n_chars") + 1000000L).as("n_chars"))
-      val inserted = base.agg(max(col("doc_id")).as("doc_id"))
-        .select((col("doc_id") + 1L).as("doc_id"),
-          lit("new").as("lang"), lit(1L).as("n_chars"))
-      val merged = MergeOps.upsert(base,
-        rescored.unionByName(inserted), "doc_id")
+      val merged = upserted(t(s, d, "documents")
+        .select(col("doc_id"), col("lang"), col("n_chars")))
       val dir = Scratch.dir("k9").toString
       graft.sources.GraftSinks.writeParquet(merged, dir, compression = "zstd")
       s.read.parquet(dir)
@@ -862,15 +897,7 @@ private[graft] object Storage {
       // the deletions, and any past state stays reproducible
       val base = t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val v1 = base.withColumn("version", lit(1L))
-        .withColumn("deleted", lit(false))
-      val v2 = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("xx").as("lang"),
-          (col("n_chars") + 1000000L).as("n_chars"))
-        .withColumn("version", lit(2L)).withColumn("deleted", lit(false))
-      val v3 = base.filter(col("doc_id") % 97 === 0)
-        .withColumn("version", lit(3L)).withColumn("deleted", lit(true))
-      val hist = v1.unionByName(v2).unionByName(v3).localCheckpoint()
+      val hist = versionHistory(base).localCheckpoint()
       Seq(2L, 3L).map(v =>
           MergeOps.snapshotAsOf(hist, "doc_id", "version", v)
             .withColumn("as_of", lit(v)))
@@ -879,15 +906,7 @@ private[graft] object Storage {
     },
       // latest-version-wins per (as_of, key), tombstones filtered after —
       // the snapshotAsOf read replayed with a rank window
-      """WITH h AS (
-        |  SELECT doc_id, lang, n_chars, 1 AS version, false AS deleted
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, 'xx', n_chars + 1000000, 2, false
-        |  FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id, lang, n_chars, 3, true
-        |  FROM documents WHERE doc_id % 97 = 0),
+      s"""WITH $versionHistorySql,
         |snap AS (
         |  SELECT a.as_of, h.doc_id, h.lang, h.n_chars, h.deleted,
         |   row_number() OVER (PARTITION BY a.as_of, h.doc_id
@@ -904,30 +923,14 @@ private[graft] object Storage {
       // stay exactly reproducible (Round9OpsSpec pins the equivalence)
       val base = t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val v1 = base.withColumn("version", lit(1L))
-        .withColumn("deleted", lit(false))
-      val v2 = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("xx").as("lang"),
-          (col("n_chars") + 1000000L).as("n_chars"))
-        .withColumn("version", lit(2L)).withColumn("deleted", lit(false))
-      val v3 = base.filter(col("doc_id") % 97 === 0)
-        .withColumn("version", lit(3L)).withColumn("deleted", lit(true))
-      val hist = v1.unionByName(v2).unionByName(v3).localCheckpoint()
+      val hist = versionHistory(base).localCheckpoint()
       MergeOps.expireVersions(hist, "doc_id", "version", minVersion = 2L)
         .select(col("version"), col("doc_id"), col("lang"),
           col("n_chars"), col("deleted"))
     },
       // compacted base = latest-wins at the horizon (tombstoned keys
       // vanish) stamped version 2, plus the untouched > 2 tail
-      """WITH h AS (
-        |  SELECT doc_id, lang, n_chars, 1 AS version, false AS deleted
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, 'xx', n_chars + 1000000, 2, false
-        |  FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id, lang, n_chars, 3, true
-        |  FROM documents WHERE doc_id % 97 = 0),
+      s"""WITH $versionHistorySql,
         |cb AS (
         |  SELECT doc_id, lang, n_chars, deleted FROM (
         |    SELECT h.*, row_number() OVER (PARTITION BY doc_id
@@ -947,15 +950,7 @@ private[graft] object Storage {
       // the one full-outer join; the diff is |changes|-sized
       val base = t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("n_chars"))
-      val rescored = base.filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), lit("xx").as("lang"),
-          (col("n_chars") + 1000000L).as("n_chars"))
-      val inserted = base.agg(max(col("doc_id")).as("doc_id"))
-        .select((col("doc_id") + 1L).as("doc_id"),
-          lit("new").as("lang"), lit(1L).as("n_chars"))
-      val newSnap = MergeOps.upsert(base,
-          rescored.unionByName(inserted), "doc_id")
-        .filter(col("doc_id") % 101 =!= 0)
+      val newSnap = upserted(base).filter(col("doc_id") % 101 =!= 0)
       MergeOps.cdcDiff(base, newSnap, "doc_id")
     },
       // the new snapshot replayed rowwise (transform + delete filter +

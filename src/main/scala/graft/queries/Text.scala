@@ -57,14 +57,8 @@ private[graft] object Text {
 
   /** 8-gram overlap vs the doc_id ≤ 2 probe set (text_contamination). */
   private val contaminationSql =
-    """WITH arrs AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |    x -> x <> '') AS a
-      |  FROM documents),
-      |g AS (
-      |  SELECT DISTINCT doc_id, array_to_string(a[i:i+7], ' ') AS g
-      |  FROM arrs, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
-      |  WHERE len(a) >= 8),
+    s"""$arrsSql,
+      |$grams8Sql,
       |p AS (SELECT doc_id AS probe_id, g FROM g WHERE doc_id <= 2)
       |SELECT g.doc_id, p.probe_id, CAST(count(*) AS BIGINT) AS n_shared
       |FROM g JOIN p USING (g)
@@ -224,14 +218,8 @@ private[graft] object Text {
           round(col("n_novel").cast("double") / col("n_shingles"), 6))
     },
       // first-occurrence map over the jaccard shingle convention
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, a[i] || ' ' || a[i+1] || ' ' || a[i+2] AS sh
-        |  FROM arrs, unnest(generate_series(1, greatest(len(a)-2, 0))) AS t(i)
-        |  WHERE len(a) >= 3),
+      s"""$arrsSql,
+        |$shinglesSql,
         |fo AS (SELECT sh, min(doc_id) AS first_doc FROM sh GROUP BY 1)
         |SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
         | CAST(sum(CASE WHEN f.first_doc = s.doc_id THEN 1 ELSE 0 END)
@@ -962,19 +950,9 @@ private[graft] object Text {
       // per-doc distinct 8-grams left-joined against the benchmark gram
       // set (string equality here; Spark probes 64-bit gram hashes — equal
       // relations barring an fnv64 collision, the contamination precedent)
-      """WITH arrs AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x <> '') AS a
-        |  FROM documents),
-        |g AS (
-        |  SELECT DISTINCT doc_id, array_to_string(a[i:i+7], ' ') AS g
-        |  FROM arrs, unnest(generate_series(1, greatest(len(a)-7, 0))) AS t(i)
-        |  WHERE len(a) >= 8),
-        |b AS (SELECT DISTINCT g FROM g WHERE doc_id % 97 = 0),
-        |j AS (
-        |  SELECT g.doc_id, count(*) AS n_grams, count(b.g) AS n_hits
-        |  FROM g LEFT JOIN b USING (g)
-        |  GROUP BY g.doc_id)
+      s"""$arrsSql,
+        |$grams8Sql,
+        |$benchGramHitsSql
         |SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams,
         | CAST(n_hits AS BIGINT) AS n_hits,
         | round(n_hits * 1.0 / n_grams, 4) AS frac

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
@@ -10,6 +10,60 @@ import QueryKit._
 /** Time-series analytics over the event log (t*): one [[Query]] record per
   * query. */
 private[graft] object TimeSeries {
+
+  /** Each type's daily value total in integer cents: (event_type, day,
+    * c), days without events absent. */
+  private def dailyCents(s: SparkSession, d: String): DataFrame =
+    t(s, d, "events")
+      .select(col("event_type"),
+        expr("CAST(ts AS LONG) div 86400").as("day"),
+        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+      .groupBy("event_type", "day").agg(sum(col("cents")).as("c"))
+
+  /** The oracle twin of [[dailyCents]], as a WITH prefix ending in CTE
+    * `daily`. */
+  private val dailyCentsSql =
+    """WITH daily AS (
+      |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
+      |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** The exact-integer lag moments of a [[dailyGrid]] for lags k = 1..7,
+    * one row per (event_type, k): sxy = Σ c·c₊ₖ, sh = Σ c, st = Σ c₊ₖ
+    * over the pairs a dense grid holds (exactly t ≤ n−k, an equi-join on
+    * day + k, never a window), joined to the type's n, s = Σ c and
+    * q = Σ c². */
+  private def lagMoments(grid: DataFrame): DataFrame = {
+    val base = grid.groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum("c").as("s"),
+        sum(col("c") * col("c")).as("q"))
+    grid
+      .select(col("event_type"), col("day"), col("c"),
+        explode(sequence(lit(1L), lit(7L))).as("k"))
+      .withColumn("day2", col("day") + col("k"))
+      .join(grid.select(col("event_type"), col("day").as("day2"),
+        col("c").as("c2")), Seq("event_type", "day2"))
+      .groupBy("event_type", "k")
+      .agg(sum(col("c") * col("c2")).as("sxy"),
+        sum(col("c")).as("sh"), sum(col("c2")).as("st"))
+      .join(base, "event_type")
+  }
+
+  /** The oracle twin of [[lagMoments]] over CTE `grid`: CTEs `base`
+    * (event_type, n, s, q) and `pairs` (event_type, k, sxy, sh, st). */
+  private val lagMomentsSql =
+    """base AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+      |   CAST(sum(c) AS BIGINT) AS s, CAST(sum(c * c) AS BIGINT) AS q
+      |  FROM grid GROUP BY 1),
+      |pairs AS (
+      |  SELECT g1.event_type, k.k,
+      |   CAST(sum(g1.c * g2.c) AS BIGINT) AS sxy,
+      |   CAST(sum(g1.c) AS BIGINT) AS sh, CAST(sum(g2.c) AS BIGINT) AS st
+      |  FROM grid g1,
+      |   (SELECT unnest(generate_series(1, 7)) AS k) k,
+      |   grid g2
+      |  WHERE g1.event_type = g2.event_type AND g2.day = g1.day + k.k
+      |  GROUP BY 1, 2)""".stripMargin
 
   val all: Seq[Query] = Seq(
     Query("t1_roundup_hour", (s, d) =>
@@ -87,10 +141,7 @@ private[graft] object TimeSeries {
       // folds are correct — probed before wiring
       // the t14 fold widened to 4-element list state; error uses the
       // PRE-update level+trend, literals all ::DOUBLE
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
+      s"""$dailyCentsSql,
         |s AS (SELECT event_type, count(*) AS n_days,
         |       list(CAST(c AS DOUBLE) / 100.0::DOUBLE ORDER BY day) AS xs
         |      FROM daily GROUP BY 1),
@@ -171,28 +222,9 @@ private[graft] object TimeSeries {
       // replays bit-identically. Lag pairs come from an equi-join of the
       // grid against itself on (type, day+k) — dense grid ⇒ exactly the
       // t ≤ n−k pairs — never a window over the series.
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"), explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
+      val grid = dailyGrid(s, d)
         .localCheckpoint() // reused by the base stats and the lag pairs
-      val base = grid.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("c").as("s"),
-          sum(col("c") * col("c")).as("q"))
-      val pairs = grid
-        .select(col("event_type"), col("day"), col("c"),
-          explode(sequence(lit(1L), lit(7L))).as("k"))
-        .withColumn("day2", col("day") + col("k"))
-        .join(grid.select(col("event_type"), col("day").as("day2"),
-          col("c").as("c2")), Seq("event_type", "day2"))
-        .groupBy("event_type", "k")
-        .agg(sum(col("c") * col("c2")).as("sxy"),
-          sum(col("c")).as("sh"), sum(col("c2")).as("st"))
-      pairs.join(base, "event_type")
+      lagMoments(grid)
         .withColumn("num", (col("n") * col("n")).cast("double") * col("sxy") -
           col("n").cast("double") * col("s") * (col("sh") + col("st")) +
           (col("n") - col("k")).cast("double") * col("s") * col("s"))
@@ -204,28 +236,8 @@ private[graft] object TimeSeries {
     },
       // num and den are the n²-scaled exact-integer forms of the standard
       // acf estimator; the dense grid makes the lag join exactly t ≤ n−k
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-        |base AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |   CAST(sum(c) AS BIGINT) AS s, CAST(sum(c * c) AS BIGINT) AS q
-        |  FROM grid GROUP BY 1),
-        |pairs AS (
-        |  SELECT g1.event_type, k.k,
-        |   CAST(sum(g1.c * g2.c) AS BIGINT) AS sxy,
-        |   CAST(sum(g1.c) AS BIGINT) AS sh, CAST(sum(g2.c) AS BIGINT) AS st
-        |  FROM grid g1,
-        |   (SELECT unnest(generate_series(1, 7)) AS k) k,
-        |   grid g2
-        |  WHERE g1.event_type = g2.event_type AND g2.day = g1.day + k.k
-        |  GROUP BY 1, 2),
+      s"""$dailyGridSql,
+        |$lagMomentsSql,
         |f AS (SELECT p.event_type, p.k, b.n,
         |   CAST(b.n * b.n AS DOUBLE) * p.sxy
         |     - CAST(b.n AS DOUBLE) * b.s * (p.sh + p.st)
@@ -449,11 +461,7 @@ private[graft] object TimeSeries {
     },
       // dense-grid x = day index, y = count; dx/dy/cv are the n-scaled
       // exact-integer co-moments cast to double operand-for-operand
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
+      s"""$daySpansSql,
         |grid AS (
         |  SELECT g.event_type, g.day - g.d0 AS x, coalesce(d.c, 0) AS y
         |  FROM (SELECT event_type, d0,
@@ -485,14 +493,7 @@ private[graft] object TimeSeries {
       // trend420 = windowSum · 420/windowCount) — the only doubles are
       // mirrored final divisions, and the 7-term weekday fold is an
       // ORDERED array fold, so cross-engine sums can't reorder.
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"), explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
+      val grid = dailyGrid(s, d)
       val wMa = Window.partitionBy("event_type").orderBy("day")
         .rowsBetween(-3, 3)
       val det = grid
@@ -530,16 +531,7 @@ private[graft] object TimeSeries {
     },
       // ×420 integers make the centered moving average integral (420 =
       // lcm 4..7); the weekday fold is ordered so sums can't reorder
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
+      s"""$dailyGridSql,
         |det AS (
         |  SELECT event_type, day, (day + 4) % 7 AS weekday,
         |   420 * c - (sum(c) OVER w * (420 // count(*) OVER w)) AS det
@@ -583,14 +575,7 @@ private[graft] object TimeSeries {
       // updated value) — O(1) state, types smooth in parallel, and the
       // LIST state is exactly the shape DuckDB's list_reduce folds
       // correctly (the t14 struct-state caveat).
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"), explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
+      val grid = dailyGrid(s, d)
       grid.groupBy("event_type")
         .agg(count(lit(1)).as("n_days"),
           array_sort(collect_list(struct(col("day"), col("c")))).as("a"))
@@ -618,16 +603,7 @@ private[graft] object TimeSeries {
     },
       // 9-element LIST state [l, b, s1..s7] — the fold shape this DuckDB
       // reduces correctly (t14 caveat); l' repeated textually in b'/s'
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
+      s"""$dailyGridSql,
         |s AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
         |       list(CAST(c AS DOUBLE) ORDER BY day) AS xs
         |      FROM grid GROUP BY 1),
@@ -684,16 +660,7 @@ private[graft] object TimeSeries {
       // zero-filled grid so a missing day reads as 0, not as a silent
       // 7-day shift). Integer counts, one mirrored division; the lag
       // window orders by the grid's unique day.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"),
-          explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
+      val grid = dailyGrid(s, d)
       val w = Window.partitionBy("event_type").orderBy("day")
       grid.withColumn("c7", lag(col("c"), 7).over(w))
         .filter(col("c7").isNotNull && col("c7") > 0)
@@ -705,16 +672,7 @@ private[graft] object TimeSeries {
       // engine's histogram form is identical by construction; H and the
       // tie correction mirrored operand-for-operand
       // lag-7 over the zero-filled grid; integer counts, one division
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
+      s"""$dailyGridSql,
         |l AS (SELECT event_type, day, c,
         |   lag(c, 7) OVER (PARTITION BY event_type ORDER BY day) AS c7
         |  FROM grid)
@@ -733,16 +691,7 @@ private[graft] object TimeSeries {
       // over (value, unique-day tiebreak), so the pick is engine-exact;
       // every slope is one IEEE division of exact integers. Pair fanout
       // lives on the ≤31-row grid tier, never the corpus.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"),
-          explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
+      val grid = dailyGrid(s, d)
         .localCheckpoint() // pairs ×2 + the intercept pass
       val a = grid.select(col("event_type"), col("day").as("di"),
         col("c").as("ci"))
@@ -772,16 +721,7 @@ private[graft] object TimeSeries {
     },
       // lower-median rank rule over (slope, di, dj) / (b0, day) — the
       // pick is engine-exact; slopes are IEEE divisions of exact integers
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-        |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-        |          FROM daily GROUP BY 1),
-        |grid AS MATERIALIZED (
-        |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-        |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-        |        FROM spans) g
-        |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
+      s"""$dailyGridMaterializedSql,
         |sl AS (SELECT a.event_type, a.day AS di, b.day AS dj,
         |   CAST(b.c - a.c AS DOUBLE) / CAST(b.day - a.day AS DOUBLE) AS sl
         |  FROM grid a JOIN grid b
@@ -970,28 +910,9 @@ private[graft] object TimeSeries {
       // identical operation order on both engines ⇒ bit-identical
       // doubles before the final round. O(cells) work per type after
       // the t15-shaped grid aggregations.
-      val daily = t(s, d, "events")
-        .select(col("event_type"), expr("CAST(ts AS LONG) div 86400").as("day"))
-        .groupBy("event_type", "day").agg(count(lit(1)).as("c"))
-      val grid = daily.groupBy("event_type")
-        .agg(min("day").as("d0"), max("day").as("d1"))
-        .select(col("event_type"), explode(sequence(col("d0"), col("d1"))).as("day"))
-        .join(daily, Seq("event_type", "day"), "left_outer")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
+      val grid = dailyGrid(s, d)
         .localCheckpoint() // base stats + 7 lag joins (the t15 shape)
-      val base = grid.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("c").as("s"),
-          sum(col("c") * col("c")).as("q"))
-      val acf = grid
-        .select(col("event_type"), col("day"), col("c"),
-          explode(sequence(lit(1L), lit(7L))).as("k"))
-        .withColumn("day2", col("day") + col("k"))
-        .join(grid.select(col("event_type"), col("day").as("day2"),
-          col("c").as("c2")), Seq("event_type", "day2"))
-        .groupBy("event_type", "k")
-        .agg(sum(col("c") * col("c2")).as("sxy"),
-          sum(col("c")).as("sh"), sum(col("c2")).as("st"))
-        .join(base, "event_type")
+      val acf = lagMoments(grid)
         .select(col("event_type"), col("k"),
           (((col("n") * col("n")).cast("double") * col("sxy") -
             col("n").cast("double") * col("s") * (col("sh") + col("st")) +
@@ -1061,28 +982,8 @@ private[graft] object TimeSeries {
         s"generate_series(1, 7)[1:$m], j3 -> acc[1 + j3] * racf[j3])), " +
         s"(s3, y3) -> s3 + y3))"
       val p = s"($num / $den)"
-      s"""WITH daily AS (
-         |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-         |   CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         |spans AS (SELECT event_type, min(day) AS d0, max(day) AS d1
-         |          FROM daily GROUP BY 1),
-         |grid AS (
-         |  SELECT g.event_type, g.day, coalesce(d.c, 0) AS c
-         |  FROM (SELECT event_type, unnest(generate_series(d0, d1)) AS day
-         |        FROM spans) g
-         |  LEFT JOIN daily d ON g.event_type = d.event_type AND g.day = d.day),
-         |base AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         |   CAST(sum(c) AS BIGINT) AS s, CAST(sum(c * c) AS BIGINT) AS q
-         |  FROM grid GROUP BY 1),
-         |pairs AS (
-         |  SELECT g1.event_type, k.k,
-         |   CAST(sum(g1.c * g2.c) AS BIGINT) AS sxy,
-         |   CAST(sum(g1.c) AS BIGINT) AS sh, CAST(sum(g2.c) AS BIGINT) AS st
-         |  FROM grid g1,
-         |   (SELECT unnest(generate_series(1, 7)) AS k) k,
-         |   grid g2
-         |  WHERE g1.event_type = g2.event_type AND g2.day = g1.day + k.k
-         |  GROUP BY 1, 2),
+      s"""$dailyGridSql,
+         |$lagMomentsSql,
          |acf AS (SELECT p.event_type, p.k,
          |   (CAST(b.n * b.n AS DOUBLE) * p.sxy
          |     - CAST(b.n AS DOUBLE) * b.s * (p.sh + p.st)
@@ -1276,11 +1177,7 @@ private[graft] object TimeSeries {
       // pair's days). Pair volume is O(T²) per series in series LENGTH
       // (not corpus size) — ~10³ pairs for a month; years-long series
       // use the classic hash-sampled pair subset.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy("event_type", "day").agg(sum(col("cents")).as("c"))
+      val daily = dailyCents(s, d)
         .localCheckpoint()
       val pairs = daily.alias("a").join(daily.alias("b"),
           col("a.event_type") === col("b.event_type") &&
@@ -1298,10 +1195,7 @@ private[graft] object TimeSeries {
         .select(col("event_type"), col("n_pairs"),
           round(col("slope"), 6).as("slope"))
     },
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
+      s"""$dailyCentsSql,
         |pairs AS (
         |  SELECT a.event_type,
         |   CAST(b.c - a.c AS DOUBLE) / (b.day - a.day) AS slope,
@@ -1324,11 +1218,7 @@ private[graft] object TimeSeries {
       // outlier-resistant production variant. Median and MAD come from
       // exact per-group rank picks ((n+1)÷2, ties (value, day)); the
       // only division is the final score, MAD floored at 1 cent.
-      val daily = t(s, d, "events")
-        .select(col("event_type"),
-          expr("CAST(ts AS LONG) div 86400").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy("event_type", "day").agg(sum(col("cents")).as("c"))
+      val daily = dailyCents(s, d)
       val n = daily.groupBy("event_type").agg(count(lit(1)).as("n"))
       val med = daily
         .withColumn("rn", row_number().over(Window.partitionBy("event_type")
@@ -1352,10 +1242,7 @@ private[graft] object TimeSeries {
     },
       // exact per-group rank picks for median and MAD, final division
       // the only float step
-      """WITH daily AS (
-        |  SELECT event_type, epoch_us(ts) // 1000000 // 86400 AS day,
-        |   CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2),
+      s"""$dailyCentsSql,
         |n AS (SELECT event_type, count(*) AS n FROM daily GROUP BY 1),
         |medr AS (SELECT event_type, c,
         |        row_number() OVER (PARTITION BY event_type

@@ -42,6 +42,12 @@ class LegacyLayoutSpec extends AnyFunSuite {
     val b = Tables.table(spark, microsDir, "events")
     assert(a.schema("ts").dataType ==
       org.apache.spark.sql.types.TimestampType)
+    // the layout confs come with the session build, so a clone holds
+    // them and reads the legacy layout the same way
+    val clone = spark.newSession()
+    assert(clone.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(Tables.table(clone, nanosDir, "events").schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
     assert(Tables.eventsIsNanos(spark, nanosDir))
     assert(!Tables.eventsIsNanos(spark, microsDir))
     def agg(df: org.apache.spark.sql.DataFrame) = df

@@ -41,19 +41,14 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("events ts predicates reach the parquet scan (µs path)") {
-    // µs-layout scan (direct read or eventsMicros rewrite) pushes both
-    // bounds to the scan — row-group stats pruning works
-    val us = plan("p3_time_range_us")
-    assert(us.contains("IsNotNull(ts)") &&
-      us.contains("GreaterThanOrEqual(ts,") && us.contains("LessThan(ts,"), us)
-    val direct = plan("p3_time_range")
-    if (Tables.eventsIsNanos(spark, sf)) {
-      // legacy nanos layout: ts is derived from raw int64, so the direct
-      // scan cannot prune on it — only the rewrite above can
-      assert(!direct.contains("GreaterThanOrEqual(ts"), direct)
-    } else {
-      // µs layout on disk: the direct read pushes down too
-      assert(direct.contains("GreaterThanOrEqual(ts,"), direct)
+    // both rows read the events table through the adaptive loader; on
+    // either layout (µs directly, legacy nanos through NanosFilterRule)
+    // both bounds reach the scan — row-group stats pruning works
+    for (name <- Seq("p3_time_range", "p3_time_range_us")) {
+      val p = plan(name)
+      assert(p.contains("IsNotNull(ts)") &&
+        p.contains("GreaterThanOrEqual(ts,") && p.contains("LessThan(ts,"),
+        s"$name:\n$p")
     }
   }
 
@@ -312,16 +307,11 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"), p)
   }
 
-  // whole-suite sweeps skip `Sweep.excluded` (SparkTestBase). Frame
+  // the whole-suite sweep (SparkTestBase) skips `Sweep.excluded`. Frame
   // sampling is native now (frame_sigs expression), so mm_frame_sample is
   // swept like any query.
-  private lazy val sweepPlans: Seq[(String, String)] =
-    SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(Sweep.excluded)
-      .map { name =>
-        name -> SparkEntry.queries(name)(spark, sf)
-          .queryExecution.executedPlan.toString
-      }
+  private def sweepPlans: Seq[(String, String)] =
+    Sweep.built.map { case (name, b) => name -> b.plan }
 
   test("no query plans a ScalaUDF: the whole function surface is codegen-tier") {
     val offenders = sweepPlans.collect {
@@ -549,8 +539,7 @@ class PlanSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("GraftFunctions.register exposes the function surface to SQL") {
-    GraftFunctions.register(spark)
+  test("the session extensions expose the function surface to SQL") {
     import spark.implicits._
     Seq("See [[A|b]] and http://x.io now {{Tmpl}}").toDF("t")
       .createOrReplaceTempView("reg_in")

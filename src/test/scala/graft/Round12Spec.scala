@@ -21,24 +21,9 @@ class Round12Spec extends AnyFunSuite {
   // shared session by construction
   test("no query builder mutates the shared session conf (k30-style " +
     "leaks caught across the full map)") {
-    // Tables.compatConfs legitimately sets two layout-compat keys on
-    // every load — pre-apply them so the snapshot reflects steady state
-    Tables.table(spark, sf, "documents").schema
-    // re-snapshot after every builder: against a fixed initial snapshot,
-    // one leaking builder would misattribute every LATER query as an
-    // offender (and a builder restoring the original value would read
-    // clean) — the per-iteration baseline names exactly the leaker
-    var before = spark.conf.getAll
-    val offenders = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(Sweep.excluded)
-      .flatMap { name =>
-        SparkEntry.queries(name)(spark, sf) // build only — no execution
-        val after = spark.conf.getAll
-        val changed = (after.keySet ++ before.keySet).filter(k =>
-          before.get(k) != after.get(k))
-        before = after
-        if (changed.isEmpty) None else Some(name -> changed)
-      }
+    val offenders = Sweep.built.collect {
+      case (name, b) if b.confChanged.nonEmpty => name -> b.confChanged
+    }
     assert(offenders.isEmpty,
       s"builders mutated shared session conf: $offenders")
   }

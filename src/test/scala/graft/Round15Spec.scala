@@ -113,20 +113,15 @@ class Round15Spec extends AnyFunSuite {
     }
   }
 
-  /** Registry-wide discovery at the cheapest SF: which gated queries
-    * pass through libm anywhere in their plan? `Sweep.excluded` skips the
+  /** Registry-wide discovery at the cheapest SF, over the shared
+    * whole-suite build (`Sweep.built`): which gated queries pass
+    * through libm anywhere in their plan? `Sweep.excluded` skips the
     * builders with side effects: streaming goldens are tiny fixed traces
     * gated row-for-row, and the sink round-trips re-emit already-gated
     * relations — neither adds libm exposure. */
-  private lazy val libmQueries: Seq[String] = {
-    val sf = allSfs.head
-    SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(Sweep.excluded)
-      .filter { name =>
-        val plan = SparkEntry.queries(name)(spark, sf)
-          .queryExecution.analyzed
-        plan.exists(_.expressions.exists(containsLibm))
-      }
+  private lazy val libmQueries: Seq[String] = Sweep.built.collect {
+    case (name, b) if b.df.queryExecution.analyzed
+        .exists(_.expressions.exists(containsLibm)) => name
   }
 
   // --- round-15 operator pins ---

@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    main/operator/test code creates temp directories outside
   *    Scratch itself.
   * 2. sweepStale — reclaims dead-run roots and pre-r16-style loose
-  *    dirs, never the persistent caches (graft-sf*, graft-fixtures,
-  *    graft-events-us-*) or the live process's own root.
+  *    dirs, never the persistent caches (graft-sf*, graft-fixtures)
+  *    or the live process's own root.
   * 3. aHash64Data on malformed UTF-8 — the inline decoder must not
   *    read past the buffer or mis-route continuation lead bytes
   *    (r15 advice): truncated tails and stray continuations decode

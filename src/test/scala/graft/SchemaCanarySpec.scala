@@ -63,10 +63,4 @@ class SchemaCanarySpec extends AnyFunSuite {
       "before anything else; every consumer of these tables assumes the " +
       "'want' layout.\n" + diffs.mkString("\n"))
   }
-
-  test("eventsMicros serves the µs layout with ts as TimestampType") {
-    val df = Tables.eventsMicros(spark, sf)
-    assert(df.schema("ts").dataType ==
-      org.apache.spark.sql.types.TimestampType, df.schema.treeString)
-  }
 }
