@@ -23,9 +23,10 @@ import graft.streaming.{EventStreamOps, StreamTrace}
   *    conversions and coalesced shuffle reads included);
   *  - `time <dir> [q…]`: one JSON row per query, printed as it completes:
   *    best and worst of SPARK_GRAFT_PROBE_RUNS (default 2) runs to the
-  *    noop sink, and the fastest run's jobs, stages, tasks, shuffle and
-  *    spill, followed by its `[stage] tasks<TAB>name` lines and the
-  *    progress of each streaming query it ran;
+  *    noop sink, and the fastest run's builder seconds and jobs (the
+  *    work done building the frame, before the action), jobs, stages,
+  *    tasks, shuffle and spill, followed by its `[stage] tasks<TAB>name`
+  *    lines and the progress of each streaming query it ran;
   *  - `sem <dir> [k…]`: semanticDedup seconds per cluster count;
   *  - `inc <dir>…`: the incremental connected-components fold alone;
   *  - `stream <dir> [q…]`: streaming-tier throughput and state size;
@@ -114,6 +115,9 @@ object Probe {
     val jobs, stages, tasks = new AtomicInteger
     val shuffleRead, shuffleWrite, spill = new AtomicLong
     val stageLines, progress = new ConcurrentLinkedQueue[String]()
+    /** Seconds and jobs of building the frame, before its action. */
+    var builderSec = 0.0
+    var builderJobs = 0
     override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
       val i = s.stageInfo
@@ -145,7 +149,14 @@ object Probe {
     def attempts(left: Int): List[(Double, Option[String], Counters)] = {
       val c = new Counters(n)
       sc.addSparkListener(c)
-      val (t, err) = Bench.timed(q(spark, dir))
+      val t0 = System.nanoTime()
+      val (t, err) = Bench.timed {
+        val df = q(spark, dir)
+        ListenerBus.drain(sc)
+        c.builderSec = (System.nanoTime() - t0) / 1e9
+        c.builderJobs = c.jobs.get
+        df
+      }
       ListenerBus.drain(sc)
       sc.removeSparkListener(c)
       (t, err, c) :: (if (left > 1 && err.isEmpty) attempts(left - 1) else Nil)
@@ -154,7 +165,7 @@ object Probe {
     all.flatMap(_._2).headOption.foreach(e => throw new RuntimeException(e))
     val (t, _, c) = all.minBy(_._1)
     def mb(bytes: AtomicLong) = Bench.sec(bytes.get / 1e6)
-    println(s"""{"mode":"time","name":${JsonUtil.jstr(n)},"sec":${Bench.sec(t)},"sec_worst":${Bench.sec(all.map(_._1).max)},"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"shuf_read_mb":${mb(c.shuffleRead)},"shuf_write_mb":${mb(c.shuffleWrite)},"spill_mb":${mb(c.spill)},"n_progress":${c.progress.size}}""")
+    println(s"""{"mode":"time","name":${JsonUtil.jstr(n)},"sec":${Bench.sec(t)},"sec_worst":${Bench.sec(all.map(_._1).max)},"builder_s":${Bench.sec(c.builderSec)},"builder_jobs":${c.builderJobs},"jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"shuf_read_mb":${mb(c.shuffleRead)},"shuf_write_mb":${mb(c.shuffleWrite)},"spill_mb":${mb(c.spill)},"n_progress":${c.progress.size}}""")
     c.stageLines.forEach(l => println(s"[stage] $l"))
     c.progress.forEach(l => println(l))
   }

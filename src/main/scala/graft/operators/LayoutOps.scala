@@ -72,7 +72,7 @@ object LayoutOps {
     * and amortizes over every subsequent range query. */
   def fileManifest(spark: org.apache.spark.sql.SparkSession, path: String,
                    keyCol: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(min(col(keyCol)).as("min_k"), max(col(keyCol)).as("max_k"),
         count(lit(1)).as("n_rows"))
@@ -93,7 +93,7 @@ object LayoutOps {
   def deleteWhereCow(spark: org.apache.spark.sql.SparkSession,
                      srcDir: String, dstDir: String,
                      cond: Column): (Int, Int) = {
-    val withFile = spark.read.parquet(srcDir)
+    val withFile = graft.Tables.parquet(spark, srcDir)
       .withColumn("_f", input_file_name())
     // pinned once: the driver count, the copy path and the rewrite's
     // broadcast side all read this relation
@@ -132,7 +132,7 @@ object LayoutOps {
     val aggs = cols.flatMap(c => Seq(
       min(col(c)).cast("long").as(s"min_$c"),
       max(col(c)).cast("long").as(s"max_$c")))
-    val wide = spark.read.parquet(path)
+    val wide = graft.Tables.parquet(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
     cols.map(c => wide.select(col("file"), lit(c).as("col"),

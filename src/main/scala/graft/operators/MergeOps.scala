@@ -193,7 +193,7 @@ object MergeOps {
     val p = new org.apache.hadoop.fs.Path(logDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p))
-      spark.read.parquet(logDir).select(col("f").cast("string"))
+      graft.Tables.parquet(spark, logDir).select(col("f").cast("string"))
     else Seq.empty[String].toDF("f")
   }
 
@@ -205,7 +205,7 @@ object MergeOps {
     * shape, whose literal list grows with every file ever ingested. */
   def freshFiles(spark: org.apache.spark.sql.SparkSession,
                  srcDir: String, logDir: String): DataFrame =
-    spark.read.parquet(srcDir)
+    graft.Tables.parquet(spark, srcDir)
       .select(input_file_name().as("f")).distinct()
       .join(loadLog(spark, logDir), Seq("f"), "left_anti")
 
@@ -216,7 +216,7 @@ object MergeOps {
   def freshData(spark: org.apache.spark.sql.SparkSession,
                 srcDir: String, logDir: String,
                 fresh: Option[DataFrame] = None): DataFrame =
-    spark.read.parquet(srcDir).withColumn("f", input_file_name())
+    graft.Tables.parquet(spark, srcDir).withColumn("f", input_file_name())
       .join(broadcast(fresh.getOrElse(freshFiles(spark, srcDir, logDir))),
         Seq("f"), "left_semi")
 

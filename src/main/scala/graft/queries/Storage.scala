@@ -173,7 +173,7 @@ private[graft] object Storage {
           explode(array(pos(col("user_id"), 0), pos(col("user_id"), 1))).as("p"))
         .distinct()
         .write.mode("overwrite").parquet(s"$dir/_bloom")
-      val bloom = s.read.parquet(s"$dir/_bloom")
+      val bloom = Tables.parquet(s, s"$dir/_bloom")
       val pr = Seq(1L, 2L, -999L).toDF("probe_user")
         .select(col("probe_user"), pos(col("probe_user"), 0).as("p0"),
           pos(col("probe_user"), 1).as("p1"))
@@ -240,15 +240,15 @@ private[graft] object Storage {
       docs.write.parquet(s"$dir/base")
       docs.filter(col("doc_id") % 13 === 0).select(col("doc_id"))
         .write.parquet(s"$dir/_dv")
-      def morRead = s.read.parquet(s"$dir/base")
-        .join(s.read.parquet(s"$dir/_dv"), Seq("doc_id"), "left_anti")
+      def morRead = Tables.parquet(s, s"$dir/base")
+        .join(Tables.parquet(s, s"$dir/_dv"), Seq("doc_id"), "left_anti")
       morRead.write.parquet(s"$dir/compacted") // DV applied physically
       def agg(df: DataFrame, path: String) =
         df.agg(lit(path).as("read_path"), count(lit(1)).as("n_rows"),
           sum(col("n_chars")).as("sum_chars"),
           countDistinct(col("lang")).as("n_langs"))
       agg(morRead, "merge_on_read")
-        .unionByName(agg(s.read.parquet(s"$dir/compacted"), "compacted"))
+        .unionByName(agg(Tables.parquet(s, s"$dir/compacted"), "compacted"))
     },
       // both read paths must agree — the DV contract; the oracle is the
       // filtered aggregate twice
@@ -277,8 +277,8 @@ private[graft] object Storage {
         .repartition(4).write.parquet(s"$dir/src")
       MergeOps.copyInto(s, s"$dir/src", s"$dir/target", s"$dir/_load_log")
       MergeOps.copyInto(s, s"$dir/src", s"$dir/target", s"$dir/_load_log")
-      val log = s.read.parquet(s"$dir/_load_log")
-      s.read.parquet(s"$dir/target")
+      val log = Tables.parquet(s, s"$dir/_load_log")
+      Tables.parquet(s, s"$dir/target")
         .agg(count(lit(1)).as("n_rows"), sum(col("doc_id")).as("sum_ids"),
           sum(col("n_chars")).as("sum_chars"))
         .crossJoin(broadcast(log.agg(
@@ -359,12 +359,12 @@ private[graft] object Storage {
         .write.parquet(s"$dir/target")
       routed.filter(col("reason").isNotNull)
         .write.parquet(s"$dir/quarantine")
-      s.read.parquet(s"$dir/target")
+      Tables.parquet(s, s"$dir/target")
         .agg(count(lit(1)).as("n"),
           sum(coalesce(col("doc_id"), lit(0L))).as("sum_ids"))
         .select(lit("target").as("dest"), lit("ok").as("reason"),
           col("n"), col("sum_ids"))
-        .unionByName(s.read.parquet(s"$dir/quarantine")
+        .unionByName(Tables.parquet(s, s"$dir/quarantine")
           .groupBy(col("reason"))
           .agg(count(lit(1)).as("n"),
             sum(coalesce(col("doc_id"), lit(0L))).as("sum_ids"))
@@ -410,7 +410,7 @@ private[graft] object Storage {
         "doc_id", s"$dir/v1", numFiles = 4)
       LayoutOps.deleteWhereCow(s, s"$dir/v1", s"$dir/v2",
         col("doc_id") % 100L === 7L && col("doc_id") < 200L)
-      s.read.parquet(s"$dir/v2")
+      Tables.parquet(s, s"$dir/v2")
         .agg(count(lit(1)).as("n_rows"), sum(col("doc_id")).as("sum_ids"),
           sum(col("n_chars")).as("sum_chars"))
     },
@@ -466,17 +466,17 @@ private[graft] object Storage {
         .toString
       t(s, d, "documents").select(col("doc_id"), col("n_chars"))
         .repartition(4).write.parquet(s"$dir/src")
-      s.read.parquet(s"$dir/src")
+      Tables.parquet(s, s"$dir/src")
         .select(input_file_name().as("f")).distinct()
         .write.parquet(s"$dir/clone/_files")
       // the source evolves AFTER the clone
       Seq((9000001L, 11L), (9000002L, 22L), (9000003L, 33L))
         .toDF("doc_id", "n_chars")
         .write.mode("append").parquet(s"$dir/src")
-      val cloneFiles = s.read.parquet(s"$dir/clone/_files")
+      val cloneFiles = Tables.parquet(s, s"$dir/clone/_files")
         .collect().map(_.getString(0)).toIndexedSeq
       val clone = s.read.parquet(cloneFiles: _*)
-      val src = s.read.parquet(s"$dir/src")
+      val src = Tables.parquet(s, s"$dir/src")
       src.agg(count(lit(1)).as("n_src"), sum(col("doc_id")).as("sum_src"))
         .crossJoin(broadcast(clone.agg(count(lit(1)).as("n_clone"),
           sum(col("doc_id")).as("sum_clone"))))
@@ -821,7 +821,7 @@ private[graft] object Storage {
         .select(col("doc_id"), col("lang"), col("n_chars")))
       val dir = Scratch.dir("k9").toString
       graft.sources.GraftSinks.writeParquet(merged, dir, compression = "zstd")
-      s.read.parquet(dir)
+      Tables.parquet(s, dir)
     },
       """WITH base AS (SELECT doc_id, lang, n_chars FROM documents),
         |upd AS (
@@ -1103,7 +1103,7 @@ private[graft] object Storage {
       val dir = Scratch.dir("k7").toString
       graft.sources.GraftSinks.writeDictionary(
         TermOps.dictionary(t(s, d, "documents"), "doc_id", "text", minDf = 5L), dir)
-      s.read.parquet(dir)
+      Tables.parquet(s, dir)
     },
       s"""SELECT term, CAST(row_number() OVER (ORDER BY df DESC, term ASC) AS INT) AS id,
          | df, cf
@@ -1115,7 +1115,7 @@ private[graft] object Storage {
       graft.sources.GraftSinks.writeParquet(
         t(s, d, "region").select(col("r_regionkey"), col("r_name")), dir,
         compression = "zstd")
-      s.read.parquet(dir)
+      Tables.parquet(s, dir)
     },
       "SELECT r_regionkey, r_name FROM region"),
 

@@ -29,6 +29,9 @@ class ProbeSpec extends AnyFunSuite {
     assert(q1.get("name").asText == "q1_pricing_summary", q1)
     for (k <- Seq("jobs", "stages", "tasks")) assert(q1.get(k).asInt > 0, q1)
     assert(q1.get("sec").asDouble <= q1.get("sec_worst").asDouble, q1)
+    // lineitem's schema comes from its footer: building q1 starts no job
+    assert(q1.get("builder_jobs").asInt == 0, q1)
+    assert(q1.get("builder_s").asDouble <= q1.get("sec").asDouble, q1)
     assert(lines.count(_.startsWith("[stage] ")) == q1.get("stages").asInt)
     assert(unknown.get("name").asText == "no_such_query")
     assert(unknown.get("error").asText == "unknown query")

@@ -63,4 +63,30 @@ class SchemaCanarySpec extends AnyFunSuite {
       "before anything else; every consumer of these tables assumes the " +
       "'want' layout.\n" + diffs.mkString("\n"))
   }
+
+  test("Tables reads the schema Spark would infer, field metadata " +
+    "included, from one footer and without a Spark job") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.MetadataBuilder
+    // a flat directory as a builder writes it: several part files,
+    // _SUCCESS and .crc side files, a Spark schema with field metadata
+    val flat = Scratch.dir("canary").toString + "/flat"
+    val meta = new MetadataBuilder().putString("comment", "doc key").build()
+    Tables.table(spark, sf, "documents")
+      .select(col("doc_id").as("doc_id", meta), col("lang"))
+      .repartition(3).write.parquet(flat)
+    val tables = for (d <- Seq(sf, "/root/testdata/sf0.01"); n <- Tables.All)
+      yield s"$d/$n.parquet" -> JobCount(Tables.table(spark, d, n))
+    val files = Seq(s"${LegacyLayout.nanosDir}/events.parquet",
+      s"${LegacyLayout.microsDir}/events.parquet", flat)
+      .map(p => p -> JobCount(Tables.parquet(spark, p)))
+    val bad = (tables ++ files).flatMap { case (p, (df, jobs)) =>
+      val want = spark.read.parquet(p).schema
+      if (jobs == 0 && df.schema == want) None
+      else Some(s"$p: $jobs jobs\n  got  ${df.schema.json}\n  want ${want.json}")
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+    assert(Tables.parquet(spark, flat).schema("doc_id").metadata == meta)
+    assert(JobCount(Tables.table(spark, LegacyLayout.nanosDir, "events"))._2 == 0)
+  }
 }

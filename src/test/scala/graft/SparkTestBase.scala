@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.ListenerBus
 
 /** One shared local session for all Spark-backed specs. */
 object TestSpark {
@@ -11,10 +14,28 @@ object TestSpark {
   }
 }
 
+/** The Spark jobs a block starts on the shared test session. */
+object JobCount {
+  def apply[A](f: => A): (A, Int) = {
+    val sc = TestSpark.spark.sparkContext
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // earlier jobs' queued events must not reach the new listener
+    ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { val a = f; ListenerBus.drain(sc); (a, jobs.get) }
+    finally sc.removeSparkListener(l)
+  }
+}
+
 /** The whole-suite build-only sweep, shared by PlanSpec's plan sweep,
-  * Round12Spec's conf sweep and Round15Spec's libm sweep: every query
+  * Round12Spec's conf sweep, Round15Spec's libm sweep and
+  * BuilderJobsSpec's job ratchet: every query
   * not in [[excluded]] is built once per test JVM at sf0.001 and read by
-  * all three. */
+  * all four. */
 object Sweep {
   /** The queries the sweep skips: sink round-trip writes and temp dirs,
     * the one deliberately-imperative seam (the per-file split-offset
@@ -32,9 +53,10 @@ object Sweep {
     "s19_split_index")
 
   /** One swept query: its frame, its executed plan (taken right after
-    * the build) and the session conf keys its builder changed. */
+    * the build), the session conf keys its builder changed and the Spark
+    * jobs its builder started. */
   final case class Built(df: DataFrame, plan: String,
-                         confChanged: Set[String])
+                         confChanged: Set[String], jobs: Int)
 
   /** Every swept query by name, in name order. The conf baseline is
     * re-taken after every builder: against a fixed initial snapshot,
@@ -45,12 +67,13 @@ object Sweep {
     val spark = TestSpark.spark
     var before = spark.conf.getAll
     SparkEntry.queries.keys.toSeq.sorted.filterNot(excluded).map { name =>
-      val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      val (df, jobs) =
+        JobCount(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001"))
       val after = spark.conf.getAll
       val changed = (after.keySet ++ before.keySet)
         .filter(k => before.get(k) != after.get(k))
       before = after
-      name -> Built(df, df.queryExecution.executedPlan.toString, changed)
+      name -> Built(df, df.queryExecution.executedPlan.toString, changed, jobs)
     }
   }
 }
